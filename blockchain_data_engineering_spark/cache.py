@@ -7,151 +7,136 @@ The portable way to honor both needs at once is to eagerly materialize
 the final result with ``localCheckpoint`` (severing its lineage from
 every internal cache — plain ``persist()+count()`` does NOT survive an
 input ``unpersist()``, which invalidates dependent cache entries) and
-then release the caches before returning.
+then release the caches before returning. That is a *settle*.
 
-``finalize`` packages that sequence. ``lazy_plans`` is the
-plan-inspection escape hatch: inside the context, ``finalize`` returns
-the result untouched (no materialization, caches left registered) so
-``.explain`` shows the real computational shape; the inspecting test
-clears the session cache afterwards.
+One owner decides when to settle: :func:`scope`. The registry's
+``@query`` wrapper opens one around every registered query, so every
+:func:`finalize` inside it only registers its caches and returns the
+result lazily; the query settles ONCE on the way out. With no scope
+open, :func:`finalize` settles at once (examples, streaming, direct
+operator calls). Plan checks read the plans that actually executed
+(``session.executed_plans``) or ``.explain()`` a result inside a scope
+that is never settled.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Iterator
 from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
 
-_LAZY_PLANS = False
-_DEFER_STACK: list["DeferredFinalize"] = []
 
-
-class DeferredFinalize:
-    """Collector for :func:`deferred_finalize` — holds the caches
-    inner :func:`finalize` calls would otherwise have released, so the
-    composed pipeline pays ONE materialization at the outer boundary
-    instead of one per stage."""
+class Scope:
+    """Handle yielded by :func:`scope`. Only the outermost scope owns
+    the registered caches; an inner (joined) handle's :meth:`settle`
+    passes its result through untouched."""
 
     def __init__(self) -> None:
         self._caches: list[DataFrame] = []
-        self._closed = False
+        self._deferred = False
 
-    def finalize(self, result: DataFrame) -> DataFrame:
-        """The outer boundary: checkpoint ``result`` once (while every
-        deferred stage cache is still live), release them all, and
-        mark the deferral settled."""
-        out = result.localCheckpoint(eager=True)
-        self._release()
+    def settle(self, result: DataFrame) -> DataFrame:
+        """Settle the query: if any :func:`finalize` deferred into the
+        owning scope, checkpoint ``result`` once and release every
+        registered cache; otherwise return ``result`` untouched (a
+        query that never finalizes keeps its lazy plan)."""
+        if self is not _OWNER.get() or not self._deferred:
+            return result
+        out = _settle(result, self._caches)
+        self._caches = []
+        self._deferred = False
         return out
 
     def _release(self) -> None:
         for c in self._caches:
             c.unpersist()
-        self._caches.clear()
-        self._closed = True
+        self._caches = []
 
 
-@contextmanager
-def deferred_finalize():
-    """Caller-owned cache mode for COMPOSED pipelines (docs/SCALE.md
-    §cache-lifetime): inside the context, every :func:`finalize` call
-    becomes a deferral — the result passes through lazy (no per-stage
-    ``localCheckpoint``) and its caches accumulate on the yielded
-    collector instead of being released. The caller settles the
-    composition with ``d.finalize(outer_result)``: one materialization,
-    all stage caches released together.
-
-    The cache-empty invariant survives either way: if the caller never
-    settles (early return, exception), the context exit releases every
-    deferred cache — downstream actions on unsettled lazy results then
-    recompute against uncached inputs, which is the safe direction
-    (correct, slower), never a leak.
-
-    Nesting composes: the innermost active context collects.
-    """
-    d = DeferredFinalize()
-    _DEFER_STACK.append(d)
-    try:
-        yield d
-    finally:
-        _DEFER_STACK.pop()
-        if not d._closed:
-            d._release()
+# the outermost open scope; a ContextVar, so each thread (a streaming
+# foreachBatch callback, a concurrent caller) sees only its own
+_OWNER: ContextVar[Scope | None] = ContextVar("cache_scope", default=None)
 
 
-@contextmanager
-def lazy_plans():
-    """Within this context, :func:`finalize` is a no-op passthrough —
-    for plan-shape tests that need the un-truncated lazy plan. The
-    caller owns cache cleanup (``spark.catalog.clearCache()``)."""
-    global _LAZY_PLANS
-    _LAZY_PLANS = True
-    try:
-        yield
-    finally:
-        _LAZY_PLANS = False
-
-
-def round_checkpoint(df: DataFrame) -> DataFrame:
-    """Materialize one round of an iterative loop (r11).
-
-    Default: an eager ``localCheckpoint`` — the round is computed
-    exactly once (as the old ``persist()+count()`` idiom did), but the
-    next round plans against a FLAT scan that preserves the round's
-    output partitioning, instead of an InMemoryRelation tree that
-    nests one level per round and that Catalyst re-canonicalizes on
-    every later round's planning (measured on the k-core loop at
-    sf0.1: per-round cost grew 0.5 s → 2.7 s by round 3 and the final
-    aggregate paid 2.2 s of pure planning; flat rounds stay ~0.4 s).
-    Checkpoint blocks are RDD-level storage that is GC-cleaned when
-    the round's DataFrame drops — nothing registers in the catalog
-    CacheManager, so no cache outlives the call.
-
-    Fault-tolerance trade (ADVICE r11): ``localCheckpoint`` severs
-    lineage onto NON-REPLICATED executor-local blocks — on a cluster,
-    losing an executor mid-query makes every downstream round of that
-    query irrecoverable (a ``persist()`` round could recompute). That
-    is the standard trade iterative Spark programs make; a distributed
-    deployment that cannot accept it should use reliable
-    ``checkpoint()`` against a checkpoint dir every few rounds instead
-    (the operators' docstrings already prescribe periodic checkpoints
-    at scale). The local-mode bench this repo drives has a single
-    "executor", so the distinction is moot there.
-
-    Under :func:`lazy_plans` the legacy ``persist()+count()`` shape is
-    kept: plan-inspection tests read the per-round join tree out of
-    the displayed InMemoryRelation, which a checkpoint's LogicalRDD
-    would hide. In that mode the persisted rounds are the INSPECTING
-    TEST's to release (``spark.catalog.clearCache()`` after) — loop
-    operators do not track them, so don't drive full executions of
-    materialize-mode loops under lazy_plans."""
-    if _LAZY_PLANS:
-        out = df.persist()
-        out.count()
-        return out
-    return df.localCheckpoint(eager=True)
-
-
-def finalize(result: DataFrame, *caches: DataFrame) -> DataFrame:
-    """Eagerly ``localCheckpoint`` ``result`` (while every cache in
-    ``caches`` is still live), then unpersist the caches. Returns the
-    checkpointed DataFrame — checkpoint storage is RDD-level, invisible
-    to the Spark catalog CacheManager, and dies with the DataFrame.
-
-    Order matters and is fixed here: checkpoint FIRST, release after —
-    unpersisting an input cache invalidates dependent CacheManager
-    entries, so release-then-materialize would silently recompute the
-    whole pipeline against uncached inputs.
-    """
-    if _LAZY_PLANS:
-        return result
-    if _DEFER_STACK:
-        # composed-pipeline opt-out (deferred_finalize): keep the
-        # stage caches live for the outer stages, skip the per-stage
-        # materialization; the collector settles them at the boundary
-        _DEFER_STACK[-1]._caches.extend(caches)
-        return result
+def _settle(result: DataFrame, caches: Iterable[DataFrame]) -> DataFrame:
+    # checkpoint FIRST, release after: unpersisting an input cache
+    # invalidates dependent CacheManager entries, so
+    # release-then-materialize would silently recompute the whole
+    # pipeline against uncached inputs
     out = result.localCheckpoint(eager=True)
     for c in caches:
         c.unpersist()
     return out
+
+
+@contextmanager
+def scope() -> Iterator[Scope]:
+    """Query-scoped cache owner (docs/SCALE.md §"Cache lifetime").
+
+    Inside the context every :func:`finalize` registers its caches on
+    the outermost scope and returns its result lazily. The caller
+    settles with ``s.settle(result)``. A nested scope joins the outer
+    one: its ``settle`` is a passthrough, and the outermost settles
+    once. On exit — settled, unsettled or by exception — every cache
+    still registered is released, so an unsettled lazy result
+    recomputes against uncached inputs (the safe direction: correct,
+    slower, never a leak)."""
+    if _OWNER.get() is not None:
+        yield Scope()
+        return
+    s = Scope()
+    token = _OWNER.set(s)
+    try:
+        yield s
+    finally:
+        _OWNER.reset(token)
+        s._release()
+
+
+def round_checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize one round of an iterative loop with an eager
+    ``localCheckpoint`` — the round is computed exactly once (as the
+    old ``persist()+count()`` idiom did), but the next round plans
+    against a FLAT scan instead of an InMemoryRelation tree that nests
+    one level per round and that Catalyst re-canonicalizes on every
+    later round's planning (measured on the k-core loop at sf0.1:
+    per-round cost grew 0.5 s → 2.7 s by round 3 and the final
+    aggregate paid 2.2 s of pure planning; flat rounds stay ~0.4 s).
+    The scan reports ``UnknownPartitioning``: a round's output
+    partitioning does not carry into the next round's plan. Checkpoint
+    blocks are RDD-level storage that is GC-cleaned when the round's
+    DataFrame drops — nothing registers in the catalog CacheManager,
+    so no cache outlives the call. Each round is its own executed
+    query, so its physical plan is in the SQL status store.
+
+    Fault-tolerance trade: ``localCheckpoint`` severs lineage onto
+    NON-REPLICATED executor-local blocks — on a cluster, losing an
+    executor mid-query makes every downstream round of that query
+    irrecoverable (a ``persist()`` round could recompute). That is the
+    standard trade iterative Spark programs make; a distributed
+    deployment that cannot accept it should use reliable
+    ``checkpoint()`` against a checkpoint dir every few rounds instead
+    (the operators' docstrings already prescribe periodic checkpoints
+    at scale). The local-mode bench this repo drives has a single
+    "executor", so the distinction is moot there."""
+    return df.localCheckpoint(eager=True)
+
+
+def finalize(result: DataFrame, *caches: DataFrame) -> DataFrame:
+    """Hand ``result`` and the caches it reads to the cache owner.
+
+    Inside a :func:`scope` the caches are registered on the outermost
+    scope and ``result`` returns lazily; the scope settles once. With
+    no scope open the settle happens here: eager ``localCheckpoint``
+    of ``result`` (while every cache is still live), then release of
+    the caches. The checkpoint is RDD-level storage, invisible to the
+    Spark catalog CacheManager, and dies with the DataFrame.
+    """
+    owner = _OWNER.get()
+    if owner is None:
+        return _settle(result, caches)
+    owner._caches.extend(caches)
+    owner._deferred = True
+    return result

@@ -492,7 +492,6 @@ def kcore(
     src: str = "src",
     dst: str = "dst",
     broadcast: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """k-core peeling (Seidman 1983): repeatedly delete every node of
     degree < ``k`` (and its edges); what survives ``rounds`` peels is
@@ -506,24 +505,14 @@ def kcore(
     rounds are no-ops). Per round: one degree aggregate over surviving
     edges and two semi-joins against the ≤|V|-row survivor set
     (broadcast by default, ``broadcast=False`` + pre-partitioned edges
-    at billion-node scale — see :func:`_hint`). Each round persists
-    and materializes before releasing the previous — same
-    linear-lineage discipline as the CC loop.
+    at billion-node scale — see :func:`_hint`).
 
-    Cache lifetime contract: with ``materialize=True`` (default) the
-    ≤|V|-row (node, degree) result is computed here via an eager
-    ``localCheckpoint`` — the returned plan is a flat scan of the
-    stored result (no |E|-sized edge cache pinned, no R-round nested
-    InMemoryRelation tree for downstream planners to canonicalize; the
-    result blocks are GC-cleaned when the DataFrame is dropped) — and
-    the final round's edge cache is released before returning.
-    ``materialize=False`` keeps the lazy plan, which pins the final
-    round's edge set until ``clearCache``; use it only to compose
-    further lazy transformations that Catalyst should see through.
-    (ADVICE r11: under :func:`~..cache.lazy_plans` the
-    ``materialize=True`` rounds persist without per-round release —
-    that combination is for plan inspection only, where the inspecting
-    test clears the session cache; see ``round_checkpoint``.)
+    Cache lifetime contract: every round is an eager
+    ``round_checkpoint`` (a flat scan, no R-round nested
+    InMemoryRelation tree for downstream planners to canonicalize),
+    and the ≤|V|-row (node, degree) result goes through ``finalize``:
+    settled here when no scope is open, otherwise by the enclosing
+    query's one settle. Plan checks read the rounds' executed plans.
 
     Returns (node, degree) over the surviving subgraph.
     """
@@ -531,13 +520,11 @@ def kcore(
     # operations keyed the same way can share one exchange"):
     # HashPartitioning(a) satisfies the distinct's ClusteredDistribution
     # (a, b) — equal (a, b) rows land together whenever equal a rows do
-    # — so the distinct still plans exactly ONE exchange, but the cache
-    # comes out co-partitioned on the key EVERY peel round aggregates
-    # and semi-joins on. The per-round degree groupBy("a") then needs
-    # no exchange at all (the semi joins are broadcast and preserve
-    # partitioning), removing `rounds` full-edge-set shuffles; per-node
-    # degree skew is the same either way (the aggregate keys on a
-    # regardless of how the cache is laid out).
+    # — so the distinct still plans exactly ONE exchange. The
+    # co-partitioning does NOT reach the rounds: the round checkpoint's
+    # scan reports UnknownPartitioning, and the executed plans show each
+    # round's degree groupBy("a") behind its own Exchange
+    # hashpartitioning(a) (graph_kcore, tools/profile.py).
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -545,22 +532,15 @@ def kcore(
         .repartition("a")
         .distinct()
     )
-    # Per-round materialization (r11). materialize=True rounds use an
-    # eager localCheckpoint instead of persist()+count(): the peel is
-    # computed exactly once either way, but the checkpoint hands the
-    # next round a FLAT scan whose hash(a) partitioning is preserved,
-    # where persist() hands it a one-level-deeper InMemoryRelation
-    # tree — and Catalyst re-canonicalizes that whole nested tree on
-    # every later round's planning, measured growing 0.4 s (round 1)
-    # -> 2.7 s (round 3) -> 2.2 s final aggregate at sf0.1; flat
-    # rounds stay ~0.4 s each and the final aggregate 0.2 s. The
-    # materialize=False path keeps the legacy persist chain because
-    # its callers (plan tests) need the un-truncated per-round join
-    # plan; it still materializes each round eagerly.
-    if materialize:
-        alive = round_checkpoint(sym)
-    else:
-        alive = sym.persist()
+    # Per-round materialization (r11): an eager localCheckpoint instead
+    # of persist()+count(). The peel is computed exactly once either
+    # way, but the checkpoint hands the next round a FLAT scan, where
+    # persist() hands it a one-level-deeper InMemoryRelation tree —
+    # and Catalyst re-canonicalizes that whole nested tree on every
+    # later round's planning, measured growing 0.4 s (round 1) -> 2.7 s
+    # (round 3) -> 2.2 s final aggregate at sf0.1; flat rounds stay
+    # ~0.4 s each and the final aggregate 0.2 s.
+    alive = round_checkpoint(sym)
     for _ in range(rounds):
         # persisted: keep feeds BOTH semi-joins — unpersisted, the
         # degree aggregate over the round's edge set runs twice
@@ -576,27 +556,13 @@ def kcore(
             "b",
             "left_semi",
         )
-        if materialize:
-            nxt = round_checkpoint(nxt)
-            keep.unpersist()
-        else:
-            nxt = nxt.persist()
-            nxt.count()  # materialize before releasing the previous round
-            keep.unpersist()
-            alive.unpersist()
-        alive = nxt
-    out = alive.groupBy(F.col("a").alias("node")).agg(
-        F.count(F.lit(1)).alias("degree")
+        alive = round_checkpoint(nxt)
+        keep.unpersist()
+    return finalize(
+        alive.groupBy(F.col("a").alias("node")).agg(
+            F.count(F.lit(1)).alias("degree")
+        )
     )
-    if materialize:
-        # eager checkpoint, NOT persist+count: unpersisting the
-        # round caches invalidates any dependent cache entry (every
-        # later action would recompute the whole peel), and the
-        # R-round nested-InMemoryRelation lineage makes even PLANNING
-        # downstream actions driver-expensive. The checkpoint stores
-        # the small result and truncates the plan to a flat scan.
-        out = finalize(out, alive)
-    return out
 
 
 def bfs_levels(
@@ -787,16 +753,20 @@ def earliest_arrival(
     deltas only reaches the same bounded fixpoint as relaxing the full
     table.
 
-    Physical plan (r12, guide §1.2/§4.1): the edge list is DISTINCTED
-    once at (src, dst, t) triple grain and co-partitioned on the key
-    each round's candidate aggregate groups by (``dst`` under the
-    default broadcast loop, ``src`` when the per-round join itself
-    must shuffle). A round is then one broadcast delta join + a
-    codegen ``t >= arr`` filter + ``groupBy(dst).min(t)`` — which
-    needs NO exchange at all (the cache is already hash(dst)
-    partitioned and the filter/join preserve it), so the only
-    per-round shuffle is the ≤|V|-row merged-arrival aggregate.
-    Equivalent by construction to the r11 packed-pair form
+    Physical plan (executed plans of ``graph_temporal_reachability``
+    at sf0.1, ``plans/graph_temporal_reachability.txt`` written by
+    ``tools/profile.py``): the edge list is DISTINCTED once at (src,
+    dst, t) triple grain behind one ``repartition`` (on ``dst`` under
+    the default broadcast loop, on ``src`` when the per-round join
+    itself must shuffle), and the distinct rides that exchange. The
+    triples are then round-checkpointed, and the checkpoint scan
+    reports ``UnknownPartitioning`` — Catalyst does not see the
+    co-partitioning. So a round is one broadcast delta join + a
+    codegen ``t >= arr`` filter + a partial ``groupBy(dst).min(t)``,
+    then ``Exchange hashpartitioning(dst)`` of the partial minima,
+    then the ≤|V|-row merged-arrival aggregate behind its own
+    ``Exchange hashpartitioning(node)``: two hash exchanges per round,
+    both after map-side combining. Equivalent by construction to the r11 packed-pair form
     (``array_min(filter(ts, t -> t >= arr))`` per pair, then min over
     pairs): min over eligible triples grouped by dst ≡ min over pairs
     of each pair's first usable departure. The packed form paid one
@@ -808,8 +778,7 @@ def earliest_arrival(
     both forms scan the same time values per round; this one keeps
     every stage whole-stage-codegen and map-side-combinable. The
     arrival table is ≤|V| rows (broadcast by default,
-    ``broadcast=False`` + the src-co-partitioned cache at
-    billion-node scale).
+    ``broadcast=False`` at billion-node scale).
     """
     trips = round_checkpoint(
         edges.select(src, dst, time)

@@ -3879,10 +3879,10 @@ def log_loss_multiclass(
     0.5·10^-12 (table rounding), as :func:`log_loss`.
 
     Scale shape: ONE map-side-combinable aggregate at clamped-score
-    grain (≤ s_max rows per group), one BROADCAST-hash lookup of the
-    s_max-row single-arm table (a tiny local relation, never an
-    inline literal array — see :func:`log_loss`), one
-    re-aggregation. Returns ``n``, ``n_clamped``, ``ll_num``
+    grain (≤ s_max rows per group), one literal-array ``get`` into the
+    s_max-entry single-arm table per grain row (a projection — no
+    relation, no join, no broadcast; see
+    :func:`~.dq.psi_ln_lookup`), one re-aggregation. Returns ``n``, ``n_clamped``, ``ll_num``
     (DECIMAL(38,0) — serialize as string in gate queries) and
     ``log_loss`` (NULL for an empty group)."""
     tab = log_loss_table(s_max)
@@ -4337,10 +4337,8 @@ def _krippendorff_unit_state(
     # frames (nothing registers in the CacheManager).
     from blockchain_data_engineering_spark.cache import round_checkpoint
 
-    # round_checkpoint needs no release tracking: default mode stores
-    # checkpoint blocks that GC-clean with the frames, and under
-    # lazy_plans the persisted diamonds are the inspecting test's to
-    # clear (the documented lazy_plans contract) — so no caches list.
+    # round_checkpoint needs no release tracking: its checkpoint
+    # blocks GC-clean with the frames — so no caches list.
     _share = round_checkpoint
 
     cells = _share(
@@ -4672,7 +4670,7 @@ def krippendorff_alpha(
     num = (de - (n_d - 1) * u).cast("decimal(38,0)")
     # ONE materialization of the group-grain result (the shared
     # diamonds are checkpoint-backed, nothing to release; finalize
-    # defers under deferred_finalize / passes through under lazy_plans)
+    # defers to the enclosing query's scope)
     return finalize(
         out.select(
             *keyed,
@@ -4762,8 +4760,8 @@ def krippendorff_disagreement_explain(
     pairs = (m_d * (m_d - 1)).cast("decimal(38,0)")
     # ONE materialization of the kept-unit-grain result (the same
     # linear grain kept_items itself holds; the shared diamonds are
-    # checkpoint-backed, nothing to release); finalize defers under
-    # deferred_finalize / passes through under lazy_plans
+    # checkpoint-backed, nothing to release); finalize defers to the
+    # enclosing query's scope
     return finalize(
         kept_items.select(
             *keyed,

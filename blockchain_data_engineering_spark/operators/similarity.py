@@ -485,7 +485,6 @@ def lsh_ann_topk_multitable(
     dim: int = 64,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """Multi-table sign-LSH ANN: candidates are the UNION over
     ``n_tables`` hash tables of same-bucket pairs, deduplicated, then
@@ -511,12 +510,10 @@ def lsh_ann_topk_multitable(
     # persist the bucket table: the self-join references it twice and
     # would otherwise run the full signature aggregation twice. It is
     # N·L narrow rows (id, tbl, bucket) — bounded and safe to cache.
-    # Cache lifetime contract: with materialize=True (default) the
-    # N·k-row result is computed HERE via an eager localCheckpoint
-    # (flat-plan result, blocks GC-cleaned with the DataFrame) and the
-    # bucket cache released before returning — no hidden pin.
-    # materialize=False keeps the legacy lazy plan, which references
-    # the bucket cache until clearCache.
+    # Cache lifetime contract: the N·k-row result and the bucket cache
+    # go to finalize — settled here with no scope open (flat-plan
+    # result, bucket cache released before returning), otherwise by
+    # the enclosing query's one settle.
     b = sign_lsh_buckets_multitable(
         vectors, n_tables, n_planes, dim, vec_col, id_col
     ).persist()
@@ -570,18 +567,12 @@ def lsh_ann_topk_multitable(
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("cand_id")
     )
-    out = (
+    return finalize(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
+        .select("query_id", "cand_id", "cosine", "rank"),
+        b,
     )
-    if materialize:
-        # eager checkpoint: stores the N·k-row result and truncates
-        # lineage to a flat scan, so the bucket cache can be released
-        # without invalidating a dependent cache entry (see kcore for
-        # the failure mode persist+count hits here)
-        out = finalize(out, b)
-    return out
 
 
 # ------------------------------------------------------------- k-means ---

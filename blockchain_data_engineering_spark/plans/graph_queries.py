@@ -656,15 +656,13 @@ def graph_sssp_cheapest_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))
         # the loop scans the edge list once per round — materialize the
-        # join+agg ONCE instead of 4×; safe to release immediately
-        # after: sssp() finalizes (eagerly checkpoints) its result
+        # join+agg ONCE instead of 4×; released at the query's settle
         .persist()
     )
     # seeds c1, c2, c3 under the packing ck ↦ 2·ck
     seeds = spark.createDataFrame([(2,), (4,), (6,)], "node long")
     out = G.sssp(wedges, seeds, rounds=SSSP_ROUNDS)
-    wedges.unpersist()
-    return out.select(_node_str("node").alias("node"), "dist")
+    return finalize(out.select(_node_str("node").alias("node"), "dist"), wedges)
 
 
 # ---------------------------------------------------------------------------
@@ -808,7 +806,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode all run at long grain; strings form at the |V|-row readout
     edges = _edges_packed_df(spark, sf_dir)
     out = G.clustering_coefficient(edges)
-    edges.unpersist()
-    return out.select(
-        _node_str("node").alias("node"), "degree", "n_tri", "lcc"
+    return finalize(
+        out.select(_node_str("node").alias("node"), "degree", "n_tri", "lcc"),
+        edges,
     )

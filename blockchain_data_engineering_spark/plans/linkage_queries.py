@@ -279,17 +279,13 @@ def _er_cluster_oracle(rounds: int) -> str:
 def er_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy part-name pairs (same blocking + Levenshtein as
     er_fuzzy_part_pairs) resolved into entity clusters."""
-    from blockchain_data_engineering_spark.cache import deferred_finalize
-
     part = spread(load_table(spark, sf_dir, "part"))
     first_tok = lambda df: F.element_at(F.split(F.col("p_name"), " "), 1)  # noqa: E731
     last_tok = lambda df: F.element_at(F.split(F.col("p_name"), " "), -1)  # noqa: E731
-    with deferred_finalize() as d:
-        pairs = L.fuzzy_pairs(
-            part,
-            name_col="p_name",
-            block_keys=[first_tok, last_tok],
-            max_distance=ER_MAX_DIST,
-        )
-        out = L.entity_clusters(pairs, rounds=ER_CLUSTER_ROUNDS)
-        return d.finalize(out)
+    pairs = L.fuzzy_pairs(
+        part,
+        name_col="p_name",
+        block_keys=[first_tok, last_tok],
+        max_distance=ER_MAX_DIST,
+    )
+    return L.entity_clusters(pairs, rounds=ER_CLUSTER_ROUNDS)

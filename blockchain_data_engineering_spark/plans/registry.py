@@ -10,9 +10,12 @@ the low-bit noise).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from blockchain_data_engineering_spark.cache import scope
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -31,15 +34,26 @@ EXTRA_ORACLES: dict[str, str] = {}
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register ``fn`` under ``name``; ``oracle`` is the DuckDB SQL twin
     (omit only for genuinely non-SQL-expressible ops — the driver then
-    records a weaker rows-only check)."""
+    records a weaker rows-only check).
+
+    The registered function runs inside a :func:`~..cache.scope`: its
+    operators' ``finalize`` calls defer, and the query settles at most
+    once on return, leaving no live cache behind. Called from inside
+    another registered query, it joins the caller's scope."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            with scope() as s:
+                return s.settle(fn(spark, sf_dir))
+
+        QUERIES[name] = scoped
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
+        return scoped
 
     return deco
 

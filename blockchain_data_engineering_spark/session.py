@@ -18,6 +18,8 @@ Defaults chosen for correctness at small SF and sanity at cluster scale:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -53,6 +55,37 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def executed_plans(spark: SparkSession) -> Iterator[list[str]]:
+    """Collect the formatted physical plan of every SQL execution that
+    runs inside the block (round checkpoints, settles, actions), in
+    execution order; the yielded list fills when the block exits.
+
+    Reads the SQL status store, which records plans even with
+    ``spark.ui.enabled=false``. It keeps only the newest
+    ``spark.sql.ui.retainedExecutions`` entries, so executions are
+    selected by id, never by list position."""
+    jsc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def newest_first():
+        # plans reach the store through the listener bus
+        jsc.listenerBus().waitUntilEmpty()
+        return store.executionsList().reverseIterator()
+
+    it = newest_first()
+    start = it.next().executionId() if it.hasNext() else -1
+    plans: list[str] = []
+    yield plans
+    it, new = newest_first(), []
+    while it.hasNext():
+        e = it.next()
+        if e.executionId() <= start:
+            break
+        new.append(e.physicalPlanDescription())
+    plans.extend(reversed(new))
 
 
 def configure_for_session(spark: SparkSession) -> SparkSession:

@@ -1,8 +1,8 @@
-"""Cache-lifetime contract (docs/SCALE.md §cache-lifetime): finalize's
-checkpoint-then-release default, and the deferred_finalize opt-out for
-composed pipelines (r4 verdict ask #5) — one materialization at the
-outer boundary instead of one per stage, with the cache-empty
-invariant intact even on early exit.
+"""Cache-lifetime contract (docs/SCALE.md §"Cache lifetime"): one
+query-scoped cache owner. Inside ``cache.scope()`` every ``finalize``
+defers and the outermost scope settles once; with no scope open
+``finalize`` settles at once; the cache-empty invariant holds on every
+exit, exceptions included.
 """
 
 from __future__ import annotations
@@ -10,11 +10,12 @@ from __future__ import annotations
 import pyspark.sql.classic.dataframe as _cdf
 import pytest
 
-from blockchain_data_engineering_spark.cache import (
-    deferred_finalize,
-    finalize,
-)
+from blockchain_data_engineering_spark import cache
+from blockchain_data_engineering_spark.cache import finalize, scope
 from blockchain_data_engineering_spark.operators import graph as G
+from blockchain_data_engineering_spark.plans import EXTRA_QUERIES, QUERIES
+
+ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
 
 
 def _cache_empty(spark) -> bool:
@@ -31,8 +32,8 @@ def edges(spark):
 
 @pytest.fixture()
 def ckpt_counter(monkeypatch):
-    """Counts DataFrame.localCheckpoint calls (the per-stage
-    materializations deferred_finalize exists to elide)."""
+    """Counts DataFrame.localCheckpoint calls (settles and round
+    checkpoints alike)."""
     orig = _cdf.DataFrame.localCheckpoint
     calls = {"n": 0}
 
@@ -44,47 +45,73 @@ def ckpt_counter(monkeypatch):
     return calls
 
 
-def test_finalize_default_checkpoints_per_call(spark, edges, ckpt_counter):
+@pytest.fixture()
+def settle_counter(monkeypatch):
+    """Counts settles: checkpoint-then-release, in or out of a scope."""
+    orig = cache._settle
+    calls = {"n": 0}
+
+    def counting(*a):
+        calls["n"] += 1
+        return orig(*a)
+
+    monkeypatch.setattr(cache, "_settle", counting)
+    return calls
+
+
+def test_finalize_default_checkpoints_per_call(spark, edges, settle_counter):
+    """No scope open: every operator call settles on its own."""
     cc = G.connected_components(edges, iterations=3)
     pr = G.pagerank(edges, iterations=2)
-    assert ckpt_counter["n"] == 2  # one materialization per operator
+    assert settle_counter["n"] == 2  # one settle per operator call
     assert _cache_empty(spark)
     assert cc.count() > 0 and pr.count() > 0
 
 
-def test_deferred_finalize_single_materialization(spark, edges, ckpt_counter):
-    """Inside the context the stage operators stay LAZY (no per-stage
-    checkpoint; their caches stay live for the outer stages); settling
-    at the boundary pays exactly ONE materialization and releases
-    every deferred cache."""
-    with deferred_finalize() as d:
+def test_finalize_outside_context_still_eager(spark, settle_counter):
+    """``finalize`` outside any scope settles immediately."""
+    df = spark.range(5).toDF("node").persist()
+    out = finalize(df.selectExpr("node * 2 AS x"), df)
+    assert settle_counter["n"] == 1
+    assert _cache_empty(spark)
+    assert out.count() == 5
+
+
+def test_composed_operator_pair_settles_once(spark, edges, ckpt_counter):
+    """Inside a scope the operators stay LAZY (no per-operator
+    checkpoint; their caches stay live for the composition); the one
+    settle checkpoints once and releases every registered cache."""
+    with scope() as s:
         cc = G.connected_components(edges, iterations=3)
         pr = G.pagerank(edges, iterations=2)
-        assert ckpt_counter["n"] == 0  # both stages deferred
-        assert not _cache_empty(spark)  # stage caches intentionally live
-        out = d.finalize(cc.join(pr, "node"))
-    assert ckpt_counter["n"] == 1  # the single boundary checkpoint
-    assert _cache_empty(spark)  # sweep-green at the outer call
+        assert ckpt_counter["n"] == 0  # both operators deferred
+        assert not _cache_empty(spark)  # their caches intentionally live
+        out = s.settle(cc.join(pr, "node"))
+        assert ckpt_counter["n"] == 1  # the single settle
+        assert _cache_empty(spark)
     got = {r["node"]: r["label"] for r in out.collect()}
     assert got[1] == got[2] == got[3] and got[10] == got[11]
     assert got[1] != got[10]
 
 
-def test_deferred_finalize_releases_on_unsettled_exit(spark, edges):
-    """Early exit without settling must still release every deferred
-    cache — the invariant survives; unsettled lazy results recompute
-    (safe direction), never leak."""
-    with deferred_finalize():
-        cc = G.connected_components(edges, iterations=2)
-        assert not _cache_empty(spark)
+def test_scope_releases_every_cache_on_exception(spark, edges):
+    """An exception inside the scope must still release every
+    registered cache — the invariant survives; unsettled lazy results
+    recompute (safe direction), never leak."""
+    with pytest.raises(RuntimeError):
+        with scope():
+            cc = G.connected_components(edges, iterations=2)
+            pr = G.pagerank(edges, iterations=2)
+            assert not _cache_empty(spark)
+            raise RuntimeError("boom")
     assert _cache_empty(spark)
-    assert cc.count() > 0  # recomputes against uncached inputs
+    assert cc.count() > 0 and pr.count() > 0  # recompute uncached
 
 
-def test_deferred_finalize_matches_default_results(spark, edges):
-    """The opt-out changes execution shape only, never values."""
-    with deferred_finalize() as d:
-        lazy = d.finalize(G.connected_components(edges, iterations=3))
+def test_scope_matches_immediate_results(spark, edges):
+    """Deferring changes execution shape only, never values."""
+    with scope() as s:
+        lazy = s.settle(G.connected_components(edges, iterations=3))
     eager = G.connected_components(edges, iterations=3)
     assert sorted(map(tuple, lazy.collect())) == sorted(
         map(tuple, eager.collect())
@@ -92,23 +119,21 @@ def test_deferred_finalize_matches_default_results(spark, edges):
     assert _cache_empty(spark)
 
 
-def test_deferred_finalize_nests(spark, edges, ckpt_counter):
-    """The innermost active context collects; settling the inner one
-    doesn't disturb the outer deferral."""
-    with deferred_finalize() as outer:
-        a = G.connected_components(edges, iterations=2)
-        with deferred_finalize() as inner:
-            b = G.pagerank(edges, iterations=2)
-            b = inner.finalize(b)  # settles ONLY the inner caches
-        assert ckpt_counter["n"] == 1
-        out = outer.finalize(a.join(b, "node"))
-    assert ckpt_counter["n"] == 2
+def test_query_without_finalize_is_not_checkpointed(spark, sf_dir, ckpt_counter):
+    """A registered query that never finalizes returns its lazy plan
+    untouched: no settle, no checkpoint scan in its plan."""
+    df = ALL_QUERIES["pricing_summary"](spark, sf_dir)
+    assert ckpt_counter["n"] == 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert df.count() > 0
+
+
+def test_nested_query_settles_once(spark, sf_dir, settle_counter):
+    """sample_split_leakage_free calls pipeline_corpus_dedup: the inner
+    query joins the outer scope, so the pair settles once and leaves no
+    cache behind."""
+    out = ALL_QUERIES["sample_split_leakage_free"](spark, sf_dir)
+    assert settle_counter["n"] == 1
     assert _cache_empty(spark)
     assert out.count() > 0
-
-
-def test_finalize_outside_context_still_eager(spark, edges):
-    df = spark.range(5).toDF("node").persist()
-    out = finalize(df.selectExpr("node * 2 AS x"), df)
-    assert _cache_empty(spark)
-    assert out.count() == 5

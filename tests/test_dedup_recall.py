@@ -115,10 +115,11 @@ def test_incremental_semijoin_scale_gate(spark):
     import io
     from contextlib import redirect_stdout
 
-    from blockchain_data_engineering_spark.cache import lazy_plans
+    from blockchain_data_engineering_spark.cache import scope
     from blockchain_data_engineering_spark.plans.dedup_queries import (
         dedup_incremental_batch,
     )
+    from blockchain_data_engineering_spark.session import executed_plans
 
     def rows():
         return sorted(
@@ -126,12 +127,12 @@ def test_incremental_semijoin_scale_gate(spark):
         )
 
     def plan():
-        with lazy_plans():
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                dedup_incremental_batch(spark, SF_DIR).explain("formatted")
-        spark.catalog.clearCache()
-        return buf.getvalue()
+        # the lazy plan inside an unsettled scope, plus whatever the
+        # construction executed (round checkpoints)
+        buf = io.StringIO()
+        with executed_plans(spark) as ran, scope(), redirect_stdout(buf):
+            dedup_incremental_batch(spark, SF_DIR).explain("formatted")
+        return "\n".join([buf.getvalue(), *ran])
 
     base_rows = rows()
     base_plan = plan()

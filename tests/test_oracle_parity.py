@@ -13,6 +13,7 @@ import math
 import pandas as pd
 import pytest
 
+from blockchain_data_engineering_spark import cache
 from blockchain_data_engineering_spark.plans import (
     EXTRA_ORACLES,
     EXTRA_QUERIES,
@@ -57,7 +58,12 @@ def _cache_empty(spark) -> bool:
 
 
 @pytest.mark.parametrize("name", sorted(ALL_QUERIES))
-def test_query_matches_oracle(name, spark, duck, sf_dir):
+def test_query_matches_oracle(name, spark, duck, sf_dir, monkeypatch):
+    settles = []
+    real_settle = cache._settle
+    monkeypatch.setattr(
+        cache, "_settle", lambda *a: settles.append(1) or real_settle(*a)
+    )
     spark_df = ALL_QUERIES[name](spark, sf_dir).toPandas()
     # cache-lifetime convention: no query may leak a DataFrame cache
     # past its own execution (the sweep that catches the r2 kcore /
@@ -66,6 +72,8 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
     if leaked:
         spark.catalog.clearCache()  # don't cascade into later params
     assert not leaked, f"{name}: leaked df.cache()/persist() past the call"
+    # the registry's scope owns the caches: one settle per query at most
+    assert len(settles) <= 1, f"{name}: settled {len(settles)} times"
     if name not in ALL_ORACLES:
         # rows-only check (non-SQL-expressible op)
         assert spark_df is not None

@@ -9,23 +9,31 @@ import io
 import re
 from contextlib import redirect_stdout
 
-from blockchain_data_engineering_spark.cache import lazy_plans
+from blockchain_data_engineering_spark.cache import scope
 from blockchain_data_engineering_spark.plans import EXTRA_QUERIES, QUERIES
+from blockchain_data_engineering_spark.session import executed_plans
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    """Explain the query's REAL computational plan: lazy_plans() makes
-    finalize() a passthrough (no localCheckpoint truncating the shape
-    to a flat scan, no cache release), and the cleanup that finalize
-    would have done falls to us (clearCache)."""
+    """Explain the query's REAL computational plan: the lazy result is
+    explained inside a scope that is never settled (no settle
+    checkpoint truncating the shape to a flat scan; the scope releases
+    the caches on exit), followed by the executed plans of whatever
+    the construction ran — the round checkpoints of iterative loops."""
     fn = QUERIES.get(name) or EXTRA_QUERIES[name]
     buf = io.StringIO()
-    try:
-        with lazy_plans(), redirect_stdout(buf):
-            fn(spark, sf_dir).explain("formatted")
-    finally:
-        spark.catalog.clearCache()
-    return buf.getvalue()
+    with executed_plans(spark) as ran, scope(), redirect_stdout(buf):
+        fn(spark, sf_dir).explain("formatted")
+    return "\n".join([buf.getvalue(), *ran])
+
+
+def _ran(spark, build) -> tuple[list, str]:
+    """Collect ``build()``'s rows; return them with the plans of every
+    execution that produced them, round checkpoints and settle
+    included."""
+    with executed_plans(spark) as ran:
+        rows = sorted(map(tuple, build().collect()))
+    return rows, "\n".join(ran)
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -264,24 +272,20 @@ def test_graph_broadcast_hint_is_parameterized(spark, sf_dir):
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            G.pagerank_quantized(edges, iterations=2, broadcast=False).explain(
-                "formatted"
-            )
-        assert "BroadcastExchange" not in buf.getvalue()
-
-        hinted = G.pagerank_quantized(edges, iterations=2, broadcast=True)
-        unhinted = G.pagerank_quantized(edges, iterations=2, broadcast=False)
-        assert sorted(map(tuple, hinted.collect())) == sorted(
-            map(tuple, unhinted.collect())
-        )
-
-        cc_h = G.connected_components_pointer_jump(edges, rounds=2, broadcast=True)
-        cc_u = G.connected_components_pointer_jump(edges, rounds=2, broadcast=False)
-        assert sorted(map(tuple, cc_h.collect())) == sorted(
-            map(tuple, cc_u.collect())
-        )
+        ops = {
+            "pagerank_quantized": lambda bc: G.pagerank_quantized(
+                edges, iterations=2, broadcast=bc
+            ),
+            "connected_components_pointer_jump": lambda bc: (
+                G.connected_components_pointer_jump(edges, rounds=2, broadcast=bc)
+            ),
+        }
+        for name, op in ops.items():
+            got_u, unhinted_plan = _ran(spark, lambda: op(False))
+            got_h, hinted_plan = _ran(spark, lambda: op(True))
+            assert "BroadcastExchange" not in unhinted_plan, (name, unhinted_plan)
+            assert "BroadcastExchange" in hinted_plan, name  # non-vacuous
+            assert got_h == got_u, name
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
@@ -295,15 +299,15 @@ def test_multitable_lsh_plans_no_cartesian(spark, sf_dir):
     from blockchain_data_engineering_spark.operators import similarity as SIM
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # materialize=False: the default eagerly localCheckpoints, which
+    # an unsettled scope: outside one, finalize localCheckpoints and
     # truncates the plan to a flat ExistingRDD scan — this guard needs
-    # the LAZY plan or the assertion is vacuous
-    df = SIM.lsh_ann_topk_multitable(
-        emb, k=3, n_tables=4, n_planes=4, materialize=False
-    )
+    # the LAZY plan or the assertion is vacuous (the operator has no
+    # loop, so the lazy plan is the whole computation)
     buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
+    with scope(), redirect_stdout(buf):
+        SIM.lsh_ann_topk_multitable(emb, k=3, n_tables=4, n_planes=4).explain(
+            "formatted"
+        )
     plan = buf.getvalue()
     assert "CartesianProduct" not in plan, plan
     # prove the guard sees the real pipeline, not a checkpoint stub
@@ -400,23 +404,21 @@ def test_kcore_unhinted_path_has_no_broadcast(spark, sf_dir):
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            # materialize=False: the default localCheckpoints eagerly,
-            # truncating the plan to ExistingRDD — the broadcast guard
-            # needs the LAZY per-round join plan or it asserts nothing
-            kcore(edges, k=3, rounds=2, broadcast=False, materialize=False).explain(
-                "formatted"
-            )
-        plan = buf.getvalue()
-        assert "BroadcastExchange" not in plan
-        assert "ExistingRDD" not in plan, plan  # guard is non-vacuous
-        # the gate query's plan is checkpoint-truncated, so the
+        # the executed plans: every peel round's checkpoint and the
+        # settle — the returned frame itself is a flat checkpoint scan
+        u, plan = _ran(spark, lambda: kcore(edges, k=3, rounds=2, broadcast=False))
+        h, hinted_plan = _ran(
+            spark, lambda: kcore(edges, k=3, rounds=2, broadcast=True)
+        )
+        assert "BroadcastExchange" not in plan, plan
+        # non-vacuous: the plans hold the rounds' semi joins, and the
+        # hinted twin's broadcasts show up in them
+        assert "LeftSemi" in plan, plan
+        assert "BroadcastExchange" in hinted_plan
+        # the gate query's returned plan is checkpoint-truncated, so the
         # JVM-only sweep can't see kcore's pipeline — pin it here
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-        h = kcore(edges, k=3, rounds=2, broadcast=True)
-        u = kcore(edges, k=3, rounds=2, broadcast=False)
-        assert sorted(map(tuple, h.collect())) == sorted(map(tuple, u.collect()))
+        assert h == u
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
@@ -431,7 +433,6 @@ def test_r5_graph_ops_unhinted_path_has_no_broadcast(spark, sf_dir):
     modes agree exactly (integer arithmetic throughout)."""
     from pyspark.sql import functions as F
 
-    from blockchain_data_engineering_spark.cache import lazy_plans
     from blockchain_data_engineering_spark.operators import graph as G
 
     edges = spark.range(0, 500).select(
@@ -462,33 +463,15 @@ def test_r5_graph_ops_unhinted_path_has_no_broadcast(spark, sf_dir):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         for name, op in ops.items():
-            # lazy_plans: these ops finalize() (localCheckpoint), which
-            # truncates the plan to ExistingRDD — the guard needs the
-            # lazy plan; caches are cleared per-op below
-            with lazy_plans():
-                buf = io.StringIO()
-                with redirect_stdout(buf):
-                    op(False).explain("formatted")
-                unhinted_plan = buf.getvalue()
-                # the CacheManager matches plan FRAGMENTS: without this
-                # clear, the hinted twin reads the unhinted call's
-                # persisted pieces back as InMemoryTableScan and its
-                # broadcast joins never appear in the plan
-                spark.catalog.clearCache()
-                buf = io.StringIO()
-                with redirect_stdout(buf):
-                    op(True).explain("formatted")
-                hinted_plan = buf.getvalue()
-            spark.catalog.clearCache()
+            # the executed plans: each round's checkpoint and the settle
+            got_u, unhinted_plan = _ran(spark, lambda: op(False))
+            got_h, hinted_plan = _ran(spark, lambda: op(True))
             assert "BroadcastExchange" not in unhinted_plan, (name, unhinted_plan)
             assert "BroadcastExchange" in hinted_plan, (name, hinted_plan)
-            # also pin JVM-only execution for the lazy pipeline (the
-            # gate query's checkpoint-truncated plan hides it)
+            # also pin JVM-only execution for the pipeline (the gate
+            # query's checkpoint-truncated plan hides it)
             assert "BatchEvalPython" not in unhinted_plan, name
             assert "ArrowEvalPython" not in unhinted_plan, name
-
-            got_h = sorted(map(tuple, op(True).collect()))
-            got_u = sorted(map(tuple, op(False).collect()))
             assert got_h == got_u, name
             assert got_h, name  # non-empty: the ops actually ran
     finally:

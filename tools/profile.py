@@ -1,0 +1,77 @@
+"""Per-query profiler: executed physical plans plus noop-sink timings.
+
+Usage: python tools/profile.py <query> [<query> ...] [--runs N]
+
+For each registered query (gate or extra) the tool builds the
+DataFrame and writes it to a noop sink once, saving the formatted
+physical plan of every SQL execution that ran — round checkpoints, the
+settle, the sink — to ``plans/<query>.txt``. It then times ``N`` more
+build+sink runs, each under its own job description, and prints the
+samples and their min. The input scale comes from
+``SPARK_GRAFT_SF_DIR`` (default sf0.1), the core count from
+``SPARK_GRAFT_CPUS``.
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import sys
+import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# replace this script's directory on the path: this file would
+# otherwise shadow the stdlib ``profile`` module that pyspark imports
+sys.path[0] = ROOT
+
+from blockchain_data_engineering_spark.plans import EXTRA_QUERIES, QUERIES  # noqa: E402
+from blockchain_data_engineering_spark.session import (  # noqa: E402
+    DEFAULT_SF_DIR,
+    executed_plans,
+    get_spark,
+)
+
+
+def _sink(spark, fn) -> None:
+    fn(spark, DEFAULT_SF_DIR).write.format("noop").mode("overwrite").save()
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="+")
+    ap.add_argument("--runs", type=int, default=3)
+    args = ap.parse_args()
+
+    spark = get_spark(app_name="bde-profile")
+    spark.range(1).count()  # JVM warmup outside any timing
+    sc = spark.sparkContext
+    allq = {**QUERIES, **EXTRA_QUERIES}
+    for name in args.queries:
+        fn = allq[name]
+        sc.setJobDescription(f"profile:{name}:plan")
+        with executed_plans(spark) as ran:
+            _sink(spark, fn)
+        path = os.path.join(ROOT, "plans", f"{name}.txt")
+        with open(path, "w") as fh:
+            for i, plan in enumerate(ran, 1):
+                # scan locations name the input dir, not this host's path
+                plan = plan.replace(DEFAULT_SF_DIR.rstrip("/"), "$SPARK_GRAFT_SF_DIR")
+                fh.write(f"== execution {i} of {len(ran)} ==\n{plan}\n")
+        samples = []
+        for r in range(args.runs):
+            sc.setJobDescription(f"profile:{name}:run{r}")
+            t0 = time.perf_counter()
+            _sink(spark, fn)
+            samples.append(time.perf_counter() - t0)
+        sc.setJobDescription(None)
+        print(
+            f"{name}: plans={path} ({len(ran)} executions) "
+            f"runs={[round(s, 3) for s in samples]} "
+            f"min={min(samples, default=float('nan')):.3f} "
+            f"load1m={os.getloadavg()[0]:.1f}",
+            flush=True,
+        )
+
+
+if __name__ == "__main__":
+    main()
