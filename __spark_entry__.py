@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from blockchain_data_engineering_spark.plans import ORACLES, QUERIES
+from blockchain_data_engineering_spark.plans import GATE_ORDER, ORACLES, QUERIES
 from blockchain_data_engineering_spark.session import configure_for_session
 
 
@@ -35,10 +35,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return dict(QUERIES)
+    """The 50 driver-gate queries (``plans.GATE_ORDER``), in gate order."""
+    return {n: QUERIES[n] for n in GATE_ORDER}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle SQL twin for each SQL-expressible query."""
-    return dict(ORACLES)
+    """DuckDB oracle SQL twin for each SQL-expressible gate query."""
+    return {n: ORACLES[n] for n in GATE_ORDER if n in ORACLES}

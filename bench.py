@@ -54,7 +54,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from blockchain_data_engineering_spark.plans import EXTRA_QUERIES, QUERIES
+from blockchain_data_engineering_spark.plans import GATE_ORDER, QUERIES
 from blockchain_data_engineering_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -95,6 +95,22 @@ HEADLINE = [
     # builds + state-grain merge — the sketch family's rollup shape)
     "agg_heavy_hitters_phi",
 ]
+
+
+def _keep_detail(here: str, detail_path: str, stem: str) -> str:
+    """Copy ``detail_path`` to the first of ``stem.json``, ``stem_2.json``,
+    ``stem_3.json``, ... that does not exist yet; return its name."""
+    with open(detail_path, "rb") as fh:
+        body = fh.read()
+    n = 1
+    while True:
+        name = f"{stem}.json" if n == 1 else f"{stem}_{n}.json"
+        try:
+            with open(os.path.join(here, name), "xb") as out:
+                out.write(body)
+            return name
+        except FileExistsError:
+            n += 1
 
 
 def bench_domain_pipeline(spark, n_blocks: int = 4000) -> dict:
@@ -186,39 +202,31 @@ def main() -> None:
     load_start = _load_1m()
     load_samples = [load_start]
 
-    # A headline query that rotates OUT of the gate keeps its series:
-    # it is still timed (from the demoted EXTRA registry, same plan,
-    # same methodology) and still appears under its key in the stdout
-    # ``queries`` dict — the bench contract says entries are only ever
-    # ADDED, never removed — but its seconds are EXCLUDED from the
-    # gate total ``value``, which remains the sum over the CURRENT
-    # gate set exactly as before (r11; agg_heavy_hitters_phi was the
-    # first headline query this applied to).
-    demoted_headline = [
-        n for n in HEADLINE if n not in QUERIES and n in EXTRA_QUERIES
-    ]
-    missing_headline = [
-        n for n in HEADLINE if n not in QUERIES and n not in EXTRA_QUERIES
-    ]
+    # A headline query outside the gate keeps its series: it is still
+    # timed and still appears under its key in the stdout ``queries``
+    # dict (entries are only ever ADDED, never removed), but its
+    # seconds are EXCLUDED from the gate total ``value``, which is the
+    # sum over ``GATE_ORDER`` alone.
+    gate = set(GATE_ORDER)
+    demoted_headline = [n for n in HEADLINE if n not in gate and n in QUERIES]
+    missing_headline = [n for n in HEADLINE if n not in QUERIES]
     if demoted_headline:
         print(
-            "[bench] headline queries demoted from gate, timed as extras "
+            "[bench] headline queries outside the gate "
             f"(excluded from gate total): {demoted_headline}",
             file=sys.stderr,
         )
     if missing_headline:
-        # gone from BOTH registries — say so instead of silently
-        # dropping the series (ADVICE r5)
+        # unregistered — say so instead of silently dropping the series
         print(
             f"[bench] headline queries not registered, skipped: {missing_headline}",
             file=sys.stderr,
         )
-    names = [n for n in HEADLINE if n in QUERIES]
-    # include any registered query not in the headline list, so coverage
-    # additions are benchmarked automatically
-    names += [n for n in sorted(QUERIES) if n not in names]
+    names = [n for n in HEADLINE if n in gate]
+    # then every other gate query, so gate additions are benchmarked
+    # automatically
+    names += [n for n in sorted(gate) if n not in names]
     names += demoted_headline
-    runner = {**QUERIES, **{n: EXTRA_QUERIES[n] for n in demoted_headline}}
 
     # warm up the JVM/session on a trivial action so query #1 isn't
     # charged for session startup
@@ -253,7 +261,7 @@ def main() -> None:
                 or (len(runs) < 6 and max(runs) > 2.0 * min(runs))
             ):
                 t0 = time.perf_counter()
-                df = runner[name](spark, SF_DIR)
+                df = QUERIES[name](spark, SF_DIR)
                 df.write.format("noop").mode("overwrite").save()
                 runs.append(time.perf_counter() - t0)
                 # queries persist intermediates (shingle sets,
@@ -287,7 +295,7 @@ def main() -> None:
         q_load1 = _load_1m()
         loads[name] = [q_load0, q_load1]
         load_samples += [q_load0, q_load1]
-        if dt == dt and name in QUERIES:
+        if dt == dt and name in gate:
             total += dt
 
     # drop cached data left by the query sweep so the domain-pipeline
@@ -317,14 +325,11 @@ def main() -> None:
     spread_flagged = bool(spread_queries)
 
     # full per-query detail to a file; the stdout line stays compact so
-    # a truncating log capture still yields parseable JSON. r12 (judge
-    # ask #2): ALSO written to a per-invocation path keyed on
-    # (cpus, sf) so a later scaling re-run at a different core count
-    # can no longer overwrite the official sweep's runs[] arrays (the
-    # r11 32-core detail was lost to exactly that).
+    # a truncating log capture still yields parseable JSON. ALSO kept
+    # under a name keyed on (cpus, sf) that no later run overwrites:
+    # a rerun at the same (cpus, sf) takes the next free ``_N`` suffix.
     here = os.path.dirname(os.path.abspath(__file__))
     detail_path = os.path.join(here, "bench_detail.json")
-    detail_kept = f"bench_detail_c{cpus}_sf{sf}.json"
     with open(detail_path, "w") as fh:
         json.dump(
             {
@@ -351,9 +356,7 @@ def main() -> None:
             fh,
             indent=1,
         )
-    import shutil
-
-    shutil.copyfile(detail_path, os.path.join(here, detail_kept))
+    detail_kept = _keep_detail(here, detail_path, f"bench_detail_c{cpus}_sf{sf}")
 
     print(
         json.dumps(
@@ -364,7 +367,7 @@ def main() -> None:
                 "queries": {
                     n: timings[n] for n in HEADLINE if n in timings
                 },
-                "n_queries": sum(1 for n in timings if n in QUERIES),
+                "n_queries": sum(1 for n in timings if n in gate),
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "blocks_per_sec": domain["blocks_per_sec"],
                 "load_1m_start": load_start,
@@ -379,12 +382,11 @@ def main() -> None:
                 "load_flagged": load_flagged,
                 "spread_flagged": spread_flagged,
                 "detail": "bench_detail.json",
-                # ADVICE r11: entries in ``queries`` that are timed
-                # from the demoted-extras registry and therefore NOT
-                # part of the gate total ``value`` — machine-readable,
-                # so a series consumer can split gate from extras
-                # without reading the registries. Additions-only: the
-                # gate total and every existing key are unchanged.
+                # headline entries in ``queries`` outside
+                # ``GATE_ORDER``, hence NOT part of the gate total
+                # ``value`` — machine-readable, so a series consumer
+                # can split gate from extras without reading the
+                # registry
                 "demoted_queries": sorted(demoted_headline),
                 "detail_kept": detail_kept,
             }

@@ -137,10 +137,6 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(sc.defaultParallelism)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for ``spark.sql`` use."""
     for t in TABLES:

@@ -28,7 +28,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from blockchain_data_engineering_spark.cache import finalize
 from blockchain_data_engineering_spark.operators.text import char_shingles, fingerprint
 
 # ---------------------------------------------------------------- exact ---
@@ -122,43 +121,18 @@ def shingle_array(
     the distinct and again for every downstream groupBy/join. The
     catch: everything downstream of an array column runs through
     interpreted higher-order functions, not codegen — measured, the
-    exploded + hash-aggregate pipeline beats this shape for char-k-gram
-    minhash (see ``minhash_lsh_dedup``), while the array shape wins for
-    small per-doc sets like word n-grams (:func:`word_ngram_array`,
-    ~2x). Measure before picking.
+    exploded + hash-aggregate pipeline beats this shape for the
+    char-k-gram minhash signature build (:func:`minhash_signatures`
+    over :func:`shingle_set`), while the array shape wins for the
+    Jaccard verify (:func:`jaccard_verify_arrays`) and for small
+    per-doc sets like word n-grams (:func:`word_ngram_array`, ~2x).
+    Measure before picking.
     """
     n = F.greatest(F.length(F.col(text_col)) - (k - 1), F.lit(1))
     shingles = F.transform(
         F.sequence(F.lit(1), n), lambda i: F.col(text_col).substr(i, F.lit(k))
     )
     return df.select(F.col(id_col), F.array_distinct(shingles).alias("shingles"))
-
-
-def minhash_signatures_from_array(
-    sh_arr: DataFrame, n_hashes: int = 9, id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-doc signature straight from the shingle array: the j-th
-    component is ``array_min(bigint(md5(j ‖ ':' ‖ shingle)[:15]))`` —
-    identical argmin to :func:`minhash_signatures` (numeric min of the
-    60-bit md5 prefix) with NO explode, NO groupBy, NO shuffle.
-
-    The seed must be bound OUTSIDE the transform lambda: pyspark counts
-    the lambda's parameters, so a ``lambda s, j=j`` default-arg closure
-    is treated as the two-argument (value, index) form and the seed is
-    silently shadowed by the array-index Column.
-    """
-
-    def seeded(j: int):
-        prefix = F.lit(f"{j}:")
-        return lambda s: F.conv(
-            F.substring(F.md5(F.concat(prefix, s)), 1, 15), 16, 10
-        ).cast("long")
-
-    cols = [
-        F.array_min(F.transform(F.col("shingles"), seeded(j))).alias(f"mh{j}")
-        for j in range(n_hashes)
-    ]
-    return sh_arr.select(id_col, *cols)
 
 
 def jaccard_verify_arrays(
@@ -170,9 +144,9 @@ def jaccard_verify_arrays(
     """Exact Jaccard for candidate pairs from per-doc shingle ARRAYS:
     two hash joins bring the arrays to the pair, then
     ``size(array_intersect(...))`` computes |A∩B| row-locally — the
-    shingle relation itself is never shuffled (contrast
-    :func:`jaccard_verify`, which joins the exploded shingle set twice;
-    measured 3.4x slower than this shape with broadcast at sf0.1).
+    shingle relation itself is never shuffled (joining the exploded
+    shingle set twice instead measured 3.4x slower than this shape with
+    broadcast at sf0.1).
     Integer counts, one final division — bit-deterministic.
 
     ``broadcast`` is SIZE-ADAPTIVE by default (``None``/``False``): no
@@ -304,70 +278,6 @@ def lsh_candidate_pairs(bands: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def jaccard_verify(
-    candidates: DataFrame, shingles: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact Jaccard for each candidate pair: |A∩B| / |A|+|B|−|A∩B|.
-    Integer counts, one final division — bit-deterministic."""
-    counts = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    sa = shingles.select(F.col(id_col).alias("id_a"), "shingle")
-    sb = shingles.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        candidates.join(sa, "id_a")
-        .join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        candidates.join(inter, ["id_a", "id_b"], "left")
-        .join(counts.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a")), "id_a")
-        .join(counts.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b")), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.coalesce("n_inter", F.lit(0)).alias("n_inter"),
-            "n_a",
-            "n_b",
-            (
-                F.coalesce("n_inter", F.lit(0)).cast("double")
-                / (
-                    F.col("n_a") + F.col("n_b") - F.coalesce("n_inter", F.lit(0))
-                ).cast("double")
-            ).alias("jaccard"),
-        )
-    )
-
-
-def minhash_lsh_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    n_hashes: int = 9,
-    band_size: int = 3,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Full near-dedup pipeline: shingle → minhash → band → candidate
-    pairs → exact-Jaccard verify → pairs ≥ threshold.
-
-    Uses the exploded-relation shapes: measured 2-4x faster than the
-    array-column variants for char-k-gram shingles (see the
-    ``dedup_minhash_lsh`` plan for the why). The array variants
-    (:func:`shingle_array` et al.) win when shingle sets are small
-    (e.g. word n-grams) — see :func:`word_ngram_array`."""
-    # persisted: sh feeds the signature build AND both sides of the
-    # Jaccard verify — unpersisted, the corpus-wide shingle explode +
-    # distinct (the dominant cost) runs three times. Both caches are
-    # released by the finalize() below once the pairs materialize.
-    sh = shingle_set(df, text_col, id_col, k).persist()
-    # persisted: the bucket self-join references sig twice; unpersisted
-    # the whole shingle→signature subtree runs once per side
-    sig = minhash_signatures(sh, n_hashes, id_col).persist()
-    cand = lsh_candidate_pairs(lsh_bands(sig, n_hashes, band_size, id_col), id_col)
-    verified = jaccard_verify(cand, sh, id_col)
-    return finalize(verified.where(F.col("jaccard") >= threshold), sh, sig)
-
-
 # -------------------------------------------------------------- simhash ---
 
 # hex digit → which digits have each bit set (bit value → digit set)
@@ -475,17 +385,6 @@ def word_ngram_array(
     idxs = F.sequence(F.lit(1), F.greatest(F.size(tk) - (n - 1), F.lit(1)))
     grams = F.transform(idxs, lambda i: F.concat_ws(" ", F.slice(tk, i, n)))
     return df.select(F.col(id_col), F.array_distinct(grams).alias("shingles"))
-
-
-def word_ngrams(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """Distinct word n-grams per doc (space-joined token windows)."""
-    toks = F.split(F.col(text_col), " ")
-    idx = F.explode(F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))))
-    out = df.select(F.col(id_col), toks.alias("toks"), idx.alias("i"))
-    gram = F.concat_ws(" ", F.slice(F.col("toks"), F.col("i"), n))
-    return out.select(id_col, gram.alias("shingle")).distinct()
 
 
 # ---------------------------------------------------- duplicated spans ---

@@ -550,13 +550,11 @@ def distribution_psi(
 
     Scale shape: identical to TVD on the data side — the shared
     :func:`_drift_share_grain` (category-grain counts, full-outer
-    join, one bounded window per side), then two BROADCAST-hash
-    lookups of the G-row ln table, one final aggregate. The table
-    rides a tiny local relation rather than an inline literal array
-    (a repeated G-element array literal measurably taxes Catalyst on
-    every execution — see :func:`distribution_js`; the broadcast dim
-    keeps the plan tree constant-size in G and mirrors the SQL
-    twin's VALUES join). ``psi`` is NULL when
+    join, one bounded window per side), then two literal-array
+    ``get`` lookups of the G-entry ln table (:func:`psi_ln_lookup`)
+    in a codegen Project — no join, no exchange — and one final
+    aggregate; the SQL twin joins the same values as a VALUES
+    relation. ``psi`` is NULL when
     either side of the group is empty (drift from/to nothing —
     surface it, don't score it; ``psi_num`` is 0 there, never a
     division by a zero total). Returns ``n_ref``, ``n_cur``,
@@ -737,10 +735,9 @@ def distribution_kl(
 
     Scale shape: identical to TVD/PSI — the shared
     :func:`_drift_share_grain` (category-grain counts, full-outer
-    join, one bounded window per side), two BROADCAST-hash lookups
-    of the G-row ln table (a tiny local relation, never an inline
-    literal array — see :func:`distribution_js`), one final
-    aggregate. ``kl`` is NULL when either side of the group is empty
+    join, one bounded window per side), two literal-array ``get``
+    lookups of the G-entry ln table (:func:`psi_ln_lookup`) in a
+    codegen Project — no join, no exchange — one final aggregate. ``kl`` is NULL when either side of the group is empty
     (drift from/to nothing — surface it, don't score it). Returns
     ``n_ref``, ``n_cur``, ``n_categories``, ``kl_num``
     (DECIMAL(38,0) — serialize as string in gate queries) and
@@ -921,8 +918,9 @@ def distribution_drift_explain(
     DECIMAL(38,0) otherwise (serialize as strings in gate queries).
 
     Scale shape: the shared :func:`_drift_share_grain` + three
-    BROADCAST-hash lookups of the G-row ln table — identical to the
-    scalar plans, stopping one aggregate short. Sort consumers by
+    literal-array ``get`` lookups of the G-entry ln table
+    (:func:`psi_ln_lookup`, a codegen Project — no join, no exchange)
+    — identical to the scalar plans, stopping one aggregate short. Sort consumers by
     ``psi_term_num`` DESC for the "top movers" view."""
     tab = psi_ln_table(share_grid)
     g = int(share_grid)
@@ -1109,15 +1107,12 @@ def distribution_js(
     for finer mixes, or read TVD (exact) alongside.
 
     Scale shape: identical to TVD/PSI on the data side — the shared
-    :func:`_drift_share_grain`, then three BROADCAST-hash lookups of
-    the 2G-row ln table, one final aggregate. The table rides a tiny
-    local relation rather than an inline literal array here: JS needs
-    FOUR table references per term (2·q_ref, 2·q_cur, and the q_m
-    mixture twice), and four inlined copies of a 2G-element array
-    literal measurably tax the optimizer on every execution (~4× the
-    PSI plan's literal mass) — a 2G-row broadcast dim is the
-    canonical Spark shape for a shared lookup, and it mirrors the
-    SQL twin's VALUES join exactly. ``js`` is NULL when either side
+    :func:`_drift_share_grain`, then three literal-array ``get``
+    lookups of the 2G-entry ln table (:func:`psi_ln_lookup`:
+    T[2·q_ref], T[2·q_cur] and the mixture's T[q_ref + q_cur], which
+    each term reads twice) in a codegen Project — no join, no
+    exchange — and one final aggregate; the SQL twin joins the same
+    values as a VALUES relation. ``js`` is NULL when either side
     of the group is empty. Returns ``n_ref``, ``n_cur``,
     ``n_categories``, ``js_num`` (DECIMAL(38,0) — serialize as
     string in gate queries) and ``js``."""

@@ -1513,10 +1513,11 @@ def label_mi_from_cells(
     group total via ONE bounded window at cell grain (the
     ``_drift_share_grain`` idiom — never a 1-row-frame join, whose
     constant-key compose Catalyst folds into a nested-loop join),
-    two marginal re-aggregations, three BROADCAST-hash lookups of
-    the G-row ln table — T[q_i]/T[q_j] are looked up ONCE at
-    marginal grain and carried to the cells by the marginal join, so
-    the cell grain pays a single lookup; ``T[G]`` is one literal —
+    two marginal re-aggregations, three literal-array ``get`` lookups
+    of the G-entry ln table (:func:`~.dq.psi_ln_lookup`, no join) —
+    T[q_i]/T[q_j] are looked up ONCE at marginal grain and carried to
+    the cells by the two broadcast-hash marginal joins, so the cell
+    grain pays a single lookup; ``T[G]`` is one literal —
     and ONE tagged-union aggregation combining the cell-grain MI
     terms with the two marginal-grain entropy terms (the graph-ops
     recombination pattern; no final compose joins). Returns ``n``,

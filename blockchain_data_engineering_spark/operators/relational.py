@@ -229,21 +229,6 @@ def salted(df: DataFrame, key_col: str, buckets: int, salt_col: str = "__salt") 
     )
 
 
-def rollup_sets(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    aggs: Sequence[Column],
-) -> DataFrame:
-    """Hierarchical rollup in one pass (A6 + A7 fused).
-
-    The reference computes vol_by_block and vol_all_time as two separate
-    pandas groupbys fed by two Airflow tasks
-    (airflow/archive/dags/etl_vol_dag.py:59-86); ``rollup`` computes the
-    whole hierarchy with one shuffle and partial aggregation.
-    """
-    return df.rollup(*group_cols).agg(*aggs)
-
-
 def asof_join_backward(
     left: DataFrame,
     right: DataFrame,

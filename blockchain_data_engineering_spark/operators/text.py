@@ -44,12 +44,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-ish token estimate: alnum runs + individual punctuation
-    marks, via one regexp pass (``regexp_count`` stays JVM-side)."""
-    return F.regexp_count(text, F.lit(TOKEN_PATTERN))
-
-
 def stopword_hits(text: Column, words: tuple[str, ...]) -> Column:
     """Total occurrences of the marker words as standalone tokens —
     exact token-equality over the whitespace tokens (no regex overlap

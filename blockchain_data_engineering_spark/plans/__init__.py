@@ -1,22 +1,19 @@
 """Query registry backing ``__spark_entry__.py``.
 
-Importing this package registers every implemented query, then splits
-the registry into the driver-gate set (``QUERIES``, exactly 50 — the
-round-1 gate recorded rows for registry slots 0-49 only) and the
-pytest-parity-only set (``EXTRA_QUERIES``). Near-duplicate variants of
-gate queries are demoted, never deleted: every demoted query keeps its
-DuckDB oracle and is hash-checked by tests/test_oracle_parity.py.
+Importing this package registers every implemented query into
+``QUERIES``/``ORACLES``. ``GATE_ORDER`` names the 50 queries the driver
+gate and ``bench.py`` run (the gate records about 50 rows per round);
+every registered query, in the gate or not, keeps its DuckDB oracle and
+is hash-checked by tests/test_oracle_parity.py.
 
-Gate ordering: queries with NO green row in CORRECTNESS_r01.json come
-first, so even a row-capped gate reaches them this round.
+Gate ordering: queries with no official green row in a recorded
+``CORRECTNESS_r*.json`` come first, so even a row-capped gate reaches
+them (tests/test_gate_coverage.py checks this).
 """
 
 from blockchain_data_engineering_spark.plans.registry import (  # noqa: F401
-    EXTRA_ORACLES,
-    EXTRA_QUERIES,
     ORACLES,
     QUERIES,
-    finalize_gate,
     query,
 )
 
@@ -33,166 +30,7 @@ from blockchain_data_engineering_spark.plans import multimodal_queries  # noqa: 
 from blockchain_data_engineering_spark.plans import linkage_queries  # noqa: F401,E402
 from blockchain_data_engineering_spark.plans import lake_queries  # noqa: F401,E402
 
-# The 50 gate queries (the driver gate records ~50 rows per round).
-# Queries without an official gate row come first so even a row-capped
-# gate reaches them; everything else keeps its r1/r2 row plus pytest
-# DuckDB parity from EXTRA_QUERIES.
-# Demoted near-duplicates (see EXTRA_QUERIES): explode_normalize,
-# netflow_supplier_part (superseded by netflow_decimal),
-# vol_rollup_by_block / _all_time (subsumed by vol_rollup_hierarchy),
-# transfer_edges_cross (domain_transfers_edges), scalar_slot_to_timestamp
-# (scalar_functions family), decimal_quantity_sum (netflow_decimal),
-# agg_count_distinct, pivot_qty_by_flag, events_value_quantiles,
-# graph_degrees (pagerank pre-join), graph_connected_components
-# (graph_cc_pointer_jump), text_fingerprint (text_winnowing_fingerprints),
-# dedup_simhash (dedup_simhash_multiblock),
-# domain_netflow_tx (same netflow pipeline as netflow_decimal, long
-# types — the decimal path is the stronger gate witness),
-# pipeline_corpus_filter (pure composition of text_lang_id +
-# text_quality + text_token_count + dedup_exact, each gate-covered),
-# text_top_bigrams (explode+groupBy count, plan-subsumed by
-# text_token_count and the BM25 posting aggregates),
-# agg_any_value (r1-green; the any_value collapse also runs inside the
-# domain rollups), sample_train_val_split (r1-green; the md5-threshold
-# split mechanism is the seed/sampling primitive in sample_stratified
-# and the pack/kmeans orderings), dedup_keep_last (r1-green; keep-one
-# window rank — same plan family as topk_per_group, semantics
-# gate-witnessed by stream_dedup_first_touch), topk_per_group
-# (r1-green, plan-asserted TakeOrderedAndProject in test_plans; the
-# per-group window-rank pattern closes every gate ANN query),
-# events_spine_zero_fill + events_share_by_day (r1-green; flagship_volume_stack
-# runs the same zero_fill_spine operator and ratio-to-report window in-plan).
-#
-# Round-4 rotation: three r2-GREEN queries move to parity-only in
-# exchange for the round-4 additions — sim_cosine_topk (the
-# brute-force ANN baseline; its window-rank plan family closes every
-# surviving gate ANN query), stream_tumbling_window (sliding/session
-# windows + watermark dedup stay gate-witnessed), dedup_ngram_jaccard
-# (blocking-key jaccard; minhash-LSH, containment, and span dedup
-# stay). All three keep pytest DuckDB parity from EXTRA_QUERIES.
-#
-# Rotation history: the round-2 rotation moved 24 r1-GREEN queries to
-# the parity-only set so the round-2 additions could get official rows
-# (all recorded in CORRECTNESS_r02.json — 50/50 green).
-# Round-3 rotation (judge ask #1): round-2 judging found that 8
-# registered queries had NEVER received an official gate row (four
-# were demoted in the r1 rotation before being verified, four were
-# registered extra-only late in r2): basket_part_pairs,
-# dedup_minhash_containment, dedup_simhash_hamming,
-# emb_label_centroids, sim_ivf_ann, sim_lsh_ann,
-# stream_sliding_window, text_repetition_ratio. They are front-loaded
-# here; displaced in exchange are r2-GREEN queries (official rows in
-# CORRECTNESS_r02.json) whose operator families stay gate-witnessed
-# by surviving representatives. The coverage invariant is no longer
-# prose: tests/test_gate_coverage.py computes
-# never-gated = registry − (r1 ∪ r2 ∪ current gate) from the
-# CORRECTNESS_r*.json files and asserts it empty.
 GATE_ORDER = [
-    # -- new in round 11 (unrowed, front-loaded). The r10 verdict's
-    #    four asks plus its stretch item, each a completion of a
-    #    family the r10 additions opened:
-    #    (1) ml_log_loss_multiclass — the k-class training objective
-    #    (true-class score grain, one-sided eps-clamp, same literal
-    #    log-quanta table). Displaced: ml_ece (r9/r10-green — the
-    #    calibration family stays gate-run by ml_log_loss + the new
-    #    multiclass gate over the same exact-integer-numerator
-    #    policy, the score-grain sweep by ml_pr_curve; the binned
-    #    |acc−conf| aggregate stays pinned in pytest parity).
-    #    (2) dq_distribution_kl — the DIRECTIONAL drift number
-    #    (train→serve surprise) on the shared drift grain; the
-    #    asymmetric quantization (cur unclamped, ref eps-filled) is
-    #    the new surface. Displaced: dq_distribution_psi (r10-green —
-    #    PSI ≡ KL(p‖q)+KL(q‖p): the shared _drift_share_grain, the
-    #    G-grid share quantization, the eps-fill arm and the same
-    #    psi_ln_table all run verbatim in the KL gate, the mixture
-    #    form in the surviving dq_distribution_js; PSI's symmetrized
-    #    sum stays pinned in pytest parity).
-    #    (3) ml_macro_f1_from_store — the eval-cell store's OTHER
-    #    dashboard read (accuracy + macro-F1) under the value hash.
-    #    Displaced: ml_kappa_from_store (r10-green — the store path
-    #    it pins (eval_cells_delta_sink → _batch_id deltas → summed
-    #    cells) runs VERBATIM in the macro-F1 serving gate; the
-    #    from-cells kappa algebra stays pinned in pytest parity +
-    #    the stream==batch suite).
-    #    (4) ml_label_mi — mutual information / entropies / NMI from
-    #    the same maintained cell grain, via quantized SHARES on the
-    #    ln-table grid (counts are unbounded; shares index the
-    #    table). Displaced: ml_weighted_kappa (r10-green — the
-    #    facts→(a,b)-cell aggregate runs verbatim in the MI gate and
-    #    the ordinal-distance agreement family is now gate-run by
-    #    ml_krippendorff_ordinal, which generalizes weighted κ to
-    #    ragged n-rater coverage with a data-driven distance; the
-    #    k²-bounded marginal-cross equi join stays pinned in pytest
-    #    parity + the envelope-guard tests).
-    #    (5) ml_krippendorff_ordinal — Krippendorff's prescribed
-    #    RANK metric (squared between-marginal mass), exact via the
-    #    cumulative-marginal transform e_c = 2·cum_c − n_c under
-    #    which ordinal IS the interval moment form (no k² cross).
-    #    Displaced: ml_krippendorff (r10-green — the ragged-coverage
-    #    construction, lcm-cleared 1/(m−1) weights, drop accounting
-    #    and the three-rater gate shape all run verbatim in BOTH
-    #    surviving alpha gates (interval + ordinal); the nominal
-    #    sum-of-squares algebra stays pinned in pytest parity incl.
-    #    the α≈κ cross-check).
-    #    Batch 2 — the agreement/drift capstones the asks implied:
-    #    (6) ml_adjusted_rand — the pair-counting clustering-agreement
-    #    statistic over the same lang-vs-lang-ID cells; EXACT with NO
-    #    quantization at all (cleared binomials of integer counts —
-    #    the strongest exactness tier in the suite), one tagged-union
-    #    aggregation, zero joins. Displaced: ml_rbo_overlap (r9/r10-
-    #    green — the per-query ranked-list agreement family stays
-    #    gate-run by ml_kendall_tau (same two per-user rankings) and
-    #    the sweep grain by ml_pr_curve + ml_average_precision; the
-    #    literal suffix-weight arithmetic stays pinned in pytest
-    #    parity).
-    #    (7) dq_drift_explain — the per-category drill-down whose
-    #    term columns SUM to the TVD/PSI/KL scalars integer-for-
-    #    integer (pinned in pytest): the "which category moved" rows
-    #    a drift alert opens. Displaced: lake_zonemap_pruning
-    #    (r8/r9/r10-green — the metadata-grain file-layout family
-    #    stays gate-run by lake_compaction_plan; the min/max skipping
-    #    decisions stay pinned in pytest parity).
-    #    Batch 3 — the drill-down/serving completions: the r10/r11
-    #    scalar gates say THAT something moved; these rows say WHICH
-    #    class/unit, and the store's last scalar read gets its row.
-    #    (8) ml_class_report — per-class precision/recall/F1 rows
-    #    whose f1_num/tp SUM to the macro-F1/accuracy scalars
-    #    integer-for-integer (pinned in pytest). Displaced:
-    #    ml_log_loss (r10-green — the literal log-quanta table family
-    #    stays gate-run by ml_log_loss_multiclass, same table + clamp
-    #    convention; the binary two-arm algebra stays pinned in
-    #    pytest parity).
-    #    (9) ml_agreement_explain — the per-unit Krippendorff
-    #    disagreement drill-down (top-100 re-adjudication queue);
-    #    contract: LCM·DE − (n−1)·Σ du_num == alpha_num. Displaced:
-    #    ml_krippendorff_interval (r10-green — the moment-identity
-    #    family stays gate-run by ml_krippendorff_ordinal, which IS
-    #    the interval form over the e-transform, and the kept-unit
-    #    prefix by this explain gate; the raw-label moment algebra
-    #    stays pinned in pytest parity).
-    #    (10) ml_ece_top_label — the k-class calibration read
-    #    (argmax-class confidence vs hit rate, Guo et al. 2017).
-    #    Displaced: dq_distribution_js (r10-green — the quantized-
-    #    share drift family stays gate-run by dq_distribution_kl +
-    #    dq_drift_explain on the same grain and ln table; the 2G-grid
-    #    mixture algebra stays pinned in pytest parity).
-    #    (11) ml_ari_from_store — the cell store's pair-counting
-    #    serving path (the fourth reader). Displaced:
-    #    agg_heavy_hitters_phi (r8/r9/r10-green — the Misra–Gries
-    #    family stays gate-run by agg_heavy_hitters_merged, whose
-    #    merge replays the build; the φ-threshold scan stays pinned
-    #    in pytest parity).
-    #    (12) ml_ece_adaptive — equal-mass-bin calibration (Nixon
-    #    2019's ACE): the fixed-width ECE's bins go empty when a
-    #    trained model concentrates its scores; rank-div bin edges
-    #    over the distinct-score grain keep every |acc − conf| term
-    #    equally supported, same cancelled-weight exact numerator.
-    #    Displaced: sample_weighted_priority_merged (r8/r9/r10-green
-    #    — the mergeable bottom-k md5-priority state family stays
-    #    gate-run by agg_quantile_sketch_merged, the same
-    #    union→re-rank→re-derive-threshold merge shape with an oracle
-    #    that replays both half-builds; the Duffield-Lund-Thorup
-    #    subset-sum estimator algebra stays pinned in pytest parity).
     "ml_ece_adaptive",
     "ml_class_report",
     "ml_agreement_explain",
@@ -205,310 +43,18 @@ GATE_ORDER = [
     "dq_drift_explain",
     "ml_krippendorff_ordinal",
     "ml_macro_f1_from_store",
-    # -- new in round 10 (unrowed, front-loaded). The log-based metric
-    #    family unlocks via the literal log-quanta-table design the r9
-    #    verdict sanctioned (the ndcg_discounts pattern: logs of a
-    #    bounded integer grid are constants of the metric, embedded as
-    #    literals in both engines), and the agreement suite completes:
-    #    (1) ml_log_loss — the actual training objective (binary
-    #    cross-entropy in nats), exact integer quanta sums with the
-    #    one-quantum eps-clamp under the value hash. Displaced:
-    #    ml_cumulative_gain (r9-green — the distinct-score sweep grain
-    #    stays gate-run by ml_pr_curve + ml_average_precision; the
-    #    explode-inversion bucketing stays pinned in pytest parity).
-    #    (2) dq_distribution_psi — PSI on the TVD drift grain via the
-    #    same ln-quanta table (floor-quantized shares, one-quantum
-    #    eps-fill). Displaced: dq_distribution_drift (r9-green — the
-    #    category-grain full-outer + bounded-window share construction
-    #    runs VERBATIM as PSI's first stage via the shared
-    #    _drift_share_grain; TVD's exact numerator stays pinned in
-    #    pytest parity).
-    #    (3) ml_krippendorff — ragged-coverage n-rater agreement; the
-    #    partial ballots fleiss drops become usable data (per-unit
-    #    1/(m−1) weights cleared through lcm). Displaced:
-    #    ml_fleiss_kappa (r9-green — the (item, category) cell grain,
-    #    the three-lang-rater vote construction, and the
-    #    dropped-ballot accounting all run verbatim in the
-    #    Krippendorff gate; the fixed-n S1/S2 algebra stays pinned in
-    #    pytest parity incl. the Fleiss-1971 worked example).
-    #    (4) ml_weighted_kappa — ordinal-label agreement (quadratic
-    #    weights over quality tiers) from the same cell grain as
-    #    Cohen's kappa. (5) ml_kappa_from_store — the eval-cell
-    #    store's store→scalar serving path (real per-batch parquet
-    #    deltas summed, kappa from the summed cells) under the value
-    #    hash, the sketch family's merge-tier convention. Displaced
-    #    for (4)+(5): ml_cohens_kappa (r9-green — the from-cells kappa
-    #    algebra runs VERBATIM inside ml_kappa_from_store, and the
-    #    facts→cells aggregate inside ml_weighted_kappa; the
-    #    unweighted full-outer marginal join stays pinned in pytest
-    #    parity) and ml_spearman_rho (r9-green — the two-ranker
-    #    rank_by window-pair construction runs verbatim in the
-    #    surviving ml_kendall_tau gate over the SAME rankings, the
-    #    top-weighted list agreement by ml_rbo_overlap; the Σd²
-    #    permutation algebra stays pinned in pytest parity + the
-    #    Daniels-inequality Hypothesis property).
-    #    (6) dq_distribution_js — Jensen-Shannon on the same drift
-    #    grain (symmetric, [0, ln 2], no epsilon convention for
-    #    one-sided categories — the stable lens when new categories
-    #    appear), closing the KL/JS leg of the log-based family.
-    #    Displaced: ml_ndcg (r8-green — the literal-quanta-table
-    #    exactness family it pioneered is now gate-run by ml_log_loss
-    #    + dq_distribution_psi + dq_distribution_js; the graded
-    #    ranking-eval family stays gate-run by ml_pr_curve +
-    #    ml_average_precision (same sweep grain) and ml_rbo_overlap
-    #    (same per-query ranked-list join grain); the discount-table
-    #    DCG algebra stays pinned in pytest parity).
-    #    (7) ml_krippendorff_interval — ordinal agreement WITH ragged
-    #    coverage, the cell weighted-κ (two raters only) and nominal α
-    #    (all disagreements equal) bracket but neither covers; exact
-    #    via the interval MOMENT form (per-unit m·S2 − S1², marginal
-    #    n·T2 − T1² — no k² category cross at all). Displaced:
-    #    ml_matthews_corr (r9-green — the one-hash-agg exact-scalar
-    #    family stays gate-run by ml_ece + ml_log_loss, the
-    #    conditional-count grain by ml_pr_curve; the pairwise-root
-    #    two-IEEE-sqrt trick stays pinned in pytest parity +
-    #    test_r9_ops known values).
-    # -- new in round 9 (unrowed, front-loaded). The eval family's last
-    #    two asked-for scalars close EXACTLY (r8 verdict asks #2/#3),
-    #    plus the completions the asks' shapes imply:
-    #    (1) ml_ece — expected calibration error; the per-bin weight
-    #    cancels algebraically so the numerator is a pure integer sum
-    #    (EXACT — stronger than the floor-quanta policy the ask
-    #    floated). Displaced: ml_brier_score (r8-green — the
-    #    calibration leg stays gate-run by ECE over the SAME scored
-    #    base with the same exact-integer-numerator policy).
-    #    (2) ml_cohens_kappa — chance-corrected labeler agreement from
-    #    the same (actual, predicted) cell aggregate macro-F1 builds,
-    #    exact DECIMAL(38,0) integers, no quantization. Displaced:
-    #    ml_macro_f1 (r8-green — the cell aggregate runs verbatim as
-    #    kappa's first stage; the quantized-mean policy stays gate-run
-    #    by ml_average_precision).
-    #    (3) ml_matthews_corr — the balanced confusion-matrix scalar
-    #    (exact integer numerator + pairwise denominator products, two
-    #    IEEE-754 correctly-rounded roots).
-    #    (4) ml_spearman_rho + (5) ml_kendall_tau — ranker agreement
-    #    over tie-broken total orders (the SAME two per-user rankings
-    #    the RRF gate fuses), exact permutation formulas. Displaced:
-    #    ml_rrf_fusion (r8-green — the two-ranker rank_by window-pair
-    #    construction runs verbatim in both correlation gates; the
-    #    union + map-side-combinable integer-sum plan stays gate-run
-    #    by agg_heavy_hitters_merged; the shifted-lcm arithmetic stays
-    #    pinned in pytest parity).
-    #    (6) ml_cumulative_gain — the budget sweep (gain/lift at
-    #    decile cutoffs) from the PR sweep's distinct-score grain,
-    #    bucket assignment by integer floor inversion + explode (no
-    #    spine join). Displaced: ml_feature_hashing (r6-green — the
-    #    hashed posting aggregate grain stays gate-run by
-    #    text_bpe_token_counts, the feature-engineering family by
-    #    ml_target_encoding).
-    #    (7) dq_distribution_drift — categorical mix drift as total
-    #    variation distance (the one drift statistic whose terms stay
-    #    exact rationals). Displaced: dq_referential_integrity
-    #    (r6-green — the DQ report family stays gate-run by
-    #    dq_orders_profile + the drift gate; the LEFT ANTI
-    #    distinct-keys plan by the graph delta-frontier gates).
-    #    (8) agg_heavy_hitters_phi — the φ-scan DECISION tier
-    #    (guaranteed-vs-candidate flags from a merged state at the
-    #    tight rational bound φ = 1/(k+1)) under the official value
-    #    hash (r8 verdict ask #4). Displaced: agg_heavy_hitters
-    #    (r8-green — BOTH surviving heavy-hitter gates replay the full
-    #    offset-build construction in their oracles, so the build
-    #    stays gate-run in-plan twice over).
-    #    Also displaced for (3): emb_int8_quantize (r6-green — the
-    #    zero-shuffle exact-quanta embedding map stays gate-run inside
-    #    sim_ivf_ann_trained + sim_semantic_dedup; the int8 codes stay
-    #    pinned in pytest parity) and events_ohlc_bars (r5-green — the
-    #    event-time bucket aggregate plan stays gate-run by events_twap
-    #    + stream_sliding_window; the min_by/max_by argmin selection
-    #    stays pinned in pytest parity, with the robust-stats sibling
-    #    events_anomaly_mad still live).
-    #    (9) ml_fleiss_kappa — the n-rater generalization of Cohen's
-    #    kappa (three language raters per document, per declared-lang
-    #    slice), exact via the cleared-denominator S1/S2 integer
-    #    masses. Displaced: ml_target_encoding (r5-green — the md5
-    #    fold mechanics stay gate-run by sample_split_leakage_free,
-    #    the per-category aggregate-grain eval family by
-    #    dq_distribution_drift; the leave-fold-out algebra stays
-    #    pinned in pytest parity).
-    #    (10) ml_rbo_overlap — rank-biased overlap (Webber–Moffat–
-    #    Zobel TOIS 2010), the TOP-WEIGHTED ranker-agreement member
-    #    over the same two per-user rankings as the Spearman/Kendall
-    #    gates; exact via literal integer suffix weights at rational
-    #    p (the ndcg_discounts recipe). Displaced:
-    #    text_pmi_collocations (r5-green — the explode → pair-count
-    #    plan family stays gate-run by the BPE train loop's per-round
-    #    pair ranking and the heavy-hitter build's explode→count; the
-    #    PMI log-free ratio algebra stays pinned in pytest parity).
     "ml_kendall_tau",
-    # -- new in round 8 (unrowed, front-loaded). The merge tier of the
-    #    r7 operators moves under the official value hash, and the two
-    #    remaining family gaps close:
-    #    (1) sample_weighted_priority_merged — the priority sampler's
-    #    subtle merge contract (union the RANKED top-(k+1) states, re-
-    #    rank, re-derive τ) gate-verified exactly as
-    #    agg_quantile_sketch_merged did for the quantile sketch.
-    #    Displaced: sample_weighted_priority (r7-green — the merged
-    #    query replays BOTH halves' builds, τ, and max(w, τ) in its
-    #    oracle, so the build stays gate-run inside it).
-    #    (2) ml_average_precision — the PR sweep's scalar summary
-    #    (quantized-term integer sum, the exact-summation treatment the
-    #    r7 verdict asked for). (3) ml_ndcg — graded-relevance ranking
-    #    eval with a literal discount table. Displaced: ml_auc_roc
-    #    (r7-green — same distinct-score-grain aggregate + window plan,
-    #    stays gate-run by the PR sweep + AP), ml_retrieval_eval
-    #    (r7-green — NDCG runs the same hits-join + per-query aggregate
-    #    + quanta-sum shape, graded superset of hit-rate/MRR).
-    #    (4) agg_heavy_hitters + (5) agg_heavy_hitters_merged —
-    #    deterministic Misra–Gries summaries (exact-counts offset
-    #    construction, PODS-2012 merge with error accumulation), the
-    #    "find the hot keys" member completing the sketch family.
-    #    Displaced: agg_quantile_sketch (r7-green — its merged gate
-    #    twin replays both builds in-plan and stays live) and
-    #    ml_multiclass_confusion (r7-green — the k×k conditional-count
-    #    hash-agg plan family stays gate-run by the rollup lattice and
-    #    the PR sweep's conditional counts).
-    #    Batch 2 — the remaining scalar eval summaries: (6) ml_macro_f1
-    #    (the k×k lang-ID confusion matrix collapsed to the number a
-    #    filter sweep tracks — same quantized-mean policy as AP) and
-    #    (7) ml_brier_score (the calibration leg's scalar — EXACT
-    #    integer numerator Σ(s−y·s_max)², no floor error). Displaced:
-    #    text_bpe_encode (r7-green — the greedy longest-match encode
-    #    runs inside gate-witnessed text_bpe_token_counts, and the
-    #    vocab it applies is built by gate-witnessed text_bpe_train)
-    #    and lake_zorder_ranges (r7-green — the metadata-grain
-    #    file-layout window family stays gate-run by
-    #    lake_compaction_plan; the bit-interleave scalar stays pinned
-    #    in pytest parity).
-    #    Batch 3: (8) ml_rrf_fusion — reciprocal rank fusion, the
-    #    multi-retriever combine step in front of the ranking evals,
-    #    exact via the shifted-lcm integer sum; and
-    #    (9) lake_zonemap_pruning — min/max data-skipping decisions
-    #    for the SAME predicate workload under linear vs Z-order
-    #    layouts, the payoff measurement for the layout family.
-    #    Displaced: text_tfidf_topk (r7-green — the explode → count →
-    #    window-top-k plan runs verbatim in agg_heavy_hitters, and the
-    #    posting-count grain in text_bpe_token_counts; the idf algebra
-    #    stays pinned in pytest parity) and events_max_concurrency
-    #    (r7-green — the boundary-explode + per-key ordered running
-    #    window family stays gate-run by events_twap and
-    #    stream_sliding_window; the sweep-line semantics stay pinned
-    #    in pytest parity).
     "ml_average_precision",
     "agg_heavy_hitters_merged",
-    # -- new in round 7 (unrowed, front-loaded). The mergeable
-    #    deterministic quantile sketch (bottom-k md5-priority sample —
-    #    the KMV idiom applied to rank statistics) completes the sketch
-    #    family: distinct (KMV), heavy hitters (CMS), membership
-    #    (Bloom), now percentiles. The PR curve is the full
-    #    threshold sweep from the auc_exact distinct-score grain.
-    #    Displaced in exchange (witnesses in WITNESSES):
-    #    agg_kmv_distinct (r5-green — the bottom-k-by-md5-priority
-    #    sketch construction IS the quantile sketch's build kernel;
-    #    the KMV estimator arithmetic stays pinned in pytest parity)
-    #    and ml_confusion_metrics (r6-green — the single-threshold
-    #    point of the gate-witnessed PR sweep; the conditional-count
-    #    hash-agg plan stays gate-run by ml_multiclass_confusion). --
-    #    Batch 2: the sketch MERGE under the gate (two half-corpus
-    #    states merged in-plan; the oracle replays both bottom-ks,
-    #    the concatenation re-take, and the rank selection — the
-    #    rollup composition a 100 TB pipeline runs daily). Displaced:
-    #    ml_sequence_dataset (r6-green — the per-key lag/carry window
-    #    family stays gate-witnessed by events_twap +
-    #    scd2_asof_lookup, the same witnesses events_forward_fill
-    #    demoted under).
-    #    Batch 3: weighted priority sampling (Duffield–Lund–Thorup) —
-    #    the unbiased-subset-sum sample, the weighted completion of
-    #    the sampling family. Displaced: sample_token_weighted
-    #    (r5-green — token-mass-proportional selection stays
-    #    gate-witnessed by the priority sampler, the md5-ordered
-    #    deterministic-draw mechanics by sample_split_leakage_free).
-    #    Batch 4: retrieval evaluation (hit-rate@k + exact-integer MRR
-    #    via the lcm(1..k)/rank trick) — the ranking sibling of the
-    #    classification eval triad. Displaced: ml_calibration_bins
-    #    (r6-green — score-grain eval stays gate-witnessed by
-    #    ml_pr_curve, the fixed-width bucketed-aggregate plan by
-    #    text_ccnet_buckets).
     "agg_quantile_sketch_merged",
     "ml_pr_curve",
-    # -- new in round 6 (all unrowed, front-loaded). Crash-window reorg
-    #    recovery drives the ACTUAL rollback_aware_upsert sink through
-    #    an injected kill between marker-store write and delete, then
-    #    a fresh-input retry (judge ask #2, gate-verified against the
-    #    canonical reversed-running-min oracle). Exact AUC (rank-sum,
-    #    distinct-score window) + confusion metrics open the model-eval
-    #    family; ER clusters close the pairs→entities transitive step;
-    #    compaction planning + FK audit extend the lake/DQ families;
-    #    int8 quantization, TF-IDF top-k, and hashing-trick features
-    #    extend the embedding/text featurization families. Displaced in
-    #    exchange (all green r5 or earlier, witnesses in WITNESSES):
-    #    text_bpe_vocab, text_span_corruption, agg_kmv_intersection,
-    #    events_forward_fill, scd2_order_priority,
-    #    dq_orders_expectations, graph_link_prediction,
-    #    emb_hard_negatives, sample_shard_shuffle. --
-    #    Batch 2: Bloom-filter join prefilter (explicit semi-join
-    #    reduction: portable-md5 2^16-bit filter, one bit_or aggregate,
-    #    broadcast word table, no-false-negative contract pinned).
-    #    Displaced: dq_join_skew_report (r5-green; the DQ report-
-    #    aggregate family stays gate-witnessed by dq_orders_profile +
-    #    dq_referential_integrity, and the key-frequency top-N plan by
-    #    the gate's window top-k members).
-    #    Batch 3: multi-class confusion matrix (lang-ID vs declared
-    #    label — the k-class eval sibling of ml_confusion_metrics) and
-    #    sequence-dataset construction (lag-feature next-event rows,
-    #    ONE user-keyed window). Displaced: graph_bfs_levels (r5-green;
-    #    the delta-frontier loop family stays gate-witnessed by
-    #    graph_sssp_cheapest_route — BFS is its w=1 case — and
-    #    graph_temporal_reachability, plus graph_kcore's peeling) and
-    #    pipeline_cluster_quality (r3-green; the kmeans-assignment
-    #    plan runs inside gate-witnessed sim_ivf_ann_trained, the
-    #    quality aggregate inside text_quality_classifier, and the
-    #    multi-stage pipeline composition stays gate-witnessed by
-    #    pipeline_corpus_dedup).
-    #    Batch 4: calibration/reliability bins (the third eval leg
-    #    after AUC + confusion; fixed-width score bins, one hash agg).
-    #    Displaced: er_fuzzy_part_pairs (r5-green; the blocking +
-    #    Levenshtein pair pipeline RUNS VERBATIM as the first stage of
-    #    gate-witnessed er_entity_clusters).
     "join_bloom_prefilter",
     "stream_reorg_crash_recovery",
     "er_entity_clusters",
     "lake_compaction_plan",
-    # -- new in round 5, batch 2: time-respecting (earliest-arrival)
-    #    reachability over timestamped edges — the temporal completion
-    #    of the bfs/sssp taint family (unrolled-rounds oracle); OHLC
-    #    bar downsampling (min_by/max_by argmin-aggregate family, new
-    #    to the gate); robust median+MAD anomaly counting (two exact
-    #    rank-selection passes composed). Displaced in exchange, all
-    #    green r4-or-earlier, families still gate-witnessed:
-    #    graph_pagerank (iterative-graph loops stay witnessed by
-    #    graph_kcore + graph_bfs_levels + graph_sssp_cheapest_route +
-    #    graph_temporal_reachability + graph_clustering_coefficient),
-    #    dedup_minhash_lsh (the shingle→band→verify plan runs inside
-    #    gate-witnessed dedup_incremental_batch, pipeline_corpus_dedup
-    #    and sample_split_leakage_free), events_funnel (per-key
-    #    ordered-window sequence family stays witnessed by events_twap
-    #    + stream_sliding_window; funnel itself stays pinned in pytest
-    #    parity). --
-    #    Also new in batch 2: out-of-fold target encoding (leakage-safe
-    #    leave-fold-out mean on md5 folds — the feature-engineering
-    #    sibling of sample_train_val_split). Displaced in exchange:
-    #    text_corpus_datasheet (r3-green; the multi-aggregate profiling
-    #    family stays gate-witnessed by dq_orders_profile, and the
-    #    corpus token/quality stats it rolls up are each gate-witnessed
-    #    via text_bpe_token_counts / text_ccnet_buckets; the datasheet
-    #    stays pinned in pytest parity).
-    #    Batch 3: per-node local clustering coefficient — SUBSUMES the
-    #    scalar triangle count (same degree-ordered orientation +
-    #    adjacency-intersection kernel; global count = Σ n_tri / 3),
-    #    so graph_triangle_count (r2/r4-green) demotes to parity with
-    #    its family gate-witnessed by this refinement.
     "graph_clustering_coefficient",
     "graph_temporal_reachability",
     "events_anomaly_mad",
-    # -- new in round 5 (judge ask #8): chain-reorg retraction
-    #    semantics as a batch-replay query — the canonical survivor
-    #    set rollback_aware_upsert converges a keyed sink to,
-    #    gate-verified against a reversed-running-min SQL oracle --
     "stream_reorg_replay",
     "text_fim_transform",
     "agg_rollup_two_level",
@@ -517,606 +63,27 @@ GATE_ORDER = [
     "scd2_asof_lookup",
     "text_ccnet_buckets",
     "graph_sssp_cheapest_route",
-    # -- new in round 4 (judge asks #6/#7): full BPE tokenizer training
-    #    (trajectory oracle-replayed), per-doc token counts under the
-    #    learned vocab, and RefinedWeb paragraph-level exact dedup --
     "text_bpe_train",
     "text_bpe_token_counts",
     "dedup_paragraph_exact",
-    # -- new in round 3 (judge ask #8 + pipeline completions):
-    #    n-gram novelty vs a reference corpus, SemDeDup-then-filter
-    #    per-cluster quality aggregation, deterministic shard shuffle,
-    #    and the component-keyed leakage-free train/val split --
-    # r5 rotation: text_novelty_score (r3-green) demoted to parity in
-    # exchange for dq_join_skew_report — the winnowing-fingerprint
-    # equi-join family stays gate-witnessed by
-    # text_contamination_matrix (same fp-keyed plan).
     "sample_split_leakage_free",
     "text_contamination_matrix",
-    # -- never officially gate-verified before round 3 (front-loaded
-    #    so even a row-capped gate reaches them) --
-    # r5 rotation: basket_part_pairs (r3-green) demoted to parity in
-    # exchange for agg_kmv_distinct — the explode+self-join pair-mining
-    # family stays gate-witnessed by text_pmi_collocations.
-    # r5 rotation: dedup_minhash_containment (r3-green) demoted to
-    # parity in exchange for lake_zorder_ranges — the minhash family
-    # stays gate-witnessed by dedup_minhash_lsh +
-    # dedup_incremental_batch (same shingle/band plan, containment
-    # threshold pinned in pytest).
-    # r5 rotation: dedup_simhash_hamming (r3-green) demoted to parity
-    # in exchange for text_bpe_encode — the simhash family stays
-    # gate-witnessed by dedup_simhash_multiblock.
-    # r5 rotation: emb_label_centroids (r3-green) demoted to parity in
-    # exchange for events_forward_fill — the per-label centroid agg
-    # plan family stays gate-witnessed by emb_kmeans_centroids.
-    # r5 rotation: sim_ivf_ann and sim_lsh_ann (both r3-green) demoted
-    # to parity in exchange for text_pmi_collocations and
-    # graph_bfs_levels — the IVF family stays gate-witnessed by
-    # sim_ivf_ann_trained + sim_ivf_ann_nprobe2, the sign-LSH family
-    # by sim_lsh_ann_multitable.
     "stream_sliding_window",
-    # r5 rotation: text_repetition_ratio (r3-green) demoted to parity
-    # in exchange for events_max_concurrency — the repetition-quality
-    # family stays gate-witnessed by text_quality_classifier and the
-    # datasheet rollup (same exact-integer ratio plan; the Gopher
-    # thresholds stay pinned in pytest parity).
-    # -- green in round 2 --
     "text_quality_classifier",
-    # r5 rotation: text_cms_heavy_hitters (r2-green) demoted to parity
-    # in exchange for text_fim_transform — the CMS register math stays
-    # pinned by pytest + the streaming sketch suite, HLL keeps the
-    # sketch family gate-witnessed.
     "graph_kcore",
-    # r5 rotation: emb_random_projection (r2-green) demoted to parity
-    # in exchange for text_span_corruption — the quantized projection
-    # plan family stays gate-witnessed by emb_kmeans_centroids and
-    # sim_pq_ann, and the JL distortion bound stays pinned in pytest.
     "dedup_duplicated_spans",
-    # r5 rotation: text_bpe_pair_counts (r2-green) demoted to parity in
-    # exchange for text_bpe_vocab — its round-1 pair ranking runs
-    # inside the gate-witnessed text_bpe_train loop.
-    # r5 rotation: sim_pq_ann (r2-green) demoted to parity in exchange
-    # for dq_orders_expectations — the quantized-ANN family stays
-    # gate-witnessed by sim_ivf_ann_trained + emb_kmeans_centroids
-    # (same codebook/broadcast-ADC plan pieces; PQ recall stays pinned
-    # in pytest parity + test_similarity_recall).
     "sim_semantic_dedup",
-    # r5 rotation: dedup_span_removal (r2-green) demoted to parity in
-    # exchange for agg_rollup_two_level — the duplicated-span family
-    # stays gate-witnessed by dedup_duplicated_spans (same
-    # position-stamped n-gram plan; the removal rebuild is pinned in
-    # pytest parity).
-    # r5 rotation: graph_label_propagation (r2-green) demoted to
-    # parity in exchange for graph_link_prediction — the per-round
-    # join/argmax iterative-graph family stays gate-witnessed by
-    # graph_pagerank + graph_kcore + graph_bfs_levels.
-    # r5 rotation: agg_hll_distinct (r2-green) demoted to parity in
-    # exchange for graph_sssp_cheapest_route — the portable-sketch
-    # family stays gate-witnessed by agg_kmv_distinct +
-    # agg_kmv_intersection, and the HLL register math stays pinned in
-    # pytest parity + the streaming sketch-store suite.
-    # r5 rotation: text_vocab_coverage (r2-green) demoted to parity in
-    # exchange for agg_kmv_intersection — the vocab/token-coverage
-    # family stays gate-witnessed by text_bpe_vocab +
-    # text_bpe_token_counts + text_bpe_encode.
-    # r5 rotation: emb_kmeans_centroids (r2-green) demoted to parity
-    # in exchange for scd2_asof_lookup — the quantized-Lloyd training
-    # loop stays gate-witnessed inside sim_ivf_ann_trained and the
-    # assignment plan inside pipeline_cluster_quality.
     "sim_ivf_ann_trained",
-    # r5 rotation: dedup_embedding_cosine (r2-green) demoted to parity
-    # in exchange for emb_hard_negatives — sim_semantic_dedup keeps
-    # the exact-quanta cosine family gate-witnessed.
     "dedup_simhash_multiblock",
     "pipeline_corpus_dedup",
     "sim_lsh_ann_multitable",
-    # r5 rotation: sim_ivf_ann_nprobe2 (r2-green) demoted to parity in
-    # exchange for er_fuzzy_part_pairs — the IVF family stays
-    # gate-witnessed by sim_ivf_ann_trained (same probe plan, trained
-    # centroids), and the nprobe recall property stays pinned in pytest.
-    # r5 rotation: stream_session_window (r2-green) demoted to parity
-    # in exchange for stream_reorg_replay — sliding windows + watermark
-    # dedup keep the streaming-window family gate-witnessed.
-    # r5 rotation: stream_dedup_first_touch (r3-green) demoted to
-    # parity in exchange for dq_orders_profile — streaming stays
-    # gate-witnessed by stream_sliding_window + stream_reorg_replay,
-    # and the keep-first window election runs inside gate-witnessed
-    # dedup_paragraph_exact.
-    # r5 rotation: multimodal_binary_metadata (r2-green) demoted to
-    # parity in exchange for events_twap — the multimodal family stays
-    # gate-witnessed by multimodal_feature_extract +
-    # multimodal_frame_sample (same binary-column plumbing).
     "multimodal_feature_extract",
-    # r5 rotation: multimodal_frame_sample (r2-green) demoted to
-    # parity in exchange for text_ccnet_buckets — the mapInPandas
-    # binary/Arrow plumbing stays gate-witnessed by
-    # multimodal_feature_extract (same seam, same batch shape).
     "netflow_decimal",
-    # r5 rotation: sample_temperature_mix (r2-green) demoted to parity
-    # in exchange for scd2_order_priority — the sampling family stays
-    # gate-witnessed by sample_token_weighted + sample_shard_shuffle +
-    # sample_split_leakage_free.
     "dedup_incremental_batch",
     "flagship_volume_stack",
 ]
 
 assert len(GATE_ORDER) == 50, len(GATE_ORDER)
-
-# ---------------------------------------------------------------------------
-# Machine-checked rotation-witness map (round-5 judge ask #1).
-#
-# The prose demotion comments above rotted within round 5 — three cited
-# witnesses were themselves demoted in the same round. This map is now
-# the AUTHORITATIVE record: every demoted query names the gate-family
-# witnesses that justify its demotion. A witness may itself be a
-# demoted query (families form chains), but every chain must terminate
-# in the CURRENT gate — tests/test_gate_coverage.py computes the
-# fixpoint from GATE_ORDER and fails if any demoted query can't reach
-# the live gate, which is exactly the staleness mode the prose allowed.
-# When rotating, update this map in the same commit as GATE_ORDER.
-#
-# Reading guide: "q: [w1, w2]" means the plan/semantics family of q
-# stays gate-exercised because w1/w2 (or their own live witnesses) run
-# the same operator shape in the current gate; q itself stays fully
-# DuckDB-parity-checked in pytest (EXTRA_QUERIES, test_oracle_parity).
-WITNESSES: dict[str, list[str]] = {
-    # --- demoted in the r11 batch-3 rotation (in exchange for the
-    #     per-class report, the per-unit agreement drill-down,
-    #     top-label ECE and the store's ARI read) ---
-    # the literal log-quanta table family stays gate-run by the
-    # k-class gate (same log_loss_table, same one-sided eps-clamp +
-    # n_clamped convention, same broadcast-dim lookup plan); the
-    # binary two-arm (T_pos/T_neg) algebra stays pinned in pytest
-    # parity + the fractional-score twin-divergence regression
-    "ml_log_loss": ["ml_log_loss_multiclass"],
-    # the quantized-share drift family stays gate-run by the
-    # directional KL gate + the per-category drift drill-down on the
-    # SAME _drift_share_grain and psi_ln_table; the 2G-grid mixture
-    # algebra (0·ln0 on the integer side, disjoint → exactly ln 2)
-    # stays pinned in pytest parity
-    "dq_distribution_js": ["dq_distribution_kl", "dq_drift_explain"],
-    # the moment-identity family stays gate-run by the ordinal gate —
-    # which IS the interval form over the e-transform (uniform
-    # marginals ⇒ equality, pinned) — and the cells→kept-units prefix
-    # runs verbatim in the agreement-explain gate; the raw-label
-    # moment algebra stays pinned in pytest parity
-    "ml_krippendorff_interval": [
-        "ml_krippendorff_ordinal",
-        "ml_agreement_explain",
-    ],
-    # the Misra–Gries family stays gate-run by the merged-tier gate
-    # (whose oracle replays BOTH half-builds + the merge algebra);
-    # the φ = 1/(k+1) guaranteed-vs-candidate decision scan stays
-    # pinned in pytest parity
-    "agg_heavy_hitters_phi": ["agg_heavy_hitters_merged"],
-    # the mergeable bottom-k md5-priority state family stays gate-run
-    # by the quantile sketch's merged gate (same union → re-rank →
-    # re-derive-threshold merge shape, oracle replays both
-    # half-builds); the Duffield-Lund-Thorup subset-sum estimator
-    # algebra stays pinned in pytest parity
-    "sample_weighted_priority_merged": ["agg_quantile_sketch_merged"],
-    # --- demoted in the r11 rotation (in exchange for the k-class
-    #     objective, directional KL, ordinal alpha, label MI and the
-    #     macro-F1 store read) ---
-    # PSI ≡ KL(p‖q) + KL(q‖p): the shared _drift_share_grain, G-grid
-    # share quantization, eps-fill arm and psi_ln_table run verbatim
-    # in the directional gate; the mixture form stays live as JS; the
-    # symmetrized sum stays pinned in pytest parity
-    "dq_distribution_psi": ["dq_distribution_kl", "dq_distribution_js"],
-    # the store path it pins (eval_cells_delta_sink → _batch_id
-    # deltas → summed cells) runs VERBATIM in the macro-F1 serving
-    # gate; the from-cells kappa algebra stays pinned in pytest
-    # parity + the stream==batch suite
-    "ml_kappa_from_store": ["ml_macro_f1_from_store"],
-    # the ragged-coverage construction, lcm-cleared 1/(m−1) weights,
-    # drop accounting and the three-rater gate shape run verbatim in
-    # BOTH surviving alpha gates; the nominal sum-of-squares algebra
-    # stays pinned in pytest parity incl. the α≈κ cross-check
-    "ml_krippendorff": [
-        "ml_krippendorff_interval",
-        "ml_krippendorff_ordinal",
-    ],
-    # calibration family stays gate-run by the binary + multiclass
-    # log-loss gates (same exact-integer-numerator policy), the
-    # score-grain sweep by the PR curve; the binned |acc−conf|
-    # aggregate stays pinned in pytest parity
-    "ml_ece": ["ml_log_loss", "ml_log_loss_multiclass", "ml_pr_curve"],
-    # the facts→(a,b)-cell aggregate runs verbatim in the MI gate;
-    # the ordinal-distance agreement family is gate-run by the
-    # ordinal alpha (ragged n-rater generalization); the k²-bounded
-    # marginal-cross equi join stays pinned in pytest parity + the
-    # envelope-guard tests
-    "ml_weighted_kappa": ["ml_krippendorff_ordinal", "ml_label_mi"],
-    # the per-query ranked-list agreement family stays gate-run by
-    # Kendall's tau over the SAME two per-user rankings, the
-    # distinct-score sweep grain by the PR curve + AP; the literal
-    # suffix-weight arithmetic stays pinned in pytest parity
-    "ml_rbo_overlap": [
-        "ml_kendall_tau",
-        "ml_pr_curve",
-        "ml_average_precision",
-    ],
-    # the metadata-grain file-layout window family stays gate-run by
-    # the compaction planner; the min/max data-skipping decisions
-    # stay pinned in pytest parity (and the zone-map stats grain runs
-    # inside the compaction plan's per-file aggregates)
-    "lake_zonemap_pruning": ["lake_compaction_plan"],
-    # --- demoted in the r10 rotation (in exchange for the log-quanta
-    #     metric family + the agreement-suite completions) ---
-    # the from-cells kappa algebra runs VERBATIM inside the store
-    # serving gate (cohens_kappa_from_cells is its final stage), the
-    # facts→(a,b)-cell aggregate inside the weighted gate; the
-    # unweighted full-outer marginal join stays pinned in pytest parity
-    "ml_cohens_kappa": ["ml_kappa_from_store", "ml_weighted_kappa"],
-    # the (item, category) vote-cell grain, the multi-lang-rater vote
-    # construction (same _langid_oracle raters), and the
-    # dropped-ballot accounting run verbatim in the Krippendorff gate;
-    # the fixed-n S1/S2 algebra stays pinned in pytest parity (incl.
-    # the Fleiss-1971 worked example)
-    "ml_fleiss_kappa": ["ml_krippendorff"],
-    # the two-ranker rank_by window-pair construction runs verbatim in
-    # the surviving Kendall gate over the SAME per-user rankings; the
-    # top-weighted list-agreement member stays live as RBO; the Σd²
-    # permutation algebra stays pinned in pytest parity + the
-    # Daniels-inequality Hypothesis property
-    "ml_spearman_rho": ["ml_kendall_tau", "ml_rbo_overlap"],
-    # the distinct-score sweep grain stays gate-run by the PR curve +
-    # AP (shared _per_score_counts stage); the explode-inversion
-    # decile bucketing stays pinned in pytest parity
-    "ml_cumulative_gain": ["ml_pr_curve", "ml_average_precision"],
-    # the category-grain full-outer + bounded-window share
-    # construction runs VERBATIM as PSI's first stage (shared
-    # _drift_share_grain); the DQ report family keeps its second gate
-    # member in dq_orders_profile; TVD's exact numerator stays pinned
-    # in pytest parity
-    "dq_distribution_drift": ["dq_distribution_psi", "dq_orders_profile"],
-    # the literal-quanta-table exactness family it pioneered is now
-    # gate-run three ways (log-loss + PSI + JS); the graded
-    # ranking-eval family stays gate-run by the PR sweep + AP (same
-    # distinct-score grain) and RBO (same per-query ranked-list join
-    # grain); the discount-table DCG algebra stays pinned in pytest
-    # parity
-    "ml_ndcg": [
-        "ml_log_loss",
-        "ml_average_precision",
-        "ml_pr_curve",
-        "ml_rbo_overlap",
-    ],
-    # the one-hash-agg exact-scalar confusion family stays gate-run
-    # by ECE (bin aggregate) + log-loss (score-grain aggregate), the
-    # conditional-count grain by the PR sweep; the pairwise-root
-    # two-IEEE-sqrt denominator trick stays pinned in pytest parity
-    # and the test_r9_ops known-value suite
-    "ml_matthews_corr": ["ml_ece", "ml_log_loss", "ml_pr_curve"],
-    # --- demoted in the r9 rotation (in exchange for the last two
-    #     asked-for eval scalars + the agreement/budget/drift/φ-scan
-    #     completions) ---
-    # explode → pair-count grain runs per-round inside the gate BPE
-    # train loop and as the heavy-hitter build's explode→count; the
-    # 1-row N broadcast compose is the audited agg_hll_distinct shape;
-    # the PMI ratio algebra stays pinned in pytest parity
-    "text_pmi_collocations": ["text_bpe_train", "agg_heavy_hitters_merged"],
-    # md5-fold deterministic-draw mechanics stay gate-run by the
-    # component-keyed split; the per-category aggregate-grain eval
-    # family by the TVD drift gate; the leave-fold-out mean algebra
-    # stays pinned in pytest parity
-    "ml_target_encoding": [
-        "sample_split_leakage_free",
-        "dq_distribution_drift",
-    ],
-    # the calibration leg stays gate-run by ECE over the SAME scored
-    # base (least(quanta(price), s_max) vs the urgent label, per
-    # status) with the same exact-integer-numerator policy; the
-    # one-hash-agg plan family by ml_matthews_corr
-    "ml_brier_score": ["ml_ece", "ml_matthews_corr"],
-    # kappa's first stage IS macro-F1's (actual, predicted) cell
-    # aggregate over the same lang-ID comparison; the quantized-mean
-    # policy stays gate-run by ml_average_precision
-    "ml_macro_f1": ["ml_cohens_kappa", "ml_average_precision"],
-    # the two-ranker rank_by window-pair construction runs verbatim in
-    # the spearman/kendall gates; the union-of-lists +
-    # map-side-combinable integer-sum plan stays gate-run by the
-    # heavy-hitter merge; the shifted-lcm reciprocal arithmetic stays
-    # pinned in pytest parity
-    "ml_rrf_fusion": [
-        "ml_spearman_rho",
-        "ml_kendall_tau",
-        "agg_heavy_hitters_merged",
-    ],
-    # hashed posting-count aggregate grain = the BPE token-count
-    # grain; the feature-engineering family stays gate-run by
-    # out-of-fold target encoding; the md5-bucket assignment stays
-    # pinned in pytest parity
-    "ml_feature_hashing": ["text_bpe_token_counts", "ml_target_encoding"],
-    # DQ report-aggregate family stays gate-run by the profile + the
-    # new drift gate; the LEFT ANTI on distinct keys plan family by
-    # the graph delta-frontier loops (visited-set anti-joins)
-    "dq_referential_integrity": [
-        "dq_orders_profile",
-        "dq_distribution_drift",
-        "graph_temporal_reachability",
-    ],
-    # zero-shuffle exact-quanta embedding map runs inside the
-    # gate-run ANN queries (same quanta arithmetic family); the int8
-    # code round-trip stays pinned in pytest parity
-    "emb_int8_quantize": ["sim_ivf_ann_trained", "sim_semantic_dedup"],
-    # event-time bucket aggregate plan stays gate-run by TWAP +
-    # sliding windows; min_by/max_by argmin selection stays pinned in
-    # pytest parity; the robust-stats sibling stays live
-    "events_ohlc_bars": [
-        "events_twap",
-        "stream_sliding_window",
-        "events_anomaly_mad",
-    ],
-    # BOTH surviving heavy-hitter gates (merged + φ-scan) replay the
-    # full offset-build construction per half in their oracles — the
-    # build runs in-plan inside each
-    "agg_heavy_hitters": [
-        "agg_heavy_hitters_merged",
-        "agg_heavy_hitters_phi",
-    ],
-    # --- demoted in the r8 rotation (in exchange for the merge-tier
-    #     gates + the eval/sketch family completions) ---
-    # the merged gate query's oracle replays BOTH halves' top-(k+1)
-    # builds, τ, and max(w, τ) — the build runs in-plan inside it
-    "sample_weighted_priority": ["sample_weighted_priority_merged"],
-    # same for the quantile sketch: the merged twin replays both
-    # bottom-k builds, the concat re-take, and the rank selection
-    "agg_quantile_sketch": ["agg_quantile_sketch_merged"],
-    # same distinct-score-grain aggregate + window plan (shared
-    # _per_score_counts first stage); the rank-sum algebra stays
-    # pinned in pytest parity
-    "ml_auc_roc": ["ml_pr_curve", "ml_average_precision"],
-    # NDCG is the graded superset: same hits equi-join + per-query
-    # aggregate + integer quanta-sum shape; the lcm-MRR arithmetic
-    # stays pinned in pytest parity
-    "ml_retrieval_eval": ["ml_ndcg"],
-    # k×k label/pred conditional-count hash agg — the CELL aggregate
-    # runs verbatim as macro-F1's first stage, and the scalar summary
-    # is now the gate member; the per-cell fractions stay pinned in
-    # pytest parity
-    "ml_multiclass_confusion": ["ml_macro_f1"],
-    # greedy longest-match encode runs inside the token-count query
-    # (same learned vocab, same expansion), vocab built by the gated
-    # train loop; the encode output rows stay pinned in pytest parity
-    "text_bpe_encode": ["text_bpe_train", "text_bpe_token_counts"],
-    # metadata-grain file-layout window family stays gate-run by the
-    # compaction planner; the z-order bit-interleave scalar stays
-    # pinned in pytest parity + the scalar_functions family, and the
-    # per-file min/max stats grain now runs inside the pruning audit
-    "lake_zorder_ranges": ["lake_compaction_plan", "lake_zonemap_pruning"],
-    # explode → count → window-top-k runs verbatim in the heavy-hitter
-    # build; the posting/tf grain in the BPE token counts; the idf
-    # algebra stays pinned in pytest parity
-    "text_tfidf_topk": ["agg_heavy_hitters", "text_bpe_token_counts"],
-    # boundary-explode + per-key ordered running window family stays
-    # gate-run by the TWAP carry windows and the sliding-window
-    # counts; the sweep-line semantics stay pinned in pytest parity
-    "events_max_concurrency": ["events_twap", "stream_sliding_window"],
-    # --- demoted in the r7 rotation (in exchange for the quantile
-    #     sketch + PR curve) ---
-    # the mergeable bottom-k-by-md5-priority construction (distinct
-    # shuffle → TakeOrderedAndProject / WindowGroupLimit) is the
-    # quantile sketch's build kernel; the (k-1)/f estimator stays
-    # pinned in pytest parity
-    "agg_kmv_distinct": ["agg_quantile_sketch"],
-    # one operating point of the gate-witnessed threshold sweep; the
-    # conditional-count one-hash-agg plan stays gate-run by the
-    # k-class confusion matrix
-    "ml_confusion_metrics": ["ml_pr_curve", "ml_multiclass_confusion"],
-    # score-grain eval stays gate-run by the PR sweep; the fixed-width
-    # bucketed-aggregate plan by the CCNet perplexity buckets
-    "ml_calibration_bins": ["ml_pr_curve", "text_ccnet_buckets"],
-    # per-key lag/carry ordered-window family (same witnesses
-    # events_forward_fill demoted under); the sequence rows themselves
-    # stay pinned in pytest parity
-    "ml_sequence_dataset": ["events_twap", "scd2_asof_lookup"],
-    # token-mass-proportional selection stays gate-run by the priority
-    # sampler; the md5-ordered deterministic-draw + per-shard window
-    # mechanics by the component-keyed split
-    "sample_token_weighted": [
-        "sample_weighted_priority",
-        "sample_split_leakage_free",
-    ],
-    # --- demoted in the r6 rotation (in exchange for the 9 new gate
-    #     queries; every witness is a live r6 gate member) ---
-    # vocab build runs inside the gate-witnessed BPE train loop, and
-    # the learned vocab is exercised by encode + token counts
-    "text_bpe_vocab": ["text_bpe_train", "text_bpe_encode"],
-    # same md5-seeded deterministic-span pure-column plan family
-    "text_span_corruption": ["text_fim_transform"],
-    # the mergeable bottom-k sketch construction is the shared kernel;
-    # the intersection estimate stays pinned in pytest parity
-    "agg_kmv_intersection": ["agg_kmv_distinct"],
-    # ordered per-key carry window family (last_value / as-of semantics)
-    "events_forward_fill": ["events_twap", "scd2_asof_lookup"],
-    # the as-of lookup builds the SCD2 history in-plan
-    "scd2_order_priority": ["scd2_asof_lookup"],
-    # one-pass multi-aggregate rule suite family + the r6 FK audit
-    "dq_orders_expectations": ["dq_orders_profile", "dq_referential_integrity"],
-    # common-neighbor adjacency-intersection kernel (RA scores) is the
-    # clustering-coefficient kernel; iterative loops stay via kcore
-    "graph_link_prediction": ["graph_clustering_coefficient", "graph_kcore"],
-    # bucketed candidate gen + exact-quanta cosine + window top-k —
-    # the same plan pieces the gate ANN queries run
-    "emb_hard_negatives": ["sim_ivf_ann_trained", "sim_lsh_ann_multitable"],
-    # md5 shard-assign + within-shard window order run inside the
-    # component-keyed split and the token-weighted sampler
-    "sample_shard_shuffle": ["sample_split_leakage_free", "sample_token_weighted"],
-    # one-pass report-aggregate family (profile + FK audit); the
-    # key-frequency top-N plan is the gate's window top-k shape
-    "dq_join_skew_report": ["dq_orders_profile", "dq_referential_integrity"],
-    # the blocking + Levenshtein pair pipeline runs verbatim as the
-    # first stage of the gate's entity-clustering query
-    "er_fuzzy_part_pairs": ["er_entity_clusters"],
-    # BFS is sssp's w=1 case; the delta-frontier/anti-join loop family
-    # stays gate-run by the weighted and temporal siblings + kcore
-    "graph_bfs_levels": [
-        "graph_sssp_cheapest_route",
-        "graph_temporal_reachability",
-        "graph_kcore",
-    ],
-    # kmeans assignment runs inside the trained-IVF gate query, the
-    # quality aggregate inside the classifier, the multi-stage
-    # pipeline composition inside corpus dedup
-    "pipeline_cluster_quality": [
-        "sim_ivf_ann_trained",
-        "text_quality_classifier",
-        "pipeline_corpus_dedup",
-    ],
-    # --- aggregate / sketch families ---
-    # any_value collapse runs inside the gate rollup lattice
-    "agg_any_value": ["agg_rollup_two_level"],
-    # exact distinct count: the distinct-cardinality family's gate
-    # witness is the mergeable bottom-k sketch over the same keys
-    "agg_count_distinct": ["agg_kmv_distinct"],
-    # portable-sketch register math stays pinned in pytest; the sketch
-    # family is gate-witnessed by KMV distinct + intersection
-    "agg_hll_distinct": ["agg_kmv_distinct", "agg_kmv_intersection"],
-    "text_cms_heavy_hitters": ["agg_kmv_distinct"],
-    # --- Arrow / Python-escape families ---
-    # grouped-map Arrow escape: the Arrow batch seam is gate-witnessed
-    # by the mapInPandas/mapInArrow feature extractor; the demean
-    # semantics (leave-group-mean-out) by out-of-fold target encoding
-    "applyinpandas_demean": ["multimodal_feature_extract", "ml_target_encoding"],
-    "multimodal_binary_metadata": ["multimodal_feature_extract"],
-    "multimodal_frame_sample": ["multimodal_feature_extract"],
-    # --- join families ---
-    "asof_join_clicks_purchases": ["scd2_asof_lookup"],
-    "range_join_click_attribution": ["scd2_asof_lookup", "events_max_concurrency"],
-    "topk_semi_join": ["graph_kcore"],  # survivor semi-join plan family
-    "dim_enrich_volumes": ["flagship_volume_stack"],
-    # full-outer hash-diff merge — same co-partitioned full-outer plan
-    # as the gate netflow merge
-    "corpus_snapshot_diff": ["netflow_decimal"],
-    # --- pair-mining / basket families ---
-    "basket_part_pairs": ["text_pmi_collocations"],
-    "text_top_bigrams": ["text_pmi_collocations"],
-    # --- dedup families ---
-    "dedup_exact": ["dedup_paragraph_exact"],
-    "dedup_keep_last": ["dedup_paragraph_exact"],  # keep-one window election
-    "dedup_minhash_lsh": [
-        "dedup_incremental_batch",
-        "pipeline_corpus_dedup",
-        "sample_split_leakage_free",
-    ],
-    # fixed r6 (stale in r5: cited dedup_minhash_lsh, demoted same
-    # round): the shingle→band→verify plan is gate-run by the
-    # incremental-batch dedup; containment threshold pinned in pytest
-    "dedup_minhash_containment": ["dedup_incremental_batch"],
-    "dedup_ngram_jaccard": ["dedup_minhash_lsh"],
-    "dedup_simhash": ["dedup_simhash_multiblock"],
-    "dedup_simhash_hamming": ["dedup_simhash_multiblock"],
-    "dedup_span_removal": ["dedup_duplicated_spans"],
-    "dedup_embedding_cosine": ["sim_semantic_dedup"],
-    # --- embedding / ANN families ---
-    "emb_kmeans_centroids": ["sim_ivf_ann_trained", "pipeline_cluster_quality"],
-    "emb_label_centroids": ["emb_kmeans_centroids"],
-    "emb_random_projection": ["emb_kmeans_centroids", "sim_pq_ann"],
-    "sim_cosine_topk": ["sim_ivf_ann_trained", "sim_lsh_ann_multitable"],
-    # fixed r6 (stale in r5: partly cited sim_ivf_ann_nprobe2, demoted
-    # same round): probe plan + trained centroids gate-run by the
-    # trained IVF variant
-    "sim_ivf_ann": ["sim_ivf_ann_trained"],
-    "sim_ivf_ann_nprobe2": ["sim_ivf_ann_trained"],
-    "sim_lsh_ann": ["sim_lsh_ann_multitable"],
-    "sim_pq_ann": ["sim_ivf_ann_trained", "emb_kmeans_centroids"],
-    # --- event-analytics / window families ---
-    "events_cma": ["events_twap", "flagship_volume_stack"],
-    "events_funnel": ["events_twap", "stream_sliding_window"],
-    "events_histogram_quantiles": ["events_anomaly_mad"],
-    "events_retention": ["events_funnel"],
-    "events_sessionize": ["events_max_concurrency", "events_twap"],
-    "events_share_by_day": ["flagship_volume_stack"],
-    "events_spine_zero_fill": ["flagship_volume_stack"],
-    "events_value_quantiles": ["events_anomaly_mad"],
-    "topk_per_group": [
-        "sim_ivf_ann_trained",
-        "sim_lsh_ann_multitable",
-        "emb_hard_negatives",
-    ],
-    # --- domain-pipeline families ---
-    "decimal_quantity_sum": ["netflow_decimal"],
-    "domain_block_normalize": ["flagship_volume_stack"],
-    "domain_netflow_tx": ["netflow_decimal"],
-    "domain_transfers_edges": ["graph_link_prediction", "flagship_volume_stack"],
-    "domain_utxo_resolution": ["netflow_decimal", "flagship_volume_stack"],
-    "domain_value_map_roundtrip": ["flagship_volume_stack", "netflow_decimal"],
-    "domain_volumes_priced": ["flagship_volume_stack"],
-    "explode_normalize": ["netflow_decimal", "flagship_volume_stack"],
-    "netflow_supplier_part": ["netflow_decimal"],
-    "pricing_summary": ["agg_rollup_two_level"],
-    "pivot_qty_by_flag": ["agg_rollup_two_level"],
-    "vol_rollup_hierarchy": ["agg_rollup_two_level", "flagship_volume_stack"],
-    "vol_rollup_all_time": ["vol_rollup_hierarchy"],
-    "vol_rollup_by_block": ["vol_rollup_hierarchy"],
-    "sql_api_revenue": ["flagship_volume_stack"],  # same Catalyst plan via SQL parse
-    "set_ops_units": ["graph_sssp_cheapest_route", "graph_bfs_levels"],
-    "scalar_functions": ["text_span_corruption", "lake_zorder_ranges"],
-    "scalar_slot_to_timestamp": ["scalar_functions"],
-    # --- graph families ---
-    "graph_cc_pointer_jump": ["graph_kcore", "graph_bfs_levels"],
-    "graph_connected_components": ["graph_cc_pointer_jump"],
-    "graph_degrees": ["graph_clustering_coefficient"],
-    # fixed r6 (stale in r5: cited graph_pagerank, demoted same round):
-    # the per-round join/argmax iterative-graph family is gate-run by
-    # k-core peeling + BFS delta frontiers
-    "graph_label_propagation": ["graph_kcore", "graph_bfs_levels"],
-    "graph_neighborhood": ["graph_bfs_levels"],
-    "graph_pagerank": [
-        "graph_kcore",
-        "graph_bfs_levels",
-        "graph_sssp_cheapest_route",
-    ],
-    "graph_triangle_count": ["graph_clustering_coefficient"],
-    # --- sampling / packing families ---
-    "pack_length_buckets": ["sample_pack_sequences"],
-    "sample_mix_reweight": ["sample_token_weighted"],
-    "sample_pack_sequences": ["sample_token_weighted", "sample_shard_shuffle"],
-    "sample_stratified": ["sample_split_leakage_free", "sample_token_weighted"],
-    "sample_temperature_mix": ["sample_token_weighted", "sample_shard_shuffle"],
-    "sample_train_val_split": ["sample_split_leakage_free"],
-    # --- streaming families ---
-    "stream_dedup_first_touch": [
-        "stream_sliding_window",
-        "stream_reorg_replay",
-        "dedup_paragraph_exact",
-    ],
-    "stream_session_window": ["stream_sliding_window", "stream_reorg_replay"],
-    "stream_tumbling_window": ["stream_sliding_window"],
-    # --- text families ---
-    "pipeline_corpus_filter": [
-        "text_lang_id",
-        "text_quality",
-        "text_token_count",
-        "dedup_exact",
-    ],
-    "text_bm25_search": ["text_bpe_token_counts", "text_contamination_matrix"],
-    "text_bpe_pair_counts": ["text_bpe_train"],
-    "text_chunk_windows": ["text_span_corruption"],
-    "text_corpus_datasheet": [
-        "dq_orders_profile",
-        "text_bpe_token_counts",
-        "text_ccnet_buckets",
-    ],
-    "text_decontaminate_overlap": ["text_contamination_matrix"],
-    "text_dsir_weights": ["text_quality_classifier", "text_ccnet_buckets"],
-    "text_fingerprint": ["text_winnowing_fingerprints"],
-    "text_gopher_repetition": ["text_quality_classifier"],
-    "text_lang_id": ["text_ccnet_buckets"],
-    "text_lm_perplexity": ["text_ccnet_buckets"],
-    "text_novelty_score": ["text_contamination_matrix"],
-    "text_pii_scrub": ["text_span_corruption"],
-    "text_quality": ["text_quality_classifier"],
-    "text_repetition_ratio": ["text_quality_classifier"],
-    "text_token_count": ["text_bpe_token_counts"],
-    "text_vocab_coverage": [
-        "text_bpe_vocab",
-        "text_bpe_token_counts",
-        "text_bpe_encode",
-    ],
-    "text_winnowing_fingerprints": ["text_contamination_matrix"],
-    "transfer_edges_cross": ["domain_transfers_edges"],
-}
-
-finalize_gate(GATE_ORDER)
+_unknown = [n for n in GATE_ORDER if n not in QUERIES]
+if _unknown:
+    raise ValueError(f"GATE_ORDER names unregistered queries: {_unknown}")

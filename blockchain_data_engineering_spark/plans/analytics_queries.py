@@ -651,10 +651,11 @@ def events_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = ev.agg(F.count(F.lit(1)).alias("n"))
     ps = spark.createDataFrame([(p,) for p in _HQ_PS], "p DOUBLE")
+    # the threshold read-off is a non-equi join: broadcast the
+    # len(_HQ_PS)-row (p, n) side and stream the histogram past it
     return (
-        ps.crossJoin(F.broadcast(n))
-        .join(
-            cum,
+        cum.join(
+            F.broadcast(ps.crossJoin(F.broadcast(n))),
             F.col("cum").cast("double")
             >= F.ceil(F.col("p") * F.col("n").cast("double")).cast("double"),
         )

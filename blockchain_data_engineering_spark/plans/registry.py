@@ -22,14 +22,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# Queries demoted from the driver gate (which records at most ~50 rows
-# per round — CORRECTNESS_r01 stopped at registry slot 49) but still
-# implemented, exported, and DuckDB-parity-checked by
-# tests/test_oracle_parity.py. Near-duplicates of gate queries live
-# here so every *distinct* operator keeps an official gate row.
-EXTRA_QUERIES: dict[str, QueryFn] = {}
-EXTRA_ORACLES: dict[str, str] = {}
-
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register ``fn`` under ``name``; ``oracle`` is the DuckDB SQL twin
@@ -57,25 +49,3 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
     return deco
 
-
-def finalize_gate(gate_order: list[str]) -> None:
-    """Split the registry: ``gate_order`` names stay in QUERIES (in
-    exactly that order — previously-unverified queries first, so a
-    row-capped gate still reaches them); everything else moves to
-    EXTRA_QUERIES (pytest-parity only). Mutates the dicts in place so
-    existing ``from registry import QUERIES`` references stay valid.
-    """
-    missing = [n for n in gate_order if n not in QUERIES]
-    if missing:
-        raise ValueError(f"finalize_gate: unknown query names {missing}")
-    snapshot_q, snapshot_o = dict(QUERIES), dict(ORACLES)
-    gate = set(gate_order)
-    for name, fn in snapshot_q.items():
-        if name not in gate:
-            EXTRA_QUERIES[name] = fn
-            if name in snapshot_o:
-                EXTRA_ORACLES[name] = snapshot_o[name]
-    QUERIES.clear()
-    QUERIES.update({n: snapshot_q[n] for n in gate_order})
-    ORACLES.clear()
-    ORACLES.update({n: snapshot_o[n] for n in gate_order if n in snapshot_o})

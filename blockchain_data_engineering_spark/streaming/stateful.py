@@ -94,97 +94,3 @@ def running_balances(flows: DataFrame) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas twin (Spark 4 "Arbitrary Stateful
-# Processing v2"): the same balance fold on the successor API. v2 is
-# where new stateful work should land — typed per-state variables
-# (value/list/map) instead of one packed tuple, state TTL, timers, and
-# initial-state bootstrap, all backed by the same keyed state store
-# (RocksDB at scale). The legacy applyInPandasWithState form above is
-# kept as the compatibility surface; both are covered by the same
-# batch-aggregate parity test.
-# ---------------------------------------------------------------------------
-try:  # pragma: no cover - import guard exercised at module load
-    # transformWithState needs Spark >= 4.0 AND google.protobuf (the
-    # state-server wire protocol); protobuf ships with standard Spark
-    # deployments but not with every minimal container image.
-    import google.protobuf  # noqa: F401
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    HAS_TWS = True
-except ImportError:  # Spark < 4.0, or no protobuf in the environment
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    HAS_TWS = False
-
-
-def running_balances_v2(flows: DataFrame) -> DataFrame:
-    """``running_balances`` on ``transformWithStateInPandas`` — same
-    input contract (streaming (address, unit, value)), same changelog
-    output. Requires Spark >= 4.0 (``HAS_TWS``).
-
-    The processor class is defined INSIDE this function on purpose:
-    cloudpickle then serializes it by value, so the TWS driver worker
-    (a separate Python process that unpickles the processor to discover
-    state schemas) does not need this package on its PYTHONPATH — a
-    module-level class pickles by reference and crashes that worker
-    with ModuleNotFoundError on any cluster where the package is not
-    installed into the worker environment.
-    """
-    if not HAS_TWS:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires Spark >= 4.0 and "
-            "google.protobuf; use running_balances "
-            "(applyInPandasWithState) instead"
-        )
-
-    class BalanceProcessor(StatefulProcessor):
-        """Per-(address, unit) running balance: state is one ValueState
-        row (balance, n_changes); each trigger folds the group's Arrow
-        batches into it and emits the updated row — identical changelog
-        semantics to ``running_balances``."""
-
-        def init(self, handle: "StatefulProcessorHandle") -> None:
-            self._state = handle.getValueState(
-                "balance", "balance LONG, n_changes LONG"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            delta = 0
-            n = 0
-            for pdf in rows:
-                delta += _exact_value_sum(pdf["value"])
-                n += len(pdf)
-            if self._state.exists():
-                balance, n_changes = self._state.get()
-            else:
-                balance, n_changes = 0, 0
-            balance += delta
-            n_changes += n
-            self._state.update((balance, n_changes))
-            yield pd.DataFrame(
-                [
-                    {
-                        "address": key[0],
-                        "unit": key[1],
-                        "balance": balance,
-                        "n_changes": n_changes,
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return flows.groupBy("address", "unit").transformWithStateInPandas(
-        statefulProcessor=BalanceProcessor(),
-        outputStructType=BALANCE_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -13,9 +13,7 @@ import pytest
 from blockchain_data_engineering_spark import cache
 from blockchain_data_engineering_spark.cache import finalize, scope
 from blockchain_data_engineering_spark.operators import graph as G
-from blockchain_data_engineering_spark.plans import EXTRA_QUERIES, QUERIES
-
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
+from blockchain_data_engineering_spark.plans import QUERIES
 
 
 def _cache_empty(spark) -> bool:
@@ -122,7 +120,7 @@ def test_scope_matches_immediate_results(spark, edges):
 def test_query_without_finalize_is_not_checkpointed(spark, sf_dir, ckpt_counter):
     """A registered query that never finalizes returns its lazy plan
     untouched: no settle, no checkpoint scan in its plan."""
-    df = ALL_QUERIES["pricing_summary"](spark, sf_dir)
+    df = QUERIES["pricing_summary"](spark, sf_dir)
     assert ckpt_counter["n"] == 0
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan, plan
@@ -133,7 +131,7 @@ def test_nested_query_settles_once(spark, sf_dir, settle_counter):
     """sample_split_leakage_free calls pipeline_corpus_dedup: the inner
     query joins the outer scope, so the pair settles once and leaves no
     cache behind."""
-    out = ALL_QUERIES["sample_split_leakage_free"](spark, sf_dir)
+    out = QUERIES["sample_split_leakage_free"](spark, sf_dir)
     assert settle_counter["n"] == 1
     assert _cache_empty(spark)
     assert out.count() > 0

@@ -43,12 +43,15 @@ def _official_green_rows() -> set[str]:
 
 
 def test_gate_is_exactly_50():
-    assert len(plans.QUERIES) == 50
-    assert list(plans.QUERIES) == plans.GATE_ORDER
+    import __spark_entry__
+
+    assert len(set(plans.GATE_ORDER)) == 50
+    assert set(plans.GATE_ORDER) <= set(plans.QUERIES)
+    assert list(__spark_entry__.queries()) == plans.GATE_ORDER
 
 
 def test_every_registered_query_has_or_will_get_an_official_row():
-    registry = set(plans.QUERIES) | set(plans.EXTRA_QUERIES)
+    registry = set(plans.QUERIES)
     covered = _official_green_rows() | set(plans.GATE_ORDER)
     never_gated = registry - covered
     assert not never_gated, (
@@ -73,53 +76,6 @@ def test_front_loaded_queries_precede_already_rowed_ones():
             )
 
 
-def test_witness_map_covers_every_demoted_query_and_reaches_the_gate():
-    """Rotation-witness invariant (r5 judge ask #1), machine-checked.
-
-    ``plans.WITNESSES`` must (a) have exactly the demoted queries as
-    keys, (b) cite only registered queries as witnesses, and (c) let
-    every demoted query REACH the current gate through its witness
-    chain. Reachability is a fixpoint seeded from GATE_ORDER, so a
-    cycle of demoted queries justifying each other never becomes
-    covered — exactly the staleness mode the old prose comments
-    allowed (three r5 citations pointed at witnesses demoted in the
-    same round)."""
-    demoted = set(plans.EXTRA_QUERIES)
-    registry = demoted | set(plans.QUERIES)
-
-    assert set(plans.WITNESSES) == demoted, (
-        "WITNESSES keys must be exactly the demoted queries; "
-        f"missing={sorted(demoted - set(plans.WITNESSES))} "
-        f"stale={sorted(set(plans.WITNESSES) - demoted)}"
-    )
-    unknown = {
-        q: [w for w in ws if w not in registry]
-        for q, ws in plans.WITNESSES.items()
-        if any(w not in registry for w in ws)
-    }
-    assert not unknown, f"witnesses citing unregistered queries: {unknown}"
-    assert all(plans.WITNESSES.values()), (
-        "every demoted query needs at least one witness: "
-        f"{[q for q, ws in plans.WITNESSES.items() if not ws]}"
-    )
-    self_cited = [q for q, ws in plans.WITNESSES.items() if q in ws]
-    assert not self_cited, f"queries citing themselves as witness: {self_cited}"
-
-    covered = set(plans.GATE_ORDER)
-    changed = True
-    while changed:
-        changed = False
-        for q, ws in plans.WITNESSES.items():
-            if q not in covered and any(w in covered for w in ws):
-                covered.add(q)
-                changed = True
-    unreachable = demoted - covered
-    assert not unreachable, (
-        "demoted queries whose witness chains never reach the current "
-        f"gate (stale/cyclic citations): {sorted(unreachable)}"
-    )
-
-
 def test_verification_doc_counts_match_registry():
     """r7 judge ask #3: prose query counts rot (VERIFICATION.md said
     143 while the registry held 156). The stated counts in
@@ -128,9 +84,9 @@ def test_verification_doc_counts_match_registry():
     import os
     import re
 
-    n_gate = len(plans.QUERIES)
-    n_extra = len(plans.EXTRA_QUERIES)
-    n_total = n_gate + n_extra
+    n_total = len(plans.QUERIES)
+    n_gate = len(plans.GATE_ORDER)
+    n_extra = n_total - n_gate
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
     with open(os.path.join(root, "docs", "VERIFICATION.md")) as fh:
@@ -162,6 +118,36 @@ def test_verification_doc_counts_match_registry():
         f"README.md says {m3.groups()}, registry is "
         f"({n_gate}, {n_extra}, {n_total})"
     )
+
+
+def test_operators_doc_names_only_registered_queries():
+    """docs/OPERATORS.md maps each operator to the queries that
+    exercise it; a renamed or deleted query must not linger there.
+    Every backticked name in a table's ``Query`` column must be a
+    registered query (file paths and ``@decorator`` mentions in the
+    notes of query-less rows are not names)."""
+    import re
+
+    with open(os.path.join(REPO_ROOT, "docs", "OPERATORS.md")) as fh:
+        doc = fh.read()
+    named: set[str] = set()
+    col = None
+    for line in doc.splitlines():
+        if not line.startswith("|"):
+            col = None
+            continue
+        cells = [c.strip() for c in re.split(r"(?<!\\)\|", line.strip("|\n"))]
+        if "Query" in cells:
+            col = cells.index("Query")
+        elif col is not None and not set(line) <= set("|-: "):
+            named |= {
+                t
+                for t in re.findall(r"`([^`]+)`", cells[col])
+                if "." not in t and "@" not in t
+            }
+    assert len(named) > 100, "OPERATORS.md Query columns not found (format changed?)"
+    unknown = sorted(named - set(plans.QUERIES))
+    assert not unknown, f"OPERATORS.md names unregistered queries: {unknown}"
 
 
 def test_every_gate_query_has_an_oracle_or_documented_exemption():

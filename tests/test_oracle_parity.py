@@ -14,17 +14,7 @@ import pandas as pd
 import pytest
 
 from blockchain_data_engineering_spark import cache
-from blockchain_data_engineering_spark.plans import (
-    EXTRA_ORACLES,
-    EXTRA_QUERIES,
-    ORACLES,
-    QUERIES,
-)
-
-# Gate queries AND demoted near-duplicates (EXTRA_*) are held to the
-# same DuckDB-parity bar; only gate queries get driver rows.
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
-ALL_ORACLES = {**ORACLES, **EXTRA_ORACLES}
+from blockchain_data_engineering_spark.plans import ORACLES, QUERIES
 
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -57,14 +47,17 @@ def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-@pytest.mark.parametrize("name", sorted(ALL_QUERIES))
+# Every registered query, in the driver gate (``GATE_ORDER``) or not,
+# is held to the same DuckDB-parity bar; only gate queries get driver
+# rows.
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, duck, sf_dir, monkeypatch):
     settles = []
     real_settle = cache._settle
     monkeypatch.setattr(
         cache, "_settle", lambda *a: settles.append(1) or real_settle(*a)
     )
-    spark_df = ALL_QUERIES[name](spark, sf_dir).toPandas()
+    spark_df = QUERIES[name](spark, sf_dir).toPandas()
     # cache-lifetime convention: no query may leak a DataFrame cache
     # past its own execution (the sweep that catches the r2 kcore /
     # r3 graph_neighborhood class of defect)
@@ -74,11 +67,11 @@ def test_query_matches_oracle(name, spark, duck, sf_dir, monkeypatch):
     assert not leaked, f"{name}: leaked df.cache()/persist() past the call"
     # the registry's scope owns the caches: one settle per query at most
     assert len(settles) <= 1, f"{name}: settled {len(settles)} times"
-    if name not in ALL_ORACLES:
+    if name not in ORACLES:
         # rows-only check (non-SQL-expressible op)
         assert spark_df is not None
         return
-    duck_df = duck.execute(ALL_ORACLES[name]).fetchdf()
+    duck_df = duck.execute(ORACLES[name]).fetchdf()
 
     assert sorted(spark_df.columns) == sorted(duck_df.columns), (
         f"{name}: column mismatch spark={sorted(spark_df.columns)} "

@@ -10,7 +10,7 @@ import re
 from contextlib import redirect_stdout
 
 from blockchain_data_engineering_spark.cache import scope
-from blockchain_data_engineering_spark.plans import EXTRA_QUERIES, QUERIES
+from blockchain_data_engineering_spark.plans import QUERIES
 from blockchain_data_engineering_spark.session import executed_plans
 
 
@@ -20,7 +20,7 @@ def _plan(spark, sf_dir, name: str) -> str:
     checkpoint truncating the shape to a flat scan; the scope releases
     the caches on exit), followed by the executed plans of whatever
     the construction ran — the round checkpoints of iterative loops."""
-    fn = QUERIES.get(name) or EXTRA_QUERIES[name]
+    fn = QUERIES[name]
     buf = io.StringIO()
     with executed_plans(spark) as ran, scope(), redirect_stdout(buf):
         fn(spark, sf_dir).explain("formatted")
@@ -125,7 +125,18 @@ def test_no_python_udfs_on_relational_paths(spark, sf_dir):
                     # × the DISTINCT declared languages, a ≤ k-row
                     # broadcast dim by construction (the per-item
                     # class-score expansion every k-class argmax needs)
-                    "ml_ece_top_label"}
+                    "ml_ece_top_label",
+                    # the same zero_fill_spine as flagship_volume_stack:
+                    # the broadcast day spine is exploded from the 1-row
+                    # min/max aggregate (one row per day in range)
+                    "events_spine_zero_fill",
+                    # threshold read-off: the broadcast side is the
+                    # literal 3-row quantile list × the 1-row count
+                    # aggregate; the histogram streams past it
+                    "events_histogram_quantiles",
+                    # the two 1-row total-token aggregates (S, T) cross-
+                    # joined onto the 256-row bucket ratio table
+                    "text_dsir_weights"}
     for name in sorted(QUERIES):
         plan = _plan(spark, sf_dir, name)
         if name not in allowed_python:

@@ -827,12 +827,9 @@ def test_target_encoding_is_leakage_free_by_construction(spark, sf_dir):
 
     import duckdb as _duck
 
-    from blockchain_data_engineering_spark.plans import (
-        EXTRA_QUERIES,
-        QUERIES,
-    )
+    from blockchain_data_engineering_spark.plans import QUERIES
 
-    fn = {**QUERIES, **EXTRA_QUERIES}["ml_target_encoding"]
+    fn = QUERIES["ml_target_encoding"]
     got = {
         (r["cat"], r["fold"]): r
         for r in fn(spark, sf_dir).collect()

@@ -344,13 +344,10 @@ def test_heavy_hitter_merge_callers_materialize_inputs():
     over the registry source so a new caller can't quietly regress."""
     import inspect
 
-    from blockchain_data_engineering_spark.plans import (
-        EXTRA_QUERIES,
-        QUERIES,
-    )
+    from blockchain_data_engineering_spark.plans import QUERIES
 
     offenders = []
-    for name, fn in {**QUERIES, **EXTRA_QUERIES}.items():
+    for name, fn in QUERIES.items():
         src = inspect.getsource(fn)
         if "heavy_hitters_merge(" in src or "heavy_hitters_combine(" in src:
             if ".persist()" not in src or "finalize(" not in src:

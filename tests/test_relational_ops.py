@@ -646,17 +646,7 @@ def test_ohlc_bars_tiebreak_deterministic_under_duplicate_ts(
     import duckdb
 
     from blockchain_data_engineering_spark.catalog import load_table
-    from blockchain_data_engineering_spark.plans import (
-        EXTRA_ORACLES,
-        EXTRA_QUERIES,
-        ORACLES,
-        QUERIES,
-    )
-
-    # the query rotates between gate and parity tiers across rounds —
-    # the fixture check holds either way
-    ALL_Q = {**QUERIES, **EXTRA_QUERIES}
-    ALL_O = {**ORACLES, **EXTRA_ORACLES}
+    from blockchain_data_engineering_spark.plans import ORACLES, QUERIES
 
     base = dt.datetime(2024, 3, 1, 9, 30, 0)
     rows = [
@@ -681,7 +671,7 @@ def test_ohlc_bars_tiebreak_deterministic_under_duplicate_ts(
 
     got = {
         (r.event_type, r.bar_ts): (r.open_q, r.close_q, r.n)
-        for r in ALL_Q["events_ohlc_bars"](spark, str(fixture_dir)).collect()
+        for r in QUERIES["events_ohlc_bars"](spark, str(fixture_dir)).collect()
     }
     bar1 = (
         "trade", dt.datetime(2024, 3, 1, 9, 0, 0))
@@ -698,7 +688,7 @@ def test_ohlc_bars_tiebreak_deterministic_under_duplicate_ts(
     )
     oracle = {
         (r[0], r[1]): (r[2], r[5], r[7])
-        for r in con.execute(ALL_O["events_ohlc_bars"]).fetchall()
+        for r in con.execute(ORACLES["events_ohlc_bars"]).fetchall()
     }
     con.close()
     assert oracle == got

@@ -451,91 +451,6 @@ def test_kafka_replay_drives_domain_pipeline(spark, chain, tmp_path):
         assert streamed[k] == pytest.approx(v, rel=1e-12), k
 
 
-def test_stateful_running_balances_v2_matches_v1(spark, tmp_path):
-    """The transformWithStateInPandas twin produces the same final
-    balances as the applyInPandasWithState operator and the plain batch
-    aggregate — one semantics, two stateful APIs."""
-    import json
-
-    from blockchain_data_engineering_spark.streaming.stateful import (
-        HAS_TWS,
-        running_balances_v2,
-    )
-
-    if not HAS_TWS:
-        import pytest
-
-        # the guard must fail loudly, not produce a broken stream
-        with pytest.raises(NotImplementedError):
-            running_balances_v2(
-                spark.readStream.format("rate").load()
-            )
-        pytest.skip(
-            "no transformWithStateInPandas here (needs Spark >= 4.0 "
-            "+ google.protobuf); guard verified"
-        )
-
-    rows = [
-        {"address": f"a{i % 3}", "unit": "lovelace" if i % 2 else "tokX",
-         "value": (i - 10) * 7}
-        for i in range(40)
-    ]
-    src = tmp_path / "flows_v2"
-    src.mkdir()
-    for fi in range(4):
-        with open(src / f"f{fi}.ndjson", "w") as f:
-            for r in rows[fi * 10 : (fi + 1) * 10]:
-                f.write(json.dumps(r) + "\n")
-
-    stream = spark.readStream.schema(
-        "address STRING, unit STRING, value LONG"
-    ).option("maxFilesPerTrigger", 1).json(str(src))
-
-    # transformWithState requires the RocksDB state store provider
-    # (the default HDFS-backed store is not supported for v2 state)
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    q = (
-        running_balances_v2(stream)
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "out_v2"))
-        .option("checkpointLocation", str(tmp_path / "ckpt_v2"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-    finally:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", prev
-        )
-
-    out = spark.read.parquet(str(tmp_path / "out_v2"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("address", "unit").orderBy(F.col("n_changes").desc())
-    final = (
-        out.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .collect()
-    )
-    got = {(r.address, r.unit): (r.balance, r.n_changes) for r in final}
-
-    want: dict = {}
-    for r in rows:
-        k = (r["address"], r["unit"])
-        b, n = want.get(k, (0, 0))
-        want[k] = (b + r["value"], n + 1)
-    assert got == want
-
-
 def test_live_tailing_resolves_cross_batch_spends(spark, chain, tmp_path):
     """Live-tailing shape: the UTxO store starts EMPTY and is grown by
     the pipeline's own utxo_store_append sink, with the history side

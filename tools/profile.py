@@ -24,7 +24,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # otherwise shadow the stdlib ``profile`` module that pyspark imports
 sys.path[0] = ROOT
 
-from blockchain_data_engineering_spark.plans import EXTRA_QUERIES, QUERIES  # noqa: E402
+from blockchain_data_engineering_spark.plans import QUERIES  # noqa: E402
 from blockchain_data_engineering_spark.session import (  # noqa: E402
     DEFAULT_SF_DIR,
     executed_plans,
@@ -45,9 +45,8 @@ def main() -> None:
     spark = get_spark(app_name="bde-profile")
     spark.range(1).count()  # JVM warmup outside any timing
     sc = spark.sparkContext
-    allq = {**QUERIES, **EXTRA_QUERIES}
     for name in args.queries:
-        fn = allq[name]
+        fn = QUERIES[name]
         sc.setJobDescription(f"profile:{name}:plan")
         with executed_plans(spark) as ran:
             _sink(spark, fn)
