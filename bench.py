@@ -55,7 +55,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from blockchain_data_engineering_spark.plans import GATE_ORDER, QUERIES
-from blockchain_data_engineering_spark.session import get_spark
+from blockchain_data_engineering_spark.session import codegen_compiles, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -198,6 +198,7 @@ def main() -> None:
     timings: dict[str, float] = {}  # warm-min per query (what `value` sums)
     all_runs: dict[str, list[float]] = {}  # rounded runs, for the detail file
     raw_runs: dict[str, list[float]] = {}  # unrounded, for the spread flag
+    compiles: dict[str, list[int]] = {}  # generated classes compiled per run
     loads: dict[str, list[float]] = {}  # [1m-load at query start, at end]
     load_start = _load_1m()
     load_samples = [load_start]
@@ -242,6 +243,7 @@ def main() -> None:
         # reference baseline reports.
         dt = float("nan")
         runs: list[float] = []
+        compiles[name] = []
         q_load0 = _load_1m()
         try:
             # min of 2, plus up to two more runs while the samples
@@ -260,10 +262,12 @@ def main() -> None:
                 or (len(runs) < 4 and max(runs) > 1.3 * min(runs))
                 or (len(runs) < 6 and max(runs) > 2.0 * min(runs))
             ):
+                c0 = codegen_compiles(spark)[0]
                 t0 = time.perf_counter()
                 df = QUERIES[name](spark, SF_DIR)
                 df.write.format("noop").mode("overwrite").save()
                 runs.append(time.perf_counter() - t0)
+                compiles[name].append(codegen_compiles(spark)[0] - c0)
                 # queries persist intermediates (shingle sets,
                 # signatures, edge lists) and can't unpersist them
                 # before returning; drop them so later runs aren't
@@ -340,6 +344,11 @@ def main() -> None:
                 # variance, a shifted min says plan change)
                 "queries": timings,
                 "runs": all_runs,
+                # generated classes each run compiled; a warm run reads
+                # 0, so a nonzero later entry means a recompile: classes
+                # evicted from the codegen cache, or generated code that
+                # differs from run to run
+                "compiles": compiles,
                 # [1-min loadavg at query start, at end] — sampled when
                 # THIS process is between queries, so it reads co-tenant
                 # pressure, not our own executors

@@ -5,7 +5,7 @@ as a pure DataFrame plan.
 Reference semantics (replicated exactly):
 - consumed = per (address, unit) sum of resolved input quantities
 - produced = per (address, unit) sum of output value-map quantities
-- net      = produced − consumed via full-outer align, missing side 0
+- net      = produced − consumed, a side missing from the tx counting 0
 - rows with net == 0 are dropped (e.g. change returning to the sender)
 
 Quantities are integers end-to-end and DECIMAL(38,0) by default
@@ -28,22 +28,21 @@ def transacted(input_units: DataFrame, output_units: DataFrame) -> DataFrame:
     """(tx_hash, address, unit, value) with value = produced − consumed ≠ 0.
 
     Both inputs are flat (tx_hash, address, unit, quantity) frames from
-    ``domain.utxo.input_units`` / ``domain.blocks.output_units``. Two
-    partial aggregations (map-side combine) then one full-outer join on
-    the composite key — both sides arrive pre-partitioned on the same
-    keys, so AQE elides the second exchange.
+    ``domain.utxo.input_units`` / ``domain.blocks.output_units``. The
+    inputs, quantity negated, and the outputs are unioned and summed per
+    composite key in one aggregation: a partial aggregate (map-side
+    combine) over the union, one exchange, one final aggregate; no join
+    and no sort.
+
+    A group whose quantities are all NULL sums to NULL and is dropped by
+    the ``value != 0`` filter, as a coalesced 0 − 0 would be.
     """
     keys = ["tx_hash", "address", "unit"]
-    consumed = input_units.groupBy(*keys).agg(F.sum("quantity").alias("consumed"))
-    produced = output_units.groupBy(*keys).agg(F.sum("quantity").alias("produced"))
+    consumed = input_units.select(*keys, (-F.col("quantity")).alias("quantity"))
+    produced = output_units.select(*keys, "quantity")
     return (
-        consumed.join(produced, keys, "full_outer")
-        .select(
-            *keys,
-            (
-                F.coalesce(F.col("produced"), F.lit(0))
-                - F.coalesce(F.col("consumed"), F.lit(0))
-            ).alias("value"),
-        )
+        consumed.unionByName(produced)
+        .groupBy(*keys)
+        .agg(F.sum("quantity").alias("value"))
         .where(F.col("value") != 0)
     )

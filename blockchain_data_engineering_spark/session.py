@@ -13,6 +13,11 @@ Defaults chosen for correctness at small SF and sanity at cluster scale:
   the reference's row-at-a-time pickle path (SURVEY §4.3 H2).
 - Session timezone pinned to UTC so event-time semantics are stable and
   oracle-comparable.
+- Spark's cache of compiled generated classes sized to the engine's
+  working set (``CODEGEN_CACHE_ENTRIES``), so a steady-state operation
+  reuses its classes instead of recompiling them with Janino; a static
+  conf, fixed when the session starts. ``codegen_compiles`` reads the
+  JVM-wide compile count, so a warm run can be checked as warm.
 """
 
 from __future__ import annotations
@@ -24,6 +29,17 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+# Spark keeps compiled whole-stage and expression classes in an LRU of
+# ``spark.sql.codegen.cache.maxEntries`` classes, 100 by default. One
+# perfbench ``batch_mix`` pass (chain backfill + four gate queries)
+# compiles ~184 distinct classes and one pass of the 50-query gate
+# ~1,270 (sf0.001 to sf0.1), so at 100 every steady-state operation
+# recompiled its code: 1,640 classes on a second gate pass at sf0.01.
+# 4096 holds the gate's working set with 3x headroom (docs/SCALE.md,
+# "Generated-code cache").
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def local_cpus() -> int:
@@ -49,12 +65,24 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, milliseconds spent compiling) by Janino in this
+    JVM since it started, driver and local executor threads alike. A
+    generated class found in the codegen cache is not counted; take the
+    difference of two readings to count one run's compiles."""
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(compiles.getCount()), nanos / 1e6
 
 
 @contextmanager
@@ -93,7 +121,9 @@ def configure_for_session(spark: SparkSession) -> SparkSession:
 
     The verify driver hands us its own SparkSession; static configs
     (master, memory) are already fixed, but SQL confs are runtime-settable
-    and matter for plan quality.
+    and matter for plan quality. ``spark.sql.codegen.cache.maxEntries``
+    is static too, so such a session keeps its own codegen cache size
+    (``CODEGEN_CACHE_ENTRIES`` applies only to ``get_spark`` sessions).
     """
     conf = {
         "spark.sql.adaptive.enabled": "true",

@@ -661,6 +661,16 @@ def test_ohlc_bars_is_one_hash_aggregate_no_window(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
 
 
+def test_netflow_is_one_shuffle_aggregate_no_join(spark, sf_dir):
+    """Net flow sums the negated inputs and the outputs in one
+    aggregation over their union (domain/netflow.transacted): one
+    exchange, no join, no sort."""
+    plan = _plan(spark, sf_dir, "netflow_decimal")
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
+    assert "Join" not in plan, plan
+    assert not re.search(r"\(\d+\) Sort\b", plan), plan
+
+
 def test_target_encoding_windows_only_the_cell_table(spark, sf_dir):
     """ml_target_encoding's leave-fold-out sums come from a window over
     the (category, fold) CELL table (|cats|·K rows), never the fact

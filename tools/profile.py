@@ -7,7 +7,9 @@ DataFrame and writes it to a noop sink once, saving the formatted
 physical plan of every SQL execution that ran — round checkpoints, the
 settle, the sink — to ``plans/<query>.txt``. It then times ``N`` more
 build+sink runs, each under its own job description, and prints the
-samples and their min. The input scale comes from
+samples, their min and the generated classes each run compiled with
+the Janino time they took (``0/0ms`` once a query's code is in the
+codegen cache). The input scale comes from
 ``SPARK_GRAFT_SF_DIR`` (default sf0.1), the core count from
 ``SPARK_GRAFT_CPUS``.
 """
@@ -27,6 +29,7 @@ sys.path[0] = ROOT
 from blockchain_data_engineering_spark.plans import QUERIES  # noqa: E402
 from blockchain_data_engineering_spark.session import (  # noqa: E402
     DEFAULT_SF_DIR,
+    codegen_compiles,
     executed_plans,
     get_spark,
 )
@@ -48,25 +51,31 @@ def main() -> None:
     for name in args.queries:
         fn = QUERIES[name]
         sc.setJobDescription(f"profile:{name}:plan")
+        cold = codegen_compiles(spark)[0]
         with executed_plans(spark) as ran:
             _sink(spark, fn)
+        cold = codegen_compiles(spark)[0] - cold
         path = os.path.join(ROOT, "plans", f"{name}.txt")
         with open(path, "w") as fh:
             for i, plan in enumerate(ran, 1):
                 # scan locations name the input dir, not this host's path
                 plan = plan.replace(DEFAULT_SF_DIR.rstrip("/"), "$SPARK_GRAFT_SF_DIR")
                 fh.write(f"== execution {i} of {len(ran)} ==\n{plan}\n")
-        samples = []
+        samples, compiles = [], []
         for r in range(args.runs):
             sc.setJobDescription(f"profile:{name}:run{r}")
+            n0, ms0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             _sink(spark, fn)
             samples.append(time.perf_counter() - t0)
+            n1, ms1 = codegen_compiles(spark)
+            compiles.append(f"{n1 - n0}/{ms1 - ms0:.0f}ms")
         sc.setJobDescription(None)
         print(
-            f"{name}: plans={path} ({len(ran)} executions) "
+            f"{name}: plans={path} ({len(ran)} executions, {cold} compiles) "
             f"runs={[round(s, 3) for s in samples]} "
             f"min={min(samples, default=float('nan')):.3f} "
+            f"compiles=[{', '.join(compiles)}] "
             f"load1m={os.getloadavg()[0]:.1f}",
             flush=True,
         )
