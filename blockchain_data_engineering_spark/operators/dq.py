@@ -171,7 +171,10 @@ def gated_upsert(
     streaming/sketches.py store pattern; plain append would double the
     quarantine on every checkpoint replay).
     """
-    from blockchain_data_engineering_spark.sources.io import upsert_parquet
+    from blockchain_data_engineering_spark.sources.io import (
+        upsert_parquet,
+        write_partitioned,
+    )
 
     suite = expectation_suite(batch, checks, unique_keys)
     failing = [
@@ -181,15 +184,12 @@ def gated_upsert(
     if not failing:
         upsert_parquet(batch, path, key_cols)
         return True
-    (
+    write_partitioned(
         batch.withColumn(
             "__failed_checks", F.lit(",".join(sorted(failing)))
-        )
-        .withColumn("__batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(quarantine_path)
+        ).withColumn("__batch_id", F.lit(int(batch_id))),
+        quarantine_path,
+        ["__batch_id"],
     )
     return False
 

@@ -19,6 +19,7 @@ from blockchain_data_engineering_spark.operators import dedup as D
 from blockchain_data_engineering_spark.operators import similarity as SIM
 from blockchain_data_engineering_spark.plans.parity import quanta_sql
 from blockchain_data_engineering_spark.plans.registry import query
+from blockchain_data_engineering_spark.sources.io import _hadoop_fs
 
 N_HASHES = 9
 BAND_SIZE = 3
@@ -38,20 +39,15 @@ SHINGLE_K = 5
 DEDUP_SEMIJOIN_MIN_BYTES = 1 << 30  # ~1 GiB of parquet ≈ 10M+ docs
 
 
-def _table_bytes(sf_dir: str, name: str) -> int:
-    import os
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):  # partitioned table root at cluster scale
-        return sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _dirs, files in os.walk(path)
-            for f in files
-        )
-    try:
-        return os.path.getsize(path)
-    except OSError:
+def _table_bytes(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """On-disk bytes of table ``name`` (a file or a partitioned root),
+    sized through the Hadoop FileSystem of ``sf_dir``'s scheme so an
+    HDFS/S3A corpus is measured too; 0 when the table is missing."""
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    fs, _HPath, hpath = _hadoop_fs(spark, path)
+    if not fs.exists(hpath):
         return 0
+    return fs.getContentSummary(hpath).getLength()
 
 
 def _candidate_prune(
@@ -72,7 +68,7 @@ def _candidate_prune(
         )
     except Exception:
         limit = DEDUP_SEMIJOIN_MIN_BYTES
-    if _table_bytes(sf_dir, "documents") < limit:
+    if _table_bytes(spark, sf_dir, "documents") < limit:
         return sh
     ids = (
         cand.select(F.col("id_a").alias("doc_id"))

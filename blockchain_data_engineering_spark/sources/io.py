@@ -17,6 +17,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from blockchain_data_engineering_spark.domain.schema import BLOCK_SCHEMA
+from blockchain_data_engineering_spark.operators.relational import (
+    dedup_keep_last,
+)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -57,6 +60,111 @@ def _read_text_file(fs, hpath) -> str:
         return bytes(stream.readAllBytes()).decode("utf-8")
     finally:
         stream.close()
+
+
+def _n_parquet(fs, hpath) -> int:
+    """Number of parquet data files directly under ``hpath``."""
+    return sum(1 for n in _child_names(fs, hpath) if n.endswith(".parquet"))
+
+
+def _swap_dir(
+    fs,
+    HPath,
+    live: str,
+    write,
+    fn: str,
+    staged: str | None = None,
+    aside: str | None = None,
+    marker: str | None = None,
+) -> None:
+    """The one table-rewrite protocol of the parquet writers: replace
+    the directory ``live`` with what ``write(staged)`` produces, or
+    remove it when ``write`` is None.
+
+    Durability contract. ``write`` fills a fresh ``staged`` directory
+    (default ``<live>__tmp``); then ``live`` is renamed to ``aside``
+    (default ``<live>__old``), ``staged`` is renamed to ``live``, and
+    ``aside`` is deleted. A failed swap rename (Hadoop ``rename``
+    reports failure by returning false) rolls back to the live copy
+    and raises :class:`IOError`. A crash between the two renames
+    leaves the only copy at ``aside``; :func:`_recover`, which every
+    writer runs before it probes the table, restores it. No step
+    destroys the last copy of the data. ``marker`` (the
+    ``_bucketing.json`` text) is written into ``staged`` before the
+    swap, so no reader sees a bucketed table without its layout.
+
+    Every call goes through the Hadoop ``FileSystem`` of the path's
+    scheme, so it runs unchanged on ``file://``, HDFS and S3A — but the
+    swap is atomic only where directory rename is atomic (local FS,
+    HDFS). On S3A a rename is a non-atomic copy+delete, and a crash
+    mid-rename can leave a split state the recovery cannot detect:
+    there use the transactional drop-ins (Delta/Iceberg ``MERGE INTO``,
+    ``DELETE WHERE``, ``OPTIMIZE``), call sites unchanged. One writer
+    per table.
+    """
+    staged = staged or live + "__tmp"
+    hlive, hstaged = HPath(live), HPath(staged)
+    hold = HPath(aside or live + "__old")
+    if write is not None:
+        fs.delete(hstaged, True)
+        write(staged)
+        if marker is not None:
+            _write_text_file(fs, HPath(staged + "/_bucketing.json"), marker)
+    fs.delete(hold, True)
+    if fs.exists(hlive) and not fs.rename(hlive, hold):
+        raise IOError(f"{fn}: could not rename {live} aside")
+    if write is not None and not fs.rename(hstaged, hlive):
+        fs.rename(hold, hlive)  # roll back: restore the live table
+        raise IOError(f"{fn}: swap rename failed for {live}")
+    fs.delete(hold, True)
+
+
+def _recover(fs, HPath, live: str, fn: str, aside: str | None = None) -> None:
+    """Finish a :func:`_swap_dir` a crash interrupted. With ``live``
+    missing, ``aside`` (default ``<live>__old``) is the only copy and is
+    restored — never mistaken for a first write. With ``live`` present
+    the swap completed and ``aside`` is stale, so it is dropped."""
+    hlive, hold = HPath(live), HPath(aside or live + "__old")
+    if not fs.exists(hold):
+        return
+    if fs.exists(hlive):
+        fs.delete(hold, True)
+    elif not fs.rename(hold, hlive):
+        raise IOError(f"{fn}: recovery rename failed for {live}")
+
+
+def _require_keys(df: DataFrame, keys: Sequence[str], fn: str) -> None:
+    """Refuse a batch that lacks a key column — on the first write
+    too, not only on merges."""
+    missing = [k for k in keys if k not in df.columns]
+    if missing:
+        raise ValueError(
+            f"{fn}: key columns {missing} missing from the incoming batch"
+        )
+
+
+def _newest_per_key(
+    batch: DataFrame,
+    keys: Sequence[str],
+    order_cols: Sequence[Column] | None,
+    existing: DataFrame | None = None,
+    merge_schema: bool = False,
+) -> DataFrame:
+    """``ON CONFLICT (pk) DO UPDATE`` as a frame: one row per key, where
+    the batch beats ``existing`` on a shared key and duplicate keys
+    within the batch resolve by ``order_cols`` (first wins; unspecified
+    without it). ``unionByName`` makes column reorder a non-event, and
+    ``merge_schema`` NULL-fills whichever side lacks a column."""
+    order = list(order_cols or [])
+    if existing is None:
+        return dedup_keep_last(batch, keys, order or [F.lit(1)])
+    merged = batch.withColumn("__new", F.lit(1)).unionByName(
+        existing.withColumn("__new", F.lit(0)),
+        allowMissingColumns=merge_schema,
+    )
+    return dedup_keep_last(
+        merged, keys, [F.col("__new").desc(), *order]
+    ).drop("__new")
 
 
 def read_ndjson_blocks(spark: SparkSession, path: str) -> DataFrame:
@@ -253,12 +361,7 @@ def upsert_jdbc(
     props = dict(properties or {})
     staging = staging_table or f"{table}_staging"
     keys = list(key_cols)
-    missing = [k for k in keys if k not in df.columns]
-    if missing:
-        raise ValueError(
-            f"upsert_jdbc: key columns {missing} missing from the "
-            "incoming batch"
-        )
+    _require_keys(df, keys, "upsert_jdbc")
     jvm = df.sparkSession._jvm
     if "driver" in props:
         jvm.Class.forName(props["driver"])
@@ -397,83 +500,32 @@ def upsert_parquet(
     missing side in either direction — the merge rewrites the whole
     table, so the evolved schema is immediately homogeneous.
 
-    Durability: the merged table is written to ``<path>__tmp`` and then
-    swapped in with two directory renames (old table preserved at
-    ``<path>__old`` until the swap completes). A crash can leave the
-    table under ``__old`` but never destroys data. All filesystem
-    operations go through the Hadoop ``FileSystem`` API resolved from
-    the path's scheme, so the probe/swap work identically on
-    ``file://``, HDFS, and S3A — but NOTE the swap's atomicity claim
-    holds only where directory rename is atomic (local FS, HDFS): on
-    S3A a "rename" is a non-atomic copy+delete, so a crash mid-rename
-    can leave partial dual-location state the ``__old`` recovery cannot
-    detect. On object stores use the transactional drop-in
-    (Delta/Iceberg ``MERGE INTO``), call-site unchanged. The merge also
-    rewrites the whole table per batch (read-merge-overwrite) — see
+    Every call rewrites the whole table (read-merge-overwrite) through
+    :func:`_swap_dir`, which states the durability contract; see
     :func:`upsert_parquet_bucketed` for the partition-pruned variant.
     """
     spark = df.sparkSession
     keys = list(key_cols)
-    missing = [k for k in keys if k not in df.columns]
-    if missing:  # catch it on the FIRST write too, not just merges
-        raise ValueError(
-            f"upsert_parquet: key columns {missing} missing from the "
-            "incoming batch"
-        )
+    _require_keys(df, keys, "upsert_parquet")
     base = path.rstrip("/")
     fs, HPath, hpath = _hadoop_fs(spark, base)
-    hold = HPath(base + "__old")
-    # Crash recovery FIRST: a crash between the two swap renames
-    # leaves the only copy of the table at <path>__old with <path>
-    # missing. Blindly treating that as "first write" and clearing
-    # __old would destroy the preserved table — restore it instead.
-    if not fs.exists(hpath) and fs.exists(hold):
-        if not fs.rename(hold, hpath):
-            raise IOError(f"upsert_parquet: recovery rename failed for {path}")
-    exists = any(n.endswith(".parquet") for n in _child_names(fs, hpath))
-    from pyspark.sql import Window
-
-    if exists:
+    _recover(fs, HPath, base, "upsert_parquet")
+    existing = None
+    if _n_parquet(fs, hpath):
         existing = spark.read.parquet(path)
         _check_upsert_schema(
             df.columns, existing.columns, keys, merge_schema, "upsert_parquet"
         )
-        # allowMissingColumns covers BOTH evolution directions (columns
-        # only the batch has, columns only the table has — NULL-filled)
-        # and unionByName itself makes column REORDER a non-event; the
-        # merge rewrites the whole table, so the evolved schema is
-        # immediately homogeneous across every file
-        merged = df.withColumn("__new", F.lit(1)).unionByName(
-            existing.withColumn("__new", F.lit(0)),
-            allowMissingColumns=merge_schema,
-        )
-        w = Window.partitionBy(*keys).orderBy(
-            F.col("__new").desc(), *list(order_cols or [])
-        )
-    else:
-        # first write resolves intra-batch duplicate keys by the SAME
-        # rule as the merge path — otherwise a table-creating batch
-        # could start life with duplicate keys the docstring's ON
-        # CONFLICT contract forbids (and upsert_delta dedups)
-        merged = df.withColumn("__new", F.lit(1))
-        w = Window.partitionBy(*keys).orderBy(*(list(order_cols or []) or [F.lit(1)]))
-    result = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "__new")
+    # a table-creating batch resolves its duplicate keys by the same
+    # rule, so the table never holds a duplicate key
+    result = _newest_per_key(df, keys, order_cols, existing, merge_schema)
+    _swap_dir(  # the staged write reads <path> lazily
+        fs,
+        HPath,
+        base,
+        lambda p: result.write.mode("overwrite").parquet(p),
+        "upsert_parquet",
     )
-    tmp = base + "__tmp"
-    htmp = HPath(tmp)
-    result.write.mode("overwrite").parquet(tmp)  # reads <path> lazily here
-    fs.delete(hold, True)
-    if exists:
-        if not fs.rename(hpath, hold):
-            raise IOError(f"upsert_parquet: could not rename {path} aside")
-    if not fs.rename(htmp, hpath):
-        if exists:
-            fs.rename(hold, hpath)  # roll back: restore the live table
-        raise IOError(f"upsert_parquet: swap rename failed for {path}")
-    fs.delete(hold, True)
 
 
 def bucketed_table_exists(spark: SparkSession, path: str) -> bool:
@@ -520,56 +572,35 @@ def upsert_parquet_bucketed(
 
     Schema evolution: a column-set difference between the batch and
     the table raises unless ``merge_schema=True``. With it, an
-    evolution batch pays a FULL-table rewrite (every bucket, via the
-    staged whole-directory swap) so file schemas stay homogeneous —
+    evolution batch pays a FULL-table rewrite (every bucket, through
+    :func:`_swap_dir`) so file schemas stay homogeneous —
     partition pruning, the touched-bucket merge, and plain
     ``spark.read.parquet`` all keep working without per-read
     ``mergeSchema`` options; steady-state batches remain O(touched).
     Column reorder alone never triggers the rewrite (unionByName).
 
-    Filesystem portability: the existence probe, the
-    ``_bucketing.json`` layout marker, and the stage cleanup all go
-    through the Hadoop ``FileSystem`` API resolved from ``path``'s
-    scheme, so the merge behaves identically on ``file://``, HDFS, and
-    S3A (no local-``os`` probe that would misreport an object-store
-    table as missing and overwrite it). The data swap itself is
-    Spark's dynamic partition overwrite — per-partition-directory
-    replacement, no table-level rename — so it carries no extra
-    atomicity assumption beyond what the committer provides.
+    Every filesystem call goes through the Hadoop ``FileSystem`` of
+    ``path``'s scheme. A steady-state batch lands through
+    :func:`write_partitioned`: per-partition-directory replacement with
+    a writer-scoped overwrite mode, so it neither renames the table nor
+    touches the session conf another stream may share.
     """
     import json
 
     spark = df.sparkSession
     keys = list(key_cols)
-    missing = [k for k in keys if k not in df.columns]
-    if missing:  # catch it on the FIRST write too, not just merges
-        raise ValueError(
-            f"upsert_parquet_bucketed: key columns {missing} missing "
-            "from the incoming batch"
-        )
-    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast(
-        "int"
-    )
-
-    incoming = df.withColumn("__bucket", bucket)
+    _require_keys(df, keys, "upsert_parquet_bucketed")
     # empty batches are routine in a streaming foreachBatch sink: with
     # no rows there is nothing to merge, and writing a data-less
     # partitioned dir (only _SUCCESS) would leave a table
     # spark.read.parquet cannot infer a schema from
     if df.isEmpty():
         return
+    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets))
+    incoming = df.withColumn("__bucket", bucket.cast("int"))
     base = path.rstrip("/")
     fs, HPath, hpath = _hadoop_fs(spark, base)
-    # crash recovery FIRST (schema-evolution batches swap the whole
-    # directory, exactly like upsert_parquet): a crash between the two
-    # renames leaves the only copy at <path>__old — restore it, never
-    # treat the table as a first write
-    hold0 = HPath(base + "__old")
-    if not fs.exists(hpath) and fs.exists(hold0):
-        if not fs.rename(hold0, hpath):
-            raise IOError(
-                f"upsert_parquet_bucketed: recovery rename failed for {path}"
-            )
+    _recover(fs, HPath, base, "upsert_parquet_bucketed")
     exists = bucketed_table_exists(spark, base)
     # the bucket function is part of the TABLE's layout, not the call:
     # an upsert with a different n_buckets/key set would hash keys to
@@ -579,19 +610,9 @@ def upsert_parquet_bucketed(
     layout = {"n_buckets": n_buckets, "key_cols": keys}
     marker = HPath(base + "/_bucketing.json")
     if not exists:
-        # first write resolves intra-batch duplicate keys by the same
-        # rule as the merge path (ON CONFLICT contract from row one)
-        from pyspark.sql import Window
-
-        w0 = Window.partitionBy(*keys).orderBy(
-            *(list(order_cols or []) or [F.lit(1)])
-        )
-        first = (
-            incoming.withColumn("__rn", F.row_number().over(w0))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        first.write.mode("overwrite").partitionBy("__bucket").parquet(path)
+        _newest_per_key(incoming, keys, order_cols).write.mode(
+            "overwrite"
+        ).partitionBy("__bucket").parquet(path)
         _write_text_file(fs, marker, json.dumps(layout))
         return
     if fs.exists(marker):
@@ -601,26 +622,44 @@ def upsert_parquet_bucketed(
                 f"bucketed-upsert layout mismatch at {path}: table was "
                 f"written with {on_disk}, call uses {layout}"
             )
-    table_cols = [
-        c for c in spark.read.parquet(path).columns if c != "__bucket"
-    ]
+    existing = spark.read.parquet(path)
+    table_cols = [c for c in existing.columns if c != "__bucket"]
     _check_upsert_schema(
         df.columns, table_cols, keys, merge_schema, "upsert_parquet_bucketed"
     )
-    evolving = set(df.columns) != set(table_cols)
+    if set(df.columns) != set(table_cols):
+        # schema-evolution batch: merge against EVERY bucket and swap
+        # the whole table, keeping file schemas homogeneous so later
+        # reads and the O(touched) steady-state merges never need
+        # mergeSchema
+        result = _newest_per_key(
+            incoming, keys, order_cols, existing, merge_schema
+        )
+        _swap_dir(
+            fs,
+            HPath,
+            base,
+            lambda p: result.write.mode("overwrite")
+            .partitionBy("__bucket")
+            .parquet(p),
+            "upsert_parquet_bucketed",
+            marker=json.dumps(layout),
+        )
+        return
     # the incoming plan is read twice (touched-bucket discovery, then
     # the staged merge write) — persist so an expensive upstream runs
     # once and both passes see identical rows
     incoming = incoming.persist()
-    from pyspark.sql import Window
-
-    if evolving:
-        # schema-evolution batch: merge against EVERY bucket and swap
-        # the whole table (staged write → rename aside → rename in),
-        # keeping file schemas homogeneous so later reads and the
-        # O(touched) steady-state merges never need mergeSchema
-        existing = spark.read.parquet(path)
-    else:
+    # Spark (correctly) refuses to overwrite a path that is also one of
+    # the write plan's inputs, so stage the merged touched-bucket rows
+    # first (volume = touched buckets only, not the table), then
+    # dynamic-overwrite from the staged copy: that replaces ONLY the
+    # partition dirs present in the staged data — exactly the touched
+    # buckets. A crash before the final write leaves the table intact
+    # (stage dir is garbage, not state).
+    stage = base + "__stage"
+    hstage = HPath(stage)
+    try:
         # touched buckets: bounded by n_buckets, so the collect is a
         # small driver-side list (it parameterizes partition pruning,
         # not data)
@@ -628,65 +667,17 @@ def upsert_parquet_bucketed(
             r["__bucket"]
             for r in incoming.select("__bucket").distinct().collect()
         ]
-        existing = (
-            spark.read.parquet(path).where(F.col("__bucket").isin(touched))
+        result = _newest_per_key(
+            incoming,
+            keys,
+            order_cols,
+            existing.where(F.col("__bucket").isin(touched)),
+            merge_schema,
         )
-    merged = incoming.withColumn("__new", F.lit(1)).unionByName(
-        existing.withColumn("__new", F.lit(0)),
-        allowMissingColumns=merge_schema,
-    )
-    w = Window.partitionBy(*keys).orderBy(
-        F.col("__new").desc(), *list(order_cols or [])
-    )
-    result = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "__new")
-    )
-    if evolving:
-        marker_text = json.dumps(layout)
-        tmp = base + "__tmp"
-        htmp = HPath(tmp)
-        hold = HPath(base + "__old")
-        fs.delete(htmp, True)
-        try:
-            result.write.mode("overwrite").partitionBy("__bucket").parquet(
-                tmp
-            )
-        finally:
-            incoming.unpersist()
-        _write_text_file(fs, HPath(tmp + "/_bucketing.json"), marker_text)
-        fs.delete(hold, True)
-        if not fs.rename(hpath, hold):
-            raise IOError(
-                f"upsert_parquet_bucketed: could not rename {path} aside"
-            )
-        if not fs.rename(htmp, hpath):
-            fs.rename(hold, hpath)  # roll back: restore the live table
-            raise IOError(
-                f"upsert_parquet_bucketed: swap rename failed for {path}"
-            )
-        fs.delete(hold, True)
-        return
-    # Spark (correctly) refuses to overwrite a path that is also one of
-    # the write plan's inputs, so stage the merged touched-bucket rows
-    # first (volume = touched buckets only, not the table), then
-    # dynamic-overwrite from the staged copy: dynamic mode replaces
-    # ONLY the partition dirs present in the staged data — exactly the
-    # touched buckets. A crash before the final write leaves the table
-    # intact (stage dir is garbage, not state).
-    stage = base + "__stage"
-    hstage = HPath(stage)
-    fs.delete(hstage, True)
-    result.write.mode("overwrite").partitionBy("__bucket").parquet(stage)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        spark.read.parquet(stage).write.mode("overwrite").partitionBy(
-            "__bucket"
-        ).parquet(path)
+        fs.delete(hstage, True)
+        result.write.mode("overwrite").partitionBy("__bucket").parquet(stage)
+        write_partitioned(spark.read.parquet(stage), path, ["__bucket"])
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         fs.delete(hstage, True)
         incoming.unpersist()
     if not fs.exists(marker):  # legacy table written before markers
@@ -726,16 +717,8 @@ def upsert_delta(
     spark = df.sparkSession
     keys = list(key_cols)
     # MERGE demands one source row per key — resolve intra-batch
-    # duplicates exactly as the parquet upserts do (order_cols first
-    # wins; arbitrary-but-deterministic keys-order without it)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys).orderBy(*(list(order_cols or []) or [F.lit(1)]))
-    src = (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    # duplicates exactly as the parquet upserts do
+    src = _newest_per_key(df, keys, order_cols)
     if not DeltaTable.isDeltaTable(spark, path):
         src.write.format("delta").mode("overwrite").save(path)
         return
@@ -811,34 +794,14 @@ def compact_parquet(
     (``_bucketing.json``) layouts are REFUSED: a flat rewrite would
     flatten the partition key into an ordinary column (killing
     pruning) and strand the bucket marker — compact those per
-    partition directory instead. Durability mirrors
-    :func:`upsert_parquet`: staged write → old table renamed aside →
-    staged renamed in → old deleted, with crash recovery from
-    ``<path>__old`` and an explicit rollback if the final rename
-    fails (Hadoop ``rename`` reports failure by returning false).
-    Swap atomicity holds only on filesystems with atomic directory
-    rename (local FS, HDFS); on S3A "rename" is a non-atomic
-    copy+delete, so a crash mid-rename can leave partial
-    dual-location state that the ``__old`` recovery check cannot
-    detect — on object stores use Delta OPTIMIZE, the transactional
-    drop-in. Single-writer interim machinery either way."""
+    partition directory instead. The rewrite goes through
+    :func:`_swap_dir`, which states the durability contract; on object
+    stores use Delta OPTIMIZE, the transactional drop-in."""
     import math
 
-    jvm = spark._jvm
-    jsc = spark._jsc
-    HPath = jvm.org.apache.hadoop.fs.Path
     base = path.rstrip("/")
-    hpath = HPath(base)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    old = HPath(base + "__old")
-    staged_str = base + "__compact_tmp"
-    staged = HPath(staged_str)
-    # crash recovery FIRST (as upsert_parquet): a crash between the two
-    # swap renames leaves the only copy at __old — restore, never treat
-    # as missing
-    if not fs.exists(hpath) and fs.exists(old):
-        if not fs.rename(old, hpath):
-            raise IOError(f"compact_parquet: recovery rename failed for {path}")
+    fs, HPath, hpath = _hadoop_fs(spark, base)
+    _recover(fs, HPath, base, "compact_parquet")
     # a clear error beats the opaque py4j-wrapped FileNotFoundException
     # listStatus would otherwise raise when the table never existed
     if not fs.exists(hpath):
@@ -859,15 +822,13 @@ def compact_parquet(
     total = fs.getContentSummary(hpath).getLength()
     n_files = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(path)
-    fs.delete(staged, True)
-    df.coalesce(n_files).write.mode("overwrite").parquet(staged_str)
-    fs.delete(old, True)
-    if not fs.rename(hpath, old):
-        raise IOError(f"compact_parquet: could not rename {path} aside")
-    if not fs.rename(staged, hpath):
-        fs.rename(old, hpath)  # roll back: restore the live table
-        raise IOError(f"compact_parquet: swap rename failed for {path}")
-    fs.delete(old, True)
+    _swap_dir(
+        fs,
+        HPath,
+        base,
+        lambda p: df.coalesce(n_files).write.mode("overwrite").parquet(p),
+        "compact_parquet",
+    )
     return n_files
 
 
@@ -881,34 +842,24 @@ def delete_parquet_where(
     The undo primitive the keyed sinks need for chain reorgs
     (streaming.rollback): a RollBackward at slot S means every landed
     row with ``slot > S`` belongs to an orphaned block and must go.
-    Deletion rewrites the table through the same staged-write →
-    rename-swap machinery as :func:`upsert_parquet` (crash recovery
-    from ``<path>__old``, rollback on a failed swap) — O(table) per
-    call, which is the right trade for an event as rare as a reorg;
-    at lake scale the Delta/Iceberg ``DELETE WHERE`` is the
-    transactional drop-in. Rows keep their ``__bucket`` values, so the
-    bucketed layout's pruning and O(batch) upserts are untouched.
+    Deletion rewrites the table through :func:`_swap_dir`, which states
+    the durability contract — O(table) per call, which is the right
+    trade for an event as rare as a reorg; at lake scale the
+    Delta/Iceberg ``DELETE WHERE`` is the transactional drop-in. Rows
+    keep their ``__bucket`` values, so the bucketed layout's pruning
+    and O(batch) upserts are untouched.
 
     If nothing survives, the table directory is removed entirely (an
     empty parquet directory would be schema-less and unreadable); the
     next upsert recreates it as a first write.
     """
-    import json
-
     base = path.rstrip("/")
     fs, HPath, hpath = _hadoop_fs(spark, base)
-    hold = HPath(base + "__old")
-    # crash recovery first, exactly as upsert_parquet
-    if not fs.exists(hpath) and fs.exists(hold):
-        if not fs.rename(hold, hpath):
-            raise IOError(
-                f"delete_parquet_where: recovery rename failed for {path}"
-            )
+    _recover(fs, HPath, base, "delete_parquet_where")
     if not fs.exists(hpath):
         return 0  # nothing landed yet — nothing to undo
     marker = HPath(base + "/_bucketing.json")
-    bucketed = fs.exists(marker)
-    marker_text = _read_text_file(fs, marker) if bucketed else None
+    marker_text = _read_text_file(fs, marker) if fs.exists(marker) else None
 
     df = spark.read.parquet(path)
     # NULL-condition rows don't MATCH the delete predicate — they
@@ -925,33 +876,21 @@ def delete_parquet_where(
     n_keep = n_total - (counts["n_del"] or 0)
     if n_keep == n_total:
         return 0
-    tmp = base + "__tmp"
-    htmp = HPath(tmp)
-    fs.delete(htmp, True)
-    if n_keep == 0:
-        fs.delete(hold, True)
-        if not fs.rename(hpath, hold):
-            raise IOError(
-                f"delete_parquet_where: could not rename {path} aside"
-            )
-        fs.delete(hold, True)
-        return n_total
-    writer = survivors.write.mode("overwrite")
-    if bucketed:
-        writer = writer.partitionBy("__bucket")
-    writer.parquet(tmp)
-    if bucketed:
-        # the layout marker belongs to the table — carry it into the
-        # replacement before the swap so no reader window sees a
-        # bucketed directory without its marker
-        _write_text_file(fs, HPath(tmp + "/_bucketing.json"), marker_text)
-    fs.delete(hold, True)
-    if not fs.rename(hpath, hold):
-        raise IOError(f"delete_parquet_where: could not rename {path} aside")
-    if not fs.rename(htmp, hpath):
-        fs.rename(hold, hpath)  # roll back: restore the live table
-        raise IOError(f"delete_parquet_where: swap rename failed for {path}")
-    fs.delete(hold, True)
+
+    def write(staged: str) -> None:
+        writer = survivors.write.mode("overwrite")
+        if marker_text is not None:
+            writer = writer.partitionBy("__bucket")
+        writer.parquet(staged)
+
+    _swap_dir(
+        fs,
+        HPath,
+        base,
+        write if n_keep else None,
+        "delete_parquet_where",
+        marker=marker_text,
+    )
     return n_total - n_keep
 
 
@@ -972,15 +911,13 @@ def compact_parquet_bucketed(
     same ``_bucketing.json`` marker, and partition pruning plus the
     O(batch) touched-bucket merge behave identically afterwards.
 
-    Durability per bucket mirrors :func:`compact_parquet`: staged write
-    → bucket dir renamed aside → staged renamed in → aside deleted.
-    Staging and aside directories live under the table root with
-    underscore-prefixed names (``_compact_tmp_N`` / ``_compact_old_N``)
-    that Spark's file index ignores, so a crash never corrupts partition
-    discovery; a crash between the two renames leaves that bucket's
-    only copy at ``_compact_old_N``, and the recovery sweep at the top
-    of the next run restores it. Single-writer interim machinery, like
-    the upsert it maintains — on object stores use Delta OPTIMIZE.
+    Each bucket is swapped through :func:`_swap_dir`, which states the
+    durability contract. Its staging and aside directories live under
+    the table root with underscore-prefixed names (``_compact_tmp_N`` /
+    ``_compact_old_N``) that Spark's file index ignores, so a crash
+    never corrupts partition discovery, and the recovery sweep at the
+    top of the next run restores a bucket whose only copy a crash left
+    at ``_compact_old_N``. On object stores use Delta OPTIMIZE.
 
     Read-then-rewrite rule (docs/SCALE.md): rewriting the table path
     invalidates any persisted plan whose lineage reads it
@@ -990,31 +927,24 @@ def compact_parquet_bucketed(
     import math
     import re
 
+    fn = "compact_parquet_bucketed"
     base = path.rstrip("/")
     fs, HPath, hpath = _hadoop_fs(spark, base)
     if not fs.exists(hpath):
-        raise IOError(f"compact_parquet_bucketed: no table at {path}")
+        raise IOError(f"{fn}: no table at {path}")
     # crash recovery FIRST: restore any bucket whose only copy a crash
     # left at the aside name, and clear stage garbage
     for name in _child_names(fs, hpath):
         m = re.fullmatch(r"_compact_old_(\d+)", name)
         if m:
-            live = HPath(f"{base}/__bucket={m.group(1)}")
-            aside = HPath(f"{base}/{name}")
-            if not fs.exists(live):
-                if not fs.rename(aside, live):
-                    raise IOError(
-                        f"compact_parquet_bucketed: recovery rename failed "
-                        f"for bucket {m.group(1)} at {path}"
-                    )
-            else:  # swap completed; the aside copy is stale
-                fs.delete(aside, True)
+            live = f"{base}/__bucket={m.group(1)}"
+            _recover(fs, HPath, live, fn, aside=f"{base}/{name}")
         elif name.startswith("_compact_tmp_"):
             fs.delete(HPath(f"{base}/{name}"), True)
     if not fs.exists(HPath(base + "/_bucketing.json")):
         raise ValueError(
-            f"compact_parquet_bucketed: {path} is not a bucketed-upsert "
-            "layout (no _bucketing.json); use compact_parquet"
+            f"{fn}: {path} is not a bucketed-upsert layout (no "
+            "_bucketing.json); use compact_parquet"
         )
     results: dict[int, int] = {}
     for name in sorted(_child_names(fs, hpath)):
@@ -1023,35 +953,24 @@ def compact_parquet_bucketed(
             continue
         b = int(m.group(1))
         bdir = f"{base}/{name}"
-        hb = HPath(bdir)
-        n_parts = sum(
-            1 for n in _child_names(fs, hb) if n.endswith(".parquet")
-        )
-        total = fs.getContentSummary(hb).getLength()
+        n_parts = _n_parquet(fs, HPath(bdir))
+        total = fs.getContentSummary(HPath(bdir)).getLength()
         n_files = max(1, math.ceil(total / target_file_bytes))
         if n_parts <= n_files:
             results[b] = n_parts
             continue
-        staged_str = f"{base}/_compact_tmp_{b}"
-        hstaged = HPath(staged_str)
-        hold = HPath(f"{base}/_compact_old_{b}")
-        fs.delete(hstaged, True)
         # the bucket dir read directly has no partition column — the
         # rewrite emits data-only files, exactly what the layout holds
-        spark.read.parquet(bdir).coalesce(n_files).write.mode(
-            "overwrite"
-        ).parquet(staged_str)
-        fs.delete(hold, True)
-        if not fs.rename(hb, hold):
-            raise IOError(
-                f"compact_parquet_bucketed: could not rename bucket {b} aside"
-            )
-        if not fs.rename(hstaged, hb):
-            fs.rename(hold, hb)  # roll back: restore the live bucket
-            raise IOError(
-                f"compact_parquet_bucketed: swap rename failed for bucket {b}"
-            )
-        fs.delete(hold, True)
+        bucket_df = spark.read.parquet(bdir).coalesce(n_files)
+        _swap_dir(
+            fs,
+            HPath,
+            bdir,
+            lambda p: bucket_df.write.mode("overwrite").parquet(p),
+            fn,
+            staged=f"{base}/_compact_tmp_{b}",
+            aside=f"{base}/_compact_old_{b}",
+        )
         results[b] = n_files
     return results
 
@@ -1083,15 +1002,14 @@ def maybe_compact_bucketed(
     fs, HPath, hpath = _hadoop_fs(spark, base)
     if not fs.exists(HPath(base + "/_bucketing.json")):
         return None  # first batches / flat layout: nothing to maintain
-    worst = 0
-    for name in _child_names(fs, hpath):
-        if name.startswith("__bucket="):
-            n = sum(
-                1
-                for c in _child_names(fs, HPath(f"{base}/{name}"))
-                if c.endswith(".parquet")
-            )
-            worst = max(worst, n)
+    worst = max(
+        (
+            _n_parquet(fs, HPath(f"{base}/{name}"))
+            for name in _child_names(fs, hpath)
+            if name.startswith("__bucket=")
+        ),
+        default=0,
+    )
     if worst <= max_files_per_bucket:
         return None
     return compact_parquet_bucketed(spark, path, target_file_bytes)

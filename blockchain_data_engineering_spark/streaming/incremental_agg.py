@@ -35,6 +35,12 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blockchain_data_engineering_spark.sources.io import (
+    _child_names,
+    _hadoop_fs,
+    write_partitioned,
+)
+
 BUCKET_COL = "__bucket"
 PARTIAL_COUNT_COL = "__n"
 
@@ -100,11 +106,6 @@ class IncrementalRollup:
     def stored_buckets(self, spark: SparkSession) -> list[int]:
         """Bucket ids currently materialized (from the partition
         directory names — O(directories), no data read)."""
-        from blockchain_data_engineering_spark.sources.io import (
-            _child_names,
-            _hadoop_fs,
-        )
-
         fs, _HPath, hpath = _hadoop_fs(spark, self.path)
         return sorted(
             int(name.split("=", 1)[1])
@@ -152,12 +153,7 @@ class IncrementalRollup:
             self.bucket_slots,
         ).persist()
         try:
-            (
-                part.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(BUCKET_COL)
-                .parquet(self.path)
-            )
+            write_partitioned(part, self.path, [BUCKET_COL])
             present = {
                 r["b"]
                 for r in part.select(
@@ -170,10 +166,6 @@ class IncrementalRollup:
             part.unpersist()
         emptied = [b for b in bucket_set if b not in present]
         if emptied:
-            from blockchain_data_engineering_spark.sources.io import (
-                _hadoop_fs,
-            )
-
             fs, HPath, _ = _hadoop_fs(spark, self.path)
             for b in emptied:
                 fs.delete(HPath(f"{self.path}/{BUCKET_COL}={b}"), True)

@@ -32,19 +32,12 @@ from blockchain_data_engineering_spark.operators.relational import (
     hll_estimate_from_registers,
     hll_registers,
 )
+from blockchain_data_engineering_spark.sources.io import write_partitioned
 
 
 def _write_delta(regs: DataFrame, store_path: str, batch_id: int) -> None:
-    # writer-level option, NOT session conf: two streams sharing a
-    # SparkSession must not race each other's set/restore into a
-    # static-mode overwrite that wipes the whole store
-    (
-        regs.withColumn("_batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(store_path)
-    )
+    regs = regs.withColumn("_batch_id", F.lit(batch_id))
+    write_partitioned(regs, store_path, ["_batch_id"])
 
 
 def cms_delta_sink(store_path: str, col: str, depth: int = CMS_DEPTH):

@@ -146,3 +146,17 @@ def test_incremental_semijoin_scale_gate(spark):
     # the gated plan prunes the array build with a semi join the
     # default plan does not have
     assert "LeftSemi" in gated_plan and "LeftSemi" not in base_plan
+
+
+def test_table_bytes_sizes_any_filesystem_scheme(spark):
+    """The semi-join scale gate sizes the corpus through the Hadoop
+    FileSystem of the path's scheme: a ``file://`` URI reads the same
+    byte count as the plain path (a driver-local ``os`` probe reads 0
+    for it), and a missing table reads 0."""
+    from blockchain_data_engineering_spark.plans.dedup_queries import _table_bytes
+
+    sf = "/root/testdata/sf0.01"
+    plain = _table_bytes(spark, sf, "documents")
+    assert plain > 0
+    assert _table_bytes(spark, "file://" + sf, "documents") == plain
+    assert _table_bytes(spark, sf, "no_such_table") == 0

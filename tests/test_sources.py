@@ -134,6 +134,22 @@ def test_upsert_parquet_crash_recovery_restores_old(spark, tmp_path):
     assert not os.path.exists(local + "__old")
 
 
+def test_upsert_parquet_into_directory_without_data_files(spark, tmp_path):
+    """A table directory that exists but holds no parquet file (made
+    ahead of the first batch) is a first write: the swap replaces the
+    directory instead of renaming the staged table into it as a
+    subdirectory, which would leave the path unreadable."""
+    local = tmp_path / "precreated"
+    local.mkdir()
+    (local / "_SUCCESS").touch()
+    batch = spark.createDataFrame([(1, 10)], "k LONG, v LONG")
+    upsert_parquet(batch, "file://" + str(local), ["k"])
+    assert not (local / "precreated__tmp").exists()
+    assert [tuple(r) for r in spark.read.parquet(str(local)).collect()] == [
+        (1, 10)
+    ]
+
+
 def test_neo4j_cypher_script_sink(spark, tmp_path):
     """S6 passthrough, offline transport: the cypher-script twin must
     emit idempotent UNWIND-MERGE statements carrying exactly the
@@ -726,37 +742,79 @@ def test_maybe_compact_bounds_files_over_long_replay(spark, tmp_path):
     assert "PartitionFilters" in buf.getvalue()
 
 
-def test_upsert_crash_anywhere_then_retry_recovers(spark, tmp_path, monkeypatch):
-    """Durability property: a crash at ANY filesystem-mutation
-    boundary inside upsert_parquet / delete_parquet_where (before each
-    rename/delete — a crash between ops i and i+1 is a crash before
-    op i+1) must leave the table recoverable: the NEXT call restores
-    the preserved copy and completes, ending in exactly the state a
-    crash-free run produces. Exercises every boundary by running the
-    same scenario once per fs-op budget 0..N."""
+class FlakyFS:
+    """Delegating Hadoop fs wrapper for crash injection: each mutating
+    op (rename/delete) spends one unit of the shared budget; once the
+    budget is spent the op raises instead (driver death at that
+    boundary)."""
+
+    def __init__(self, real, state):
+        self._real = real
+        self._state = state
+
+    def __getattr__(self, name):
+        attr = getattr(self._real, name)
+        if name not in ("rename", "delete"):
+            return attr
+
+        def wrapped(*a, **k):
+            if self._state["left"] <= 0:
+                raise IOError("injected crash")
+            self._state["left"] -= 1
+            return attr(*a, **k)
+
+        return wrapped
+
+
+def _run_with_flaky_fs(monkeypatch, budget, fn):
+    """Run ``fn()`` with every ``sources.io`` filesystem handle wrapped
+    in a :class:`FlakyFS` of ``budget`` mutating ops. Returns
+    ``(crashed, ops_spent)``."""
     from blockchain_data_engineering_spark.sources import io as IO
 
     real_hadoop_fs = IO._hadoop_fs
+    state = {"left": budget}
 
-    class FlakyFS:
-        """Delegating fs wrapper: mutating ops crash once the shared
-        budget runs out (simulating driver death at that boundary)."""
+    def flaky(spark_, p):
+        fs, HPath, hpath = real_hadoop_fs(spark_, p)
+        return FlakyFS(fs, state), HPath, hpath
 
-        def __init__(self, real, state):
-            self._real = real
-            self._state = state
+    monkeypatch.setattr(IO, "_hadoop_fs", flaky)
+    crashed = False
+    try:
+        fn()
+    except IOError:
+        crashed = True
+    finally:
+        monkeypatch.setattr(IO, "_hadoop_fs", real_hadoop_fs)
+    return crashed, budget - state["left"]
 
-        def __getattr__(self, name):
-            attr = getattr(self._real, name)
-            if name in ("rename", "delete"):
-                def wrapped(*a, **k):
-                    if self._state["left"] <= 0:
-                        raise IOError("injected crash")
-                    self._state["left"] -= 1
-                    return attr(*a, **k)
 
-                return wrapped
-            return attr
+def _crash_anywhere_converges(monkeypatch, tmp_path, run_scenario, expected):
+    """Crash ``run_scenario(path)`` at each filesystem-mutation boundary
+    in turn (budget 0, 1, ...; a crash between ops i and i+1 is a crash
+    before op i+1), then rerun it on a healthy fs: every rerun must
+    recover and end in ``expected``. Returns the number of boundaries
+    exercised (the scenario's mutating-op count)."""
+    for budget in range(40):
+        path = "file://" + str(tmp_path / f"crash{budget}")
+        crashed, _ = _run_with_flaky_fs(
+            monkeypatch, budget, lambda: run_scenario(path)
+        )
+        if not crashed:
+            return budget
+        got = run_scenario(path)
+        assert got == expected, f"budget {budget}: {got}"
+    raise AssertionError("scenario never completed crash-free")
+
+
+def test_upsert_crash_anywhere_then_retry_recovers(spark, tmp_path, monkeypatch):
+    """Durability property: a crash at ANY filesystem-mutation
+    boundary inside upsert_parquet / compact_parquet /
+    delete_parquet_where must leave the table recoverable: the NEXT
+    call restores the preserved copy and completes, ending in exactly
+    the state a crash-free run produces."""
+    from blockchain_data_engineering_spark.sources import io as IO
 
     def run_scenario(path):
         df1 = spark.createDataFrame(
@@ -767,6 +825,7 @@ def test_upsert_crash_anywhere_then_retry_recovers(spark, tmp_path, monkeypatch)
         )
         IO.upsert_parquet(df1, path, ["k"])
         IO.upsert_parquet(df2, path, ["k"])
+        IO.compact_parquet(spark, path)
         IO.delete_parquet_where(
             spark, path, IO.F.col("k") == IO.F.lit(1)
         )
@@ -776,32 +835,18 @@ def test_upsert_crash_anywhere_then_retry_recovers(spark, tmp_path, monkeypatch)
 
     expected = run_scenario("file://" + str(tmp_path / "clean"))
     assert expected == {2: 22, 3: 33}
-
-    budget = 0
-    while budget < 40:
-        path = "file://" + str(tmp_path / f"crash{budget}")
-        state = {"left": budget}
-
-        def flaky(spark_, p):
-            fs, HPath, hpath = real_hadoop_fs(spark_, p)
-            return FlakyFS(fs, state), HPath, hpath
-
-        monkeypatch.setattr(IO, "_hadoop_fs", flaky)
-        crashed = False
-        try:
-            run_scenario(path)
-        except IOError:
-            crashed = True
-        finally:
-            monkeypatch.setattr(IO, "_hadoop_fs", real_hadoop_fs)
-        if not crashed:
-            break  # budget exceeded the scenario's total fs ops
-        # retry with a healthy fs: recovery + completion must converge
-        got = run_scenario(path)
-        assert got == expected, f"budget {budget}: {got}"
-        budget += 1
-    assert budget < 40, "scenario never completed crash-free"
-    assert budget > 5, "too few injection points exercised"
+    # compact_parquet's swap runs on the same (patched) filesystem handle
+    table = "file://" + str(tmp_path / "compact_ops")
+    one = spark.createDataFrame([(1, 1)], "k LONG, v LONG")
+    IO.upsert_parquet(one, table, ["k"])
+    crashed, ops = _run_with_flaky_fs(
+        monkeypatch, 100, lambda: IO.compact_parquet(spark, table)
+    )
+    assert not crashed and ops >= 4, ops
+    exercised = _crash_anywhere_converges(
+        monkeypatch, tmp_path, run_scenario, expected
+    )
+    assert exercised > 5 + ops, "too few injection points exercised"
 
 
 def test_bucketed_upsert_crash_anywhere_then_retry_recovers(
@@ -811,25 +856,6 @@ def test_bucketed_upsert_crash_anywhere_then_retry_recovers(
     including a schema-EVOLUTION batch (whole-directory staged swap)
     and the steady-state pruned merge after it."""
     from blockchain_data_engineering_spark.sources import io as IO
-
-    real_hadoop_fs = IO._hadoop_fs
-
-    class FlakyFS:
-        def __init__(self, real, state):
-            self._real = real
-            self._state = state
-
-        def __getattr__(self, name):
-            attr = getattr(self._real, name)
-            if name in ("rename", "delete"):
-                def wrapped(*a, **k):
-                    if self._state["left"] <= 0:
-                        raise IOError("injected crash")
-                    self._state["left"] -= 1
-                    return attr(*a, **k)
-
-                return wrapped
-            return attr
 
     def run_scenario(path):
         # merge_schema on every batch: an evolving pipeline enables it
@@ -854,32 +880,66 @@ def test_bucketed_upsert_crash_anywhere_then_retry_recovers(
 
     expected = run_scenario("file://" + str(tmp_path / "clean"))
     assert expected[1] == (11, 7) and expected[2] == (22, 8)
-
-    budget, exercised = 0, 0
-    while budget < 40:
-        path = "file://" + str(tmp_path / f"crash{budget}")
-        state = {"left": budget}
-
-        def flaky(spark_, p):
-            fs, HPath, hpath = real_hadoop_fs(spark_, p)
-            return FlakyFS(fs, state), HPath, hpath
-
-        monkeypatch.setattr(IO, "_hadoop_fs", flaky)
-        crashed = False
-        try:
-            run_scenario(path)
-        except IOError:
-            crashed = True
-        finally:
-            monkeypatch.setattr(IO, "_hadoop_fs", real_hadoop_fs)
-        if not crashed:
-            break
-        exercised += 1
-        got = run_scenario(path)
-        assert got == expected, f"budget {budget}: {got}"
-        budget += 1
-    assert budget < 40, "scenario never completed crash-free"
+    exercised = _crash_anywhere_converges(
+        monkeypatch, tmp_path, run_scenario, expected
+    )
     assert exercised > 3, "too few injection points exercised"
+
+
+def test_bucketed_steady_merge_ignores_session_overwrite_mode(
+    spark, tmp_path, monkeypatch
+):
+    """The steady-state bucketed merge must neither set nor depend on
+    the session-wide partitionOverwriteMode. Two streams sharing a
+    session can interleave a set/restore pair, and a merge that then
+    writes under ``static`` replaces the whole table with only its
+    touched buckets. With the conf at ``static`` and setting that key
+    refused, the files of untouched buckets must stay unchanged."""
+    import glob
+    import os
+
+    from pyspark.sql.conf import RuntimeConfig
+
+    from blockchain_data_engineering_spark.sources import upsert_parquet_bucketed
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    local = str(tmp_path / "idx")
+    upsert_parquet_bucketed(
+        spark.createDataFrame([(k, 0) for k in range(40)], "k LONG, v LONG"),
+        local, ["k"], n_buckets=8,
+    )
+    touched = (
+        spark.read.parquet(local).where("k = 0").select("__bucket").first()[0]
+    )
+    before = {
+        f: os.path.getmtime(f)
+        for f in glob.glob(f"{local}/__bucket=*/*.parquet")
+        if f"__bucket={touched}/" not in f
+    }
+    assert before, "test needs at least one untouched bucket"
+
+    prev = spark.conf.get(key)
+    real_set = RuntimeConfig.set
+
+    def refusing_set(self, k, v):
+        if k == key:
+            raise RuntimeError(f"{key} is shared session state")
+        return real_set(self, k, v)
+
+    spark.conf.set(key, "static")
+    monkeypatch.setattr(RuntimeConfig, "set", refusing_set)
+    try:
+        upsert_parquet_bucketed(
+            spark.createDataFrame([(0, 1)], "k LONG, v LONG"),
+            local, ["k"], n_buckets=8,
+        )
+    finally:
+        monkeypatch.setattr(RuntimeConfig, "set", real_set)
+        spark.conf.set(key, prev)
+    after = {f: os.path.getmtime(f) for f in before if os.path.exists(f)}
+    assert after == before, "untouched bucket files were rewritten"
+    got = {r["k"]: r["v"] for r in spark.read.parquet(local).collect()}
+    assert len(got) == 40 and got[0] == 1 and got[1] == 0
 
 
 def test_write_zordered_enables_file_skipping(spark, tmp_path):
