@@ -37,6 +37,14 @@ Scale shape:
   cardinality or bucket the scores first).
 - ``confusion_counts`` is ONE hash aggregate (four conditional sums),
   map-side combinable, output grain = |key groups|.
+- The k-class agreement statistics — ``multiclass_macro_f1`` and the
+  ``multiclass_class_report`` it aggregates, ``cohens_kappa``,
+  ``weighted_kappa``, ``label_mutual_information`` and
+  ``adjusted_rand_index`` — all read ONE ``confusion_cells``
+  aggregate: ≤ k² (keys…, actual, predicted, n) rows per group, built
+  from facts or from already-counted cells (the eval-cell store's
+  rows, ``streaming/sketches.py``), so everything after it runs at
+  cell or class grain.
 - ``pr_curve`` is the full threshold sweep from the SAME
   distinct-score grain as ``auc_exact``: cumulative tp/fp via a window
   over the score aggregate — every operating point of the classifier
@@ -672,113 +680,95 @@ def retrieval_eval(
     )
 
 
+def confusion_cells(
+    df: DataFrame,
+    actual: Column,
+    predicted: Column,
+    keys: Sequence[str] = (),
+    n: Column | None = None,
+) -> DataFrame:
+    """The ``(keys…, actual, predicted, n)`` confusion cells every
+    agreement statistic reads, and the row shape of the eval-cell
+    store (``streaming/sketches.eval_cells_delta_sink``). Without
+    ``n`` each input row is one fact and is counted; with ``n`` each
+    input row is a cell and ``n`` is summed, so duplicate cells (the
+    store's per-batch deltas) merge. Rows with a NULL label or a NULL
+    key are dropped: a NULL is no label, and the statistics re-join
+    their sub-aggregates on ``keys``, where NULL never matches NULL
+    (``coalesce`` a key upstream if NULL should be a real group).
+
+    Scale shape: ONE map-side-combinable aggregate; the output grain
+    is ≤ k² rows per group."""
+    keyed = list(keys)
+    ok = actual.isNotNull() & predicted.isNotNull()
+    for c in keyed:
+        ok = ok & F.col(c).isNotNull()
+    count = F.count(F.lit(1)) if n is None else F.sum(n.cast("long"))
+    return (
+        df.where(ok)
+        .groupBy(*keyed, actual.alias("actual"), predicted.alias("predicted"))
+        .agg(count.cast("long").alias("n"))
+    )
+
+
+def _join_groups(
+    left: DataFrame, right: DataFrame, keys: Sequence[str], how: str = "inner"
+) -> DataFrame:
+    """Join two per-group frames on ``keys``. With no keys both sides
+    are global — one row, or one row per label — and every left row
+    pairs with every row of the broadcast right side; ``how`` is moot
+    there, since no caller's right side is empty while its left side
+    is not. (A constant-key equi join would plan the same: Catalyst
+    folds the literal keys into a key-less nested-loop join.)"""
+    if keys:
+        return left.join(right, list(keys), how)
+    return left.crossJoin(F.broadcast(right))
+
+
 def multiclass_macro_f1(
     df: DataFrame,
     actual: Column,
     predicted: Column,
     keys: Sequence[str] = (),
+    n: Column | None = None,
 ) -> DataFrame:
     """Macro-averaged F1 + accuracy per ``keys`` group — the scalar
     summary of the k×k confusion matrix (``ml_multiclass_confusion``),
-    the way :func:`average_precision` summarizes the PR sweep. Classes
-    are the distinct ACTUAL labels (every class with support ≥ 1; a
-    label that only ever appears as a prediction has no recall and is
-    not averaged — the sklearn ``labels=present-in-y_true``
-    convention). NULL actual/predicted rows are excluded.
+    the way :func:`average_precision` summarizes the PR sweep: one
+    aggregate over the :func:`multiclass_class_report` rows, which
+    are the same numbers disaggregated. Classes are the distinct
+    ACTUAL labels (every class with support ≥ 1; a label that only
+    ever appears as a prediction has no recall and is not averaged —
+    the sklearn ``labels=present-in-y_true`` convention). Input rows
+    are facts, or cells with an ``n`` column (:func:`confusion_cells`).
 
     Exactness: per-class F1 = 2tp/(2tp+fp+fn) where the denominator is
     ``support + predicted_total`` (= (tp+fn) + (tp+fp)) — rationals
     with varying denominators, so the macro mean gets the same
     quantized-sum treatment as :func:`average_precision`: each class's
-    F1 floors to the exact integer ``(2·tp·10^9) div (support +
-    predicted_total)``, the sum is DECIMAL(38,0), and one IEEE
-    division yields the mean (absolute error < |classes|/10^9 of the
-    numerator). ``accuracy = Σtp/n`` is a single exact division
+    F1 floors to the exact integer ``f1_num = (2·tp·10^9) div
+    (support + predicted_total)``, the sum is DECIMAL(38,0), and one
+    IEEE division yields the mean (absolute error < |classes|/10^9 of
+    the numerator). ``accuracy = Σtp/n`` is a single exact division
     (micro-F1 ≡ accuracy for single-label multiclass).
-
-    Scale shape: ONE map-side-combinable (actual, predicted) count
-    aggregate collapses the facts to ≤ k² cells; everything after runs
-    at class grain (two re-aggregations + one join of ≤ k-row frames).
 
     Returns one row per group: ``n``, ``n_classes``, ``accuracy``,
     ``macro_f1_num`` (DECIMAL(38,0) — serialize as string in gate
     queries) and ``macro_f1``."""
     keyed = list(keys)
-    cells = (
-        df.where(actual.isNotNull() & predicted.isNotNull())
-        .select(*keyed, actual.alias("__a"), predicted.alias("__p"))
-        .groupBy(*keyed, "__a", "__p")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    return multiclass_macro_f1_from_cells(cells, "__a", "__p", "n", keys)
-
-
-def multiclass_macro_f1_from_cells(
-    cells_df: DataFrame,
-    actual_col: str = "actual",
-    predicted_col: str = "predicted",
-    n_col: str = "n",
-    keys: Sequence[str] = (),
-) -> DataFrame:
-    """:func:`multiclass_macro_f1` from PRE-AGGREGATED (actual,
-    predicted, count) cells — the second reader of the additive cell
-    state (``cohens_kappa_from_cells`` is the first; the streaming
-    store in ``streaming/sketches.py`` maintains it): one maintained
-    ≤ k²-row store answers accuracy, macro-F1 AND kappa for the whole
-    stream so far. Duplicate (actual, predicted) rows sum — the
-    mergeability property. Same output columns and algebra as
-    :func:`multiclass_macro_f1` (which delegates here)."""
-    keyed = list(keys)
-    # NULL-keyed rows excluded at entry: the per-class LEFT join
-    # matches by_actual to by_pred on `keys` and cannot match
-    # NULL = NULL — without this a NULL-keyed group's pred_total
-    # silently reads 0 and its F1 inflates/deflates (the kendall_tau
-    # keyed-join alignment convention, swept in r10/r11)
-    not_null = F.col(actual_col).isNotNull() & F.col(predicted_col).isNotNull()
-    for c in keyed:
-        not_null = not_null & F.col(c).isNotNull()
-    cells = cells_df.where(not_null).select(
-        *keyed,
-        F.col(actual_col).alias("__a"),
-        F.col(predicted_col).alias("__p"),
-        F.col(n_col).cast("long").alias("n"),
-    )
-    by_actual = cells.groupBy(*keyed, "__a").agg(
-        F.sum("n").cast("long").alias("support"),
-        F.sum(F.when(F.col("__a") == F.col("__p"), F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("tp"),
-    )
-    by_pred = cells.groupBy(*keyed, "__p").agg(
-        F.sum("n").cast("long").alias("pred_total")
-    )
-    cond = by_actual["__a"] == by_pred["__p"]
-    for c in keyed:
-        cond = cond & (by_actual[c] == by_pred[c])
-    per_class = by_actual.join(by_pred, cond, "left").select(
-        *[by_actual[c] for c in keyed],
-        "support",
-        "tp",
-        F.coalesce(F.col("pred_total"), F.lit(0)).alias("pred_total"),
-    )
-    f1q = F.expr(
-        f"(CAST(2 AS DECIMAL(38,0)) * tp * {_AP_SCALE})"
-        " div (support + pred_total)"
-    )
     # coalesce: the GLOBAL empty-input row carries 0s, never NULLs
     # (the repo empty-input convention)
-    totals = per_class.select(
-        *keyed,
-        F.col("support"),
-        F.col("tp"),
-        f1q.alias("__f1q"),
-    ).groupBy(*keyed).agg(
-        F.coalesce(F.sum("support"), F.lit(0)).cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("n_classes"),
-        F.coalesce(F.sum("tp"), F.lit(0)).cast("long").alias("__tp_sum"),
-        F.coalesce(F.sum("__f1q"), F.lit(0))
-        .cast("decimal(38,0)")
-        .alias("macro_f1_num"),
+    totals = (
+        multiclass_class_report(df, actual, predicted, keys, n)
+        .groupBy(*keyed)
+        .agg(
+            F.coalesce(F.sum("support"), F.lit(0)).cast("long").alias("n"),
+            F.count(F.lit(1)).cast("long").alias("n_classes"),
+            F.coalesce(F.sum("tp"), F.lit(0)).cast("long").alias("__tp_sum"),
+            F.coalesce(F.sum("f1_num"), F.lit(0))
+            .cast("decimal(38,0)")
+            .alias("macro_f1_num"),
+        )
     )
     den = (
         F.col("n_classes").cast("decimal(38,0)") * F.lit(_AP_SCALE)
@@ -872,8 +862,8 @@ def multiclass_macro_f1_from_cells_sql(
     n_col: str = "n",
     keys: Sequence[str] = (),
 ) -> str:
-    """DuckDB twin of :func:`multiclass_macro_f1_from_cells` — the
-    oracle for MAINTAINED cell stores (``streaming/sketches.py``):
+    """DuckDB twin of :func:`multiclass_macro_f1` over cells (``n``
+    given) — the oracle for MAINTAINED cell stores (``streaming/sketches.py``):
     ``cells_sql`` is a FROM-able fragment exposing (actual,
     predicted, count) rows, possibly with duplicates (per-batch
     deltas) — they re-aggregate exactly as the Spark store read does,
@@ -940,38 +930,15 @@ def multiclass_class_report(
     actual: Column,
     predicted: Column,
     keys: Sequence[str] = (),
+    n: Column | None = None,
 ) -> DataFrame:
     """Per-CLASS precision/recall/F1 drill-down per ``keys`` group —
     the classification report behind :func:`multiclass_macro_f1`'s
     scalar: when the macro-F1 gate dips, these are the rows that say
     WHICH class is failing and HOW (precision collapse = the filter
     over-fires into the class; recall collapse = the class leaks
-    away). Delegates to :func:`multiclass_class_report_from_cells`
-    over the same ≤ k² (actual, predicted) cell aggregate every
-    agreement/accuracy statistic reads. NULL actual/predicted rows
-    are excluded."""
-    keyed = list(keys)
-    cells = (
-        df.where(actual.isNotNull() & predicted.isNotNull())
-        .select(*keyed, actual.alias("__a"), predicted.alias("__p"))
-        .groupBy(*keyed, "__a", "__p")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    return multiclass_class_report_from_cells(cells, "__a", "__p", "n", keys)
-
-
-def multiclass_class_report_from_cells(
-    cells_df: DataFrame,
-    actual_col: str = "actual",
-    predicted_col: str = "predicted",
-    n_col: str = "n",
-    keys: Sequence[str] = (),
-) -> DataFrame:
-    """:func:`multiclass_class_report` from PRE-AGGREGATED (actual,
-    predicted, count) cells — a per-class reader of the additive cell
-    state (``streaming/sketches.py`` maintains it; kappa, macro-F1,
-    MI and ARI are the scalar readers). Duplicate cells sum
-    (per-batch deltas merge).
+    away). Input rows are facts, or cells with an ``n`` column
+    (:func:`confusion_cells`).
 
     One row per (keys, class) where classes are the distinct ACTUAL
     labels (the sklearn ``labels=present-in-y_true`` convention
@@ -986,46 +953,31 @@ def multiclass_class_report_from_cells(
 
     The drill-down contract (pinned in tests): per group,
     ``sum(f1_num) == macro_f1_num`` and ``sum(tp)/sum(support) ==
-    accuracy`` of :func:`multiclass_macro_f1_from_cells` — these rows
-    ARE the macro scalar, disaggregated, never a parallel
-    approximation that can disagree with the gate. ``f1_num`` is the
-    same floor-quantized integer ``(2·tp·10^9) div (support +
-    pred_total)`` the macro mean sums; ``precision``/``recall``/
-    ``f1`` are single IEEE divisions of exact integers (correctly
-    rounded, engine-identical).
+    accuracy`` of :func:`multiclass_macro_f1`, which aggregates these
+    rows — never a parallel approximation that can disagree with the
+    gate. ``f1_num`` is the floor-quantized integer ``(2·tp·10^9) div
+    (support + pred_total)``; ``precision``/``recall``/``f1`` are
+    single IEEE divisions of exact integers (correctly rounded,
+    engine-identical).
 
-    Scale shape: identical to the macro scalar — two class-grain
-    re-aggregations + one ≤ k-row equi join — stopping one aggregate
-    short (the :func:`distribution_drift_explain` idiom applied to
-    the confusion matrix). Output grain = |classes| per group."""
+    Scale shape: the cell aggregate, two class-grain
+    re-aggregations + one ≤ k-row equi join (the
+    :func:`distribution_drift_explain` idiom applied to the confusion
+    matrix). Output grain = |classes| per group."""
     keyed = list(keys)
-    # NULL-keyed rows excluded at entry: the per-class LEFT join
-    # matches by_actual to by_pred on `keys` and cannot match
-    # NULL = NULL (the kendall_tau keyed-join alignment convention)
-    not_null = F.col(actual_col).isNotNull() & F.col(predicted_col).isNotNull()
-    for c in keyed:
-        not_null = not_null & F.col(c).isNotNull()
-    cells = cells_df.where(not_null).select(
-        *keyed,
-        F.col(actual_col).alias("__a"),
-        F.col(predicted_col).alias("__p"),
-        F.col(n_col).cast("long").alias("n"),
-    )
-    by_actual = cells.groupBy(*keyed, "__a").agg(
+    cells = confusion_cells(df, actual, predicted, keys, n)
+    by_actual = cells.groupBy(*keyed, F.col("actual").alias("class")).agg(
         F.sum("n").cast("long").alias("support"),
-        F.sum(F.when(F.col("__a") == F.col("__p"), F.col("n")).otherwise(0))
+        F.sum(F.when(F.col("actual") == F.col("predicted"), F.col("n")).otherwise(0))
         .cast("long")
         .alias("tp"),
     )
-    by_pred = cells.groupBy(*keyed, "__p").agg(
+    by_pred = cells.groupBy(*keyed, F.col("predicted").alias("class")).agg(
         F.sum("n").cast("long").alias("pred_total")
     )
-    cond = by_actual["__a"] == by_pred["__p"]
-    for c in keyed:
-        cond = cond & (by_actual[c] == by_pred[c])
-    per_class = by_actual.join(by_pred, cond, "left").select(
-        *[by_actual[c] for c in keyed],
-        by_actual["__a"].alias("class"),
+    per_class = by_actual.join(by_pred, keyed + ["class"], "left").select(
+        *keyed,
+        "class",
         "support",
         "tp",
         F.coalesce(F.col("pred_total"), F.lit(0)).alias("pred_total"),
@@ -1118,6 +1070,7 @@ def adjusted_rand_index(
     actual: Column,
     predicted: Column,
     keys: Sequence[str] = (),
+    n: Column | None = None,
 ) -> DataFrame:
     """Adjusted Rand index (+ the raw Rand index) between two label
     columns per ``keys`` group — the pair-counting clustering-
@@ -1127,30 +1080,10 @@ def adjusted_rand_index(
     the same way, beyond chance" — bounded above by 1 (identical
     partitions), ~0 for independent labelings, negative for
     worse-than-chance. Like MI it needs no shared category space.
-    Delegates to :func:`adjusted_rand_from_cells` over the same ≤ k²
-    (actual, predicted) cell aggregate the whole agreement suite
-    reads. NULL actual/predicted rows are excluded."""
-    keyed = list(keys)
-    cells = (
-        df.where(actual.isNotNull() & predicted.isNotNull())
-        .select(*keyed, actual.alias("__a"), predicted.alias("__p"))
-        .groupBy(*keyed, "__a", "__p")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    return adjusted_rand_from_cells(cells, "__a", "__p", "n", keys)
-
-
-def adjusted_rand_from_cells(
-    cells_df: DataFrame,
-    actual_col: str = "actual",
-    predicted_col: str = "predicted",
-    n_col: str = "n",
-    keys: Sequence[str] = (),
-) -> DataFrame:
-    """:func:`adjusted_rand_index` from PRE-AGGREGATED (actual,
-    predicted, count) cells — the fourth reader of the additive cell
-    state (kappa, macro-F1, MI; ``streaming/sketches.py`` maintains
-    it). Duplicate cells sum (per-batch deltas merge).
+    Input rows are facts, or cells with an ``n`` column
+    (:func:`confusion_cells`); pair binomials are not additive across
+    cells, but the cells are, so duplicate cells merge before any
+    binomial is taken.
 
     Definition: with pair counts ``S = Σ_ij C(n_ij,2)``,
     ``A = Σ_i C(a_i,2)``, ``B = Σ_j C(b_j,2)``, ``T = C(n,2)``:
@@ -1170,7 +1103,7 @@ def adjusted_rand_from_cells(
     degenerate (the standard convention). ``rand_index`` is NULL for
     n < 2 (no pairs).
 
-    Scale shape: the cell re-aggregation (≤ k² rows per group), two
+    Scale shape: the cell aggregate (≤ k² rows per group), two
     marginal re-aggregations, then ONE tagged-union aggregation —
     cell rows carry (n_ij, C(n_ij,2)), marginal rows carry their
     C(·,2) mass and a class counter — NO joins, NO windows, nothing
@@ -1179,37 +1112,22 @@ def adjusted_rand_from_cells(
     ``ari_num``/``ari_den`` (DECIMAL(38,0) — serialize as strings in
     gate queries), ``ari`` and ``rand_index``."""
     keyed = list(keys)
-    # no keyed joins anywhere (pure union + aggregation), so NULL
-    # keys need no exclusion here: they form their own group in both
-    # engines, as in ece/log_loss — the kendall convention applies
-    # only where sub-aggregates REJOIN on keys
-    cells = (
-        cells_df.where(
-            F.col(actual_col).isNotNull() & F.col(predicted_col).isNotNull()
-        )
-        .groupBy(
-            *keyed,
-            F.col(actual_col).alias("__a"),
-            F.col(predicted_col).alias("__p"),
-        )
-        .agg(F.sum(F.col(n_col).cast("long")).cast("long").alias("__n"))
-    )
+    cells = confusion_cells(df, actual, predicted, keys, n)
     pair2 = lambda c: F.expr(  # noqa: E731  C(x,2), exact: x(x−1) even
         f"(CAST({c} AS DECIMAL(38,0)) * ({c} - 1)) div 2"
     ).cast("decimal(38,0)")
-    by_a = cells.groupBy(*keyed, "__a").agg(
-        F.sum("__n").cast("long").alias("__m")
+    by_a = cells.groupBy(*keyed, "actual").agg(
+        F.sum("n").cast("long").alias("__m")
     )
-    by_p = cells.groupBy(*keyed, "__p").agg(
-        F.sum("__n").cast("long").alias("__m")
+    by_p = cells.groupBy(*keyed, "predicted").agg(
+        F.sum("n").cast("long").alias("__m")
     )
-    zero_d = F.lit(0).cast("decimal(38,0)")
     null_d = F.lit(None).cast("decimal(38,0)")
     null_l = F.lit(None).cast("long")
     cell_rows = cells.select(
         *keyed,
-        F.col("__n").alias("__tn"),
-        pair2("__n").alias("__ts"),
+        F.col("n").alias("__tn"),
+        pair2("n").alias("__ts"),
         null_d.alias("__ta"),
         null_d.alias("__tb"),
         F.lit(0).alias("__ca"),
@@ -1291,9 +1209,9 @@ def adjusted_rand_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """DuckDB twin of :func:`adjusted_rand_index` — same cell grain,
-    same cleared-binomial integers; ``ari_num``/``ari_den`` serialize
-    as VARCHAR."""
+    """DuckDB twin of :func:`adjusted_rand_index` — same cell grain
+    (NULL labels and NULL keys dropped), same cleared-binomial
+    integers; ``ari_num``/``ari_den`` serialize as VARCHAR."""
     keyed = list(keys)
     kcols = ", ".join(keyed)
     kpre = f"{kcols}, " if keyed else ""
@@ -1301,13 +1219,14 @@ def adjusted_rand_sql(
     kgrp_ap = f"{kcols}, a, p" if keyed else "a, p"
     kgrp_a = f"{kcols}, a" if keyed else "a"
     kgrp_p = f"{kcols}, p" if keyed else "p"
+    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
     p2 = lambda c: f"(({c}::HUGEINT * ({c} - 1)) // 2)"  # noqa: E731
     return f"""
     WITH cells AS (
       SELECT {kpre}{actual_sql} AS a, {predicted_sql} AS p,
              CAST(count(*) AS BIGINT) AS n
       FROM {table}
-      WHERE ({actual_sql}) IS NOT NULL AND ({predicted_sql}) IS NOT NULL
+      WHERE ({actual_sql}) IS NOT NULL AND ({predicted_sql}) IS NOT NULL{key_nn}
       GROUP BY {kgrp_ap}
     ),
     by_a AS (
@@ -1364,8 +1283,8 @@ def adjusted_rand_from_cells_sql(
     n_col: str = "n",
     keys: Sequence[str] = (),
 ) -> str:
-    """DuckDB twin of :func:`adjusted_rand_from_cells` — the oracle
-    for MAINTAINED cell stores (``streaming/sketches.py``):
+    """DuckDB twin of :func:`adjusted_rand_index` over cells (``n``
+    given) — the oracle for MAINTAINED cell stores (``streaming/sketches.py``):
     ``cells_sql`` is a FROM-able fragment exposing (actual,
     predicted, count) rows, possibly with duplicates (per-batch
     deltas) — they re-aggregate exactly as the Spark store read does,
@@ -1442,6 +1361,7 @@ def label_mutual_information(
     predicted: Column,
     keys: Sequence[str] = (),
     share_grid: int = 1000,
+    n: Column | None = None,
 ) -> DataFrame:
     """Mutual information (+ marginal entropies + normalized MI)
     between two label columns per ``keys`` group — the standard
@@ -1449,33 +1369,9 @@ def label_mutual_information(
     suite: κ/α ask "do the labelers agree", MI asks "how much does
     one labeling TELL YOU about the other", which is the right lens
     when the two labelings need not even share a category space
-    (predicted clusters vs declared classes). Delegates to
-    :func:`label_mi_from_cells` over the same ≤ k² (actual,
-    predicted) cell aggregate every other agreement statistic reads —
-    one maintained cell store answers κ, macro-F1, AND MI."""
-    keyed = list(keys)
-    cells = (
-        df.where(actual.isNotNull() & predicted.isNotNull())
-        .select(*keyed, actual.alias("__a"), predicted.alias("__p"))
-        .groupBy(*keyed, "__a", "__p")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    return label_mi_from_cells(cells, "__a", "__p", "n", keys, share_grid)
-
-
-def label_mi_from_cells(
-    cells_df: DataFrame,
-    actual_col: str = "actual",
-    predicted_col: str = "predicted",
-    n_col: str = "n",
-    keys: Sequence[str] = (),
-    share_grid: int = 1000,
-) -> DataFrame:
-    """:func:`label_mutual_information` from PRE-AGGREGATED (actual,
-    predicted, count) cells — the third reader of the additive cell
-    state (``cohens_kappa_from_cells``, ``multiclass_macro_f1_from_
-    cells``; the streaming store in ``streaming/sketches.py``
-    maintains it). Duplicate cells sum (per-batch deltas merge).
+    (predicted clusters vs declared classes). Input rows are facts,
+    or cells with an ``n`` column (:func:`confusion_cells`); shares
+    are taken of the merged cells.
 
     Definition: ``MI = Σ_ij p_ij·ln(p_ij/(p_i·p_j))`` with
     ``H(A) = −Σ_i p_i·ln(p_i)``, ``H(P) = −Σ_j p_j·ln(p_j)`` and
@@ -1538,25 +1434,12 @@ def label_mi_from_cells(
     assert g <= _PSI_GRID_MAX
     t_g = int(tab[g - 1])  # T[G] = round(10^12·ln G) — one literal
     keyed = list(keys)
-    # NULL-keyed rows excluded at entry: marginals/totals rejoin the
-    # cells on `keys` (the keyed-join alignment convention)
-    not_null = F.col(actual_col).isNotNull() & F.col(predicted_col).isNotNull()
-    for c in keyed:
-        not_null = not_null & F.col(c).isNotNull()
-    cells = (
-        cells_df.where(not_null)
-        .groupBy(
-            *keyed,
-            F.col(actual_col).alias("__a"),
-            F.col(predicted_col).alias("__p"),
-        )
-        .agg(F.sum(F.col(n_col).cast("long")).cast("long").alias("__n"))
-    )
+    cells = confusion_cells(df, actual, predicted, keys, n)
     # group total via ONE bounded window at the ≤ k² cell grain — the
     # _drift_share_grain idiom; never a 1-row-frame compose join
     w = Window.partitionBy(*keyed)
     cells_t = cells.withColumn(
-        "__nt", F.sum("__n").over(w).cast("long")
+        "__nt", F.sum("n").over(w).cast("long")
     )
     q_of = lambda cnt: F.expr(  # noqa: E731
         f"(CAST({cnt} AS DECIMAL(38,0)) * {g}) div __nt"
@@ -1566,18 +1449,18 @@ def label_mi_from_cells(
     # joins), carry both to the cells via the (keys, label) equi join
     def marginal(label_col: str, q_out: str, l_out: str) -> DataFrame:
         m = cells_t.groupBy(*keyed, label_col).agg(
-            F.sum("__n").cast("long").alias("__nm"),
+            F.sum("n").cast("long").alias("__nm"),
             F.max("__nt").cast("long").alias("__nt"),
         )
         m = m.select(*keyed, label_col, q_of("__nm").alias(q_out))
         return m.withColumn(l_out, psi_ln_lookup(tab, F.col(q_out)))
 
-    by_a = marginal("__a", "__qa", "__la")
-    by_p = marginal("__p", "__qp", "__lp")
+    by_a = marginal("actual", "__qa", "__la")
+    by_p = marginal("predicted", "__qp", "__lp")
     quant = (
-        cells_t.select(*keyed, "__a", "__p", "__n", q_of("__n").alias("__q"))
-        .join(by_a.select(*keyed, "__a", "__qa", "__la"), keyed + ["__a"])
-        .join(by_p.select(*keyed, "__p", "__qp", "__lp"), keyed + ["__p"])
+        cells_t.select(*keyed, "actual", "predicted", "n", q_of("n").alias("__q"))
+        .join(by_a.select(*keyed, "actual", "__qa", "__la"), keyed + ["actual"])
+        .join(by_p.select(*keyed, "predicted", "__qp", "__lp"), keyed + ["predicted"])
         .withColumn("__lc", psi_ln_lookup(tab, F.col("__q")))
     )
     zero_d = F.lit(0).cast("decimal(38,0)")
@@ -1597,7 +1480,7 @@ def label_mi_from_cells(
     # Catalyst folds into a BroadcastNestedLoopJoin)
     cell_rows = quant.select(
         *keyed,
-        F.col("__n").alias("__tn"),
+        F.col("n").alias("__tn"),
         mi_term.alias("__tmi"),
         null_d.alias("__tha"),
         null_d.alias("__thp"),
@@ -2502,6 +2385,7 @@ def cohens_kappa(
     rater_a: Column,
     rater_b: Column,
     keys: Sequence[str] = (),
+    n: Column | None = None,
 ) -> DataFrame:
     """Cohen's kappa per ``keys`` group — chance-corrected agreement
     between two LABELERS (quality-classifier v1 vs v2, model vs human
@@ -2509,7 +2393,11 @@ def cohens_kappa(
     accuracy (``multiclass_macro_f1``'s companion) rewards two raters
     that both mostly emit the majority class.
     ``κ = (p_o − p_e)/(1 − p_e)`` with ``p_o = Σ_i cell(i,i)/n`` and
-    ``p_e = Σ_i r_i·c_i/n²`` (r/c = the raters' marginals).
+    ``p_e = Σ_i r_i·c_i/n²`` (r/c = the raters' marginals). Input
+    rows are facts, or cells with an ``n`` column
+    (:func:`confusion_cells`) — so a maintained cell store
+    (``streaming/sketches.py``) serves kappa for a whole stream from
+    ≤ k² rows, never the facts.
 
     Exactness — EXACT, no quantization: clearing denominators,
     ``κ = (n·Σagree − Σ r_i·c_i) / (n² − Σ r_i·c_i)`` — both sides
@@ -2519,57 +2407,21 @@ def cohens_kappa(
     is degenerate, the sklearn NaN case) and for an empty group.
     NULL ratings are excluded (a NULL is no label).
 
-    Scale shape: ONE map-side-combinable (a, b) cell aggregate
-    (≤ k² rows per group — the ``multiclass_macro_f1`` grain), then
-    marginal re-aggregations and a full-outer label join at ≤ k-row
-    grain. Returns ``n``, ``n_labels`` (distinct labels across BOTH
-    raters), ``kappa_num``/``kappa_den`` (DECIMAL(38,0) — serialize
-    as strings in gate queries) and ``kappa``."""
+    Scale shape: the cell aggregate (≤ k² rows per group — the
+    ``multiclass_macro_f1`` grain), marginal re-aggregations, a
+    full-outer label join at ≤ k-row grain and ONE tagged-union
+    aggregation of the cell and label rows — no join above label
+    grain, so the global kappa plans no nested-loop join. Returns ``n``,
+    ``n_labels`` (distinct labels across BOTH raters),
+    ``kappa_num``/``kappa_den`` (DECIMAL(38,0) — serialize as strings
+    in gate queries) and ``kappa``."""
     keyed = list(keys)
-    cells = (
-        df.where(rater_a.isNotNull() & rater_b.isNotNull())
-        .select(*keyed, rater_a.alias("__a"), rater_b.alias("__b"))
-        .groupBy(*keyed, "__a", "__b")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    cells = confusion_cells(df, rater_a, rater_b, keys, n)
+    by_a = cells.groupBy(*keyed, F.col("actual").alias("__l")).agg(
+        F.sum("n").cast("long").alias("__r")
     )
-    return cohens_kappa_from_cells(cells, "__a", "__b", "cnt", keys)
-
-
-def cohens_kappa_from_cells(
-    cells_df: DataFrame,
-    actual_col: str = "actual",
-    predicted_col: str = "predicted",
-    n_col: str = "n",
-    keys: Sequence[str] = (),
-) -> DataFrame:
-    """:func:`cohens_kappa` from PRE-AGGREGATED (actual, predicted,
-    count) cells — the entry point for MAINTAINED cell stores
-    (``streaming/sketches.py eval_cells_delta_sink``): confusion cells
-    are the one additive state every chance-corrected agreement /
-    accuracy statistic derives from, so an unbounded stream keeps ≤ k²
-    rows per batch and kappa is recomputed from the summed store, not
-    the facts. Duplicate (actual, predicted) rows are tolerated (they
-    sum) — the exact property that makes per-batch deltas mergeable.
-    Same output columns and algebra as :func:`cohens_kappa` (which
-    delegates here)."""
-    keyed = list(keys)
-    # NULL-keyed rows excluded at entry: the marginal full-outer and
-    # the po/pe recombination join on `keys` and cannot match
-    # NULL = NULL (the kendall_tau keyed-join alignment convention)
-    not_null = F.col(actual_col).isNotNull() & F.col(predicted_col).isNotNull()
-    for c in keyed:
-        not_null = not_null & F.col(c).isNotNull()
-    cells = cells_df.where(not_null).select(
-        *keyed,
-        F.col(actual_col).alias("__a"),
-        F.col(predicted_col).alias("__b"),
-        F.col(n_col).cast("long").alias("cnt"),
-    )
-    by_a = cells.groupBy(*keyed, F.col("__a").alias("__l")).agg(
-        F.sum("cnt").cast("long").alias("__r")
-    )
-    by_b = cells.groupBy(*keyed, F.col("__b").alias("__l")).agg(
-        F.sum("cnt").cast("long").alias("__c")
+    by_b = cells.groupBy(*keyed, F.col("predicted").alias("__l")).agg(
+        F.sum("n").cast("long").alias("__c")
     )
     # full outer on (keys, label): a label seen by only one rater has
     # marginal 0 on the other side and contributes 0 to p_e, but it
@@ -2579,29 +2431,42 @@ def cohens_kappa_from_cells(
         F.coalesce(F.col("__r"), F.lit(0)).cast("decimal(38,0)").alias("__r"),
         F.coalesce(F.col("__c"), F.lit(0)).cast("decimal(38,0)").alias("__c"),
     )
-    pe = marg.groupBy(*keyed).agg(
-        F.coalesce(F.sum(F.col("__r") * F.col("__c")), F.lit(0))
-        .cast("decimal(38,0)")
-        .alias("__pe_sum"),
-        F.count(F.lit(1)).cast("long").alias("n_labels"),
+    # ONE tagged-union aggregation: cell rows carry (n, agreement),
+    # label rows carry r·c and a label counter — no compose join of
+    # the observed and the chance aggregate (the label_mutual_
+    # information recombination)
+    null_l = F.lit(None).cast("long")
+    agree = F.when(F.col("actual") == F.col("predicted"), F.col("n"))
+    cell_rows = cells.select(
+        *keyed,
+        F.col("n").alias("__tn"),
+        agree.otherwise(0).alias("__ta"),
+        F.lit(None).cast("decimal(38,0)").alias("__trc"),
+        F.lit(0).alias("__tl"),
     )
-    po = cells.groupBy(*keyed).agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("n"),
-        F.coalesce(
-            F.sum(F.when(F.col("__a") == F.col("__b"), F.col("cnt")).otherwise(0)),
-            F.lit(0),
+    label_rows = marg.select(
+        *keyed,
+        null_l.alias("__tn"),
+        null_l.alias("__ta"),
+        (F.col("__r") * F.col("__c")).cast("decimal(38,0)").alias("__trc"),
+        F.lit(1).alias("__tl"),
+    )
+    agg = (
+        cell_rows.unionByName(label_rows)
+        .groupBy(*keyed)
+        .agg(
+            F.coalesce(F.sum("__tn"), F.lit(0)).cast("long").alias("n"),
+            F.coalesce(F.sum("__ta"), F.lit(0)).cast("long").alias("__agree"),
+            F.coalesce(F.sum("__trc"), F.lit(0))
+            .cast("decimal(38,0)")
+            .alias("__pe_sum"),
+            F.coalesce(F.sum("__tl"), F.lit(0)).cast("long").alias("n_labels"),
         )
-        .cast("long")
-        .alias("__agree"),
     )
-    if keyed:
-        out = po.join(pe, keyed)
-    else:
-        out = po.crossJoin(F.broadcast(pe))  # two 1-row frames
     n_d = F.col("n").cast("decimal(38,0)")
     num = (n_d * F.col("__agree") - F.col("__pe_sum")).cast("decimal(38,0)")
     den = (n_d * n_d - F.col("__pe_sum")).cast("decimal(38,0)")
-    return out.select(
+    return agg.select(
         *keyed,
         "n",
         "n_labels",
@@ -2707,20 +2572,14 @@ def matthews_corr(
     undefined case stays visible) and for an empty group. NULL
     label/pred rows are excluded (module convention).
 
-    Scale shape: ONE map-side-combinable hash aggregate (four
-    conditional sums) — the ``confusion_counts`` plan. Returns
+    Scale shape: the ``confusion_counts`` aggregate (ONE
+    map-side-combinable hash aggregate, four conditional sums) over
+    the non-NULL rows. Returns
     ``tp/fp/fn/tn``, ``mcc_num``/``mcc_d1``/``mcc_d2`` (DECIMAL(38,0)
     — serialize as strings in gate queries) and ``mcc``."""
     keyed = list(keys)
-    base = df.where(label.isNotNull() & pred.isNotNull()).select(
-        *keyed, label.alias("__y"), pred.alias("__p")
-    )
-    cnt = lambda c: F.sum(F.when(c, 1).otherwise(0)).cast("long")  # noqa: E731
-    agg = base.groupBy(*keyed).agg(
-        cnt(F.col("__y") & F.col("__p")).alias("tp"),
-        cnt(~F.col("__y") & F.col("__p")).alias("fp"),
-        cnt(F.col("__y") & ~F.col("__p")).alias("fn"),
-        cnt(~F.col("__y") & ~F.col("__p")).alias("tn"),
+    agg = confusion_counts(
+        df.where(label.isNotNull() & pred.isNotNull()), label, pred, keys
     )
     d = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     num = (d("tp") * F.col("tn") - d("fp") * F.col("fn")).cast(
@@ -2966,16 +2825,7 @@ def kendall_tau(
     counts = base.groupBy(*keyed).agg(
         F.count(F.lit(1)).cast("long").alias("n_items")
     )
-    if keyed:
-        out = counts.join(disc, keyed, "left")
-    else:
-        out = (
-            counts.withColumn("__j", F.lit(1))
-            .join(
-                F.broadcast(disc.withColumn("__j", F.lit(1))), "__j", "left"
-            )
-            .drop("__j")
-        )
+    out = _join_groups(counts, disc, keyed, "left")
     n_d = F.col("n_items").cast("decimal(38,0)")
     nd = F.coalesce(F.col("n_discordant"), F.lit(0)).cast("long")
     m = (n_d * (n_d - 1)).cast("decimal(38,0)")
@@ -3309,15 +3159,8 @@ def fleiss_kappa(
         .alias("__s2"),
         F.count(F.lit(1)).cast("long").alias("n_categories"),
     )
-    if keyed:
-        out = drops.join(s1agg, keyed, "left").join(s2agg, keyed, "left")
-    else:
-        j = lambda a, b: (  # noqa: E731  constant-key equi join, no BNLJ
-            a.withColumn("__j", F.lit(1))
-            .join(b.withColumn("__j", F.lit(1)), "__j", "left")
-            .drop("__j")
-        )
-        out = j(j(drops, s1agg), s2agg)
+    j = lambda a, b: _join_groups(a, b, keyed, "left")  # noqa: E731
+    out = j(j(drops, s1agg), s2agg)
     n_d = F.coalesce(F.col("n_items"), F.lit(0)).cast("decimal(38,0)")
     s1 = F.coalesce(F.col("__s1"), F.lit(0).cast("decimal(38,0)"))
     s2 = F.coalesce(F.col("__s2"), F.lit(0).cast("decimal(38,0)"))
@@ -3995,12 +3838,33 @@ def log_loss_multiclass_sql(
     """
 
 
+# The weighted-kappa exactness envelope: |label| ≤ 10^4 keeps
+# w·r·c = label²·n² inside DECIMAL(38,0) to n ~ 10^10. Enforced
+# in-plan at the cell grain (≤ k² rows — negligible cost): past the
+# envelope Spark's DECIMAL(38,0) would overflow to NULL while the
+# DuckDB twin's HUGEINT keeps going — a SILENT cross-engine
+# divergence; the assertion turns it into a loud failure.
+_KAPPA_LABEL_MAX = 10**4
+
+
+def _kappa_weight(a: Column, b: Column, weighting: str) -> Column:
+    if weighting == "linear":
+        return F.abs(a - b).cast("decimal(38,0)")
+    if weighting == "quadratic":
+        d = (a - b).cast("decimal(38,0)")
+        return (d * d).cast("decimal(38,0)")
+    raise ValueError(
+        f"weighting must be 'linear' or 'quadratic', got {weighting!r}"
+    )
+
+
 def weighted_kappa(
     df: DataFrame,
     rater_a: Column,
     rater_b: Column,
     weighting: str = "quadratic",
     keys: Sequence[str] = (),
+    n: Column | None = None,
 ) -> DataFrame:
     """Weighted Cohen's kappa per ``keys`` group — chance-corrected
     agreement for ORDINAL labels (quality tiers 0–5, severity grades),
@@ -4029,7 +3893,8 @@ def weighted_kappa(
     loudly instead of overflowing DECIMAL(38,0) to a silent NULL
     kappa), one final IEEE division; NULL when the denominator is
     0 (both raters constant — no disagreement is even expressible) or
-    the group is empty. NULL ratings are excluded.
+    the group is empty. NULL ratings are excluded. Input rows are
+    facts, or cells with an ``n`` column (:func:`confusion_cells`).
 
     Scale shape: the :func:`cohens_kappa` cell grain (≤ k² rows per
     group), marginal re-aggregations, then a ≤ k×k marginal cross
@@ -4037,68 +3902,10 @@ def weighted_kappa(
     scale's size, never by n). Returns ``n``, ``n_labels``,
     ``kappa_num``/``kappa_den`` (DECIMAL(38,0) — serialize as strings
     in gate queries) and ``kappa``."""
-    keyed = list(keys)
-    cells = (
-        df.where(rater_a.isNotNull() & rater_b.isNotNull())
-        .select(
-            *keyed,
-            rater_a.cast("long").alias("__a"),
-            rater_b.cast("long").alias("__b"),
-        )
-        .groupBy(*keyed, "__a", "__b")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    return weighted_kappa_from_cells(
-        cells, "__a", "__b", "cnt", weighting, keys
-    )
-
-
-# The weighted-kappa exactness envelope: |label| ≤ 10^4 keeps
-# w·r·c = label²·n² inside DECIMAL(38,0) to n ~ 10^10. Enforced
-# in-plan at the cell grain (≤ k² rows — negligible cost): past the
-# envelope Spark's DECIMAL(38,0) would overflow to NULL while the
-# DuckDB twin's HUGEINT keeps going — a SILENT cross-engine
-# divergence; the assertion turns it into a loud failure.
-_KAPPA_LABEL_MAX = 10**4
-
-
-def _kappa_weight(a: Column, b: Column, weighting: str) -> Column:
-    if weighting == "linear":
-        return F.abs(a - b).cast("decimal(38,0)")
-    if weighting == "quadratic":
-        d = (a - b).cast("decimal(38,0)")
-        return (d * d).cast("decimal(38,0)")
-    raise ValueError(
-        f"weighting must be 'linear' or 'quadratic', got {weighting!r}"
-    )
-
-
-def weighted_kappa_from_cells(
-    cells_df: DataFrame,
-    actual_col: str = "actual",
-    predicted_col: str = "predicted",
-    n_col: str = "n",
-    weighting: str = "quadratic",
-    keys: Sequence[str] = (),
-) -> DataFrame:
-    """:func:`weighted_kappa` from PRE-AGGREGATED (actual, predicted,
-    count) cells — the same maintained-store entry point as
-    :func:`cohens_kappa_from_cells` (duplicate cells sum; per-batch
-    deltas merge). Labels are cast to long (the ordinal contract)."""
     _kappa_weight(F.lit(0), F.lit(0), weighting)  # validate up front
     keyed = list(keys)
-    # NULL-keyed rows excluded at entry: the marginal cross and the
-    # obs/exp/labels recombination join on `keys` and cannot match
-    # NULL = NULL — without this a NULL-keyed group's kappa silently
-    # vanishes (the kendall_tau keyed-join alignment convention)
-    not_null = F.col(actual_col).isNotNull() & F.col(predicted_col).isNotNull()
-    for c in keyed:
-        not_null = not_null & F.col(c).isNotNull()
-    cells = cells_df.where(not_null).select(
-        *keyed,
-        F.col(actual_col).cast("long").alias("__a"),
-        F.col(predicted_col).cast("long").alias("__b"),
-        F.col(n_col).cast("long").alias("cnt"),
+    cells = confusion_cells(
+        df, rater_a.cast("long"), rater_b.cast("long"), keys, n
     )
     # exactness-envelope guard (|label| ≤ 10^4 — see _KAPPA_LABEL_MAX):
     # assert_true raises loudly instead of letting DECIMAL(38,0)
@@ -4108,48 +3915,41 @@ def weighted_kappa_from_cells(
     cells = cells.where(
         F.coalesce(
             F.assert_true(
-                (F.abs(F.col("__a")) <= _KAPPA_LABEL_MAX)
-                & (F.abs(F.col("__b")) <= _KAPPA_LABEL_MAX),
+                (F.abs(F.col("actual")) <= _KAPPA_LABEL_MAX)
+                & (F.abs(F.col("predicted")) <= _KAPPA_LABEL_MAX),
                 F.concat(
                     F.lit(
                         "weighted_kappa: |label| exceeds the exactness "
                         f"envelope ({_KAPPA_LABEL_MAX}) — index-rank the "
                         "ordinal scale upstream; got a="
                     ),
-                    F.col("__a").cast("string"),
+                    F.col("actual").cast("string"),
                     F.lit(", b="),
-                    F.col("__b").cast("string"),
+                    F.col("predicted").cast("string"),
                 ),
             ),
             F.lit(True),
         )
     )
     obs = cells.groupBy(*keyed).agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("n"),
+        F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n"),
         F.coalesce(
             F.sum(
-                _kappa_weight(F.col("__a"), F.col("__b"), weighting)
-                * F.col("cnt")
+                _kappa_weight(F.col("actual"), F.col("predicted"), weighting)
+                * F.col("n")
             ),
             F.lit(0),
         )
         .cast("decimal(38,0)")
         .alias("__obs"),
     )
-    by_a = cells.groupBy(*keyed, F.col("__a").alias("__la")).agg(
-        F.sum("cnt").cast("long").alias("__r")
+    by_a = cells.groupBy(*keyed, F.col("actual").alias("__la")).agg(
+        F.sum("n").cast("long").alias("__r")
     )
-    by_b = cells.groupBy(*keyed, F.col("__b").alias("__lb")).agg(
-        F.sum("cnt").cast("long").alias("__c")
+    by_b = cells.groupBy(*keyed, F.col("predicted").alias("__lb")).agg(
+        F.sum("n").cast("long").alias("__c")
     )
-    if keyed:
-        pairs = by_a.join(by_b, keyed)
-    else:
-        pairs = (
-            by_a.withColumn("__j", F.lit(1))
-            .join(by_b.withColumn("__j", F.lit(1)), "__j")
-            .drop("__j")
-        )
+    pairs = _join_groups(by_a, by_b, keyed)
     exp = pairs.groupBy(*keyed).agg(
         F.coalesce(
             F.sum(
@@ -4163,21 +3963,13 @@ def weighted_kappa_from_cells(
         .alias("__exp"),
     )
     labels = (
-        cells.select(*keyed, F.col("__a").alias("__l"))
-        .unionByName(cells.select(*keyed, F.col("__b").alias("__l")))
+        cells.select(*keyed, F.col("actual").alias("__l"))
+        .unionByName(cells.select(*keyed, F.col("predicted").alias("__l")))
         .distinct()
         .groupBy(*keyed)
         .agg(F.count(F.lit(1)).cast("long").alias("n_labels"))
     )
-    if keyed:
-        out = obs.join(exp, keyed).join(labels, keyed)
-    else:
-        j = lambda a, b: (  # noqa: E731  constant-key equi join, no BNLJ
-            a.withColumn("__j", F.lit(1))
-            .join(b.withColumn("__j", F.lit(1)), "__j")
-            .drop("__j")
-        )
-        out = j(j(obs, exp), labels)
+    out = _join_groups(_join_groups(obs, exp, keyed), labels, keyed)
     num = (
         F.col("__exp")
         - F.col("n").cast("decimal(38,0)") * F.col("__obs")
@@ -4649,15 +4441,8 @@ def krippendorff_alpha(
         .cast("decimal(38,0)")
         .alias("__u"),
     )
-    if keyed:
-        out = drops.join(u_agg, keyed, "left").join(cat_agg, keyed, "left")
-    else:
-        j = lambda a, b: (  # noqa: E731  constant-key equi join, no BNLJ
-            a.withColumn("__j", F.lit(1))
-            .join(b.withColumn("__j", F.lit(1)), "__j", "left")
-            .drop("__j")
-        )
-        out = j(j(drops, u_agg), cat_agg)
+    j = lambda a, b: _join_groups(a, b, keyed, "left")  # noqa: E731
+    out = j(j(drops, u_agg), cat_agg)
     n_d = F.coalesce(F.col("n_ratings"), F.lit(0)).cast("decimal(38,0)")
     u = F.coalesce(F.col("__u"), F.lit(0).cast("decimal(38,0)"))
     zero_d = F.lit(0).cast("decimal(38,0)")
@@ -5150,8 +4935,8 @@ def cohens_kappa_from_cells_sql(
     n_col: str = "n",
     keys: Sequence[str] = (),
 ) -> str:
-    """DuckDB twin of :func:`cohens_kappa_from_cells` — the oracle for
-    MAINTAINED cell stores (``streaming/sketches.py``): ``cells_sql``
+    """DuckDB twin of :func:`cohens_kappa` over cells (``n`` given) —
+    the oracle for MAINTAINED cell stores (``streaming/sketches.py``): ``cells_sql``
     is a FROM-able fragment exposing (actual, predicted, count) rows,
     possibly with duplicates (per-batch deltas) — they re-aggregate
     exactly as the Spark store read does, then the

@@ -259,25 +259,22 @@ def eval_cells_delta_sink(
     """foreachBatch sink maintaining (actual, predicted) confusion
     CELL counts over a labeled stream — the additive state every
     chance-corrected agreement / accuracy statistic derives from
-    (``operators/ml_eval.cohens_kappa_from_cells``). A monitored
-    filter's agreement with its labels is then a ≤ k²-row store read,
-    never a reprocess of the stream: cells ADD across batches exactly
-    (no error term at all — the strongest member of the mergeable
-    family), and a replayed batch overwrites its own ``_batch_id``
-    partition with identical rows. NULL actual/predicted rows are
-    excluded (the ml_eval module convention)."""
+    (``operators/ml_eval.confusion_cells``, whose rows it writes). A
+    monitored filter's agreement with its labels is then a ≤ k²-row
+    store read, never a reprocess of the stream: cells ADD across
+    batches exactly (no error term at all — the strongest member of
+    the mergeable family), and a replayed batch overwrites its own
+    ``_batch_id`` partition with identical rows. NULL actual/predicted
+    rows are excluded (the ml_eval module convention)."""
+    from blockchain_data_engineering_spark.operators.ml_eval import (
+        confusion_cells,
+    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        cells = (
-            batch_df.where(
-                F.col(actual_col).isNotNull()
-                & F.col(predicted_col).isNotNull()
-            )
-            .groupBy(
-                F.col(actual_col).cast("string").alias("actual"),
-                F.col(predicted_col).cast("string").alias("predicted"),
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        cells = confusion_cells(
+            batch_df,
+            F.col(actual_col).cast("string"),
+            F.col(predicted_col).cast("string"),
         )
         _write_delta(cells, store_path, batch_id)
 
@@ -286,77 +283,14 @@ def eval_cells_delta_sink(
 
 def eval_cells_store_cells(spark: SparkSession, store_path: str) -> DataFrame:
     """Running (actual, predicted, n) cells: per-batch deltas summed —
-    one job over n_batches·k² rows."""
+    one job over n_batches·k² rows. Every ``operators/ml_eval``
+    confusion-cell statistic reads them with ``n=F.col("n")``: the
+    statistic of the WHOLE stream so far, identical to running it over
+    every fact ever streamed, by the additivity of cells (pair
+    binomials, shares and F1 are not additive — which is why the store
+    keeps cells, never a statistic)."""
     return (
         spark.read.parquet(store_path)
         .groupBy("actual", "predicted")
         .agg(F.sum("n").cast("long").alias("n"))
-    )
-
-
-def eval_cells_store_kappa(spark: SparkSession, store_path: str) -> DataFrame:
-    """Cohen's kappa (+ the exact integer numerators) of the WHOLE
-    stream so far, from the cell store — identical to running
-    ``cohens_kappa`` over every fact ever streamed, by the additivity
-    of cells."""
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        cohens_kappa_from_cells,
-    )
-
-    return cohens_kappa_from_cells(
-        eval_cells_store_cells(spark, store_path)
-    )
-
-
-def eval_cells_store_macro_f1(
-    spark: SparkSession, store_path: str
-) -> DataFrame:
-    """Accuracy + macro-F1 (+ the exact integer numerator) of the
-    WHOLE stream so far, from the same cell store
-    :func:`eval_cells_store_kappa` reads — one maintained ≤ k²-row
-    state, every agreement/accuracy statistic derivable on demand."""
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        multiclass_macro_f1_from_cells,
-    )
-
-    return multiclass_macro_f1_from_cells(
-        eval_cells_store_cells(spark, store_path)
-    )
-
-
-def eval_cells_store_class_report(
-    spark: SparkSession, store_path: str
-) -> DataFrame:
-    """Per-class precision/recall/F1 rows of the WHOLE stream so far,
-    from the same cell store — the drill-down behind
-    :func:`eval_cells_store_macro_f1`'s scalar
-    (``operators/ml_eval.multiclass_class_report_from_cells``): when
-    the served macro-F1 dips, these rows say WHICH class failed,
-    without reprocessing the stream."""
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        multiclass_class_report_from_cells,
-    )
-
-    return multiclass_class_report_from_cells(
-        eval_cells_store_cells(spark, store_path)
-    )
-
-
-def eval_cells_store_ari(
-    spark: SparkSession, store_path: str
-) -> DataFrame:
-    """Adjusted Rand index (+ Rand index and the exact integer
-    numerators) of the WHOLE stream so far, from the same cell store
-    — the pair-counting clustering-agreement read
-    (``operators/ml_eval.adjusted_rand_from_cells``), the fourth
-    derivable statistic of the one maintained ≤ k²-row state (kappa,
-    macro-F1/accuracy, MI, ARI). Pair binomials are NOT additive
-    across batches, but the CELLS are — which is exactly why the
-    store maintains cells, never the statistic."""
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        adjusted_rand_from_cells,
-    )
-
-    return adjusted_rand_from_cells(
-        eval_cells_store_cells(spark, store_path)
     )

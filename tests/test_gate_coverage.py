@@ -120,11 +120,9 @@ def test_verification_doc_counts_match_registry():
     )
 
 
-def test_operators_doc_names_only_registered_queries():
-    """docs/OPERATORS.md maps each operator to the queries that
-    exercise it; a renamed or deleted query must not linger there.
-    Every backticked name in a table's ``Query`` column must be a
-    registered query (file paths and ``@decorator`` mentions in the
+def _operators_doc_queries() -> set[str]:
+    """Every backticked name in a ``Query`` column of
+    docs/OPERATORS.md (file paths and ``@decorator`` mentions in the
     notes of query-less rows are not names)."""
     import re
 
@@ -146,8 +144,24 @@ def test_operators_doc_names_only_registered_queries():
                 if "." not in t and "@" not in t
             }
     assert len(named) > 100, "OPERATORS.md Query columns not found (format changed?)"
-    unknown = sorted(named - set(plans.QUERIES))
+    return named
+
+
+def test_operators_doc_names_only_registered_queries():
+    """docs/OPERATORS.md maps each operator to the queries that
+    exercise it; a renamed or deleted query must not linger there.
+    Every backticked name in a table's ``Query`` column must be a
+    registered query."""
+    unknown = sorted(_operators_doc_queries() - set(plans.QUERIES))
     assert not unknown, f"OPERATORS.md names unregistered queries: {unknown}"
+
+
+def test_operators_doc_maps_every_gate_query():
+    """Every gate query (``plans.GATE_ORDER``) is named in a ``Query``
+    column of docs/OPERATORS.md, so the doc maps each capability the
+    gate exercises to its implementation."""
+    missing = [n for n in plans.GATE_ORDER if n not in _operators_doc_queries()]
+    assert not missing, f"OPERATORS.md maps no row to gate queries: {missing}"
 
 
 def test_every_gate_query_has_an_oracle_or_documented_exemption():

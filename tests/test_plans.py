@@ -108,14 +108,6 @@ def test_no_python_udfs_on_relational_paths(spark, sf_dir):
                     # r7: two 1-row grand aggregates (n_queries ×
                     # hit/mrr numerators) composed into the eval row
                     "ml_retrieval_eval",
-                    # r9: same shape — the global kappa composes the
-                    # 1-row observed-agreement aggregate with the
-                    # 1-row marginal-product aggregate
-                    "ml_cohens_kappa",
-                    # r10: the store serving path ends in the same
-                    # cohens_kappa_from_cells global compose (two
-                    # 1-row frames over the ≤ k² summed cell store)
-                    "ml_kappa_from_store",
                     # r8: the literal 4-row predicate workload
                     # broadcast onto the 128-row file-stats listing —
                     # metadata grain by construction (zone-map pruning

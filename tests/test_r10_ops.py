@@ -1,16 +1,14 @@
 """Round-10 operators: log-loss + PSI + Jensen-Shannon (the literal
 log-quanta-table family the r9 verdict sanctioned), Krippendorff's
-alpha (ragged multi-rater agreement, nominal + interval metrics),
-weighted Cohen's kappa (ordinal labels), the eval-cell store's kappa
-serving path, and the r9-verdict nits (ece n_bins≤s_max guard,
-kendall NULL group keys, bench spread flag inputs). Hand-computed
-known values + edge conventions; DuckDB parity runs in
-test_oracle_parity."""
+alpha (ragged multi-rater agreement, nominal + interval metrics), and
+the r9-verdict nits (ece n_bins≤s_max guard, kendall NULL group
+keys). Weighted kappa and the eval-cell store's kappa read live in
+test_agreement.py. Hand-computed known values + edge conventions;
+DuckDB parity runs in test_oracle_parity."""
 
 from __future__ import annotations
 
 import math
-import re
 from collections import Counter, defaultdict
 
 import pytest
@@ -21,12 +19,21 @@ from blockchain_data_engineering_spark.operators.dq import (
     psi_ln_table,
 )
 from blockchain_data_engineering_spark.operators.ml_eval import (
-    cohens_kappa,
     kendall_tau,
     krippendorff_alpha,
     log_loss,
     log_loss_table,
     weighted_kappa,
+)
+
+# The confusion-cell tests live in test_agreement.py; importing them
+# here keeps each one collected under this module's name as well.
+from test_agreement import (  # noqa: F401
+    test_agreement_ops_exclude_null_keys,
+    test_eval_cells_store_serving_matches_direct_kappa,
+    test_weighted_kappa_binary_equals_unweighted,
+    test_weighted_kappa_degenerate_and_validation,
+    test_weighted_kappa_known_values,
 )
 
 S = 1000  # default score grid for the log-loss tests
@@ -294,103 +301,6 @@ def test_krippendorff_edges(spark):
         krippendorff_alpha(one, "item", "cat", max_raters=64)
 
 
-def _py_weighted_kappa(pairs, weighting):
-    n = len(pairs)
-    cells = Counter(pairs)
-    ra = Counter(a for a, _ in pairs)
-    cb = Counter(b for _, b in pairs)
-    wf = (
-        (lambda i, j: abs(i - j))
-        if weighting == "linear"
-        else (lambda i, j: (i - j) ** 2)
-    )
-    obs = sum(wf(a, b) * c for (a, b), c in cells.items())
-    exp = sum(wf(i, j) * ra[i] * cb[j] for i in ra for j in cb)
-    if exp == 0:
-        return None
-    return 1 - n * obs / exp
-
-
-def test_weighted_kappa_known_values(spark):
-    pairs = (
-        [(0, 0)] * 10 + [(1, 1)] * 5 + [(2, 2)] * 5
-        + [(0, 1)] * 3 + [(1, 2)] * 2 + [(0, 2)] * 1
-    )
-    df = spark.createDataFrame(pairs, "a long, b long")
-    for weighting in ("linear", "quadratic"):
-        out = weighted_kappa(
-            df, F.col("a"), F.col("b"), weighting
-        ).collect()[0]
-        assert out.n == 26 and out.n_labels == 3
-        ref = _py_weighted_kappa(pairs, weighting)
-        assert out.kappa == pytest.approx(ref, abs=1e-12)
-    # sklearn cross-check when available (not in this container's
-    # baked set — the pure-python reference above implements the same
-    # cohen_kappa_score(weights=...) formula)
-    try:
-        from sklearn.metrics import cohen_kappa_score
-    except ImportError:
-        pass
-    else:
-        ys = [a for a, _ in pairs]
-        ps = [b for _, b in pairs]
-        for weighting in ("linear", "quadratic"):
-            out = weighted_kappa(
-                df, F.col("a"), F.col("b"), weighting
-            ).collect()[0]
-            assert out.kappa == pytest.approx(
-                cohen_kappa_score(ys, ps, weights=weighting), abs=1e-9
-            )
-
-
-def test_weighted_kappa_binary_equals_unweighted(spark):
-    """On BINARY integer labels both weightings coincide with plain
-    Cohen's kappa (|i−j| = (i−j)² = the 0/1 disagreement indicator)."""
-    pairs = [(1, 1)] * 8 + [(1, 0)] * 2 + [(0, 0)] * 5 + [(0, 1)] * 1
-    df = spark.createDataFrame(pairs, "a long, b long")
-    k = cohens_kappa(df, F.col("a"), F.col("b")).collect()[0]
-    for weighting in ("linear", "quadratic"):
-        w = weighted_kappa(
-            df, F.col("a"), F.col("b"), weighting
-        ).collect()[0]
-        assert w.kappa == pytest.approx(k.kappa, abs=1e-12)
-
-
-def test_weighted_kappa_degenerate_and_validation(spark):
-    # both raters constant → no disagreement expressible → NULL
-    df = spark.createDataFrame([(3, 3), (3, 3)], "a long, b long")
-    out = weighted_kappa(df, F.col("a"), F.col("b"), "linear").collect()[0]
-    assert out.kappa is None and int(out.kappa_den) == 0
-    with pytest.raises(ValueError, match="weighting"):
-        weighted_kappa(df, F.col("a"), F.col("b"), "cubic").collect()
-
-
-def test_eval_cells_store_serving_matches_direct_kappa(spark, sf_dir):
-    """The gate query's additivity contract, pinned independently of
-    the oracle: kappa served from the two-batch cell store must equal
-    plain cohens_kappa over all the facts."""
-    from blockchain_data_engineering_spark.plans.streaming_queries import (
-        ml_kappa_from_store,
-    )
-    from blockchain_data_engineering_spark.catalog import load_table
-    from blockchain_data_engineering_spark.operators import text as TX
-
-    served = ml_kappa_from_store(spark, sf_dir).collect()[0]
-    docs = load_table(spark, sf_dir, "documents")
-    direct = cohens_kappa(
-        docs.select(
-            F.col("lang").cast("string").alias("a"),
-            TX.lang_id(F.col("text")).cast("string").alias("b"),
-        ),
-        F.col("a"),
-        F.col("b"),
-    ).collect()[0]
-    assert served.n == direct.n
-    assert served.kappa_num == str(direct.kappa_num)
-    assert served.kappa_den == str(direct.kappa_den)
-    assert served.kappa == direct.kappa
-
-
 def test_kendall_tau_null_group_keys_excluded(spark):
     """r9 ADVICE: a NULL-keyed group used to survive the counts
     aggregate but lose its pairs in the equi self-join, reporting a
@@ -428,7 +338,8 @@ def test_r10_plan_shapes(spark, sf_dir):
     by construction); PSI/JS keep the bounded drift windows plus the
     same broadcast lookups, no BNLJ/cartesian; the agreement gates
     stay cartesian-free (the weighted-kappa marginal cross is an
-    equi join on the group key)."""
+    equi join on the group key) and the kappa store read plans no
+    nested-loop join."""
     from test_plans import _plan
 
     p = _plan(spark, sf_dir, "ml_log_loss")
@@ -447,16 +358,11 @@ def test_r10_plan_shapes(spark, sf_dir):
     p = _plan(spark, sf_dir, "ml_weighted_kappa")
     assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p
     p = _plan(spark, sf_dir, "ml_kappa_from_store")
-    # the store read ends in the whitelisted cohens_kappa_from_cells
-    # global compose (two 1-row frames — the ml_cohens_kappa BNLJ
-    # class); anything beyond that one audited BNLJ is a defect
+    # the store read ends in cohens_kappa's tagged-union aggregate:
+    # the global kappa composes its observed and chance terms without
+    # a join, so no nested-loop join is left to audit
     assert "CartesianProduct" not in p
-    # (the formatted plan names each node twice: tree + detail; the
-    # query checkpoints its store read, so the compose is in an
-    # executed plan, whose AQE dump prints the tree twice — count the
-    # Final Plan tree that ran, not the Initial Plan one)
-    ran = re.sub(r"\+- == Initial Plan ==.*?\n\n", "", p, flags=re.S)
-    assert ran.count("BroadcastNestedLoopJoin Cross") == 1, p
+    assert "BroadcastNestedLoopJoin" not in p, p
 
 
 def test_r10_agreement_determinism_under_repartition(spark):
@@ -616,34 +522,3 @@ def test_drift_ops_exclude_null_keys(spark):
         # and identical data scores 0 drift in the surviving group
         stat = rows["g"][4] if op is not distribution_drift_tvd else rows["g"]["tvd"]
         assert stat == 0.0, op.__name__
-
-
-def test_agreement_ops_exclude_null_keys(spark):
-    """Review regression (r10): every keyed agreement operator joins
-    its sub-aggregates on `keys`; NULL keys can't match, so before
-    the entry exclusion a NULL-keyed group either vanished silently
-    (weighted_kappa) or reported a spurious all-zero row
-    (krippendorff). All now follow the kendall_tau exclusion."""
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        fleiss_kappa,
-    )
-
-    votes = spark.createDataFrame(
-        [(None, "u2", "a"), (None, "u2", "b"), ("g", "u3", "a"),
-         ("g", "u3", "a"), ("g", "u4", "a"), ("g", "u4", "b")],
-        "k string, item string, cat string",
-    )
-    a = krippendorff_alpha(votes, "item", "cat", keys=["k"]).collect()
-    assert {r["k"] for r in a} == {"g"} and a[0].n_units == 2
-    f = fleiss_kappa(votes, "item", "cat", n_raters=2, keys=["k"]).collect()
-    assert {r["k"] for r in f} == {"g"} and f[0].n_items == 2
-    pairs = spark.createDataFrame(
-        [(None, 1, 2), (None, 2, 1), ("g", 1, 2), ("g", 2, 2)],
-        "k string, a long, b long",
-    )
-    w = weighted_kappa(
-        pairs, F.col("a"), F.col("b"), "quadratic", keys=["k"]
-    ).collect()
-    assert {r["k"] for r in w} == {"g"} and w[0].n == 2
-    c = cohens_kappa(pairs, F.col("a"), F.col("b"), keys=["k"]).collect()
-    assert {r["k"] for r in c} == {"g"} and c[0].n == 2

@@ -1,11 +1,11 @@
 """Round-11 operators: multi-class log-loss (true-class score grain),
-one-sided KL(cur‖ref) on the drift grain, label mutual information /
-entropy / NMI from the cell grain (quantized shares on the ln-table
-grid), Krippendorff's alpha ordinal metric (cumulative-marginal
-transform), the macro-F1 store serving path, and the r10-ADVICE
-guards (log_loss SQL-twin truncation parity, weighted-kappa exactness
-envelope). Hand-computed known values + edge conventions; DuckDB
-parity runs in test_oracle_parity."""
+one-sided KL(cur‖ref) on the drift grain, Krippendorff's alpha
+ordinal metric (cumulative-marginal transform) and its per-unit
+drill-down, top-label and adaptive ECE, and the log_loss SQL-twin
+truncation guard. The round's confusion-cell tests (label MI, ARI,
+the class report, the macro-F1 store read, the weighted-kappa
+envelope) live in test_agreement.py. Hand-computed known values +
+edge conventions; DuckDB parity runs in test_oracle_parity."""
 
 from __future__ import annotations
 
@@ -22,11 +22,26 @@ from blockchain_data_engineering_spark.operators.dq import (
 )
 from blockchain_data_engineering_spark.operators.ml_eval import (
     krippendorff_alpha,
-    label_mi_from_cells,
-    label_mutual_information,
     log_loss_multiclass,
-    weighted_kappa,
-    weighted_kappa_from_cells,
+)
+
+# The confusion-cell tests live in test_agreement.py; importing them
+# here keeps each one collected under this module's name as well.
+from test_agreement import (  # noqa: F401
+    test_adjusted_rand_determinism_and_cells,
+    test_adjusted_rand_known_values,
+    test_ari_store_read_equals_direct,
+    test_class_report_excludes_null_keys_and_repartition,
+    test_class_report_known_values,
+    test_class_report_store_read_equals_direct,
+    test_class_report_sums_to_macro_scalars,
+    test_label_mi_determinism_under_repartition,
+    test_label_mi_edges,
+    test_label_mi_known_values,
+    test_label_mi_permutation_and_independence,
+    test_macro_f1_from_cells_excludes_null_keys,
+    test_macro_f1_store_read_equals_direct,
+    test_weighted_kappa_envelope_guard,
 )
 
 S = 1000
@@ -233,124 +248,6 @@ def test_drift_quartet_shares_one_grain(spark):
 
 
 # ---------------------------------------------------------------------------
-# label mutual information
-# ---------------------------------------------------------------------------
-def _py_mi(pairs, g):
-    """Float MI/H of the floor-quantized share vectors — what the
-    integer design computes exactly (up to the 1e-12 table error)."""
-    n = len(pairs)
-    cell = Counter(pairs)
-    am = Counter(a for a, _ in pairs)
-    pm = Counter(p for _, p in pairs)
-    qc = {k: v * g // n for k, v in cell.items()}
-    qa = {k: v * g // n for k, v in am.items()}
-    qp = {k: v * g // n for k, v in pm.items()}
-    mi = sum(
-        (q / g) * (math.log(q) - math.log(qa[a]) - math.log(qp[p]) + math.log(g))
-        for (a, p), q in qc.items()
-        if q > 0
-    )
-    ha = sum((q / g) * (math.log(g) - math.log(q)) for q in qa.values() if q > 0)
-    hp = sum((q / g) * (math.log(g) - math.log(q)) for q in qp.values() if q > 0)
-    return mi, ha, hp
-
-
-def test_label_mi_known_values(spark):
-    pairs = (
-        [("en", "en")] * 40
-        + [("en", "de")] * 10
-        + [("de", "de")] * 30
-        + [("de", "fr")] * 5
-        + [("fr", "fr")] * 15
-    )
-    df = spark.createDataFrame(pairs, "a string, p string")
-    out = label_mutual_information(df, F.col("a"), F.col("p")).collect()[0]
-    mi, ha, hp = _py_mi(pairs, G)
-    assert out.n == 100
-    assert out.n_classes_actual == 3 and out.n_classes_predicted == 3
-    assert abs(out.mi - mi) < 1e-9
-    assert abs(out.h_actual - ha) < 1e-9
-    assert abs(out.h_predicted - hp) < 1e-9
-    assert abs(out.nmi - 2 * mi / (ha + hp)) < 1e-9
-    assert 0 < out.nmi < 1  # informative but imperfect labeler
-
-
-def test_label_mi_permutation_and_independence(spark):
-    # a BIJECTIVE relabeling carries full information: the quantized
-    # diagonal cells equal the marginals, so mi_num == ha_num ==
-    # hp_num and NMI == 1.0 EXACTLY (integer identity, not approx)
-    pairs = [("en", "EN")] * 37 + [("de", "DE")] * 21 + [("fr", "FR")] * 42
-    df = spark.createDataFrame(pairs, "a string, p string")
-    out = label_mutual_information(df, F.col("a"), F.col("p")).collect()[0]
-    assert out.mi_num == out.ha_num == out.hp_num
-    assert out.nmi == 1.0
-    # a CONSTANT prediction carries none: q_p = G, q_cell = q_a, the
-    # ln terms cancel exactly → MI = 0 (and NMI ∈ {0} since H_a > 0)
-    pairs = [("en", "X")] * 30 + [("de", "X")] * 70
-    df = spark.createDataFrame(pairs, "a string, p string")
-    out = label_mutual_information(df, F.col("a"), F.col("p")).collect()[0]
-    assert int(out.mi_num) == 0 and out.mi == 0.0 and out.nmi == 0.0
-    assert out.h_predicted == 0.0  # one class → zero entropy exactly
-
-
-def test_label_mi_edges(spark):
-    # NULL labels excluded; NULL KEYS excluded (keyed-join alignment)
-    df = spark.createDataFrame(
-        [("g", "a", "x"), ("g", "a", None), ("g", None, "x"),
-         (None, "a", "x"), ("g", "b", "y")],
-        "k string, a string, p string",
-    )
-    rows = {
-        r["k"]: r
-        for r in label_mutual_information(
-            df, F.col("a"), F.col("p"), keys=["k"]
-        ).collect()
-    }
-    assert set(rows) == {"g"} and rows["g"].n == 2
-    # empty input: one global row of zeros, NULL scalars
-    empty = spark.createDataFrame([], "a string, p string")
-    e = label_mutual_information(empty, F.col("a"), F.col("p")).collect()[0]
-    assert e.n == 0 and e.mi is None and e.nmi is None
-    assert int(e.mi_num) == 0 and int(e.ha_num) == 0
-    # from_cells: duplicate cells sum (per-batch deltas merge) — the
-    # split store reads identically to the whole
-    cells = spark.createDataFrame(
-        [("a", "x", 30), ("a", "x", 10), ("b", "y", 60)],
-        "actual string, predicted string, n long",
-    )
-    whole = spark.createDataFrame(
-        [("a", "x", 40), ("b", "y", 60)],
-        "actual string, predicted string, n long",
-    )
-    r1 = label_mi_from_cells(cells).collect()[0]
-    r2 = label_mi_from_cells(whole).collect()[0]
-    assert r1 == r2
-
-
-def test_label_mi_determinism_under_repartition(spark):
-    import random
-
-    rng = random.Random(5)
-    pairs = [
-        (f"a{rng.randrange(4)}", f"p{rng.randrange(5)}") for _ in range(600)
-    ]
-    df = spark.createDataFrame(pairs, "a string, p string")
-    x = label_mutual_information(df, F.col("a"), F.col("p")).collect()[0]
-    y = label_mutual_information(
-        df.repartition(17), F.col("a"), F.col("p")
-    ).collect()[0]
-    assert (x.mi_num, x.ha_num, x.hp_num, x.mi, x.nmi) == (
-        y.mi_num,
-        y.ha_num,
-        y.hp_num,
-        y.mi,
-        y.nmi,
-    )
-    mi, ha, hp = _py_mi(pairs, G)
-    assert abs(x.mi - mi) < 1e-9
-
-
-# ---------------------------------------------------------------------------
 # Krippendorff ordinal
 # ---------------------------------------------------------------------------
 def _py_alpha_ordinal(votes, max_raters):
@@ -495,104 +392,17 @@ def test_krippendorff_ordinal_edges(spark):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE #2: weighted-kappa exactness envelope
-# ---------------------------------------------------------------------------
-def test_weighted_kappa_envelope_guard(spark):
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors.exceptions.captured import SparkRuntimeException
-
-    bad = spark.createDataFrame([(1, 1), (10001, 2)], "a long, b long")
-    with pytest.raises(
-        (SparkRuntimeException, Py4JJavaError), match="exactness envelope"
-    ):
-        weighted_kappa(bad, F.col("a"), F.col("b")).collect()
-    # the boundary |label| == 10^4 stays legal (and negative labels
-    # inside the envelope too)
-    ok = spark.createDataFrame(
-        [(10000, 10000), (-10000, 9999), (0, 10000)], "a long, b long"
-    )
-    out = weighted_kappa(ok, F.col("a"), F.col("b")).collect()[0]
-    assert out.n == 3
-
-
-def test_macro_f1_from_cells_excludes_null_keys(spark):
-    """r11 sweep of the r10 NULL-group-key class: the per-class LEFT
-    join matches by_actual to by_pred on `keys` — before the entry
-    exclusion a NULL-keyed group's pred_total silently read 0 and its
-    macro-F1 deflated. Now excluded, same as every keyed agreement
-    operator."""
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        multiclass_macro_f1_from_cells,
-    )
-
-    cells = spark.createDataFrame(
-        [(None, "a", "a", 10), ("g", "a", "a", 8), ("g", "a", "b", 2)],
-        "k string, actual string, predicted string, n long",
-    )
-    rows = multiclass_macro_f1_from_cells(cells, keys=["k"]).collect()
-    assert {r["k"] for r in rows} == {"g"}
-    assert rows[0].n == 10 and rows[0].accuracy == 0.8
-    # and the weighted twin keeps rejecting NULL keys the same way
-    wrows = weighted_kappa_from_cells(
-        spark.createDataFrame(
-            [(None, 1, 1, 5), ("g", 1, 1, 5), ("g", 1, 2, 5)],
-            "k string, actual long, predicted long, n long",
-        ),
-        keys=["k"],
-    ).collect()
-    assert {r["k"] for r in wrows} == {"g"}
-
-
-# ---------------------------------------------------------------------------
-# store serving path: macro-F1 read == direct macro-F1 over all facts
-# ---------------------------------------------------------------------------
-def test_macro_f1_store_read_equals_direct(spark, tmp_path):
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        multiclass_macro_f1,
-    )
-    from blockchain_data_engineering_spark.streaming.sketches import (
-        eval_cells_delta_sink,
-        eval_cells_store_macro_f1,
-    )
-
-    rows = [("en", "en"), ("en", "de"), ("de", "de"), ("fr", "fr"),
-            ("fr", "en"), ("de", "de"), ("en", "en"), ("fr", "fr")]
-    df = spark.createDataFrame(rows, "a string, p string")
-    store = str(tmp_path / "cells")
-    sink = eval_cells_delta_sink(store, "a", "p")
-    sink(df.limit(3), 0)
-    sink(df.subtract(df.limit(3)), 1)  # two deltas over a split
-    # cell additivity: the store sum must serve the same numbers as
-    # the direct batch statistic over SOME 8-fact multiset — here the
-    # split is exact (limit + subtract partition the distinct rows),
-    # so compare against the direct run on the full frame's cells
-    served = eval_cells_store_macro_f1(spark, store).collect()[0]
-    direct = multiclass_macro_f1(df, F.col("a"), F.col("p")).collect()[0]
-    # subtract() dedups: rebuild the exact multiset the store saw
-    seen = spark.read.parquet(store).groupBy("actual", "predicted").agg(
-        F.sum("n").alias("n")
-    )
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        multiclass_macro_f1_from_cells,
-    )
-
-    direct2 = multiclass_macro_f1_from_cells(seen).collect()[0]
-    assert served == direct2
-    assert served.n_classes == direct.n_classes
-
-
-# ---------------------------------------------------------------------------
 # plan pins for the r11 gates
 # ---------------------------------------------------------------------------
 def test_r11_plan_shapes(spark, sf_dir):
     """Plan pins: multiclass log-loss is the binary gate's shape (one
     aggregate chain, one broadcast-hash ln-table lookup, no Window /
     shuffle join); KL keeps the bounded drift windows + broadcast
-    lookups; label MI is cell-grain aggregates + broadcast lookups
-    with NO cartesian anywhere; ordinal alpha is cartesian-free (the
-    category 'cross' is the e-transform equi join); the macro-F1
-    store read ends in keyed equi joins only (no BNLJ at all — the
-    kappa twin's 1-row compose class doesn't occur here)."""
+    lookups; label MI is a cell-grain window, two broadcast-hash
+    marginal joins and one tagged-union aggregate with NO cartesian
+    anywhere; ordinal alpha is cartesian-free (the category 'cross'
+    is the e-transform equi join); the macro-F1 store read ends in
+    the per-class equi join and one aggregate (no BNLJ at all)."""
     from test_plans import _plan
 
     p = _plan(spark, sf_dir, "ml_log_loss_multiclass")
@@ -604,112 +414,16 @@ def test_r11_plan_shapes(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p
     p = _plan(spark, sf_dir, "ml_label_mi")
     assert "CartesianProduct" not in p
-    # the global tot/mi/ha/hp recombination rides constant-key equi
-    # joins (the __j trick) — broadcast hash, never a BNLJ
+    # the group total is a window over the cells, the two marginals
+    # reach the cells by broadcast-hash equi joins on the label, the
+    # ln lookups are literal-array gets, and one tagged-union
+    # aggregate recombines the terms — no compose join, never a BNLJ
     assert "BroadcastNestedLoopJoin" not in p
     p = _plan(spark, sf_dir, "ml_krippendorff_ordinal")
     assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p
     p = _plan(spark, sf_dir, "ml_macro_f1_from_store")
     assert "CartesianProduct" not in p
     assert p.count("BroadcastNestedLoopJoin Cross") == 0
-
-
-# ---------------------------------------------------------------------------
-# adjusted Rand index (batch 2)
-# ---------------------------------------------------------------------------
-def _py_ari(pairs):
-    """Textbook Hubert-Arabie ARI (float) + raw Rand index."""
-    cell = Counter(pairs)
-    am = Counter(a for a, _ in pairs)
-    pm = Counter(p for _, p in pairs)
-    n = len(pairs)
-    c2 = lambda x: x * (x - 1) // 2  # noqa: E731
-    s = sum(c2(v) for v in cell.values())
-    a = sum(c2(v) for v in am.values())
-    b = sum(c2(v) for v in pm.values())
-    t = c2(n)
-    den = 0.5 * (a + b) - a * b / t
-    ari = (s - a * b / t) / den if den else None
-    ri = (t + 2 * s - a - b) / t if t else None
-    return ari, ri
-
-
-def test_adjusted_rand_known_values(spark):
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        adjusted_rand_index,
-    )
-
-    pairs = (
-        [("x", "P")] * 30 + [("x", "Q")] * 10
-        + [("y", "Q")] * 25 + [("y", "R")] * 5
-        + [("z", "R")] * 30
-    )
-    df = spark.createDataFrame(pairs, "a string, p string")
-    out = adjusted_rand_index(df, F.col("a"), F.col("p")).collect()[0]
-    ari, ri = _py_ari(pairs)
-    assert out.n == 100
-    assert out.ari == pytest.approx(ari, abs=1e-12)
-    assert out.rand_index == pytest.approx(ri, abs=1e-12)
-    # a bijective relabeling is a PERFECT partition match: ari and
-    # rand_index are exactly 1 (integer identity num == den)
-    perm = spark.createDataFrame(
-        [("a", "A")] * 7 + [("b", "B")] * 13 + [("c", "C")] * 4,
-        "a string, p string",
-    )
-    o = adjusted_rand_index(perm, F.col("a"), F.col("p")).collect()[0]
-    assert o.ari == 1.0 and o.rand_index == 1.0
-    assert o.ari_num == o.ari_den
-    # degenerate: both labelings one cluster → chance == observation,
-    # adjustment undefined (NULL), rand index still defined (1.0)
-    const = spark.createDataFrame(
-        [("a", "A")] * 5, "a string, p string"
-    )
-    c = adjusted_rand_index(const, F.col("a"), F.col("p")).collect()[0]
-    assert c.ari is None and int(c.ari_den) == 0 and c.rand_index == 1.0
-    # empty input: one global row of zeros, NULL scalars
-    empty = spark.createDataFrame([], "a string, p string")
-    e = adjusted_rand_index(empty, F.col("a"), F.col("p")).collect()[0]
-    assert e.n == 0 and e.ari is None and e.rand_index is None
-
-
-def test_adjusted_rand_determinism_and_cells(spark):
-    import random
-
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        adjusted_rand_from_cells,
-        adjusted_rand_index,
-    )
-
-    rng = random.Random(31)
-    pairs = [
-        (f"a{rng.randrange(5)}", f"p{rng.randrange(4)}") for _ in range(700)
-    ]
-    df = spark.createDataFrame(pairs, "a string, p string")
-    x = adjusted_rand_index(df, F.col("a"), F.col("p")).collect()[0]
-    y = adjusted_rand_index(
-        df.repartition(23), F.col("a"), F.col("p")
-    ).collect()[0]
-    assert (x.ari_num, x.ari_den, x.ari, x.rand_index) == (
-        y.ari_num,
-        y.ari_den,
-        y.ari,
-        y.rand_index,
-    )
-    ari, _ = _py_ari(pairs)
-    assert x.ari == pytest.approx(ari, abs=1e-12)
-    # duplicate cells sum (per-batch deltas merge)
-    cells = spark.createDataFrame(
-        [("a", "x", 30), ("a", "x", 10), ("b", "y", 60)],
-        "actual string, predicted string, n long",
-    )
-    whole = spark.createDataFrame(
-        [("a", "x", 40), ("b", "y", 60)],
-        "actual string, predicted string, n long",
-    )
-    assert (
-        adjusted_rand_from_cells(cells).collect()
-        == adjusted_rand_from_cells(whole).collect()
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -777,111 +491,6 @@ def test_r11_batch2_plan_shapes(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p
     # r12: the ln-table lookups are literal-array gets — join-free
     assert "BroadcastHashJoin" not in p
-
-
-# ---------------------------------------------------------------------------
-# per-class classification report (batch 3): the drill-down must SUM
-# to the macro scalars
-# ---------------------------------------------------------------------------
-def test_class_report_known_values(spark):
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        multiclass_class_report,
-    )
-
-    # confusion: en{en:3, fr:1}, fr{fr:2, zz:1} — 'zz' predicted-only
-    rows = (
-        [("en", "en")] * 3 + [("en", "fr")] + [("fr", "fr")] * 2
-        + [("fr", "zz")]
-    )
-    df = spark.createDataFrame(rows, "a string, p string")
-    rep = {
-        r["class"]: r
-        for r in multiclass_class_report(
-            df, F.col("a"), F.col("p")
-        ).collect()
-    }
-    # 'zz' has no actual support -> no row; its mass is fr's fp? no —
-    # zz was PREDICTED for an fr-actual row, so it is fr's fn side,
-    # and zz itself (never actual) gets no recall row
-    assert set(rep) == {"en", "fr"}
-    en, fr = rep["en"], rep["fr"]
-    assert (en.support, en.tp, en.fp, en.fn) == (4, 3, 0, 1)
-    assert (fr.support, fr.tp, fr.fp, fr.fn) == (3, 2, 1, 1)
-    assert en.precision == 1.0 and en.recall == 0.75
-    assert fr.precision == 2 / 3 and fr.recall == 2 / 3
-    assert en.f1 == 2 * 3 / (4 + 3) and fr.f1 == 2 * 2 / (3 + 3)
-    # never-predicted actual class: precision NULL, f1 = 0 via
-    # support-only denominator
-    df2 = spark.createDataFrame(
-        [("a", "b"), ("b", "b")], "a string, p string"
-    )
-    rep2 = {
-        r["class"]: r
-        for r in multiclass_class_report(
-            df2, F.col("a"), F.col("p")
-        ).collect()
-    }
-    assert rep2["a"].precision is None and rep2["a"].f1 == 0.0
-    assert rep2["a"].fp == 0 and rep2["a"].fn == 1
-
-
-def test_class_report_sums_to_macro_scalars(spark):
-    """The drill-down contract: sum(f1_num) == macro_f1_num and
-    sum(tp)/sum(support) == accuracy, integer-for-integer — the rows
-    ARE the scalar, disaggregated."""
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        multiclass_class_report,
-        multiclass_macro_f1,
-    )
-
-    import random
-
-    rng = random.Random(11)
-    cls = ["en", "fr", "de", "es", "zz"]
-    rows = [
-        ("g%d" % (i % 3), rng.choice(cls[:4]), rng.choice(cls))
-        for i in range(400)
-    ]
-    df = spark.createDataFrame(rows, "k string, a string, p string")
-    rep = multiclass_class_report(
-        df, F.col("a"), F.col("p"), keys=["k"]
-    ).collect()
-    mac = {
-        r["k"]: r
-        for r in multiclass_macro_f1(
-            df, F.col("a"), F.col("p"), keys=["k"]
-        ).collect()
-    }
-    sums = defaultdict(lambda: [0, 0, 0, 0])
-    for r in rep:
-        s = sums[r["k"]]
-        s[0] += int(r["f1_num"])
-        s[1] += r["tp"]
-        s[2] += r["support"]
-        s[3] += 1
-    for k, m in mac.items():
-        assert sums[k][0] == int(m["macro_f1_num"])
-        assert sums[k][1] / sums[k][2] == m["accuracy"]
-        assert sums[k][3] == m["n_classes"]
-
-
-def test_class_report_excludes_null_keys_and_repartition(spark):
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        multiclass_class_report_from_cells,
-    )
-
-    cells = spark.createDataFrame(
-        [(None, "a", "a", 10), ("g", "a", "a", 8), ("g", "a", "b", 2)],
-        "k string, actual string, predicted string, n long",
-    )
-    rows = multiclass_class_report_from_cells(cells, keys=["k"]).collect()
-    assert {r["k"] for r in rows} == {"g"}
-    base = rows[0]
-    for parts in (1, 7):
-        again = multiclass_class_report_from_cells(
-            cells.repartition(parts), keys=["k"]
-        ).collect()
-        assert sorted(map(tuple, again)) == [tuple(base)]
 
 
 # ---------------------------------------------------------------------------
@@ -1031,33 +640,6 @@ def test_krippendorff_explain_sums_to_alpha(spark, metric):
 
 
 # ---------------------------------------------------------------------------
-# store serving path: ARI read == direct ARI over the summed cells
-# ---------------------------------------------------------------------------
-def test_ari_store_read_equals_direct(spark, tmp_path):
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        adjusted_rand_from_cells,
-    )
-    from blockchain_data_engineering_spark.streaming.sketches import (
-        eval_cells_delta_sink,
-        eval_cells_store_ari,
-    )
-
-    rows = [("en", "en"), ("en", "de"), ("de", "de"), ("fr", "fr"),
-            ("fr", "en"), ("de", "de"), ("en", "en"), ("fr", "fr")]
-    df = spark.createDataFrame(rows, "a string, p string")
-    store = str(tmp_path / "cells")
-    sink = eval_cells_delta_sink(store, "a", "p")
-    sink(df.limit(3), 0)
-    sink(df.subtract(df.limit(3)), 1)
-    served = eval_cells_store_ari(spark, store).collect()[0]
-    seen = spark.read.parquet(store).groupBy("actual", "predicted").agg(
-        F.sum("n").alias("n")
-    )
-    direct = adjusted_rand_from_cells(seen).collect()[0]
-    assert served == direct
-
-
-# ---------------------------------------------------------------------------
 # plan pins for the batch-3 gates
 # ---------------------------------------------------------------------------
 def test_r11_batch3_plan_shapes(spark, sf_dir):
@@ -1195,34 +777,3 @@ def test_ece_adaptive_plan_shape(spark, sf_dir):
     for op in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
         assert op not in p, f"ml_ece_adaptive plans a {op}"
     assert "Window" in p  # the bounded distinct-score-grain windows
-
-
-# ---------------------------------------------------------------------------
-# store serving path: per-class report read == direct from summed cells
-# ---------------------------------------------------------------------------
-def test_class_report_store_read_equals_direct(spark, tmp_path):
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        multiclass_class_report_from_cells,
-    )
-    from blockchain_data_engineering_spark.streaming.sketches import (
-        eval_cells_delta_sink,
-        eval_cells_store_class_report,
-    )
-
-    rows = [("en", "en"), ("en", "de"), ("de", "de"), ("fr", "fr"),
-            ("fr", "en"), ("de", "de"), ("en", "en"), ("fr", "fr")]
-    df = spark.createDataFrame(rows, "a string, p string")
-    store = str(tmp_path / "cells")
-    sink = eval_cells_delta_sink(store, "a", "p")
-    sink(df.limit(3), 0)
-    sink(df.subtract(df.limit(3)), 1)
-    served = sorted(
-        map(tuple, eval_cells_store_class_report(spark, store).collect())
-    )
-    seen = spark.read.parquet(store).groupBy("actual", "predicted").agg(
-        F.sum("n").alias("n")
-    )
-    direct = sorted(
-        map(tuple, multiclass_class_report_from_cells(seen).collect())
-    )
-    assert served == direct

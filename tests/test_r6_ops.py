@@ -8,6 +8,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+# The confusion-cell tests live in test_agreement.py; importing them
+# here keeps each one collected under this module's name as well.
+from test_agreement import test_confusion_counts_known_values  # noqa: F401
+
 
 def test_auc_exact_known_values_with_ties(spark):
     """Hand-computed Mann-Whitney AUC on a 4-row fixture with a tie
@@ -36,23 +40,6 @@ def test_auc_exact_known_values_with_ties(spark):
     one_class = spark.createDataFrame([(1, True), (2, True)], "s long, y boolean")
     r = auc_exact(one_class, F.col("y"), F.col("s")).first()
     assert r.auc is None and r.auc_den == 0
-
-
-def test_confusion_counts_known_values(spark):
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        confusion_counts,
-    )
-
-    df = spark.createDataFrame(
-        # (label, pred): 3 TP, 1 FP, 2 FN, 4 TN
-        [(True, True)] * 3 + [(False, True)] + [(True, False)] * 2
-        + [(False, False)] * 4,
-        "y boolean, p boolean",
-    )
-    r = confusion_counts(df, F.col("y"), F.col("p")).first()
-    assert (r.tp, r.fp, r.fn, r.tn) == (3, 1, 2, 4)
-    assert r.precision == 3 / 4 and r.recall == 3 / 5
-    assert r.f1 == 6 / 9
 
 
 def test_compaction_plan_bins_and_big_file_skip(spark):

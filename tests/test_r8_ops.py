@@ -1,7 +1,8 @@
 """Round-8 eval operators: average precision (PR-curve scalar) and
 NDCG@k (graded ranking) — hand-computed known values, the quantization
 algebra, and edge conventions. Heavy hitters live in
-test_heavy_hitters.py; DuckDB parity in test_oracle_parity."""
+test_heavy_hitters.py, macro-F1 in test_agreement.py; DuckDB parity in
+test_oracle_parity."""
 
 from __future__ import annotations
 
@@ -13,6 +14,13 @@ from blockchain_data_engineering_spark.operators.ml_eval import (
     average_precision,
     ndcg_at_k,
     ndcg_discounts,
+)
+
+# The confusion-cell tests live in test_agreement.py; importing them
+# here keeps each one collected under this module's name as well.
+from test_agreement import (  # noqa: F401
+    test_macro_f1_known_values,
+    test_macro_f1_perfect_and_keys,
 )
 
 
@@ -133,56 +141,6 @@ def test_ndcg_ideal_beats_every_permutation(spark):
         )
         [r] = ndcg_at_k(results, truth, k=4).collect()
         assert 0.0 < r["ndcg"] <= 1.0, perm
-
-
-def test_macro_f1_known_values(spark):
-    """Hand-computed 3-class matrix: per-class F1 = 4/7, 1/2, 0 →
-    macro = their quantized-mean; accuracy = Σtp/n exactly; a label
-    appearing ONLY as a prediction adds no class (sklearn's
-    labels=present-in-y_true convention) but does count as that
-    class's fp through pred_total."""
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        _AP_SCALE,
-        multiclass_macro_f1,
-    )
-
-    rows = [
-        ("a", "a"), ("a", "a"), ("a", "b"),
-        ("b", "b"), ("b", "a"),
-        ("c", "a"),
-    ]
-    df = spark.createDataFrame(rows, "y string, p string")
-    [r] = multiclass_macro_f1(df, F.col("y"), F.col("p")).collect()
-    s = _AP_SCALE
-    assert r["n"] == 6 and r["n_classes"] == 3
-    assert r["accuracy"] == 0.5
-    expected = (4 * s) // 7 + (2 * s) // 4 + 0
-    assert int(r["macro_f1_num"]) == expected
-    assert r["macro_f1"] == expected / (3 * s)
-
-    # prediction-only label 'd': no new class, but a's support grows
-    df2 = spark.createDataFrame(rows + [("a", "d")], "y string, p string")
-    [r2] = multiclass_macro_f1(df2, F.col("y"), F.col("p")).collect()
-    assert r2["n_classes"] == 3 and r2["n"] == 7
-    # a: tp 2, support 4, pred_total 4 → f1q = 4S div 8 = S/2
-    assert int(r2["macro_f1_num"]) == (4 * s) // 8 + (2 * s) // 4 + 0
-
-
-def test_macro_f1_perfect_and_keys(spark):
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        multiclass_macro_f1,
-    )
-
-    rows = [("g", "x", "x"), ("g", "y", "y"), ("h", "x", "y")]
-    df = spark.createDataFrame(rows, "k string, y string, p string")
-    got = {
-        r["k"]: r
-        for r in multiclass_macro_f1(
-            df, F.col("y"), F.col("p"), keys=["k"]
-        ).collect()
-    }
-    assert got["g"]["macro_f1"] == 1.0 and got["g"]["accuracy"] == 1.0
-    assert got["h"]["macro_f1"] == 0.0 and got["h"]["accuracy"] == 0.0
 
 
 def test_brier_score_exact(spark):

@@ -1,6 +1,6 @@
-"""Round-9 operators: expected calibration error, Cohen's kappa,
-Matthews correlation, Spearman/Kendall rank agreement, cumulative
-gain/lift, TVD distribution drift, Fleiss' kappa, RBO, the heavy-hitter
+"""Round-9 operators: expected calibration error (Cohen's kappa and
+Matthews correlation live in test_agreement.py), Spearman/Kendall
+rank agreement, cumulative gain/lift, TVD distribution drift, Fleiss' kappa, RBO, the heavy-hitter
 φ-scan gate tier, and the r8-verdict fixes (rrf identifier quoting + lcm guard, the
 zone-map oracle's NULL-stats arm, the merge-caller materialization
 hook). Hand-computed known values + edge conventions; DuckDB parity
@@ -17,13 +17,20 @@ from blockchain_data_engineering_spark.operators.dq import (
     distribution_drift_tvd,
 )
 from blockchain_data_engineering_spark.operators.ml_eval import (
-    cohens_kappa,
     cumulative_gain,
     ece,
     kendall_tau,
-    matthews_corr,
     rrf_fuse,
     spearman_rho,
+)
+
+# The confusion-cell tests live in test_agreement.py; importing them
+# here keeps each one collected under this module's name as well.
+from test_agreement import (  # noqa: F401
+    test_cohens_kappa_known_values,
+    test_cohens_kappa_label_sets_and_degenerates,
+    test_matthews_corr_degenerate_and_nulls,
+    test_matthews_corr_known_values,
 )
 
 
@@ -66,78 +73,6 @@ def test_ece_edges(spark):
     assert int(e["ece_num"]) == 0 and e["ece"] is None
     with pytest.raises(ValueError):
         ece(df, F.col("y"), F.col("s"), s_max=10, n_bins=0)
-
-
-def test_cohens_kappa_known_values(spark):
-    """The classic 2×2 worked example: 20 (x,x), 5 (x,y), 10 (y,x),
-    15 (y,y) → p_o = 0.7, p_e = 0.5, κ = 0.4 — exactly 500/1250."""
-    rows = (
-        [("x", "x")] * 20 + [("x", "y")] * 5
-        + [("y", "x")] * 10 + [("y", "y")] * 15
-    )
-    df = spark.createDataFrame(rows, "a string, b string")
-    [r] = cohens_kappa(df, F.col("a"), F.col("b")).collect()
-    assert r["n"] == 50 and r["n_labels"] == 2
-    assert int(r["kappa_num"]) == 500 and int(r["kappa_den"]) == 1250
-    assert r["kappa"] == 0.4
-
-
-def test_cohens_kappa_label_sets_and_degenerates(spark):
-    """A label seen by only ONE rater still counts in n_labels but
-    adds 0 to p_e; both-raters-constant-and-identical → denominator 0
-    → κ NULL (the sklearn NaN case); both constant but DIFFERENT →
-    κ = 0 exactly."""
-    rows = (
-        [("x", "x")] * 20 + [("x", "y")] * 5
-        + [("y", "x")] * 10 + [("y", "y")] * 15 + [("z", "x")] * 2
-    )
-    df = spark.createDataFrame(rows, "a string, b string")
-    [r] = cohens_kappa(df, F.col("a"), F.col("b")).collect()
-    assert r["n"] == 52 and r["n_labels"] == 3
-    assert int(r["kappa_num"]) == 52 * 35 - 1300
-    assert int(r["kappa_den"]) == 52 * 52 - 1300
-    assert r["kappa"] == (52 * 35 - 1300) / (52 * 52 - 1300)
-
-    same = spark.createDataFrame([("q", "q")] * 4, "a string, b string")
-    [s] = cohens_kappa(same, F.col("a"), F.col("b")).collect()
-    assert int(s["kappa_den"]) == 0 and s["kappa"] is None
-
-    diff = spark.createDataFrame([("a", "b")] * 3, "a string, b string")
-    [d] = cohens_kappa(diff, F.col("a"), F.col("b")).collect()
-    assert d["kappa"] == 0.0 and int(d["kappa_den"]) == 9
-
-
-def test_matthews_corr_known_values(spark):
-    """tp=6 fp=1 fn=2 tn=3: num = 18−2 = 16, d1 = 7·8 = 56,
-    d2 = 4·5 = 20, MCC = 16/(√56·√20) — computed with the SAME
-    pairwise-root float recipe the operator documents."""
-    rows = (
-        [(True, True)] * 6 + [(False, True)] * 1
-        + [(True, False)] * 2 + [(False, False)] * 3
-    )
-    df = spark.createDataFrame(rows, "y boolean, p boolean")
-    [r] = matthews_corr(df, F.col("y"), F.col("p")).collect()
-    assert (r["tp"], r["fp"], r["fn"], r["tn"]) == (6, 1, 2, 3)
-    assert int(r["mcc_num"]) == 16
-    assert int(r["mcc_d1"]) == 56 and int(r["mcc_d2"]) == 20
-    assert r["mcc"] == 16 / (math.sqrt(56.0) * math.sqrt(20.0))
-    # perfect classifier → exactly 1.0 (num == √d1·√d2 when balanced)
-    perf = spark.createDataFrame(
-        [(True, True)] * 2 + [(False, False)] * 2, "y boolean, p boolean"
-    )
-    [p] = matthews_corr(perf, F.col("y"), F.col("p")).collect()
-    assert p["mcc"] == 1.0
-
-
-def test_matthews_corr_degenerate_and_nulls(spark):
-    """A degenerate margin (never-positive predictor → d1 = 0) gives
-    mcc NULL, never the silent sklearn 0; NULL label/pred rows are
-    excluded (module convention)."""
-    rows = [(True, False), (False, False), (None, True), (True, None)]
-    df = spark.createDataFrame(rows, "y boolean, p boolean")
-    [r] = matthews_corr(df, F.col("y"), F.col("p")).collect()
-    assert r["tp"] == 0 and r["fp"] == 0
-    assert int(r["mcc_d1"]) == 0 and r["mcc"] is None
 
 
 def test_spearman_rho_known_values(spark):

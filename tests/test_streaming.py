@@ -25,6 +25,10 @@ from blockchain_data_engineering_spark.streaming.pipeline import (
     run_vol_transfers_pipeline,
 )
 
+# The confusion-cell tests live in test_agreement.py; importing them
+# here keeps each one collected under this module's name as well.
+from test_agreement import test_streaming_eval_cells_store_matches_batch  # noqa: F401
+
 
 @pytest.fixture(scope="module")
 def chain():
@@ -1617,81 +1621,3 @@ def test_rollback_aware_upsert_auto_prunes_with_watermark(spark, tmp_path):
     assert {
         r["id"] for r in spark.read.parquet(path).select("id").collect()
     } == {"a"}
-
-
-def test_streaming_eval_cells_store_matches_batch(spark, tmp_path):
-    """The eval-cell delta store (r9 agreement family): per-batch
-    (actual, predicted) cell counts land as _batch_id partitions; the
-    store read sums them, so the stream's Cohen's kappa is EXACTLY the
-    batch kappa over every fact ever streamed (cells are additive —
-    no error term, unlike the CMS/HLL/MG members of the store family).
-    Replaying a batch leaves the read unchanged."""
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        cohens_kappa,
-    )
-    from blockchain_data_engineering_spark.streaming.sketches import (
-        _write_delta,
-        eval_cells_delta_sink,
-        eval_cells_store_kappa,
-    )
-
-    src = tmp_path / "cells_stream"
-    src.mkdir()
-    # declared;predicted pairs with a deterministic disagreement mix
-    pairs = [
-        ("en", "en") if i % 5 < 3 else ("en", "fr") if i % 5 == 3
-        else ("fr", "fr")
-        for i in range(200)
-    ]
-    for part in range(4):
-        (src / f"p{part}.txt").write_text(
-            "\n".join(f"{a};{b}" for a, b in pairs[part::4]) + "\n"
-        )
-
-    store = str(tmp_path / "cells_store")
-    stream = spark.readStream.option("maxFilesPerTrigger", 1).text(str(src))
-    split = stream.select(
-        F.split("value", ";")[0].alias("actual"),
-        F.split("value", ";")[1].alias("predicted"),
-    )
-    q = (
-        split.writeStream.foreachBatch(
-            eval_cells_delta_sink(store, "actual", "predicted")
-        )
-        .option("checkpointLocation", str(tmp_path / "cellsckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    [got] = eval_cells_store_kappa(spark, store).collect()
-    batch = spark.createDataFrame(pairs, "a string, b string")
-    [want] = cohens_kappa(batch, F.col("a"), F.col("b")).collect()
-    assert got["n"] == want["n"] == 200
-    assert str(got["kappa_num"]) == str(want["kappa_num"])
-    assert str(got["kappa_den"]) == str(want["kappa_den"])
-    assert got["kappa"] == want["kappa"]
-
-    # the SAME store answers macro-F1/accuracy (second reader of the
-    # one maintained cell state)
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        multiclass_macro_f1,
-    )
-    from blockchain_data_engineering_spark.streaming.sketches import (
-        eval_cells_store_macro_f1,
-    )
-
-    [gm] = eval_cells_store_macro_f1(spark, store).collect()
-    [wm] = multiclass_macro_f1(batch, F.col("a"), F.col("b")).collect()
-    assert gm["n"] == wm["n"] and gm["accuracy"] == wm["accuracy"]
-    assert str(gm["macro_f1_num"]) == str(wm["macro_f1_num"])
-    assert gm["macro_f1"] == wm["macro_f1"]
-
-    # replay idempotence: batch 0's delta rewritten over itself
-    d0 = spark.read.parquet(f"{store}/_batch_id=0")
-    _write_delta(d0, store, 0)
-    [got2] = eval_cells_store_kappa(spark, store).collect()
-    assert (str(got2["kappa_num"]), str(got2["kappa_den"])) == (
-        str(got["kappa_num"]),
-        str(got["kappa_den"]),
-    )

@@ -5,15 +5,20 @@ from __future__ import annotations
 import importlib.util
 import os
 
-# loaded by file path: putting tools/ on sys.path would let
-# tools/profile.py shadow the standard-library profile module
-_spec = importlib.util.spec_from_file_location(
-    "code_lines",
-    os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "code_lines.py"),
-)
-_mod = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(_mod)
-code_lines = _mod.code_lines
+_TOOLS = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+
+
+def _load(name: str):
+    # loaded by file path: putting tools/ on sys.path would let
+    # tools/profile.py shadow the standard-library profile module
+    path = os.path.join(_TOOLS, f"{name}.py")
+    spec = importlib.util.spec_from_file_location(name, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+code_lines = _load("code_lines").code_lines
 
 
 def test_code_lines_skips_docstrings_comments_and_blanks():
@@ -37,3 +42,16 @@ class A:
 '''
     # import, class, def, the two-line string assignment, return
     assert code_lines(source) == 6
+
+
+def test_contract_lists_gate_queries_then_oracle_hashes():
+    import hashlib
+
+    from blockchain_data_engineering_spark.plans import GATE_ORDER, ORACLES
+
+    lines = _load("contract").contract_lines()
+    n = len(GATE_ORDER)
+    assert n == 50 and lines[:n] == list(GATE_ORDER)
+    assert lines[n:] == [
+        f"{q} {hashlib.sha256(ORACLES[q].encode()).hexdigest()}" for q in GATE_ORDER
+    ]
