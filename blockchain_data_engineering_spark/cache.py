@@ -106,10 +106,17 @@ def round_checkpoint(df: DataFrame) -> DataFrame:
     aggregate paid 2.2 s of pure planning; flat rounds stay ~0.4 s).
     The scan reports ``UnknownPartitioning``: a round's output
     partitioning does not carry into the next round's plan. Checkpoint
-    blocks are RDD-level storage that is GC-cleaned when the round's
-    DataFrame drops — nothing registers in the catalog CacheManager,
-    so no cache outlives the call. Each round is its own executed
-    query, so its physical plan is in the SQL status store.
+    blocks are RDD-level storage: nothing registers in the catalog
+    CacheManager, but the RDD stays in the SparkContext's persistent
+    RDDs until it is released. Spark's ContextCleaner frees it only
+    once the JVM holds no reference to it: the Python DataFrame must be
+    garbage-collected first (its py4j handle pins the JVM Dataset), and
+    then the JVM must collect. A replay's per-batch checkpoints
+    survived a JVM ``System.gc()`` and went only after a Python
+    ``gc.collect()`` plus a JVM GC. A caller that knows when a
+    checkpoint is dead releases it at once with
+    :func:`release_checkpoint`. Each round is its own executed query,
+    so its physical plan is in the SQL status store.
 
     Fault-tolerance trade: ``localCheckpoint`` severs lineage onto
     NON-REPLICATED executor-local blocks — on a cluster, losing an
@@ -124,6 +131,15 @@ def round_checkpoint(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a :func:`round_checkpoint` frame now, without
+    waiting for garbage collection. ``df`` must be the checkpoint frame
+    itself (its analyzed plan is the checkpointed RDD scan). A later
+    action on ``df``, or on a frame built from it, fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def finalize(result: DataFrame, *caches: DataFrame) -> DataFrame:
     """Hand ``result`` and the caches it reads to the cache owner.
 
@@ -132,7 +148,8 @@ def finalize(result: DataFrame, *caches: DataFrame) -> DataFrame:
     no scope open the settle happens here: eager ``localCheckpoint``
     of ``result`` (while every cache is still live), then release of
     the caches. The checkpoint is RDD-level storage, invisible to the
-    Spark catalog CacheManager, and dies with the DataFrame.
+    Spark catalog CacheManager, freed once the DataFrame is garbage-
+    collected (see :func:`round_checkpoint`).
     """
     owner = _OWNER.get()
     if owner is None:

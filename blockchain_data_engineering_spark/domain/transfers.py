@@ -22,29 +22,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from blockchain_data_engineering_spark.domain.volumes import adjusted_value
+from blockchain_data_engineering_spark.domain.volumes import priced
 
 
 def transfer_edges(transacted: DataFrame, dim: DataFrame) -> DataFrame:
     """(tx_hash, unit, send_addr, rx_addr, value, value_adj) edges."""
+    # priced after pairing: a join's output is sized as the product of
+    # its inputs, so pricing first would hide from the planner that
+    # both sides of the pairing are small enough to broadcast
+    return priced(edges(transacted), dim)
+
+
+def edges(flows: DataFrame, *carry: str) -> DataFrame:
+    """(tx_hash, unit, send_addr, rx_addr, value, [carry...]) edges of a
+    net-flow frame: within each (tx_hash, unit), every receiver
+    (value > 0) paired with every sender (value < 0). ``carry`` names
+    receiver columns kept on the edge, such as an already computed
+    ``value_adj``."""
     keys = ["tx_hash", "unit"]
-    receivers = transacted.where(F.col("value") > 0).select(
-        *keys, F.col("address").alias("rx_addr"), "value"
+    receivers = flows.where(F.col("value") > 0).select(
+        *keys, F.col("address").alias("rx_addr"), "value", *carry
     )
-    senders = transacted.where(F.col("value") < 0).select(
+    senders = flows.where(F.col("value") < 0).select(
         *keys, F.col("address").alias("send_addr")
     )
-    edges = receivers.join(senders, keys, "inner")
-    enriched = edges.join(
-        F.broadcast(dim.select("unit", "last_price_ada", "decimals")), "unit", "left"
-    )
-    return enriched.select(
-        "tx_hash",
-        "unit",
-        "send_addr",
-        "rx_addr",
-        "value",
-        adjusted_value(
-            F.col("value"), F.col("unit"), F.col("last_price_ada"), F.col("decimals")
-        ).alias("value_adj"),
+    return receivers.join(senders, keys, "inner").select(
+        "tx_hash", "unit", "send_addr", "rx_addr", "value", *carry
     )

@@ -23,6 +23,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+_REF = ["spent_tx_hash", "spent_output_index"]
+
+
+def _outputs_by_ref(outputs: DataFrame, *extra) -> DataFrame:
+    return outputs.select(
+        F.col("tx_hash").alias("spent_tx_hash"),
+        F.col("output_index").alias("spent_output_index"),
+        "address",
+        "value",
+        *extra,
+    )
+
+
 def resolve_inputs(inputs: DataFrame, outputs: DataFrame, how: str = "inner") -> DataFrame:
     """Resolve input references against produced outputs.
 
@@ -38,13 +51,28 @@ def resolve_inputs(inputs: DataFrame, outputs: DataFrame, how: str = "inner") ->
     Returns one row per resolved input: the spending tx plus the spent
     output's address and value map.
     """
-    out = outputs.select(
-        F.col("tx_hash").alias("spent_tx_hash"),
-        F.col("output_index").alias("spent_output_index"),
-        F.col("address").alias("address"),
-        F.col("value").alias("value"),
+    return inputs.join(_outputs_by_ref(outputs), _REF, how)
+
+
+def resolve_in_batch(
+    inputs: DataFrame, batch_outputs: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(hits, misses) of one left join of a micro-batch's inputs to its
+    own outputs, with a hit flag.
+
+    ``hits`` are the rows of ``resolve_inputs(inputs, batch_outputs)``,
+    duplicate keys included; ``misses`` are the inputs with no match in
+    the batch, with the columns of ``inputs``. Resolving only the misses
+    against the history means a spend of this batch's output never
+    reads the history, so an output also landed there (a replayed
+    batch, or a store append that runs first) cannot resolve twice.
+    """
+    looked = inputs.join(
+        _outputs_by_ref(batch_outputs, F.lit(True).alias("__hit")), _REF, "left"
     )
-    return inputs.join(out, ["spent_tx_hash", "spent_output_index"], how)
+    hits = looked.where(F.col("__hit")).drop("__hit")
+    misses = looked.where(F.col("__hit").isNull()).select(*inputs.columns)
+    return hits, misses
 
 
 def input_units(resolved: DataFrame, quantity_type: str = "decimal(38,0)") -> DataFrame:

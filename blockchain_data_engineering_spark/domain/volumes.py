@@ -28,8 +28,8 @@ def price_dim(prices: DataFrame, decimals: DataFrame) -> DataFrame:
     """prices ⋈ decimals on unit (left), the J4 dim-enrich
     (src/etl_vol_transfers/main.py:116).
 
-    The dim MUST be unique per unit: volumes()/transfer_edges() left-
-    join it onto the fact rows, and a multi-provider price feed (the
+    The dim MUST be unique per unit: priced() left-joins it onto the
+    fact rows, and a multi-provider price feed (the
     PRICE_SCHEMA carries pricing_provider) would fan every matching
     fact row out per provider and inflate the sums. The reference's
     driver-side dict kept exactly one row per unit implicitly; here
@@ -65,6 +65,37 @@ def adjusted_value(
     )
 
 
+def priced(transacted: DataFrame, dim: DataFrame) -> DataFrame:
+    """``transacted`` plus ``value_adj``: every net-flow row priced in ADA
+    by :func:`adjusted_value` through a broadcast left join of the dim.
+
+    transacted: net-flow rows with ``unit`` and ``value`` columns; every
+                column is kept, in order.
+    dim:        price_dim() output (unit, last_price_ada, decimals).
+    """
+    enriched = transacted.join(
+        F.broadcast(dim.select("unit", "last_price_ada", "decimals")), "unit", "left"
+    )
+    return enriched.select(
+        *transacted.columns,
+        adjusted_value(
+            F.col("value"), F.col("unit"), F.col("last_price_ada"), F.col("decimals")
+        ).alias("value_adj"),
+    )
+
+
+def received_volumes(priced_flows: DataFrame, *coords: str) -> DataFrame:
+    """vol(hash, [coords...,] unit, value_adj): the per-tx per-unit sum
+    of the positive net flows of a :func:`priced` frame. ``coords``
+    names per-tx columns of ``priced_flows`` (``height``, ``slot``)
+    carried into the grouping key."""
+    return (
+        priced_flows.where(F.col("value") > 0)
+        .groupBy(F.col("tx_hash").alias("hash"), *coords, "unit")
+        .agg(F.sum("value_adj").alias("value_adj"))
+    )
+
+
 def volumes(
     transacted: DataFrame,
     dim: DataFrame,
@@ -78,21 +109,7 @@ def volumes(
                    block coordinates (the reference's J1 join,
                    src/etl_vol_transfers/main.py:176-177).
     """
-    received = transacted.where(F.col("value") > 0)
-    enriched = received.join(
-        F.broadcast(dim.select("unit", "last_price_ada", "decimals")), "unit", "left"
-    )
-    vol = (
-        enriched.withColumn(
-            "value_adj",
-            adjusted_value(
-                F.col("value"), F.col("unit"),
-                F.col("last_price_ada"), F.col("decimals"),
-            ),
-        )
-        .groupBy(F.col("tx_hash").alias("hash"), F.col("unit"))
-        .agg(F.sum("value_adj").alias("value_adj"))
-    )
+    vol = received_volumes(priced(transacted, dim))
     if blocks_coords is not None:
         vol = vol.join(blocks_coords, "hash", "inner").select(
             "hash", "height", "slot", "unit", "value_adj"

@@ -18,6 +18,15 @@ Defaults chosen for correctness at small SF and sanity at cluster scale:
   reuses its classes instead of recompiling them with Janino; a static
   conf, fixed when the session starts. ``codegen_compiles`` reads the
   JVM-wide compile count, so a warm run can be checked as warm.
+- PySpark's DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every ``Column`` method and ``F.col`` call reads the active session
+  and a conf and sets and clears the JVM's current origin: 13 py4j
+  commands per ``F.col`` instead of 3. The cost of turning it off: an
+  analysis or runtime error no longer names the Python call (the
+  DataFrame query-context fragment) that built the failing expression;
+  the Python traceback of the action still points at the action. A
+  static conf, like the codegen cache size.
 """
 
 from __future__ import annotations
@@ -40,6 +49,11 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # 4096 holds the gate's working set with 3x headroom (docs/SCALE.md,
 # "Generated-code cache").
 CODEGEN_CACHE_ENTRIES = 4096
+
+# PySpark reads this conf once per process, from the first session
+# active when a wrapped ``Column``/``functions`` call runs, and caches it
+# (``pyspark.errors.utils.is_debugging_enabled``).
+DATAFRAME_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
 
 def local_cpus() -> int:
@@ -66,6 +80,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config(DATAFRAME_DEBUGGING, "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -124,6 +139,10 @@ def configure_for_session(spark: SparkSession) -> SparkSession:
     and matter for plan quality. ``spark.sql.codegen.cache.maxEntries``
     is static too, so such a session keeps its own codegen cache size
     (``CODEGEN_CACHE_ENTRIES`` applies only to ``get_spark`` sessions).
+    ``DATAFRAME_DEBUGGING`` is static as well (a running session refuses
+    it with ``CANNOT_MODIFY_STATIC_CONFIG``), and PySpark reads it once
+    per process besides, so such a session keeps its own call-site
+    capture.
     """
     conf = {
         "spark.sql.adaptive.enabled": "true",

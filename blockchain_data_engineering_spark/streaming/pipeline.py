@@ -5,10 +5,10 @@ The reference's foreachBatch body runs TWO separate sink actions off
 one unpersisted lineage (volumes → Postgres, transfers → Neo4j;
 src/etl_vol_transfers/main.py:211-222) — every action replays the
 whole plan including uuid() keys and per-row REST calls. Here each
-micro-batch is persisted ONCE, every sink writes from the same
-materialized rows, ids are content hashes, and the query runs under a
-checkpoint — restart-safe, idempotent, exactly-once into
-transactional/MERGE sinks.
+micro-batch's priced net flows are materialized ONCE as a flat
+checkpoint, both sinks plan small queries over that one scan, ids are
+content hashes, and the query runs under a checkpoint — restart-safe,
+idempotent, exactly-once into transactional/MERGE sinks.
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from blockchain_data_engineering_spark.cache import release_checkpoint, round_checkpoint
 from blockchain_data_engineering_spark.domain import blocks as B
 from blockchain_data_engineering_spark.domain import netflow as N
 from blockchain_data_engineering_spark.domain import transfers as TR
@@ -39,6 +40,17 @@ def parquet_append_sink(path: str) -> Sink:
         df.withColumn("_batch_id", F.lit(batch_id)).write.mode("append").parquet(path)
 
     return write
+
+
+def _fits_broadcast(batch: DataFrame) -> bool:
+    """Whether Spark sizes ``batch`` within the session's broadcast
+    threshold (a persisted batch that has run reports its real size).
+    Frames derived from a small batch are broadcast by hint, because
+    the planner sizes a join's output as the product of its inputs,
+    and a checkpoint scan keeps the size of the plan it replaced."""
+    conf = batch.sparkSession._jsparkSession.sessionState().conf()
+    size = int(batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return 0 <= size <= conf.autoBroadcastJoinThreshold()
 
 
 def run_vol_transfers_pipeline(
@@ -74,64 +86,64 @@ def run_vol_transfers_pipeline(
                   UTxO state across batches; without it an output
                   created in batch N but spent in batch N+1 is
                   unresolvable.
+
+    ``vol_sink`` and ``transfer_sink`` receive frames over the batch's
+    checkpoint, which is released when both have returned, so a sink
+    writes its frame before it returns. Each tx hash is taken to be in
+    one block of a batch: the block coordinates are joined onto the
+    net-flow rows, so a tx in k blocks of one batch has each of its
+    rows k times in both sinks' input (and its net flows already count
+    its outputs k times).
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Persist the parsed batch FIRST: everything downstream (outputs,
-        # inputs, coords, both sinks) reads it, and without the persist
-        # each action re-scans the micro-batch source — the observe()
-        # counter showed 4 scans per batch before this line (the same
-        # recompute-per-action shape as reference hazard H1).
+        # Persist the parsed batch FIRST: the UTxO append and every
+        # branch of the priced frame below read it, and without the
+        # persist each read re-scans the micro-batch source — the
+        # observe() counter showed 4 scans per batch before this line
+        # (the same recompute-per-action shape as reference hazard H1).
         parsed = B.parse_block_lines(batch_df).persist()
         try:
             outputs_b = B.tx_outputs_table(parsed)
-            inputs_b = B.tx_inputs_table(parsed)
             if utxo_store_append is not None:
                 # land this batch's outputs in the UTxO store FIRST so
                 # cross-batch spends resolve (deterministic content
                 # keys make replays idempotent under a MERGE store)
                 utxo_store_append(outputs_b, batch_id)
             # Two-tier resolution: intra-batch spends against the
-            # (tiny) batch outputs first, the remainder against
-            # history. This replaces union+dropDuplicates over the
-            # FULL history — which re-shuffled the whole archive every
-            # micro-batch — with one batch-sized anti join; the
-            # history join itself co-locates when the store is
-            # bucketed by tx_hash (J5 layout). The anti join also
-            # makes double-resolution impossible when the store
-            # already contains this batch (replay).
-            keys = ["spent_tx_hash", "spent_output_index"]
-            res_batch = U.resolve_inputs(inputs_b, outputs_b)
-            remaining = inputs_b.join(
-                outputs_b.select(
-                    F.col("tx_hash").alias("spent_tx_hash"),
-                    F.col("output_index").alias("spent_output_index"),
-                ),
-                keys,
-                "left_anti",
-            )
+            # batch's own outputs first, only the misses against the
+            # history. While the batch is small the misses are
+            # broadcast, so the history is scanned once with no
+            # exchange whatever its size or layout; past the threshold
+            # the planner picks the join from its own estimates.
+            small = _fits_broadcast(parsed)
+            hits, misses = U.resolve_in_batch(B.tx_inputs_table(parsed), outputs_b)
             history = utxo_outputs() if callable(utxo_outputs) else utxo_outputs
-            resolved = res_batch.unionByName(
-                U.resolve_inputs(remaining, history)
+            resolved = hits.unionByName(
+                U.resolve_inputs(F.broadcast(misses) if small else misses, history)
             )
-            transacted = N.transacted(
+            flows = N.transacted(
                 U.input_units(resolved),
                 B.output_units(outputs_b).drop("output_index"),
             )
-            # ONE materialization, N sinks (H1 fix)
-            transacted.persist()
-            try:
-                coords = parsed.select(
-                    F.explode("transactions.id").alias("hash"), "height", "slot"
-                )
-                vol_sink(
-                    V.volumes(transacted, dim, blocks_coords=coords), batch_id
-                )
-                transfer_sink(TR.transfer_edges(transacted, dim), batch_id)
-            finally:
-                transacted.unpersist()
+            coords = parsed.select(
+                F.explode("transactions.id").alias("tx_hash"), "height", "slot"
+            )
+            # ONE materialization, N sinks (H1 fix): a flat scan, so
+            # each sink analyses and plans only its own few operators
+            # instead of the parse → resolve → net-flow lineage
+            flat = round_checkpoint(V.priced(flows.join(coords, "tx_hash"), dim))
         finally:
             parsed.unpersist()
+        try:
+            vol_sink(V.received_volumes(flat, "height", "slot"), batch_id)
+            transfer_sink(
+                TR.edges(F.broadcast(flat) if small else flat, "value_adj"), batch_id
+            )
+        finally:
+            # a checkpoint left to garbage collection outlives many
+            # batches (cache.round_checkpoint)
+            release_checkpoint(flat)
 
     # A8/observe: per-micro-batch row counts surface in
     # StreamingQueryProgress.observedMetrics["source"] — the native

@@ -119,6 +119,47 @@ def test_utxo_resolution_joins_not_rest(parsed, chain):
     assert left.where(F.col("address").isNull()).count() == n_refs - n_resolvable
 
 
+def test_resolve_in_batch_equals_batch_join_plus_anti_join(spark):
+    """The hit-flag split resolves the same rows as the batch join plus
+    the history join of the anti-join remainder, duplicate keys
+    included: a duplicated input, a batch output landed twice, and a
+    history that also holds the batch's own outputs."""
+    inputs = spark.createDataFrame(
+        [
+            ("i1", "t9", "T9", "A", 0),
+            ("i1", "t9", "T9", "A", 0),  # delivered twice
+            ("i2", "t9", "T9", "B", 1),  # batch output present twice
+            ("i3", "t9", "T9", "H", 0),  # history only
+            ("i4", "t9", "T9", "Z", 0),  # unresolvable
+        ],
+        "input_id string, tx_id string, tx_hash string, "
+        "spent_tx_hash string, spent_output_index long",
+    )
+    batch = spark.createDataFrame(
+        [("A", 0, "a", "va"), ("B", 1, "b", "vb"), ("B", 1, "b2", "vb2")],
+        "tx_hash string, output_index long, address string, value string",
+    )
+    history = batch.unionByName(
+        spark.createDataFrame([("H", 0, "h", "vh")], batch.schema)
+    )
+    keys = ["spent_tx_hash", "spent_output_index"]
+    remaining = inputs.join(
+        batch.select(
+            F.col("tx_hash").alias(keys[0]), F.col("output_index").alias(keys[1])
+        ),
+        keys,
+        "left_anti",
+    )
+    want = U.resolve_inputs(inputs, batch).unionByName(
+        U.resolve_inputs(remaining, history)
+    )
+    hits, misses = U.resolve_in_batch(inputs, batch)
+    assert misses.columns == inputs.columns
+    got = hits.unionByName(U.resolve_inputs(misses, history))
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() == 5  # A twice, B's two outputs, H
+
+
 def test_netflow_matches_reference_semantics(parsed, chain):
     inputs = B.tx_inputs_table(parsed)
     outputs = B.tx_outputs_table(parsed)

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from blockchain_data_engineering_spark.domain import blocks as B
 from blockchain_data_engineering_spark.domain import netflow as N
+from blockchain_data_engineering_spark.domain import transfers as TR
 from blockchain_data_engineering_spark.domain import utxo as U
 from blockchain_data_engineering_spark.domain import volumes as V
 from blockchain_data_engineering_spark.domain.schema import DECIMALS_SCHEMA, PRICE_SCHEMA
@@ -48,7 +49,9 @@ def _dim(spark, chain):
     return V.price_dim(prices, decimals)
 
 
-def _batch_volumes(spark, chain):
+def _batch_frames(spark, chain):
+    """(UTxO outputs, net flows, block coordinates) of one batch run
+    over the whole chain."""
     lines = spark.createDataFrame([(line,) for line in chain.lines], ["value"])
     parsed = B.parse_block_lines(lines)
     outputs = B.tx_outputs_table(parsed)
@@ -59,13 +62,69 @@ def _batch_volumes(spark, chain):
     coords = parsed.select(
         F.explode("transactions.id").alias("hash"), "height", "slot"
     )
+    return outputs, t, coords
+
+
+def _batch_volumes(spark, chain):
+    _, t, coords = _batch_frames(spark, chain)
     return V.volumes(t, _dim(spark, chain), blocks_coords=coords)
 
 
-def test_stream_replay_matches_batch(spark, chain, replay_dir, tmp_path):
-    """Micro-batched replay through foreachBatch == one batch run
-    (deterministic keys + per-batch persist make the stream's union of
-    batches exactly the batch result)."""
+def _recording(sink, dtypes: dict, key: str):
+    """``sink`` that also records the column names and types of the
+    frames it is handed."""
+
+    def write(df, batch_id):
+        dtypes.setdefault(key, df.dtypes)
+        assert df.dtypes == dtypes[key], (key, batch_id)
+        sink(df, batch_id)
+
+    return write
+
+
+def _assert_stream_matches_batch(spark, chain, vol_path, tr_path, dtypes):
+    """The streamed volumes and transfer edges equal the batch run's
+    ``V.volumes`` and ``TR.transfer_edges``, and every sink was handed
+    frames with the batch frames' columns and types."""
+    outputs, t, coords = _batch_frames(spark, chain)
+    dim = _dim(spark, chain)
+    vol = V.volumes(t, dim, blocks_coords=coords)
+    edges = TR.transfer_edges(t, dim)
+    want = {"vol": vol.dtypes, "tr": edges.dtypes}
+    if "utxo" in dtypes:
+        want["utxo"] = outputs.dtypes
+    assert dtypes == want
+
+    streamed = {
+        (r.hash, r.unit): r.value_adj
+        for r in spark.read.parquet(vol_path).collect()
+    }
+    batch = {(r.hash, r.unit): r.value_adj for r in vol.collect()}
+    # identical keys; values equal up to float summation order (the
+    # per-(hash, unit) sum of double value_adj legs is partitioning-
+    # dependent in the last bits)
+    assert set(streamed) == set(batch)
+    for k, v in batch.items():
+        assert streamed[k] == pytest.approx(v, rel=1e-12), k
+
+    def edge_multiset(df):
+        got: dict = {}
+        for r in df.collect():
+            key = (r.tx_hash, r.unit, r.send_addr, r.rx_addr, r.value)
+            got.setdefault(key, []).append(r.value_adj)
+        return {k: sorted(v) for k, v in got.items()}
+
+    streamed_edges = edge_multiset(spark.read.parquet(tr_path))
+    batch_edges = edge_multiset(edges)
+    assert batch_edges
+    assert {k: len(v) for k, v in streamed_edges.items()} == {
+        k: len(v) for k, v in batch_edges.items()
+    }
+    for k, adj in batch_edges.items():
+        assert streamed_edges[k] == pytest.approx(adj, rel=1e-12), k
+
+
+def _replay_matches_batch(spark, chain, replay_dir, tmp_path):
     vol_path = str(tmp_path / "vol")
     tr_path = str(tmp_path / "transfers")
     ckpt = str(tmp_path / "ckpt")
@@ -76,30 +135,39 @@ def test_stream_replay_matches_batch(spark, chain, replay_dir, tmp_path):
     lines = spark.createDataFrame([(line,) for line in chain.lines], ["value"])
     history = B.tx_outputs_table(B.parse_block_lines(lines))
 
+    dtypes: dict = {}
     q = run_vol_transfers_pipeline(
         stream,
         _dim(spark, chain),
         history,
-        parquet_append_sink(vol_path),
-        parquet_append_sink(tr_path),
+        _recording(parquet_append_sink(vol_path), dtypes, "vol"),
+        _recording(parquet_append_sink(tr_path), dtypes, "tr"),
         ckpt,
     )
     q.awaitTermination(120)
+    _assert_stream_matches_batch(spark, chain, vol_path, tr_path, dtypes)
 
-    streamed = {
-        (r.hash, r.unit): r.value_adj
-        for r in spark.read.parquet(vol_path).collect()
-    }
-    batch = {
-        (r.hash, r.unit): r.value_adj for r in _batch_volumes(spark, chain).collect()
-    }
-    # identical keys; values equal up to float summation order (the
-    # per-(hash, unit) sum of double value_adj legs is partitioning-
-    # dependent in the last bits)
-    assert set(streamed) == set(batch)
-    for k, v in batch.items():
-        assert streamed[k] == pytest.approx(v, rel=1e-12), k
-    assert spark.read.parquet(tr_path).count() > 0
+
+def test_stream_replay_matches_batch(spark, chain, replay_dir, tmp_path):
+    """Micro-batched replay through foreachBatch == one batch run
+    (deterministic keys + per-batch persist make the stream's union of
+    batches exactly the batch result)."""
+    _replay_matches_batch(spark, chain, replay_dir, tmp_path)
+
+
+def test_stream_replay_past_broadcast_threshold_matches_batch(
+    spark, chain, replay_dir, tmp_path
+):
+    """A batch over the broadcast threshold gets no broadcast hints:
+    the planner picks the history and transfer joins itself, with the
+    same results."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        _replay_matches_batch(spark, chain, replay_dir, tmp_path)
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_checkpoint_restart_is_idempotent(spark, chain, replay_dir, tmp_path):
@@ -455,19 +523,17 @@ def test_kafka_replay_drives_domain_pipeline(spark, chain, tmp_path):
         assert streamed[k] == pytest.approx(v, rel=1e-12), k
 
 
-def test_live_tailing_resolves_cross_batch_spends(spark, chain, tmp_path):
-    """Live-tailing shape: the UTxO store starts EMPTY and is grown by
-    the pipeline's own utxo_store_append sink, with the history side
-    re-read per batch (callable). Cross-batch spends (batch N+1
-    consuming batch N's outputs) must resolve — the result must equal
-    the full-history batch run, proving no spend fell through."""
-    import os
+def _live_tailing(spark, chain, tmp_path, wrap):
+    """Run the live-tailing wiring over four files to completion: the
+    UTxO store starts EMPTY and is grown by the pipeline's own
+    utxo_store_append sink, with the history side re-read per batch
+    (callable). ``wrap(key, sink)`` wraps the "utxo", "vol" and "tr"
+    sinks. Returns the query and the volume and transfer paths."""
     import time
 
+    store = str(tmp_path / "utxo_store")
     vol_path = str(tmp_path / "vol_live")
     tr_path = str(tmp_path / "tr_live")
-    store = str(tmp_path / "utxo_store")
-    ckpt = str(tmp_path / "ckpt_live")
 
     # own replay dir with STRICTLY INCREASING file mtimes: the file
     # stream source orders batches by modification time, and the
@@ -478,8 +544,6 @@ def test_live_tailing_resolves_cross_batch_spends(spark, chain, tmp_path):
     now = time.time()
     for i, f in enumerate(sorted(os.listdir(replay))):
         os.utime(os.path.join(replay, f), (now + i, now + i))
-
-    stream = SRC.ndjson_file_stream(spark, replay, max_files_per_trigger=1)
 
     def store_append(df, batch_id):
         df.write.mode("append").parquet(store)
@@ -492,27 +556,63 @@ def test_live_tailing_resolves_cross_batch_spends(spark, chain, tmp_path):
             return B.tx_outputs_table(B.parse_block_lines(lines))
 
     q = run_vol_transfers_pipeline(
-        stream,
+        SRC.ndjson_file_stream(spark, replay, max_files_per_trigger=1),
         _dim(spark, chain),
         read_store,
-        parquet_append_sink(vol_path),
-        parquet_append_sink(tr_path),
-        ckpt,
-        utxo_store_append=store_append,
+        wrap("vol", parquet_append_sink(vol_path)),
+        wrap("tr", parquet_append_sink(tr_path)),
+        str(tmp_path / "ckpt_live"),
+        utxo_store_append=wrap("utxo", store_append),
     )
     q.awaitTermination(180)
+    return q, vol_path, tr_path
 
-    streamed = {
-        (r.hash, r.unit): r.value_adj
-        for r in spark.read.parquet(vol_path).collect()
-    }
-    batch = {
-        (r.hash, r.unit): r.value_adj
-        for r in _batch_volumes(spark, chain).collect()
-    }
-    assert set(streamed) == set(batch)
-    for k, v in batch.items():
-        assert streamed[k] == pytest.approx(v, rel=1e-12), k
+
+def test_live_tailing_resolves_cross_batch_spends(spark, chain, tmp_path):
+    """Live tailing: cross-batch spends (batch N+1 consuming batch N's
+    outputs) must resolve — the result must equal the full-history
+    batch run, proving no spend fell through."""
+    dtypes: dict = {}
+    _, vol_path, tr_path = _live_tailing(
+        spark, chain, tmp_path, lambda key, sink: _recording(sink, dtypes, key)
+    )
+    _assert_stream_matches_batch(spark, chain, vol_path, tr_path, dtypes)
+
+
+def test_steady_replay_batch_plans_flat_and_releases_its_frame(spark, chain, tmp_path):
+    """A steady live-tailing batch materializes its priced net flows
+    once, so each sink plans a few operators over one flat scan instead
+    of re-planning the parse → resolve → net-flow lineage (221 and 209
+    executed-plan nodes for the volumes and transfers sinks before),
+    and it releases that frame itself: after the query stops, no RDD
+    the pipeline persisted is left, with no garbage collection forced."""
+    import re
+
+    from blockchain_data_engineering_spark.session import executed_plans
+
+    nodes: dict[tuple[str, int], int] = {}
+
+    def planned(key, sink):
+        def write(df, batch_id):
+            with executed_plans(spark) as ran:
+                sink(df, batch_id)
+            # the formatted plan details each node once, as "(id) Name"
+            nodes[(key, batch_id)] = max(
+                len(set(re.findall(r"^\((\d+)\) ", plan, re.M))) for plan in ran
+            )
+
+        return write
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    q, _, _ = _live_tailing(spark, chain, tmp_path, planned)
+    assert not q.isActive
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+
+    # batch 0 reads an empty store; the later ones are steady
+    steady = {k: n for k, n in nodes.items() if k[1] > 0}
+    assert len(steady) == 9, nodes
+    assert max(steady.values()) <= 40, steady
 
 
 def test_streaming_sketch_stores_match_batch(spark, tmp_path):

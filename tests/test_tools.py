@@ -55,3 +55,19 @@ def test_contract_lists_gate_queries_then_oracle_hashes():
     assert lines[n:] == [
         f"{q} {hashlib.sha256(ORACLES[q].encode()).hexdigest()}" for q in GATE_ORDER
     ]
+
+
+def test_profile_counts_the_jobs_and_stages_of_one_job_group(spark):
+    jobs_and_stages = _load("profile").jobs_and_stages
+    sc = spark.sparkContext
+    group = "test-tools-profile"
+    sc.setJobGroup(group, group)
+    try:
+        rdd = sc.parallelize(range(8), 2)
+        rdd.count()  # one job, one stage
+        rdd.map(lambda x: (x % 2, x)).reduceByKey(lambda a, b: a + b).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    spark.range(3).collect()  # outside the group: not counted
+    assert jobs_and_stages(sc, group) == (2, 3)

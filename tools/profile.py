@@ -6,10 +6,11 @@ For each registered query (gate or extra) the tool builds the
 DataFrame and writes it to a noop sink once, saving the formatted
 physical plan of every SQL execution that ran — round checkpoints, the
 settle, the sink — to ``plans/<query>.txt``. It then times ``N`` more
-build+sink runs, each under its own job description, and prints the
-samples, their min and the generated classes each run compiled with
-the Janino time they took (``0/0ms`` once a query's code is in the
-codegen cache). The input scale comes from
+build+sink runs, each under its own job group, and prints the samples,
+their min, the generated classes each run compiled with the Janino
+time they took (``0/0ms`` once a query's code is in the codegen cache)
+and the Spark jobs and stages each run started (``jobs/stages``,
+skipped stages included). The input scale comes from
 ``SPARK_GRAFT_SF_DIR`` (default sf0.1), the core count from
 ``SPARK_GRAFT_CPUS``.
 """
@@ -22,9 +23,10 @@ import sys
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# replace this script's directory on the path: this file would
-# otherwise shadow the stdlib ``profile`` module that pyspark imports
-sys.path[0] = ROOT
+if __name__ == "__main__":
+    # replace this script's directory on the path: this file would
+    # otherwise shadow the stdlib ``profile`` module that pyspark imports
+    sys.path[0] = ROOT
 
 from blockchain_data_engineering_spark.plans import QUERIES  # noqa: E402
 from blockchain_data_engineering_spark.session import (  # noqa: E402
@@ -37,6 +39,18 @@ from blockchain_data_engineering_spark.session import (  # noqa: E402
 
 def _sink(spark, fn) -> None:
     fn(spark, DEFAULT_SF_DIR).write.format("noop").mode("overwrite").save()
+
+
+def jobs_and_stages(sc, group: str) -> tuple[int, int]:
+    """(jobs, distinct stages) that ran under job group ``group``, read
+    from the status tracker, which keeps them with the UI off (up to
+    ``spark.ui.retainedJobs`` jobs)."""
+    # jobs reach the tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs if (info := tracker.getJobInfo(j)) for s in info.stageIds}
+    return len(jobs), len(stages)
 
 
 def main() -> None:
@@ -61,21 +75,25 @@ def main() -> None:
                 # scan locations name the input dir, not this host's path
                 plan = plan.replace(DEFAULT_SF_DIR.rstrip("/"), "$SPARK_GRAFT_SF_DIR")
                 fh.write(f"== execution {i} of {len(ran)} ==\n{plan}\n")
-        samples, compiles = [], []
+        samples, compiles, counts = [], [], []
         for r in range(args.runs):
-            sc.setJobDescription(f"profile:{name}:run{r}")
+            group = f"profile:{name}:run{r}"
+            sc.setJobGroup(group, group)
             n0, ms0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             _sink(spark, fn)
             samples.append(time.perf_counter() - t0)
             n1, ms1 = codegen_compiles(spark)
             compiles.append(f"{n1 - n0}/{ms1 - ms0:.0f}ms")
+            counts.append("%d/%d" % jobs_and_stages(sc, group))
+        sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
         print(
             f"{name}: plans={path} ({len(ran)} executions, {cold} compiles) "
             f"runs={[round(s, 3) for s in samples]} "
             f"min={min(samples, default=float('nan')):.3f} "
             f"compiles=[{', '.join(compiles)}] "
+            f"jobs/stages=[{', '.join(counts)}] "
             f"load1m={os.getloadavg()[0]:.1f}",
             flush=True,
         )
