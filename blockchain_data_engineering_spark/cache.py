@@ -115,7 +115,9 @@ def round_checkpoint(df: DataFrame) -> DataFrame:
     survived a JVM ``System.gc()`` and went only after a Python
     ``gc.collect()`` plus a JVM GC. A caller that knows when a
     checkpoint is dead releases it at once with
-    :func:`release_checkpoint`. Each round is its own executed query,
+    :func:`release_checkpoint`; iterative loops step through
+    :func:`next_round`, which releases each round once the next one is
+    materialized. Each round is its own executed query,
     so its physical plan is in the SQL status store.
 
     Fault-tolerance trade: ``localCheckpoint`` severs lineage onto
@@ -138,6 +140,18 @@ def release_checkpoint(df: DataFrame) -> None:
     action on ``df``, or on a frame built from it, fails with
     ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def next_round(df: DataFrame, prev: DataFrame | None) -> DataFrame:
+    """One iterative-loop step: :func:`round_checkpoint` ``df``, then
+    release ``prev`` (``None`` or the previous round's checkpoint),
+    which nothing reads once the new round is materialized. A loop
+    that steps through this keeps one round registered at a time: the
+    last, which its lazy result reads."""
+    out = round_checkpoint(df)
+    if prev is not None:
+        release_checkpoint(prev)
+    return out
 
 
 def finalize(result: DataFrame, *caches: DataFrame) -> DataFrame:

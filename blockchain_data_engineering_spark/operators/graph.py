@@ -29,7 +29,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from blockchain_data_engineering_spark.cache import finalize, round_checkpoint
+from blockchain_data_engineering_spark.cache import (
+    finalize,
+    next_round,
+    release_checkpoint,
+    round_checkpoint,
+)
 
 PR_SCALE = 10**12
 
@@ -294,6 +299,7 @@ def connected_components_pointer_jump(
         .cache()
     )
     labels = nodes.select(F.col("node"), F.col("node").alias("label"))
+    prop = None
     for _ in range(rounds):
         # materialize each round with an eager localCheckpoint (r11):
         # the propagated labels are computed exactly once either way,
@@ -303,14 +309,14 @@ def connected_components_pointer_jump(
         # round and Catalyst re-canonicalized the whole tree on every
         # later round's planning (the same measured pathology as the
         # kcore loop: per-round cost grew 0.5 s -> 2.7 s by round 3
-        # at sf0.1). Checkpoint blocks are GC-cleaned when the round's
-        # DataFrame goes out of scope, so no cache accumulates.
-        prop = (
+        # at sf0.1). next_round releases the previous round's
+        # checkpoint; only the last stays, read by the lazy result.
+        prop = next_round(
             und.join(_hint(labels.withColumnRenamed("node", "b"), broadcast), "b")
             .groupBy(F.col("a").alias("node"))
-            .agg(F.min("label").alias("label"))
+            .agg(F.min("label").alias("label")),
+            prop,
         )
-        prop = round_checkpoint(prop)
         # jump: label ← label(label). Labels are always node ids, and
         # prop has a row for every node, so the inner join is total.
         labels = prop.join(
@@ -516,20 +522,10 @@ def kcore(
 
     Returns (node, degree) over the surviving subgraph.
     """
-    # repartition("a") BEFORE the distinct (r11, guide §2.4 "two
-    # operations keyed the same way can share one exchange"):
-    # HashPartitioning(a) satisfies the distinct's ClusteredDistribution
-    # (a, b) — equal (a, b) rows land together whenever equal a rows do
-    # — so the distinct still plans exactly ONE exchange. The
-    # co-partitioning does NOT reach the rounds: the round checkpoint's
-    # scan reports UnknownPartitioning, and the executed plans show each
-    # round's degree groupBy("a") behind its own Exchange
-    # hashpartitioning(a) (graph_kcore, tools/profile.py).
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .where(F.col("a") != F.col("b"))
-        .repartition("a")
         .distinct()
     )
     # Per-round materialization (r11): an eager localCheckpoint instead
@@ -539,7 +535,9 @@ def kcore(
     # and Catalyst re-canonicalizes that whole nested tree on every
     # later round's planning, measured growing 0.4 s (round 1) -> 2.7 s
     # (round 3) -> 2.2 s final aggregate at sf0.1; flat rounds stay
-    # ~0.4 s each and the final aggregate 0.2 s.
+    # ~0.4 s each and the final aggregate 0.2 s. next_round releases
+    # each round once the next is materialized; the last stays, read by
+    # the lazy result.
     alive = round_checkpoint(sym)
     for _ in range(rounds):
         # persisted: keep feeds BOTH semi-joins — unpersisted, the
@@ -556,7 +554,7 @@ def kcore(
             "b",
             "left_semi",
         )
-        alive = round_checkpoint(nxt)
+        alive = next_round(nxt, alive)
         keep.unpersist()
     return finalize(
         alive.groupBy(F.col("a").alias("node")).agg(
@@ -609,7 +607,8 @@ def bfs_levels(
         # nested one InMemoryRelation per hop for Catalyst to
         # re-canonicalize at each later hop's planning (the kcore
         # loop's measured pathology); flat ≤|V|-row scans keep hop
-        # planning constant and the blocks GC-clean with the frames
+        # planning constant. The lazy result reads every non-empty
+        # hop, so those stay registered; the empty last hop is released
         nxt = (
             edges.join(
                 _hint(frontier.select(F.col("node").alias(src)), broadcast),
@@ -623,6 +622,7 @@ def bfs_levels(
         )
         nxt = round_checkpoint(nxt)
         if nxt.count() == 0:
+            release_checkpoint(nxt)
             break
         pieces.append(nxt)
         frontier = nxt
@@ -674,6 +674,7 @@ def sssp(
     )
     delta = dist
     caches = [dist]
+    combined = None
     for _ in range(rounds):
         cand = (
             edges.join(
@@ -695,22 +696,23 @@ def sssp(
         # computed once either way, but each round hands the next a
         # FLAT ≤|V|-row scan instead of nesting one more
         # InMemoryRelation for Catalyst to re-canonicalize per later
-        # round (the kcore loop's measured planning pathology);
-        # checkpoint blocks are GC-cleaned when the round's DataFrame
-        # drops, so nothing accumulates across the loop
-        combined = (
+        # round (the kcore loop's measured planning pathology).
+        # next_round releases the previous round; the last stays, read
+        # by the lazy result. A round with no improvement carries
+        # exactly the previous distances, so the loop can stop on it.
+        combined = next_round(
             dist.select("node", "dist", F.lit(False).alias("__new"))
             .unionByName(cand)
             .groupBy("node")
             .agg(
                 F.min("dist").alias("dist"),
                 F.min(F.when(~F.col("__new"), F.col("dist"))).alias("__old"),
-            )
+            ),
+            combined,
         )
-        combined = round_checkpoint(combined)
+        dist = combined.select("node", "dist")
         if combined.where(improved_flag).count() == 0:
             break
-        dist = combined.select("node", "dist")
         delta = combined.where(improved_flag).select("node", "dist")
     return finalize(dist, *caches)
 
@@ -756,12 +758,9 @@ def earliest_arrival(
     Physical plan (executed plans of ``graph_temporal_reachability``
     at sf0.1, ``plans/graph_temporal_reachability.txt`` written by
     ``tools/profile.py``): the edge list is DISTINCTED once at (src,
-    dst, t) triple grain behind one ``repartition`` (on ``dst`` under
-    the default broadcast loop, on ``src`` when the per-round join
-    itself must shuffle), and the distinct rides that exchange. The
-    triples are then round-checkpointed, and the checkpoint scan
-    reports ``UnknownPartitioning`` — Catalyst does not see the
-    co-partitioning. So a round is one broadcast delta join + a
+    dst, t) triple grain (one exchange) and round-checkpointed; the
+    checkpoint scan reports ``UnknownPartitioning``, so no
+    partitioning reaches the rounds. A round is one broadcast delta join + a
     codegen ``t >= arr`` filter + a partial ``groupBy(dst).min(t)``,
     then ``Exchange hashpartitioning(dst)`` of the partial minima,
     then the ≤|V|-row merged-arrival aggregate behind its own
@@ -780,11 +779,7 @@ def earliest_arrival(
     arrival table is ≤|V| rows (broadcast by default,
     ``broadcast=False`` at billion-node scale).
     """
-    trips = round_checkpoint(
-        edges.select(src, dst, time)
-        .repartition(dst if broadcast else src)
-        .distinct()
-    )
+    trips = round_checkpoint(edges.select(src, dst, time).distinct())
     improved_flag = F.col("__old").isNull() | (F.col("arr") < F.col("__old"))
     arr = (
         seeds.select("node", F.col("arr").cast("long").alias("arr"))
@@ -794,6 +789,7 @@ def earliest_arrival(
     )
     delta = arr
     caches = [arr]
+    combined = None
     for _ in range(rounds):
         # one tagged-union aggregation yields merged arrivals AND the
         # improved flag together — see sssp for the shape (r5 ask #4)
@@ -813,21 +809,24 @@ def earliest_arrival(
             .select("node", "arr", F.lit(True).alias("__new"))
         )
         # eager localCheckpoint instead of persist()+count() (r11) —
-        # same rationale and measurement as the sssp loop above
-        combined = (
+        # same rationale, measurement and round release as the sssp
+        # loop above
+        combined = next_round(
             arr.select("node", "arr", F.lit(False).alias("__new"))
             .unionByName(cand)
             .groupBy("node")
             .agg(
                 F.min("arr").alias("arr"),
                 F.min(F.when(~F.col("__new"), F.col("arr"))).alias("__old"),
-            )
+            ),
+            combined,
         )
-        combined = round_checkpoint(combined)
+        arr = combined.select("node", "arr")
         if combined.where(improved_flag).count() == 0:
             break
-        arr = combined.select("node", "arr")
         delta = combined.where(improved_flag).select("node", "arr")
+    # the result reads the last round, never the triples
+    release_checkpoint(trips)
     return finalize(arr, *caches)
 
 
@@ -863,7 +862,8 @@ def clustering_coefficient(
     # materialized (r11): deg feeds BOTH endpoint joins below AND the
     # final readout join — un-materialized, each reference re-ran the
     # union+aggregate over the edge cache (guide §2.4 duplicated
-    # subtrees); flat |V|-row scan, blocks GC-clean with the frame
+    # subtrees); flat |V|-row scan, registered until garbage
+    # collection (cache.round_checkpoint) because the lazy result reads it
     deg = round_checkpoint(
         und.select(F.col("a").alias("node"))
         .union(und.select(F.col("b").alias("node")))

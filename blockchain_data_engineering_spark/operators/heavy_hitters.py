@@ -57,7 +57,7 @@ raise that conf.
 Exactness contract: items are compared as strings (``item_col`` is
 cast); counts and offsets are exact BIGINT arithmetic end-to-end — no
 floats anywhere, so the DuckDB oracle replays the construction
-bit-identically (plans/analytics_queries.py agg_heavy_hitters).
+bit-identically (plans/analytics_queries.py agg_heavy_hitters_merged).
 """
 
 from __future__ import annotations

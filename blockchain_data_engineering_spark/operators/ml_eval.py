@@ -789,72 +789,6 @@ def multiclass_macro_f1(
     )
 
 
-def multiclass_macro_f1_sql(
-    actual_sql: str,
-    predicted_sql: str,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`multiclass_macro_f1` — same cell grain,
-    same quantized-F1 algebra; ``macro_f1_num`` serializes as
-    VARCHAR."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_a = f"{kcols}, a" if keyed else "a"
-    kgrp_p = f"{kcols}, p" if keyed else "p"
-    kjoin = " AND ".join(f"ba.{c} = bp.{c}" for c in keyed)
-    on = f"ba.a = bp.p{' AND ' + kjoin if keyed else ''}"
-    kpre_ba = ", ".join(f"ba.{c}" for c in keyed)
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    return f"""
-    WITH cells AS (
-      SELECT {kpre}{actual_sql} AS a, {predicted_sql} AS p,
-             count(*) AS n
-      FROM {table}
-      WHERE ({actual_sql}) IS NOT NULL AND ({predicted_sql}) IS NOT NULL
-        {key_nn}
-      GROUP BY {kgrp_a}, p
-    ),
-    by_actual AS (
-      SELECT {kpre}a, CAST(sum(n) AS BIGINT) AS support,
-             CAST(sum(CASE WHEN a = p THEN n ELSE 0 END) AS BIGINT) AS tp
-      FROM cells GROUP BY {kgrp_a}
-    ),
-    by_pred AS (
-      SELECT {kpre}p, CAST(sum(n) AS BIGINT) AS pred_total
-      FROM cells GROUP BY {kgrp_p}
-    ),
-    per_class AS (
-      SELECT {kpre_ba + ', ' if keyed else ''}ba.support, ba.tp,
-             coalesce(bp.pred_total, 0) AS pred_total
-      FROM by_actual ba LEFT JOIN by_pred bp ON {on}
-    ),
-    totals AS (
-      -- coalesce: the GLOBAL aggregate over an empty/filtered-out
-      -- input emits 0s, never NULLs (matches the Spark twin)
-      SELECT {kpre}
-             CAST(coalesce(sum(support), 0) AS BIGINT) AS n,
-             CAST(count(*) AS BIGINT) AS n_classes,
-             CAST(coalesce(sum(tp), 0) AS BIGINT) AS tp_sum,
-             coalesce(sum((2 * CAST(tp AS HUGEINT) * {_AP_SCALE})
-                 // (support + pred_total)), 0) AS macro_f1_num
-      FROM per_class {grp}
-    )
-    SELECT {kpre}n, n_classes,
-           CASE WHEN n > 0
-                THEN CAST(tp_sum AS DOUBLE) / CAST(n AS DOUBLE)
-           END AS accuracy,
-           CAST(macro_f1_num AS VARCHAR) AS macro_f1_num,
-           CASE WHEN n_classes > 0 THEN
-             CAST(macro_f1_num AS DOUBLE)
-               / CAST(CAST(n_classes AS HUGEINT) * {_AP_SCALE} AS DOUBLE)
-           END AS macro_f1
-    FROM totals
-    """
-
-
 def multiclass_macro_f1_from_cells_sql(
     cells_sql: str,
     actual_col: str = "actual",
@@ -867,8 +801,9 @@ def multiclass_macro_f1_from_cells_sql(
     ``cells_sql`` is a FROM-able fragment exposing (actual,
     predicted, count) rows, possibly with duplicates (per-batch
     deltas) — they re-aggregate exactly as the Spark store read does,
-    then the :func:`multiclass_macro_f1_sql` algebra runs over the
-    summed cells (the ``cohens_kappa_from_cells_sql`` pattern)."""
+    then the quantized-F1 algebra of :func:`multiclass_macro_f1` runs
+    over the summed cells (the ``cohens_kappa_from_cells_sql``
+    pattern); facts read as cells with ``n = 1``."""
     keyed = list(keys)
     kcols = ", ".join(keyed)
     kpre = f"{kcols}, " if keyed else ""
@@ -1992,6 +1927,15 @@ def ece(
         .cast("decimal(38,0)")
         .alias("__ssum"),
     )
+    return _ece_totals(binned, keyed, s_max)
+
+
+def _ece_totals(binned: DataFrame, keyed: list[str], s_max: int) -> DataFrame:
+    """The readout :func:`ece` and :func:`ece_adaptive` share, from
+    per-bin rows (keys…, ``__nb`` count, ``__pos`` positives,
+    ``__ssum`` score sum): per group ``n``, ``n_bins_used``, the exact
+    numerator ``ece_num = Σ_b |s_max·__pos − __ssum|`` and
+    ``ece = ece_num / (n·s_max)`` (NULL for an empty group)."""
     term = F.abs(
         F.lit(int(s_max)).cast("decimal(38,0)") * F.col("__pos")
         - F.col("__ssum")
@@ -2281,35 +2225,10 @@ def ece_adaptive(
     )
     binned = with_bin.groupBy(*keyed, "__b").agg(
         F.sum("__cnt").cast("long").alias("__nb"),
-        F.sum("__pos").cast("long").alias("__posb"),
-        F.sum("__ssum").cast("decimal(38,0)").alias("__ssumb"),
+        F.sum("__pos").cast("long").alias("__pos"),
+        F.sum("__ssum").cast("decimal(38,0)").alias("__ssum"),
     )
-    term = F.abs(
-        F.lit(int(s_max)).cast("decimal(38,0)") * F.col("__posb")
-        - F.col("__ssumb")
-    )
-    totals = binned.select(
-        *keyed, F.col("__nb"), term.alias("__t")
-    ).groupBy(*keyed).agg(
-        F.coalesce(F.sum("__nb"), F.lit(0)).cast("long").alias("n"),
-        F.count(F.lit(1)).cast("long").alias("n_bins_used"),
-        F.coalesce(F.sum("__t"), F.lit(0))
-        .cast("decimal(38,0)")
-        .alias("ece_num"),
-    )
-    den = (
-        F.col("n").cast("decimal(38,0)") * F.lit(int(s_max))
-    ).cast("decimal(38,0)")
-    return totals.select(
-        *keyed,
-        "n",
-        "n_bins_used",
-        "ece_num",
-        F.when(
-            F.col("n") > 0,
-            F.col("ece_num").cast("double") / den.cast("double"),
-        ).alias("ece"),
-    )
+    return _ece_totals(binned, keyed, s_max)
 
 
 def ece_adaptive_sql(
@@ -4126,12 +4045,14 @@ def _krippendorff_unit_state(
     # re-canonicalizes it per reference (measured 8.6 s lazy vs 2.2 s
     # eager for the whole ordinal build+run). Each node is
     # ≤ (unit, category) grain — the same linear-in-corpus rows the
-    # aggregate itself already shuffles; blocks GC-clean with the
-    # frames (nothing registers in the CacheManager).
+    # aggregate itself already shuffles; nothing registers in the
+    # CacheManager, and the lazy result reads every node, so their
+    # blocks stay registered until garbage collection
+    # (cache.round_checkpoint).
     from blockchain_data_engineering_spark.cache import round_checkpoint
 
-    # round_checkpoint needs no release tracking: its checkpoint
-    # blocks GC-clean with the frames — so no caches list.
+    # no caches list: finalize's release (unpersist) does not free
+    # checkpoint blocks
     _share = round_checkpoint
 
     cells = _share(

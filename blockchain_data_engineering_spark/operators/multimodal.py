@@ -168,68 +168,3 @@ def resize_stub(df: DataFrame, target_bytes: int = 256) -> DataFrame:
             F.md5(F.col("payload")).alias("checksum"),
         ),
     )
-
-
-def extract_features_arrow(df: DataFrame, n_buckets: int = 16) -> DataFrame:
-    """:func:`extract_features` on ``mapInArrow`` — the zero-copy twin.
-    For binary-heavy payloads the pandas bridge of ``mapInPandas``
-    materializes every payload as a Python ``bytes`` object inside a
-    pandas column (one copy + per-cell object overhead); ``mapInArrow``
-    hands the raw Arrow ``RecordBatch`` to the kernel, so payload bytes
-    stay in Arrow buffers until the kernel slices exactly what it
-    needs. Same output contract as :func:`extract_features`
-    (test-pinned identical), making the choice a pure deployment knob:
-    pandas form for kernels that want DataFrame ergonomics, Arrow form
-    when payload bytes dominate the batch (images/audio at 100 TB).
-    """
-
-    def featurize(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        # explicit schema: from_pydict on an EMPTY batch would infer
-        # null-typed columns and fail Arrow's schema check — the same
-        # hazard sample_frames guards on the pandas side
-        out_schema = pa.schema(
-            [
-                ("doc_id", pa.int64()),
-                ("n_bytes", pa.int64()),
-                ("byte_histogram", pa.list_(pa.int64())),
-                ("mean_byte", pa.float64()),
-            ]
-        )
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            payloads = batch.column("payload")
-            mimes = batch.column("meta").field("mime").to_pylist()
-            out = {
-                "doc_id": [],
-                "n_bytes": [],
-                "byte_histogram": [],
-                "mean_byte": [],
-            }
-            for i, doc_id in enumerate(doc_ids):
-                # as_buffer(), not as_py(): the scalar's buffer is a
-                # zero-copy VIEW into the Arrow values buffer; as_py()
-                # would copy every payload into a Python bytes object —
-                # exactly the per-cell materialization this form exists
-                # to avoid. np.frombuffer wraps the view copy-free.
-                raw = payloads[i].as_buffer()
-                buf = np.frombuffer(
-                    decode_stub(raw, mimes[i], strict=False), dtype=np.uint8
-                )
-                hist = np.bincount(
-                    np.minimum(buf // (256 // n_buckets), n_buckets - 1),
-                    minlength=n_buckets,
-                )
-                out["doc_id"].append(doc_id)
-                out["n_bytes"].append(len(buf))
-                out["byte_histogram"].append(hist.astype("int64").tolist())
-                out["mean_byte"].append(
-                    float(buf.mean()) if len(buf) else 0.0
-                )
-            yield pa.RecordBatch.from_pydict(out, schema=out_schema)
-
-    return df.select("doc_id", "payload", "meta").mapInArrow(
-        featurize, schema=FEATURE_SCHEMA
-    )

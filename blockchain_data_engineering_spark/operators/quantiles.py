@@ -69,7 +69,7 @@ must identify rows uniquely (a primary key) so the sample is uniform
 over ROWS — duplicate ids collapse their rows to one coin flip, which
 skews weights. All estimate arithmetic is integer until the caller
 divides; DuckDB replays the identical construction
-(plans/analytics_queries.py agg_quantile_sketch oracle).
+(plans/analytics_queries.py agg_quantile_sketch_merged oracle).
 """
 
 from __future__ import annotations

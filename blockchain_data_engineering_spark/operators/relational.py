@@ -179,28 +179,6 @@ def net_flow(
     )
 
 
-def per_group_cross_join(
-    left: DataFrame,
-    right: DataFrame,
-    group_cols: Sequence[str],
-) -> DataFrame:
-    """Cross join within each group: every left row pairs with every
-    right row sharing the group key (J3).
-
-    Reference: per-unit receivers × senders transfer-edge construction
-    (src/etl_vol_transfers/main.py:161-167, ``merge(how='cross')`` inside
-    a groupby-apply). Natively this is just an equi-join on the group
-    key — Catalyst executes it as a hash join whose per-key fanout is
-    |L_g|×|R_g|.
-
-    Scale hazard (SURVEY §7.4): a hot group produces quadratic edges.
-    AQE skew-join splits oversized partitions; for pathological keys,
-    cap or salt upstream (see ``salted``).
-    """
-    keys = list(group_cols)
-    return left.join(right, keys, "inner")
-
-
 def salted(df: DataFrame, key_col: str, buckets: int, salt_col: str = "__salt") -> DataFrame:
     """Add a deterministic salt to split a skewed ``key_col`` across
     ``buckets`` shuffle partitions: the salt is a hash of the row's

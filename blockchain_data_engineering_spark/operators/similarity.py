@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from blockchain_data_engineering_spark.cache import finalize, round_checkpoint
+from blockchain_data_engineering_spark.cache import finalize, next_round
 from blockchain_data_engineering_spark.functions.scalar import bounded_window_key
 
 QUANTA_DIGITS = 12
@@ -652,6 +652,7 @@ def kmeans_centroids_quantized(
     )
     cent = v.join(seeds, id_col).select("cid", "dim0", F.col("vq").alias("cq"))
 
+    prev = None
     for _ in range(iterations):
         diff = F.col("vq") - F.col("cq")
         d2 = (
@@ -691,8 +692,9 @@ def kmeans_centroids_quantized(
         # checkpoint hands the next round a FLAT scan instead of
         # nesting one InMemoryRelation per iteration for Catalyst to
         # re-canonicalize (the kcore loop's measured planning
-        # pathology); blocks GC-clean when the round's frame drops
-        cent = round_checkpoint(cent)
+        # pathology). next_round releases the previous round; the last
+        # stays, read by the lazy result
+        cent = prev = next_round(cent, prev)
     # checkpoint BEFORE any unpersist (releasing the input cache v
     # invalidates dependent cache entries, so the persisted `cent`
     # would silently recompute from the uncached explode); finalize

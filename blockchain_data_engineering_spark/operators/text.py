@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from blockchain_data_engineering_spark.cache import finalize, round_checkpoint
+from blockchain_data_engineering_spark.cache import finalize, next_round
 from blockchain_data_engineering_spark.functions.scalar import bounded_window_key
 
 # Tiny per-language stopword marker lists for the n-gram/stopword
@@ -1132,8 +1132,9 @@ def quality_classifier_scores(
         # the flat scan keeps each round's planning constant instead
         # of re-canonicalizing a per-round-deeper InMemoryRelation
         # tree (the kcore loop's measured pathology); w is referenced
-        # twice next round and the blocks GC-clean with the frame
-        w = round_checkpoint(w_new)
+        # twice next round. next_round releases the previous round;
+        # the last stays, read by the lazy result
+        w = next_round(w_new, w)
 
     scored = (
         fx.join(F.broadcast(w), "b")

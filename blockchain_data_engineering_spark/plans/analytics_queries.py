@@ -207,28 +207,6 @@ def flagship_volume_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# H7: decimal-safe raw-quantity arithmetic — token quantities arrive as
-# strings, can exceed float precision, and must sum exactly. Carried as
-# DECIMAL(38,0); compared as strings (exact, engine-independent).
-# ---------------------------------------------------------------------------
-@query(
-    "decimal_quantity_sum",
-    oracle="""
-    SELECT l_partkey AS unit,
-           CAST(sum(CAST(CAST(l_quantity AS BIGINT) * 1000000007 AS DECIMAL(38, 0)))
-                AS VARCHAR) AS total_raw
-    FROM lineitem GROUP BY 1
-    """,
-)
-def decimal_quantity_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    raw = (F.col("l_quantity").cast("long") * F.lit(1000000007)).cast("decimal(38,0)")
-    return li.groupBy(F.col("l_partkey").alias("unit")).agg(
-        F.sum(raw).cast("string").alias("total_raw")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Distinct aggregation (the one agg family the reference never uses,
 # SURVEY §2.4 note): exact count-distinct + multi-distinct in one pass.
 # ---------------------------------------------------------------------------
@@ -1670,77 +1648,6 @@ _CALIB_BIN_Q = 40_000_00  # 40k-wide o_totalprice bins, quanta(2)
 
 
 # ---------------------------------------------------------------------------
-# Mergeable deterministic quantile sketch (r7 judge ask #1): per-status
-# price percentiles from a k=512 bottom-k-priority sample
-# (operators/quantiles.py — the KMV md5 idiom applied to rank
-# statistics). Build is ONE WindowGroupLimit-bounded shuffle
-# (plan-pinned: partial per-partition bottom-k BEFORE the exchange) +
-# one partial-count aggregate; the query is array arithmetic over the
-# ≤ k-row state — the shape that replaces the full-sort-per-quantile
-# exact passes (events_value_quantiles) at 100 TB. The oracle replays
-# the identical deterministic construction; merge exactness
-# (merge(sk(A), sk(B)) ≡ sk(A∪B), bit-identical) and the DKW ±ε rank
-# guarantee are pinned in tests/test_quantiles.py at two SFs.
-# ---------------------------------------------------------------------------
-_QSK_K = 512
-_QSK_QS = [100, 2500, 5000, 7500, 9900]
-
-
-@query(
-    "agg_quantile_sketch",
-    oracle=f"""
-    WITH base AS (
-      SELECT o_orderstatus AS g,
-             CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15)
-                  AS BIGINT) AS pri,
-             {quanta_sql('o_totalprice', 2)} AS v
-      FROM orders WHERE o_totalprice IS NOT NULL
-    ),
-    ranked AS (
-      SELECT g, pri, v,
-             row_number() OVER (PARTITION BY g ORDER BY pri, v) AS rn
-      FROM base
-    ),
-    counts AS (
-      SELECT g, CAST(count(*) AS BIGINT) AS n_total FROM base GROUP BY g
-    ),
-    kept AS (SELECT g, pri, v FROM ranked WHERE rn <= {_QSK_K}),
-    byv AS (
-      SELECT g, v,
-             row_number() OVER (PARTITION BY g ORDER BY v, pri) AS vr,
-             CAST(count(*) OVER (PARTITION BY g) AS BIGINT) AS k_actual
-      FROM kept
-    ),
-    qs AS (
-      SELECT * FROM (VALUES {', '.join(f'({q})' for q in _QSK_QS)})
-        AS t(q_bp)
-    ),
-    sel AS (
-      SELECT b.g, q.q_bp, b.k_actual, b.v AS est_v
-      FROM byv b JOIN qs q
-        ON b.vr = greatest(1, (q.q_bp * b.k_actual + 9999) // 10000)
-    )
-    SELECT s.g AS o_orderstatus, CAST(s.q_bp AS INT) AS q_bp,
-           c.n_total, s.k_actual, s.est_v
-    FROM sel s JOIN counts c ON c.g = s.g
-    """,
-)
-def agg_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blockchain_data_engineering_spark.operators.quantiles import (
-        quantile_sketch,
-        quantile_sketch_query,
-    )
-
-    orders = spread(load_table(spark, sf_dir, "orders")).withColumn(
-        "vq", quanta(F.col("o_totalprice"), 2)
-    )
-    state = quantile_sketch(
-        orders, "vq", ["o_orderkey"], _QSK_K, keys=["o_orderstatus"]
-    )
-    return quantile_sketch_query(state, _QSK_QS, keys=["o_orderstatus"])
-
-
-# ---------------------------------------------------------------------------
 # Quantile-sketch MERGE under the gate (r7): two half-corpus sketches
 # (events split by event_id parity — stand-in for per-day / per-shard
 # states) merged in-plan and queried. The oracle replays BOTH halves'
@@ -2029,62 +1936,10 @@ def ml_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("ndcg_num", F.col("ndcg_num").cast("string"))
 
 
-# ---------------------------------------------------------------------------
-# Mergeable deterministic heavy hitters (r8 judge ask #3,
-# operators/heavy_hitters.py — Misra–Gries with the exact-counts offset
-# construction and md5 rank tiebreaks): the top-k token summary per
-# language with [count_lo, count_hi] bounds — the "what ARE the hot
-# keys" member that completes the sketch family (KMV/HLL distinct, CMS
-# point probes, Bloom membership, quantile percentiles). One map-side-
-# combinable token count + a WindowGroupLimit-bounded top-(k+1) over
-# the AGGREGATED grain + a |langs|-row offset broadcast; at 100 TB the
-# shuffle carries partial counts, never the tokens. For a fresh build
-# count_hi = the exact count (err = the (k+1)-th largest count).
-# ---------------------------------------------------------------------------
-_HH_K = 32
+# Deterministic md5 rank tiebreak of the heavy-hitter oracles
+# (operators/heavy_hitters.py — Misra–Gries with the exact-counts
+# offset construction).
 _HH_TIEBREAK_SQL = "CAST('0x' || substr(md5(item), 1, 15) AS BIGINT)"
-
-
-@query(
-    "agg_heavy_hitters",
-    oracle=f"""
-    WITH base AS (
-      SELECT lang, unnest(string_split(text, ' ')) AS item
-      FROM documents
-    ),
-    counts AS (
-      SELECT lang, item, count(*) AS cnt FROM base
-      WHERE item IS NOT NULL GROUP BY 1, 2
-    ),
-    tot AS (
-      SELECT lang, CAST(sum(cnt) AS BIGINT) AS n_total
-      FROM counts GROUP BY 1
-    ),
-    ranked AS (
-      SELECT lang, item, cnt,
-             row_number() OVER (PARTITION BY lang ORDER BY cnt DESC,
-               {_HH_TIEBREAK_SQL}, item) AS rn
-      FROM counts
-    ),
-    d AS (SELECT lang, cnt AS d FROM ranked WHERE rn = {_HH_K} + 1)
-    SELECT r.lang, r.item,
-           CAST(r.cnt - coalesce(d.d, 0) AS BIGINT) AS count_lo,
-           CAST(r.cnt AS BIGINT) AS count_hi,
-           t.n_total
-    FROM ranked r LEFT JOIN d USING (lang) JOIN tot t USING (lang)
-    WHERE r.rn <= {_HH_K} AND r.cnt > coalesce(d.d, 0)
-    """,
-)
-def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blockchain_data_engineering_spark.operators.heavy_hitters import (
-        heavy_hitters,
-    )
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    base = docs.select(
-        "lang", F.explode(F.split(F.col("text"), " ")).alias("w")
-    )
-    return heavy_hitters(base, "w", _HH_K, keys=["lang"])
 
 
 # ---------------------------------------------------------------------------
@@ -2336,50 +2191,6 @@ def ml_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_RRF_K,
         c=_RRF_C,
     )
-
-
-# ---------------------------------------------------------------------------
-# Expected calibration error (r9 judge ask #2): the model-card number
-# from the calibration leg — ml_calibration_bins plots the reliability
-# curve, ml_brier_score is the proper score, this is the binned
-# |accuracy − confidence| summary. Same scored base as the Brier gate.
-# EXACT (better than the quantization the ask floated): the per-bin
-# weight cancels algebraically, leaving the pure integer numerator
-# Σ_b |s_max·n_pos_b − s_sum_b| (operators/ml_eval.py ece),
-# string-serialized per the netflow recipe.
-# ---------------------------------------------------------------------------
-_ECE_BINS = 10
-
-
-def _ece_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import ece_sql
-
-    return ece_sql(
-        _AUC_LABEL_SQL,
-        f"least({quanta_sql('o_totalprice', 2)}, {_BRIER_SMAX})",
-        _BRIER_SMAX,
-        _ECE_BINS,
-        "orders",
-        ["o_orderstatus"],
-    )
-
-
-@query("ml_ece", oracle=_ece_oracle())
-def ml_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blockchain_data_engineering_spark.operators.ml_eval import ece
-
-    orders = spread(load_table(spark, sf_dir, "orders"))
-    out = ece(
-        orders,
-        label=F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
-        score_q=F.least(
-            quanta(F.col("o_totalprice"), 2), F.lit(_BRIER_SMAX)
-        ),
-        s_max=_BRIER_SMAX,
-        n_bins=_ECE_BINS,
-        keys=["o_orderstatus"],
-    )
-    return out.withColumn("ece_num", F.col("ece_num").cast("string"))
 
 
 # ---------------------------------------------------------------------------
@@ -2799,7 +2610,7 @@ def ml_rbo_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Log-loss (r10 judge ask #1): the actual training objective, closing
 # the calibration family — reliability curve (ml_calibration_bins),
-# proper quadratic score (ml_brier_score), binned summary (ml_ece),
+# proper quadratic score (ml_brier_score), binned summary (ml_ece_adaptive),
 # now the logarithmic proper score. The no-engine-log exactness
 # policy is honored by the literal log-quanta table
 # (operators/ml_eval.py log_loss_table — the ndcg_discounts pattern
@@ -2914,9 +2725,9 @@ def ml_log_loss_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Adaptive (equal-mass-bin) ECE (r11): the fixed-width ml_ece gate's
-# bins go empty when scores concentrate, leaning the summary on a few
-# over-full edge bins; the adaptive variant (Nixon et al. 2019 —
+# Adaptive (equal-mass-bin) ECE (r11): fixed-width ECE bins
+# (operators/ml_eval.py ece) go empty when scores concentrate, leaning
+# the summary on a few over-full edge bins; the adaptive variant (Nixon et al. 2019 —
 # ACE) re-draws bin EDGES by rank so each bin holds ~n/n_bins
 # predictions (operators/ml_eval.py ece_adaptive). Same scored orders
 # base as the Brier/ECE/log-loss family, same cancelled-weight exact

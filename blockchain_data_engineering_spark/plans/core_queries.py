@@ -424,45 +424,6 @@ def dedup_keep_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# J3/G1: per-group cross join — transfer-edge construction. Within each
-# order, every sender (supplier of a returned item) pairs with every
-# receiver (supplier of a kept item), carrying the receiver's value —
-# the reference's per-unit receivers×senders blowup
-# (src/etl_vol_transfers/main.py:161-167).
-# ---------------------------------------------------------------------------
-@query(
-    "transfer_edges_cross",
-    oracle=f"""
-    WITH senders AS (
-      SELECT DISTINCT l_orderkey, l_suppkey AS send_supp
-      FROM lineitem WHERE l_returnflag = 'R'
-    ), receivers AS (
-      SELECT l_orderkey, l_suppkey AS rx_supp,
-             {dsum_sql('l_quantity', 0)} AS value
-      FROM lineitem WHERE l_returnflag <> 'R' GROUP BY 1, 2
-    )
-    SELECT s.l_orderkey, s.send_supp, r.rx_supp, r.value
-    FROM senders s JOIN receivers r ON s.l_orderkey = r.l_orderkey
-    """,
-)
-def transfer_edges_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    senders = (
-        li.where(F.col("l_returnflag") == "R")
-        .select("l_orderkey", F.col("l_suppkey").alias("send_supp"))
-        .distinct()
-    )
-    receivers = (
-        li.where(F.col("l_returnflag") != "R")
-        .groupBy("l_orderkey", F.col("l_suppkey").alias("rx_supp"))
-        .agg(dsum(F.col("l_quantity"), 0).alias("value"))
-    )
-    return R.per_group_cross_join(senders, receivers, ["l_orderkey"]).select(
-        "l_orderkey", "send_supp", "rx_supp", "value"
-    )
-
-
-# ---------------------------------------------------------------------------
 # F1-F7: scalar function showcase — hex round-trip (F6), concat (F2),
 # conditional rewrite (F3), abs (F4), label shortening (F7),
 # deterministic surrogate keys (F1 / H1 fix: sha2 content hash instead

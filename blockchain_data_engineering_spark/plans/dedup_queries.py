@@ -113,7 +113,19 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # seeded md5) → 3 bands of 3 (collision probability = jaccard³ per
 # band — selective enough that word-soup corpora don't go quadratic)
 # → bucket-join candidates → exact-Jaccard
-# verification. The oracle replays the identical pipeline in SQL.
+# verification. The oracle replays the identical pipeline in SQL; the
+# corpus-dedup, incremental and containment queries below run it.
+#
+# Signatures come from explode + codegen'd hash-aggregate min() (the
+# 9-seed md5 inside a higher-order transform() is interpreted per
+# element, measured 2-4x slower). Verification reads per-doc ARRAYS
+# built NARROWLY by shingle_array (r12): the same distinct shingle set
+# with ZERO shuffle, where a collect_list re-pack paid an
+# ObjectHashAggregate + a full shuffle of the exploded shingle
+# relation (~3M rows at sf0.1). jaccard_verify_arrays reads the arrays
+# as SETS, so element order is immaterial — measured 5.1 -> 4.2 s on
+# the corpus-dedup pipeline, identical output. sig is persisted
+# because the LSH bucket self-join references it twice.
 # ---------------------------------------------------------------------------
 def _minhash_oracle() -> str:
     # min over the 15-hex-char (60-bit) prefix: selects the same
@@ -173,69 +185,6 @@ def _minhash_oracle() -> str:
     JOIN cnt ca ON ca.doc_id = c.id_a
     JOIN cnt cb ON cb.doc_id = c.id_b
     """
-
-
-@query("dedup_minhash_lsh", oracle=_minhash_oracle())
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    # the exploded (doc_id, shingle) relation feeds the signature build
-    # Signatures from explode + codegen'd hash-aggregate min() (the
-    # 9-seed md5 inside a higher-order transform() is interpreted per
-    # element, measured 2-4x slower); verification from per-doc ARRAYS
-    # built NARROWLY by shingle_array (r12, guide §2.4): the same
-    # distinct shingle set as sequence→transform→array_distinct with
-    # ZERO shuffle, where the old collect_list re-pack paid an
-    # ObjectHashAggregate + a full shuffle of the exploded shingle
-    # relation (~3M rows at sf0.1). jaccard_verify_arrays only reads
-    # the arrays as SETS (array_intersect/size are order-insensitive),
-    # so element order differing from the re-pack is immaterial —
-    # measured 5.1 -> 4.2 s on the corpus-dedup pipeline, identical
-    # output. The verify join is UNHINTED: statically a shuffle join
-    # (no OOM at any corpus size), AQE broadcasts it at runtime iff
-    # the array table measures small — the size-adaptive path, not a
-    # baked-in broadcast. sig is persisted because the LSH bucket
-    # self-join references it TWICE — unpersisted, the whole
-    # shingle→signature subtree (the dominant cost) is computed once
-    # per side; the exploded shingle set now has ONE consumer, so its
-    # r11 persist is gone with the second consumer.
-    sig = D.minhash_signatures(
-        D.shingle_set(docs, k=SHINGLE_K), N_HASHES
-    ).persist()
-    cand = D.lsh_candidate_pairs(D.lsh_bands(sig, N_HASHES, BAND_SIZE))
-    arr = D.shingle_array(docs, k=SHINGLE_K)
-    return finalize(D.jaccard_verify_arrays(cand, arr), sig)
-
-
-# ---------------------------------------------------------------------------
-# SimHash: 32-bit signature over whitespace tokens; identical ±1 bit
-# expressions run in both engines (md5/substr/IN only).
-# ---------------------------------------------------------------------------
-def _simhash_oracle() -> str:
-    terms = D.simhash_bit_exprs("h")
-    sums = ",\n             ".join(
-        f"sum({t}) AS s{i}" for i, t in enumerate(terms)
-    )
-    bits = " || ".join(
-        f"(CASE WHEN s{i} >= 0 THEN '1' ELSE '0' END)" for i in range(len(terms))
-    )
-    return f"""
-    WITH toks AS (
-      SELECT doc_id, md5(token) AS h
-      FROM documents, unnest(string_split(text, ' ')) AS t(token)
-    ),
-    s AS (
-      SELECT doc_id,
-             {sums}
-      FROM toks GROUP BY doc_id
-    )
-    SELECT doc_id, {bits} AS simhash FROM s
-    """
-
-
-@query("dedup_simhash", oracle=_simhash_oracle())
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return D.simhash(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -365,74 +314,18 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SimHash Hamming near-dup pairs: block on the 16-bit signature prefix
-# (near-dups almost always agree on a prefix — the classic simhash
-# table trick; production uses 4 rotated tables to guarantee recall for
-# distance ≤ 3), then exact Hamming distance over the 32-bit strings.
-# Integer everywhere — bit-exact in both engines.
-# ---------------------------------------------------------------------------
-HAMMING_MAX = 6
-_PREFIX_BITS = 16
-
-
-def _hamming_sql() -> str:
-    dist = " + ".join(
-        f"(CASE WHEN substr(a.simhash, {i}, 1) <> substr(b.simhash, {i}, 1) "
-        f"THEN 1 ELSE 0 END)"
-        for i in range(1, 33)
-    )
-    return f"""
-    WITH s AS ({_simhash_oracle()})
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST({dist} AS BIGINT) AS hamming
-    FROM s a JOIN s b
-      ON substr(a.simhash, 1, {_PREFIX_BITS}) = substr(b.simhash, 1, {_PREFIX_BITS})
-     AND a.doc_id < b.doc_id
-    WHERE {dist} <= {HAMMING_MAX}
-    """
-
-
-@query("dedup_simhash_hamming", oracle=_hamming_sql())
-def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    sig = D.simhash(docs).withColumn(
-        "prefix", F.substring(F.col("simhash"), 1, _PREFIX_BITS)
-    )
-    a = sig.select(
-        F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a"), "prefix"
-    )
-    b = sig.select(
-        F.col("doc_id").alias("id_b"), F.col("simhash").alias("sh_b"), "prefix"
-    )
-    pairs = a.join(b, "prefix").where(F.col("id_a") < F.col("id_b"))
-    dist = None
-    for i in range(1, 33):
-        term = F.when(
-            F.substring(F.col("sh_a"), i, 1) != F.substring(F.col("sh_b"), i, 1),
-            F.lit(1),
-        ).otherwise(F.lit(0))
-        dist = term if dist is None else dist + term
-    return finalize(
-        pairs.withColumn("hamming", dist.cast("long"))
-        .where(F.col("hamming") <= HAMMING_MAX)
-        .select("id_a", "id_b", "hamming"),
-        sig,
-    )
-
-
-# ---------------------------------------------------------------------------
 # SimHash near-dup via Manku-style block-combination tables (WWW'07):
 # a 64-bit signature (the paper's fingerprint width) splits into 8
 # blocks of 8 bits; a pair within Hamming distance 6 differs in ≤ 6
 # blocks, so it agrees on ≥ 2 — keying candidates on every C(8,2)=28
 # two-block combination (16-bit keys) CANNOT miss such a pair, the
-# recall guarantee single-prefix blocking (dedup_simhash_hamming)
-# lacks, and the 16-bit keys keep buckets sparse where the 32-bit
-# signature's 4-bit single blocks collided quadratically (7.2M -> ~60k
-# candidates on the sf0.1 corpus). Same exact Hamming verify; 28
-# bucket rows per doc, linear in N.
+# recall guarantee single-prefix blocking lacks, and the 16-bit keys
+# keep buckets sparse where the 32-bit signature's 4-bit single blocks
+# collided quadratically (7.2M -> ~60k candidates on the sf0.1
+# corpus). Exact Hamming verify; 28 bucket rows per doc, linear in N.
 # ---------------------------------------------------------------------------
 SIMHASH64_HEX = 16  # 64-bit signature
+HAMMING_MAX = 6
 
 
 def _multiblock_sql() -> str:
@@ -569,7 +462,7 @@ def pipeline_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: the bucket self-join references sig twice; the verify
     # arrays come from the NARROW shingle_array build (r12 — same
     # distinct set, zero shuffle, set-semantics-only consumers; see
-    # dedup_minhash_lsh for the measured rationale), so the exploded
+    # the MinHash section for the measured rationale), so the exploded
     # shingle set has one consumer and needs no persist
     sig = D.minhash_signatures(
         D.shingle_set(docs, k=SHINGLE_K), N_HASHES
@@ -781,7 +674,7 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # index table a production pipeline maintains incrementally (write it
 # once with sources.upsert_parquet_bucketed keyed on band_val and the
 # bucket join is also shuffle-free). Within-batch duplicates are the
-# self-dedup operator's job (dedup_minhash_lsh); this op answers "is
+# self-dedup pipeline's job (pipeline_corpus_dedup); this op answers "is
 # this new doc already in the corpus, and which doc is it a copy of".
 # Output per batch doc: candidate count, the matched index doc
 # (min id among Jaccard ≥ 0.7 matches), match count, dup flag.
@@ -840,7 +733,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     # verify arrays from the NARROW shingle_array build (r12 — same
-    # distinct set, zero shuffle; see dedup_minhash_lsh), behind the
+    # distinct set, zero shuffle; see the MinHash section), behind the
     # scale-gated candidate prune (no-op below the corpus threshold —
     # see _candidate_prune; cand is persisted, so the id projection
     # reads the cache). The prune now runs at doc grain: one array row
@@ -881,7 +774,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Jaccard misses (a 100-shingle doc inside a 10k-shingle doc has
 # J ≈ 0.01 but containment 1.0; Lee et al. 2022 §4 treat these as
 # duplicates too). Same LSH candidate generation and array-local
-# intersection as dedup_minhash_lsh (bounded by collisions, never
+# intersection as pipeline_corpus_dedup (bounded by collisions, never
 # all-pairs); the contained side (≥ 0.9 coverage, higher-coverage side
 # wins ties, id_a on exact ties) is elected per pair.
 # ---------------------------------------------------------------------------
@@ -906,7 +799,7 @@ def _containment_oracle() -> str:
 @query("dedup_minhash_containment", oracle=_containment_oracle())
 def dedup_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"))
-    # narrow shingle_array verify build (r12 — see dedup_minhash_lsh)
+    # narrow shingle_array verify build (r12 — see the MinHash section)
     sig = D.minhash_signatures(
         D.shingle_set(docs, k=SHINGLE_K), N_HASHES
     ).persist()

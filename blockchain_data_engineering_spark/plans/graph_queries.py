@@ -265,52 +265,6 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Connected components, pointer-jumping variant: each round = one
-# min-label propagation + one label ← label(label) jump. Coverage
-# radius compounds ~2× per round, so 3 rounds dominate 6 pure
-# propagation rounds while running HALF the |E|-sized shuffles (the
-# jump join only touches the |V|-row label table). The oracle unrolls
-# both steps per round.
-# ---------------------------------------------------------------------------
-CC_PJ_ROUNDS = 3
-
-
-def _cc_pj_oracle_sql(rounds: int) -> str:
-    ctes = [
-        f"edges AS ({_EDGES_SQL})",
-        "und AS (SELECT src AS a, dst AS b FROM edges"
-        " UNION SELECT dst, src FROM edges"
-        " UNION SELECT src, src FROM edges"
-        " UNION SELECT dst, dst FROM edges)",
-        "nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)",
-        "l0 AS (SELECT node, node AS label FROM nodes)",
-    ]
-    for i in range(1, rounds + 1):
-        prev = f"l{i - 1}"
-        ctes.append(
-            f"""p{i} AS (
-      SELECT u.a AS node, min(p.label) AS label
-      FROM und u JOIN {prev} p ON u.b = p.node GROUP BY 1
-    )"""
-        )
-        ctes.append(
-            f"""l{i} AS (
-      SELECT a.node, b.label
-      FROM p{i} a JOIN p{i} b ON a.label = b.node
-    )"""
-        )
-    return "WITH " + ",\n".join(ctes) + f"\nSELECT node, label FROM l{rounds}"
-
-
-@query("graph_cc_pointer_jump", oracle=_cc_pj_oracle_sql(CC_PJ_ROUNDS))
-def graph_cc_pointer_jump(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _edges_df(spark, sf_dir)
-    return finalize(
-        G.connected_components_pointer_jump(edges, rounds=CC_PJ_ROUNDS), edges
-    )
-
-
-# ---------------------------------------------------------------------------
 # Triangle counting over the supplier co-occurrence graph (suppliers
 # sharing an order — the customer↔supplier wallet graph is bipartite
 # and trivially triangle-free). Degree-ordered orientation counts each

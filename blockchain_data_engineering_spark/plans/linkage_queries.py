@@ -18,53 +18,6 @@ from blockchain_data_engineering_spark.operators import linkage as L
 from blockchain_data_engineering_spark.operators.relational import scd2_history
 from blockchain_data_engineering_spark.plans.registry import query
 
-# ---------------------------------------------------------------------------
-# Fuzzy entity resolution over part names: multi-pass blocking (first
-# token ∪ last token — either token may be the corrupted one), ONE
-# equi-self-join per pass, Levenshtein ≤ 3 verification on the
-# candidate set only. F.levenshtein and DuckDB's levenshtein are the
-# same integer metric, so the pairs are exactly oracle-checkable.
-# ---------------------------------------------------------------------------
-ER_MAX_DIST = 3
-
-
-@query(
-    "er_fuzzy_part_pairs",
-    oracle=f"""
-    WITH names AS (SELECT DISTINCT p_name FROM part),
-    keyed AS (
-      SELECT p_name,
-             string_split(p_name, ' ')[1]  AS k1,
-             string_split(p_name, ' ')[-1] AS k2
-      FROM names
-    ),
-    cand AS (
-      SELECT a.p_name AS name_a, b.p_name AS name_b
-      FROM keyed a JOIN keyed b ON a.k1 = b.k1 AND a.p_name < b.p_name
-      UNION
-      SELECT a.p_name, b.p_name
-      FROM keyed a JOIN keyed b ON a.k2 = b.k2 AND a.p_name < b.p_name
-    )
-    SELECT name_a, name_b,
-           CAST(levenshtein(name_a, name_b) AS INTEGER) AS edit_dist
-    FROM cand
-    WHERE levenshtein(name_a, name_b) <= {ER_MAX_DIST}
-    """,
-)
-def er_fuzzy_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate part-name pairs (operators.linkage.fuzzy_pairs):
-    blocking passes on first and last name token, union-dedup,
-    native-Levenshtein verify — no cartesian anywhere (plan-tested)."""
-    part = spread(load_table(spark, sf_dir, "part"))
-    first_tok = lambda df: F.element_at(F.split(F.col("p_name"), " "), 1)  # noqa: E731
-    last_tok = lambda df: F.element_at(F.split(F.col("p_name"), " "), -1)  # noqa: E731
-    return L.fuzzy_pairs(
-        part,
-        name_col="p_name",
-        block_keys=[first_tok, last_tok],
-        max_distance=ER_MAX_DIST,
-    )
-
 
 # ---------------------------------------------------------------------------
 # SCD Type 2 dimension history from the orders change log: per
@@ -214,6 +167,10 @@ def scd2_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Each extra round is ~2s of fixed per-round stage overhead on a graph
 # this small — the loop cost is round count, not data.
 ER_CLUSTER_ROUNDS = 2
+# Levenshtein bound of the pair verify: F.levenshtein and DuckDB's
+# levenshtein are the same integer metric, so the pairs are exactly
+# oracle-checkable.
+ER_MAX_DIST = 3
 
 _ER_PAIRS_SQL = f"""
     names AS (SELECT DISTINCT p_name FROM part),
@@ -277,8 +234,10 @@ def _er_cluster_oracle(rounds: int) -> str:
 
 @query("er_entity_clusters", oracle=_er_cluster_oracle(ER_CLUSTER_ROUNDS))
 def er_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy part-name pairs (same blocking + Levenshtein as
-    er_fuzzy_part_pairs) resolved into entity clusters."""
+    """Near-duplicate part-name pairs (operators.linkage.fuzzy_pairs:
+    blocking passes on first and last name token, union-dedup,
+    native-Levenshtein verify, no cartesian) resolved into entity
+    clusters."""
     part = spread(load_table(spark, sf_dir, "part"))
     first_tok = lambda df: F.element_at(F.split(F.col("p_name"), " "), 1)  # noqa: E731
     last_tok = lambda df: F.element_at(F.split(F.col("p_name"), " "), -1)  # noqa: E731

@@ -1,7 +1,7 @@
-"""Multimodal-column queries (SURVEY §7.2 M5). ALL three paths are
-oracle-checked — including the two Arrow-batched pandas-UDF paths,
-whose byte-level math (histograms over the deterministic payloads,
-fixed-size frame chunking) IS expressible over DuckDB BLOBs: bytes are
+"""Multimodal-column queries (SURVEY §7.2 M5). Both are
+oracle-checked Arrow-batched pandas-UDF paths, whose byte-level math
+(histograms over the deterministic payloads, fixed-size frame
+chunking) IS expressible over DuckDB BLOBs: bytes are
 recovered from ``hex(encode(text))`` two chars at a time, frames via
 BLOB ``substring``. The pandas kernels are additionally unit-tested
 against NumPy goldens in tests/test_multimodal.py.
@@ -15,31 +15,6 @@ from pyspark.sql import functions as F
 from blockchain_data_engineering_spark.catalog import load_table, spread
 from blockchain_data_engineering_spark.operators import multimodal as MM
 from blockchain_data_engineering_spark.plans.registry import query
-
-
-# ---------------------------------------------------------------------------
-# Binary payload + typed metadata struct (flattened for the oracle):
-# the columnar representation for opaque image/audio/video payloads.
-# ---------------------------------------------------------------------------
-@query(
-    "multimodal_binary_metadata",
-    oracle="""
-    SELECT doc_id,
-           'application/octet-stream'          AS mime,
-           octet_length(encode(text))          AS n_bytes,
-           md5(text)                           AS checksum
-    FROM documents
-    """,
-)
-def multimodal_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    with_bin = MM.attach_binary(docs)
-    return with_bin.select(
-        "doc_id",
-        F.col("meta.mime").alias("mime"),
-        F.col("meta.n_bytes").alias("n_bytes"),
-        F.col("meta.checksum").alias("checksum"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -191,12 +191,12 @@ def sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # nearest-centroid assignment → exact cosine within the query's nprobe
 # nearest clusters. The other scale path next to sign-LSH: candidates
 # bounded by nprobe × cluster size, recall dialed by nprobe. Oracle
-# replays centroid pick + assignment + probe in SQL.
+# replays centroid pick + assignment + an nprobe=1 probe in SQL.
 # ---------------------------------------------------------------------------
 N_CENTROIDS = 32
 
 
-def _ivf_oracle(nprobe: int = 1) -> str:
+def _ivf_oracle() -> str:
     k = 3
     q_vc = quanta_sql("CAST(v.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE)", 12)
     q_ab = quanta_sql("CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)", 12)
@@ -232,7 +232,7 @@ def _ivf_oracle(nprobe: int = 1) -> str:
     assign AS (SELECT vec_id, centroid_id FROM ranked WHERE pr = 1),
     probes AS (
       SELECT vec_id, centroid_id FROM ranked
-      WHERE pr <= {nprobe} AND vec_id < {N_QUERIES}
+      WHERE pr <= 1 AND vec_id < {N_QUERIES}
     ),
     pairs AS (
       SELECT qa.vec_id AS query_id, ca.vec_id AS cand_id
@@ -263,21 +263,10 @@ def _ivf_oracle(nprobe: int = 1) -> str:
     """
 
 
-@query("sim_ivf_ann", oracle=_ivf_oracle(1))
+@query("sim_ivf_ann", oracle=_ivf_oracle())
 def sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     return SIM.ivf_ann_topk(emb, k=3, n_centroids=N_CENTROIDS, n_queries=N_QUERIES)
-
-
-# nprobe=2 — the recall dial: the query also searches its second-
-# nearest cluster, catching neighbors that straddle the boundary.
-# Corpus assignment stays nprobe=1, so candidates appear once.
-@query("sim_ivf_ann_nprobe2", oracle=_ivf_oracle(2))
-def sim_ivf_ann_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    return SIM.ivf_ann_topk(
-        emb, k=3, n_centroids=N_CENTROIDS, n_queries=N_QUERIES, nprobe=2
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -409,7 +398,9 @@ def sim_lsh_ann_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # squared-L2 assignment (argmin, cid tie-break) and round-half-up
 # integer mean updates, so Spark and DuckDB agree cell-for-cell. The
 # trained centroids are what a production IVF uses in place of the
-# hash-sampled seeds (drop-in: same join shape, better recall).
+# hash-sampled seeds (drop-in: same join shape, better recall). The
+# training CTEs open the trained-IVF, SemDeDup and cluster-quality
+# oracles below.
 # ---------------------------------------------------------------------------
 KM_K = 8
 KM_ITERS = 2
@@ -465,12 +456,6 @@ def _kmeans_oracle() -> str:
     ),{",".join(iters)}
     SELECT cid, dim0, cq FROM {prev}
     """
-
-
-@query("emb_kmeans_centroids", oracle=_kmeans_oracle())
-def emb_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    return SIM.kmeans_centroids_quantized(emb, k=KM_K, iterations=KM_ITERS)
 
 
 # ---------------------------------------------------------------------------
@@ -792,7 +777,7 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Per-cluster quality aggregation: the SemDeDup-then-filter composition
 # a production curation pipeline runs — k-means cluster the embedding
-# space (same trained centroids as emb_kmeans_centroids), assign every
+# space (same trained centroids as sim_ivf_ann_trained), assign every
 # embedded document to its final cluster, join the per-document quality
 # scores, and aggregate per cluster. The output is the curation
 # decision table: clusters with low avg quality / low high-quality

@@ -186,49 +186,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Winnowing document fingerprints (the rolling-hash fingerprinting
-# scheme used by MOSS-style near-dup/plagiarism detection): hash every
-# k-gram, slide a window of w consecutive hashes, keep each window's
-# minimum — documents sharing content share selected fingerprints.
-# Guarantees: any match of length ≥ w+k-1 is caught. All hashes are
-# md5 (engine-portable); the window min is deterministic.
-# ---------------------------------------------------------------------------
-WINNOW_K = 8
-WINNOW_W = 4
-
-
-@query(
-    "text_winnowing_fingerprints",
-    oracle=f"""
-    WITH grams AS (
-      SELECT doc_id, i, md5(substr(text, CAST(i AS INTEGER), {WINNOW_K})) AS h
-      FROM (
-        SELECT doc_id, text,
-               unnest(generate_series(1, greatest(length(text) - {WINNOW_K - 1}, 1))) AS i
-        FROM documents
-      )
-    ),
-    winmin AS (
-      SELECT doc_id,
-             min(h) OVER (
-               PARTITION BY doc_id ORDER BY i
-               ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING
-             ) AS fp,
-             i,
-             max(i) OVER (PARTITION BY doc_id) AS max_i
-      FROM grams
-    )
-    SELECT DISTINCT doc_id, fp
-    FROM winmin
-    WHERE i <= max_i - {WINNOW_W - 1}
-    """,
-)
-def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return TX.winnow_fingerprints(docs, WINNOW_K, WINNOW_W)
-
-
-# ---------------------------------------------------------------------------
 # BM25-ish ranked search over the corpus for a fixed query. The idf
 # uses the BM25 rational core (N − df + ½)/(df + ½) WITHOUT the log —
 # monotone-equivalent ranking, and a pure division of exact integers,
@@ -675,10 +632,14 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Benchmark decontamination: flag corpus documents sharing winnowing
 # fingerprints with a held-out benchmark set (source 'src0' stands in
 # for the eval suite) — the n-gram-overlap check every training corpus
-# runs before release. Reuses the winnowing scheme (any shared
-# substring of length >= w+k-1 = 11 chars is caught); the fingerprint
-# equi-join touches only colliding hashes, never doc x doc.
+# runs before release. Winnowing (MOSS-style): md5 every k-gram, slide
+# a window of w consecutive hashes, keep each window's minimum, so any
+# shared substring of length >= w+k-1 = 11 chars is caught
+# (operators/text.winnow_fingerprints); the fingerprint equi-join
+# touches only colliding hashes, never doc x doc.
 # ---------------------------------------------------------------------------
+WINNOW_K = 8
+WINNOW_W = 4
 DECON_BENCH_SOURCE = "src0"
 
 
@@ -2306,40 +2267,6 @@ def ml_multiclass_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.col("n").cast("double") / F.sum("n").over(w).cast("double")
         ).alias("frac_of_actual"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Macro-F1 (r8): the SCALAR summary of the k×k lang-ID confusion
-# matrix (ml_multiclass_confusion) — the number a language-filter
-# sweep actually tracks — via operators/ml_eval.py multiclass_macro_f1:
-# per-class F1 from ONE (actual, predicted) cell aggregate, the macro
-# mean under the same quantized-sum policy as average_precision
-# (rationals with varying denominators), accuracy as one exact
-# division. Classes = labels present in y_true (sklearn convention).
-# ---------------------------------------------------------------------------
-def _macro_f1_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        multiclass_macro_f1_sql,
-    )
-
-    return multiclass_macro_f1_sql(
-        "lang_declared", "lang_pred", f"({_langid_oracle()})"
-    )
-
-
-@query("ml_macro_f1", oracle=_macro_f1_oracle())
-def ml_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        multiclass_macro_f1,
-    )
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    out = multiclass_macro_f1(
-        docs, F.col("lang"), TX.lang_id(F.col("text"))
-    )
-    return out.withColumn(
-        "macro_f1_num", F.col("macro_f1_num").cast("string")
     )
 
 

@@ -135,3 +135,21 @@ def test_nested_query_settles_once(spark, sf_dir, settle_counter):
     assert settle_counter["n"] == 1
     assert _cache_empty(spark)
     assert out.count() > 0
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize("name", ["graph_kcore", "er_entity_clusters"])
+def test_loop_rounds_released_as_they_die(spark, sf_dir, name):
+    """An iterative loop releases each round's checkpoint once the next
+    round is materialized (``cache.next_round``), with no garbage
+    collection forced: after the query only two new RDDs stay
+    registered, the settled result's checkpoint and the loop's last
+    round, which the result was built from."""
+    before = _persistent_rdd_ids(spark)
+    out = QUERIES[name](spark, sf_dir)
+    assert out.count() > 0
+    new = _persistent_rdd_ids(spark) - before
+    assert len(new) <= 2, (name, sorted(new))

@@ -79,7 +79,8 @@ def test_front_loaded_queries_precede_already_rowed_ones():
 def test_verification_doc_counts_match_registry():
     """r7 judge ask #3: prose query counts rot (VERIFICATION.md said
     143 while the registry held 156). The stated counts in
-    docs/VERIFICATION.md AND README.md must match the imported
+    docs/VERIFICATION.md, README.md AND the verify skill
+    (.claude/skills/verify/SKILL.md) must match the imported
     registry — rotations can no longer strand them."""
     import os
     import re
@@ -117,6 +118,18 @@ def test_verification_doc_counts_match_registry():
     assert tuple(map(int, m3.groups())) == (n_gate, n_extra, n_total), (
         f"README.md says {m3.groups()}, registry is "
         f"({n_gate}, {n_extra}, {n_total})"
+    )
+
+    with open(os.path.join(root, ".claude", "skills", "verify", "SKILL.md")) as fh:
+        skill = fh.read()
+    m4 = re.search(
+        r"Both return the (\d+) gate queries.*?every registered query \((\d+)\)",
+        skill,
+        re.S,
+    )
+    assert m4, "SKILL.md registry count line not found (format changed?)"
+    assert tuple(map(int, m4.groups())) == (n_gate, n_total), (
+        f"SKILL.md says {m4.groups()}, registry is ({n_gate}, {n_total})"
     )
 
 

@@ -2,7 +2,7 @@
 under k, the offset construction, the ε = 1/(k+1) guarantee at two
 sizes, merge algebra vs a Python reference, the empty-counter merge
 edge, determinism, and plan shape. Engine-vs-DuckDB parity is covered
-by test_oracle_parity (agg_heavy_hitters / agg_heavy_hitters_merged)."""
+by test_oracle_parity (agg_heavy_hitters_merged, agg_heavy_hitters_phi)."""
 
 from __future__ import annotations
 

@@ -46,27 +46,3 @@ def test_resize_stub_truncates(spark, sf_dir):
     out = MM.resize_stub(MM.attach_binary(docs), target_bytes=100).collect()
     for r in out:
         assert r.meta_resized.n_bytes == min(100, r.meta.n_bytes)
-
-
-def test_arrow_feature_extraction_identical_to_pandas_form(spark, sf_dir):
-    """extract_features_arrow (mapInArrow, zero-copy) must produce
-    EXACTLY the rows of extract_features (mapInPandas) — the two are
-    deployment knobs over one kernel, never two kernels."""
-    from blockchain_data_engineering_spark.catalog import load_table
-    from blockchain_data_engineering_spark.operators.multimodal import (
-        attach_binary,
-        extract_features,
-        extract_features_arrow,
-    )
-
-    docs = attach_binary(
-        load_table(spark, sf_dir, "documents").limit(64), "text"
-    )
-    a = extract_features_arrow(docs, n_buckets=10).toPandas()
-    p = extract_features(docs, n_buckets=10).toPandas()
-    key = lambda df: df.sort_values("doc_id").reset_index(drop=True)
-    a, p = key(a), key(p)
-    assert len(a) == len(p) == 64
-    assert (a["n_bytes"] == p["n_bytes"]).all()
-    assert (a["mean_byte"] == p["mean_byte"]).all()
-    assert all(list(x) == list(y) for x, y in zip(a["byte_histogram"], p["byte_histogram"]))

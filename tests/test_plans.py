@@ -15,15 +15,19 @@ from blockchain_data_engineering_spark.session import executed_plans
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    """Explain the query's REAL computational plan: the lazy result is
+    """Explain the query's REAL computational plan (see _plan_of)."""
+    return _plan_of(spark, lambda: QUERIES[name](spark, sf_dir))
+
+
+def _plan_of(spark, build) -> str:
+    """Explain ``build()``'s REAL computational plan: the lazy result is
     explained inside a scope that is never settled (no settle
     checkpoint truncating the shape to a flat scan; the scope releases
     the caches on exit), followed by the executed plans of whatever
     the construction ran — the round checkpoints of iterative loops."""
-    fn = QUERIES[name]
     buf = io.StringIO()
     with executed_plans(spark) as ran, scope(), redirect_stdout(buf):
-        fn(spark, sf_dir).explain("formatted")
+        build().explain("formatted")
     return "\n".join([buf.getvalue(), *ran])
 
 
@@ -91,7 +95,7 @@ def test_no_python_udfs_on_relational_paths(spark, sf_dir):
     allowed_bnlj = {"sim_ivf_ann", "agg_hll_distinct", "agg_kmv_distinct",
                     "agg_kmv_intersection", "dq_join_skew_report",
                     "text_vocab_coverage",
-                    "sim_cosine_topk", "sim_ivf_ann_nprobe2", "events_funnel",
+                    "sim_cosine_topk", "events_funnel",
                     "flagship_volume_stack", "emb_hard_negatives",
                     # 1-row broadcast total (n_total) cross-joined onto
                     # the frequent-pair table — same audited shape as
@@ -736,8 +740,23 @@ def test_ndcg_ideal_rank_is_group_limited(spark, sf_dir):
 def test_macro_f1_runs_at_cell_grain_no_window(spark, sf_dir):
     """multiclass_macro_f1 must collapse the facts in ONE (actual,
     predicted) cell aggregate and do everything after at class grain —
-    no window over the facts, no cartesian."""
-    plan = _plan(spark, sf_dir, "ml_macro_f1")
+    no window over the facts, no cartesian. Facts: declared language
+    vs the lang-ID heuristic over the documents."""
+    from pyspark.sql import functions as F
+
+    from blockchain_data_engineering_spark.catalog import load_table, spread
+    from blockchain_data_engineering_spark.operators import text as TX
+    from blockchain_data_engineering_spark.operators.ml_eval import (
+        multiclass_macro_f1,
+    )
+
+    def build():
+        docs = spread(load_table(spark, sf_dir, "documents"))
+        return multiclass_macro_f1(
+            docs, F.col("lang"), TX.lang_id(F.col("text"))
+        )
+
+    plan = _plan_of(spark, build)
     assert "Window" not in plan, plan
     assert "CartesianProduct" not in plan
 

@@ -1,7 +1,7 @@
 """Quantile sketch (operators/quantiles.py): merge exactness, the DKW
 ±ε rank guarantee at two SFs, determinism, and plan shape. The
 engine-vs-DuckDB replay parity is covered by test_oracle_parity
-(agg_quantile_sketch)."""
+(agg_quantile_sketch_merged)."""
 
 from __future__ import annotations
 

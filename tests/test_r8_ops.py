@@ -341,7 +341,7 @@ def test_review_fixes_sql_twins_and_null_bounds(spark, duck):
     )
     from blockchain_data_engineering_spark.operators.ml_eval import (
         average_precision_sql,
-        multiclass_macro_f1_sql,
+        multiclass_macro_f1_from_cells_sql,
         rrf_fuse,
     )
     from blockchain_data_engineering_spark.sources.io import (
@@ -356,7 +356,11 @@ def test_review_fixes_sql_twins_and_null_bounds(spark, duck):
     duck.execute(
         "CREATE OR REPLACE TEMP TABLE t9(a VARCHAR, p VARCHAR)"
     )
-    [m] = duck.execute(multiclass_macro_f1_sql("a", "p", "t9")).fetchall()
+    [m] = duck.execute(
+        multiclass_macro_f1_from_cells_sql(
+            "(SELECT a AS actual, p AS predicted, 1 AS n FROM t9)"
+        )
+    ).fetchall()
     assert m[0] == 0 and m[1] == 0 and m[2] is None and m[3] == "0"
     assert m[4] is None
 

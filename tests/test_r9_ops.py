@@ -377,9 +377,25 @@ def test_r9_plan_shapes(spark, sf_dir):
     stay Window-free single-aggregate plans; the gain sweep keeps its
     explode (no spine BNLJ); kendall's pair join keys on user_id (no
     cartesian); the φ-scan keeps the WindowGroupLimit-bounded build."""
-    from test_plans import _plan
+    from test_plans import _plan, _plan_of
 
-    p = _plan(spark, sf_dir, "ml_ece")
+    from blockchain_data_engineering_spark.catalog import load_table, spread
+    from blockchain_data_engineering_spark.plans.parity import quanta
+
+    s_max = 300_000_00  # capped order price, quanta(2)
+
+    def urgent_ece():
+        orders = spread(load_table(spark, sf_dir, "orders"))
+        return ece(
+            orders,
+            label=F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"),
+            score_q=F.least(quanta(F.col("o_totalprice"), 2), F.lit(s_max)),
+            s_max=s_max,
+            n_bins=10,
+            keys=["o_orderstatus"],
+        )
+
+    p = _plan_of(spark, urgent_ece)
     assert "Window" not in p and "BroadcastNestedLoopJoin" not in p
     p = _plan(spark, sf_dir, "ml_matthews_corr")
     assert "Window" not in p and "Join" not in p  # ONE aggregate chain

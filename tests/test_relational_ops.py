@@ -123,7 +123,8 @@ def test_airdrop_hot_key_skew_split_and_salted_equivalence(spark):
     try:
         for k, v in confs.items():
             spark.conf.set(k, v)
-        edges = R.per_group_cross_join(receivers, senders, keys)
+        # the per-group cross join (J3): an equi join on the group key
+        edges = receivers.join(senders, keys, "inner")
         # collect() executes THIS DataFrame's QueryExecution, finalizing
         # its AdaptiveSparkPlan (count()/noop-write build a separate one)
         n = len(edges.collect())
