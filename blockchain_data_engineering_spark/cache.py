@@ -17,6 +17,13 @@ open, :func:`finalize` settles at once (examples, streaming, direct
 operator calls). Plan checks read the plans that actually executed
 (``session.executed_plans``) or ``.explain()`` a result inside a scope
 that is never settled.
+
+Every materialization an operator makes is of one of two kinds: a
+``persist()`` (a CacheManager entry) or a :func:`round_checkpoint`
+(RDD-level blocks). :func:`release` frees either, reading the kind
+from the frame, and the scope, the settle and :func:`next_round` all
+free through it — so no materialization registered with
+:func:`finalize` outlives the query.
 """
 
 from __future__ import annotations
@@ -51,7 +58,7 @@ class Scope:
 
     def _release(self) -> None:
         for c in self._caches:
-            c.unpersist()
+            release(c)
         self._caches = []
 
 
@@ -67,7 +74,7 @@ def _settle(result: DataFrame, caches: Iterable[DataFrame]) -> DataFrame:
     # pipeline against uncached inputs
     out = result.localCheckpoint(eager=True)
     for c in caches:
-        c.unpersist()
+        release(c)
     return out
 
 
@@ -79,10 +86,19 @@ def scope() -> Iterator[Scope]:
     the outermost scope and returns its result lazily. The caller
     settles with ``s.settle(result)``. A nested scope joins the outer
     one: its ``settle`` is a passthrough, and the outermost settles
-    once. On exit — settled, unsettled or by exception — every cache
-    still registered is released, so an unsettled lazy result
-    recomputes against uncached inputs (the safe direction: correct,
-    slower, never a leak)."""
+    once. On exit — settled, unsettled or by exception — every frame
+    still registered is released (:func:`release`), so an unsettled
+    lazy result recomputes against unpersisted inputs (the safe
+    direction: correct, slower, never a leak). A lazy result that reads
+    a released :func:`round_checkpoint` cannot recompute: an action on
+    it after an unsettled exit fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. Registered queries always
+    settle; ``.explain()`` such a result inside the scope.
+
+    An operator whose materializations must be freed on every exit,
+    exceptions included, opens its own scope and registers them with
+    :func:`finalize` as it makes them: called from a query it joins
+    the query's scope, called directly its scope releases them."""
     if _OWNER.get() is not None:
         yield Scope()
         return
@@ -108,17 +124,16 @@ def round_checkpoint(df: DataFrame) -> DataFrame:
     partitioning does not carry into the next round's plan. Checkpoint
     blocks are RDD-level storage: nothing registers in the catalog
     CacheManager, but the RDD stays in the SparkContext's persistent
-    RDDs until it is released. Spark's ContextCleaner frees it only
-    once the JVM holds no reference to it: the Python DataFrame must be
-    garbage-collected first (its py4j handle pins the JVM Dataset), and
-    then the JVM must collect. A replay's per-batch checkpoints
-    survived a JVM ``System.gc()`` and went only after a Python
-    ``gc.collect()`` plus a JVM GC. A caller that knows when a
-    checkpoint is dead releases it at once with
-    :func:`release_checkpoint`; iterative loops step through
-    :func:`next_round`, which releases each round once the next one is
-    materialized. Each round is its own executed query,
-    so its physical plan is in the SQL status store.
+    RDDs until it is released. Left to Spark's ContextCleaner it goes
+    only once the JVM holds no reference to it: the Python DataFrame
+    must be garbage-collected first (its py4j handle pins the JVM
+    Dataset), and then the JVM must collect. A replay's per-batch
+    checkpoints survived a JVM ``System.gc()`` and went only after a
+    Python ``gc.collect()`` plus a JVM GC. So every checkpoint is
+    freed with :func:`release`: registered with :func:`finalize` (the
+    settle releases it), stepped through :func:`next_round`, or
+    released in-call once it is dead. Each round is its own executed
+    query, so its physical plan is in the SQL status store.
 
     Fault-tolerance trade: ``localCheckpoint`` severs lineage onto
     NON-REPLICATED executor-local blocks — on a cluster, losing an
@@ -133,37 +148,46 @@ def round_checkpoint(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def release_checkpoint(df: DataFrame) -> None:
-    """Free the blocks of a :func:`round_checkpoint` frame now, without
-    waiting for garbage collection. ``df`` must be the checkpoint frame
-    itself (its analyzed plan is the checkpointed RDD scan). A later
-    action on ``df``, or on a frame built from it, fails with
-    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+def release(df: DataFrame) -> None:
+    """Free a materialized frame now, whichever kind it is: the blocks
+    of a :func:`round_checkpoint` frame (its analyzed plan is the
+    checkpointed RDD's scan) and the frame's CacheManager entry
+    (``unpersist()``) — both, for a persisted checkpoint frame; a frame
+    that is neither is left alone. A later action on a released
+    checkpoint, or on a frame built from it, fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``; a frame built on a released
+    persist recomputes its input."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+    df.unpersist()
 
 
 def next_round(df: DataFrame, prev: DataFrame | None) -> DataFrame:
     """One iterative-loop step: :func:`round_checkpoint` ``df``, then
-    release ``prev`` (``None`` or the previous round's checkpoint),
-    which nothing reads once the new round is materialized. A loop
-    that steps through this keeps one round registered at a time: the
-    last, which its lazy result reads."""
+    :func:`release` ``prev`` (``None``, the loop's initial frame or the
+    previous round), which nothing reads once the new round is
+    materialized. A loop that steps through this keeps one round
+    materialized at a time: the last, which its lazy result reads and
+    which the loop registers with :func:`finalize`."""
     out = round_checkpoint(df)
     if prev is not None:
-        release_checkpoint(prev)
+        release(prev)
     return out
 
 
 def finalize(result: DataFrame, *caches: DataFrame) -> DataFrame:
     """Hand ``result`` and the caches it reads to the cache owner.
 
-    Inside a :func:`scope` the caches are registered on the outermost
-    scope and ``result`` returns lazily; the scope settles once. With
-    no scope open the settle happens here: eager ``localCheckpoint``
-    of ``result`` (while every cache is still live), then release of
-    the caches. The checkpoint is RDD-level storage, invisible to the
-    Spark catalog CacheManager, freed once the DataFrame is garbage-
-    collected (see :func:`round_checkpoint`).
+    ``caches`` are the frames the call materialized, persisted or
+    :func:`round_checkpoint`-ed alike. Inside a :func:`scope` they are
+    registered on the outermost scope and ``result`` returns lazily;
+    the scope settles once. With no scope open the settle happens
+    here: eager ``localCheckpoint`` of ``result`` (while every cache is
+    still live), then :func:`release` of the caches. The settled
+    result is the caller's: RDD-level storage, invisible to the Spark
+    catalog CacheManager, freed once the DataFrame is garbage-collected
+    (see :func:`round_checkpoint`).
     """
     owner = _OWNER.get()
     if owner is None:

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from blockchain_data_engineering_spark.cache import (
     finalize,
     next_round,
-    release_checkpoint,
+    release,
     round_checkpoint,
 )
 
@@ -186,25 +186,24 @@ def neighborhood(
     notebook's MATCH (s)-[t:SENT_TO]->(r) sample, G4 — but anchored and
     deterministic instead of LIMIT 50).
 
-    Each level is eagerly persisted: the frontier is referenced twice
-    (the union AND the next expansion join), so an uncached loop
-    re-evaluates level k's subtree ~2^(depth-k) times — the same 2^k
-    lineage blowup the CC loop documents. The result is finalized
-    (checkpoint-then-release) so no cache outlives the call — the
-    engine-wide contract enforced by the parity suite's cache sweep.
+    Each level is a :func:`~..cache.round_checkpoint`: the frontier is
+    referenced twice (the union AND the next expansion join), so an
+    unmaterialized loop re-evaluates level k's subtree ~2^(depth-k)
+    times — the same 2^k lineage blowup the CC loop documents. The
+    result reads every level, so all of them go to ``finalize``.
     """
-    frontier = edges.where(F.col(src) == node).persist()
+    frontier = round_checkpoint(edges.where(F.col(src) == node))
     result = frontier
-    cached = [frontier]
+    levels = [frontier]
     for _ in range(depth - 1):
-        nxt = edges.join(
-            frontier.select(F.col(dst).alias(src)).distinct(), src, "inner"
-        ).persist()
-        nxt.count()
-        result = result.unionByName(nxt).distinct()
-        frontier = nxt
-        cached.append(nxt)
-    return finalize(result, *cached)
+        frontier = round_checkpoint(
+            edges.join(
+                frontier.select(F.col(dst).alias(src)).distinct(), src, "inner"
+            )
+        )
+        result = result.unionByName(frontier).distinct()
+        levels.append(frontier)
+    return finalize(result, *levels)
 
 
 def connected_components(
@@ -278,10 +277,10 @@ def connected_components_pointer_jump(
     the previous round's plan TWICE — left unchecked that doubles the
     uncached lineage per round (2^k subtree re-evaluations, the same
     hazard documented on pipeline_corpus_dedup). Each round therefore
-    persists its propagated labels before jumping. At billion-node
+    materializes its propagated labels before jumping. At billion-node
     scale pass ``broadcast=False`` (pre-partitioning the edge list on
-    the join key), and checkpoint instead of persist every few rounds
-    to truncate lineage.
+    the join key), and checkpoint reliably every few rounds to keep
+    lost executors recoverable.
     """
     nodes = vertices_of(edges, src, dst)
     # repartition("a") BEFORE the distinct (r11, guide §2.4): the
@@ -298,19 +297,9 @@ def connected_components_pointer_jump(
         .distinct()
         .cache()
     )
-    labels = nodes.select(F.col("node"), F.col("node").alias("label"))
-    prop = None
+    labels = prop = nodes.select(F.col("node"), F.col("node").alias("label"))
     for _ in range(rounds):
-        # materialize each round with an eager localCheckpoint (r11):
-        # the propagated labels are computed exactly once either way,
-        # but the checkpoint hands the jump (which references prop
-        # TWICE) and the next round a FLAT |V|-row scan — the previous
-        # persist()+count() chain nested one InMemoryRelation per
-        # round and Catalyst re-canonicalized the whole tree on every
-        # later round's planning (the same measured pathology as the
-        # kcore loop: per-round cost grew 0.5 s -> 2.7 s by round 3
-        # at sf0.1). next_round releases the previous round's
-        # checkpoint; only the last stays, read by the lazy result.
+        # the jump references prop TWICE
         prop = next_round(
             und.join(_hint(labels.withColumnRenamed("node", "b"), broadcast), "b")
             .groupBy(F.col("a").alias("node"))
@@ -326,7 +315,7 @@ def connected_components_pointer_jump(
             ),
             "label",
         ).select("node", F.col("ll").alias("label"))
-    return finalize(labels, und)
+    return finalize(labels, und, prop)
 
 
 def triangle_count(
@@ -442,7 +431,10 @@ def label_propagation_communities(
     billion-node scale — see :func:`_hint`), one (node, label)
     count aggregation (map-side combined), one per-node argmax window
     keyed on the node. Lineage stays linear (labels referenced once
-    per round).
+    per round). Each round is materialized through
+    :func:`~..cache.next_round`: its broadcast build is a separate job
+    whose input is the previous labels, so unmaterialized labels would
+    re-run every earlier round (O(k²) total round work).
     """
     from pyspark.sql.window import Window
 
@@ -458,7 +450,6 @@ def label_propagation_communities(
     w = Window.partitionBy("node").orderBy(
         F.col("cnt").desc(), F.col("label")
     )
-    prev = None
     for _ in range(iterations):
         votes = (
             und.join(_hint(labels.withColumnRenamed("node", "b"), broadcast), "b")
@@ -472,23 +463,14 @@ def label_propagation_communities(
             .where(F.col("__rn") == 1)
             .select("node", F.col("label").alias("__new"))
         )
-        labels = (
-            nodes.join(winners, "node", "left")
-            .select(
+        labels = next_round(
+            nodes.join(winners, "node", "left").select(
                 "node",
                 F.coalesce(F.col("__new"), F.col("node")).alias("label"),
-            )
+            ),
+            labels,
         )
-        # eager per-round persist: each round's broadcast build is a
-        # separate job whose input is the PREVIOUS labels — uncached,
-        # job k re-executes rounds 1..k-1 (O(k²) total round work);
-        # cached, every broadcast reads |V| materialized rows
-        labels = labels.persist()
-        labels.count()
-        if prev is not None:
-            prev.unpersist()
-        prev = labels
-    return finalize(labels, und, nodes, *([prev] if prev is not None else []))
+    return finalize(labels, und, nodes, labels)
 
 
 def kcore(
@@ -513,12 +495,11 @@ def kcore(
     (broadcast by default, ``broadcast=False`` + pre-partitioned edges
     at billion-node scale — see :func:`_hint`).
 
-    Cache lifetime contract: every round is an eager
-    ``round_checkpoint`` (a flat scan, no R-round nested
-    InMemoryRelation tree for downstream planners to canonicalize),
-    and the ≤|V|-row (node, degree) result goes through ``finalize``:
-    settled here when no scope is open, otherwise by the enclosing
-    query's one settle. Plan checks read the rounds' executed plans.
+    Cache lifetime contract: every round steps through
+    ``next_round``, and the ≤|V|-row (node, degree) result goes
+    through ``finalize`` with the last round: settled here when no
+    scope is open, otherwise by the enclosing query's one settle. Plan
+    checks read the rounds' executed plans.
 
     Returns (node, degree) over the surviving subgraph.
     """
@@ -528,16 +509,6 @@ def kcore(
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
-    # Per-round materialization (r11): an eager localCheckpoint instead
-    # of persist()+count(). The peel is computed exactly once either
-    # way, but the checkpoint hands the next round a FLAT scan, where
-    # persist() hands it a one-level-deeper InMemoryRelation tree —
-    # and Catalyst re-canonicalizes that whole nested tree on every
-    # later round's planning, measured growing 0.4 s (round 1) -> 2.7 s
-    # (round 3) -> 2.2 s final aggregate at sf0.1; flat rounds stay
-    # ~0.4 s each and the final aggregate 0.2 s. next_round releases
-    # each round once the next is materialized; the last stays, read by
-    # the lazy result.
     alive = round_checkpoint(sym)
     for _ in range(rounds):
         # persisted: keep feeds BOTH semi-joins — unpersisted, the
@@ -559,7 +530,8 @@ def kcore(
     return finalize(
         alive.groupBy(F.col("a").alias("node")).agg(
             F.count(F.lit(1)).alias("degree")
-        )
+        ),
+        alive,
     )
 
 
@@ -588,8 +560,7 @@ def bfs_levels(
     and visited sets are ≤|V| rows (broadcast by default,
     ``broadcast=False`` + edges pre-partitioned by ``src`` at
     billion-node scale — see :func:`_hint`). Early exit when a
-    frontier empties: the per-round ``count()`` doubles as the
-    persist materialization the loop needs anyway.
+    frontier empties.
     """
     pieces = [
         seeds.select("node")
@@ -602,13 +573,9 @@ def bfs_levels(
         visited = pieces[0]
         for p in pieces[1:]:
             visited = visited.union(p)
-        # eager localCheckpoint instead of persist() (r11): the final
-        # union references every hop's piece, so the persist chain
-        # nested one InMemoryRelation per hop for Catalyst to
-        # re-canonicalize at each later hop's planning (the kcore
-        # loop's measured pathology); flat ≤|V|-row scans keep hop
-        # planning constant. The lazy result reads every non-empty
-        # hop, so those stay registered; the empty last hop is released
+        # the lazy result reads every non-empty hop, so each is kept
+        # through round_checkpoint and registered below; the empty last
+        # hop is released
         nxt = (
             edges.join(
                 _hint(frontier.select(F.col("node").alias(src)), broadcast),
@@ -622,7 +589,7 @@ def bfs_levels(
         )
         nxt = round_checkpoint(nxt)
         if nxt.count() == 0:
-            release_checkpoint(nxt)
+            release(nxt)
             break
         pieces.append(nxt)
         frontier = nxt
@@ -660,7 +627,7 @@ def sssp(
     tagged old/new, one ``groupBy(node)`` computes ``min(dist)`` and
     the old distance (``min`` over the old-tagged rows — at most one
     per node, the dist table is keyed), and ``improved ⇔ old IS NULL
-    OR new < old``. One persist + one materializing action per round;
+    OR new < old``. One materialized round (``next_round``) per round;
     the distance table stays ≤ |V| rows (broadcast hint on the edge
     join by default; ``broadcast=False`` with src-partitioned edges at
     billion-node scale). Early exit when no distance improves.
@@ -672,9 +639,7 @@ def sssp(
         .select("node", F.lit(0).cast("long").alias("dist"))
         .persist()
     )
-    delta = dist
-    caches = [dist]
-    combined = None
+    delta = combined = dist
     for _ in range(rounds):
         cand = (
             edges.join(
@@ -692,14 +657,8 @@ def sssp(
                 F.lit(True).alias("__new"),
             )
         )
-        # eager localCheckpoint instead of persist()+count() (r11):
-        # computed once either way, but each round hands the next a
-        # FLAT ≤|V|-row scan instead of nesting one more
-        # InMemoryRelation for Catalyst to re-canonicalize per later
-        # round (the kcore loop's measured planning pathology).
-        # next_round releases the previous round; the last stays, read
-        # by the lazy result. A round with no improvement carries
-        # exactly the previous distances, so the loop can stop on it.
+        # a round with no improvement carries exactly the previous
+        # distances, so the loop can stop on it
         combined = next_round(
             dist.select("node", "dist", F.lit(False).alias("__new"))
             .unionByName(cand)
@@ -714,7 +673,7 @@ def sssp(
         if combined.where(improved_flag).count() == 0:
             break
         delta = combined.where(improved_flag).select("node", "dist")
-    return finalize(dist, *caches)
+    return finalize(dist, combined)
 
 
 def earliest_arrival(
@@ -787,9 +746,7 @@ def earliest_arrival(
         .agg(F.min("arr").alias("arr"))
         .persist()
     )
-    delta = arr
-    caches = [arr]
-    combined = None
+    delta = combined = arr
     for _ in range(rounds):
         # one tagged-union aggregation yields merged arrivals AND the
         # improved flag together — see sssp for the shape (r5 ask #4)
@@ -808,9 +765,6 @@ def earliest_arrival(
             .agg(F.min(time).alias("arr"))
             .select("node", "arr", F.lit(True).alias("__new"))
         )
-        # eager localCheckpoint instead of persist()+count() (r11) —
-        # same rationale, measurement and round release as the sssp
-        # loop above
         combined = next_round(
             arr.select("node", "arr", F.lit(False).alias("__new"))
             .unionByName(cand)
@@ -826,8 +780,8 @@ def earliest_arrival(
             break
         delta = combined.where(improved_flag).select("node", "arr")
     # the result reads the last round, never the triples
-    release_checkpoint(trips)
-    return finalize(arr, *caches)
+    release(trips)
+    return finalize(arr, combined)
 
 
 def clustering_coefficient(
@@ -859,11 +813,10 @@ def clustering_coefficient(
         .distinct()
         .persist()
     )
-    # materialized (r11): deg feeds BOTH endpoint joins below AND the
-    # final readout join — un-materialized, each reference re-ran the
+    # materialized: deg feeds BOTH endpoint joins below AND the final
+    # readout join — un-materialized, each reference re-ran the
     # union+aggregate over the edge cache (guide §2.4 duplicated
-    # subtrees); flat |V|-row scan, registered until garbage
-    # collection (cache.round_checkpoint) because the lazy result reads it
+    # subtrees)
     deg = round_checkpoint(
         und.select(F.col("a").alias("node"))
         .union(und.select(F.col("b").alias("node")))
@@ -923,4 +876,4 @@ def clustering_coefficient(
             / (F.col("degree") * (F.col("degree") - 1)).cast("double"),
         ).alias("lcc"),
     )
-    return finalize(out, und, oriented)
+    return finalize(out, und, oriented, deg)

@@ -1889,10 +1889,8 @@ def ece(
     grain. Returns ``n``, ``n_bins_used`` (non-empty bins), ``ece_num``
     (DECIMAL(38,0) — serialize as string in gate queries) and ``ece``
     (NULL for an empty group)."""
-    if n_bins < 1:
-        raise ValueError(f"n_bins must be >= 1, got {n_bins}")
-    if s_max < 1:
-        raise ValueError(f"s_max must be >= 1, got {s_max}")
+    keyed = list(keys)
+    base = _ece_input(df, label, score_q, s_max, n_bins, keyed)
     if n_bins > s_max:
         raise ValueError(
             f"n_bins ({n_bins}) > s_max ({s_max}): scores have only "
@@ -1900,13 +1898,6 @@ def ece(
             "would be structurally empty — raise the score resolution "
             "or lower n_bins"
         )
-    keyed = list(keys)
-    base = df.where(
-        label.isNotNull()
-        & score_q.isNotNull()
-        & (score_q >= 0)
-        & (score_q <= int(s_max))
-    ).select(*keyed, label.alias("__y"), score_q.alias("__s"))
     binned = base.select(
         *keyed,
         F.least(
@@ -1928,6 +1919,30 @@ def ece(
         .alias("__ssum"),
     )
     return _ece_totals(binned, keyed, s_max)
+
+
+def _ece_input(
+    df: DataFrame,
+    label: Column,
+    score_q: Column,
+    s_max: int,
+    n_bins: int,
+    keyed: list[str],
+) -> DataFrame:
+    """The input step :func:`ece` and :func:`ece_adaptive` share:
+    validate ``n_bins``/``s_max``, then keep the rows that are a
+    probability (non-NULL label and score, score in [0, s_max]) as
+    (keys…, ``__y``, ``__s``)."""
+    if n_bins < 1:
+        raise ValueError(f"n_bins must be >= 1, got {n_bins}")
+    if s_max < 1:
+        raise ValueError(f"s_max must be >= 1, got {s_max}")
+    return df.where(
+        label.isNotNull()
+        & score_q.isNotNull()
+        & (score_q >= 0)
+        & (score_q <= int(s_max))
+    ).select(*keyed, label.alias("__y"), score_q.alias("__s"))
 
 
 def _ece_totals(binned: DataFrame, keyed: list[str], s_max: int) -> DataFrame:
@@ -2181,17 +2196,8 @@ def ece_adaptive(
     Unlike :func:`ece` there is no ``n_bins ≤ s_max`` rule: bins are
     drawn by mass, so sparse scores just use fewer bins (reported by
     ``n_bins_used``)."""
-    if n_bins < 1:
-        raise ValueError(f"n_bins must be >= 1, got {n_bins}")
-    if s_max < 1:
-        raise ValueError(f"s_max must be >= 1, got {s_max}")
     keyed = list(keys)
-    base = df.where(
-        label.isNotNull()
-        & score_q.isNotNull()
-        & (score_q >= 0)
-        & (score_q <= int(s_max))
-    ).select(*keyed, label.alias("__y"), score_q.alias("__s"))
+    base = _ece_input(df, label, score_q, s_max, n_bins, keyed)
     per_score = base.groupBy(*keyed, "__s").agg(
         F.count(F.lit(1)).cast("long").alias("__cnt"),
         F.sum(F.when(F.col("__y"), 1).otherwise(0))
@@ -4020,9 +4026,11 @@ def _krippendorff_unit_state(
     metric — the per-unit disagreement ingredients (``__ss`` for
     nominal, ``__s1``/``__s2`` moments for interval/ordinal, over the
     e-transform for ordinal) plus the category-marginal aggregate.
-    Returns ``(kept_items, drops, cat_agg)``; ``kept_items`` also
-    carries ``__kc`` (distinct categories voted on the unit — free at
-    the item re-aggregation, used only by the explain reader)."""
+    Returns ``(kept_items, drops, cat_agg, shared)``; ``kept_items``
+    also carries ``__kc`` (distinct categories voted on the unit — free
+    at the item re-aggregation, used only by the explain reader), and
+    ``shared`` lists the materialized diamond nodes the caller hands to
+    ``finalize``."""
     not_null = F.col(item_col).isNotNull() & F.col(category_col).isNotNull()
     for c in keyed:
         not_null = not_null & F.col(c).isNotNull()
@@ -4045,17 +4053,11 @@ def _krippendorff_unit_state(
     # re-canonicalizes it per reference (measured 8.6 s lazy vs 2.2 s
     # eager for the whole ordinal build+run). Each node is
     # ≤ (unit, category) grain — the same linear-in-corpus rows the
-    # aggregate itself already shuffles; nothing registers in the
-    # CacheManager, and the lazy result reads every node, so their
-    # blocks stay registered until garbage collection
-    # (cache.round_checkpoint).
+    # aggregate itself already shuffles; the lazy result reads every
+    # node, so they go to the caller's finalize.
     from blockchain_data_engineering_spark.cache import round_checkpoint
 
-    # no caches list: finalize's release (unpersist) does not free
-    # checkpoint blocks
-    _share = round_checkpoint
-
-    cells = _share(
+    cells = round_checkpoint(
         base.groupBy(*keyed, "__i", "__c").agg(
             F.count(F.lit(1)).cast("long").alias("__nuc")
         )
@@ -4066,7 +4068,7 @@ def _krippendorff_unit_state(
         # the ordinal distance depends on the KEPT-unit marginals, so
         # the drop filter must run before the per-unit moments: unit
         # sizes first, then marginals → e_c, then moments over e_c
-        items_m = _share(
+        items_m = round_checkpoint(
             cells.groupBy(*keyed, "__i").agg(
                 F.sum("__nuc").cast("long").alias("__m")
             )
@@ -4092,7 +4094,7 @@ def _krippendorff_unit_state(
         # moment sums while items_m already counted their ratings —
         # raise loudly instead (the DuckDB twin's CAST errors on the
         # same input, so the engines fail consistently)
-        kept_cells = _share(
+        kept_cells = round_checkpoint(
             kept_cells.where(
                 F.coalesce(
                     F.assert_true(
@@ -4115,7 +4117,7 @@ def _krippendorff_unit_state(
             F.sum("__nuc").cast("decimal(38,0)").alias("__nc")
         )
         w_cum = Window.partitionBy(*keyed).orderBy("__clv")
-        cats = _share(
+        cats = round_checkpoint(
             cats0.select(
                 *keyed,
                 "__clv",
@@ -4153,6 +4155,7 @@ def _krippendorff_unit_state(
             .cast("decimal(38,0)")
             .alias("__t2"),
         )
+        shared = [cells, items_m, kept_cells, cats]
     else:
         if metric == "interval":
             # per-unit disagreement moments over the INTEGER label
@@ -4173,7 +4176,7 @@ def _krippendorff_unit_state(
             )
         # items feeds the drop counts AND the kept filter (whose
         # output feeds the semi join AND u_agg) — same diamond
-        items = _share(items)
+        items = round_checkpoint(items)
         drops = items.groupBy(*keyed).agg(
             F.coalesce(
                 F.sum(F.when(F.col("__m") < 2, 1).otherwise(0)), F.lit(0)
@@ -4213,7 +4216,8 @@ def _krippendorff_unit_state(
                 .cast("decimal(38,0)")
                 .alias("__c2"),
             )
-    return kept_items, drops, cat_agg
+        shared = [cells, items]
+    return kept_items, drops, cat_agg, shared
 
 
 def _krippendorff_du(metric: str) -> Column:
@@ -4344,7 +4348,7 @@ def krippendorff_alpha(
     # aggregate but loses its joined masses and reports a spurious
     # all-zero row. coalesce the key upstream if NULL should be a
     # real group.
-    kept_items, drops, cat_agg = _krippendorff_unit_state(
+    kept_items, drops, cat_agg, shared = _krippendorff_unit_state(
         df, item_col, category_col, keyed, mr, metric
     )
     m_d = F.col("__m").cast("decimal(38,0)")
@@ -4375,9 +4379,8 @@ def krippendorff_alpha(
         de_core = n_d * n_d - F.coalesce(F.col("__c2"), zero_d)
     de = (de_core * lcm).cast("decimal(38,0)")
     num = (de - (n_d - 1) * u).cast("decimal(38,0)")
-    # ONE materialization of the group-grain result (the shared
-    # diamonds are checkpoint-backed, nothing to release; finalize
-    # defers to the enclosing query's scope)
+    # ONE materialization of the group-grain result; finalize defers
+    # to the enclosing query's scope
     return finalize(
         out.select(
             *keyed,
@@ -4395,7 +4398,8 @@ def krippendorff_alpha(
             F.when(
                 de != 0, num.cast("double") / de.cast("double")
             ).alias("alpha"),
-        )
+        ),
+        *shared,
     )
 
 
@@ -4458,7 +4462,7 @@ def krippendorff_disagreement_explain(
     mr = int(max_raters)
     lcm = math.lcm(*range(1, mr))
     keyed = list(keys)
-    kept_items, _drops, _cat_agg = _krippendorff_unit_state(
+    kept_items, _drops, _cat_agg, shared = _krippendorff_unit_state(
         df, item_col, category_col, keyed, mr, metric
     )
     wu = F.expr(f"CAST({lcm} AS BIGINT) div (__m - 1)")
@@ -4466,8 +4470,7 @@ def krippendorff_disagreement_explain(
     m_d = F.col("__m").cast("decimal(38,0)")
     pairs = (m_d * (m_d - 1)).cast("decimal(38,0)")
     # ONE materialization of the kept-unit-grain result (the same
-    # linear grain kept_items itself holds; the shared diamonds are
-    # checkpoint-backed, nothing to release); finalize defers to the
+    # linear grain kept_items itself holds); finalize defers to the
     # enclosing query's scope
     return finalize(
         kept_items.select(
@@ -4477,7 +4480,8 @@ def krippendorff_disagreement_explain(
             F.col("__kc").cast("long").alias("n_categories_unit"),
             (du * wu).cast("decimal(38,0)").alias("du_num"),
             (du.cast("double") / pairs.cast("double")).alias("disagreement"),
-        )
+        ),
+        *shared,
     )
 
 

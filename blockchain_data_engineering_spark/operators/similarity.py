@@ -652,7 +652,6 @@ def kmeans_centroids_quantized(
     )
     cent = v.join(seeds, id_col).select("cid", "dim0", F.col("vq").alias("cq"))
 
-    prev = None
     for _ in range(iterations):
         diff = F.col("vq") - F.col("cq")
         d2 = (
@@ -672,7 +671,7 @@ def kmeans_centroids_quantized(
         # it over 2^53 and double division would lose exactness); the
         # +OFF offset keeps the numerator positive, where `div`
         # truncation == floor in both engines
-        cent = (
+        cent = next_round(
             v.join(assign, id_col)
             .groupBy("cid", "dim0")
             .agg(
@@ -685,20 +684,11 @@ def kmeans_centroids_quantized(
                 (
                     F.expr("(2 * __s + __n) div (2 * __n)") - F.lit(_KM_OFF)
                 ).alias("cq"),
-            )
+            ),
+            cent,
         )
-        # materialize per round with an eager localCheckpoint (r11):
-        # computed once either way (k·dim rows — trivial), but the
-        # checkpoint hands the next round a FLAT scan instead of
-        # nesting one InMemoryRelation per iteration for Catalyst to
-        # re-canonicalize (the kcore loop's measured planning
-        # pathology). next_round releases the previous round; the last
-        # stays, read by the lazy result
-        cent = prev = next_round(cent, prev)
-    # checkpoint BEFORE any unpersist (releasing the input cache v
-    # invalidates dependent cache entries, so the persisted `cent`
-    # would silently recompute from the uncached explode); finalize
-    # fixes that order and releases both caches with the call
+    # finalize checkpoints the result BEFORE releasing v and the last
+    # round
     return finalize(cent, cent, v)
 
 
@@ -978,8 +968,8 @@ def pq_codebooks_quantized(
     Scale: the codebook is O(n_sub·k_code·dim/n_sub) = O(k_code·dim)
     rows — corpus-size-independent, broadcast; each round is one
     O(N·k_code·dim) join-agg + one O(N·dim) mean agg. Empty codewords
-    drop out (inner joins), matching the SQL oracle. Per-round eager
-    persist caps the Lloyd lineage exactly as in
+    drop out (inner joins), matching the SQL oracle. Each round steps
+    through ``next_round``, exactly as in
     :func:`kmeans_centroids_quantized`.
     """
     dsub = dim // n_sub
@@ -1012,7 +1002,6 @@ def pq_codebooks_quantized(
     )
     diff = F.col("vq") - F.col("cq")
     for _ in range(iterations):
-        prev = cb if cb.is_cached else None
         d2 = (
             vs.join(F.broadcast(cb), ["sub", "dl"])
             .groupBy(id_col, "sub", "cid")
@@ -1024,7 +1013,8 @@ def pq_codebooks_quantized(
             .where(F.col("__rn") == 1)
             .select(id_col, "sub", "cid")
         )
-        cb = (
+        # k_code·dim rows — trivial to materialize
+        cb = next_round(
             vs.join(assign, [id_col, "sub"])
             .groupBy("sub", "cid", "dl")
             .agg(
@@ -1039,17 +1029,9 @@ def pq_codebooks_quantized(
                     F.expr("(2 * __s + __n) div (2 * __n)")
                     - F.lit(_KM_OFF)
                 ).cast("long").alias("cq"),
-            )
+            ),
+            cb,
         )
-        # k_code·dim rows — trivial to materialize, and it caps the
-        # uncached Lloyd lineage at one round
-        cb = cb.persist()
-        cb.count()
-        if prev is not None:
-            prev.unpersist()
-    # checkpoint before releasing any cache (dependent-cache
-    # invalidation would otherwise recompute the final round) so no
-    # cache outlives the call even when this trains standalone
     return finalize(cb, cb, *([vs] if own_vs else []))
 
 
@@ -1100,12 +1082,9 @@ def pq_ann_topk(
         vs_long=vs,
     )
     diff = F.col("vq") - F.col("cq")
-    # d2 feeds both the code assignment and the ADC table. Eager
-    # checkpoint, NOT persist+count: unpersisting vs/cb would
-    # invalidate a dependent cache entry and d2 would silently
-    # recompute against the uncached explode; the checkpoint severs
-    # that lineage, and (being RDD-level, not CacheManager) it dies
-    # with the DataFrame instead of pinning the session cache
+    # d2 feeds both the code assignment and the ADC table: settled
+    # (checkpointed) before vs and cb are released, so it never
+    # recomputes against the released explode
     d2 = finalize(
         vs.join(F.broadcast(cb), ["sub", "dl"])
         .groupBy(id_col, "sub", "cid")

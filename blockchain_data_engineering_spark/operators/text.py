@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from blockchain_data_engineering_spark.cache import finalize, next_round
+from blockchain_data_engineering_spark.cache import finalize, next_round, scope
 from blockchain_data_engineering_spark.functions.scalar import bounded_window_key
 
 # Tiny per-language stopword marker lists for the n-gram/stopword
@@ -740,8 +740,7 @@ def _bpe_words_with_seg(df: DataFrame, text_col: str) -> DataFrame:
 # it, the (w, wf, seg) table is collected ONCE and the merge loop runs
 # in-process; above it, the per-round distributed loop is kept. The
 # default bounds the collect at a few hundred MB of driver heap (the
-# word table is Zipf-bounded vocabulary state, not corpus rows);
-# override per session with spark.bde.bpe.localVocabMax.
+# word table is Zipf-bounded vocabulary state, not corpus rows).
 BPE_LOCAL_VOCAB_MAX = 4_000_000
 
 
@@ -794,24 +793,15 @@ def _bpe_learn(words: DataFrame, n_merges: int) -> list[tuple]:
     guide §1.2). The state the loop iterates on is VOCABULARY-sized
     (Zipf-bounded — the corpus-sized work, the word-frequency
     collapse, already happened in ``_bpe_words_with_seg``), so below
-    ``spark.bde.bpe.localVocabMax`` (default ``BPE_LOCAL_VOCAB_MAX``)
-    the table is collected once and the loop replayed in-process by
-    :func:`_bpe_learn_local` — ONE job instead of ``n_merges``;
-    exactness is pinned by test_bpe_local_learn_matches_distributed
-    and the DuckDB oracles. Above the bound, the distributed per-round
+    ``BPE_LOCAL_VOCAB_MAX`` rows the table is collected once and the
+    loop replayed in-process by :func:`_bpe_learn_local` — ONE job
+    instead of ``n_merges``; exactness is pinned by
+    test_bpe_local_learn_matches_distributed and the DuckDB oracles. Above the bound, the distributed per-round
     loop below is kept (billion-word vocabularies never land on the
     driver). Returns [(round, a, b, n)] either way.
     """
     n_vocab = words.count()  # also materializes the callers' persist
-    try:
-        limit = int(
-            words.sparkSession.conf.get(
-                "spark.bde.bpe.localVocabMax", str(BPE_LOCAL_VOCAB_MAX)
-            )
-        )
-    except Exception:
-        limit = BPE_LOCAL_VOCAB_MAX
-    if n_vocab <= limit:
+    if n_vocab <= BPE_LOCAL_VOCAB_MAX:
         rows = words.select("wf", "seg").collect()
         return _bpe_learn_local([(r["wf"], r["seg"]) for r in rows], n_merges)
     return _bpe_learn_distributed(words, n_merges)
@@ -867,6 +857,27 @@ def _bpe_learn_distributed(words: DataFrame, n_merges: int) -> list[tuple]:
     return merges
 
 
+def _bpe_words(df: DataFrame, text_col: str) -> DataFrame:
+    """The persisted (w, wf, seg) vocabulary table, registered with the
+    open :func:`~..cache.scope` (the BPE operators each open one), so
+    it is released on every exit of the outermost scope."""
+    words = _bpe_words_with_seg(df, text_col).persist()
+    return finalize(words, words)
+
+
+def _bpe_apply(merges: list[tuple]) -> Column:
+    """The vocabulary's ``seg`` column after replaying the learned
+    ``merges`` [(round, a, b, n)] in order."""
+    seg = F.col("seg")
+    for _, a, b, _n in merges:
+        seg = F.replace(
+            seg,
+            F.lit(BPE_SEP + a + _BPE_SEP2 + b + BPE_SEP),
+            F.lit(BPE_SEP + a + b + BPE_SEP),
+        )
+    return seg
+
+
 def bpe_train_merges(
     df: DataFrame, n_merges: int = 6, text_col: str = "text"
 ) -> DataFrame:
@@ -876,11 +887,8 @@ def bpe_train_merges(
     full trajectory). Deterministic: integer counts, lexicographic
     tie-break, greedy replace — the SQL oracle replays every round."""
     spark = df.sparkSession
-    words = _bpe_words_with_seg(df, text_col).persist()
-    try:
-        merges = _bpe_learn(words, n_merges)
-    finally:
-        words.unpersist()
+    with scope():
+        merges = _bpe_learn(_bpe_words(df, text_col), n_merges)
     return spark.createDataFrame(
         [(r, a, b, a + b, n) for r, a, b, n in merges],
         "round INT, pair_a STRING, pair_b STRING, merged STRING, "
@@ -905,25 +913,12 @@ def bpe_token_counts(
     rollup is one vocab-keyed equi join of the corpus token stream
     against the ≤|vocab|-row token-count table (broadcast-eligible)
     plus one per-doc aggregate."""
-    words = _bpe_words_with_seg(df, text_col).persist()
-    try:
-        merges = _bpe_learn(words, n_merges)
-        seg = F.col("seg")
-        for _, a, b, _n in merges:
-            seg = F.replace(
-                seg,
-                F.lit(BPE_SEP + a + _BPE_SEP2 + b + BPE_SEP),
-                F.lit(BPE_SEP + a + b + BPE_SEP),
-            )
-        word_tokens = finalize(
-            words.select(
-                "w", F.size(_bpe_seg_tokens(seg)).alias("n_tok")
-            ),
-            words,
+    with scope() as s:
+        words = _bpe_words(df, text_col)
+        seg = _bpe_apply(_bpe_learn(words, n_merges))
+        word_tokens = s.settle(
+            words.select("w", F.size(_bpe_seg_tokens(seg)).alias("n_tok"))
         )
-    except BaseException:
-        words.unpersist()
-        raise
     stream = df.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("w")
     )
@@ -1034,9 +1029,9 @@ def quality_classifier_scores(
     Scale shape per round: one broadcast join of the ≤257-row weight
     table to the persisted feature stream, one per-doc sum (z), one
     per-bucket sum (gradient) — two keyed shuffles of the feature
-    table, nothing sized with the corpus beyond it. Weights persist
-    per round (257 rows) to keep lineage linear; n_docs ≤ 9·10^8 keeps
-    every offset product inside BIGINT.
+    table, nothing sized with the corpus beyond it. Weights are
+    materialized per round (257 rows, ``next_round``) to keep lineage
+    linear; n_docs ≤ 9·10^8 keeps every offset product inside BIGINT.
 
     ``label``: boolean Column over ``df`` (e.g. lang == 'en').
     Returns (id, score double, pred int, y int) — score = z/1, the
@@ -1127,13 +1122,7 @@ def quality_classifier_scores(
                 .withColumn("nd", F.lit(n_docs))
                 .selectExpr("b", f"wq - ({step}) AS wq")
             )
-        # eager localCheckpoint instead of persist()+count() (r11):
-        # the ≤257-row weight table is computed once either way, but
-        # the flat scan keeps each round's planning constant instead
-        # of re-canonicalizing a per-round-deeper InMemoryRelation
-        # tree (the kcore loop's measured pathology); w is referenced
-        # twice next round. next_round releases the previous round;
-        # the last stays, read by the lazy result
+        # w is referenced twice next round
         w = next_round(w_new, w)
 
     scored = (
@@ -1167,27 +1156,14 @@ def bpe_vocab(
     by word frequency) + a map-side-combined aggregate over ≤(distinct
     chars + n_merges) token groups — corpus-size independent
     throughout."""
-    words = _bpe_words_with_seg(df, text_col).persist()
-    try:
-        merges = _bpe_learn(words, n_merges)
-        seg = F.col("seg")
-        for _, a, b, _n in merges:
-            seg = F.replace(
-                seg,
-                F.lit(BPE_SEP + a + _BPE_SEP2 + b + BPE_SEP),
-                F.lit(BPE_SEP + a + b + BPE_SEP),
-            )
-        vocab = (
-            words.select(
-                F.explode(_bpe_seg_tokens(seg)).alias("token"), "wf"
-            )
+    with scope() as s:
+        words = _bpe_words(df, text_col)
+        seg = _bpe_apply(_bpe_learn(words, n_merges))
+        return s.settle(
+            words.select(F.explode(_bpe_seg_tokens(seg)).alias("token"), "wf")
             .groupBy("token")
             .agg(F.sum("wf").cast("long").alias("n_occurrences"))
         )
-        return finalize(vocab, words)
-    except BaseException:
-        words.unpersist()
-        raise
 
 
 def bpe_encode(
@@ -1209,27 +1185,16 @@ def bpe_encode(
     offset over word positions — partitioned by doc, never global),
     then a narrow bounded posexplode. The ``max_tokens`` cut prunes
     the explode fan-out to O(docs · max_tokens)."""
-    words = _bpe_words_with_seg(df, text_col).persist()
-    try:
-        merges = _bpe_learn(words, n_merges)
-        seg = F.col("seg")
-        for _, a, b, _n in merges:
-            seg = F.replace(
-                seg,
-                F.lit(BPE_SEP + a + _BPE_SEP2 + b + BPE_SEP),
-                F.lit(BPE_SEP + a + b + BPE_SEP),
-            )
-        word_toks = finalize(
+    with scope() as s:
+        words = _bpe_words(df, text_col)
+        seg = _bpe_apply(_bpe_learn(words, n_merges))
+        word_toks = s.settle(
             words.select(
                 "w",
                 _bpe_seg_tokens(seg).alias("toks"),
                 F.size(_bpe_seg_tokens(seg)).alias("n_tok"),
-            ),
-            words,
+            )
         )
-    except BaseException:
-        words.unpersist()
-        raise
     stream = df.select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), " ")).alias("word_pos", "w"),

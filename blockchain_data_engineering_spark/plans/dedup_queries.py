@@ -34,8 +34,7 @@ SHINGLE_K = 5
 # ~0.3 s of array-build shuffle it saved) and rejected. The corpus's
 # on-disk parquet footprint decides (a pure-metadata check — no Spark
 # job): below the threshold the sf0.1/driver plan is byte-identical
-# to r11's; above it the semi-join engages. Override per session with
-# spark.bde.dedup.semiJoinMinBytes.
+# to r11's; above it the semi-join engages.
 DEDUP_SEMIJOIN_MIN_BYTES = 1 << 30  # ~1 GiB of parquet ≈ 10M+ docs
 
 
@@ -59,16 +58,7 @@ def _candidate_prune(
     pay (see DEDUP_SEMIJOIN_MIN_BYTES). ``cand`` must already be
     materialized (persisted) by the caller, so the id projection
     reads the cached pairs instead of re-running the LSH pipeline."""
-    try:
-        limit = int(
-            spark.conf.get(
-                "spark.bde.dedup.semiJoinMinBytes",
-                str(DEDUP_SEMIJOIN_MIN_BYTES),
-            )
-        )
-    except Exception:
-        limit = DEDUP_SEMIJOIN_MIN_BYTES
-    if _table_bytes(spark, sf_dir, "documents") < limit:
+    if _table_bytes(spark, sf_dir, "documents") < DEDUP_SEMIJOIN_MIN_BYTES:
         return sh
     ids = (
         cand.select(F.col("id_a").alias("doc_id"))

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from blockchain_data_engineering_spark.cache import round_checkpoint
 from blockchain_data_engineering_spark.catalog import load_table
 from blockchain_data_engineering_spark.plans.parity import dsum, dsum_sql
 from blockchain_data_engineering_spark.plans.registry import query
@@ -392,14 +393,14 @@ def stream_reorg_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         # store-vs-applied diff must finish the undo
         run(blocks.where(F.col("seq") >= _CRASH_SPLIT))
 
-        out = (
+        # sever from the dir we delete
+        out = round_checkpoint(
             spark.read.parquet(path)
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_canonical"),
                 F.sum("vfloor").alias("value_floor_sum"),
             )
-            .localCheckpoint(eager=True)  # sever from the dir we delete
         )
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
@@ -491,13 +492,12 @@ def _serve_from_store(
         for batch_id in (0, 1):
             sink(facts.where(F.col("__half") == batch_id), batch_id)
         cells = eval_cells_store_cells(spark, store)
-        out = (
+        # sever from the store dir we delete (the crash-recovery
+        # gate's pattern) — bench/parity re-runs must not accumulate
+        # leaked temp parquet stores
+        out = round_checkpoint(
             statistic(cells, F.col("actual"), F.col("predicted"), n=F.col("n"))
             .select(*cols)
-            # sever from the store dir we delete (the crash-recovery
-            # gate's pattern) — bench/parity re-runs must not
-            # accumulate leaked temp parquet stores
-            .localCheckpoint(eager=True)
         )
     finally:
         facts.unpersist()

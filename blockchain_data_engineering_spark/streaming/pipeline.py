@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from blockchain_data_engineering_spark.cache import release_checkpoint, round_checkpoint
+from blockchain_data_engineering_spark.cache import release, round_checkpoint
 from blockchain_data_engineering_spark.domain import blocks as B
 from blockchain_data_engineering_spark.domain import netflow as N
 from blockchain_data_engineering_spark.domain import transfers as TR
@@ -143,7 +143,7 @@ def run_vol_transfers_pipeline(
         finally:
             # a checkpoint left to garbage collection outlives many
             # batches (cache.round_checkpoint)
-            release_checkpoint(flat)
+            release(flat)
 
     # A8/observe: per-micro-batch row counts surface in
     # StreamingQueryProgress.observedMetrics["source"] — the native

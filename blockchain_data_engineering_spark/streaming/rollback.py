@@ -44,6 +44,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blockchain_data_engineering_spark.cache import release, round_checkpoint
 from blockchain_data_engineering_spark.domain.schema import BLOCK_SCHEMA
 from blockchain_data_engineering_spark.sources.io import (
     delete_parquet_where,
@@ -440,10 +441,14 @@ def rollback_aware_upsert(
         # sinks; materialize once so both see identical rows and the
         # derived sinks never lazily re-read a landing dir the stream
         # may have moved past (docs/SCALE.md read-then-rewrite rule)
-        rows = rows.localCheckpoint(eager=True)
-    upsert_parquet(rows, path, key_cols, order_cols)
-    if sink_fn is not None:
-        sink_fn(rows)
+        rows = round_checkpoint(rows)
+        try:
+            upsert_parquet(rows, path, key_cols, order_cols)
+            sink_fn(rows)
+        finally:
+            release(rows)
+    else:
+        upsert_parquet(rows, path, key_cols, order_cols)
     _settle()
     return n_deleted
 

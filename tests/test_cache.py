@@ -141,15 +141,56 @@ def _persistent_rdd_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
-@pytest.mark.parametrize("name", ["graph_kcore", "er_entity_clusters"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "graph_kcore",
+        "er_entity_clusters",
+        "graph_bfs_levels",
+        "graph_clustering_coefficient",
+        "ml_krippendorff_ordinal",
+        "sim_ivf_ann_trained",
+        "text_quality_classifier",
+    ],
+)
 def test_loop_rounds_released_as_they_die(spark, sf_dir, name):
-    """An iterative loop releases each round's checkpoint once the next
-    round is materialized (``cache.next_round``), with no garbage
-    collection forced: after the query only two new RDDs stay
-    registered, the settled result's checkpoint and the loop's last
-    round, which the result was built from."""
+    """Every round or shared node a query materializes is released by
+    the time it returns, with no garbage collection forced: loop rounds
+    step through ``cache.next_round`` and the last round, like every
+    other materialized frame, is registered with ``finalize`` and freed
+    by the settle. Only the settled result's checkpoint stays."""
     before = _persistent_rdd_ids(spark)
     out = QUERIES[name](spark, sf_dir)
     assert out.count() > 0
     new = _persistent_rdd_ids(spark) - before
-    assert len(new) <= 2, (name, sorted(new))
+    assert len(new) <= 1, (name, sorted(new))
+
+
+def test_release_frees_both_kinds_on_settle_and_on_exception(spark):
+    """``release`` frees a persisted frame and a round checkpoint alike;
+    a checkpoint registered with ``finalize`` is freed by the settle
+    and by an exception exit of the scope."""
+    before = _persistent_rdd_ids(spark)
+    p = spark.range(10).persist()
+    p.count()
+    c = cache.round_checkpoint(spark.range(10))
+    assert len(_persistent_rdd_ids(spark) - before) == 2
+    cache.release(p)
+    cache.release(c)
+    assert _persistent_rdd_ids(spark) == before
+    assert _cache_empty(spark)
+
+    with scope() as s:
+        c = cache.round_checkpoint(spark.range(10))
+        out = s.settle(finalize(c.selectExpr("id * 2 AS x"), c))
+    # only the settled result stays
+    assert len(_persistent_rdd_ids(spark) - before) == 1
+    assert out.count() == 10
+
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError):
+        with scope():
+            c = cache.round_checkpoint(spark.range(10))
+            finalize(c.selectExpr("id * 2 AS x"), c)
+            raise RuntimeError("boom")
+    assert _persistent_rdd_ids(spark) == before

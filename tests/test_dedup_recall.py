@@ -106,7 +106,7 @@ def test_incremental_batch_flags_planted_near_dup(spark, tmp_path):
     sh.unpersist(); sig.unpersist()
 
 
-def test_incremental_semijoin_scale_gate(spark):
+def test_incremental_semijoin_scale_gate(spark, monkeypatch):
     """r12 (judge ask #6): the candidate-id semi-join before the verify
     array build engages only above the corpus-size threshold. Forced ON
     (threshold 0) it must plant a left-semi prune of the shingle stream
@@ -116,6 +116,7 @@ def test_incremental_semijoin_scale_gate(spark):
     from contextlib import redirect_stdout
 
     from blockchain_data_engineering_spark.cache import scope
+    from blockchain_data_engineering_spark.plans import dedup_queries
     from blockchain_data_engineering_spark.plans.dedup_queries import (
         dedup_incremental_batch,
     )
@@ -136,12 +137,9 @@ def test_incremental_semijoin_scale_gate(spark):
 
     base_rows = rows()
     base_plan = plan()
-    spark.conf.set("spark.bde.dedup.semiJoinMinBytes", "0")
-    try:
-        gated_rows = rows()
-        gated_plan = plan()
-    finally:
-        spark.conf.unset("spark.bde.dedup.semiJoinMinBytes")
+    monkeypatch.setattr(dedup_queries, "DEDUP_SEMIJOIN_MIN_BYTES", 0)
+    gated_rows = rows()
+    gated_plan = plan()
     assert gated_rows == base_rows
     # the gated plan prunes the array build with a semi join the
     # default plan does not have

@@ -106,7 +106,7 @@ def test_bpe_first_merge_is_most_frequent_pair(spark):
     assert rows[0]["n_occurrences"] == 6
 
 
-def test_bpe_local_learn_matches_distributed(spark, sf_dir):
+def test_bpe_local_learn_matches_distributed(spark, sf_dir, monkeypatch):
     """r12: _bpe_learn collects the Zipf-bounded vocabulary and replays
     the merge loop in-process when it fits (one Spark job instead of
     one per merge). The local replay must produce the EXACT trajectory
@@ -152,13 +152,10 @@ def test_bpe_local_learn_matches_distributed(spark, sf_dir):
             6,
         )
         # and the dispatcher: local under the default bound, forced
-        # distributed when the conf bound is 0
+        # distributed when the bound is 0
         assert _bpe_learn(words, 6) == dist == loc
-        spark.conf.set("spark.bde.bpe.localVocabMax", "0")
-        try:
-            assert _bpe_learn(words, 6) == dist
-        finally:
-            spark.conf.unset("spark.bde.bpe.localVocabMax")
+        monkeypatch.setattr(TX, "BPE_LOCAL_VOCAB_MAX", 0)
+        assert _bpe_learn(words, 6) == dist
     finally:
         words.unpersist()
 

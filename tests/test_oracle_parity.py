@@ -42,9 +42,13 @@ def _clean_cache_slate(spark):
 
 
 def _cache_empty(spark) -> bool:
-    # CacheManager tracks every df.cache()/persist(); localCheckpoint
-    # persistence is RDD-level and intentionally NOT flagged here
+    # CacheManager tracks every df.cache()/persist()
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    # RDD-level storage: persists AND round/settle checkpoints
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 # Every registered query, in the driver gate (``GATE_ORDER``) or not,
@@ -57,7 +61,11 @@ def test_query_matches_oracle(name, spark, duck, sf_dir, monkeypatch):
     monkeypatch.setattr(
         cache, "_settle", lambda *a: settles.append(1) or real_settle(*a)
     )
+    before = _persistent_rdd_ids(spark)
     spark_df = QUERIES[name](spark, sf_dir).toPandas()
+    # no GC forced: every materialization the query made is released,
+    # only its settled (or returned) result may stay
+    new_rdds = _persistent_rdd_ids(spark) - before
     # cache-lifetime convention: no query may leak a DataFrame cache
     # past its own execution (the sweep that catches the r2 kcore /
     # r3 graph_neighborhood class of defect)
@@ -67,6 +75,7 @@ def test_query_matches_oracle(name, spark, duck, sf_dir, monkeypatch):
     assert not leaked, f"{name}: leaked df.cache()/persist() past the call"
     # the registry's scope owns the caches: one settle per query at most
     assert len(settles) <= 1, f"{name}: settled {len(settles)} times"
+    assert len(new_rdds) <= 1, f"{name}: left RDDs {sorted(new_rdds)}"
     if name not in ORACLES:
         # rows-only check (non-SQL-expressible op)
         assert spark_df is not None
