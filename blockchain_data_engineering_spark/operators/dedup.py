@@ -136,10 +136,7 @@ def shingle_array(
 
 
 def jaccard_verify_arrays(
-    candidates: DataFrame,
-    sh_arr: DataFrame,
-    id_col: str = "doc_id",
-    broadcast: bool | None = None,
+    candidates: DataFrame, sh_arr: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Exact Jaccard for candidate pairs from per-doc shingle ARRAYS:
     two hash joins bring the arrays to the pair, then
@@ -149,18 +146,13 @@ def jaccard_verify_arrays(
     broadcast at sf0.1).
     Integer counts, one final division — bit-deterministic.
 
-    ``broadcast`` is SIZE-ADAPTIVE by default (``None``/``False``): no
-    hint is planted, the static plan is a shuffle join (safe at any
-    corpus size — this is what the registered dedup plans use), and AQE
-    converts it to a broadcast join at runtime iff the materialized
-    array table actually fits under ``autoBroadcastJoinThreshold``.
-    ``True`` forces the broadcast regardless of size — only for corpora
-    *known* to fit executor memory (it's one row per doc, not per
-    shingle); at 100 TB a forced broadcast is an OOM."""
+    The joins are SIZE-ADAPTIVE: no hint is planted, the static plan is
+    a shuffle join (safe at any corpus size; a forced broadcast of the
+    array table is an OOM at 100 TB), and AQE converts it to a
+    broadcast join at runtime iff the materialized array table actually
+    fits under ``autoBroadcastJoinThreshold``."""
     a = sh_arr.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("__sa"))
     b = sh_arr.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("__sb"))
-    if broadcast:
-        a, b = F.broadcast(a), F.broadcast(b)
     n_inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
     denom = (F.size("__sa") + F.size("__sb") - n_inter).cast("double")
     # guard 0/0 (two empty sets): NaN compares GREATER than any double

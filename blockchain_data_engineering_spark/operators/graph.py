@@ -7,21 +7,19 @@ PageRank inside the database via GDS
 two DataFrames — vertices and edges — so algorithms are join/agg loops
 that scale with the cluster instead of a single graph-DB instance.
 
-PageRank here comes in two flavors:
+Every operator reads the edge list's ``src`` and ``dst`` columns
+(:func:`sssp` also reads the weight ``w``, :func:`earliest_arrival`
+the edge time ``t``). The iteration loops broadcast the |V|-row side
+of each join (ranks, labels, frontiers, survivor sets, adjacency
+arrays), so the cached |E| edge list never shuffles for it: on the
+dense sf0.1 co-occurrence graph the hint took ``triangle_count`` from
+26.7 s to 6.4 s steady-state (docs/SCALE.md).
 
-- :func:`pagerank` — standard double-precision damped PageRank
-  (damping 0.85 like the GDS default), the production path.
-- :func:`pagerank_quantized` — the same iteration in fixed-point
-  integer arithmetic (pr scaled by 10^12, integer division). Every op
-  is exact integer math, so results are bit-reproducible across
-  engines, runs, and partitionings — used for oracle verification and
-  wherever reproducibility trumps the ~1e-12 quantization error.
-
-Scale notes: each iteration is one shuffle (contributions groupBy dst)
-plus one join back to the vertex set. Both inputs are re-used every
-iteration → cache() them; at 100 TB pre-partition edges by src so the
-contribution join is co-located, and checkpoint the rank DataFrame
-every ~5 iterations to truncate lineage.
+Scale notes: each PageRank iteration is one shuffle (contributions
+groupBy dst) plus one join back to the vertex set. Both inputs are
+re-used every iteration → cache() them; at 100 TB pre-partition edges
+by src so the contribution join is co-located, and checkpoint the rank
+DataFrame every ~5 iterations to truncate lineage.
 """
 
 from __future__ import annotations
@@ -37,14 +35,16 @@ from blockchain_data_engineering_spark.cache import (
 )
 
 PR_SCALE = 10**12
+# PageRank damping in percent: 0.85, the GDS default
+DAMPING_PCT = 85
 
 
-def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def degrees(edges: DataFrame) -> DataFrame:
     """(node, out_degree, in_degree)."""
-    out_d = edges.groupBy(F.col(src).alias("node")).agg(
+    out_d = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("out_degree")
     )
-    in_d = edges.groupBy(F.col(dst).alias("node")).agg(
+    in_d = edges.groupBy(F.col("dst").alias("node")).agg(
         F.count(F.lit(1)).alias("in_degree")
     )
     return (
@@ -57,104 +57,45 @@ def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     )
 
 
-def vertices_of(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def vertices_of(edges: DataFrame) -> DataFrame:
     return (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
 
 
-def _hint(df: DataFrame, broadcast: bool) -> DataFrame:
-    """Iteration-loop join hint: the rank/label table is |V| rows vs
-    |E| edge messages, so broadcasting it keeps the cached edge list
-    unshuffled — right up until |V| itself outgrows executor memory.
-    Every iterative operator therefore takes ``broadcast: bool``; pass
-    False at billion-node scale (and pre-partition the edge list by the
-    join key) — the scale-safe plan is reachable without editing
-    library code."""
-    return F.broadcast(df) if broadcast else df
+def pagerank(edges: DataFrame, iterations: int = 5) -> DataFrame:
+    """Damped PageRank in fixed-point integer arithmetic: every node
+    starts at 1/n, damping is 85% (the GDS default), and dangling nodes
+    (no out-edges) keep receiving rank but don't redistribute it (their
+    mass leaks, as in the simplest formulation).
 
-
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    iterations: int = 20,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast: bool = True,
-) -> DataFrame:
-    """Damped PageRank, double precision. Dangling nodes (no out-edges)
-    keep receiving rank but don't redistribute (their mass leaks, as in
-    the simplest formulation). ``broadcast``: see :func:`_hint`."""
-    nodes = vertices_of(edges, src, dst).cache()
-    n = nodes.count()
-    deg = edges.groupBy(F.col(src).alias("node")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    )
-    # degree is iteration-invariant: pre-join it into the cached edge
-    # list ONCE (as pagerank_quantized does) instead of paying an
-    # |E|-vs-|V| join on every one of the 20 iterations
-    e = (
-        edges.select(F.col(src).alias("src_node"), F.col(dst).alias("node_dst"))
-        .join(deg.withColumnRenamed("node", "src_node"), "src_node")
-        .cache()
-    )
-
-    pr = nodes.withColumn("score", F.lit(1.0 / n))
-    base = (1.0 - damping) / n
-    for _ in range(iterations):
-        contrib = (
-            e.join(_hint(pr.withColumnRenamed("node", "src_node"), broadcast), "src_node")
-            .select(
-                F.col("node_dst").alias("node"),
-                (F.col("score") / F.col("outdeg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
-        )
-        pr = nodes.join(contrib, "node", "left").select(
-            "node",
-            (F.lit(base) + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias(
-                "score"
-            ),
-        )
-    # materialize the |V|-row result while nodes/e are cached, then
-    # release both — no cache outlives the call
-    return finalize(pr, nodes, e)
-
-
-def pagerank_quantized(
-    edges: DataFrame,
-    iterations: int = 5,
-    damping_pct: int = 85,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast: bool = True,
-) -> DataFrame:
-    """Fixed-point PageRank: rank carried as ``pr_q = score·10^12`` in
-    BIGINT, contributions via integer division ``pr_q div outdeg``,
-    damping via ``(sum·85) div 100``. Exact integer math end-to-end ⇒
-    bit-reproducible across engines and partitionings.
+    The rank is carried as ``pr_q = score·10^12`` in BIGINT,
+    contributions via integer division ``pr_q div outdeg``, damping via
+    ``(sum·85) div 100``. Exact integer math end-to-end ⇒
+    bit-reproducible across engines, runs and partitionings, at a
+    quantization error of ~1e-12 per step; ``graph_pagerank``'s DuckDB
+    oracle replays the same integer ops.
     """
-    nodes = vertices_of(edges, src, dst).cache()
+    nodes = vertices_of(edges).cache()
     n = nodes.count()
-    deg = edges.groupBy(F.col(src).alias("src_node")).agg(
+    deg = edges.groupBy(F.col("src").alias("src_node")).agg(
         F.count(F.lit(1)).alias("outdeg")
     )
     # pre-join the out-degree into the edge list ONCE — saves one join
     # per iteration (the degree is iteration-invariant)
     e = (
-        edges.select(F.col(src).alias("src_node"), F.col(dst).alias("node_dst"))
+        edges.select(F.col("src").alias("src_node"), F.col("dst").alias("node_dst"))
         .join(deg, "src_node")
         .cache()
     )
 
-    base_q = (PR_SCALE * (100 - damping_pct)) // 100 // n
+    base_q = (PR_SCALE * (100 - DAMPING_PCT)) // 100 // n
     pr = nodes.withColumn("pr_q", F.lit(PR_SCALE // n).cast("long"))
     for _ in range(iterations):
         contrib = (
-            e.join(_hint(pr.withColumnRenamed("node", "src_node"), broadcast), "src_node")
+            e.join(F.broadcast(pr.withColumnRenamed("node", "src_node")), "src_node")
             .select(
                 F.col("node_dst").alias("node"),
                 F.expr("pr_q div outdeg").alias("c"),
@@ -166,7 +107,7 @@ def pagerank_quantized(
             "node",
             (
                 F.lit(base_q)
-                + F.expr(f"(coalesce(s, 0) * {damping_pct}) div 100")
+                + F.expr(f"(coalesce(s, 0) * {DAMPING_PCT}) div 100")
             ).cast("long").alias("pr_q"),
         )
     return finalize(
@@ -179,40 +120,7 @@ def pagerank_quantized(
     )
 
 
-def neighborhood(
-    edges: DataFrame, node: str, depth: int = 1, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Edges reachable from ``node`` within ``depth`` hops (the
-    notebook's MATCH (s)-[t:SENT_TO]->(r) sample, G4 — but anchored and
-    deterministic instead of LIMIT 50).
-
-    Each level is a :func:`~..cache.round_checkpoint`: the frontier is
-    referenced twice (the union AND the next expansion join), so an
-    unmaterialized loop re-evaluates level k's subtree ~2^(depth-k)
-    times — the same 2^k lineage blowup the CC loop documents. The
-    result reads every level, so all of them go to ``finalize``.
-    """
-    frontier = round_checkpoint(edges.where(F.col(src) == node))
-    result = frontier
-    levels = [frontier]
-    for _ in range(depth - 1):
-        frontier = round_checkpoint(
-            edges.join(
-                frontier.select(F.col(dst).alias(src)).distinct(), src, "inner"
-            )
-        )
-        result = result.unionByName(frontier).distinct()
-        levels.append(frontier)
-    return finalize(result, *levels)
-
-
-def connected_components(
-    edges: DataFrame,
-    iterations: int = 6,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast: bool = True,
-) -> DataFrame:
+def connected_components(edges: DataFrame, iterations: int = 6) -> DataFrame:
     """Connected components by min-label propagation: every node starts
     labeled with itself; each round every node adopts the minimum label
     in its closed neighborhood (undirected). After k rounds, labels are
@@ -224,7 +132,7 @@ def connected_components(
     (groupBy node); at 100 TB use the alternating small-star/large-star
     variant to bound message sizes, same join-agg skeleton.
     """
-    nodes = vertices_of(edges, src, dst)
+    nodes = vertices_of(edges)
     # undirected edge set PLUS self-loops: the closed-neighborhood min
     # then needs only ONE join + ONE groupBy per iteration (the
     # self-loop carries each node's own label through the aggregation,
@@ -233,8 +141,8 @@ def connected_components(
     # two-reference formulation re-evaluated each level's subtree twice,
     # a 2^k blowup observed as 67 s at sf0.1; this shape runs in ~5 s).
     und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .union(nodes.select(F.col("node").alias("a"), F.col("node").alias("b")))
         .distinct()
         .cache()
@@ -242,20 +150,14 @@ def connected_components(
     labels = nodes.select(F.col("node"), F.col("node").alias("label"))
     for _ in range(iterations):
         labels = (
-            und.join(_hint(labels.withColumnRenamed("node", "b"), broadcast), "b")
+            und.join(F.broadcast(labels.withColumnRenamed("node", "b")), "b")
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("label").alias("label"))
         )
     return finalize(labels, und)
 
 
-def connected_components_pointer_jump(
-    edges: DataFrame,
-    rounds: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast: bool = True,
-) -> DataFrame:
+def connected_components_pointer_jump(edges: DataFrame, rounds: int = 3) -> DataFrame:
     """Connected components by propagate + pointer-jump rounds.
 
     Each round first does one min-label propagation (as in
@@ -278,11 +180,10 @@ def connected_components_pointer_jump(
     uncached lineage per round (2^k subtree re-evaluations, the same
     hazard documented on pipeline_corpus_dedup). Each round therefore
     materializes its propagated labels before jumping. At billion-node
-    scale pass ``broadcast=False`` (pre-partitioning the edge list on
-    the join key), and checkpoint reliably every few rounds to keep
-    lost executors recoverable.
+    scale, checkpoint reliably every few rounds to keep lost executors
+    recoverable.
     """
-    nodes = vertices_of(edges, src, dst)
+    nodes = vertices_of(edges)
     # repartition("a") BEFORE the distinct (r11, guide §2.4): the
     # distinct still plans exactly one exchange (HashPartitioning(a)
     # satisfies ClusteredDistribution(a, b)), and the cache comes out
@@ -290,8 +191,8 @@ def connected_components_pointer_jump(
     # each round's min-label groupBy("a") after the broadcast label
     # join needs no exchange, removing `rounds` |und|-sized shuffles.
     und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .union(nodes.select(F.col("node").alias("a"), F.col("node").alias("b")))
         .repartition("a")
         .distinct()
@@ -301,7 +202,7 @@ def connected_components_pointer_jump(
     for _ in range(rounds):
         # the jump references prop TWICE
         prop = next_round(
-            und.join(_hint(labels.withColumnRenamed("node", "b"), broadcast), "b")
+            und.join(F.broadcast(labels.withColumnRenamed("node", "b")), "b")
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("label").alias("label")),
             prop,
@@ -309,18 +210,15 @@ def connected_components_pointer_jump(
         # jump: label ← label(label). Labels are always node ids, and
         # prop has a row for every node, so the inner join is total.
         labels = prop.join(
-            _hint(
-                prop.select(F.col("node").alias("label"), F.col("label").alias("ll")),
-                broadcast,
+            F.broadcast(
+                prop.select(F.col("node").alias("label"), F.col("label").alias("ll"))
             ),
             "label",
         ).select("node", F.col("ll").alias("label"))
     return finalize(labels, und, prop)
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst", broadcast: bool = True
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle count via degree-ordered edge orientation +
     adjacency-array intersection (the GraphX/"compact forward" kernel):
     each triangle is counted exactly once at its (degree, id)-lowest
@@ -337,28 +235,23 @@ def triangle_count(
     self-join formulation was measured 2.2× slower on the dense
     supplier co-occurrence graph at sf0.1: 15.5 s vs 7.1 s
     steady-state). The adjacency table has ONE row per non-sink node
-    (|V|-bounded, not |E|), so with ``broadcast=True`` (default, the
-    pagerank/LPA/k-core convention) both attachment joins are broadcast
-    hash joins and the |E| edge set never shuffles at all — without the
-    hint Catalyst cannot see that the post-``collect_list`` size is
-    |V|-bounded and falls back to sort-merge, shipping every edge row
-    with its multi-KB neighbor array through the exchange (measured
-    26.7 s vs 6.4 s steady-state on the dense sf0.1 co-occurrence
-    graph — the round-2 bench defect). Pass ``broadcast=False`` when |V| × avg
-    out-degree (≈ |E| ids, the whole oriented edge set as arrays)
-    exceeds executor broadcast budget — the billion-edge path — which
-    ships each edge row with its N+(u) array instead: comparable BYTES
-    to the wedge set, but one fewer shuffle stage and no 10⁸-row
-    hash-semi-join probe. Arrays stay bounded under orientation (max
-    out-degree ≈ √|E|); for a pathological >100 MB adjacency row,
-    route that node's edges through the wedge-join path instead.
+    (|V|-bounded, not |E|), so both attachment joins broadcast it and
+    the |E| edge set never shuffles at all — without the hint Catalyst
+    cannot see that the post-``collect_list`` size is |V|-bounded and
+    falls back to sort-merge, shipping every edge row with its multi-KB
+    neighbor array through the exchange (measured 26.7 s vs 6.4 s
+    steady-state on the dense sf0.1 co-occurrence graph — the round-2
+    bench defect). The broadcast holds the whole oriented edge set as
+    arrays (|V| × avg out-degree ≈ |E| ids), so it must fit executor
+    memory. Arrays stay bounded under orientation (max out-degree ≈
+    √|E|).
 
     Returns a single row (n_triangles BIGINT) — deterministic integer.
     """
     und = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
@@ -384,11 +277,10 @@ def triangle_count(
     ).persist()
     adj = oriented.groupBy("u").agg(F.collect_list("v").alias("nbrs"))
     # attach N+(u) and N+(v) to each oriented edge (|V|-row table,
-    # broadcast by default — see docstring for the escape hatch)
-    adj_u = _hint(adj, broadcast)
-    adj_v = _hint(
-        adj.select(F.col("u").alias("v"), F.col("nbrs").alias("nbrs_v")),
-        broadcast,
+    # broadcast — see docstring)
+    adj_u = F.broadcast(adj)
+    adj_v = F.broadcast(
+        adj.select(F.col("u").alias("v"), F.col("nbrs").alias("nbrs_v"))
     )
     joined = oriented.join(adj_u, "u").join(adj_v, "v")
     # Σ |N+(u) ∩ N+(v)| = triangle count (adjacency lists are distinct
@@ -410,13 +302,7 @@ def triangle_count(
     return spark.createDataFrame([(n,)], "n_triangles LONG")
 
 
-def label_propagation_communities(
-    edges: DataFrame,
-    iterations: int = 4,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast: bool = True,
-) -> DataFrame:
+def label_propagation_communities(edges: DataFrame, iterations: int = 4) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007): every node starts in its own community; each round
     every node adopts the MOST FREQUENT label among its neighbors
@@ -426,10 +312,8 @@ def label_propagation_communities(
     components: majority voting finds dense communities inside one
     connected component instead of collapsing it.
 
-    Scale shape per round: one |E|-vs-|V| join (labels broadcast by
-    default, ``broadcast=False`` + pre-partitioned edges at
-    billion-node scale — see :func:`_hint`), one (node, label)
-    count aggregation (map-side combined), one per-node argmax window
+    Scale shape per round: one |E|-vs-|V| join (labels broadcast),
+    one (node, label) count aggregation (map-side combined), one per-node argmax window
     keyed on the node. Lineage stays linear (labels referenced once
     per round). Each round is materialized through
     :func:`~..cache.next_round`: its broadcast build is a separate job
@@ -438,10 +322,10 @@ def label_propagation_communities(
     """
     from pyspark.sql.window import Window
 
-    nodes = vertices_of(edges, src, dst)
+    nodes = vertices_of(edges)
     und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct()
         .cache()
     )
@@ -452,7 +336,7 @@ def label_propagation_communities(
     )
     for _ in range(iterations):
         votes = (
-            und.join(_hint(labels.withColumnRenamed("node", "b"), broadcast), "b")
+            und.join(F.broadcast(labels.withColumnRenamed("node", "b")), "b")
             .groupBy(F.col("a").alias("node"), "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
@@ -473,14 +357,7 @@ def label_propagation_communities(
     return finalize(labels, und, nodes, labels)
 
 
-def kcore(
-    edges: DataFrame,
-    k: int = 5,
-    rounds: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast: bool = True,
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int = 5, rounds: int = 3) -> DataFrame:
     """k-core peeling (Seidman 1983): repeatedly delete every node of
     degree < ``k`` (and its edges); what survives ``rounds`` peels is
     the k-core up to convergence — dense engagement cores in the wallet
@@ -492,8 +369,7 @@ def kcore(
     more rounds, exactly as CC's diameter bound (at convergence extra
     rounds are no-ops). Per round: one degree aggregate over surviving
     edges and two semi-joins against the ≤|V|-row survivor set
-    (broadcast by default, ``broadcast=False`` + pre-partitioned edges
-    at billion-node scale — see :func:`_hint`).
+    (broadcast).
 
     Cache lifetime contract: every round steps through
     ``next_round``, and the ≤|V|-row (node, degree) result goes
@@ -504,8 +380,8 @@ def kcore(
     Returns (node, degree) over the surviving subgraph.
     """
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
@@ -520,10 +396,8 @@ def kcore(
             .select("a")
             .persist()
         )
-        nxt = alive.join(_hint(keep, broadcast), "a", "left_semi").join(
-            _hint(keep.select(F.col("a").alias("b")), broadcast),
-            "b",
-            "left_semi",
+        nxt = alive.join(F.broadcast(keep), "a", "left_semi").join(
+            F.broadcast(keep.select(F.col("a").alias("b"))), "b", "left_semi"
         )
         alive = next_round(nxt, alive)
         keep.unpersist()
@@ -535,14 +409,7 @@ def kcore(
     )
 
 
-def bfs_levels(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_hops: int = 4,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast: bool = True,
-) -> DataFrame:
+def bfs_levels(edges: DataFrame, seeds: DataFrame, max_hops: int = 4) -> DataFrame:
     """Multi-source BFS over the directed edge list: ``(node, dist)``
     where ``dist`` is the fewest hops from ANY seed (seeds at 0);
     nodes unreachable within ``max_hops`` are omitted. The wallet
@@ -557,9 +424,7 @@ def bfs_levels(
     once, at its minimal distance (which makes the output identical
     to the recursive-CTE oracle's ``min(dist)`` without a final
     aggregate). One shuffle per hop for the distinct; the frontier
-    and visited sets are ≤|V| rows (broadcast by default,
-    ``broadcast=False`` + edges pre-partitioned by ``src`` at
-    billion-node scale — see :func:`_hint`). Early exit when a
+    and visited sets are ≤|V| rows (broadcast). Early exit when a
     frontier empties.
     """
     pieces = [
@@ -578,13 +443,13 @@ def bfs_levels(
         # hop is released
         nxt = (
             edges.join(
-                _hint(frontier.select(F.col("node").alias(src)), broadcast),
-                src,
+                F.broadcast(frontier.select(F.col("node").alias("src"))),
+                "src",
                 "left_semi",
             )
-            .select(F.col(dst).alias("node"))
+            .select(F.col("dst").alias("node"))
             .distinct()
-            .join(_hint(visited.select("node"), broadcast), "node", "left_anti")
+            .join(F.broadcast(visited.select("node")), "node", "left_anti")
             .select("node", F.lit(h).cast("int").alias("dist"))
         )
         nxt = round_checkpoint(nxt)
@@ -599,19 +464,11 @@ def bfs_levels(
     return finalize(out, *pieces)
 
 
-def sssp(
-    edges: DataFrame,
-    seeds: DataFrame,
-    rounds: int = 4,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    broadcast: bool = True,
-) -> DataFrame:
+def sssp(edges: DataFrame, seeds: DataFrame, rounds: int = 4) -> DataFrame:
     """Round-bounded single/multi-source shortest paths (Bellman-Ford
     with a delta frontier): ``(node, dist)`` where ``dist`` is the
-    minimum total ``weight`` over paths of ≤ ``rounds`` edges from any
-    seed. The weighted generalization of :func:`bfs_levels` — "the
+    minimum total edge weight ``w`` over paths of ≤ ``rounds`` edges
+    from any seed. The weighted generalization of :func:`bfs_levels` — "the
     cheapest way flagged funds can have reached this wallet", with
     integer weights so results are exact in every engine.
 
@@ -628,9 +485,8 @@ def sssp(
     the old distance (``min`` over the old-tagged rows — at most one
     per node, the dist table is keyed), and ``improved ⇔ old IS NULL
     OR new < old``. One materialized round (``next_round``) per round;
-    the distance table stays ≤ |V| rows (broadcast hint on the edge
-    join by default; ``broadcast=False`` with src-partitioned edges at
-    billion-node scale). Early exit when no distance improves.
+    the distance table stays ≤ |V| rows (broadcast on the edge join).
+    Early exit when no distance improves.
     """
     improved_flag = F.col("__old").isNull() | (F.col("dist") < F.col("__old"))
     dist = (
@@ -643,17 +499,14 @@ def sssp(
     for _ in range(rounds):
         cand = (
             edges.join(
-                _hint(
-                    delta.select(
-                        F.col("node").alias(src), F.col("dist").alias("__d")
-                    ),
-                    broadcast,
+                F.broadcast(
+                    delta.select(F.col("node").alias("src"), F.col("dist").alias("__d"))
                 ),
-                src,
+                "src",
             )
             .select(
-                F.col(dst).alias("node"),
-                (F.col("__d") + F.col(weight)).alias("dist"),
+                F.col("dst").alias("node"),
+                (F.col("__d") + F.col("w")).alias("dist"),
                 F.lit(True).alias("__new"),
             )
         )
@@ -676,15 +529,7 @@ def sssp(
     return finalize(dist, combined)
 
 
-def earliest_arrival(
-    edges: DataFrame,
-    seeds: DataFrame,
-    rounds: int = 4,
-    src: str = "src",
-    dst: str = "dst",
-    time: str = "t",
-    broadcast: bool = True,
-) -> DataFrame:
+def earliest_arrival(edges: DataFrame, seeds: DataFrame, rounds: int = 4) -> DataFrame:
     """Round-bounded TIME-RESPECTING reachability over a timestamped
     edge list: ``(node, arr)`` where ``arr`` is the earliest time a
     flow started at any seed (each carrying its own start time in the
@@ -735,10 +580,9 @@ def earliest_arrival(
     5.0 s packed vs 2.9 s in this shape (identical output). At scale
     both forms scan the same time values per round; this one keeps
     every stage whole-stage-codegen and map-side-combinable. The
-    arrival table is ≤|V| rows (broadcast by default,
-    ``broadcast=False`` at billion-node scale).
+    arrival table is ≤|V| rows (broadcast).
     """
-    trips = round_checkpoint(edges.select(src, dst, time).distinct())
+    trips = round_checkpoint(edges.select("src", "dst", "t").distinct())
     improved_flag = F.col("__old").isNull() | (F.col("arr") < F.col("__old"))
     arr = (
         seeds.select("node", F.col("arr").cast("long").alias("arr"))
@@ -752,17 +596,14 @@ def earliest_arrival(
         # improved flag together — see sssp for the shape (r5 ask #4)
         cand = (
             trips.join(
-                _hint(
-                    delta.select(
-                        F.col("node").alias(src), F.col("arr").alias("__a")
-                    ),
-                    broadcast,
+                F.broadcast(
+                    delta.select(F.col("node").alias("src"), F.col("arr").alias("__a"))
                 ),
-                src,
+                "src",
             )
-            .where(F.col(time) >= F.col("__a"))
-            .groupBy(F.col(dst).alias("node"))
-            .agg(F.min(time).alias("arr"))
+            .where(F.col("t") >= F.col("__a"))
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("t").alias("arr"))
             .select("node", "arr", F.lit(True).alias("__new"))
         )
         combined = next_round(
@@ -784,20 +625,18 @@ def earliest_arrival(
     return finalize(arr, combined)
 
 
-def clustering_coefficient(
-    edges: DataFrame, src: str = "src", dst: str = "dst", broadcast: bool = True
-) -> DataFrame:
+def clustering_coefficient(edges: DataFrame) -> DataFrame:
     """Per-node local clustering coefficient — ``(node, degree, n_tri,
     lcc)`` with ``lcc = 2·t(node) / (d·(d−1))`` (NULL when d < 2) —
     the per-vertex refinement of :func:`triangle_count` ("how
     clique-like is this wallet's neighborhood": near 1 = closed ring
     of counterparties, near 0 = pure hub). Same degree-ordered
     orientation + adjacency-intersection kernel (see triangle_count's
-    docstring for the plan rationale and the ``broadcast`` escape
-    hatch); the difference is the sink: each discovered triangle
-    {u, v, w} must CREDIT all three corners, so the intersection array
-    is exploded to (u, v, w) rows — O(#triangles) rows, the price of
-    per-node grain — stacked into one node-keyed count. The global
+    docstring for the plan rationale and the broadcast); the difference
+    is the sink: each discovered triangle {u, v, w} must CREDIT all
+    three corners, so the intersection array is exploded to (u, v, w)
+    rows — O(#triangles) rows, the price of per-node grain — stacked
+    into one node-keyed count. The global
     count falls out as Σ n_tri / 3, which is how the parity suite
     pins this operator against the scalar one.
 
@@ -806,8 +645,8 @@ def clustering_coefficient(
     """
     und = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
@@ -838,10 +677,9 @@ def clustering_coefficient(
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
     ).persist()
     adj = oriented.groupBy("u").agg(F.collect_list("v").alias("nbrs"))
-    adj_u = _hint(adj, broadcast)
-    adj_v = _hint(
-        adj.select(F.col("u").alias("v"), F.col("nbrs").alias("nbrs_v")),
-        broadcast,
+    adj_u = F.broadcast(adj)
+    adj_v = F.broadcast(
+        adj.select(F.col("u").alias("v"), F.col("nbrs").alias("nbrs_v"))
     )
     tri = (
         oriented.join(adj_u, "u")

@@ -151,7 +151,6 @@ def entity_clusters(
     left_col: str = "name_a",
     right_col: str = "name_b",
     rounds: int = 3,
-    broadcast: bool = True,
 ) -> DataFrame:
     """Matched pairs → entity clusters: the transitive-closure step
     every production ER pipeline runs after pair verification (A≈B and
@@ -183,9 +182,8 @@ def entity_clusters(
         pairs.select(F.col(left_col).alias("src"), F.col(right_col).alias("dst"))
         .persist()
     )
-    cc = connected_components_pointer_jump(
-        edges, rounds=rounds, broadcast=broadcast
-    ).persist()  # read twice: label projection + cluster sizes
+    # read twice: label projection + cluster sizes
+    cc = connected_components_pointer_jump(edges, rounds=rounds).persist()
     sizes = cc.groupBy("label").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size")
     )

@@ -147,38 +147,6 @@ def dedup_keep_last(
     )
 
 
-def net_flow(
-    inflows: DataFrame,
-    outflows: DataFrame,
-    key_cols: Sequence[str],
-    in_value: str = "in_value",
-    out_value: str = "out_value",
-    diff_col: str = "diff",
-) -> DataFrame:
-    """Net-flow kernel: full-outer align inflow vs outflow per key,
-    missing side = 0, keep nonzero diffs (J2 + A4 — the heart of the
-    reference's U2 UDF, src/etl_vol_transfers/main.py:96-105:
-    ``pd.merge(how='outer').fillna(0)``, ``diff = value_y - value_x``,
-    drop ``diff == 0``).
-
-    Both inputs should already be pre-aggregated per key (map-side
-    partial agg upstream); the join is a shuffle hash/sort-merge on the
-    composite key — co-partitioned if both sides were grouped on the
-    same keys, in which case AQE elides the second exchange.
-    """
-    keys = list(key_cols)
-    joined = inflows.join(outflows, keys, "full_outer")
-    return (
-        joined.select(
-            *keys,
-            F.coalesce(F.col(in_value), F.lit(0)).alias(in_value),
-            F.coalesce(F.col(out_value), F.lit(0)).alias(out_value),
-        )
-        .withColumn(diff_col, F.col(out_value) - F.col(in_value))
-        .where(F.col(diff_col) != 0)
-    )
-
-
 def salted(df: DataFrame, key_col: str, buckets: int, salt_col: str = "__salt") -> DataFrame:
     """Add a deterministic salt to split a skewed ``key_col`` across
     ``buckets`` shuffle partitions: the salt is a hash of the row's

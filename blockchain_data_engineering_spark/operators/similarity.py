@@ -129,30 +129,6 @@ def brute_force_topk(
     )
 
 
-def sign_lsh_bucket(
-    vec: Column, n_planes: int = 8, dim: int = 64
-) -> Column:
-    """Sign-random-projection LSH bucket id as a bit string.
-
-    Hyperplane j is a Rademacher (±1) vector whose sign at position i
-    is derived from md5(f"{j}_{i}") — deterministic, engine-portable,
-    and a valid LSH family for cosine similarity. The projection is an
-    exact integer sum of per-position quanta.
-    """
-    bits = []
-    for j in range(n_planes):
-        terms = F.array(
-            *[
-                (F.lit(1) if _plane_sign(j, i) > 0 else F.lit(-1))
-                * _q(F.element_at(vec, i + 1).cast("double"))
-                for i in range(dim)
-            ]
-        )
-        proj = F.aggregate(terms, F.lit(0).cast("long"), lambda acc, x: acc + x)
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def _plane_sign(j: int, i: int) -> int:
     """+1/−1 from the first hex digit of md5(f"{j}_{i}") — computed in
     Python here and by the same md5 rule in the SQL oracle."""
@@ -173,17 +149,19 @@ def sign_lsh_buckets(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """(id, norm_q, bucket) for every vector — the aggregate-shaped
-    twin of :func:`sign_lsh_bucket`.
+    """(id, norm_q, bucket) for every vector: the sign-random-projection
+    LSH bucket id as a bit string. Hyperplane j is a Rademacher (±1)
+    vector whose sign at position i is derived from md5(f"{j}_{i}") —
+    deterministic, engine-portable, and a valid LSH family for cosine
+    similarity.
 
     One ``posexplode`` + one hash-aggregate computes all ``n_planes``
     signed projections AND the squared norm in a single codegen'd pass:
     each projection is ``sum(sign(j,i) * quanta(x_i))`` with the
-    Rademacher sign looked up from a per-plane literal array. Bit-equal
-    to the column-expression form (same BIGINT quanta, order-free sums)
-    but ~20x faster: the 512-term ``aggregate()`` higher-order
-    expression is interpreted per row, while this shape stays in
-    whole-stage codegen end to end."""
+    Rademacher sign looked up from a per-plane literal array. The shape
+    stays in whole-stage codegen end to end: a per-row column form (a
+    512-term ``aggregate()`` higher-order expression, interpreted per
+    row) measured ~20x slower for the same BIGINT quanta sums."""
     signs = plane_signs(n_planes, dim)
     x = F.col("x").cast("double")
     ex = vectors.select(

@@ -122,10 +122,12 @@ def explode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # J2/A2-A4: the net-flow kernel — the reference's flagship U2 UDF
-# (src/etl_vol_transfers/main.py:96-105) restated as two partial
-# aggregations + full-outer join + coalesce + nonzero-diff filter.
-# Mapping per FIXTURES.md §9: inflow = returned lineitems (R), outflow =
-# the rest, key = (l_suppkey, l_partkey) ~ (address, unit).
+# (src/etl_vol_transfers/main.py:96-105) restated as one conditional
+# aggregation (inflow and outflow sums side by side, a missing side
+# coalesced to 0) + nonzero-diff filter; the oracle keeps the
+# reference's full-outer-join shape. Mapping per FIXTURES.md §9:
+# inflow = returned lineitems (R), outflow = the rest, key =
+# (l_suppkey, l_partkey) ~ (address, unit).
 # ---------------------------------------------------------------------------
 @query(
     "netflow_supplier_part",
@@ -149,19 +151,16 @@ def explode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def netflow_supplier_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    inflow = (
-        li.where(F.col("l_returnflag") == "R")
-        .groupBy("l_suppkey", "l_partkey")
-        .agg(dsum(F.col("l_quantity"), 0).alias("in_qty"))
-    )
-    outflow = (
-        li.where(F.col("l_returnflag") != "R")
-        .groupBy("l_suppkey", "l_partkey")
-        .agg(dsum(F.col("l_quantity"), 0).alias("out_qty"))
-    )
-    return R.net_flow(
-        inflow, outflow, ["l_suppkey", "l_partkey"],
-        in_value="in_qty", out_value="out_qty", diff_col="net_qty",
+    qty = F.col("l_quantity")
+    flag = F.col("l_returnflag")
+    return (
+        li.groupBy("l_suppkey", "l_partkey")
+        .agg(
+            F.coalesce(dsum(F.when(flag == "R", qty), 0), F.lit(0)).alias("in_qty"),
+            F.coalesce(dsum(F.when(flag != "R", qty), 0), F.lit(0)).alias("out_qty"),
+        )
+        .withColumn("net_qty", F.col("out_qty") - F.col("in_qty"))
+        .where(F.col("net_qty") != 0)
     )
 
 

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from blockchain_data_engineering_spark.catalog import load_table, spread
+from blockchain_data_engineering_spark.domain.netflow import transacted
 from blockchain_data_engineering_spark.domain.schema import VALUE_MAP_TYPE
 from blockchain_data_engineering_spark.functions.scalar import (
     deterministic_id,
@@ -132,9 +133,10 @@ def domain_utxo_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # U2 at reference granularity: per-(tx, address, unit) net flow —
-# consumed (R legs) vs produced (other legs) full-outer aligned,
-# zero-diff rows dropped (change outputs), src/etl_vol_transfers/
-# main.py:96-105.
+# consumed (R legs) vs produced (other legs) netted by the replay's own
+# kernel (domain/netflow.transacted: one union aggregation), zero-diff
+# rows dropped (change outputs), src/etl_vol_transfers/main.py:96-105.
+# The oracle keeps the reference's full-outer-join shape.
 # ---------------------------------------------------------------------------
 @query(
     "domain_netflow_tx",
@@ -159,30 +161,17 @@ def domain_utxo_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def domain_netflow_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    keys = ["l_orderkey", "l_suppkey", "l_partkey"]
-    consumed = (
-        li.where(F.col("l_returnflag") == "R")
-        .groupBy(*keys)
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("consumed"))
+    legs = load_table(spark, sf_dir, "lineitem").select(
+        F.col("l_orderkey").alias("tx_hash"),
+        F.col("l_suppkey").alias("address"),
+        F.col("l_partkey").alias("unit"),
+        F.col("l_quantity").cast("long").alias("quantity"),
+        "l_returnflag",
     )
-    produced = (
-        li.where(F.col("l_returnflag") != "R")
-        .groupBy(*keys)
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("produced"))
-    )
-    return (
-        consumed.join(produced, keys, "full_outer")
-        .select(
-            F.col("l_orderkey").alias("tx"),
-            F.col("l_suppkey").alias("address"),
-            F.col("l_partkey").alias("unit"),
-            (
-                F.coalesce(F.col("produced"), F.lit(0))
-                - F.coalesce(F.col("consumed"), F.lit(0))
-            ).alias("value"),
-        )
-        .where(F.col("value") != 0)
+    consumed = legs.where(F.col("l_returnflag") == "R")
+    produced = legs.where(F.col("l_returnflag") != "R")
+    return transacted(consumed, produced).select(
+        F.col("tx_hash").alias("tx"), "address", "unit", "value"
     )
 
 
@@ -408,8 +397,6 @@ _DECIMAL_SCALE = 10**18  # per-row up to 5e19 > 2^63; fits DECIMAL(22,0)
     """,
 )
 def netflow_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blockchain_data_engineering_spark.domain.netflow import transacted
-
     li = load_table(spark, sf_dir, "lineitem")
     # decimal(2,0) * decimal(19,0) -> decimal(22,0): exact, no 64-bit cap
     qty = (

@@ -6,7 +6,7 @@ real PageRank dynamics.
 
 The PageRank oracle is the exact same fixed-point iteration unrolled
 into a SQL CTE chain — integer arithmetic end-to-end, so Spark and
-DuckDB agree bit-for-bit (see operators.graph.pagerank_quantized).
+DuckDB agree bit-for-bit (see operators.graph.pagerank).
 """
 
 from __future__ import annotations
@@ -112,7 +112,7 @@ def _pagerank_oracle_sql(iters: int) -> str:
     """Unroll the fixed-point PageRank iteration as a CTE chain.
 
     DuckDB can't aggregate inside a recursive CTE, so the loop is
-    generated — same integer ops as pagerank_quantized: BIGINT ranks
+    generated — same integer ops as operators.graph.pagerank: BIGINT ranks
     scaled by 10^12, ``//`` division, 85/100 damping.
     """
     scale = G.PR_SCALE
@@ -148,14 +148,13 @@ def _pagerank_oracle_sql(iters: int) -> str:
 
 # ---------------------------------------------------------------------------
 # G3: PageRank — native iterative DataFrame loop replacing Neo4j GDS
-# (airflow/archive/dags/etl_pagerank_dag.py:43-48). Fixed-point variant
-# for exact oracle verification; operators.graph.pagerank is the
-# float production path (damping 0.85 = the GDS default).
+# (airflow/archive/dags/etl_pagerank_dag.py:43-48). Fixed-point integer
+# ranks, damping 0.85 (the GDS default), so the oracle matches exactly.
 # ---------------------------------------------------------------------------
 @query("graph_pagerank", oracle=_pagerank_oracle_sql(PR_ITERS))
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges_df(spark, sf_dir)
-    return finalize(G.pagerank_quantized(edges, iterations=PR_ITERS), edges)
+    return finalize(G.pagerank(edges, iterations=PR_ITERS), edges)
 
 
 # ---------------------------------------------------------------------------
@@ -315,9 +314,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst")
         .distinct()
     )
-    # default broadcast=True forces the |V|-row adjacency broadcast —
-    # right for this co-occurrence graph; billion-edge callers must
-    # pass broadcast=False to fall back to the sort-merge path
+    # triangle_count broadcasts the |V|-row adjacency table, which
+    # keeps this dense co-occurrence graph's edges from shuffling
     return G.triangle_count(edges)
 
 

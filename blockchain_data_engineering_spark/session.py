@@ -55,6 +55,12 @@ CODEGEN_CACHE_ENTRIES = 4096
 # (``pyspark.errors.utils.is_debugging_enabled``).
 DATAFRAME_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
+# Spark logs a WARN from this logger each time a locally checkpointed
+# RDD is unpersisted ("its lineage has been truncated and cannot be
+# recomputed"). Every ``cache.release`` of a round checkpoint or settled
+# result does that on purpose, so ``get_spark`` keeps only its errors.
+CHECKPOINT_RELEASE_LOGGER = "org.apache.spark.rdd.MapPartitionsRDD"
+
 
 def local_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -86,6 +92,10 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    log4j = spark._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(
+        CHECKPOINT_RELEASE_LOGGER, log4j.Level.ERROR
+    )
     return spark
 
 

@@ -15,9 +15,10 @@ from blockchain_data_engineering_spark.sources.io import (  # noqa: F401
     upsert_delta,
     upsert_parquet,
     upsert_parquet_bucketed,
-    write_edge_list,
     write_jdbc,
-    write_neo4j_admin_export,
     write_orc,
     write_partitioned,
+)
+from blockchain_data_engineering_spark.sources.neo4j import (  # noqa: F401
+    write_neo4j_admin_export,
 )

@@ -1015,119 +1015,6 @@ def maybe_compact_bucketed(
     return compact_parquet_bucketed(spark, path, target_file_bytes)
 
 
-def write_edge_list(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Transfer-graph sink: the engine's native graph representation is
-    an edge-list table (send_addr, rx_addr, tx_hash, unit, value,
-    value_adj) — the reference wrote the same rows to Neo4j
-    (src/etl_vol_transfers/main.py:190-209). A Neo4j connector
-    passthrough belongs in deployment code; the analytics (PageRank,
-    neighborhoods) run natively on this table (operators.graph)."""
-    df.write.mode(mode).parquet(path)
-
-
-def _neo4j_prop_type(spark_type: str) -> str:
-    """Spark SQL type → neo4j-admin import header type suffix
-    (operations-manual: tools/neo4j-admin/neo4j-admin-import, 'Header
-    format'). Integral → long, floating → double, boolean → boolean;
-    everything else (string, decimal beyond long range, binary hex,
-    timestamps pre-rendered by the caller) ships as string — the only
-    lossless default for arbitrary precision."""
-    if spark_type in ("tinyint", "smallint", "int", "bigint"):
-        return "long"
-    if spark_type in ("float", "double"):
-        return "double"
-    if spark_type == "boolean":
-        return "boolean"
-    return "string"
-
-
-def write_neo4j_admin_export(
-    edges: DataFrame,
-    out_dir: str,
-    src_col: str = "send_addr",
-    dst_col: str = "rx_addr",
-    rel_type: str = "TRANSFER",
-    node_label: str = "Wallet",
-) -> str:
-    """Neo4j sink for existing Bolt/Neo4j consumers (reference
-    src/etl_vol_transfers/main.py:190-209 MERGEd the same rows one
-    Cypher call per edge). At engine scale the supported Neo4j bulk
-    path is ``neo4j-admin database import`` over CSV, so this sink
-    produces exactly that layout, fully distributed:
-
-    - ``nodes/part-*.csv``  headerless node rows (distinct addresses),
-    - ``relationships/part-*.csv``  headerless edge rows with every
-      non-endpoint column as a typed property,
-    - ``nodes_header.csv`` / ``relationships_header.csv``  the one-line
-      typed headers neo4j-admin pairs with the data globs
-      (``addr:ID(Wallet),:LABEL`` / ``:START_ID .. :END_ID .. :TYPE``).
-
-    Returns the ready-to-run ``neo4j-admin database import full``
-    command string. Per-row Cypher MERGE (the reference's shape) is
-    O(edges) round-trips and years at 100 TB; this is one distributed
-    CSV write plus Neo4j's own parallel bulk loader.
-
-    ``out_dir`` must be a driver-visible filesystem path (the two
-    one-line header files are written driver-side; neo4j-admin itself
-    runs on a single machine reading the same directory) — for an
-    object-store export, write there with Spark and sync down before
-    importing. Headers are written FIRST so a non-writable target
-    fails before the distributed work, not after.
-    """
-    import os
-
-    id_space = f":ID({node_label})"
-    prop_fields = [
-        f for f in edges.schema.fields if f.name not in (src_col, dst_col)
-    ]
-
-    node_header = f"addr{id_space},:LABEL"
-    rel_header = ",".join(
-        [f":START_ID({node_label})", f":END_ID({node_label})", ":TYPE"]
-        + [
-            f"{f.name}:{_neo4j_prop_type(f.dataType.simpleString())}"
-            for f in prop_fields
-        ]
-    )
-    # tiny driver-side header files (one line each) — neo4j-admin takes
-    # "--nodes=<header>,<data-glob>" so the distributed parts stay headerless
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, "nodes_header.csv"), "w") as fh:
-        fh.write(node_header + "\n")
-    with open(os.path.join(out_dir, "relationships_header.csv"), "w") as fh:
-        fh.write(rel_header + "\n")
-
-    # escape='"' ⇒ RFC4180 doubled quotes — neo4j-admin does not parse
-    # Spark's default backslash escaping; embedded newlines stay inside
-    # quoted fields and are covered by --multiline-fields below
-    nodes = (
-        edges.select(F.col(src_col).alias("addr"))
-        .unionAll(edges.select(F.col(dst_col).alias("addr")))
-        .distinct()
-        .select("addr", F.lit(node_label).alias("label"))
-    )
-    nodes.write.mode("overwrite").option("emptyValue", "").option(
-        "escape", '"'
-    ).csv(os.path.join(out_dir, "nodes"))
-
-    rels = edges.select(
-        F.col(src_col).alias("start"),
-        F.col(dst_col).alias("end"),
-        F.lit(rel_type).alias("type"),
-        *[F.col(f.name) for f in prop_fields],
-    )
-    rels.write.mode("overwrite").option("emptyValue", "").option(
-        "escape", '"'
-    ).csv(os.path.join(out_dir, "relationships"))
-
-    return (
-        "neo4j-admin database import full --multiline-fields=true "
-        f"--nodes={out_dir}/nodes_header.csv,{out_dir}/nodes/part-.* "
-        f"--relationships={out_dir}/relationships_header.csv,"
-        f"{out_dir}/relationships/part-.* neo4j"
-    )
-
-
 def write_zordered(
     df: DataFrame,
     path: str,

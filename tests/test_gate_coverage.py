@@ -177,6 +177,41 @@ def test_operators_doc_maps_every_gate_query():
     assert not missing, f"OPERATORS.md maps no row to gate queries: {missing}"
 
 
+def test_operators_doc_names_only_existing_operators():
+    """Every backticked `` `pkg/module.name` `` in docs/OPERATORS.md
+    (a ``(args)`` suffix allowed, ``a/b`` listing two names) resolves
+    to a real attribute of the package, so a deleted or renamed
+    operator cannot linger in the doc. ``*.py`` file mentions are not
+    operator names."""
+    import importlib
+    import re
+
+    with open(os.path.join(REPO_ROOT, "docs", "OPERATORS.md")) as fh:
+        doc = fh.read()
+    refs = [
+        (module, name)
+        for module, names in re.findall(
+            r"`([a-z_]+(?:/[a-z_0-9]+)+)\.([\w./]+)(?:\([^`]*\))?`", doc
+        )
+        for name in names.split("/")
+        if name != "py"
+    ]
+    assert len(refs) > 100, "OPERATORS.md code references not found (format changed?)"
+    missing = []
+    for module, name in refs:
+        try:
+            obj = importlib.import_module(
+                "blockchain_data_engineering_spark." + module.replace("/", ".")
+            )
+        except ModuleNotFoundError:
+            obj = None
+        for attr in name.split("."):
+            obj = getattr(obj, attr, None)
+        if obj is None:
+            missing.append(f"{module}.{name}")
+    assert not missing, f"OPERATORS.md names missing operators: {sorted(set(missing))}"
+
+
 def test_every_gate_query_has_an_oracle_or_documented_exemption():
     # every gate query should ship a DuckDB oracle (strong value-hash
     # check); list genuinely non-SQL-expressible exemptions here

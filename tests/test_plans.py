@@ -199,8 +199,7 @@ def test_dedup_verify_join_is_size_adaptive(spark, sf_dir):
     """The registered minhash verify join must NOT bake in a broadcast:
     the static plan is a shuffle join (safe when the per-doc array
     table exceeds executor memory at corpus scale); AQE may convert it
-    at runtime when the input measures small. broadcast=True remains an
-    explicit opt-in that plants the hint."""
+    at runtime when the input measures small."""
     from pyspark.sql import functions as F
 
     from blockchain_data_engineering_spark.catalog import load_table
@@ -222,12 +221,6 @@ def test_dedup_verify_join_is_size_adaptive(spark, sf_dir):
         unhinted = buf.getvalue()
         assert "BroadcastHashJoin" not in unhinted, unhinted
         assert "SortMergeJoin" in unhinted or "ShuffledHashJoin" in unhinted
-
-        # ...while the explicit opt-in still plants the hint
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            D.jaccard_verify_arrays(cand, arr, broadcast=True).explain("formatted")
-        assert "BroadcastHashJoin" in buf.getvalue()
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
@@ -263,11 +256,10 @@ def test_ivf_centroid_set_is_fixed_k(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
 
 
-def test_graph_broadcast_hint_is_parameterized(spark, sf_dir):
-    """The scale-safe plan must be reachable without editing library
-    code: broadcast=False on the iterative graph ops plants NO
-    BroadcastExchange (threshold disabled), and both modes produce
-    identical labels/ranks (integer math — exact equality)."""
+def test_graph_loops_broadcast_the_vertex_side(spark, sf_dir):
+    """The PageRank and pointer-jump loops hint their |V|-row rank and
+    label tables: with the size threshold disabled, the only way a
+    BroadcastExchange reaches the executed plans is the hint."""
     from pyspark.sql import functions as F
 
     from blockchain_data_engineering_spark.operators import graph as G
@@ -280,19 +272,15 @@ def test_graph_broadcast_hint_is_parameterized(spark, sf_dir):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         ops = {
-            "pagerank_quantized": lambda bc: G.pagerank_quantized(
-                edges, iterations=2, broadcast=bc
-            ),
-            "connected_components_pointer_jump": lambda bc: (
-                G.connected_components_pointer_jump(edges, rounds=2, broadcast=bc)
+            "pagerank": lambda: G.pagerank(edges, iterations=2),
+            "connected_components_pointer_jump": lambda: (
+                G.connected_components_pointer_jump(edges, rounds=2)
             ),
         }
         for name, op in ops.items():
-            got_u, unhinted_plan = _ran(spark, lambda: op(False))
-            got_h, hinted_plan = _ran(spark, lambda: op(True))
-            assert "BroadcastExchange" not in unhinted_plan, (name, unhinted_plan)
-            assert "BroadcastExchange" in hinted_plan, name  # non-vacuous
-            assert got_h == got_u, name
+            got, plan = _ran(spark, op)
+            assert "BroadcastExchange" in plan, (name, plan)
+            assert got, name
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
@@ -398,10 +386,10 @@ def test_cms_register_join_is_broadcast(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_kcore_unhinted_path_has_no_broadcast(spark, sf_dir):
-    """kcore(broadcast=False) must plant no BroadcastExchange (the
-    billion-node plan is reachable without editing library code), and
-    both modes must peel identically."""
+def test_kcore_broadcasts_the_survivor_set(spark, sf_dir):
+    """kcore's semi joins broadcast the ≤|V|-row survivor set: with the
+    size threshold disabled, the executed plans still hold a
+    BroadcastExchange, and no Python evaluation."""
     from pyspark.sql import functions as F
 
     from blockchain_data_engineering_spark.operators.graph import kcore
@@ -413,31 +401,23 @@ def test_kcore_unhinted_path_has_no_broadcast(spark, sf_dir):
     try:
         # the executed plans: every peel round's checkpoint and the
         # settle — the returned frame itself is a flat checkpoint scan
-        u, plan = _ran(spark, lambda: kcore(edges, k=3, rounds=2, broadcast=False))
-        h, hinted_plan = _ran(
-            spark, lambda: kcore(edges, k=3, rounds=2, broadcast=True)
-        )
-        assert "BroadcastExchange" not in plan, plan
-        # non-vacuous: the plans hold the rounds' semi joins, and the
-        # hinted twin's broadcasts show up in them
+        got, plan = _ran(spark, lambda: kcore(edges, k=3, rounds=2))
+        # the plans hold the rounds' semi joins, and their broadcasts
         assert "LeftSemi" in plan, plan
-        assert "BroadcastExchange" in hinted_plan
+        assert "BroadcastExchange" in plan, plan
         # the gate query's returned plan is checkpoint-truncated, so the
         # JVM-only sweep can't see kcore's pipeline — pin it here
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-        assert h == u
+        assert got
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
-def test_r5_graph_ops_unhinted_path_has_no_broadcast(spark, sf_dir):
-    """r5 judge ask #3: the four round-5 graph ops expose the same
-    billion-node ``broadcast=False`` escape hatch as pagerank/CC/kcore
-    but were missing from the no-BroadcastExchange sweep — a stray
-    ``F.broadcast`` regression would have gone unnoticed. For each op:
-    the unhinted plan plants NO BroadcastExchange, the hinted twin DOES
-    (non-vacuity: the guard provably sees the join sites), and both
-    modes agree exactly (integer arithmetic throughout)."""
+def test_r5_graph_ops_broadcast_the_vertex_side(spark, sf_dir):
+    """The four round-5 graph ops hint their ≤|V|-row side (frontier,
+    distances, arrivals, adjacency arrays) like pagerank/CC/kcore: with
+    the size threshold disabled, each op's executed plans still hold a
+    BroadcastExchange, run no Python evaluation, and return rows."""
     from pyspark.sql import functions as F
 
     from blockchain_data_engineering_spark.operators import graph as G
@@ -453,34 +433,23 @@ def test_r5_graph_ops_unhinted_path_has_no_broadcast(spark, sf_dir):
     )
 
     ops = {
-        "bfs_levels": lambda bc: G.bfs_levels(
-            edges, seeds.select("node"), max_hops=2, broadcast=bc
-        ),
-        "sssp": lambda bc: G.sssp(
-            edges, seeds.select("node"), rounds=2, broadcast=bc
-        ),
-        "earliest_arrival": lambda bc: G.earliest_arrival(
-            edges, seeds, rounds=2, broadcast=bc
-        ),
-        "clustering_coefficient": lambda bc: G.clustering_coefficient(
-            edges, broadcast=bc
-        ),
+        "bfs_levels": lambda: G.bfs_levels(edges, seeds.select("node"), max_hops=2),
+        "sssp": lambda: G.sssp(edges, seeds.select("node"), rounds=2),
+        "earliest_arrival": lambda: G.earliest_arrival(edges, seeds, rounds=2),
+        "clustering_coefficient": lambda: G.clustering_coefficient(edges),
     }
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         for name, op in ops.items():
             # the executed plans: each round's checkpoint and the settle
-            got_u, unhinted_plan = _ran(spark, lambda: op(False))
-            got_h, hinted_plan = _ran(spark, lambda: op(True))
-            assert "BroadcastExchange" not in unhinted_plan, (name, unhinted_plan)
-            assert "BroadcastExchange" in hinted_plan, (name, hinted_plan)
+            got, plan = _ran(spark, op)
+            assert "BroadcastExchange" in plan, (name, plan)
             # also pin JVM-only execution for the pipeline (the gate
             # query's checkpoint-truncated plan hides it)
-            assert "BatchEvalPython" not in unhinted_plan, name
-            assert "ArrowEvalPython" not in unhinted_plan, name
-            assert got_h == got_u, name
-            assert got_h, name  # non-empty: the ops actually ran
+            assert "BatchEvalPython" not in plan, name
+            assert "ArrowEvalPython" not in plan, name
+            assert got, name  # non-empty: the ops actually ran
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 

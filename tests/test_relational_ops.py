@@ -1,5 +1,5 @@
-"""Operator-level tests: skew salting equivalence, net-flow edge cases,
-as-of join semantics at the boundaries."""
+"""Operator-level tests: skew salting equivalence, as-of join semantics
+at the boundaries."""
 
 from __future__ import annotations
 
@@ -37,21 +37,6 @@ def test_salted_join_equals_plain_join(spark):
         salted_fact.groupBy("k", "__salt").count().count()
     )
     assert n_partitions_used > 3  # more granular than the raw key space
-
-
-def test_net_flow_drops_zero_and_handles_one_sided(spark):
-    inflow = spark.createDataFrame(
-        [("a", 10), ("b", 5)], "k STRING, in_v LONG"
-    )
-    outflow = spark.createDataFrame(
-        [("a", 10), ("c", 7)], "k STRING, out_v LONG"
-    )
-    out = R.net_flow(
-        inflow, outflow, ["k"], in_value="in_v", out_value="out_v", diff_col="d"
-    )
-    got = {r.k: (r.in_v, r.out_v, r.d) for r in out.collect()}
-    # a: 10 in, 10 out → diff 0 → dropped (the change-output case)
-    assert got == {"b": (5, 0, -5), "c": (0, 7, 7)}
 
 
 def test_asof_join_boundary_semantics(spark):

@@ -1,9 +1,13 @@
-"""Session-level behaviour: the codegen cache holds a working set."""
+"""Session-level behaviour: the codegen cache holds a working set, and
+deliberate checkpoint releases log nothing."""
 
 from __future__ import annotations
 
 from blockchain_data_engineering_spark.plans import QUERIES
-from blockchain_data_engineering_spark.session import codegen_compiles
+from blockchain_data_engineering_spark.session import (
+    CHECKPOINT_RELEASE_LOGGER,
+    codegen_compiles,
+)
 
 # Together these compile 177 distinct generated classes at sf0.001 in a
 # fresh session (12 + 28 + 41 + 42 + 54), more than Spark's default
@@ -34,3 +38,13 @@ def test_second_pass_compiles_no_generated_classes(spark, sf_dir):
 
     one_pass()
     assert one_pass() == dict.fromkeys(WORKING_SET, 0)
+
+
+def test_checkpoint_release_warning_is_silenced(spark):
+    """``get_spark`` raises the logger behind Spark's per-release
+    "was locally checkpointed" WARN to ERROR."""
+    log4j = spark._jvm.org.apache.logging.log4j
+    logger = log4j.LogManager.getLogger(CHECKPOINT_RELEASE_LOGGER)
+    assert logger.getLevel().toString() == "ERROR"
+    # the root stays at WARN: only the one logger is quieted
+    assert log4j.LogManager.getRootLogger().getLevel().toString() == "WARN"

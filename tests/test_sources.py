@@ -291,10 +291,13 @@ def test_upsert_parquet_bucketed_rejects_layout_mismatch(spark, tmp_path):
 
 
 def test_neo4j_admin_export_layout(spark, tmp_path):
-    """S6 passthrough for Bolt consumers: the export must be loadable by
-    pairing the one-line typed header with the headerless parts —
-    verified here by reading the parts back WITH the header's schema and
-    checking ids, label/type constants, and property typing survive."""
+    """S6 bulk sink: the export must be loadable by pairing the one-line
+    typed header with the headerless parts — verified here by reading
+    the parts back WITH the header's schema and checking ids,
+    label/type constants, and property typing survive. It writes the
+    graph the MERGE transports write (Wallet nodes keyed by address,
+    SENT_TO relationships with value_ada), so later incremental MERGEs
+    match the bulk-loaded rows."""
     from blockchain_data_engineering_spark.sources import write_neo4j_admin_export
 
     edges = spark.createDataFrame(
@@ -314,14 +317,14 @@ def test_neo4j_admin_export_layout(spark, tmp_path):
     rel_header = (
         (tmp_path / "neo4j" / "relationships_header.csv").read_text().strip()
     )
-    assert node_header == "addr:ID(Wallet),:LABEL"
+    assert node_header == "address:ID(Wallet),:LABEL"
     assert rel_header == (
         ":START_ID(Wallet),:END_ID(Wallet),:TYPE,tx_hash:string,"
-        "unit:string,value:long,value_adj:double,verified:boolean"
+        "unit:string,value:long,value_ada:double,verified:boolean"
     )
 
-    nodes = spark.read.csv(f"{out}/nodes", schema="addr STRING, label STRING")
-    assert sorted(r["addr"] for r in nodes.collect()) == ["a1", "a2", "a3"]
+    nodes = spark.read.csv(f"{out}/nodes", schema="address STRING, label STRING")
+    assert sorted(r["address"] for r in nodes.collect()) == ["a1", "a2", "a3"]
     assert {r["label"] for r in nodes.collect()} == {"Wallet"}
 
     rels = spark.read.csv(
@@ -331,8 +334,8 @@ def test_neo4j_admin_export_layout(spark, tmp_path):
     )
     rows = sorted(map(tuple, rels.collect()))
     assert len(rows) == 3
-    assert {r[2] for r in rows} == {"TRANSFER"}
-    assert rows[0] == ("a1", "a2", "TRANSFER", "tx1", "lovelace", 7, 0.7, True)
+    assert {r[2] for r in rows} == {"SENT_TO"}
+    assert rows[0] == ("a1", "a2", "SENT_TO", "tx1", "lovelace", 7, 0.7, True)
 
 
 def test_neo4j_admin_export_rfc4180_quoting(spark, tmp_path):
