@@ -94,9 +94,7 @@ def test_netflow_invariants_python_model(flows):
 def test_netflow_spark_matches_python_model(spark):
     """One Spark execution of the same invariant check on generated
     data (the pure model above runs hundreds of cases; Spark runs one
-    representative to pin the implementation to the model), plus the
-    two edge cases pinned by name: a zero net flow is dropped (the
-    change-output case) and a one-sided flow is kept."""
+    representative to pin the implementation to the model)."""
     import random
 
     from pyspark.sql import functions as F
@@ -111,15 +109,10 @@ def test_netflow_spark_matches_python_model(spark):
             rows_in.append((tx, addr, unit, rng.randrange(0, 100)))
         if rng.random() < 0.7:
             rows_out.append((tx, addr, unit, rng.randrange(0, 100)))
-    rows_in += [("tz", "a", "u", 10), ("tz", "b", "u", 5)]
-    rows_out += [("tz", "a", "u", 10), ("tz", "c", "u", 7)]
     schema = "tx_hash STRING, address STRING, unit STRING, quantity LONG"
     iu = spark.createDataFrame(rows_in, schema)
     ou = spark.createDataFrame(rows_out, schema)
     got = transacted(iu, ou).collect()
-    tz = {(r.address, r.unit): r.value for r in got if r.tx_hash == "tz"}
-    # a: 10 in, 10 out → net 0 → dropped; b: consumed only; c: produced only
-    assert tz == {("b", "u"): -5, ("c", "u"): 7}
 
     consumed: dict = {}
     produced: dict = {}

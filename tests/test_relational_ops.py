@@ -1,5 +1,5 @@
-"""Operator-level tests: skew salting equivalence, as-of join semantics
-at the boundaries."""
+"""Operator-level tests: skew salting equivalence, net-flow edge cases,
+as-of join semantics at the boundaries."""
 
 from __future__ import annotations
 
@@ -37,6 +37,22 @@ def test_salted_join_equals_plain_join(spark):
         salted_fact.groupBy("k", "__salt").count().count()
     )
     assert n_partitions_used > 3  # more granular than the raw key space
+
+
+def test_net_flow_drops_zero_and_handles_one_sided(spark):
+    from blockchain_data_engineering_spark.domain.netflow import transacted
+
+    schema = "tx_hash STRING, address STRING, unit STRING, quantity LONG"
+    inputs = spark.createDataFrame(
+        [("t", "a", "u", 10), ("t", "b", "u", 5)], schema
+    )
+    outputs = spark.createDataFrame(
+        [("t", "a", "u", 10), ("t", "c", "u", 7)], schema
+    )
+    got = {r.address: r.value for r in transacted(inputs, outputs).collect()}
+    # a: 10 in, 10 out → net 0 → dropped (the change-output case);
+    # b: consumed only; c: produced only
+    assert got == {"b": -5, "c": 7}
 
 
 def test_asof_join_boundary_semantics(spark):
