@@ -135,15 +135,13 @@ def shingle_array(
     return df.select(F.col(id_col), F.array_distinct(shingles).alias("shingles"))
 
 
-def jaccard_verify_arrays(
-    candidates: DataFrame, sh_arr: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact Jaccard for candidate pairs from per-doc shingle ARRAYS:
-    two hash joins bring the arrays to the pair, then
-    ``size(array_intersect(...))`` computes |A∩B| row-locally — the
-    shingle relation itself is never shuffled (joining the exploded
-    shingle set twice instead measured 3.4x slower than this shape with
-    broadcast at sf0.1).
+def jaccard_verify_arrays(candidates: DataFrame, sh_arr: DataFrame) -> DataFrame:
+    """Exact Jaccard for candidate pairs ``(id_a, id_b)`` from per-doc
+    shingle ARRAYS ``(doc_id, shingles)``: two hash joins bring the
+    arrays to the pair, then ``size(array_intersect(...))`` computes
+    |A∩B| row-locally — the shingle relation itself is never shuffled
+    (joining the exploded shingle set twice instead measured 3.4x
+    slower than this shape with broadcast at sf0.1).
     Integer counts, one final division — bit-deterministic.
 
     The joins are SIZE-ADAPTIVE: no hint is planted, the static plan is
@@ -151,8 +149,8 @@ def jaccard_verify_arrays(
     array table is an OOM at 100 TB), and AQE converts it to a
     broadcast join at runtime iff the materialized array table actually
     fits under ``autoBroadcastJoinThreshold``."""
-    a = sh_arr.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("__sa"))
-    b = sh_arr.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("__sb"))
+    a = sh_arr.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("__sa"))
+    b = sh_arr.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("__sb"))
     n_inter = F.size(F.array_intersect(F.col("__sa"), F.col("__sb")))
     denom = (F.size("__sa") + F.size("__sb") - n_inter).cast("double")
     # guard 0/0 (two empty sets): NaN compares GREATER than any double

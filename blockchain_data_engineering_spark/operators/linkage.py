@@ -146,16 +146,12 @@ def best_match(
     )
 
 
-def entity_clusters(
-    pairs: DataFrame,
-    left_col: str = "name_a",
-    right_col: str = "name_b",
-    rounds: int = 3,
-) -> DataFrame:
-    """Matched pairs → entity clusters: the transitive-closure step
-    every production ER pipeline runs after pair verification (A≈B and
-    B≈C put A, B, C in ONE cluster even though A–C never met in any
-    block). Implemented as connected components over the match graph
+def entity_clusters(pairs: DataFrame, rounds: int = 3) -> DataFrame:
+    """Matched pairs ``(name_a, name_b)`` → entity clusters: the
+    transitive-closure step every production ER pipeline runs after
+    pair verification (A≈B and B≈C put A, B, C in ONE cluster even
+    though A–C never met in any block). Implemented as connected
+    components over the match graph
     (``operators.graph.connected_components_pointer_jump`` — min-label
     propagate + pointer jump, so ``rounds`` rounds cover chain
     diameters ~2^(rounds+1)−2, far beyond any plausible name-variant
@@ -179,7 +175,7 @@ def entity_clusters(
     # loop's edge AND node derivations — persist it once or every
     # reference re-runs the verification joins
     edges = (
-        pairs.select(F.col(left_col).alias("src"), F.col(right_col).alias("dst"))
+        pairs.select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
         .persist()
     )
     # read twice: label projection + cluster sizes

@@ -112,7 +112,8 @@ def emb_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sign-LSH ANN: bucket every vector by an 8-bit random-hyperplane sign
 # signature (Rademacher planes derived from md5 — reproducible in SQL),
 # exact cosine only WITHIN buckets, top-3 per vector. The bucket join
-# is the 100 TB trick: candidates scale with collisions, not N².
+# is the 100 TB trick: candidates scale with collisions, not N². The
+# operator is the multi-table one below with a single 8-plane table.
 # ---------------------------------------------------------------------------
 def _lsh_oracle() -> str:
     k = 3
@@ -181,7 +182,7 @@ def _lsh_oracle() -> str:
 @query("sim_lsh_ann", oracle=_lsh_oracle())
 def sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    return SIM.lsh_ann_topk(emb, k=3, n_planes=N_PLANES, dim=DIM)
+    return SIM.lsh_ann_topk_multitable(emb, k=3, n_tables=1, n_planes=N_PLANES)
 
 
 # ---------------------------------------------------------------------------
@@ -388,7 +389,7 @@ def _lsh_multitable_oracle() -> str:
 def sim_lsh_ann_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     return SIM.lsh_ann_topk_multitable(
-        emb, k=3, n_tables=LSH_TABLES, n_planes=LSH_TABLE_PLANES, dim=DIM
+        emb, k=3, n_tables=LSH_TABLES, n_planes=LSH_TABLE_PLANES
     )
 
 
@@ -739,7 +740,6 @@ def sim_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         iterations=PQ_ITERS,
         k=3,
         n_queries=N_QUERIES,
-        dim=DIM,
         rerank_top=PQ_RERANK,
     )
 
@@ -771,7 +771,7 @@ RP_DIM = 8
 )
 def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    return SIM.random_projection_quantized(emb, out_dim=RP_DIM, dim=DIM)
+    return SIM.random_projection_quantized(emb, out_dim=RP_DIM)
 
 
 # ---------------------------------------------------------------------------
@@ -904,4 +904,4 @@ def pipeline_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return SIM.quantize_int8(emb, id_col="vec_id", vec_col="embedding")
+    return SIM.quantize_int8(emb)

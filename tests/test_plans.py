@@ -82,9 +82,11 @@ def test_no_python_udfs_on_relational_paths(spark, sf_dir):
     # every relational/domain/graph/text query must stay JVM-side; the
     # only sanctioned Python is the explicit pandas escape hatch, the
     # multimodal codec seam, and dense vector math (Arrow-batched GEMM
-    # in the ANN path — no efficient Catalyst expression exists)
+    # in the ANN path and the random projection that shares its sign
+    # kernel — no efficient Catalyst expression exists)
     allowed_python = {"applyinpandas_demean", "multimodal_feature_extract",
                       "multimodal_frame_sample", "sim_lsh_ann_multitable",
+                      "sim_lsh_ann", "emb_random_projection",
                       "sim_semantic_dedup"}
     # BroadcastNestedLoopJoin is allowed ONLY where the broadcast side
     # is bounded by construction (audited): a 1-row scalar aggregate
@@ -237,21 +239,21 @@ def test_ivf_centroid_set_is_fixed_k(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     k = 8
     n1 = (
-        SIM.ivf_assign(emb, n_centroids=k)
+        SIM.ivf_probe(emb, n_centroids=k, nprobe=1)
         .select("centroid_id").distinct().count()
     )
     doubled = emb.unionByName(
         emb.select((F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding")
     )
     n2 = (
-        SIM.ivf_assign(doubled, n_centroids=k)
+        SIM.ivf_probe(doubled, n_centroids=k, nprobe=1)
         .select("centroid_id").distinct().count()
     )
     assert n1 <= k and n2 <= k, (n1, n2)
 
     buf = io.StringIO()
     with redirect_stdout(buf):
-        SIM.ivf_assign(emb, n_centroids=k).explain("formatted")
+        SIM.ivf_probe(emb, n_centroids=k, nprobe=1).explain("formatted")
     plan = buf.getvalue()
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
 

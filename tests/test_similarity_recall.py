@@ -47,7 +47,9 @@ def test_multitable_lsh_recall_floor(emb, exact3):
 def test_multitable_beats_single_table(emb, exact3):
     # the single 8-bit table measures 0.022 — the multitable union is
     # the difference between "an index" and "a hash partitioner"
-    single = _recall(SIM.lsh_ann_topk(emb, k=3, n_planes=8), exact3)
+    single = _recall(
+        SIM.lsh_ann_topk_multitable(emb, k=3, n_tables=1, n_planes=8), exact3
+    )
     multi = _recall(
         SIM.lsh_ann_topk_multitable(emb, k=3, n_tables=16, n_planes=4), exact3
     )
@@ -127,11 +129,11 @@ def test_random_projection_matches_numpy_and_preserves_distances(spark, sf_dir):
     rows = emb.select("vec_id", "embedding").collect()
     X = np.array([r["embedding"] for r in rows], dtype=np.float64)
     ids = [r["vec_id"] for r in rows]
-    S = np.array(plane_signs(8, 64), dtype=np.int64)  # (8, 64)
+    S = np.array(plane_signs(8), dtype=np.int64)  # (8, 64)
     Xq = np.floor(X * 1e12 + 0.5).astype(np.int64)
     expect = (Xq @ S.T).astype(np.float64) / 1e12  # (n, 8)
 
-    got = random_projection_quantized(emb, out_dim=8, dim=64).collect()
+    got = random_projection_quantized(emb, out_dim=8).collect()
     by_key = {(r["vec_id"], r["j"]): r["comp"] for r in got}
     assert len(by_key) == len(ids) * 8
     for a, vid in enumerate(ids):
@@ -188,3 +190,33 @@ def test_hard_negatives_are_cross_label_and_hardest(spark):
     assert all(r["neg_label"] != 0 for r in out)
     assert out[0]["cand_id"] == 2 and out[0]["rank"] == 1
     assert 1 not in {r["cand_id"] for r in out}  # same-label skipped
+
+
+def test_null_embedding_drops_out_of_the_gemm_kernels(spark):
+    """A NULL embedding row must neither fail the Arrow GEMM kernels
+    nor collide with real vectors: the LSH index and the random
+    projection give the NULL row no output and leave every other row
+    as it is without it, like the column kernels (posexplode of NULL
+    is no rows)."""
+    import numpy as np
+
+    rng = np.random.RandomState(11)
+    rows = [(i, [float(x) for x in rng.uniform(-1, 1, 64)]) for i in range(20)]
+    df = spark.createDataFrame(
+        rows + [(20, None)], "vec_id long, embedding array<double>"
+    )
+    clean = df.where(F.col("vec_id") < 20)
+
+    def lsh(frame):
+        out = SIM.lsh_ann_topk_multitable(frame, k=3, n_tables=4, n_planes=2)
+        return sorted(map(tuple, out.collect()))
+
+    got = lsh(df)
+    assert got and got == lsh(clean)
+    assert 20 not in {r[0] for r in got} | {r[1] for r in got}
+
+    proj = SIM.random_projection_quantized(df, out_dim=8).collect()
+    assert len(proj) == 20 * 8
+    assert sorted(map(tuple, proj)) == sorted(
+        map(tuple, SIM.random_projection_quantized(clean, out_dim=8).collect())
+    )

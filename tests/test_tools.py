@@ -65,9 +65,12 @@ def test_profile_counts_the_jobs_and_stages_of_one_job_group(spark):
     try:
         rdd = sc.parallelize(range(8), 2)
         rdd.count()  # one job, one stage
-        rdd.map(lambda x: (x % 2, x)).reduceByKey(lambda a, b: a + b).collect()
+        sums = rdd.map(lambda x: (x % 2, x)).reduceByKey(lambda a, b: a + b)
+        sums.collect()  # one job, a map and a result stage
+        # the shuffle is already written: its map stage is skipped
+        sums.count()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
     spark.range(3).collect()  # outside the group: not counted
-    assert jobs_and_stages(sc, group) == (2, 3)
+    assert jobs_and_stages(sc, group) == (3, 4, 1)

@@ -9,8 +9,10 @@ settle, the sink — to ``plans/<query>.txt``. It then times ``N`` more
 build+sink runs, each under its own job group, and prints the samples,
 their min, the generated classes each run compiled with the Janino
 time they took (``0/0ms`` once a query's code is in the codegen cache)
-and the Spark jobs and stages each run started (``jobs/stages``,
-skipped stages included). The input scale comes from
+and the Spark jobs and stages each run started (``jobs/stages``, the
+stages that ran; ``skipped=`` counts the stages a job listed but did
+not run because an earlier job had written their shuffle output). The
+input scale comes from
 ``SPARK_GRAFT_SF_DIR`` (default sf0.1), the core count from
 ``SPARK_GRAFT_CPUS``.
 """
@@ -41,16 +43,26 @@ def _sink(spark, fn) -> None:
     fn(spark, DEFAULT_SF_DIR).write.format("noop").mode("overwrite").save()
 
 
-def jobs_and_stages(sc, group: str) -> tuple[int, int]:
-    """(jobs, distinct stages) that ran under job group ``group``, read
-    from the status tracker, which keeps them with the UI off (up to
-    ``spark.ui.retainedJobs`` jobs)."""
+def jobs_and_stages(sc, group: str) -> tuple[int, int, int]:
+    """(jobs, stages that ran, stages skipped) under job group
+    ``group``, read from the status tracker, which keeps them with the
+    UI off (up to ``spark.ui.retainedJobs`` jobs). A job lists the map
+    stages of every shuffle it reads; when an earlier job already wrote
+    that shuffle, Spark gives the stage a new id and never submits it.
+    Such a skipped stage has no submission time, so it counts apart:
+    whether AQE's final job finds a map stage still registered or
+    re-lists it is timing, not plan."""
     # jobs reach the tracker through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
     stages = {s for j in jobs if (info := tracker.getJobInfo(j)) for s in info.stageIds}
-    return len(jobs), len(stages)
+    ran = {
+        s
+        for s in stages
+        if (info := tracker._jtracker.getStageInfo(s)) and info.submissionTime() > 0
+    }
+    return len(jobs), len(ran), len(stages - ran)
 
 
 def main() -> None:
@@ -75,7 +87,7 @@ def main() -> None:
                 # scan locations name the input dir, not this host's path
                 plan = plan.replace(DEFAULT_SF_DIR.rstrip("/"), "$SPARK_GRAFT_SF_DIR")
                 fh.write(f"== execution {i} of {len(ran)} ==\n{plan}\n")
-        samples, compiles, counts = [], [], []
+        samples, compiles, counts, skipped = [], [], [], []
         for r in range(args.runs):
             group = f"profile:{name}:run{r}"
             sc.setJobGroup(group, group)
@@ -85,7 +97,9 @@ def main() -> None:
             samples.append(time.perf_counter() - t0)
             n1, ms1 = codegen_compiles(spark)
             compiles.append(f"{n1 - n0}/{ms1 - ms0:.0f}ms")
-            counts.append("%d/%d" % jobs_and_stages(sc, group))
+            jobs, stages, skip = jobs_and_stages(sc, group)
+            counts.append(f"{jobs}/{stages}")
+            skipped.append(str(skip))
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
         print(
@@ -94,6 +108,7 @@ def main() -> None:
             f"min={min(samples, default=float('nan')):.3f} "
             f"compiles=[{', '.join(compiles)}] "
             f"jobs/stages=[{', '.join(counts)}] "
+            f"skipped=[{', '.join(skipped)}] "
             f"load1m={os.getloadavg()[0]:.1f}",
             flush=True,
         )
