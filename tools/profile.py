@@ -12,9 +12,8 @@ time they took (``0/0ms`` once a query's code is in the codegen cache)
 and the Spark jobs and stages each run started (``jobs/stages``, the
 stages that ran; ``skipped=`` counts the stages a job listed but did
 not run because an earlier job had written their shuffle output). The
-input scale comes from
-``SPARK_GRAFT_SF_DIR`` (default sf0.1), the core count from
-``SPARK_GRAFT_CPUS``.
+input scale comes from ``SPARK_GRAFT_SF_DIR`` (default sf0.1), the
+core count from ``SPARK_GRAFT_CPUS``.
 """
 
 from __future__ import annotations
