@@ -397,66 +397,6 @@ def distribution_drift_tvd(
     )
 
 
-def distribution_drift_tvd_sql(
-    value_sql: str,
-    ref_table_sql: str,
-    cur_table_sql: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`distribution_drift_tvd` — same category
-    grain, same exact integer numerator; ``tvd_num`` serializes as
-    VARCHAR. ``ref_table_sql``/``cur_table_sql`` are FROM-able
-    fragments (a table name or a parenthesized subquery)."""
-    keyed = list(keys)
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    part = f"PARTITION BY {kcols}" if keyed else "PARTITION BY 1"
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_v = f"{kcols}, v" if keyed else "v"
-    using = f"USING ({kpre}v)" if keyed else "USING (v)"
-    return f"""
-    WITH ref_counts AS (
-      SELECT {kpre}{value_sql} AS v, CAST(count(*) AS BIGINT) AS r
-      FROM {ref_table_sql}
-      WHERE ({value_sql}) IS NOT NULL{key_nn}
-      GROUP BY {kgrp_v}
-    ),
-    cur_counts AS (
-      SELECT {kpre}{value_sql} AS v, CAST(count(*) AS BIGINT) AS c
-      FROM {cur_table_sql}
-      WHERE ({value_sql}) IS NOT NULL{key_nn}
-      GROUP BY {kgrp_v}
-    ),
-    cats AS (
-      SELECT {kpre}coalesce(r, 0) AS r, coalesce(c, 0) AS c
-      FROM ref_counts FULL OUTER JOIN cur_counts {using}
-    ),
-    withtot AS (
-      SELECT {kpre}r, c,
-             CAST(sum(r) OVER ({part}) AS BIGINT) AS nr,
-             CAST(sum(c) OVER ({part}) AS BIGINT) AS nc
-      FROM cats
-    ),
-    agg AS (
-      SELECT {kpre}
-             CAST(any_value(nr) AS BIGINT) AS n_ref,
-             CAST(any_value(nc) AS BIGINT) AS n_cur,
-             CAST(count(*) AS BIGINT) AS n_categories,
-             coalesce(sum(abs(r::HUGEINT * nc - c::HUGEINT * nr)), 0)
-               AS tvd_num
-      FROM withtot {grp}
-    )
-    SELECT {kpre}n_ref, n_cur, n_categories,
-           CAST(tvd_num AS VARCHAR) AS tvd_num,
-           CASE WHEN n_ref > 0 AND n_cur > 0 THEN
-             CAST(tvd_num AS DOUBLE)
-               / CAST(2 * n_ref::HUGEINT * n_cur AS DOUBLE)
-           END AS tvd
-    FROM agg
-    """
-
-
 # PSI log-quanta: round(10^12·ln(i)) for i on the share grid,
 # precomputed ONCE in Python and embedded as integer LITERALS in both
 # engines — constants of the metric, never an engine log() whose low
@@ -616,84 +556,6 @@ def distribution_psi(
     )
 
 
-def distribution_psi_sql(
-    value_sql: str,
-    ref_table_sql: str,
-    cur_table_sql: str,
-    keys: Sequence[str] = (),
-    share_grid: int = 1000,
-) -> str:
-    """DuckDB twin of :func:`distribution_psi` — same category grain,
-    same quantization, the SAME literal ln table as a VALUES relation
-    joined at category grain; ``psi_num`` serializes as VARCHAR."""
-    tab = psi_ln_table(share_grid)
-    g = int(share_grid)
-    vals = ", ".join(f"({i + 1}, {t}::BIGINT)" for i, t in enumerate(tab))
-    keyed = list(keys)
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    part = f"PARTITION BY {kcols}" if keyed else "PARTITION BY 1"
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_v = f"{kcols}, v" if keyed else "v"
-    using = f"USING ({kpre}v)" if keyed else "USING (v)"
-    return f"""
-    WITH ln_tab AS (SELECT * FROM (VALUES {vals}) AS t(i, lnv)),
-    ref_counts AS (
-      SELECT {kpre}{value_sql} AS v, CAST(count(*) AS BIGINT) AS r
-      FROM {ref_table_sql}
-      WHERE ({value_sql}) IS NOT NULL{key_nn}
-      GROUP BY {kgrp_v}
-    ),
-    cur_counts AS (
-      SELECT {kpre}{value_sql} AS v, CAST(count(*) AS BIGINT) AS c
-      FROM {cur_table_sql}
-      WHERE ({value_sql}) IS NOT NULL{key_nn}
-      GROUP BY {kgrp_v}
-    ),
-    cats AS (
-      SELECT {kpre}coalesce(r, 0) AS r, coalesce(c, 0) AS c
-      FROM ref_counts FULL OUTER JOIN cur_counts {using}
-    ),
-    withtot AS (
-      SELECT {kpre}r, c,
-             CAST(sum(r) OVER ({part}) AS BIGINT) AS nr,
-             CAST(sum(c) OVER ({part}) AS BIGINT) AS nc
-      FROM cats
-    ),
-    quantized AS (
-      SELECT {kpre}nr, nc,
-             CASE WHEN nr > 0 AND nc > 0 THEN
-               greatest(1, (r::HUGEINT * {g}) // nr) END AS qr,
-             CASE WHEN nr > 0 AND nc > 0 THEN
-               greatest(1, (c::HUGEINT * {g}) // nc) END AS qc
-      FROM withtot
-    ),
-    terms AS (
-      SELECT {kpre}nr, nc,
-             (q.qc - q.qr)::HUGEINT * (tc.lnv - tr.lnv) AS t
-      FROM quantized q
-      LEFT JOIN ln_tab tr ON tr.i = q.qr
-      LEFT JOIN ln_tab tc ON tc.i = q.qc
-    ),
-    agg AS (
-      SELECT {kpre}
-             CAST(any_value(nr) AS BIGINT) AS n_ref,
-             CAST(any_value(nc) AS BIGINT) AS n_cur,
-             CAST(count(*) AS BIGINT) AS n_categories,
-             coalesce(sum(t), 0) AS psi_num
-      FROM terms {grp}
-    )
-    SELECT {kpre}n_ref, n_cur, n_categories,
-           CAST(psi_num AS VARCHAR) AS psi_num,
-           CASE WHEN n_ref > 0 AND n_cur > 0 THEN
-             CAST(psi_num AS DOUBLE)
-               / CAST({g}::HUGEINT * {_PSI_LN_SCALE} AS DOUBLE)
-           END AS psi
-    FROM agg
-    """
-
-
 def distribution_kl(
     ref: DataFrame,
     cur: DataFrame,
@@ -801,88 +663,6 @@ def distribution_kl(
     )
 
 
-def distribution_kl_sql(
-    value_sql: str,
-    ref_table_sql: str,
-    cur_table_sql: str,
-    keys: Sequence[str] = (),
-    share_grid: int = 1000,
-) -> str:
-    """DuckDB twin of :func:`distribution_kl` — same category grain,
-    same asymmetric quantization (cur unclamped, ref eps-filled), the
-    SAME literal ln table as a VALUES relation; ``kl_num`` serializes
-    as VARCHAR."""
-    tab = psi_ln_table(share_grid)
-    g = int(share_grid)
-    vals = ", ".join(f"({i + 1}, {t}::BIGINT)" for i, t in enumerate(tab))
-    keyed = list(keys)
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    part = f"PARTITION BY {kcols}" if keyed else "PARTITION BY 1"
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_v = f"{kcols}, v" if keyed else "v"
-    using = f"USING ({kpre}v)" if keyed else "USING (v)"
-    return f"""
-    WITH ln_tab AS (SELECT * FROM (VALUES {vals}) AS t(i, lnv)),
-    ref_counts AS (
-      SELECT {kpre}{value_sql} AS v, CAST(count(*) AS BIGINT) AS r
-      FROM {ref_table_sql}
-      WHERE ({value_sql}) IS NOT NULL{key_nn}
-      GROUP BY {kgrp_v}
-    ),
-    cur_counts AS (
-      SELECT {kpre}{value_sql} AS v, CAST(count(*) AS BIGINT) AS c
-      FROM {cur_table_sql}
-      WHERE ({value_sql}) IS NOT NULL{key_nn}
-      GROUP BY {kgrp_v}
-    ),
-    cats AS (
-      SELECT {kpre}coalesce(r, 0) AS r, coalesce(c, 0) AS c
-      FROM ref_counts FULL OUTER JOIN cur_counts {using}
-    ),
-    withtot AS (
-      SELECT {kpre}r, c,
-             CAST(sum(r) OVER ({part}) AS BIGINT) AS nr,
-             CAST(sum(c) OVER ({part}) AS BIGINT) AS nc
-      FROM cats
-    ),
-    quantized AS (
-      SELECT {kpre}nr, nc,
-             CASE WHEN nr > 0 AND nc > 0 THEN
-               greatest(1, (r::HUGEINT * {g}) // nr) END AS qr,
-             CASE WHEN nr > 0 AND nc > 0 THEN
-               (c::HUGEINT * {g}) // nc END AS qc
-      FROM withtot
-    ),
-    terms AS (
-      SELECT {kpre}nr, nc,
-             CASE WHEN q.qr IS NULL OR q.qc IS NULL THEN NULL
-                  WHEN q.qc = 0 THEN 0::HUGEINT
-                  ELSE q.qc * (tc.lnv - tr.lnv)::HUGEINT
-             END AS t
-      FROM quantized q
-      LEFT JOIN ln_tab tr ON tr.i = q.qr
-      LEFT JOIN ln_tab tc ON tc.i = q.qc
-    ),
-    agg AS (
-      SELECT {kpre}
-             CAST(any_value(nr) AS BIGINT) AS n_ref,
-             CAST(any_value(nc) AS BIGINT) AS n_cur,
-             CAST(count(*) AS BIGINT) AS n_categories,
-             coalesce(sum(t), 0) AS kl_num
-      FROM terms {grp}
-    )
-    SELECT {kpre}n_ref, n_cur, n_categories,
-           CAST(kl_num AS VARCHAR) AS kl_num,
-           CASE WHEN n_ref > 0 AND n_cur > 0 THEN
-             CAST(kl_num AS DOUBLE)
-               / CAST({g}::HUGEINT * {_PSI_LN_SCALE} AS DOUBLE)
-           END AS kl
-    FROM agg
-    """
-
-
 def distribution_drift_explain(
     ref: DataFrame,
     cur: DataFrame,
@@ -986,85 +766,6 @@ def distribution_drift_explain(
         psi_term.alias("psi_term_num"),
         kl_term.alias("kl_term_num"),
     )
-
-
-def distribution_drift_explain_sql(
-    value_sql: str,
-    ref_table_sql: str,
-    cur_table_sql: str,
-    keys: Sequence[str] = (),
-    share_grid: int = 1000,
-) -> str:
-    """DuckDB twin of :func:`distribution_drift_explain` — same
-    category grain, same three quantized terms, the SAME literal ln
-    table; term columns serialize as VARCHAR."""
-    tab = psi_ln_table(share_grid)
-    g = int(share_grid)
-    vals = ", ".join(f"({i + 1}, {t}::BIGINT)" for i, t in enumerate(tab))
-    keyed = list(keys)
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    part = f"PARTITION BY {kcols}" if keyed else "PARTITION BY 1"
-    kgrp_v = f"{kcols}, v" if keyed else "v"
-    using = f"USING ({kpre}v)" if keyed else "USING (v)"
-    return f"""
-    WITH ln_tab AS (SELECT * FROM (VALUES {vals}) AS t(i, lnv)),
-    ref_counts AS (
-      SELECT {kpre}{value_sql} AS v, CAST(count(*) AS BIGINT) AS r
-      FROM {ref_table_sql}
-      WHERE ({value_sql}) IS NOT NULL{key_nn}
-      GROUP BY {kgrp_v}
-    ),
-    cur_counts AS (
-      SELECT {kpre}{value_sql} AS v, CAST(count(*) AS BIGINT) AS c
-      FROM {cur_table_sql}
-      WHERE ({value_sql}) IS NOT NULL{key_nn}
-      GROUP BY {kgrp_v}
-    ),
-    cats AS (
-      SELECT {kpre}v, coalesce(r, 0) AS r, coalesce(c, 0) AS c
-      FROM ref_counts FULL OUTER JOIN cur_counts {using}
-    ),
-    withtot AS (
-      SELECT {kpre}v, r, c,
-             CAST(sum(r) OVER ({part}) AS BIGINT) AS nr,
-             CAST(sum(c) OVER ({part}) AS BIGINT) AS nc
-      FROM cats
-    ),
-    quantized AS (
-      SELECT {kpre}v, r, c, nr, nc,
-             CASE WHEN nr > 0 AND nc > 0 THEN
-               greatest(1, (r::HUGEINT * {g}) // nr) END AS qr,
-             CASE WHEN nr > 0 AND nc > 0 THEN
-               greatest(1, (c::HUGEINT * {g}) // nc) END AS qc,
-             CASE WHEN nr > 0 AND nc > 0 THEN
-               (c::HUGEINT * {g}) // nc END AS qcr
-      FROM withtot
-    )
-    SELECT {kpre}q.v AS value, q.r AS n_ref_cat, q.c AS n_cur_cat,
-           q.nr AS n_ref, q.nc AS n_cur,
-           CASE WHEN q.nr > 0 AND q.nc > 0 THEN
-             CAST(q.c AS DOUBLE) / CAST(q.nc AS DOUBLE)
-             - CAST(q.r AS DOUBLE) / CAST(q.nr AS DOUBLE)
-           END AS share_delta,
-           CASE WHEN q.nr > 0 AND q.nc > 0 THEN
-             CAST(abs(q.r::HUGEINT * q.nc - q.c::HUGEINT * q.nr)
-                  AS VARCHAR)
-           END AS tvd_term_num,
-           CASE WHEN q.nr > 0 AND q.nc > 0 THEN
-             CAST((q.qc - q.qr)::HUGEINT * (tc.lnv - tr.lnv) AS VARCHAR)
-           END AS psi_term_num,
-           CASE WHEN q.nr > 0 AND q.nc > 0 THEN
-             CAST(CASE WHEN q.qcr > 0
-                  THEN q.qcr * (tcr.lnv - tr.lnv)::HUGEINT
-                  ELSE 0 END AS VARCHAR)
-           END AS kl_term_num
-    FROM quantized q
-    LEFT JOIN ln_tab tr ON tr.i = q.qr
-    LEFT JOIN ln_tab tc ON tc.i = q.qc
-    LEFT JOIN ln_tab tcr ON tcr.i = q.qcr
-    """
 
 
 def distribution_js(
@@ -1190,93 +891,3 @@ def distribution_js(
     )
 
 
-def distribution_js_sql(
-    value_sql: str,
-    ref_table_sql: str,
-    cur_table_sql: str,
-    keys: Sequence[str] = (),
-    share_grid: int = 1000,
-) -> str:
-    """DuckDB twin of :func:`distribution_js` — same grain, same
-    quantization, the SAME 2G-entry literal ln table as a VALUES
-    relation; ``js_num`` serializes as VARCHAR."""
-    g = int(share_grid)
-    if not 2 <= g <= _PSI_GRID_MAX // 2:
-        raise ValueError(
-            f"share_grid must be in 2..{_PSI_GRID_MAX // 2}, got {g}"
-        )
-    tab = psi_ln_table(2 * g)
-    vals = ", ".join(f"({i + 1}, {t}::BIGINT)" for i, t in enumerate(tab))
-    keyed = list(keys)
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    part = f"PARTITION BY {kcols}" if keyed else "PARTITION BY 1"
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_v = f"{kcols}, v" if keyed else "v"
-    using = f"USING ({kpre}v)" if keyed else "USING (v)"
-    return f"""
-    WITH ln_tab AS (SELECT * FROM (VALUES {vals}) AS t(i, lnv)),
-    ref_counts AS (
-      SELECT {kpre}{value_sql} AS v, CAST(count(*) AS BIGINT) AS r
-      FROM {ref_table_sql}
-      WHERE ({value_sql}) IS NOT NULL{key_nn}
-      GROUP BY {kgrp_v}
-    ),
-    cur_counts AS (
-      SELECT {kpre}{value_sql} AS v, CAST(count(*) AS BIGINT) AS c
-      FROM {cur_table_sql}
-      WHERE ({value_sql}) IS NOT NULL{key_nn}
-      GROUP BY {kgrp_v}
-    ),
-    cats AS (
-      SELECT {kpre}coalesce(r, 0) AS r, coalesce(c, 0) AS c
-      FROM ref_counts FULL OUTER JOIN cur_counts {using}
-    ),
-    withtot AS (
-      SELECT {kpre}r, c,
-             CAST(sum(r) OVER ({part}) AS BIGINT) AS nr,
-             CAST(sum(c) OVER ({part}) AS BIGINT) AS nc
-      FROM cats
-    ),
-    quantized AS (
-      SELECT {kpre}nr, nc,
-             CASE WHEN nr > 0 AND nc > 0 THEN
-               (r::HUGEINT * {g}) // nr END AS qr,
-             CASE WHEN nr > 0 AND nc > 0 THEN
-               (c::HUGEINT * {g}) // nc END AS qc
-      FROM withtot
-    ),
-    terms AS (
-      SELECT {kpre}nr, nc,
-             CASE WHEN q.qr IS NULL OR q.qc IS NULL THEN NULL
-                  WHEN q.qr + q.qc = 0 THEN 0::HUGEINT
-                  ELSE
-               (CASE WHEN q.qr > 0
-                     THEN q.qr * (t2r.lnv - tm.lnv)::HUGEINT
-                     ELSE 0 END)
-             + (CASE WHEN q.qc > 0
-                     THEN q.qc * (t2c.lnv - tm.lnv)::HUGEINT
-                     ELSE 0 END)
-             END AS t
-      FROM quantized q
-      LEFT JOIN ln_tab t2r ON t2r.i = 2 * q.qr
-      LEFT JOIN ln_tab t2c ON t2c.i = 2 * q.qc
-      LEFT JOIN ln_tab tm ON tm.i = q.qr + q.qc
-    ),
-    agg AS (
-      SELECT {kpre}
-             CAST(any_value(nr) AS BIGINT) AS n_ref,
-             CAST(any_value(nc) AS BIGINT) AS n_cur,
-             CAST(count(*) AS BIGINT) AS n_categories,
-             coalesce(sum(t), 0) AS js_num
-      FROM terms {grp}
-    )
-    SELECT {kpre}n_ref, n_cur, n_categories,
-           CAST(js_num AS VARCHAR) AS js_num,
-           CASE WHEN n_ref > 0 AND n_cur > 0 THEN
-             CAST(js_num AS DOUBLE)
-               / CAST({2 * g}::HUGEINT * {_PSI_LN_SCALE} AS DOUBLE)
-           END AS js
-    FROM agg
-    """

@@ -189,60 +189,6 @@ def _per_score_counts(
     )
 
 
-def auc_exact_sql(
-    label_sql: str,
-    score_sql: str,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`auc_exact` — same doubled-rank algebra,
-    same NULL exclusion, same column names. HUGEINT intermediates;
-    ``auc_num``/``auc_den`` serialize as VARCHAR (the netflow_decimal
-    recipe: both engines print integers identically and the string
-    survives the driver's pandas round-trip losslessly), so the Spark
-    side of a gate query must cast its decimals to string too."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    part = f"PARTITION BY {kcols} " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    return f"""
-    WITH per_score AS (
-      SELECT {kpre}{score_sql} AS s,
-             sum(CASE WHEN {label_sql} THEN 1 ELSE 0 END) AS np,
-             sum(CASE WHEN {label_sql} THEN 0 ELSE 1 END) AS nn
-      FROM {table}
-      WHERE ({label_sql}) IS NOT NULL AND ({score_sql}) IS NOT NULL
-      GROUP BY {kpre.rstrip(", ") + ", " if keyed else ""}s
-    ),
-    ranked AS (
-      SELECT {kpre}np, nn,
-             coalesce(sum(np + nn) OVER ({part}ORDER BY s
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-      FROM per_score
-    ),
-    totals AS (
-      SELECT {kpre}
-             CAST(sum(np) AS BIGINT) AS n_pos,
-             CAST(sum(nn) AS BIGINT) AS n_neg,
-             sum(CAST(np AS HUGEINT) * (2 * cb + np + nn + 1))
-               AS rank2_sum
-      FROM ranked {grp}
-    )
-    SELECT {kpre}n_pos, n_neg,
-           CAST(rank2_sum - CAST(n_pos AS HUGEINT) * (n_pos + 1)
-                AS VARCHAR) AS auc_num,
-           CAST(2 * CAST(n_pos AS HUGEINT) * n_neg AS VARCHAR)
-             AS auc_den,
-           CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-             CAST(rank2_sum - CAST(n_pos AS HUGEINT) * (n_pos + 1)
-                  AS DOUBLE)
-               / CAST(2 * CAST(n_pos AS HUGEINT) * n_neg AS DOUBLE)
-           END AS auc
-    FROM totals
-    """
-
-
 def pr_curve(
     df: DataFrame,
     label: Column,
@@ -287,48 +233,6 @@ def pr_curve(
             n_pos > 0, tp.cast("double") / n_pos.cast("double")
         ).alias("recall"),
     )
-
-
-def pr_curve_sql(
-    label_sql: str,
-    score_sql: str,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`pr_curve` — same distinct-score grain,
-    same NULL exclusion, same column names."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    part = f"PARTITION BY {kcols} " if keyed else ""
-    return f"""
-    WITH per_score AS (
-      SELECT {kpre}{score_sql} AS s,
-             sum(CASE WHEN {label_sql} THEN 1 ELSE 0 END) AS np,
-             sum(CASE WHEN {label_sql} THEN 0 ELSE 1 END) AS nn
-      FROM {table}
-      WHERE ({label_sql}) IS NOT NULL AND ({score_sql}) IS NOT NULL
-      GROUP BY {kpre.rstrip(", ") + ", " if keyed else ""}s
-    ),
-    swept AS (
-      SELECT {kpre}s AS threshold,
-             CAST(sum(np) OVER ({part}ORDER BY s DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS BIGINT) AS tp,
-             CAST(sum(nn) OVER ({part}ORDER BY s DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS BIGINT) AS fp,
-             CAST(sum(np) OVER ({part.rstrip() or 'PARTITION BY 1'})
-               AS BIGINT) AS n_pos
-      FROM per_score
-    )
-    SELECT {kpre}threshold, tp, fp,
-           CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) AS precision,
-           CASE WHEN n_pos > 0
-                THEN CAST(tp AS DOUBLE) / CAST(n_pos AS DOUBLE)
-           END AS recall
-    FROM swept
-    """
 
 
 # Per-term quantization scale for average_precision: each threshold's
@@ -407,60 +311,6 @@ def average_precision(
             F.col("ap_num").cast("double") / den.cast("double"),
         ).alias("ap"),
     )
-
-
-def average_precision_sql(
-    label_sql: str,
-    score_sql: str,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`average_precision` — same quantized-term
-    algebra (HUGEINT product, ``//`` floor quotient), same NULL
-    exclusion; ``ap_num`` serializes as VARCHAR."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    part = f"PARTITION BY {kcols} " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    return f"""
-    WITH per_score AS (
-      SELECT {kpre}{score_sql} AS s,
-             sum(CASE WHEN {label_sql} THEN 1 ELSE 0 END) AS np,
-             sum(CASE WHEN {label_sql} THEN 0 ELSE 1 END) AS nn
-      FROM {table}
-      WHERE ({label_sql}) IS NOT NULL AND ({score_sql}) IS NOT NULL
-      GROUP BY {kpre.rstrip(", ") + ", " if keyed else ""}s
-    ),
-    swept AS (
-      SELECT {kpre}np,
-             CAST(sum(np) OVER ({part}ORDER BY s DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS BIGINT) AS tp,
-             CAST(sum(nn) OVER ({part}ORDER BY s DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS BIGINT) AS fp
-      FROM per_score
-    ),
-    totals AS (
-      -- coalesce: the GLOBAL aggregate over an empty/filtered-out
-      -- input emits 0s, never NULLs (matches the Spark twin)
-      SELECT {kpre}
-             CAST(coalesce(sum(np), 0) AS BIGINT) AS n_pos,
-             CAST(count(*) AS BIGINT) AS n_thresholds,
-             coalesce(sum((CAST(np AS HUGEINT) * tp * {_AP_SCALE})
-                          // (tp + fp)), 0)
-               AS ap_num
-      FROM swept {grp}
-    )
-    SELECT {kpre}n_pos, n_thresholds,
-           CAST(ap_num AS VARCHAR) AS ap_num,
-           CASE WHEN n_pos > 0 THEN
-             CAST(ap_num AS DOUBLE)
-               / CAST(CAST(n_pos AS HUGEINT) * {_AP_SCALE} AS DOUBLE)
-           END AS ap
-    FROM totals
-    """
 
 
 # NDCG discount quanta: 10^12/log2(1+r) for rank r, precomputed ONCE
@@ -789,77 +639,6 @@ def multiclass_macro_f1(
     )
 
 
-def multiclass_macro_f1_from_cells_sql(
-    cells_sql: str,
-    actual_col: str = "actual",
-    predicted_col: str = "predicted",
-    n_col: str = "n",
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`multiclass_macro_f1` over cells (``n``
-    given) — the oracle for MAINTAINED cell stores (``streaming/sketches.py``):
-    ``cells_sql`` is a FROM-able fragment exposing (actual,
-    predicted, count) rows, possibly with duplicates (per-batch
-    deltas) — they re-aggregate exactly as the Spark store read does,
-    then the quantized-F1 algebra of :func:`multiclass_macro_f1` runs
-    over the summed cells (the ``cohens_kappa_from_cells_sql``
-    pattern); facts read as cells with ``n = 1``."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_ap = f"{kcols}, a, p" if keyed else "a, p"
-    kgrp_a = f"{kcols}, a" if keyed else "a"
-    kgrp_p = f"{kcols}, p" if keyed else "p"
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    kjoin = " AND ".join(f"ba.{c} = bp.{c}" for c in keyed)
-    on = f"ba.a = bp.p{' AND ' + kjoin if keyed else ''}"
-    kpre_ba = ", ".join(f"ba.{c}" for c in keyed) + (", " if keyed else "")
-    return f"""
-    WITH cells AS (
-      SELECT {kpre}{actual_col} AS a, {predicted_col} AS p,
-             CAST(sum({n_col}) AS BIGINT) AS n
-      FROM {cells_sql}
-      WHERE ({actual_col}) IS NOT NULL AND ({predicted_col}) IS NOT NULL
-        {key_nn}
-      GROUP BY {kgrp_ap}
-    ),
-    by_actual AS (
-      SELECT {kpre}a, CAST(sum(n) AS BIGINT) AS support,
-             CAST(sum(CASE WHEN a = p THEN n ELSE 0 END) AS BIGINT) AS tp
-      FROM cells GROUP BY {kgrp_a}
-    ),
-    by_pred AS (
-      SELECT {kpre}p, CAST(sum(n) AS BIGINT) AS pred_total
-      FROM cells GROUP BY {kgrp_p}
-    ),
-    per_class AS (
-      SELECT {kpre_ba}ba.support, ba.tp,
-             coalesce(bp.pred_total, 0) AS pred_total
-      FROM by_actual ba LEFT JOIN by_pred bp ON {on}
-    ),
-    totals AS (
-      SELECT {kpre}
-             CAST(coalesce(sum(support), 0) AS BIGINT) AS n,
-             CAST(count(*) AS BIGINT) AS n_classes,
-             CAST(coalesce(sum(tp), 0) AS BIGINT) AS tp_sum,
-             coalesce(sum((2 * CAST(tp AS HUGEINT) * {_AP_SCALE})
-                 // (support + pred_total)), 0) AS macro_f1_num
-      FROM per_class {grp}
-    )
-    SELECT {kpre}n, n_classes,
-           CASE WHEN n > 0
-                THEN CAST(tp_sum AS DOUBLE) / CAST(n AS DOUBLE)
-           END AS accuracy,
-           CAST(macro_f1_num AS VARCHAR) AS macro_f1_num,
-           CASE WHEN n_classes > 0 THEN
-             CAST(macro_f1_num AS DOUBLE)
-               / CAST(CAST(n_classes AS HUGEINT) * {_AP_SCALE} AS DOUBLE)
-           END AS macro_f1
-    FROM totals
-    """
-
-
 def multiclass_class_report(
     df: DataFrame,
     actual: Column,
@@ -942,62 +721,6 @@ def multiclass_class_report(
         ).alias("f1"),
         f1_num.alias("f1_num"),
     )
-
-
-def multiclass_class_report_sql(
-    actual_sql: str,
-    predicted_sql: str,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`multiclass_class_report` — same cell
-    grain, same per-class integer algebra; ``f1_num`` serializes as
-    VARCHAR."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    kgrp_a = f"{kcols}, a" if keyed else "a"
-    kgrp_p = f"{kcols}, p" if keyed else "p"
-    kjoin = " AND ".join(f"ba.{c} = bp.{c}" for c in keyed)
-    on = f"ba.a = bp.p{' AND ' + kjoin if keyed else ''}"
-    kpre_ba = ", ".join(f"ba.{c}" for c in keyed) + (", " if keyed else "")
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    return f"""
-    WITH cells AS (
-      SELECT {kpre}{actual_sql} AS a, {predicted_sql} AS p,
-             count(*) AS n
-      FROM {table}
-      WHERE ({actual_sql}) IS NOT NULL AND ({predicted_sql}) IS NOT NULL
-        {key_nn}
-      GROUP BY {kgrp_a}, p
-    ),
-    by_actual AS (
-      SELECT {kpre}a, CAST(sum(n) AS BIGINT) AS support,
-             CAST(sum(CASE WHEN a = p THEN n ELSE 0 END) AS BIGINT) AS tp
-      FROM cells GROUP BY {kgrp_a}
-    ),
-    by_pred AS (
-      SELECT {kpre}p, CAST(sum(n) AS BIGINT) AS pred_total
-      FROM cells GROUP BY {kgrp_p}
-    ),
-    per_class AS (
-      SELECT {kpre_ba}ba.a AS class, ba.support, ba.tp,
-             coalesce(bp.pred_total, 0) AS pred_total
-      FROM by_actual ba LEFT JOIN by_pred bp ON {on}
-    )
-    SELECT {kpre}class, support, tp,
-           CAST(pred_total - tp AS BIGINT) AS fp,
-           CAST(support - tp AS BIGINT) AS fn,
-           CASE WHEN pred_total > 0 THEN
-             CAST(tp AS DOUBLE) / CAST(pred_total AS DOUBLE)
-           END AS precision,
-           CAST(tp AS DOUBLE) / CAST(support AS DOUBLE) AS recall,
-           2 * CAST(tp AS DOUBLE)
-             / CAST(support + pred_total AS DOUBLE) AS f1,
-           CAST((2 * CAST(tp AS HUGEINT) * {_AP_SCALE})
-                // (support + pred_total) AS VARCHAR) AS f1_num
-    FROM per_class
-    """
 
 
 def adjusted_rand_index(
@@ -1136,158 +859,6 @@ def adjusted_rand_index(
             ri_num.cast("double") / t.cast("double"),
         ).alias("rand_index"),
     )
-
-
-def adjusted_rand_sql(
-    actual_sql: str,
-    predicted_sql: str,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`adjusted_rand_index` — same cell grain
-    (NULL labels and NULL keys dropped), same cleared-binomial
-    integers; ``ari_num``/``ari_den`` serialize as VARCHAR."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_ap = f"{kcols}, a, p" if keyed else "a, p"
-    kgrp_a = f"{kcols}, a" if keyed else "a"
-    kgrp_p = f"{kcols}, p" if keyed else "p"
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    p2 = lambda c: f"(({c}::HUGEINT * ({c} - 1)) // 2)"  # noqa: E731
-    return f"""
-    WITH cells AS (
-      SELECT {kpre}{actual_sql} AS a, {predicted_sql} AS p,
-             CAST(count(*) AS BIGINT) AS n
-      FROM {table}
-      WHERE ({actual_sql}) IS NOT NULL AND ({predicted_sql}) IS NOT NULL{key_nn}
-      GROUP BY {kgrp_ap}
-    ),
-    by_a AS (
-      SELECT {kpre}a, CAST(sum(n) AS BIGINT) AS m
-      FROM cells GROUP BY {kgrp_a}
-    ),
-    by_p AS (
-      SELECT {kpre}p, CAST(sum(n) AS BIGINT) AS m
-      FROM cells GROUP BY {kgrp_p}
-    ),
-    tagged AS (
-      SELECT {kpre}n AS tn, {p2('n')} AS ts,
-             NULL::HUGEINT AS ta, NULL::HUGEINT AS tb,
-             0 AS ca, 0 AS cp
-      FROM cells
-      UNION ALL
-      SELECT {kpre}NULL, NULL, {p2('m')}, NULL, 1, 0 FROM by_a
-      UNION ALL
-      SELECT {kpre}NULL, NULL, NULL, {p2('m')}, 0, 1 FROM by_p
-    ),
-    agg AS (
-      SELECT {kpre}
-             CAST(coalesce(sum(tn), 0) AS BIGINT) AS n,
-             CAST(coalesce(sum(ca), 0) AS BIGINT) AS n_classes_actual,
-             CAST(coalesce(sum(cp), 0) AS BIGINT) AS n_classes_predicted,
-             coalesce(sum(ts), 0) AS s,
-             coalesce(sum(ta), 0) AS aa,
-             coalesce(sum(tb), 0) AS bb
-      FROM tagged {grp}
-    ),
-    terms AS (
-      SELECT {kpre}n, n_classes_actual, n_classes_predicted, s, aa, bb,
-             {p2('n')} AS t
-      FROM agg
-    )
-    SELECT {kpre}n, n_classes_actual, n_classes_predicted,
-           CAST(2 * t * s - 2 * aa * bb AS VARCHAR) AS ari_num,
-           CAST(t * (aa + bb) - 2 * aa * bb AS VARCHAR) AS ari_den,
-           CASE WHEN t * (aa + bb) - 2 * aa * bb <> 0 THEN
-             CAST(2 * t * s - 2 * aa * bb AS DOUBLE)
-               / CAST(t * (aa + bb) - 2 * aa * bb AS DOUBLE)
-           END AS ari,
-           CASE WHEN n >= 2 THEN
-             CAST(t + 2 * s - aa - bb AS DOUBLE) / CAST(t AS DOUBLE)
-           END AS rand_index
-    FROM terms
-    """
-
-
-def adjusted_rand_from_cells_sql(
-    cells_sql: str,
-    actual_col: str = "actual",
-    predicted_col: str = "predicted",
-    n_col: str = "n",
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`adjusted_rand_index` over cells (``n``
-    given) — the oracle for MAINTAINED cell stores (``streaming/sketches.py``):
-    ``cells_sql`` is a FROM-able fragment exposing (actual,
-    predicted, count) rows, possibly with duplicates (per-batch
-    deltas) — they re-aggregate exactly as the Spark store read does,
-    then the :func:`adjusted_rand_sql` algebra runs over the summed
-    cells (the ``cohens_kappa_from_cells_sql`` pattern)."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_ap = f"{kcols}, a, p" if keyed else "a, p"
-    kgrp_a = f"{kcols}, a" if keyed else "a"
-    kgrp_p = f"{kcols}, p" if keyed else "p"
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    p2 = lambda c: f"(({c}::HUGEINT * ({c} - 1)) // 2)"  # noqa: E731
-    return f"""
-    WITH cells AS (
-      SELECT {kpre}{actual_col} AS a, {predicted_col} AS p,
-             CAST(sum({n_col}) AS BIGINT) AS n
-      FROM {cells_sql}
-      WHERE ({actual_col}) IS NOT NULL AND ({predicted_col}) IS NOT NULL
-        {key_nn}
-      GROUP BY {kgrp_ap}
-    ),
-    by_a AS (
-      SELECT {kpre}a, CAST(sum(n) AS BIGINT) AS m
-      FROM cells GROUP BY {kgrp_a}
-    ),
-    by_p AS (
-      SELECT {kpre}p, CAST(sum(n) AS BIGINT) AS m
-      FROM cells GROUP BY {kgrp_p}
-    ),
-    tagged AS (
-      SELECT {kpre}n AS tn, {p2('n')} AS ts,
-             NULL::HUGEINT AS ta, NULL::HUGEINT AS tb,
-             0 AS ca, 0 AS cp
-      FROM cells
-      UNION ALL
-      SELECT {kpre}NULL, NULL, {p2('m')}, NULL, 1, 0 FROM by_a
-      UNION ALL
-      SELECT {kpre}NULL, NULL, NULL, {p2('m')}, 0, 1 FROM by_p
-    ),
-    agg AS (
-      SELECT {kpre}
-             CAST(coalesce(sum(tn), 0) AS BIGINT) AS n,
-             CAST(coalesce(sum(ca), 0) AS BIGINT) AS n_classes_actual,
-             CAST(coalesce(sum(cp), 0) AS BIGINT) AS n_classes_predicted,
-             coalesce(sum(ts), 0) AS s,
-             coalesce(sum(ta), 0) AS aa,
-             coalesce(sum(tb), 0) AS bb
-      FROM tagged {grp}
-    ),
-    terms AS (
-      SELECT {kpre}n, n_classes_actual, n_classes_predicted, s, aa, bb,
-             {p2('n')} AS t
-      FROM agg
-    )
-    SELECT {kpre}n, n_classes_actual, n_classes_predicted,
-           CAST(2 * t * s - 2 * aa * bb AS VARCHAR) AS ari_num,
-           CAST(t * (aa + bb) - 2 * aa * bb AS VARCHAR) AS ari_den,
-           CASE WHEN t * (aa + bb) - 2 * aa * bb <> 0 THEN
-             CAST(2 * t * s - 2 * aa * bb AS DOUBLE)
-               / CAST(t * (aa + bb) - 2 * aa * bb AS DOUBLE)
-           END AS ari,
-           CASE WHEN n >= 2 THEN
-             CAST(t + 2 * s - aa - bb AS DOUBLE) / CAST(t AS DOUBLE)
-           END AS rand_index
-    FROM terms
-    """
 
 
 def label_mutual_information(
@@ -1495,126 +1066,6 @@ def label_mutual_information(
     )
 
 
-def label_mi_sql(
-    actual_sql: str,
-    predicted_sql: str,
-    table: str,
-    keys: Sequence[str] = (),
-    share_grid: int = 1000,
-) -> str:
-    """DuckDB twin of :func:`label_mutual_information` — same cell
-    grain, same share quantization, the SAME literal ln table as a
-    VALUES relation; ``mi_num``/``ha_num``/``hp_num`` serialize as
-    VARCHAR."""
-    from blockchain_data_engineering_spark.operators.dq import (
-        psi_ln_table,
-    )
-
-    g = int(share_grid)
-    tab = psi_ln_table(g)
-    t_g = int(tab[g - 1])
-    vals = ", ".join(f"({i + 1}, {t}::BIGINT)" for i, t in enumerate(tab))
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_ap = f"{kcols}, a, p" if keyed else "a, p"
-    kgrp_a = f"{kcols}, a" if keyed else "a"
-    kgrp_p = f"{kcols}, p" if keyed else "p"
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    using_k = f"USING ({kcols})" if keyed else "ON 1 = 1"
-    using_ka = f"USING ({kpre}a)" if keyed else "USING (a)"
-    using_kp = f"USING ({kpre}p)" if keyed else "USING (p)"
-    tkpre = ", ".join(f"t.{c}" for c in keyed) + (", " if keyed else "")
-    scale = 10**12  # _PSI_LN_SCALE — the table's quantum
-    return f"""
-    WITH ln_tab AS (SELECT * FROM (VALUES {vals}) AS t(i, lnv)),
-    cells AS (
-      SELECT {kpre}{actual_sql} AS a, {predicted_sql} AS p,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM {table}
-      WHERE ({actual_sql}) IS NOT NULL AND ({predicted_sql}) IS NOT NULL
-        {key_nn}
-      GROUP BY {kgrp_ap}
-    ),
-    tot AS (
-      SELECT {kpre}CAST(coalesce(sum(cnt), 0) AS BIGINT) AS nt
-      FROM cells {grp}
-    ),
-    cells_t AS (
-      SELECT cells.*, tot.nt FROM cells JOIN tot {using_k}
-    ),
-    by_a AS (
-      SELECT {kpre}a,
-             (sum(cnt)::HUGEINT * {g}) // any_value(nt) AS qa
-      FROM cells_t GROUP BY {kgrp_a}
-    ),
-    by_a_l AS (
-      SELECT by_a.*, la.lnv AS la FROM by_a
-      LEFT JOIN ln_tab la ON la.i = by_a.qa
-    ),
-    by_p AS (
-      SELECT {kpre}p,
-             (sum(cnt)::HUGEINT * {g}) // any_value(nt) AS qp
-      FROM cells_t GROUP BY {kgrp_p}
-    ),
-    by_p_l AS (
-      SELECT by_p.*, lp.lnv AS lp FROM by_p
-      LEFT JOIN ln_tab lp ON lp.i = by_p.qp
-    ),
-    ha AS (
-      SELECT {kpre}CAST(count(*) AS BIGINT) AS n_classes_actual,
-             coalesce(sum(CASE WHEN qa > 0
-               THEN qa * ({t_g}::HUGEINT - la) ELSE 0 END), 0) AS ha_num
-      FROM by_a_l {grp}
-    ),
-    hp AS (
-      SELECT {kpre}CAST(count(*) AS BIGINT) AS n_classes_predicted,
-             coalesce(sum(CASE WHEN qp > 0
-               THEN qp * ({t_g}::HUGEINT - lp) ELSE 0 END), 0) AS hp_num
-      FROM by_p_l {grp}
-    ),
-    quant AS (
-      SELECT {kpre}a, p, (cnt::HUGEINT * {g}) // nt AS q
-      FROM cells_t
-    ),
-    mi AS (
-      SELECT {kpre}
-             coalesce(sum(CASE WHEN q > 0
-               THEN q * (lc.lnv - ba.la - bp.lp + {t_g}::HUGEINT)
-               ELSE 0 END), 0) AS mi_num
-      FROM quant
-      JOIN by_a_l ba {using_ka}
-      JOIN by_p_l bp {using_kp}
-      LEFT JOIN ln_tab lc ON lc.i = quant.q
-      {grp}
-    )
-    SELECT {tkpre}t.nt AS n,
-           coalesce(ha.n_classes_actual, 0) AS n_classes_actual,
-           coalesce(hp.n_classes_predicted, 0) AS n_classes_predicted,
-           CAST(coalesce(mi.mi_num, 0) AS VARCHAR) AS mi_num,
-           CAST(coalesce(ha.ha_num, 0) AS VARCHAR) AS ha_num,
-           CAST(coalesce(hp.hp_num, 0) AS VARCHAR) AS hp_num,
-           CASE WHEN t.nt > 0 THEN
-             CAST(coalesce(mi.mi_num, 0) AS DOUBLE)
-               / CAST({g}::HUGEINT * {scale} AS DOUBLE) END AS mi,
-           CASE WHEN t.nt > 0 THEN
-             CAST(coalesce(ha.ha_num, 0) AS DOUBLE)
-               / CAST({g}::HUGEINT * {scale} AS DOUBLE) END AS h_actual,
-           CASE WHEN t.nt > 0 THEN
-             CAST(coalesce(hp.hp_num, 0) AS DOUBLE)
-               / CAST({g}::HUGEINT * {scale} AS DOUBLE) END AS h_predicted,
-           CASE WHEN coalesce(ha.ha_num, 0) + coalesce(hp.hp_num, 0) <> 0
-             THEN CAST(2 * coalesce(mi.mi_num, 0) AS DOUBLE)
-               / CAST(coalesce(ha.ha_num, 0) + coalesce(hp.hp_num, 0)
-                      AS DOUBLE) END AS nmi
-    FROM tot t
-    LEFT JOIN mi {using_k}
-    LEFT JOIN ha {using_k}
-    LEFT JOIN hp {using_k}
-    """
-
-
 def brier_score(
     df: DataFrame,
     label: Column,
@@ -1668,43 +1119,6 @@ def brier_score(
             F.col("brier_num").cast("double") / den.cast("double"),
         ).alias("brier"),
     )
-
-
-def brier_score_sql(
-    label_sql: str,
-    score_q_sql: str,
-    s_max: int,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`brier_score` — same exact integer
-    algebra; ``brier_num`` serializes as VARCHAR."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    d = (
-        f"(CAST({score_q_sql} AS HUGEINT) - CASE WHEN {label_sql} "
-        f"THEN {int(s_max)} ELSE 0 END)"
-    )
-    return f"""
-    WITH totals AS (
-      SELECT {kpre}
-             CAST(count(*) AS BIGINT) AS n,
-             sum({d} * {d}) AS brier_num
-      FROM {table}
-      WHERE ({label_sql}) IS NOT NULL AND ({score_q_sql}) IS NOT NULL
-      {grp}
-    )
-    SELECT {kpre}n,
-           CAST(coalesce(brier_num, 0) AS VARCHAR) AS brier_num,
-           CASE WHEN n > 0 THEN
-             CAST(brier_num AS DOUBLE)
-               / CAST(CAST(n AS HUGEINT)
-                      * {int(s_max) * int(s_max)} AS DOUBLE)
-           END AS brier
-    FROM totals
-    """
 
 
 def rrf_constant(k: int, c: int = 60) -> int:
@@ -1979,59 +1393,6 @@ def _ece_totals(binned: DataFrame, keyed: list[str], s_max: int) -> DataFrame:
     )
 
 
-def ece_sql(
-    label_sql: str,
-    score_q_sql: str,
-    s_max: int,
-    n_bins: int,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`ece` — same bin assignment, same exact
-    integer numerator; ``ece_num`` serializes as VARCHAR."""
-    if n_bins < 1 or s_max < 1 or n_bins > s_max:
-        raise ValueError(
-            f"require 1 <= n_bins <= s_max, got n_bins={n_bins}, "
-            f"s_max={s_max} (see ece())"
-        )
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_b = f"{kcols}, b" if keyed else "b"
-    return f"""
-    WITH binned AS (
-      SELECT {kpre}
-             least((CAST({score_q_sql} AS HUGEINT) * {int(n_bins)})
-                     // {int(s_max)},
-                   {int(n_bins) - 1}) AS b,
-             CAST(count(*) AS BIGINT) AS nb,
-             CAST(sum(CASE WHEN {label_sql} THEN 1 ELSE 0 END)
-                  AS BIGINT) AS pos,
-             sum(CAST({score_q_sql} AS HUGEINT)) AS ssum
-      FROM {table}
-      WHERE ({label_sql}) IS NOT NULL AND ({score_q_sql}) IS NOT NULL
-        AND ({score_q_sql}) >= 0 AND ({score_q_sql}) <= {int(s_max)}
-      GROUP BY {kgrp_b}
-    ),
-    totals AS (
-      SELECT {kpre}
-             CAST(coalesce(sum(nb), 0) AS BIGINT) AS n,
-             CAST(count(*) AS BIGINT) AS n_bins_used,
-             coalesce(sum(abs({int(s_max)}::HUGEINT * pos - ssum)), 0)
-               AS ece_num
-      FROM binned {grp}
-    )
-    SELECT {kpre}n, n_bins_used,
-           CAST(ece_num AS VARCHAR) AS ece_num,
-           CASE WHEN n > 0 THEN
-             CAST(ece_num AS DOUBLE)
-               / CAST(CAST(n AS HUGEINT) * {int(s_max)} AS DOUBLE)
-           END AS ece
-    FROM totals
-    """
-
-
 def ece_top_label(
     df: DataFrame,
     item_col: str,
@@ -2110,47 +1471,6 @@ def ece_top_label(
         n_bins=n_bins,
         keys=keyed,
     )
-
-
-def ece_top_label_sql(
-    item_sql: str,
-    class_sql: str,
-    score_sql: str,
-    actual_sql: str,
-    s_max: int,
-    n_bins: int,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`ece_top_label` — same pre-argmax
-    filters, same (score DESC, class ASC) row_number tie-break
-    (scores floored via ``CAST(floor(·) AS BIGINT)`` to match
-    Spark's truncating cast — the :func:`log_loss_sql` convention),
-    then :func:`ece_sql` over the argmax rows."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    part = f"PARTITION BY {kpre}i" if keyed else "PARTITION BY i"
-    # no NULL-key exclusion: like ece, this plan has no keyed joins —
-    # NULL keys form their own window partition/group identically in
-    # both engines (the kendall convention applies only where
-    # sub-aggregates REJOIN on keys)
-    top = f"""(
-      SELECT {kpre}(c = act) AS hit, s FROM (
-        SELECT {kpre}i, c, s, act,
-               row_number() OVER ({part} ORDER BY s DESC, c ASC) AS rn
-        FROM (
-          SELECT {kpre}{item_sql} AS i, {class_sql} AS c,
-                 CAST(floor({score_sql}) AS BIGINT) AS s,
-                 {actual_sql} AS act
-          FROM {table}
-          WHERE ({item_sql}) IS NOT NULL AND ({class_sql}) IS NOT NULL
-            AND ({actual_sql}) IS NOT NULL AND ({score_sql}) IS NOT NULL
-            AND ({score_sql}) >= 0 AND ({score_sql}) <= {int(s_max)}
-        ) scored
-      ) ranked WHERE rn = 1
-    )"""
-    return ece_sql("hit", "s", s_max, n_bins, top, keyed)
 
 
 def ece_adaptive(
@@ -2235,74 +1555,6 @@ def ece_adaptive(
         F.sum("__ssum").cast("decimal(38,0)").alias("__ssum"),
     )
     return _ece_totals(binned, keyed, s_max)
-
-
-def ece_adaptive_sql(
-    label_sql: str,
-    score_q_sql: str,
-    s_max: int,
-    n_bins: int,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`ece_adaptive` — same distinct-score
-    grain, same rank-div bin edges (the ORDER BY key is unique per
-    group at this grain, so RANGE/ROWS framing differences cannot
-    bite), same exact numerator; ``ece_num`` serializes as VARCHAR."""
-    if n_bins < 1 or s_max < 1:
-        raise ValueError(
-            f"require n_bins >= 1 and s_max >= 1, got n_bins={n_bins}, "
-            f"s_max={s_max}"
-        )
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_s = f"{kcols}, s" if keyed else "s"
-    kgrp_b = f"{kcols}, b" if keyed else "b"
-    part = f"PARTITION BY {kcols}" if keyed else "PARTITION BY 1"
-    return f"""
-    WITH per_score AS (
-      SELECT {kpre}{score_q_sql} AS s,
-             CAST(count(*) AS BIGINT) AS cnt,
-             CAST(sum(CASE WHEN {label_sql} THEN 1 ELSE 0 END)
-                  AS BIGINT) AS pos,
-             sum(CAST({score_q_sql} AS HUGEINT)) AS ssum
-      FROM {table}
-      WHERE ({label_sql}) IS NOT NULL AND ({score_q_sql}) IS NOT NULL
-        AND ({score_q_sql}) >= 0 AND ({score_q_sql}) <= {int(s_max)}
-      GROUP BY {kgrp_s}
-    ),
-    with_bin AS (
-      SELECT {kpre}cnt, pos, ssum,
-             (((sum(cnt) OVER ({part} ORDER BY s) - cnt)::HUGEINT
-                 * {int(n_bins)})
-               // sum(cnt) OVER ({part})) AS b
-      FROM per_score
-    ),
-    binned AS (
-      SELECT {kpre}b,
-             CAST(sum(cnt) AS BIGINT) AS nb,
-             CAST(sum(pos) AS BIGINT) AS posb,
-             sum(ssum) AS ssumb
-      FROM with_bin GROUP BY {kgrp_b}
-    ),
-    totals AS (
-      SELECT {kpre}
-             CAST(coalesce(sum(nb), 0) AS BIGINT) AS n,
-             CAST(count(*) AS BIGINT) AS n_bins_used,
-             coalesce(sum(abs({int(s_max)}::HUGEINT * posb - ssumb)), 0)
-               AS ece_num
-      FROM binned {grp}
-    )
-    SELECT {kpre}n, n_bins_used,
-           CAST(ece_num AS VARCHAR) AS ece_num,
-           CASE WHEN n > 0 THEN
-             CAST(ece_num AS DOUBLE)
-               / CAST(CAST(n AS HUGEINT) * {int(s_max)} AS DOUBLE)
-           END AS ece
-    FROM totals
-    """
 
 
 def cohens_kappa(
@@ -2403,73 +1655,6 @@ def cohens_kappa(
     )
 
 
-def cohens_kappa_sql(
-    rater_a_sql: str,
-    rater_b_sql: str,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`cohens_kappa` — same cell grain, same
-    exact integer algebra; ``kappa_num``/``kappa_den`` serialize as
-    VARCHAR."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_ab = f"{kcols}, a, b" if keyed else "a, b"
-    kgrp_a = f"{kcols}, a" if keyed else "a"
-    kgrp_b = f"{kcols}, b" if keyed else "b"
-    using = f"USING ({kpre}l)" if keyed else "USING (l)"
-    join_keys = f"USING ({kcols})" if keyed else "ON 1 = 1"
-    return f"""
-    WITH cells AS (
-      SELECT {kpre}{rater_a_sql} AS a, {rater_b_sql} AS b,
-             count(*) AS cnt
-      FROM {table}
-      WHERE ({rater_a_sql}) IS NOT NULL AND ({rater_b_sql}) IS NOT NULL
-        {key_nn}
-      GROUP BY {kgrp_ab}
-    ),
-    by_a AS (
-      SELECT {kpre}a AS l, CAST(sum(cnt) AS BIGINT) AS r
-      FROM cells GROUP BY {kgrp_a}
-    ),
-    by_b AS (
-      SELECT {kpre}b AS l, CAST(sum(cnt) AS BIGINT) AS c
-      FROM cells GROUP BY {kgrp_b}
-    ),
-    marg AS (
-      SELECT {kpre}coalesce(r, 0)::HUGEINT AS r,
-             coalesce(c, 0)::HUGEINT AS c
-      FROM by_a FULL OUTER JOIN by_b {using}
-    ),
-    pe AS (
-      SELECT {kpre}coalesce(sum(r * c), 0) AS pe_sum,
-             CAST(count(*) AS BIGINT) AS n_labels
-      FROM marg {grp}
-    ),
-    po AS (
-      SELECT {kpre}
-             CAST(coalesce(sum(cnt), 0) AS BIGINT) AS n,
-             CAST(coalesce(sum(CASE WHEN a = b THEN cnt ELSE 0 END), 0)
-                  AS BIGINT) AS agree
-      FROM cells {grp}
-    )
-    SELECT {', '.join('po.' + c for c in keyed) + ', ' if keyed else ''}
-           po.n, pe.n_labels,
-           CAST(po.n::HUGEINT * po.agree - pe.pe_sum AS VARCHAR)
-             AS kappa_num,
-           CAST(po.n::HUGEINT * po.n - pe.pe_sum AS VARCHAR)
-             AS kappa_den,
-           CASE WHEN po.n::HUGEINT * po.n - pe.pe_sum <> 0 THEN
-             CAST(po.n::HUGEINT * po.agree - pe.pe_sum AS DOUBLE)
-               / CAST(po.n::HUGEINT * po.n - pe.pe_sum AS DOUBLE)
-           END AS kappa
-    FROM po JOIN pe {join_keys}
-    """
-
-
 def matthews_corr(
     df: DataFrame,
     label: Column,
@@ -2533,53 +1718,6 @@ def matthews_corr(
     )
 
 
-def matthews_corr_sql(
-    label_sql: str,
-    pred_sql: str,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`matthews_corr` — same one-aggregate plan,
-    same pairwise-root algebra; the integer columns serialize as
-    VARCHAR."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    return f"""
-    WITH counts AS (
-      SELECT {kpre}
-        CAST(sum(CASE WHEN ({label_sql}) AND ({pred_sql})
-                 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-        CAST(sum(CASE WHEN NOT ({label_sql}) AND ({pred_sql})
-                 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-        CAST(sum(CASE WHEN ({label_sql}) AND NOT ({pred_sql})
-                 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-        CAST(sum(CASE WHEN NOT ({label_sql}) AND NOT ({pred_sql})
-                 THEN 1 ELSE 0 END) AS BIGINT) AS tn
-      FROM {table}
-      WHERE ({label_sql}) IS NOT NULL AND ({pred_sql}) IS NOT NULL
-      {grp}
-    ),
-    terms AS (
-      SELECT {kpre}tp, fp, fn, tn,
-             tp::HUGEINT * tn - fp::HUGEINT * fn AS num,
-             (tp::HUGEINT + fp) * (tp::HUGEINT + fn) AS d1,
-             (tn::HUGEINT + fp) * (tn::HUGEINT + fn) AS d2
-      FROM counts
-    )
-    SELECT {kpre}tp, fp, fn, tn,
-           CAST(num AS VARCHAR) AS mcc_num,
-           CAST(d1 AS VARCHAR) AS mcc_d1,
-           CAST(d2 AS VARCHAR) AS mcc_d2,
-           CASE WHEN d1 > 0 AND d2 > 0 THEN
-             CAST(num AS DOUBLE)
-               / (sqrt(CAST(d1 AS DOUBLE)) * sqrt(CAST(d2 AS DOUBLE)))
-           END AS mcc
-    FROM terms
-    """
-
-
 def spearman_rho(
     df: DataFrame,
     rank_a: Column,
@@ -2637,44 +1775,6 @@ def spearman_rho(
             num.cast("double") / m.cast("double"),
         ).alias("rho"),
     )
-
-
-def spearman_rho_sql(
-    rank_a_sql: str,
-    rank_b_sql: str,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`spearman_rho` — same exact integer
-    algebra; the integer columns serialize as VARCHAR."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    d = f"(CAST({rank_a_sql} AS HUGEINT) - ({rank_b_sql}))"
-    return f"""
-    WITH agg AS (
-      SELECT {kpre}
-             CAST(count(*) AS BIGINT) AS n_items,
-             coalesce(sum({d} * {d}), 0) AS d2_sum
-      FROM {table}
-      WHERE ({rank_a_sql}) IS NOT NULL AND ({rank_b_sql}) IS NOT NULL
-      {grp}
-    ),
-    terms AS (
-      SELECT {kpre}n_items, d2_sum,
-             n_items::HUGEINT * (n_items::HUGEINT * n_items - 1) AS m
-      FROM agg
-    )
-    SELECT {kpre}n_items,
-           CAST(d2_sum AS VARCHAR) AS d2_sum,
-           CAST(m - 6 * d2_sum AS VARCHAR) AS rho_num,
-           CAST(m AS VARCHAR) AS rho_den,
-           CASE WHEN n_items >= 2 THEN
-             CAST(m - 6 * d2_sum AS DOUBLE) / CAST(m AS DOUBLE)
-           END AS rho
-    FROM terms
-    """
 
 
 def kendall_tau(
@@ -2768,70 +1868,6 @@ def kendall_tau(
     )
 
 
-def kendall_tau_sql(
-    item_sql: str,
-    rank_a_sql: str,
-    rank_b_sql: str,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`kendall_tau` — same per-group pair join,
-    same exact algebra (incl. the NULL-key exclusion at entry); the
-    integer columns serialize as VARCHAR."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    pair_on = " AND ".join(
-        [f"l.{c} = r.{c}" for c in keyed] + ["l.a < r.a"]
-    )
-    lkpre = ", ".join(f"l.{c}" for c in keyed) + (", " if keyed else "")
-    lgrp = f"GROUP BY {', '.join(f'l.{c}' for c in keyed)}" if keyed else ""
-    join_keys = f"USING ({kcols})" if keyed else "ON 1 = 1"
-    sel_keys = (
-        ", ".join(f"c.{c}" for c in keyed) + ", " if keyed else ""
-    )
-    return f"""
-    WITH base AS (
-      SELECT {kpre}{item_sql} AS i,
-             CAST({rank_a_sql} AS BIGINT) AS a,
-             CAST({rank_b_sql} AS BIGINT) AS b
-      FROM {table}
-      WHERE ({item_sql}) IS NOT NULL
-        AND ({rank_a_sql}) IS NOT NULL AND ({rank_b_sql}) IS NOT NULL
-        {key_nn}
-    ),
-    disc AS (
-      SELECT {lkpre}
-             CAST(coalesce(sum(CASE WHEN l.b > r.b THEN 1 ELSE 0 END), 0)
-                  AS BIGINT) AS n_discordant
-      FROM base l JOIN base r ON {pair_on}
-      {lgrp}
-    ),
-    counts AS (
-      SELECT {kpre}CAST(count(*) AS BIGINT) AS n_items
-      FROM base {grp}
-    ),
-    terms AS (
-      SELECT {sel_keys}c.n_items,
-             coalesce(d.n_discordant, 0) AS n_discordant,
-             c.n_items::HUGEINT * (c.n_items - 1) AS m
-      FROM counts c LEFT JOIN disc d {join_keys}
-    )
-    SELECT {kpre}n_items,
-           CAST(m // 2 AS BIGINT) AS n_pairs,
-           n_discordant,
-           CAST(m - 4 * n_discordant::HUGEINT AS VARCHAR) AS tau_num,
-           CAST(m AS VARCHAR) AS tau_den,
-           CASE WHEN n_items >= 2 THEN
-             CAST(m - 4 * n_discordant::HUGEINT AS DOUBLE)
-               / CAST(m AS DOUBLE)
-           END AS tau
-    FROM terms
-    """
-
-
 def cumulative_gain(
     df: DataFrame,
     label: Column,
@@ -2923,78 +1959,6 @@ def cumulative_gain(
             lift_num.cast("double") / lift_den.cast("double"),
         ).alias("lift"),
     )
-
-
-def cumulative_gain_sql(
-    label_sql: str,
-    score_sql: str,
-    table: str,
-    n_buckets: int = 10,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`cumulative_gain` — same distinct-score
-    grain, same integer bucket inversion (``generate_series`` unnest
-    for Spark's ``explode(sequence(...))``)."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    part = f"PARTITION BY {kcols} " if keyed else ""
-    nb = int(n_buckets)
-    return f"""
-    WITH per_score AS (
-      SELECT {kpre}{score_sql} AS s,
-             sum(CASE WHEN {label_sql} THEN 1 ELSE 0 END) AS np,
-             sum(CASE WHEN {label_sql} THEN 0 ELSE 1 END) AS nn
-      FROM {table}
-      WHERE ({label_sql}) IS NOT NULL AND ({score_sql}) IS NOT NULL
-      GROUP BY {kpre.rstrip(", ") + ", " if keyed else ""}s
-    ),
-    counted AS (
-      SELECT {kpre}
-             CAST(sum(np + nn) OVER ({part}ORDER BY s DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS BIGINT) AS cum,
-             CAST(sum(np) OVER ({part}ORDER BY s DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS BIGINT) AS tp,
-             CAST(np + nn AS BIGINT) AS rows_here,
-             CAST(sum(np + nn) OVER ({part.rstrip() or 'PARTITION BY 1'})
-               AS BIGINT) AS n,
-             CAST(sum(np) OVER ({part.rstrip() or 'PARTITION BY 1'})
-               AS BIGINT) AS npos
-      FROM per_score
-    ),
-    exploded AS (
-      -- the bucket quotients are ≤ n_buckets, so the HUGEINT floors
-      -- cast back to the BIGINT generate_series overload losslessly
-      SELECT {kpre}
-             unnest(generate_series(
-               CAST((CAST(cum - rows_here AS HUGEINT) * {nb}) // n + 1
-                    AS BIGINT),
-               CAST((CAST(cum AS HUGEINT) * {nb}) // n AS BIGINT)))
-               AS bucket,
-             cum, tp, n, npos
-      FROM counted
-      WHERE (CAST(cum AS HUGEINT) * {nb}) // n
-            >= (CAST(cum - rows_here AS HUGEINT) * {nb}) // n + 1
-    )
-    SELECT {kpre}
-           CAST(bucket AS BIGINT) AS bucket,
-           CAST((CAST(bucket AS HUGEINT) * n + {nb} - 1) // {nb}
-                AS BIGINT) AS cutoff,
-           cum AS n_taken,
-           tp AS tp_taken,
-           n,
-           npos AS n_pos,
-           CASE WHEN npos > 0
-                THEN CAST(tp AS DOUBLE) / CAST(npos AS DOUBLE)
-           END AS gain,
-           CASE WHEN npos > 0 THEN
-             CAST(tp::HUGEINT * n AS DOUBLE)
-               / CAST(cum::HUGEINT * npos AS DOUBLE)
-           END AS lift
-    FROM exploded
-    """
 
 
 def fleiss_kappa(
@@ -3104,95 +2068,6 @@ def fleiss_kappa(
             den != 0, num.cast("double") / den.cast("double")
         ).alias("fleiss_kappa"),
     )
-
-
-def fleiss_kappa_sql(
-    item_sql: str,
-    category_sql: str,
-    n_raters: int,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`fleiss_kappa` — same cell grain, same
-    cleared-denominator integer algebra; ``fleiss_num``/``fleiss_den``
-    serialize as VARCHAR."""
-    keyed = list(keys)
-    nr = int(n_raters)
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_ic = f"{kcols}, i, c" if keyed else "i, c"
-    kgrp_i = f"{kcols}, i" if keyed else "i"
-    kgrp_c = f"{kcols}, c" if keyed else "c"
-    using_i = f"USING ({kpre}i)" if keyed else "USING (i)"
-    join_k = f"USING ({kcols})" if keyed else "ON 1 = 1"
-    sel_keys = (
-        ", ".join(f"d.{c}" for c in keyed) + ", " if keyed else ""
-    )
-    return f"""
-    WITH cells AS (
-      SELECT {kpre}{item_sql} AS i, {category_sql} AS c,
-             CAST(count(*) AS BIGINT) AS nic
-      FROM {table}
-      WHERE ({item_sql}) IS NOT NULL AND ({category_sql}) IS NOT NULL
-        {key_nn}
-      GROUP BY {kgrp_ic}
-    ),
-    item_tot AS (
-      SELECT {kpre}i, CAST(sum(nic) AS BIGINT) AS ni
-      FROM cells GROUP BY {kgrp_i}
-    ),
-    drops AS (
-      SELECT {kpre}
-             CAST(coalesce(sum(CASE WHEN ni <> {nr} THEN 1 ELSE 0 END),
-                           0) AS BIGINT) AS n_items_dropped
-      FROM item_tot {grp}
-    ),
-    kept AS (
-      SELECT c.* FROM cells c
-      SEMI JOIN (SELECT {kpre}i FROM item_tot WHERE ni = {nr}) t
-        {using_i}
-    ),
-    s1agg AS (
-      SELECT {kpre}
-             CAST(count(DISTINCT i) AS BIGINT) AS n_items,
-             coalesce(sum(nic::HUGEINT * (nic - 1)), 0) AS s1
-      FROM kept {grp}
-    ),
-    cols AS (
-      SELECT {kpre}c, sum(nic)::HUGEINT AS colc
-      FROM kept GROUP BY {kgrp_c}
-    ),
-    s2agg AS (
-      SELECT {kpre}
-             coalesce(sum(colc * colc), 0) AS s2,
-             CAST(count(*) AS BIGINT) AS n_categories
-      FROM cols {grp}
-    ),
-    terms AS (
-      SELECT {sel_keys}
-             coalesce(s1agg.n_items, 0) AS n_items,
-             d.n_items_dropped,
-             coalesce(s2agg.n_categories, 0) AS n_categories,
-             coalesce(s1agg.s1, 0)
-               * coalesce(s1agg.n_items, 0)::HUGEINT * {nr}
-               - coalesce(s2agg.s2, 0) * {nr - 1} AS num,
-             (coalesce(s1agg.n_items, 0)::HUGEINT
-                * coalesce(s1agg.n_items, 0) * {nr * nr}
-              - coalesce(s2agg.s2, 0)) * {nr - 1} AS den
-      FROM drops d
-      LEFT JOIN s1agg {join_k}
-      LEFT JOIN s2agg {join_k}
-    )
-    SELECT {kpre}n_items, n_items_dropped, n_categories,
-           CAST(num AS VARCHAR) AS fleiss_num,
-           CAST(den AS VARCHAR) AS fleiss_den,
-           CASE WHEN den <> 0 THEN
-             CAST(num AS DOUBLE) / CAST(den AS DOUBLE)
-           END AS fleiss_kappa
-    FROM terms
-    """
 
 
 def rbo_weights(k: int, p_num: int, p_den: int) -> tuple[int, int, list[int]]:
@@ -3319,60 +2194,6 @@ def rbo_at_k(
         (num.cast("double") / F.lit(float(scale))).alias("rbo"),
         (num.cast("double") / F.lit(float(full))).alias("rbo_norm"),
     )
-
-
-def rbo_at_k_sql(
-    results_a_sql: str,
-    results_b_sql: str,
-    k: int,
-    p_num: int,
-    p_den: int,
-    query_col: str = "qid",
-    item_col: str = "item",
-    rank_col: str = "rank",
-) -> str:
-    """DuckDB twin of :func:`rbo_at_k` — same literal suffix-weight
-    table, same join/sum shape. ``results_a_sql``/``results_b_sql``
-    are FROM-able fragments exposing (query, item, rank)."""
-    scale, full, suffix = rbo_weights(k, p_num, p_den)
-    vals = ", ".join(
-        f"({m + 1}, {s}::BIGINT)" for m, s in enumerate(suffix)
-    )
-    q, i, r = query_col, item_col, rank_col
-    return f"""
-    WITH s_tab AS (SELECT * FROM (VALUES {vals}) AS t(m, s)),
-    a AS (
-      SELECT {q} AS qq, {i} AS ii, {r} AS ra FROM {results_a_sql}
-      WHERE {r} BETWEEN 1 AND {k}
-    ),
-    b AS (
-      SELECT {q} AS qq, {i} AS ii, {r} AS rb FROM {results_b_sql}
-      WHERE {r} BETWEEN 1 AND {k}
-    ),
-    matched AS (
-      SELECT a.qq, s.s
-      FROM a JOIN b USING (qq, ii)
-      JOIN s_tab s ON s.m = greatest(a.ra, b.rb)
-    ),
-    per_q AS (
-      SELECT qq, CAST(count(*) AS BIGINT) AS n_matched,
-             CAST(sum(s) AS BIGINT) AS rbo_num
-      FROM matched GROUP BY qq
-    ),
-    universe AS (
-      SELECT DISTINCT qq FROM (
-        SELECT qq FROM a UNION ALL SELECT qq FROM b
-      )
-    )
-    SELECT u.qq AS {q},
-           CAST(coalesce(p.n_matched, 0) AS BIGINT) AS n_matched,
-           CAST(coalesce(p.rbo_num, 0) AS BIGINT) AS rbo_num,
-           CAST(coalesce(p.rbo_num, 0) AS DOUBLE) / {float(scale)}
-             AS rbo,
-           CAST(coalesce(p.rbo_num, 0) AS DOUBLE) / {float(full)}
-             AS rbo_norm
-    FROM universe u LEFT JOIN per_q p USING (qq)
-    """
 
 
 # ---------------------------------------------------------------------------
@@ -3543,78 +2364,6 @@ def log_loss(
     )
 
 
-def log_loss_sql(
-    label_sql: str,
-    score_q_sql: str,
-    s_max: int,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`log_loss` — the SAME literal table as a
-    VALUES relation (joined at clamped-score grain, ≤ s_max − 1 rows),
-    same clamp, same integer algebra; ``ll_num`` serializes as
-    VARCHAR.
-
-    The clamp truncates via ``CAST(floor(·) AS BIGINT)`` — NOT a bare
-    ``CAST(· AS BIGINT)``, which rounds half-even in DuckDB while
-    Spark's ``cast("long")`` truncates: a contract-violating
-    non-integral score would then clamp DIFFERENTLY per engine and
-    diverge silently instead of hash-mismatching. On the filtered
-    domain (score ≥ 0) floor ≡ truncation, so the twins agree for
-    every input, integral or not; the CONTRACT is still integral
-    quanta (produce them by rounding upstream — see :func:`ece`)."""
-    tab = log_loss_table(s_max)
-    vals = ", ".join(f"({i + 1}, {t}::BIGINT)" for i, t in enumerate(tab))
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_s = f"{kcols}, sc" if keyed else "sc"
-    return f"""
-    WITH ln_tab AS (SELECT * FROM (VALUES {vals}) AS t(i, v)),
-    base AS (
-      SELECT {kpre}{label_sql} AS y,
-             greatest(1, least(CAST(floor({score_q_sql}) AS BIGINT),
-                               {int(s_max) - 1})) AS sc,
-             CASE WHEN CAST(floor({score_q_sql}) AS BIGINT) < 1
-                    OR CAST(floor({score_q_sql}) AS BIGINT)
-                       > {int(s_max) - 1}
-                  THEN 1 ELSE 0 END AS cl
-      FROM {table}
-      WHERE ({label_sql}) IS NOT NULL AND ({score_q_sql}) IS NOT NULL
-        AND ({score_q_sql}) >= 0 AND ({score_q_sql}) <= {int(s_max)}
-    ),
-    grain AS (
-      SELECT {kpre}sc,
-             CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS pos,
-             CAST(sum(CASE WHEN y THEN 0 ELSE 1 END) AS BIGINT) AS neg,
-             CAST(sum(cl) AS BIGINT) AS ncl
-      FROM base GROUP BY {kgrp_s}
-    ),
-    terms AS (
-      SELECT {kpre}pos, neg, ncl,
-             pos::HUGEINT * tp.v + neg::HUGEINT * tn.v AS t
-      FROM grain
-      JOIN ln_tab tp ON tp.i = sc
-      JOIN ln_tab tn ON tn.i = {int(s_max)} - sc
-    ),
-    totals AS (
-      SELECT {kpre}
-             CAST(coalesce(sum(pos + neg), 0) AS BIGINT) AS n,
-             CAST(coalesce(sum(ncl), 0) AS BIGINT) AS n_clamped,
-             coalesce(sum(t), 0) AS ll_num
-      FROM terms {grp}
-    )
-    SELECT {kpre}n, n_clamped,
-           CAST(ll_num AS VARCHAR) AS ll_num,
-           CASE WHEN n > 0 THEN
-             CAST(ll_num AS DOUBLE)
-               / CAST(CAST(n AS HUGEINT) * {_LOG_LOSS_SCALE} AS DOUBLE)
-           END AS log_loss
-    FROM totals
-    """
-
-
 def log_loss_multiclass(
     df: DataFrame,
     true_score_q: Column,
@@ -3705,62 +2454,6 @@ def log_loss_multiclass(
             F.col("ll_num").cast("double") / den.cast("double"),
         ).alias("log_loss"),
     )
-
-
-def log_loss_multiclass_sql(
-    true_score_q_sql: str,
-    s_max: int,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`log_loss_multiclass` — the SAME literal
-    table as a VALUES relation, same one-sided clamp (truncating via
-    ``CAST(floor(·) AS BIGINT)`` to match Spark's cast — see
-    :func:`log_loss_sql`), same integer algebra; ``ll_num``
-    serializes as VARCHAR."""
-    tab = log_loss_table(s_max)
-    vals = ", ".join(f"({i + 1}, {t}::BIGINT)" for i, t in enumerate(tab))
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_s = f"{kcols}, sc" if keyed else "sc"
-    return f"""
-    WITH ln_tab AS (SELECT * FROM (VALUES {vals}) AS t(i, v)),
-    base AS (
-      SELECT {kpre}
-             greatest(1, CAST(floor({true_score_q_sql}) AS BIGINT)) AS sc,
-             CASE WHEN CAST(floor({true_score_q_sql}) AS BIGINT) < 1
-                  THEN 1 ELSE 0 END AS cl
-      FROM {table}
-      WHERE ({true_score_q_sql}) IS NOT NULL
-        AND ({true_score_q_sql}) >= 0 AND ({true_score_q_sql}) <= {int(s_max)}
-    ),
-    grain AS (
-      SELECT {kpre}sc,
-             CAST(count(*) AS BIGINT) AS cnt,
-             CAST(sum(cl) AS BIGINT) AS ncl
-      FROM base GROUP BY {kgrp_s}
-    ),
-    terms AS (
-      SELECT {kpre}cnt, ncl, cnt::HUGEINT * tp.v AS t
-      FROM grain JOIN ln_tab tp ON tp.i = sc
-    ),
-    totals AS (
-      SELECT {kpre}
-             CAST(coalesce(sum(cnt), 0) AS BIGINT) AS n,
-             CAST(coalesce(sum(ncl), 0) AS BIGINT) AS n_clamped,
-             coalesce(sum(t), 0) AS ll_num
-      FROM terms {grp}
-    )
-    SELECT {kpre}n, n_clamped,
-           CAST(ll_num AS VARCHAR) AS ll_num,
-           CASE WHEN n > 0 THEN
-             CAST(ll_num AS DOUBLE)
-               / CAST(CAST(n AS HUGEINT) * {_LOG_LOSS_SCALE} AS DOUBLE)
-           END AS log_loss
-    FROM totals
-    """
 
 
 # The weighted-kappa exactness envelope: |label| ≤ 10^4 keeps
@@ -3910,106 +2603,6 @@ def weighted_kappa(
             den != 0, num.cast("double") / den.cast("double")
         ).alias("kappa"),
     )
-
-
-def weighted_kappa_sql(
-    rater_a_sql: str,
-    rater_b_sql: str,
-    weighting: str,
-    table: str,
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`weighted_kappa` — same cell grain, same
-    marginal cross, same cleared-denominator integers;
-    ``kappa_num``/``kappa_den`` serialize as VARCHAR.
-
-    Exactness envelope (mirrors the Spark side's in-plan assertion):
-    |label| ≤ ~10^4 and n ≤ ~10^10 keep w·r·c inside 38 digits. The
-    Spark twin RAISES past the envelope (``_KAPPA_LABEL_MAX``); this
-    twin's HUGEINT would keep going — so an out-of-envelope run fails
-    loudly on the Spark side rather than hash-diverging silently."""
-    if weighting == "linear":
-        w = lambda a, b: f"abs({a}::HUGEINT - {b})"  # noqa: E731
-    elif weighting == "quadratic":
-        w = lambda a, b: (  # noqa: E731
-            f"(({a}::HUGEINT - {b}) * ({a}::HUGEINT - {b}))"
-        )
-    else:
-        raise ValueError(
-            f"weighting must be 'linear' or 'quadratic', got {weighting!r}"
-        )
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_ab = f"{kcols}, a, b" if keyed else "a, b"
-    kgrp_a = f"{kcols}, a" if keyed else "a"
-    kgrp_b = f"{kcols}, b" if keyed else "b"
-    kgrp_l = f"{kcols}, l" if keyed else "l"
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    pair_on = (
-        " AND ".join(f"by_a.{c} = by_b.{c}" for c in keyed)
-        if keyed
-        else "1 = 1"
-    )
-    akpre = ", ".join(f"by_a.{c}" for c in keyed) + (", " if keyed else "")
-    agrp = (
-        f"GROUP BY {', '.join(f'by_a.{c}' for c in keyed)}" if keyed else ""
-    )
-    join_k = f"USING ({kcols})" if keyed else "ON 1 = 1"
-    okpre = ", ".join(f"o.{c}" for c in keyed) + (", " if keyed else "")
-    return f"""
-    WITH cells AS (
-      SELECT {kpre}CAST({rater_a_sql} AS BIGINT) AS a,
-             CAST({rater_b_sql} AS BIGINT) AS b,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM {table}
-      WHERE ({rater_a_sql}) IS NOT NULL AND ({rater_b_sql}) IS NOT NULL
-        {key_nn}
-      GROUP BY {kgrp_ab}
-    ),
-    obs AS (
-      SELECT {kpre}
-             CAST(coalesce(sum(cnt), 0) AS BIGINT) AS n,
-             coalesce(sum({w('a', 'b')} * cnt), 0) AS obs_sum
-      FROM cells {grp}
-    ),
-    by_a AS (
-      SELECT {kpre}a AS la, CAST(sum(cnt) AS BIGINT) AS r
-      FROM cells GROUP BY {kgrp_a}
-    ),
-    by_b AS (
-      SELECT {kpre}b AS lb, CAST(sum(cnt) AS BIGINT) AS c
-      FROM cells GROUP BY {kgrp_b}
-    ),
-    expd AS (
-      SELECT {akpre}
-             coalesce(sum({w('by_a.la', 'by_b.lb')}
-                          * by_a.r::HUGEINT * by_b.c), 0) AS exp_sum
-      FROM by_a JOIN by_b ON {pair_on}
-      {agrp}
-    ),
-    labels AS (
-      SELECT {kpre}CAST(count(*) AS BIGINT) AS n_labels
-      FROM (
-        SELECT DISTINCT {kpre}l FROM (
-          SELECT {kpre}a AS l FROM cells
-          UNION ALL SELECT {kpre}b AS l FROM cells
-        ) GROUP BY {kgrp_l}
-      ) {grp}
-    )
-    SELECT {okpre}o.n, labels.n_labels,
-           CAST(expd.exp_sum - o.n::HUGEINT * o.obs_sum AS VARCHAR)
-             AS kappa_num,
-           CAST(expd.exp_sum AS VARCHAR) AS kappa_den,
-           CASE WHEN expd.exp_sum <> 0 THEN
-             CAST(expd.exp_sum - o.n::HUGEINT * o.obs_sum AS DOUBLE)
-               / CAST(expd.exp_sum AS DOUBLE)
-           END AS kappa
-    FROM obs o
-    JOIN expd {join_k}
-    JOIN labels {join_k}
-    """
 
 
 def _krippendorff_unit_state(
@@ -4485,440 +3078,3 @@ def krippendorff_disagreement_explain(
     )
 
 
-def krippendorff_explain_sql(
-    item_sql: str,
-    category_sql: str,
-    table: str,
-    keys: Sequence[str] = (),
-    max_raters: int = 16,
-    metric: str = "nominal",
-) -> str:
-    """DuckDB twin of :func:`krippendorff_disagreement_explain` —
-    same cells→kept-units prefix as :func:`krippendorff_alpha_sql`,
-    same LCM-cleared per-unit mass; ``du_num`` serializes as
-    VARCHAR."""
-    import math
-
-    if metric not in ("nominal", "interval", "ordinal"):
-        raise ValueError(
-            "metric must be 'nominal', 'interval' or 'ordinal', "
-            f"got {metric!r}"
-        )
-    if not 3 <= max_raters <= 42:
-        raise ValueError(
-            f"max_raters must be in 3..42, got {max_raters}"
-        )
-    mr = int(max_raters)
-    lcm = math.lcm(*range(1, mr))
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    kgrp_ic = f"{kcols}, i, c" if keyed else "i, c"
-    kgrp_i = f"{kcols}, i" if keyed else "i"
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    select_unit = f"""
-    SELECT {kpre}i AS unit, m AS n_ratings, kc AS n_categories_unit,
-           CAST({{du}} * ({lcm}::HUGEINT // (m - 1)) AS VARCHAR) AS du_num,
-           CAST({{du}} AS DOUBLE)
-             / CAST(m::HUGEINT * (m - 1) AS DOUBLE) AS disagreement
-    FROM kept
-    """
-    if metric == "ordinal":
-        kgrp_iclv = f"{kcols}, i, clv" if keyed else "i, clv"
-        kgrp_c = f"{kcols}, clv" if keyed else "clv"
-        using_i = f"USING ({kpre}i)" if keyed else "USING (i)"
-        using_c = f"USING ({kpre}clv)" if keyed else "USING (clv)"
-        part = f"PARTITION BY {kcols}" if keyed else "PARTITION BY 1"
-        return f"""
-    WITH cells AS (
-      SELECT {kpre}{item_sql} AS i, CAST({category_sql} AS BIGINT) AS clv,
-             CAST(count(*) AS BIGINT) AS nuc
-      FROM {table}
-      WHERE ({item_sql}) IS NOT NULL AND ({category_sql}) IS NOT NULL
-        {key_nn}
-      GROUP BY {kgrp_iclv}
-    ),
-    items_m AS (
-      SELECT {kpre}i, CAST(sum(nuc) AS BIGINT) AS m
-      FROM cells GROUP BY {kgrp_i}
-    ),
-    kept_cells AS (
-      SELECT c.* FROM cells c
-      SEMI JOIN (SELECT {kpre}i FROM items_m
-                 WHERE m >= 2 AND m <= {mr}) t {using_i}
-    ),
-    cats AS (
-      SELECT {kpre}clv, sum(nuc)::HUGEINT AS nc
-      FROM kept_cells GROUP BY {kgrp_c}
-    ),
-    cats_e AS (
-      SELECT {kpre}clv, nc,
-             2 * sum(nc) OVER ({part} ORDER BY clv) - nc AS e
-      FROM cats
-    ),
-    cell_e AS (
-      SELECT {kpre}i, nuc, e
-      FROM kept_cells JOIN cats_e {using_c}
-    ),
-    kept AS (
-      SELECT {kpre}i, CAST(sum(nuc) AS BIGINT) AS m,
-             CAST(count(*) AS BIGINT) AS kc,
-             sum(nuc::HUGEINT * e) AS s1,
-             sum(nuc::HUGEINT * e * e) AS s2
-      FROM cell_e GROUP BY {kgrp_i}
-    )
-    {select_unit.format(du="(m::HUGEINT * s2 - s1 * s1)")}
-    """
-    if metric == "interval":
-        item_moments = (
-            "sum(nuc::HUGEINT * CAST(c AS BIGINT)) AS s1,\n"
-            "             sum(nuc::HUGEINT * CAST(c AS BIGINT)"
-            " * CAST(c AS BIGINT)) AS s2"
-        )
-        du_sql = "(m::HUGEINT * s2 - s1 * s1)"
-    else:
-        item_moments = "sum(nuc::HUGEINT * nuc) AS ss"
-        du_sql = "(m::HUGEINT * m - ss)"
-    return f"""
-    WITH cells AS (
-      SELECT {kpre}{item_sql} AS i, {category_sql} AS c,
-             CAST(count(*) AS BIGINT) AS nuc
-      FROM {table}
-      WHERE ({item_sql}) IS NOT NULL AND ({category_sql}) IS NOT NULL
-        {key_nn}
-      GROUP BY {kgrp_ic}
-    ),
-    items AS (
-      SELECT {kpre}i, CAST(sum(nuc) AS BIGINT) AS m,
-             CAST(count(*) AS BIGINT) AS kc,
-             {item_moments}
-      FROM cells GROUP BY {kgrp_i}
-    ),
-    kept AS (
-      SELECT * FROM items WHERE m >= 2 AND m <= {mr}
-    )
-    {select_unit.format(du=du_sql)}
-    """
-
-
-def krippendorff_alpha_sql(
-    item_sql: str,
-    category_sql: str,
-    table: str,
-    keys: Sequence[str] = (),
-    max_raters: int = 16,
-    metric: str = "nominal",
-) -> str:
-    """DuckDB twin of :func:`krippendorff_alpha` — same cell/item
-    grain, same LCM-cleared integer algebra (nominal sum-of-squares,
-    interval moment form, or ordinal moment form over the
-    cumulative-marginal transform e_c = 2·cum_c − n_c);
-    ``alpha_num``/``alpha_den`` serialize as VARCHAR."""
-    import math
-
-    if metric not in ("nominal", "interval", "ordinal"):
-        raise ValueError(
-            "metric must be 'nominal', 'interval' or 'ordinal', "
-            f"got {metric!r}"
-        )
-    if not 3 <= max_raters <= 42:
-        raise ValueError(
-            f"max_raters must be in 3..42, got {max_raters}"
-        )
-    mr = int(max_raters)
-    lcm = math.lcm(*range(1, mr))
-    keyed = list(keys)
-    if metric == "ordinal":
-        return _krippendorff_ordinal_sql(
-            item_sql, category_sql, table, keyed, mr, lcm
-        )
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_ic = f"{kcols}, i, c" if keyed else "i, c"
-    kgrp_i = f"{kcols}, i" if keyed else "i"
-    kgrp_c = f"{kcols}, c" if keyed else "c"
-    using_i = f"USING ({kpre}i)" if keyed else "USING (i)"
-    join_k = f"USING ({kcols})" if keyed else "ON 1 = 1"
-    dkpre = ", ".join(f"d.{c}" for c in keyed) + (", " if keyed else "")
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    if metric == "interval":
-        item_moments = (
-            "sum(nuc::HUGEINT * CAST(c AS BIGINT)) AS s1,\n"
-            "             sum(nuc::HUGEINT * CAST(c AS BIGINT)"
-            " * CAST(c AS BIGINT)) AS s2"
-        )
-        du_sql = "(m::HUGEINT * s2 - s1 * s1)"
-        cat_moments = (
-            "coalesce(sum(nc * CAST(c AS BIGINT)), 0) AS t1,\n"
-            "             coalesce(sum(nc * CAST(c AS BIGINT)"
-            " * CAST(c AS BIGINT)), 0) AS t2"
-        )
-        de_core = (
-            "(coalesce(u_agg.n_ratings, 0)::HUGEINT"
-            " * coalesce(cat_agg.t2, 0)\n"
-            "              - coalesce(cat_agg.t1, 0)"
-            " * coalesce(cat_agg.t1, 0))"
-        )
-    else:
-        item_moments = "sum(nuc::HUGEINT * nuc) AS ss"
-        du_sql = "(m::HUGEINT * m - ss)"
-        cat_moments = "coalesce(sum(nc * nc), 0) AS c2"
-        de_core = (
-            "(coalesce(u_agg.n_ratings, 0)::HUGEINT\n"
-            "                * coalesce(u_agg.n_ratings, 0)\n"
-            "              - coalesce(cat_agg.c2, 0))"
-        )
-    return f"""
-    WITH cells AS (
-      SELECT {kpre}{item_sql} AS i, {category_sql} AS c,
-             CAST(count(*) AS BIGINT) AS nuc
-      FROM {table}
-      WHERE ({item_sql}) IS NOT NULL AND ({category_sql}) IS NOT NULL
-        {key_nn}
-      GROUP BY {kgrp_ic}
-    ),
-    items AS (
-      SELECT {kpre}i, CAST(sum(nuc) AS BIGINT) AS m,
-             {item_moments}
-      FROM cells GROUP BY {kgrp_i}
-    ),
-    drops AS (
-      SELECT {kpre}
-             CAST(coalesce(sum(CASE WHEN m < 2 THEN 1 ELSE 0 END), 0)
-                  AS BIGINT) AS n_units_single,
-             CAST(coalesce(sum(CASE WHEN m > {mr} THEN 1 ELSE 0 END), 0)
-                  AS BIGINT) AS n_units_overflow
-      FROM items {grp}
-    ),
-    kept AS (
-      SELECT * FROM items WHERE m >= 2 AND m <= {mr}
-    ),
-    u_agg AS (
-      SELECT {kpre}
-             CAST(count(*) AS BIGINT) AS n_units,
-             CAST(coalesce(sum(m), 0) AS BIGINT) AS n_ratings,
-             coalesce(sum({du_sql}
-                          * ({lcm}::HUGEINT // (m - 1))), 0) AS u
-      FROM kept {grp}
-    ),
-    kept_cells AS (
-      SELECT c.* FROM cells c
-      SEMI JOIN (SELECT {kpre}i FROM kept) t {using_i}
-    ),
-    cats AS (
-      SELECT {kpre}c, sum(nuc)::HUGEINT AS nc
-      FROM kept_cells GROUP BY {kgrp_c}
-    ),
-    cat_agg AS (
-      SELECT {kpre}
-             CAST(count(*) AS BIGINT) AS n_categories,
-             {cat_moments}
-      FROM cats {grp}
-    ),
-    terms AS (
-      SELECT {dkpre}
-             coalesce(u_agg.n_ratings, 0) AS n_ratings,
-             coalesce(u_agg.n_units, 0) AS n_units,
-             d.n_units_single, d.n_units_overflow,
-             coalesce(cat_agg.n_categories, 0) AS n_categories,
-             {de_core} * {lcm} AS de,
-             (coalesce(u_agg.n_ratings, 0)::HUGEINT - 1)
-               * coalesce(u_agg.u, 0) AS nu
-      FROM drops d
-      LEFT JOIN u_agg {join_k}
-      LEFT JOIN cat_agg {join_k}
-    )
-    SELECT {kpre}n_ratings, n_units, n_units_single, n_units_overflow,
-           n_categories,
-           CAST(de - nu AS VARCHAR) AS alpha_num,
-           CAST(de AS VARCHAR) AS alpha_den,
-           CASE WHEN de <> 0 THEN
-             CAST(de - nu AS DOUBLE) / CAST(de AS DOUBLE)
-           END AS alpha
-    FROM terms
-    """
-
-
-def _krippendorff_ordinal_sql(
-    item_sql: str,
-    category_sql: str,
-    table: str,
-    keyed: list,
-    mr: int,
-    lcm: int,
-) -> str:
-    """The ordinal-metric body of :func:`krippendorff_alpha_sql`:
-    the drop filter runs BEFORE the moments (the distance depends on
-    the kept-unit marginals), categories live at their BIGINT value,
-    ``e = 2·cum − n_c`` comes from one cumulative window at category
-    grain, and the per-unit/marginal masses are the interval moment
-    form over e."""
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_ic = f"{kcols}, i, clv" if keyed else "i, clv"
-    kgrp_i = f"{kcols}, i" if keyed else "i"
-    kgrp_c = f"{kcols}, clv" if keyed else "clv"
-    using_i = f"USING ({kpre}i)" if keyed else "USING (i)"
-    using_c = f"USING ({kpre}clv)" if keyed else "USING (clv)"
-    join_k = f"USING ({kcols})" if keyed else "ON 1 = 1"
-    part = f"PARTITION BY {kcols}" if keyed else "PARTITION BY 1"
-    dkpre = ", ".join(f"d.{c}" for c in keyed) + (", " if keyed else "")
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    return f"""
-    WITH cells AS (
-      SELECT {kpre}{item_sql} AS i, CAST({category_sql} AS BIGINT) AS clv,
-             CAST(count(*) AS BIGINT) AS nuc
-      FROM {table}
-      WHERE ({item_sql}) IS NOT NULL AND ({category_sql}) IS NOT NULL
-        {key_nn}
-      GROUP BY {kgrp_ic}
-    ),
-    items_m AS (
-      SELECT {kpre}i, CAST(sum(nuc) AS BIGINT) AS m
-      FROM cells GROUP BY {kgrp_i}
-    ),
-    drops AS (
-      SELECT {kpre}
-             CAST(coalesce(sum(CASE WHEN m < 2 THEN 1 ELSE 0 END), 0)
-                  AS BIGINT) AS n_units_single,
-             CAST(coalesce(sum(CASE WHEN m > {mr} THEN 1 ELSE 0 END), 0)
-                  AS BIGINT) AS n_units_overflow
-      FROM items_m {grp}
-    ),
-    kept_cells AS (
-      SELECT c.* FROM cells c
-      SEMI JOIN (SELECT {kpre}i FROM items_m
-                 WHERE m >= 2 AND m <= {mr}) t {using_i}
-    ),
-    cats AS (
-      SELECT {kpre}clv, sum(nuc)::HUGEINT AS nc
-      FROM kept_cells GROUP BY {kgrp_c}
-    ),
-    cats_e AS (
-      SELECT {kpre}clv, nc,
-             2 * sum(nc) OVER ({part} ORDER BY clv) - nc AS e
-      FROM cats
-    ),
-    cell_e AS (
-      SELECT {kpre}i, nuc, e
-      FROM kept_cells JOIN cats_e {using_c}
-    ),
-    kept AS (
-      SELECT {kpre}i, CAST(sum(nuc) AS BIGINT) AS m,
-             sum(nuc::HUGEINT * e) AS s1,
-             sum(nuc::HUGEINT * e * e) AS s2
-      FROM cell_e GROUP BY {kgrp_i}
-    ),
-    u_agg AS (
-      SELECT {kpre}
-             CAST(count(*) AS BIGINT) AS n_units,
-             CAST(coalesce(sum(m), 0) AS BIGINT) AS n_ratings,
-             coalesce(sum((m::HUGEINT * s2 - s1 * s1)
-                          * ({lcm}::HUGEINT // (m - 1))), 0) AS u
-      FROM kept {grp}
-    ),
-    cat_agg AS (
-      SELECT {kpre}
-             CAST(count(*) AS BIGINT) AS n_categories,
-             coalesce(sum(nc * e), 0) AS t1,
-             coalesce(sum(nc * e * e), 0) AS t2
-      FROM cats_e {grp}
-    ),
-    terms AS (
-      SELECT {dkpre}
-             coalesce(u_agg.n_ratings, 0) AS n_ratings,
-             coalesce(u_agg.n_units, 0) AS n_units,
-             d.n_units_single, d.n_units_overflow,
-             coalesce(cat_agg.n_categories, 0) AS n_categories,
-             (coalesce(u_agg.n_ratings, 0)::HUGEINT
-                * coalesce(cat_agg.t2, 0)
-              - coalesce(cat_agg.t1, 0)
-                * coalesce(cat_agg.t1, 0)) * {lcm} AS de,
-             (coalesce(u_agg.n_ratings, 0)::HUGEINT - 1)
-               * coalesce(u_agg.u, 0) AS nu
-      FROM drops d
-      LEFT JOIN u_agg {join_k}
-      LEFT JOIN cat_agg {join_k}
-    )
-    SELECT {kpre}n_ratings, n_units, n_units_single, n_units_overflow,
-           n_categories,
-           CAST(de - nu AS VARCHAR) AS alpha_num,
-           CAST(de AS VARCHAR) AS alpha_den,
-           CASE WHEN de <> 0 THEN
-             CAST(de - nu AS DOUBLE) / CAST(de AS DOUBLE)
-           END AS alpha
-    FROM terms
-    """
-
-
-def cohens_kappa_from_cells_sql(
-    cells_sql: str,
-    actual_col: str = "actual",
-    predicted_col: str = "predicted",
-    n_col: str = "n",
-    keys: Sequence[str] = (),
-) -> str:
-    """DuckDB twin of :func:`cohens_kappa` over cells (``n`` given) —
-    the oracle for MAINTAINED cell stores (``streaming/sketches.py``): ``cells_sql``
-    is a FROM-able fragment exposing (actual, predicted, count) rows,
-    possibly with duplicates (per-batch deltas) — they re-aggregate
-    exactly as the Spark store read does, then the
-    :func:`cohens_kappa_sql` algebra runs over the summed cells."""
-    keyed = list(keys)
-    kcols = ", ".join(keyed)
-    kpre = f"{kcols}, " if keyed else ""
-    grp = f"GROUP BY {kcols}" if keyed else ""
-    kgrp_ab = f"{kcols}, a, b" if keyed else "a, b"
-    kgrp_a = f"{kcols}, a" if keyed else "a"
-    kgrp_b = f"{kcols}, b" if keyed else "b"
-    using = f"USING ({kpre}l)" if keyed else "USING (l)"
-    join_keys = f"USING ({kcols})" if keyed else "ON 1 = 1"
-    key_nn = "".join(f" AND ({c}) IS NOT NULL" for c in keyed)
-    return f"""
-    WITH cells AS (
-      SELECT {kpre}{actual_col} AS a, {predicted_col} AS b,
-             CAST(sum({n_col}) AS BIGINT) AS cnt
-      FROM {cells_sql}
-      WHERE ({actual_col}) IS NOT NULL AND ({predicted_col}) IS NOT NULL
-        {key_nn}
-      GROUP BY {kgrp_ab}
-    ),
-    by_a AS (
-      SELECT {kpre}a AS l, CAST(sum(cnt) AS BIGINT) AS r
-      FROM cells GROUP BY {kgrp_a}
-    ),
-    by_b AS (
-      SELECT {kpre}b AS l, CAST(sum(cnt) AS BIGINT) AS c
-      FROM cells GROUP BY {kgrp_b}
-    ),
-    marg AS (
-      SELECT {kpre}coalesce(r, 0)::HUGEINT AS r,
-             coalesce(c, 0)::HUGEINT AS c
-      FROM by_a FULL OUTER JOIN by_b {using}
-    ),
-    pe AS (
-      SELECT {kpre}coalesce(sum(r * c), 0) AS pe_sum,
-             CAST(count(*) AS BIGINT) AS n_labels
-      FROM marg {grp}
-    ),
-    po AS (
-      SELECT {kpre}
-             CAST(coalesce(sum(cnt), 0) AS BIGINT) AS n,
-             CAST(coalesce(sum(CASE WHEN a = b THEN cnt ELSE 0 END), 0)
-                  AS BIGINT) AS agree
-      FROM cells {grp}
-    )
-    SELECT {', '.join('po.' + c for c in keyed) + ', ' if keyed else ''}
-           po.n, pe.n_labels,
-           CAST(po.n::HUGEINT * po.agree - pe.pe_sum AS VARCHAR)
-             AS kappa_num,
-           CAST(po.n::HUGEINT * po.n - pe.pe_sum AS VARCHAR)
-             AS kappa_den,
-           CASE WHEN po.n::HUGEINT * po.n - pe.pe_sum <> 0 THEN
-             CAST(po.n::HUGEINT * po.agree - pe.pe_sum AS DOUBLE)
-               / CAST(po.n::HUGEINT * po.n - pe.pe_sum AS DOUBLE)
-           END AS kappa
-    FROM po JOIN pe {join_keys}
-    """

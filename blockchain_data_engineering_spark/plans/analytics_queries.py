@@ -1238,7 +1238,7 @@ _AUC_LABEL_SQL = "o_orderpriority IN ('1-URGENT', '2-HIGH')"
 
 
 def _auc_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         auc_exact_sql,
     )
 
@@ -1278,7 +1278,7 @@ def ml_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # facts; plan-pinned HashAggregate-below-Window, no row-grain sort).
 # ---------------------------------------------------------------------------
 def _pr_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         pr_curve_sql,
     )
 
@@ -1793,7 +1793,7 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with the numerator string-serialized (the netflow_decimal recipe).
 # ---------------------------------------------------------------------------
 def _ap_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         average_precision_sql,
     )
 
@@ -2073,7 +2073,7 @@ _BRIER_SMAX = 300_000_00  # p = min(price, 300k) / 300k, quanta(2)
 
 
 def _brier_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         brier_score_sql,
     )
 
@@ -2206,7 +2206,7 @@ _MCC_PRED_Q = 150_000_00  # predict urgent when price quanta ≥ 150k
 
 
 def _mcc_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         matthews_corr_sql,
     )
 
@@ -2295,7 +2295,7 @@ def _ranked_pair_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _spearman_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         spearman_rho_sql,
     )
 
@@ -2327,7 +2327,7 @@ def ml_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kendall_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         kendall_tau_sql,
     )
 
@@ -2369,7 +2369,7 @@ def ml_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 # never a spine join (operators/ml_eval.py cumulative_gain).
 # ---------------------------------------------------------------------------
 def _gain_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         cumulative_gain_sql,
     )
 
@@ -2562,7 +2562,7 @@ _RBO_K, _RBO_P = 3, (9, 10)
 
 
 def _rbo_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         rbo_at_k_sql,
     )
 
@@ -2626,7 +2626,7 @@ _LL_DIV = 40000  # price quanta (cents) per probability quantum
 
 
 def _log_loss_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         log_loss_sql,
     )
 
@@ -2679,7 +2679,7 @@ _LLM_SMAX = 1000
 
 
 def _log_loss_mc_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         log_loss_multiclass_sql,
     )
 
@@ -2741,7 +2741,7 @@ _ECE_AD_BINS = 10
 
 
 def _ece_adaptive_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         ece_adaptive_sql,
     )
 

@@ -491,7 +491,7 @@ def lake_zonemap_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 # division, string-serialized (operators/dq.py distribution_drift_tvd).
 # ---------------------------------------------------------------------------
 def _drift_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.dq import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         distribution_drift_tvd_sql,
     )
 
@@ -534,7 +534,7 @@ _PSI_GRID = 1000
 
 
 def _psi_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.dq import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         distribution_psi_sql,
     )
 
@@ -575,7 +575,7 @@ def dq_distribution_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (operators/dq.py distribution_js).
 # ---------------------------------------------------------------------------
 def _js_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.dq import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         distribution_js_sql,
     )
 
@@ -604,7 +604,7 @@ def _js_oracle() -> str:
 # (operators/dq.py distribution_kl).
 # ---------------------------------------------------------------------------
 def _kl_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.dq import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         distribution_kl_sql,
     )
 
@@ -665,7 +665,7 @@ def dq_distribution_js(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the full category breakdown under the value hash.
 # ---------------------------------------------------------------------------
 def _drift_explain_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.dq import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         distribution_drift_explain_sql,
     )
 

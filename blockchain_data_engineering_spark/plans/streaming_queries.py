@@ -506,7 +506,7 @@ def _serve_from_store(
 
 
 def _kappa_store_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         cohens_kappa_from_cells_sql,
     )
 
@@ -530,7 +530,7 @@ def ml_kappa_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _macro_f1_store_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         multiclass_macro_f1_from_cells_sql,
     )
 
@@ -556,7 +556,7 @@ def ml_macro_f1_from_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ari_store_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         adjusted_rand_from_cells_sql,
     )
 

@@ -2284,7 +2284,7 @@ def ml_multiclass_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # raters constant and identical → denominator 0) returns NULL.
 # ---------------------------------------------------------------------------
 def _kappa_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         cohens_kappa_sql,
     )
 
@@ -2328,7 +2328,7 @@ _FLEISS_PREFIX = 80
 
 
 def _fleiss_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         fleiss_kappa_sql,
     )
 
@@ -2409,7 +2409,7 @@ _KRIPP_MAX_RATERS = 4
 
 
 def _krippendorff_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         krippendorff_alpha_sql,
     )
 
@@ -2497,7 +2497,7 @@ def ml_krippendorff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TX.quality_score).
 # ---------------------------------------------------------------------------
 def _weighted_kappa_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         weighted_kappa_sql,
     )
 
@@ -2581,7 +2581,7 @@ _KINT_TOK_MIN = 40  # token-tier rater votes on docs ≥ this many tokens
 
 
 def _krippendorff_interval_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         krippendorff_alpha_sql,
     )
 
@@ -2705,7 +2705,7 @@ def ml_krippendorff_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # numerators string-serialized.
 # ---------------------------------------------------------------------------
 def _krippendorff_ordinal_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         krippendorff_alpha_sql,
     )
 
@@ -2855,7 +2855,7 @@ _MI_GRID = 1000
 
 
 def _label_mi_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         label_mi_sql,
     )
 
@@ -2905,7 +2905,7 @@ def ml_label_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (operators/ml_eval.py adjusted_rand_index), string-serialized.
 # ---------------------------------------------------------------------------
 def _ari_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         adjusted_rand_sql,
     )
 
@@ -2948,7 +2948,7 @@ def ml_adjusted_rand(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cells as kappa/macro-F1/MI/ARI.
 # ---------------------------------------------------------------------------
 def _class_report_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         multiclass_class_report_sql,
     )
 
@@ -2998,7 +2998,7 @@ _EXPLAIN_TOP = 100
 
 
 def _agreement_explain_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         krippendorff_explain_sql,
     )
 
@@ -3096,7 +3096,7 @@ _ETL_BINS = 10
 
 
 def _ece_top_label_oracle() -> str:
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.plans.oracles import (
         ece_top_label_sql,
     )
 

@@ -659,8 +659,10 @@ def test_adjusted_rand_null_keys_match_both_sql_twins(spark, duck):
     twins (``adjusted_rand_sql`` over the facts,
     ``adjusted_rand_from_cells_sql`` over the cells)."""
     from blockchain_data_engineering_spark.operators.ml_eval import (
-        adjusted_rand_from_cells_sql,
         adjusted_rand_index,
+    )
+    from blockchain_data_engineering_spark.plans.oracles import (
+        adjusted_rand_from_cells_sql,
         adjusted_rand_sql,
     )
 

@@ -316,10 +316,8 @@ def test_kendall_tau_null_group_keys_excluded(spark):
 
 
 def test_ece_bins_guard(spark):
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        ece,
-        ece_sql,
-    )
+    from blockchain_data_engineering_spark.operators.ml_eval import ece
+    from blockchain_data_engineering_spark.plans.oracles import ece_sql
 
     df = spark.createDataFrame([(True, 1)], "y boolean, s long")
     with pytest.raises(ValueError, match="n_bins"):

@@ -130,8 +130,8 @@ def test_log_loss_sql_twin_truncates_like_spark(spark):
     import duckdb
     import pandas as pd
 
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        log_loss,
+    from blockchain_data_engineering_spark.operators.ml_eval import log_loss
+    from blockchain_data_engineering_spark.plans.oracles import (
         log_loss_multiclass_sql,
         log_loss_sql,
     )

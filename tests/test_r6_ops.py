@@ -305,10 +305,8 @@ def test_auc_exact_sql_generator_matches_spark_without_keys(spark):
     it."""
     import duckdb
 
-    from blockchain_data_engineering_spark.operators.ml_eval import (
-        auc_exact,
-        auc_exact_sql,
-    )
+    from blockchain_data_engineering_spark.operators.ml_eval import auc_exact
+    from blockchain_data_engineering_spark.plans.oracles import auc_exact_sql
 
     rows = [(3, True), (1, False), (2, True), (2, False), (5, False)]
     sp = auc_exact(

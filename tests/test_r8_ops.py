@@ -339,10 +339,10 @@ def test_review_fixes_sql_twins_and_null_bounds(spark, duck):
     from blockchain_data_engineering_spark.operators.heavy_hitters import (
         heavy_hitters_state,
     )
-    from blockchain_data_engineering_spark.operators.ml_eval import (
+    from blockchain_data_engineering_spark.operators.ml_eval import rrf_fuse
+    from blockchain_data_engineering_spark.plans.oracles import (
         average_precision_sql,
         multiclass_macro_f1_from_cells_sql,
-        rrf_fuse,
     )
     from blockchain_data_engineering_spark.sources.io import (
         zonemap_prune_summary,
