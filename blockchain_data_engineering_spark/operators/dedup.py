@@ -28,33 +28,40 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from blockchain_data_engineering_spark.operators.text import char_shingles, fingerprint
+from blockchain_data_engineering_spark.operators.text import (
+    DOC_ID,
+    TEXT,
+    char_shingles,
+    fingerprint,
+)
+
+# Paragraphs are split on blank lines and re-joined with one.
+PARAGRAPH_SEP = r"\n{2,}"
+PARAGRAPH_JOIN = "\n\n"
+# A token span is a duplicate once it occurs in this many documents.
+SPAN_MIN_DOCS = 2
+# tune_lsh_params' loss weights on the false-positive and the
+# false-negative probability mass.
+LSH_FP_WEIGHT = 0.5
+LSH_FN_WEIGHT = 0.5
 
 # ---------------------------------------------------------------- exact ---
 
 
-def exact_dedup_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """(fp, n_docs, canonical_id): hash-groupBy exact dedup; the
     canonical representative is the minimum id (deterministic)."""
     return (
-        df.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
+        df.select(F.col(DOC_ID), fingerprint(F.col(TEXT)).alias("fp"))
         .groupBy("fp")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.min(id_col).alias("canonical_id"),
+            F.min(DOC_ID).alias("canonical_id"),
         )
     )
 
 
-def paragraph_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep_regex: str = r"\n{2,}",
-    join_sep: str = "\n\n",
-) -> DataFrame:
+def paragraph_dedup(df: DataFrame) -> DataFrame:
     """Paragraph-level exact dedup — the standard pre-MinHash pass of
     the RefinedWeb recipe (Penedo et al. 2023 §3.3 / Lee et al. 2022):
     split every document on blank lines, md5 each paragraph, keep only
@@ -77,22 +84,22 @@ def paragraph_dedup(
     """
     paras = (
         df.select(
-            F.col(id_col),
-            F.posexplode(F.split(F.col(text_col), sep_regex)).alias(
+            F.col(DOC_ID),
+            F.posexplode(F.split(F.col(TEXT), PARAGRAPH_SEP)).alias(
                 "idx", "para"
             ),
         )
         .where(F.length("para") > 0)
         .withColumn("h", F.md5(F.col("para")))
         .withColumn(
-            "n_paras", F.count(F.lit(1)).over(Window.partitionBy(id_col))
+            "n_paras", F.count(F.lit(1)).over(Window.partitionBy(DOC_ID))
         )
     )
-    w = Window.partitionBy("h").orderBy(F.col(id_col), F.col("idx"))
+    w = Window.partitionBy("h").orderBy(F.col(DOC_ID), F.col("idx"))
     kept = paras.withColumn("__rn", F.row_number().over(w)).where(
         F.col("__rn") == 1
     )
-    return kept.groupBy(id_col).agg(
+    return kept.groupBy(DOC_ID).agg(
         F.max("n_paras").cast("long").alias("n_paragraphs"),
         F.count(F.lit(1)).cast("long").alias("n_kept"),
         F.array_join(
@@ -102,7 +109,7 @@ def paragraph_dedup(
                 ),
                 lambda s: s.getField("para"),
             ),
-            join_sep,
+            PARAGRAPH_JOIN,
         ).alias("text_dedup"),
     )
 
@@ -111,7 +118,7 @@ def paragraph_dedup(
 
 
 def shingle_array(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 5
+    df: DataFrame, k: int = 5
 ) -> DataFrame:
     """(id, shingles: array<string>) — the per-doc DISTINCT shingle set
     kept as an array column.
@@ -128,11 +135,11 @@ def shingle_array(
     per-doc sets like word n-grams (:func:`word_ngram_array`, ~2x).
     Measure before picking.
     """
-    n = F.greatest(F.length(F.col(text_col)) - (k - 1), F.lit(1))
+    n = F.greatest(F.length(F.col(TEXT)) - (k - 1), F.lit(1))
     shingles = F.transform(
-        F.sequence(F.lit(1), n), lambda i: F.col(text_col).substr(i, F.lit(k))
+        F.sequence(F.lit(1), n), lambda i: F.col(TEXT).substr(i, F.lit(k))
     )
-    return df.select(F.col(id_col), F.array_distinct(shingles).alias("shingles"))
+    return df.select(F.col(DOC_ID), F.array_distinct(shingles).alias("shingles"))
 
 
 def jaccard_verify_arrays(candidates: DataFrame, sh_arr: DataFrame) -> DataFrame:
@@ -172,15 +179,13 @@ def jaccard_verify_arrays(candidates: DataFrame, sh_arr: DataFrame) -> DataFrame
 
 
 def shingle_set(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 5
+    df: DataFrame, k: int = 5
 ) -> DataFrame:
     """Distinct (id, shingle) pairs — the Jaccard ground set."""
-    return char_shingles(df, text_col, id_col, k).distinct()
+    return char_shingles(df, k).distinct()
 
 
-def minhash_signatures(
-    shingles: DataFrame, n_hashes: int = 9, id_col: str = "doc_id"
-) -> DataFrame:
+def minhash_signatures(shingles: DataFrame, n_hashes: int = 9) -> DataFrame:
     """One row per doc with columns mh0..mh{n-1} (BIGINT).
 
     The j-th permutation is simulated by md5(j ‖ ':' ‖ shingle); the
@@ -212,11 +217,11 @@ def minhash_signatures(
         ).alias(f"mh{j}")
         for j in range(n_hashes)
     ]
-    return shingles.groupBy(id_col).agg(*aggs)
+    return shingles.groupBy(DOC_ID).agg(*aggs)
 
 
 def lsh_bands(
-    signatures: DataFrame, n_hashes: int = 9, band_size: int = 3, id_col: str = "doc_id"
+    signatures: DataFrame, n_hashes: int = 9, band_size: int = 3
 ) -> DataFrame:
     """(id, band_idx, band_val): hash each band of the signature."""
     if n_hashes % band_size != 0:
@@ -246,19 +251,19 @@ def lsh_bands(
     # collide with every other in EVERY band — O(m²) junk candidates
     return (
         signatures.where(F.col("mh0").isNotNull())
-        .select(id_col, F.explode(F.array(*bands)).alias("band"))
-        .select(id_col, "band.band_idx", "band.band_val")
+        .select(DOC_ID, F.explode(F.array(*bands)).alias("band"))
+        .select(DOC_ID, "band.band_idx", "band.band_val")
     )
 
 
-def lsh_candidate_pairs(bands: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def lsh_candidate_pairs(bands: DataFrame) -> DataFrame:
     """Distinct (id_a < id_b) pairs sharing at least one band bucket —
     the ONLY pairs that ever get compared (the scale trick)."""
     a = bands.select(
-        F.col(id_col).alias("id_a"), "band_idx", "band_val"
+        F.col(DOC_ID).alias("id_a"), "band_idx", "band_val"
     )
     b = bands.select(
-        F.col(id_col).alias("id_b"), "band_idx", "band_val"
+        F.col(DOC_ID).alias("id_b"), "band_idx", "band_val"
     )
     return (
         a.join(b, ["band_idx", "band_val"])
@@ -294,22 +299,22 @@ def simhash_bit_exprs(hash_col: str = "h", n_hex: int = 8) -> list[str]:
 
 
 def simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n_hex: int = 8
+    df: DataFrame, n_hex: int = 8
 ) -> DataFrame:
     """(id, simhash): 4·n_hex-bit SimHash over whitespace tokens
     (token hash = md5; bit b of the signature = sign of the sum of
     ±1 token contributions). One explode + one groupBy."""
     toks = df.select(
-        id_col, F.explode(F.split(F.col(text_col), " ")).alias("token")
+        DOC_ID, F.explode(F.split(F.col(TEXT), " ")).alias("token")
     ).withColumn("h", F.md5(F.col("token")))
     bit_terms = simhash_bit_exprs("h", n_hex)
     aggs = [F.expr(f"sum({t})").alias(f"s{i}") for i, t in enumerate(bit_terms)]
-    summed = toks.groupBy(id_col).agg(*aggs)
+    summed = toks.groupBy(DOC_ID).agg(*aggs)
     bits = [
         F.when(F.col(f"s{i}") >= 0, F.lit("1")).otherwise(F.lit("0"))
         for i in range(len(bit_terms))
     ]
-    return summed.select(id_col, F.concat(*bits).alias("simhash"))
+    return summed.select(DOC_ID, F.concat(*bits).alias("simhash"))
 
 
 def simhash_block_pairs(
@@ -317,7 +322,6 @@ def simhash_block_pairs(
     n_blocks: int = 8,
     sig_bits: int = 32,
     t: int = 2,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Candidate (id_a < id_b) pairs agreeing on at least one
     ``t``-block combination — Manku et al.'s multi-table scheme
@@ -351,10 +355,10 @@ def simhash_block_pairs(
         ]
     )
     keyed = signatures.select(
-        id_col, F.explode(blocks).alias("b")
-    ).select(id_col, "b.blk_idx", "b.blk_val")
-    a = keyed.select(F.col(id_col).alias("id_a"), "blk_idx", "blk_val")
-    b = keyed.select(F.col(id_col).alias("id_b"), "blk_idx", "blk_val")
+        DOC_ID, F.explode(blocks).alias("b")
+    ).select(DOC_ID, "b.blk_idx", "b.blk_val")
+    a = keyed.select(F.col(DOC_ID).alias("id_a"), "blk_idx", "blk_val")
+    b = keyed.select(F.col(DOC_ID).alias("id_b"), "blk_idx", "blk_val")
     return (
         a.join(b, ["blk_idx", "blk_val"])
         .where(F.col("id_a") < F.col("id_b"))
@@ -367,14 +371,14 @@ def simhash_block_pairs(
 
 
 def word_ngram_array(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
+    df: DataFrame, n: int = 3
 ) -> DataFrame:
     """(id, shingles: array<string>) — per-doc DISTINCT word n-grams as
     an array column (narrow, zero shuffle; see :func:`shingle_array`)."""
-    tk = F.split(F.col(text_col), " ")
+    tk = F.split(F.col(TEXT), " ")
     idxs = F.sequence(F.lit(1), F.greatest(F.size(tk) - (n - 1), F.lit(1)))
     grams = F.transform(idxs, lambda i: F.concat_ws(" ", F.slice(tk, i, n)))
-    return df.select(F.col(id_col), F.array_distinct(grams).alias("shingles"))
+    return df.select(F.col(DOC_ID), F.array_distinct(grams).alias("shingles"))
 
 
 # ---------------------------------------------------- duplicated spans ---
@@ -383,13 +387,10 @@ def word_ngram_array(
 def duplicated_spans(
     df: DataFrame,
     n: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_docs: int = 2,
 ) -> DataFrame:
     """Exact duplicated-substring spans, Lee et al. 2022 style
     ("Deduplicating Training Data Makes Language Models Better"): any
-    token window of length ``n`` that occurs in >= ``min_docs``
+    token window of length ``n`` that occurs in >= ``SPAN_MIN_DOCS``
     distinct documents is a duplicated gram; overlapping/adjacent
     duplicated grams within a document merge into maximal spans.
     Returns (id, span_start, span_end, dup_tokens) — token positions
@@ -405,14 +406,14 @@ def duplicated_spans(
     shrink shuffle width (~1e-9 collision odds per corpus); the string
     key is kept here for bit-exact DuckDB parity.
     """
-    tk = F.split(F.col(text_col), " ")
+    tk = F.split(F.col(TEXT), " ")
     # pos is the 0-based start index; transform's lambda arg IS the
     # position because the sequence enumerates 0..size-n directly
     grams = (
-        df.select(F.col(id_col), tk.alias("__tk"))
+        df.select(F.col(DOC_ID), tk.alias("__tk"))
         .where(F.size("__tk") >= n)
         .select(
-            id_col,
+            DOC_ID,
             F.explode(
                 F.transform(
                     F.sequence(F.lit(0), F.size("__tk") - n),
@@ -425,18 +426,18 @@ def duplicated_spans(
                 )
             ).alias("pg"),
         )
-        .select(id_col, F.col("pg.pos").alias("pos"), F.col("pg.g").alias("g"))
+        .select(DOC_ID, F.col("pg.pos").alias("pos"), F.col("pg.g").alias("g"))
     )
     dup = (
         grams.groupBy("g")
-        .agg(F.count_distinct(F.col(id_col)).alias("nd"))
-        .where(F.col("nd") >= min_docs)
+        .agg(F.count_distinct(F.col(DOC_ID)).alias("nd"))
+        .where(F.col("nd") >= SPAN_MIN_DOCS)
         .select("g")
     )
     hits = grams.join(dup, "g", "left_semi").select(
-        id_col, "pos", (F.col("pos") + (n - 1)).alias("e")
+        DOC_ID, "pos", (F.col("pos") + (n - 1)).alias("e")
     )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy(DOC_ID).orderBy("pos")
     prev_end = F.max("e").over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -450,10 +451,10 @@ def duplicated_spans(
         ),
     )
     return (
-        isl.groupBy(id_col, "island")
+        isl.groupBy(DOC_ID, "island")
         .agg(F.min("pos").alias("span_start"), F.max("e").alias("span_end"))
         .select(
-            id_col,
+            DOC_ID,
             "span_start",
             "span_end",
             (F.col("span_end") - F.col("span_start") + 1).alias("dup_tokens"),
@@ -464,9 +465,6 @@ def duplicated_spans(
 def remove_duplicated_spans(
     df: DataFrame,
     n: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_docs: int = 2,
 ) -> DataFrame:
     """Exact substring DEDUPLICATION (the cut stage of Lee et al.
     2022): every token position covered by a cross-doc-duplicated
@@ -484,15 +482,15 @@ def remove_duplicated_spans(
     groupBy(id) over the doc's own tokens with an in-row sort — no
     corpus-sized broadcast anywhere.
     """
-    tk = F.split(F.col(text_col), " ")
+    tk = F.split(F.col(TEXT), " ")
     toks = df.select(
-        F.col(id_col), F.posexplode(tk).alias("pos", "tok")
+        F.col(DOC_ID), F.posexplode(tk).alias("pos", "tok")
     )
     grams = (
-        df.select(F.col(id_col), tk.alias("__tk"))
+        df.select(F.col(DOC_ID), tk.alias("__tk"))
         .where(F.size("__tk") >= n)
         .select(
-            id_col,
+            DOC_ID,
             F.explode(
                 F.transform(
                     F.sequence(F.lit(0), F.size("__tk") - n),
@@ -505,26 +503,26 @@ def remove_duplicated_spans(
                 )
             ).alias("pg"),
         )
-        .select(id_col, F.col("pg.pos").alias("pos"), F.col("pg.g").alias("g"))
+        .select(DOC_ID, F.col("pg.pos").alias("pos"), F.col("pg.g").alias("g"))
     )
     owners = grams.groupBy("g").agg(
-        F.count_distinct(F.col(id_col)).alias("nd"),
-        F.min(F.col(id_col)).alias("owner"),
-    ).where(F.col("nd") >= min_docs)
+        F.count_distinct(F.col(DOC_ID)).alias("nd"),
+        F.min(F.col(DOC_ID)).alias("owner"),
+    ).where(F.col("nd") >= SPAN_MIN_DOCS)
     # positions covered by a duplicated gram in a NON-owner doc
     cut = (
         grams.join(owners, "g")
-        .where(F.col(id_col) != F.col("owner"))
+        .where(F.col(DOC_ID) != F.col("owner"))
         .select(
-            id_col,
+            DOC_ID,
             F.explode(
                 F.sequence(F.col("pos"), F.col("pos") + (n - 1))
             ).alias("pos"),
         )
         .distinct()
     )
-    kept = toks.join(cut, [id_col, "pos"], "left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
+    kept = toks.join(cut, [DOC_ID, "pos"], "left_anti")
+    rebuilt = kept.groupBy(DOC_ID).agg(
         F.concat_ws(
             " ",
             F.transform(
@@ -536,12 +534,12 @@ def remove_duplicated_spans(
         ).alias("text_deduped"),
         F.count(F.lit(1)).alias("__kept"),
     )
-    n_tok = F.size(F.split(F.col(text_col), " "))
+    n_tok = F.size(F.split(F.col(TEXT), " "))
     return (
-        df.select(id_col, n_tok.alias("__n"))
-        .join(rebuilt, id_col, "left")
+        df.select(DOC_ID, n_tok.alias("__n"))
+        .join(rebuilt, DOC_ID, "left")
         .select(
-            id_col,
+            DOC_ID,
             F.coalesce(F.col("text_deduped"), F.lit("")).alias("text_deduped"),
             (F.col("__n") - F.coalesce(F.col("__kept"), F.lit(0)))
             .cast("long")
@@ -553,8 +551,6 @@ def remove_duplicated_spans(
 def tune_lsh_params(
     threshold: float,
     n_hashes: int,
-    fp_weight: float = 0.5,
-    fn_weight: float = 0.5,
 ) -> tuple[int, int]:
     """Choose (bands, rows_per_band) for MinHash LSH from the target
     Jaccard ``threshold`` — the datasketch/"Mining of Massive
@@ -589,7 +585,7 @@ def tune_lsh_params(
             for i in range(steps):
                 s = threshold + (i + 0.5) * dx
                 fn += (1.0 - (1.0 - (1.0 - s**r) ** b)) * dx
-            err = fp_weight * fp + fn_weight * fn
+            err = LSH_FP_WEIGHT * fp + LSH_FN_WEIGHT * fn
             if err < best_err:
                 best, best_err = (b, r), err
     return best

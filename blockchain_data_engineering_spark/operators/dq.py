@@ -70,13 +70,11 @@ def row_expectations(
     )
 
 
-def unique_expectation(
-    df: DataFrame, key_cols: Sequence[str], name: str | None = None
-) -> DataFrame:
+def unique_expectation(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """Key-uniqueness check: one groupBy on the key; ``n_fail`` is the
     number of ROWS participating in a duplicated key (so a publisher
     can quantify the blast radius, not just detect it)."""
-    label = name or "unique:" + ",".join(key_cols)
+    label = "unique:" + ",".join(key_cols)
     per_key = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__c"))
     return per_key.agg(
         F.lit(label).alias("check_name"),
@@ -152,7 +150,6 @@ def gated_upsert(
     checks: dict[str, Column],
     quarantine_path: str,
     batch_id: int,
-    unique_keys: Sequence[Sequence[str]] = (),
 ) -> bool:
     """Expectation-gated foreachBatch sink: run the suite on the batch
     BEFORE touching the table; a clean batch upserts as usual, a
@@ -176,7 +173,7 @@ def gated_upsert(
         write_partitioned,
     )
 
-    suite = expectation_suite(batch, checks, unique_keys)
+    suite = expectation_suite(batch, checks)
     failing = [
         r["check_name"]
         for r in suite.where(F.col("n_fail") > 0).collect()

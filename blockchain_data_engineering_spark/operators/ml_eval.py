@@ -27,35 +27,37 @@ engine, the repo-wide float contract (plans/parity.py).
 
 Scale shape:
 
-- ``auc_exact`` is the rank-sum (Mann-Whitney U) formulation with
-  average ranks for ties, computed WITHOUT a row-grain global sort:
-  one map-side-combinable ``groupBy(keys, score)`` collapses the fact
-  table to score grain, then a window ordered by score runs over the
-  DISTINCT-score table only — |distinct scores| rows per key group,
-  orders of magnitude smaller than the facts. With empty ``keys`` the
-  window is single-partition, bounded by distinct scores (document the
-  cardinality or bucket the scores first).
+- One score sweep. ``auc_exact``, ``pr_curve``, ``average_precision``
+  and ``cumulative_gain`` are read-outs of ``_sweep``: one
+  map-side-combinable ``groupBy(keys, score)`` collapses the facts to
+  distinct-score grain (``_per_score_counts``), then ONE window
+  ordered by score DESCENDING runs over that table only —
+  |distinct scores| rows per key group, never a row-grain sort — and
+  carries tp, fp, rows taken, the group's n and n_pos. A read-out
+  selects the columns it needs and Catalyst prunes the rest, so each
+  plan holds one Window. ``pr_curve`` emits every threshold (tp, fp),
+  ``average_precision`` sums one quantized term per threshold,
+  ``cumulative_gain`` explodes the budget buckets each threshold
+  covers, and ``auc_exact`` reads a score's ascending rank as
+  n − taken. With empty ``keys`` the window is single-partition,
+  bounded by distinct scores; the curve's OUTPUT grain is
+  |distinct scores| per group too, so bucket raw continuous scores
+  first (``plans.parity.quanta`` or coarser) — no plot needs more
+  operating points than score buckets.
 - ``confusion_counts`` is ONE hash aggregate (four conditional sums),
   map-side combinable, output grain = |key groups|.
-- The k-class agreement statistics — ``multiclass_macro_f1`` and the
-  ``multiclass_class_report`` it aggregates, ``cohens_kappa``,
-  ``weighted_kappa``, ``label_mutual_information`` and
-  ``adjusted_rand_index`` — all read ONE ``confusion_cells``
-  aggregate: ≤ k² (keys…, actual, predicted, n) rows per group, built
-  from facts or from already-counted cells (the eval-cell store's
-  rows, ``streaming/sketches.py``), so everything after it runs at
-  cell or class grain.
-- ``pr_curve`` is the full threshold sweep from the SAME
-  distinct-score grain as ``auc_exact``: cumulative tp/fp via a window
-  over the score aggregate — every operating point of the classifier
-  without ever sorting the facts. Its OUTPUT grain is also |distinct
-  scores| per group — bounded for quantized/bucketed scores, unbounded
-  for raw continuous ones. Bucket the scores first (``plans.parity.
-  quanta`` or coarser) before calling ``pr_curve`` on a 10^10-row raw
-  score column: the curve is the output a user will try to PLOT, and
-  no plot needs more operating points than score buckets.
-  ``average_precision`` collapses the same sweep to its scalar summary
-  without materializing the curve.
+- One cell core. The k-class agreement statistics —
+  ``multiclass_class_report`` (and ``multiclass_macro_f1``, one
+  aggregate over its rows), ``cohens_kappa``, ``weighted_kappa``,
+  ``label_mutual_information`` and ``adjusted_rand_index`` — read the
+  ≤ k² (keys…, actual, predicted, n) rows of ONE ``confusion_cells``
+  aggregate, built from facts or from already-counted cells (the
+  eval-cell store's rows, ``streaming/sketches.py``); ``fleiss_kappa``
+  counts its (item, category) votes with it too. Per-label row and
+  column totals come from ``_margins``, and kappa, MI and ARI
+  recombine their cell- and label-grain terms in ONE ``_tagged_sum``
+  (a null-padded union summed per group) instead of joining
+  group-grain aggregates, so nothing runs above cell or class grain.
 - The scalar summaries whose exact terms are rationals with VARYING
   denominators — ``average_precision`` (per-threshold precision),
   ``multiclass_macro_f1`` (per-class F1), ``ndcg_at_k`` (per-query
@@ -94,8 +96,10 @@ Overflow (r6 ADVICE): ``auc_exact``'s rank-sum totals are
 DECIMAL(38,0), not BIGINT — ``rank2_sum ~ 2·n_pos·n`` wraps signed
 64-bit once a key group exceeds ~2×10^9 rows, exactly the scale this
 module exists for. The SQL twin uses HUGEINT intermediates cast to
-DECIMAL(38,0). ``pr_curve``'s counts are plain row counts (≤ n), so
+DECIMAL(38,0). The sweep's counts are plain row counts (≤ n), so
 BIGINT holds them.
+
+Oracles: each statistic's DuckDB twin is in ``plans/oracles.py``.
 """
 
 from __future__ import annotations
@@ -130,14 +134,10 @@ def auc_exact(
     lacks both classes). NULL-label/NULL-score rows are excluded.
     """
     keyed = list(keys)
-    per_score = _per_score_counts(df, label, score, keyed)
-    w = Window.partitionBy(*keyed).orderBy("__s")
-    cum_before = F.coalesce(
-        F.sum(F.col("np") + F.col("nn")).over(
-            w.rowsBetween(Window.unboundedPreceding, -1)
-        ),
-        F.lit(0),
-    )
+    per_score, sweep = _sweep(df, label, score, keyed)
+    # rows ranked below this score = the group's rows minus those the
+    # descending sweep has taken up to and including it
+    cum_before = sweep["n"] - sweep["taken"]
     # doubled average rank of this score's tie run, weighted by its
     # positive count: Σ_pos 2r in one pass. The cumulative count and
     # the per-score np/nn fit BIGINT (they are row counts); the
@@ -174,10 +174,10 @@ def auc_exact(
 def _per_score_counts(
     df: DataFrame, label: Column, score: Column, keyed: list[str]
 ) -> DataFrame:
-    """Shared first stage of ``auc_exact`` / ``pr_curve``: collapse the
-    facts to distinct-score grain with per-score positive / negative
-    counts — ONE map-side-combinable aggregate; NULL labels and scores
-    excluded (module NULL convention)."""
+    """The facts at distinct-score grain (``__s``) with per-score
+    positive / negative counts ``np`` / ``nn`` — ONE map-side-combinable
+    aggregate; NULL labels and scores excluded (module NULL
+    convention)."""
     return (
         df.where(label.isNotNull() & score.isNotNull())
         .select(*keyed, label.alias("__pos"), score.alias("__s"))
@@ -187,6 +187,34 @@ def _per_score_counts(
             F.sum(F.when(F.col("__pos"), 0).otherwise(1)).alias("nn"),
         )
     )
+
+
+def _sweep(
+    df: DataFrame, label: Column, score: Column, keyed: list[str]
+) -> tuple[DataFrame, dict[str, Column]]:
+    """The threshold sweep :func:`auc_exact`, :func:`pr_curve`,
+    :func:`average_precision` and :func:`cumulative_gain` read: the
+    :func:`_per_score_counts` frame and the columns of ONE window over
+    it, partitioned by the keys and ordered by score DESCENDING (at
+    threshold t the classifier takes every score ≥ t) — ``tp``/``fp``
+    (positives/negatives taken), ``taken`` (rows taken), and the
+    group's ``n`` and ``n_pos``. Each statistic selects the columns it
+    reads from the per-score frame; Catalyst keeps only those window
+    expressions, so one sort serves them all."""
+    per_score = _per_score_counts(df, label, score, keyed)
+    w = Window.partitionBy(*keyed).orderBy(F.col("__s").desc())
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    whole = w.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    rows = F.col("np") + F.col("nn")
+    return per_score, {
+        "tp": F.sum("np").over(run).cast("long"),
+        "fp": F.sum("nn").over(run).cast("long"),
+        "taken": F.sum(rows).over(run).cast("long"),
+        "n": F.sum(rows).over(whole).cast("long"),
+        "n_pos": F.sum("np").over(whole).cast("long"),
+    }
 
 
 def pr_curve(
@@ -209,18 +237,13 @@ def pr_curve(
     (``tp + fp ≥ 1`` at every emitted threshold by construction;
     ``recall`` NULL for a group with no positives)."""
     keyed = list(keys)
-    per_score = _per_score_counts(df, label, score, keyed)
-    w = Window.partitionBy(*keyed).orderBy(F.col("__s").desc())
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    whole = w.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    per_score, sweep = _sweep(df, label, score, keyed)
     counted = per_score.select(
         *keyed,
         F.col("__s").alias("threshold"),
-        F.sum("np").over(run).cast("long").alias("tp"),
-        F.sum("nn").over(run).cast("long").alias("fp"),
-        F.sum("np").over(whole).cast("long").alias("__n_pos"),
+        sweep["tp"].alias("tp"),
+        sweep["fp"].alias("fp"),
+        sweep["n_pos"].alias("__n_pos"),
     )
     tp, fp, n_pos = F.col("tp"), F.col("fp"), F.col("__n_pos")
     return counted.select(
@@ -274,14 +297,12 @@ def average_precision(
     group has no positives). NULL labels/scores are excluded (module
     convention)."""
     keyed = list(keys)
-    per_score = _per_score_counts(df, label, score, keyed)
-    w = Window.partitionBy(*keyed).orderBy(F.col("__s").desc())
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    per_score, sweep = _sweep(df, label, score, keyed)
     counted = per_score.select(
         *keyed,
         F.col("np"),
-        F.sum("np").over(run).cast("long").alias("tp"),
-        F.sum("nn").over(run).cast("long").alias("fp"),
+        sweep["tp"].alias("tp"),
+        sweep["fp"].alias("fp"),
     )
     term = F.expr(
         f"(CAST(np AS DECIMAL(38,0)) * tp * {_AP_SCALE}) div (tp + fp)"
@@ -575,6 +596,65 @@ def _join_groups(
     return left.crossJoin(F.broadcast(right))
 
 
+def _margins(
+    cells: DataFrame,
+    keyed: list[str],
+    side: str,
+    total: str,
+    label: str | None = None,
+    *extra: Column,
+) -> DataFrame:
+    """One rater's per-label totals of the confusion cells: per
+    (keys…, ``side`` label — renamed ``label`` if given) the summed
+    cell count as ``total``, then the ``extra`` aggregates."""
+    lab = F.col(side) if label is None else F.col(side).alias(label)
+    return cells.groupBy(*keyed, lab).agg(
+        F.sum("n").cast("long").alias(total), *extra
+    )
+
+
+_DEC = "decimal(38,0)"
+
+
+def _tagged_sum(
+    keyed: list[str],
+    parts: Sequence[tuple[DataFrame, dict[str, Column]]],
+    tags: dict[str, str | int],
+    sums: Sequence[tuple[str, str]],
+) -> DataFrame:
+    """ONE tagged-union aggregation — how the agreement statistics
+    recombine their cell-grain and label-grain terms without a
+    group-grain compose join (whose keyless form Catalyst folds into a
+    nested-loop join). Each ``(frame, {tag: Column})`` part is
+    projected to (keys…, every tag of ``tags`` in order); a tag the
+    part does not carry is padded — a summed term (``tags`` gives its
+    type) with a typed NULL, a counter (``tags`` gives 0) with 0. The
+    parts are unioned and summed per group into ``sums``, ``(name,
+    tag)`` pairs, each ``coalesce(sum(tag), 0)`` cast to the tag's
+    type (counters to long), so an empty group reads 0."""
+
+    def pad(typ: str | int) -> Column:
+        return F.lit(None).cast(typ) if isinstance(typ, str) else F.lit(typ)
+
+    rows = [
+        frame.select(
+            *keyed, *[given.get(t, pad(typ)).alias(t) for t, typ in tags.items()]
+        )
+        for frame, given in parts
+    ]
+    union = rows[0]
+    for more in rows[1:]:
+        union = union.unionByName(more)
+    return union.groupBy(*keyed).agg(
+        *[
+            F.coalesce(F.sum(tag), F.lit(0))
+            .cast(tags[tag] if isinstance(tags[tag], str) else "long")
+            .alias(name)
+            for name, tag in sums
+        ]
+    )
+
+
 def multiclass_macro_f1(
     df: DataFrame,
     actual: Column,
@@ -680,15 +760,12 @@ def multiclass_class_report(
     matrix). Output grain = |classes| per group."""
     keyed = list(keys)
     cells = confusion_cells(df, actual, predicted, keys, n)
-    by_actual = cells.groupBy(*keyed, F.col("actual").alias("class")).agg(
-        F.sum("n").cast("long").alias("support"),
-        F.sum(F.when(F.col("actual") == F.col("predicted"), F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("tp"),
+    agree = F.when(F.col("actual") == F.col("predicted"), F.col("n"))
+    by_actual = _margins(
+        cells, keyed, "actual", "support", "class",
+        F.sum(agree.otherwise(0)).cast("long").alias("tp"),
     )
-    by_pred = cells.groupBy(*keyed, F.col("predicted").alias("class")).agg(
-        F.sum("n").cast("long").alias("pred_total")
-    )
+    by_pred = _margins(cells, keyed, "predicted", "pred_total", "class")
     per_class = by_actual.join(by_pred, keyed + ["class"], "left").select(
         *keyed,
         "class",
@@ -774,63 +851,20 @@ def adjusted_rand_index(
     pair2 = lambda c: F.expr(  # noqa: E731  C(x,2), exact: x(x−1) even
         f"(CAST({c} AS DECIMAL(38,0)) * ({c} - 1)) div 2"
     ).cast("decimal(38,0)")
-    by_a = cells.groupBy(*keyed, "actual").agg(
-        F.sum("n").cast("long").alias("__m")
-    )
-    by_p = cells.groupBy(*keyed, "predicted").agg(
-        F.sum("n").cast("long").alias("__m")
-    )
-    null_d = F.lit(None).cast("decimal(38,0)")
-    null_l = F.lit(None).cast("long")
-    cell_rows = cells.select(
-        *keyed,
-        F.col("n").alias("__tn"),
-        pair2("n").alias("__ts"),
-        null_d.alias("__ta"),
-        null_d.alias("__tb"),
-        F.lit(0).alias("__ca"),
-        F.lit(0).alias("__cp"),
-    )
-    a_rows = by_a.select(
-        *keyed,
-        null_l.alias("__tn"),
-        null_d.alias("__ts"),
-        pair2("__m").alias("__ta"),
-        null_d.alias("__tb"),
-        F.lit(1).alias("__ca"),
-        F.lit(0).alias("__cp"),
-    )
-    p_rows = by_p.select(
-        *keyed,
-        null_l.alias("__tn"),
-        null_d.alias("__ts"),
-        null_d.alias("__ta"),
-        pair2("__m").alias("__tb"),
-        F.lit(0).alias("__ca"),
-        F.lit(1).alias("__cp"),
-    )
-    agg = (
-        cell_rows.unionByName(a_rows)
-        .unionByName(p_rows)
-        .groupBy(*keyed)
-        .agg(
-            F.coalesce(F.sum("__tn"), F.lit(0)).cast("long").alias("n"),
-            F.coalesce(F.sum("__ca"), F.lit(0))
-            .cast("long")
-            .alias("n_classes_actual"),
-            F.coalesce(F.sum("__cp"), F.lit(0))
-            .cast("long")
-            .alias("n_classes_predicted"),
-            F.coalesce(F.sum("__ts"), F.lit(0))
-            .cast("decimal(38,0)")
-            .alias("__s"),
-            F.coalesce(F.sum("__ta"), F.lit(0))
-            .cast("decimal(38,0)")
-            .alias("__A"),
-            F.coalesce(F.sum("__tb"), F.lit(0))
-            .cast("decimal(38,0)")
-            .alias("__B"),
-        )
+    by_a = _margins(cells, keyed, "actual", "__m")
+    by_p = _margins(cells, keyed, "predicted", "__m")
+    agg = _tagged_sum(
+        keyed,
+        [
+            (cells, {"__tn": F.col("n"), "__ts": pair2("n")}),
+            (by_a, {"__ta": pair2("__m"), "__ca": F.lit(1)}),
+            (by_p, {"__tb": pair2("__m"), "__cp": F.lit(1)}),
+        ],
+        {"__tn": "long", "__ts": _DEC, "__ta": _DEC, "__tb": _DEC,
+         "__ca": 0, "__cp": 0},
+        [("n", "__tn"), ("n_classes_actual", "__ca"),
+         ("n_classes_predicted", "__cp"),
+         ("__s", "__ts"), ("__A", "__ta"), ("__B", "__tb")],
     )
     t = pair2("n")
     two = F.lit(2).cast("decimal(38,0)")
@@ -954,8 +988,8 @@ def label_mutual_information(
     # array psi_ln_lookup, r12 — same NULL/0 arms as the old LEFT
     # joins), carry both to the cells via the (keys, label) equi join
     def marginal(label_col: str, q_out: str, l_out: str) -> DataFrame:
-        m = cells_t.groupBy(*keyed, label_col).agg(
-            F.sum("n").cast("long").alias("__nm"),
+        m = _margins(
+            cells_t, keyed, label_col, "__nm", None,
             F.max("__nt").cast("long").alias("__nt"),
         )
         m = m.select(*keyed, label_col, q_of("__nm").alias(q_out))
@@ -970,7 +1004,6 @@ def label_mutual_information(
         .withColumn("__lc", psi_ln_lookup(tab, F.col("__q")))
     )
     zero_d = F.lit(0).cast("decimal(38,0)")
-    null_d = F.lit(None).cast("decimal(38,0)")
     mi_term = F.when(
         F.col("__q") > 0,
         F.col("__q").cast("decimal(38,0)")
@@ -980,59 +1013,20 @@ def label_mutual_information(
         F.col(q) > 0,
         F.col(q).cast("decimal(38,0)") * (F.lit(t_g) - F.col(l)),
     ).otherwise(zero_d)
-    # ONE tagged-union aggregation: cell rows carry (n, mi term),
-    # marginal rows carry their entropy term + a class counter — no
-    # group-grain compose joins (whose global constant-key form
-    # Catalyst folds into a BroadcastNestedLoopJoin)
-    cell_rows = quant.select(
-        *keyed,
-        F.col("n").alias("__tn"),
-        mi_term.alias("__tmi"),
-        null_d.alias("__tha"),
-        null_d.alias("__thp"),
-        F.lit(0).alias("__ca"),
-        F.lit(0).alias("__cp"),
-    )
-    a_rows = by_a.select(
-        *keyed,
-        F.lit(None).cast("long").alias("__tn"),
-        null_d.alias("__tmi"),
-        ent_term("__qa", "__la").alias("__tha"),
-        null_d.alias("__thp"),
-        F.lit(1).alias("__ca"),
-        F.lit(0).alias("__cp"),
-    )
-    p_rows = by_p.select(
-        *keyed,
-        F.lit(None).cast("long").alias("__tn"),
-        null_d.alias("__tmi"),
-        null_d.alias("__tha"),
-        ent_term("__qp", "__lp").alias("__thp"),
-        F.lit(0).alias("__ca"),
-        F.lit(1).alias("__cp"),
-    )
-    out = (
-        cell_rows.unionByName(a_rows)
-        .unionByName(p_rows)
-        .groupBy(*keyed)
-        .agg(
-            F.coalesce(F.sum("__tn"), F.lit(0)).cast("long").alias("n"),
-            F.coalesce(F.sum("__ca"), F.lit(0))
-            .cast("long")
-            .alias("n_classes_actual"),
-            F.coalesce(F.sum("__cp"), F.lit(0))
-            .cast("long")
-            .alias("n_classes_predicted"),
-            F.coalesce(F.sum("__tmi"), F.lit(0))
-            .cast("decimal(38,0)")
-            .alias("mi_num"),
-            F.coalesce(F.sum("__tha"), F.lit(0))
-            .cast("decimal(38,0)")
-            .alias("ha_num"),
-            F.coalesce(F.sum("__thp"), F.lit(0))
-            .cast("decimal(38,0)")
-            .alias("hp_num"),
-        )
+    # cell rows carry (n, mi term), marginal rows their entropy term
+    # and a class counter
+    out = _tagged_sum(
+        keyed,
+        [
+            (quant, {"__tn": F.col("n"), "__tmi": mi_term}),
+            (by_a, {"__tha": ent_term("__qa", "__la"), "__ca": F.lit(1)}),
+            (by_p, {"__thp": ent_term("__qp", "__lp"), "__cp": F.lit(1)}),
+        ],
+        {"__tn": "long", "__tmi": _DEC, "__tha": _DEC, "__thp": _DEC,
+         "__ca": 0, "__cp": 0},
+        [("n", "__tn"), ("n_classes_actual", "__ca"),
+         ("n_classes_predicted", "__cp"),
+         ("mi_num", "__tmi"), ("ha_num", "__tha"), ("hp_num", "__thp")],
     )
     den = (F.lit(g).cast("decimal(38,0)") * F.lit(_PSI_LN_SCALE)).cast(
         "decimal(38,0)"
@@ -1136,7 +1130,6 @@ def rrf_fuse(
     rank_col: str = "rank",
     k: int = 10,
     c: int = 60,
-    top_n: int | None = None,
 ) -> DataFrame:
     """Reciprocal rank fusion (Cormack, Clarke & Büttcher, SIGIR 2009):
     combine N per-query rankings into one —
@@ -1154,7 +1147,8 @@ def rrf_fuse(
     Scale shape: one union of the (already top-k-bounded) input
     rankings, one (query, item) sum aggregate — map-side combinable —
     and one per-query rank window over ≤ n_lists·k fused rows per
-    query (WindowGroupLimit-bounded when ``top_n`` is set). Returns
+    query (a ``fused_rank <= n`` filter on the result bounds it by
+    WindowGroupLimit). Returns
     ``(query_col, item_col, rrf_num, fused_rank)``; ``rrf_num`` is the
     exact integer score (descending ⇔ descending true RRF score).
 
@@ -1206,10 +1200,7 @@ def rrf_fuse(
     w = Window.partitionBy(query_col).orderBy(
         F.col("rrf_num").desc(), F.col(item_col)
     )
-    out = fused.withColumn("fused_rank", F.row_number().over(w))
-    if top_n is not None:
-        out = out.where(F.col("fused_rank") <= top_n)
-    return out
+    return fused.withColumn("fused_rank", F.row_number().over(w))
 
 
 def confusion_counts(
@@ -1594,12 +1585,8 @@ def cohens_kappa(
     in gate queries) and ``kappa``."""
     keyed = list(keys)
     cells = confusion_cells(df, rater_a, rater_b, keys, n)
-    by_a = cells.groupBy(*keyed, F.col("actual").alias("__l")).agg(
-        F.sum("n").cast("long").alias("__r")
-    )
-    by_b = cells.groupBy(*keyed, F.col("predicted").alias("__l")).agg(
-        F.sum("n").cast("long").alias("__c")
-    )
+    by_a = _margins(cells, keyed, "actual", "__r", "__l")
+    by_b = _margins(cells, keyed, "predicted", "__c", "__l")
     # full outer on (keys, label): a label seen by only one rater has
     # marginal 0 on the other side and contributes 0 to p_e, but it
     # still counts in n_labels
@@ -1608,37 +1595,26 @@ def cohens_kappa(
         F.coalesce(F.col("__r"), F.lit(0)).cast("decimal(38,0)").alias("__r"),
         F.coalesce(F.col("__c"), F.lit(0)).cast("decimal(38,0)").alias("__c"),
     )
-    # ONE tagged-union aggregation: cell rows carry (n, agreement),
-    # label rows carry r·c and a label counter — no compose join of
-    # the observed and the chance aggregate (the label_mutual_
-    # information recombination)
-    null_l = F.lit(None).cast("long")
+    # cell rows carry (n, agreement), label rows r·c and a label
+    # counter
     agree = F.when(F.col("actual") == F.col("predicted"), F.col("n"))
-    cell_rows = cells.select(
-        *keyed,
-        F.col("n").alias("__tn"),
-        agree.otherwise(0).alias("__ta"),
-        F.lit(None).cast("decimal(38,0)").alias("__trc"),
-        F.lit(0).alias("__tl"),
-    )
-    label_rows = marg.select(
-        *keyed,
-        null_l.alias("__tn"),
-        null_l.alias("__ta"),
-        (F.col("__r") * F.col("__c")).cast("decimal(38,0)").alias("__trc"),
-        F.lit(1).alias("__tl"),
-    )
-    agg = (
-        cell_rows.unionByName(label_rows)
-        .groupBy(*keyed)
-        .agg(
-            F.coalesce(F.sum("__tn"), F.lit(0)).cast("long").alias("n"),
-            F.coalesce(F.sum("__ta"), F.lit(0)).cast("long").alias("__agree"),
-            F.coalesce(F.sum("__trc"), F.lit(0))
-            .cast("decimal(38,0)")
-            .alias("__pe_sum"),
-            F.coalesce(F.sum("__tl"), F.lit(0)).cast("long").alias("n_labels"),
-        )
+    agg = _tagged_sum(
+        keyed,
+        [
+            (cells, {"__tn": F.col("n"), "__ta": agree.otherwise(0)}),
+            (
+                marg,
+                {
+                    "__trc": (F.col("__r") * F.col("__c")).cast(
+                        "decimal(38,0)"
+                    ),
+                    "__tl": F.lit(1),
+                },
+            ),
+        ],
+        {"__tn": "long", "__ta": "long", "__trc": _DEC, "__tl": 0},
+        [("n", "__tn"), ("__agree", "__ta"), ("__pe_sum", "__trc"),
+         ("n_labels", "__tl")],
     )
     n_d = F.col("n").cast("decimal(38,0)")
     num = (n_d * F.col("__agree") - F.col("__pe_sum")).cast("decimal(38,0)")
@@ -1907,19 +1883,14 @@ def cumulative_gain(
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     keyed = list(keys)
-    per_score = _per_score_counts(df, label, score, keyed)
-    w = Window.partitionBy(*keyed).orderBy(F.col("__s").desc())
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    whole = w.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    per_score, sweep = _sweep(df, label, score, keyed)
     counted = per_score.select(
         *keyed,
-        F.sum(F.col("np") + F.col("nn")).over(run).cast("long").alias("__cum"),
-        F.sum("np").over(run).cast("long").alias("__tp"),
+        sweep["taken"].alias("__cum"),
+        sweep["tp"].alias("__tp"),
         (F.col("np") + F.col("nn")).cast("long").alias("__rows"),
-        F.sum(F.col("np") + F.col("nn")).over(whole).cast("long").alias("__n"),
-        F.sum("np").over(whole).cast("long").alias("__npos"),
+        sweep["n"].alias("__n"),
+        sweep["n_pos"].alias("__npos"),
     )
     nb = int(n_buckets)
     lo = F.expr(
@@ -1992,8 +1963,11 @@ def fleiss_kappa(
     (every vote in one category — P̄_e = 1, agreement degenerate — or
     no complete items).
 
-    Scale shape: ONE map-side-combinable (item, category) cell
-    aggregate, an item-grain total + semi join to drop partial
+    Scale shape: the :func:`confusion_cells` aggregate with items as
+    the "actual" and categories as the "predicted" label (ONE
+    map-side-combinable (item, category) aggregate, NULL items,
+    categories and keys dropped), an item-grain total + semi join to
+    drop partial
     ballots, then category-grain and group-grain re-aggregations —
     nothing runs above cell grain. Returns ``n_items``,
     ``n_items_dropped``, ``n_categories``, ``fleiss_num``/
@@ -2003,19 +1977,17 @@ def fleiss_kappa(
         raise ValueError(f"n_raters must be >= 2, got {n_raters}")
     keyed = list(keys)
     nr = int(n_raters)
-    # NULL-keyed rows excluded at entry: the kept-ballot semi join and
-    # the drops/s1/s2 recombination join on `keys` and cannot match
-    # NULL = NULL (the kendall_tau keyed-join alignment convention)
-    not_null = F.col(item_col).isNotNull() & F.col(category_col).isNotNull()
-    for c in keyed:
-        not_null = not_null & F.col(c).isNotNull()
-    base = df.where(not_null).select(
+    # the (item, category) vote counts are confusion cells; their
+    # NULL-key exclusion is what the kept-ballot semi join and the
+    # drops/s1/s2 recombination need, since a join on `keys` cannot
+    # match NULL = NULL
+    cells = confusion_cells(
+        df, F.col(item_col), F.col(category_col), keyed
+    ).select(
         *keyed,
-        F.col(item_col).alias("__i"),
-        F.col(category_col).alias("__c"),
-    )
-    cells = base.groupBy(*keyed, "__i", "__c").agg(
-        F.count(F.lit(1)).cast("long").alias("__nic")
+        F.col("actual").alias("__i"),
+        F.col("predicted").alias("__c"),
+        F.col("n").alias("__nic"),
     )
     item_tot = cells.groupBy(*keyed, "__i").agg(
         F.sum("__nic").cast("long").alias("__ni")
@@ -2561,12 +2533,8 @@ def weighted_kappa(
         .cast("decimal(38,0)")
         .alias("__obs"),
     )
-    by_a = cells.groupBy(*keyed, F.col("actual").alias("__la")).agg(
-        F.sum("n").cast("long").alias("__r")
-    )
-    by_b = cells.groupBy(*keyed, F.col("predicted").alias("__lb")).agg(
-        F.sum("n").cast("long").alias("__c")
-    )
+    by_a = _margins(cells, keyed, "actual", "__r", "__la")
+    by_b = _margins(cells, keyed, "predicted", "__c", "__lb")
     pairs = _join_groups(by_a, by_b, keyed)
     exp = pairs.groupBy(*keyed).agg(
         F.coalesce(

@@ -32,6 +32,14 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 TOKEN_PATTERN = r"[A-Za-z0-9_]+|[^A-Za-z0-9_\s]"
 
+# The document columns every corpus operator reads: the text, the
+# document id and (for sequence packing) the shard it belongs to.
+TEXT = "text"
+DOC_ID = "doc_id"
+SHARD = "source"
+# decimal digits the per-document LM/DSIR log-scores are floored to
+SCORE_DIGITS = 4
+
 
 def tokens(text: Column) -> Column:
     """Whitespace tokenization (exact parity with standard SQL
@@ -123,7 +131,7 @@ def lang_id(text: Column) -> Column:
     return F.when(total > 0, best_lang).otherwise(F.lit("und"))
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Attach the standard quality-score feature set:
 
     - n_chars, n_tokens, mean token length
@@ -133,7 +141,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     All ratios are divisions of exact integer counts → bit-stable.
     """
-    t = F.col(text_col)
+    t = F.col(TEXT)
     n_chars = F.length(t)
     n_tokens = token_count(t)
     n_punct = F.length(t) - F.length(F.regexp_replace(t, r"[.,!?;:]", ""))
@@ -152,14 +160,14 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Composite 0-100 quality score from integer-exact features.
 
     score = 100 · sigmoid-ish blend: length in a sane band, some
     stopwords present, punctuation not dominating. The blend uses only
     +,·,/ of already-deterministic doubles.
     """
-    feats = quality_features(df, text_col)
+    feats = quality_features(df)
     length_ok = F.when(
         (F.col("n_chars_m") >= 50) & (F.col("n_chars_m") <= 10000), F.lit(1.0)
     ).otherwise(F.lit(0.0))
@@ -175,7 +183,6 @@ def winnow_fingerprints(
     df: DataFrame,
     k: int = 8,
     w: int = 4,
-    text_col: str = "text",
     keep_cols: tuple[str, ...] = ("doc_id",),
 ) -> DataFrame:
     """Winnowing fingerprints (Schleimer et al. 2003, the MOSS scheme):
@@ -191,13 +198,13 @@ def winnow_fingerprints(
     """
     cols = list(keep_cols)
     doc_key = cols[0]
-    n = F.greatest(F.length(F.col(text_col)) - (k - 1), F.lit(1))
+    n = F.greatest(F.length(F.col(TEXT)) - (k - 1), F.lit(1))
     grams = df.select(
-        *cols, F.col(text_col), F.explode(F.sequence(F.lit(1), n)).alias("i")
+        *cols, F.col(TEXT), F.explode(F.sequence(F.lit(1), n)).alias("i")
     ).select(
         *cols,
         "i",
-        F.md5(F.col(text_col).substr(F.col("i"), F.lit(k))).alias("h"),
+        F.md5(F.col(TEXT).substr(F.col("i"), F.lit(k))).alias("h"),
     )
     w_min = (
         Window.partitionBy(doc_key)
@@ -218,32 +225,28 @@ def winnow_fingerprints(
     )
 
 
-def fingerprint(text: Column, normalize: bool = True) -> Column:
+def fingerprint(text: Column) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text
     (lowercase, whitespace collapsed). The exact-dedup key."""
-    t = text
-    if normalize:
-        t = F.regexp_replace(F.lower(t), r"\s+", " ")
-        t = F.trim(t)
-    return F.md5(t)
+    return F.md5(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")))
 
 
 def char_shingles(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 5
+    df: DataFrame, k: int = 5
 ) -> DataFrame:
     """Explode each document into its k-character shingles (the MinHash
     input). One narrow explode — no shuffle. Documents shorter than k
     contribute their whole text as a single shingle."""
-    n = F.greatest(F.length(F.col(text_col)) - (k - 1), F.lit(1))
+    n = F.greatest(F.length(F.col(TEXT)) - (k - 1), F.lit(1))
     return (
         df.select(
-            id_col,
-            F.col(text_col),
+            DOC_ID,
+            F.col(TEXT),
             F.explode(F.sequence(F.lit(1), n)).alias("i"),
         )
         .select(
-            id_col,
-            F.col(text_col).substr(F.col("i"), F.lit(k)).alias("shingle"),
+            DOC_ID,
+            F.col(TEXT).substr(F.col("i"), F.lit(k)).alias("shingle"),
         )
     )
 
@@ -264,7 +267,6 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 def scrub_patterns(
     df: DataFrame,
     text_col: str,
-    patterns: tuple[tuple[str, str, str], ...] = PII_PATTERNS,
     out_col: str | None = None,
 ) -> DataFrame:
     """Redact every pattern class from ``text_col`` and count matches
@@ -282,7 +284,7 @@ def scrub_patterns(
     """
     out = df
     cur = F.col(text_col)
-    for name, pat, repl in patterns:
+    for name, pat, repl in PII_PATTERNS:
         out = out.withColumn(f"n_{name}", F.regexp_count(cur, F.lit(pat)))
         cur = F.regexp_replace(cur, pat, repl)
     return out.withColumn(out_col or f"{text_col}_scrubbed", cur)
@@ -294,9 +296,6 @@ def scrub_patterns(
 def pack_sequences(
     df: DataFrame,
     seq_len: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shard_col: str = "source",
 ) -> DataFrame:
     """GPT-style sequence packing: within each shard, documents are
     concatenated in a deterministic order (md5(id), id) and the token
@@ -317,22 +316,22 @@ def pack_sequences(
     packing stable under corpus growth within unchanged shards.
     """
     w = (
-        Window.partitionBy(shard_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        Window.partitionBy(SHARD)
+        .orderBy(F.md5(F.col(DOC_ID).cast("string")), F.col(DOC_ID))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     # NULL/empty docs contribute ZERO tokens to the packed stream:
     # raw size(split(...)) would give NULL (ANSI) or -1 (legacy) for
     # NULL text — corrupting every later offset in the shard — and
     # split('') == [''] would inject a phantom token for empty text
-    t = F.col(text_col)
+    t = F.col(TEXT)
     n_tok = (
         F.when(t.isNull() | (t == ""), F.lit(0))
         .otherwise(token_count(t))
         .cast("long")
     )
     out = df.select(
-        F.col(id_col), F.col(shard_col), n_tok.alias("n_tokens")
+        F.col(DOC_ID), F.col(SHARD), n_tok.alias("n_tokens")
     ).withColumn("__cum", F.sum("n_tokens").over(w))
     start = F.col("__cum") - F.col("n_tokens")
     # pure integer division (`div`, never floor-of-double — a shard
@@ -340,8 +339,8 @@ def pack_sequences(
     first = F.expr(f"(__cum - n_tokens) div {seq_len}")
     last = F.expr(f"(__cum - 1) div {seq_len}")
     return out.select(
-        id_col,
-        shard_col,
+        DOC_ID,
+        SHARD,
         "n_tokens",
         start.alias("start_offset"),
         first.alias("pack_id"),
@@ -352,12 +351,7 @@ def pack_sequences(
 # --------------------------------------------------- bigram LM scoring ---
 
 
-def lm_bigram_score(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    digits: int = 4,
-) -> DataFrame:
+def lm_bigram_score(df: DataFrame) -> DataFrame:
     """KenLM-style corpus quality scoring with an in-corpus bigram LM:
     train add-1-smoothed bigram counts over the whole corpus, then
     score every document by its average negative log2 bigram
@@ -367,7 +361,7 @@ def lm_bigram_score(
 
     Returns (id, n_bigrams, avg_neg_log2p). Determinism: each
     per-bigram log2 term is computed on identical integer-derived
-    doubles in both engines and floor-quantized at 10^-digits before
+    doubles in both engines and floor-quantized at 10^-SCORE_DIGITS before
     the (exact, order-independent) integer sum; the final division has
     identical operands, so the output double is bit-identical.
 
@@ -377,12 +371,12 @@ def lm_bigram_score(
     (same stance as BM25's avgdl). Count tables are Zipf-concentrated;
     AQE skew-join handles hot contexts.
     """
-    tk = F.split(F.col(text_col), " ")
+    tk = F.split(F.col(TEXT), " ")
     big = (
-        df.select(F.col(id_col), tk.alias("__tk"))
+        df.select(F.col(DOC_ID), tk.alias("__tk"))
         .where(F.size("__tk") >= 2)
         .select(
-            id_col,
+            DOC_ID,
             F.explode(
                 F.transform(
                     F.sequence(F.lit(1), F.size("__tk") - 1),
@@ -393,7 +387,7 @@ def lm_bigram_score(
                 )
             ).alias("bg"),
         )
-        .select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+        .select(DOC_ID, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
     )
     big = big.persist()
     c12 = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
@@ -403,7 +397,7 @@ def lm_bigram_score(
             F.count_distinct("t").alias("v")
         )
     ).collect()[0]["v"]
-    scale = float(10**digits)
+    scale = float(10**SCORE_DIGITS)
     p = (F.col("c12") + F.lit(1.0)) / (
         F.col("c1") + F.lit(float(vocab))
     )
@@ -411,13 +405,13 @@ def lm_bigram_score(
     out = (
         big.join(c12, ["w1", "w2"])
         .join(c1, "w1")
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.sum(term_q).alias("__sq"),
         )
         .select(
-            id_col,
+            DOC_ID,
             "n_bigrams",
             (
                 -F.col("__sq").cast("double")
@@ -442,36 +436,32 @@ GOPHER_DUP5_MAX = 0.15
 GOPHER_DUP10_MAX = 0.10
 
 
-def _gram_counts(
-    df: DataFrame, n: int, text_col: str, id_col: str
-) -> DataFrame:
+def _gram_counts(df: DataFrame, n: int) -> DataFrame:
     """(id, gram, c): occurrence counts of word n-grams per doc —
     ALL occurrences, not distinct (repetition is the signal here).
     Docs shorter than ``n`` tokens contribute NO rows (a truncated
     partial gram would trivially be the doc's "top" gram and fail
     every short doc)."""
-    tk = F.split(F.col(text_col), " ")
+    tk = F.split(F.col(TEXT), " ")
     grams = F.transform(
         F.sequence(F.lit(1), F.size(tk) - (n - 1)),
         lambda i: F.concat_ws(" ", F.slice(tk, i, n)),
     )
     return (
         df.where(F.size(tk) >= n)
-        .select(F.col(id_col), F.explode(grams).alias("gram"))
-        .groupBy(id_col, "gram")
+        .select(F.col(DOC_ID), F.explode(grams).alias("gram"))
+        .groupBy(DOC_ID, "gram")
         .agg(F.count(F.lit(1)).alias("c"))
     )
 
 
-def _gram_fracs(
-    df: DataFrame, n: int, text_col: str, id_col: str, prefix: str
-) -> DataFrame:
+def _gram_fracs(df: DataFrame, n: int, prefix: str) -> DataFrame:
     """Per-doc (id, {prefix}_top_frac, {prefix}_dup_frac): the
     most-common n-gram's share of all n-gram occurrences, and the
     share of occurrences belonging to grams seen more than once.
     Exact-integer ratios (one division of exact BIGINTs)."""
-    counts = _gram_counts(df, n, text_col, id_col)
-    return counts.groupBy(id_col).agg(
+    counts = _gram_counts(df, n)
+    return counts.groupBy(DOC_ID).agg(
         (
             F.max("c").cast("double")
             / F.sum("c").cast("double")
@@ -485,9 +475,7 @@ def _gram_fracs(
     )
 
 
-def gopher_repetition(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def gopher_repetition(df: DataFrame) -> DataFrame:
     """Gopher repetition quality filters (Rae et al. 2021 A1.1),
     token-level adaptation: top-2/3-gram fraction and duplicate
     5/10-gram fraction per document, plus the pass/fail verdict under
@@ -508,18 +496,18 @@ def gopher_repetition(
     the top-gram tests — as in the paper, run a minimum-length filter
     (Gopher uses 50 words) before this one.
     """
-    t2 = _gram_fracs(df, 2, text_col, id_col, "g2")
-    t3 = _gram_fracs(df, 3, text_col, id_col, "g3")
-    t5 = _gram_fracs(df, 5, text_col, id_col, "g5")
-    t10 = _gram_fracs(df, 10, text_col, id_col, "g10")
+    t2 = _gram_fracs(df, 2, "g2")
+    t3 = _gram_fracs(df, 3, "g3")
+    t5 = _gram_fracs(df, 5, "g5")
+    t10 = _gram_fracs(df, 10, "g10")
     out = (
-        df.select(id_col)
-        .join(t2, id_col, "left")
-        .join(t3, id_col, "left")
-        .join(t5, id_col, "left")
-        .join(t10, id_col, "left")
+        df.select(DOC_ID)
+        .join(t2, DOC_ID, "left")
+        .join(t3, DOC_ID, "left")
+        .join(t5, DOC_ID, "left")
+        .join(t10, DOC_ID, "left")
         .select(
-            id_col,
+            DOC_ID,
             F.coalesce("g2_top_frac", F.lit(0.0)).alias("g2_top_frac"),
             F.coalesce("g3_top_frac", F.lit(0.0)).alias("g3_top_frac"),
             F.coalesce("g5_dup_frac", F.lit(0.0)).alias("g5_dup_frac"),
@@ -533,7 +521,7 @@ def gopher_repetition(
         & (F.col("g10_dup_frac") <= GOPHER_DUP10_MAX)
     )
     return out.select(
-        id_col,
+        DOC_ID,
         "g2_top_frac",
         "g3_top_frac",
         "g5_dup_frac",
@@ -561,9 +549,6 @@ def _hash_bucket(tok_col: str) -> Column:
 def dsir_importance_weights(
     df: DataFrame,
     target: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    digits: int = 4,
 ) -> DataFrame:
     """DSIR data selection (Xie et al. 2023, arXiv:2302.03169):
     per-document log importance weight log(p_target/p_source) under
@@ -577,7 +562,7 @@ def dsir_importance_weights(
 
     Determinism: bucket probabilities are ratios of exact integers
     (add-1 smoothed); each bucket's log2 ratio is floor-quantized at
-    10^-digits; per-doc sums run over exact BIGINTs; the final
+    10^-SCORE_DIGITS; per-doc sums run over exact BIGINTs; the final
     division has identical operands — bit-identical doubles.
 
     Scale shape: one explode → one groupBy(bucket) count (256 rows
@@ -592,11 +577,11 @@ def dsir_importance_weights(
     # Released by the finalize() below once the result materializes.
     toks = (
         df.select(
-            F.col(id_col),
+            F.col(DOC_ID),
             target.alias("__tgt"),
-            F.explode(F.split(F.col(text_col), " ")).alias("t"),
+            F.explode(F.split(F.col(TEXT), " ")).alias("t"),
         )
-        .select(id_col, "__tgt", _hash_bucket("t").alias("b"))
+        .select(DOC_ID, "__tgt", _hash_bucket("t").alias("b"))
         .persist()
     )
     # BOTH distributions from ONE aggregation pass (conditional count)
@@ -611,7 +596,7 @@ def dsir_importance_weights(
     # every ct=0) instead of silently NULLing every weight
     t_tot = bcounts.agg(F.coalesce(F.sum("ct"), F.lit(0)).alias("T"))
     nb = F.lit(DSIR_BUCKETS)
-    scale = float(10**digits)
+    scale = float(10**SCORE_DIGITS)
     # exact-integer-valued doubles: (ct+1)/(T+B) and (cs+1)/(S+B) are
     # each one IEEE division of identical operands in both engines
     pt = (F.col("ct") + F.lit(1)).cast("double") / (
@@ -634,10 +619,10 @@ def dsir_importance_weights(
     )
     out = (
         toks.join(F.broadcast(ratio), "b")
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(F.count(F.lit(1)).alias("n_tokens"), F.sum("q").alias("__sq"))
         .select(
-            id_col,
+            DOC_ID,
             "n_tokens",
             (F.col("__sq").cast("double") / F.lit(scale)).alias("dsir_logw"),
         )
@@ -651,7 +636,6 @@ def dsir_importance_weights(
 def bpe_pair_counts(
     df: DataFrame,
     top_k: int = 20,
-    text_col: str = "text",
 ) -> DataFrame:
     """The counting kernel of BPE tokenizer training (Sennrich et al.
     2016): collapse the corpus to a word-frequency table, explode each
@@ -672,7 +656,7 @@ def bpe_pair_counts(
     the final rank over top_k rows only.
     """
     words = (
-        df.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
+        df.select(F.explode(F.split(F.col(TEXT), " ")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("wf"))
         .where(F.length("w") >= 2)
@@ -857,11 +841,11 @@ def _bpe_learn_distributed(words: DataFrame, n_merges: int) -> list[tuple]:
     return merges
 
 
-def _bpe_words(df: DataFrame, text_col: str) -> DataFrame:
+def _bpe_words(df: DataFrame) -> DataFrame:
     """The persisted (w, wf, seg) vocabulary table, registered with the
     open :func:`~..cache.scope` (the BPE operators each open one), so
     it is released on every exit of the outermost scope."""
-    words = _bpe_words_with_seg(df, text_col).persist()
+    words = _bpe_words_with_seg(df, TEXT).persist()
     return finalize(words, words)
 
 
@@ -878,9 +862,7 @@ def _bpe_apply(merges: list[tuple]) -> Column:
     return seg
 
 
-def bpe_train_merges(
-    df: DataFrame, n_merges: int = 6, text_col: str = "text"
-) -> DataFrame:
+def bpe_train_merges(df: DataFrame, n_merges: int = 6) -> DataFrame:
     """Learned BPE merge table: (round, pair_a, pair_b, merged,
     n_occurrences) — the tokenizer artifact a curation pipeline ships
     (``bpe_pair_counts`` ranks only round 1's candidates; this is the
@@ -888,7 +870,7 @@ def bpe_train_merges(
     tie-break, greedy replace — the SQL oracle replays every round."""
     spark = df.sparkSession
     with scope():
-        merges = _bpe_learn(_bpe_words(df, text_col), n_merges)
+        merges = _bpe_learn(_bpe_words(df), n_merges)
     return spark.createDataFrame(
         [(r, a, b, a + b, n) for r, a, b, n in merges],
         "round INT, pair_a STRING, pair_b STRING, merged STRING, "
@@ -899,8 +881,6 @@ def bpe_train_merges(
 def bpe_token_counts(
     df: DataFrame,
     n_merges: int = 6,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-document token count under the LEARNED BPE vocabulary:
     train ``n_merges`` merges, apply them to the word vocabulary, then
@@ -914,17 +894,17 @@ def bpe_token_counts(
     against the ≤|vocab|-row token-count table (broadcast-eligible)
     plus one per-doc aggregate."""
     with scope() as s:
-        words = _bpe_words(df, text_col)
+        words = _bpe_words(df)
         seg = _bpe_apply(_bpe_learn(words, n_merges))
         word_tokens = s.settle(
             words.select("w", F.size(_bpe_seg_tokens(seg)).alias("n_tok"))
         )
     stream = df.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("w")
+        F.col(DOC_ID), F.explode(F.split(F.col(TEXT), " ")).alias("w")
     )
     return (
         stream.join(F.broadcast(word_tokens), "w")
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(F.sum("n_tok").cast("long").alias("n_tokens_bpe"))
     )
 
@@ -935,7 +915,6 @@ def bpe_token_counts(
 def vocab_coverage(
     df: DataFrame,
     top_k: int = 100,
-    text_col: str = "text",
 ) -> DataFrame:
     """Vocabulary-coverage curve: for each of the ``top_k`` most
     frequent tokens, the cumulative share of the whole token stream a
@@ -953,7 +932,7 @@ def vocab_coverage(
     the rank prefix you actually decide over keeps the window
     single-partition-safe.
     """
-    toks = df.select(F.explode(F.split(F.col(text_col), " ")).alias("t"))
+    toks = df.select(F.explode(F.split(F.col(TEXT), " ")).alias("t"))
     counts = toks.groupBy("t").agg(F.count(F.lit(1)).alias("n"))
     total = counts.agg(F.sum("n").alias("total"))
     top = (
@@ -1006,8 +985,6 @@ def _fdiv(num: str, den, off: int) -> str:
 def quality_classifier_scores(
     df: DataFrame,
     label: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     iterations: int = QC_ITERS,
 ) -> DataFrame:
     """Distributed training of a linear quality classifier over hashed
@@ -1039,18 +1016,18 @@ def quality_classifier_scores(
     """
     spark = df.sparkSession
     toks = df.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("t")
+        F.col(DOC_ID), F.explode(F.split(F.col(TEXT), " ")).alias("t")
     )
-    counts = toks.groupBy(id_col, _hash_bucket("t").alias("b")).agg(
+    counts = toks.groupBy(DOC_ID, _hash_bucket("t").alias("b")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    ntok = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+    ntok = toks.groupBy(DOC_ID).agg(F.count(F.lit(1)).alias("n"))
     fx = (
-        counts.join(ntok, id_col)
-        .selectExpr(id_col, "b", f"(cnt * {QC_SX}) div n AS xq")
+        counts.join(ntok, DOC_ID)
+        .selectExpr(DOC_ID, "b", f"(cnt * {QC_SX}) div n AS xq")
         .unionByName(
             df.select(
-                F.col(id_col), F.lit(-1).alias("b"), F.lit(QC_SX).alias("xq")
+                F.col(DOC_ID), F.lit(-1).alias("b"), F.lit(QC_SX).alias("xq")
             )
         )
         # co-partition the cached feature stream on the doc key (r11,
@@ -1059,7 +1036,7 @@ def quality_classifier_scores(
         # scoring groupBy re-shuffled the whole feature table — one
         # exchange here removes T+1 of them (the weight join is
         # broadcast and preserves partitioning)
-        .repartition(id_col)
+        .repartition(DOC_ID)
         .persist()  # read T+1 times; released by the finalize() below
     )
     # co-partition the per-doc label table on the same key as fx and
@@ -1067,8 +1044,8 @@ def quality_classifier_scores(
     # projection, and with matching partitioning those joins (and the
     # z⋈y, fx⋈e chains that inherit it) plan with no exchange at all
     y = (
-        df.select(F.col(id_col), label.cast("int").alias("y"))
-        .repartition(id_col)
+        df.select(F.col(DOC_ID), label.cast("int").alias("y"))
+        .repartition(DOC_ID)
         .persist()
     )
     n_docs = df.count()
@@ -1077,18 +1054,18 @@ def quality_classifier_scores(
     for _ in range(iterations):
         if w is None:
             e = y.select(
-                id_col, F.expr(f"{QC_SW // 2} - y * {QC_SW}").alias("err")
+                DOC_ID, F.expr(f"{QC_SW // 2} - y * {QC_SW}").alias("err")
             ).withColumn("g", F.lit(True))
         else:
             z = (
                 fx.join(F.broadcast(w), "b")
                 .withColumn("pr", F.expr("wq * xq"))
-                .groupBy(id_col)
+                .groupBy(DOC_ID)
                 .agg(F.sum("pr").alias("s"))
-                .selectExpr(id_col, _fdiv("s", QC_SX, 10**12) + " AS zq")
+                .selectExpr(DOC_ID, _fdiv("s", QC_SX, 10**12) + " AS zq")
             )
-            e = z.join(y, id_col).selectExpr(
-                id_col,
+            e = z.join(y, DOC_ID).selectExpr(
+                DOC_ID,
                 f"least(greatest({QC_SW // 2} + ({_fdiv('zq', 4, 10**9)}), 0),"
                 f" {QC_SW}) - y * {QC_SW} AS err",
                 f"abs(zq) < {2 * QC_SW} AS g",
@@ -1099,7 +1076,7 @@ def quality_classifier_scores(
             # join plans with NO exchange on either side — each
             # round's only shuffle is the ≤257-row per-bucket gradient
             # aggregate (r11, guide §2.4)
-            fx.join(e, id_col)
+            fx.join(e, DOC_ID)
             .selectExpr(
                 "b",
                 f"CASE WHEN g THEN {_fdiv('err * xq', QC_SX, 10**10)}"
@@ -1128,12 +1105,12 @@ def quality_classifier_scores(
     scored = (
         fx.join(F.broadcast(w), "b")
         .withColumn("pr", F.expr("wq * xq"))
-        .groupBy(id_col)
+        .groupBy(DOC_ID)
         .agg(F.sum("pr").alias("s"))
-        .selectExpr(id_col, _fdiv("s", QC_SX, 10**12) + " AS zq")
+        .selectExpr(DOC_ID, _fdiv("s", QC_SX, 10**12) + " AS zq")
     )
-    out = scored.join(y, id_col).select(
-        F.col(id_col),
+    out = scored.join(y, DOC_ID).select(
+        F.col(DOC_ID),
         (F.col("zq").cast("double") / F.lit(float(QC_SW))).alias("score"),
         (F.col("zq") >= 0).cast("int").alias("pred"),
         F.col("y"),
@@ -1142,9 +1119,7 @@ def quality_classifier_scores(
     return finalize(out, fx, w, y)
 
 
-def bpe_vocab(
-    df: DataFrame, n_merges: int = 6, text_col: str = "text"
-) -> DataFrame:
+def bpe_vocab(df: DataFrame, n_merges: int = 6) -> DataFrame:
     """The VOCABULARY a trained BPE tokenizer ships: every token the
     learned segmentation produces, with its corpus occurrence count —
     (token, n_occurrences). Complements :func:`bpe_train_merges` (the
@@ -1157,7 +1132,7 @@ def bpe_vocab(
     chars + n_merges) token groups — corpus-size independent
     throughout."""
     with scope() as s:
-        words = _bpe_words(df, text_col)
+        words = _bpe_words(df)
         seg = _bpe_apply(_bpe_learn(words, n_merges))
         return s.settle(
             words.select(F.explode(_bpe_seg_tokens(seg)).alias("token"), "wf")
@@ -1170,8 +1145,6 @@ def bpe_encode(
     df: DataFrame,
     n_merges: int = 6,
     max_tokens: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """ENCODE every document under the learned BPE tokenizer: the
     per-doc token STREAM (id, pos, token), truncated at ``max_tokens``
@@ -1186,7 +1159,7 @@ def bpe_encode(
     then a narrow bounded posexplode. The ``max_tokens`` cut prunes
     the explode fan-out to O(docs · max_tokens)."""
     with scope() as s:
-        words = _bpe_words(df, text_col)
+        words = _bpe_words(df)
         seg = _bpe_apply(_bpe_learn(words, n_merges))
         word_toks = s.settle(
             words.select(
@@ -1196,13 +1169,13 @@ def bpe_encode(
             )
         )
     stream = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("word_pos", "w"),
+        F.col(DOC_ID),
+        F.posexplode(F.split(F.col(TEXT), " ")).alias("word_pos", "w"),
     )
     from pyspark.sql import Window
 
     w = (
-        Window.partitionBy(id_col)
+        Window.partitionBy(DOC_ID)
         .orderBy("word_pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -1215,12 +1188,12 @@ def bpe_encode(
     )
     return (
         with_base.select(
-            id_col,
+            DOC_ID,
             F.col("base"),
             F.posexplode("toks").alias("ti", "token"),
         )
         .select(
-            id_col,
+            DOC_ID,
             (F.col("base") + F.col("ti") + 1).cast("long").alias("pos"),
             "token",
         )
@@ -1232,8 +1205,6 @@ def span_corruption(
     df: DataFrame,
     span_len: int = 3,
     period: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """T5-style span-corruption denoising pairs (Raffel et al. 2020
     §3.1.4) with a DETERMINISTIC mask: tokens group into consecutive
@@ -1255,10 +1226,10 @@ def span_corruption(
     document order is restored inside the aggregate by sorting the
     (pos, piece) structs — no window, no second shuffle."""
     toks = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("p", "tok"),
+        F.col(DOC_ID),
+        F.posexplode(F.split(F.col(TEXT), " ")).alias("p", "tok"),
     ).select(
-        id_col,
+        DOC_ID,
         "p",
         "tok",
         F.expr(f"p div {span_len}").alias("b"),
@@ -1271,7 +1242,7 @@ def span_corruption(
         F.lit(">"),
     )
     pieces = toks.select(
-        id_col,
+        DOC_ID,
         "p",
         F.when(~masked, F.col("tok"))
         .when(F.col("bstart"), sentinel)
@@ -1300,7 +1271,7 @@ def span_corruption(
             " ",
         )
 
-    return pieces.groupBy(id_col).agg(
+    return pieces.groupBy(DOC_ID).agg(
         _joined("in_piece").alias("inputs"),
         _joined("tgt_piece").alias("targets"),
     )
@@ -1310,8 +1281,6 @@ def fim_transform(
     df: DataFrame,
     prefix_pct: int = 40,
     middle_pct: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Fill-in-the-middle transformation (Bavarian et al. 2022, the
     code-LLM pretraining reorder): split each document's token stream
@@ -1323,11 +1292,11 @@ def fim_transform(
     Scale shape: a single narrow projection — split, two integer cut
     points, three array slices, one concat. No explode, no shuffle,
     whole-stage codegen end to end."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col(TEXT), " ")
     n = F.size(toks)
-    p_end = F.expr(f"size(split({text_col}, ' ')) * {prefix_pct} div 100")
+    p_end = F.expr(f"size(split({TEXT}, ' ')) * {prefix_pct} div 100")
     m_end = F.expr(
-        f"size(split({text_col}, ' ')) * {prefix_pct + middle_pct} div 100"
+        f"size(split({TEXT}, ' ')) * {prefix_pct + middle_pct} div 100"
     )
     prefix = F.array_join(F.slice(toks, F.lit(1), p_end), " ")
     middle = F.array_join(
@@ -1335,7 +1304,7 @@ def fim_transform(
     )
     suffix = F.array_join(F.slice(toks, m_end + F.lit(1), n - m_end), " ")
     return df.select(
-        F.col(id_col),
+        F.col(DOC_ID),
         F.concat(
             F.lit("<fim_prefix> "),
             prefix,
@@ -1351,7 +1320,6 @@ def pmi_collocations(
     df: DataFrame,
     min_count: int = 5,
     top_k: int = 50,
-    text_col: str = "text",
 ) -> DataFrame:
     """Collocation mining by pointwise mutual information (Church &
     Hanks 1990), the standard phrase-detection pass (word2vec's
@@ -1370,7 +1338,7 @@ def pmi_collocations(
     cross join. ``min_count`` prunes the pair table BEFORE the joins,
     so the join inputs are the frequent-pair set, not the long tail.
     """
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col(TEXT), " ")
     pairs = (
         df.select(
             toks.alias("tk"),
@@ -1411,8 +1379,6 @@ def pmi_collocations(
 
 def hashed_features(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_features: int = 256,
 ) -> DataFrame:
     """The hashing trick (Weinberger et al. 2009, sklearn's
@@ -1444,8 +1410,8 @@ def hashed_features(
     sign = F.when(sign_nibble % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
     return (
         docs.select(
-            F.col(id_col).alias("id"),
-            F.explode(tokens(F.col(text_col))).alias("__term"),
+            F.col(DOC_ID).alias("id"),
+            F.explode(tokens(F.col(TEXT))).alias("__term"),
         )
         .where(F.col("__term") != "")
         .select("id", idx.cast("int").alias("feat_idx"), sign.alias("__s"))

@@ -2223,9 +2223,7 @@ _N_HASH_FEATURES = 256
 )
 def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"))
-    return TX.hashed_features(
-        docs, id_col="doc_id", text_col="text", n_features=_N_HASH_FEATURES
-    )
+    return TX.hashed_features(docs, n_features=_N_HASH_FEATURES)
 
 
 # ---------------------------------------------------------------------------

@@ -900,6 +900,63 @@ def test_auc_exact_matches_pair_counting_definition(spark, rows):
 
 @settings(deadline=None, max_examples=10)
 @given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(["g", "h"]),
+            st.integers(min_value=0, max_value=6),
+            st.booleans(),
+        ),
+        min_size=1,
+        max_size=40,
+    )
+)
+def test_score_sweep_read_outs_agree(spark, rows):
+    """auc_exact, pr_curve, average_precision and cumulative_gain read
+    one score sweep, so per key group their totals agree: the last
+    curve row (lowest threshold) has tp = n_pos and fp = n_neg of
+    auc_exact, n_pos of average_precision, and tp_taken / n_taken of
+    cumulative_gain's final bucket; and ap_num is the floor-quantized
+    sum of np·tp·10⁹/(tp+fp) over the curve rows, np being the
+    positives at that threshold."""
+    from pyspark.sql import functions as F
+
+    from blockchain_data_engineering_spark.operators.ml_eval import (
+        _AP_SCALE,
+        auc_exact,
+        average_precision,
+        cumulative_gain,
+        pr_curve,
+    )
+
+    df = spark.createDataFrame(rows, "k string, s long, y boolean")
+    y, s, keys = F.col("y"), F.col("s"), ["k"]
+    curve: dict[str, list] = {}
+    for r in pr_curve(df, y, s, keys).collect():
+        curve.setdefault(r.k, []).append(r)
+    auc = {r.k: r for r in auc_exact(df, y, s, keys).collect()}
+    ap = {r.k: r for r in average_precision(df, y, s, keys).collect()}
+    n_buckets = 4
+    gain = {
+        r.k: r
+        for r in cumulative_gain(df, y, s, n_buckets, keys).collect()
+        if r.bucket == n_buckets
+    }
+    assert set(curve) == set(auc) == set(ap) == set(gain) == {k for k, _, _ in rows}
+    for k, pts in curve.items():
+        pts.sort(key=lambda r: -r.threshold)
+        last = pts[-1]
+        assert (last.tp, last.fp) == (auc[k].n_pos, auc[k].n_neg)
+        assert last.tp == ap[k].n_pos == gain[k].tp_taken
+        assert last.tp + last.fp == gain[k].n_taken
+        prev_tp, ap_num = 0, 0
+        for r in pts:
+            ap_num += (r.tp - prev_tp) * r.tp * _AP_SCALE // (r.tp + r.fp)
+            prev_tp = r.tp
+        assert int(ap[k].ap_num) == ap_num
+
+
+@settings(deadline=None, max_examples=10)
+@given(
     st.lists(st.integers(min_value=1, max_value=300), min_size=1, max_size=30),
     st.integers(min_value=50, max_value=200),
 )

@@ -16,13 +16,6 @@ from blockchain_data_engineering_spark.operators.ml_eval import (
     ndcg_discounts,
 )
 
-# The confusion-cell tests live in test_agreement.py; importing them
-# here keeps each one collected under this module's name as well.
-from test_agreement import (  # noqa: F401
-    test_macro_f1_known_values,
-    test_macro_f1_perfect_and_keys,
-)
-
 
 def test_average_precision_known_values(spark):
     """sklearn's step-wise AP on labels (+,−,+,+) at scores (4,3,2,1):
@@ -201,11 +194,11 @@ def test_rrf_fuse_known_values(spark):
     assert got["a"] == (r1, 3)
     assert got["d"] == (r2, 4)
 
-    # rank > k rows are ignored; top_n truncates
+    # rank > k rows are ignored; a fused_rank filter truncates
     lc = spark.createDataFrame(
         [("q", "z", 9)], "qid string, item string, rank long"
     )
-    top = rrf_fuse([la, lb, lc], k=3, c=60, top_n=2).collect()
+    top = rrf_fuse([la, lb, lc], k=3, c=60).where("fused_rank <= 2").collect()
     assert sorted(r["item"] for r in top) == ["b", "c"]
 
     import pytest

@@ -43,6 +43,25 @@ class A:
     # import, class, def, the two-line string assignment, return
     assert code_lines(source) == 6
 
+    # defaulted parameters: none above; below b, d, e (keyword-only),
+    # y (lambda) and k — a, c, z, *args and **kw carry no default
+    defaulted_params = _load("code_lines").defaulted_params
+    assert defaulted_params(source) == 0
+    source = """
+def f(a, b=1, *args, c, d=2, e=None, **kw):
+    g = lambda x, y=3: x + y
+    return g
+
+
+class A:
+    def m(self, k=()):
+        pass
+
+    async def n(self, z):
+        pass
+"""
+    assert defaulted_params(source) == 5
+
 
 def test_contract_lists_gate_queries_then_oracle_hashes():
     import hashlib

@@ -1,11 +1,15 @@
 """Count code lines in Python sources: lines that hold a token and are
 not part of a docstring. Blank lines, comment-only lines and module,
-class and function docstrings are not counted.
+class and function docstrings are not counted. Also count the
+defaulted parameters of every ``def`` and ``lambda`` (positional and
+keyword-only parameters that carry a default) — the knobs a caller
+may set.
 
 Usage: python tools/code_lines.py PATH [PATH ...]
 
 Each PATH is a ``.py`` file or a directory searched recursively for
-them. Prints ``<count>  <file>`` per file, then ``<count>  total``.
+them. Prints ``<code lines>  <defaulted parameters>  <file>`` per
+file, then the same two totals and ``total``.
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ _SKIP = {
     tokenize.ENDMARKER,
 }
 _SCOPES = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
 
 
 def code_lines(source: str) -> int:
@@ -47,6 +52,16 @@ def code_lines(source: str) -> int:
     return len(token_lines - docstring_lines)
 
 
+def defaulted_params(source: str) -> int:
+    """Number of parameters with a default value in ``source``."""
+    return sum(
+        len(node.args.defaults)
+        + sum(d is not None for d in node.args.kw_defaults)
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, _FUNCS)
+    )
+
+
 def _files(paths: list[str]) -> list[Path]:
     out: list[Path] = []
     for p in map(Path, paths):
@@ -55,12 +70,14 @@ def _files(paths: list[str]) -> list[Path]:
 
 
 def main(paths: list[str]) -> int:
-    total = 0
+    total = total_defaults = 0
     for f in _files(paths):
-        n = code_lines(f.read_text(encoding="utf-8"))
+        source = f.read_text(encoding="utf-8")
+        n, d = code_lines(source), defaulted_params(source)
         total += n
-        print(f"{n:7d}  {f}")
-    print(f"{total:7d}  total")
+        total_defaults += d
+        print(f"{n:7d}  {d:4d}  {f}")
+    print(f"{total:7d}  {total_defaults:4d}  total")
     return total
 
 
