@@ -60,7 +60,9 @@ class _Keys:
 
     def grp_of(self, alias: str) -> str:
         """``GROUP BY alias.key, …`` (empty without keys)."""
-        return f"GROUP BY {', '.join(f'{alias}.{c}' for c in self.keys)}" if self.keys else ""
+        if not self.keys:
+            return ""
+        return "GROUP BY " + ", ".join(f"{alias}.{c}" for c in self.keys)
 
 
 _GLOBAL = _Keys(())
@@ -138,7 +140,7 @@ def auc_exact_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.auc_exact` — the same
+    """Twin of ``ml_eval.auc_exact`` — the same
     doubled-rank algebra over HUGEINT intermediates; ``auc_num``/
     ``auc_den`` serialize as VARCHAR."""
     k = _Keys(keys)
@@ -178,7 +180,7 @@ def pr_curve_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.pr_curve` — the same
+    """Twin of ``ml_eval.pr_curve`` — the same
     distinct-score sweep and column names."""
     k = _Keys(keys)
     return f"""
@@ -205,7 +207,7 @@ def average_precision_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.average_precision` — the
+    """Twin of ``ml_eval.average_precision`` — the
     same quantized-term algebra (HUGEINT product, ``//`` floor
     quotient); ``ap_num`` serializes as VARCHAR."""
     k = _Keys(keys)
@@ -245,7 +247,7 @@ def cumulative_gain_sql(
     n_buckets: int = 10,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.cumulative_gain` — the same
+    """Twin of ``ml_eval.cumulative_gain`` — the same
     sweep and integer bucket inversion (``generate_series`` unnest for
     Spark's ``explode(sequence(...))``)."""
     k = _Keys(keys)
@@ -300,7 +302,7 @@ def cumulative_gain_sql(
 
 
 def multiclass_macro_f1_from_cells_sql(cells_sql: str) -> str:
-    """Twin of :func:`~..operators.ml_eval.multiclass_macro_f1` over a
+    """Twin of ``ml_eval.multiclass_macro_f1`` over a
     cell store: ``cells_sql`` is a FROM-able fragment of (actual,
     predicted, n) rows, possibly with duplicates (per-batch deltas)
     that re-aggregate exactly as the Spark store read does; facts read
@@ -347,7 +349,7 @@ def multiclass_macro_f1_from_cells_sql(cells_sql: str) -> str:
 def multiclass_class_report_sql(
     actual_sql: str, predicted_sql: str, table: str
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.multiclass_class_report` —
+    """Twin of ``ml_eval.multiclass_class_report`` —
     the same per-class integer algebra; ``f1_num`` serializes as
     VARCHAR."""
     k = _GLOBAL
@@ -440,7 +442,7 @@ def adjusted_rand_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.adjusted_rand_index` over
+    """Twin of ``ml_eval.adjusted_rand_index`` over
     facts — the same cleared-binomial integers; ``ari_num``/``ari_den``
     serialize as VARCHAR."""
     k = _Keys(keys)
@@ -453,7 +455,7 @@ def adjusted_rand_sql(
 def adjusted_rand_from_cells_sql(
     cells_sql: str, keys: Sequence[str] = ()
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.adjusted_rand_index` over a
+    """Twin of ``ml_eval.adjusted_rand_index`` over a
     cell store (see :func:`multiclass_macro_f1_from_cells_sql`)."""
     k = _Keys(keys)
     count = f"CAST(sum({_N}) AS BIGINT)"
@@ -466,7 +468,7 @@ def label_mi_sql(
     table: str,
     share_grid: int = 1000,
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.label_mutual_information` —
+    """Twin of ``ml_eval.label_mutual_information`` —
     the same share quantization and the SAME literal ln table as a
     VALUES relation; ``mi_num``/``ha_num``/``hp_num`` serialize as
     VARCHAR."""
@@ -604,7 +606,7 @@ def _cohens_kappa(cells: str) -> str:
 
 
 def cohens_kappa_sql(rater_a_sql: str, rater_b_sql: str, table: str) -> str:
-    """Twin of :func:`~..operators.ml_eval.cohens_kappa` over facts —
+    """Twin of ``ml_eval.cohens_kappa`` over facts —
     the same exact integer algebra; ``kappa_num``/``kappa_den``
     serialize as VARCHAR."""
     return _cohens_kappa(
@@ -616,7 +618,7 @@ def cohens_kappa_sql(rater_a_sql: str, rater_b_sql: str, table: str) -> str:
 
 
 def cohens_kappa_from_cells_sql(cells_sql: str) -> str:
-    """Twin of :func:`~..operators.ml_eval.cohens_kappa` over a cell
+    """Twin of ``ml_eval.cohens_kappa`` over a cell
     store (see :func:`multiclass_macro_f1_from_cells_sql`)."""
     return _cohens_kappa(
         _cells(
@@ -633,7 +635,7 @@ def weighted_kappa_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.weighted_kappa` — the same
+    """Twin of ``ml_eval.weighted_kappa`` — the same
     marginal cross and cleared-denominator integers;
     ``kappa_num``/``kappa_den`` serialize as VARCHAR.
 
@@ -718,7 +720,7 @@ def fleiss_kappa_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.fleiss_kappa` — the same
+    """Twin of ``ml_eval.fleiss_kappa`` — the same
     cell grain and cleared-denominator integer algebra;
     ``fleiss_num``/``fleiss_den`` serialize as VARCHAR."""
     k = _Keys(keys)
@@ -865,7 +867,7 @@ def krippendorff_explain_sql(
     keys: Sequence[str] = (),
     max_raters: int = 16,
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.krippendorff_disagreement_explain`
+    """Twin of ``ml_eval.krippendorff_disagreement_explain``
     for the nominal metric — the same cells→kept-units prefix as
     :func:`krippendorff_alpha_sql` and the same LCM-cleared per-unit
     mass; ``du_num`` serializes as VARCHAR."""
@@ -902,7 +904,7 @@ def krippendorff_alpha_sql(
     max_raters: int = 16,
     metric: str = "nominal",
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.krippendorff_alpha` — the
+    """Twin of ``ml_eval.krippendorff_alpha`` — the
     same cell/item grain and LCM-cleared integer algebra (nominal
     sum-of-squares, interval moment form, or ordinal moment form over
     the cumulative-marginal transform e_c = 2·cum_c − n_c);
@@ -1063,7 +1065,7 @@ def brier_score_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.brier_score` — the same
+    """Twin of ``ml_eval.brier_score`` — the same
     exact integer algebra; ``brier_num`` serializes as VARCHAR."""
     k = _Keys(keys)
     d = (
@@ -1117,7 +1119,7 @@ def ece_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.ece` — the same bin
+    """Twin of ``ml_eval.ece`` — the same bin
     assignment and exact integer numerator; ``ece_num`` serializes as
     VARCHAR."""
     if n_bins < 1 or s_max < 1 or n_bins > s_max:
@@ -1155,7 +1157,7 @@ def ece_top_label_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.ece_top_label` — the same
+    """Twin of ``ml_eval.ece_top_label`` — the same
     pre-argmax filters and (score DESC, class ASC) row_number
     tie-break (scores floored via ``CAST(floor(·) AS BIGINT)`` to
     match Spark's truncating cast), then :func:`ece_sql` over the
@@ -1191,7 +1193,7 @@ def ece_adaptive_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.ece_adaptive` — the same
+    """Twin of ``ml_eval.ece_adaptive`` — the same
     distinct-score grain, rank-div bin edges (the ORDER BY key is
     unique per group at this grain, so RANGE/ROWS framing differences
     cannot bite) and exact numerator; ``ece_num`` serializes as
@@ -1258,7 +1260,7 @@ def log_loss_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.log_loss` — the SAME literal
+    """Twin of ``ml_eval.log_loss`` — the SAME literal
     table as a VALUES relation (joined at clamped-score grain), the
     same clamp and integer algebra; ``ll_num`` serializes as VARCHAR.
 
@@ -1309,7 +1311,7 @@ def log_loss_multiclass_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.log_loss_multiclass` — the
+    """Twin of ``ml_eval.log_loss_multiclass`` — the
     SAME literal table, the same one-sided clamp (truncating like
     :func:`log_loss_sql`) and integer algebra; ``ll_num`` serializes
     as VARCHAR."""
@@ -1347,7 +1349,7 @@ def matthews_corr_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.matthews_corr` — the same
+    """Twin of ``ml_eval.matthews_corr`` — the same
     one-aggregate plan and pairwise-root algebra; the integer columns
     serialize as VARCHAR."""
     k = _Keys(keys)
@@ -1391,7 +1393,7 @@ def spearman_rho_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.spearman_rho` — the same
+    """Twin of ``ml_eval.spearman_rho`` — the same
     exact integer algebra; the integer columns serialize as VARCHAR."""
     k = _Keys(keys)
     d = f"(CAST({rank_a_sql} AS HUGEINT) - ({rank_b_sql}))"
@@ -1427,7 +1429,7 @@ def kendall_tau_sql(
     table: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.kendall_tau` — the same
+    """Twin of ``ml_eval.kendall_tau`` — the same
     per-group pair join and exact algebra (incl. the NULL-key
     exclusion at entry); the integer columns serialize as VARCHAR."""
     k = _Keys(keys)
@@ -1484,7 +1486,7 @@ def rbo_at_k_sql(
     item_col: str = "item",
     rank_col: str = "rank",
 ) -> str:
-    """Twin of :func:`~..operators.ml_eval.rbo_at_k` — the same literal
+    """Twin of ``ml_eval.rbo_at_k`` — the same literal
     suffix-weight table and join/sum shape. ``results_a_sql``/
     ``results_b_sql`` are FROM-able fragments exposing (query, item,
     rank)."""
@@ -1587,7 +1589,7 @@ def distribution_drift_tvd_sql(
     cur_table_sql: str,
     keys: Sequence[str] = (),
 ) -> str:
-    """Twin of :func:`~..operators.dq.distribution_drift_tvd` — the
+    """Twin of ``dq.distribution_drift_tvd`` — the
     same category grain and exact integer numerator; ``tvd_num``
     serializes as VARCHAR. ``ref_table_sql``/``cur_table_sql`` are
     FROM-able fragments (a table name or a parenthesized subquery)."""
@@ -1620,7 +1622,7 @@ def distribution_psi_sql(
     keys: Sequence[str] = (),
     share_grid: int = 1000,
 ) -> str:
-    """Twin of :func:`~..operators.dq.distribution_psi` — the same
+    """Twin of ``dq.distribution_psi`` — the same
     quantization and the SAME literal ln table as a VALUES relation
     joined at category grain; ``psi_num`` serializes as VARCHAR."""
     tab = psi_ln_table(share_grid)
@@ -1655,7 +1657,7 @@ def distribution_kl_sql(
     keys: Sequence[str] = (),
     share_grid: int = 1000,
 ) -> str:
-    """Twin of :func:`~..operators.dq.distribution_kl` — the same
+    """Twin of ``dq.distribution_kl`` — the same
     asymmetric quantization (cur unclamped, ref eps-filled) and the
     SAME literal ln table; ``kl_num`` serializes as VARCHAR."""
     tab = psi_ln_table(share_grid)
@@ -1693,7 +1695,7 @@ def distribution_drift_explain_sql(
     keys: Sequence[str] = (),
     share_grid: int = 1000,
 ) -> str:
-    """Twin of :func:`~..operators.dq.distribution_drift_explain` — the
+    """Twin of ``dq.distribution_drift_explain`` — the
     same three quantized terms and the SAME literal ln table; term
     columns serialize as VARCHAR."""
     tab = psi_ln_table(share_grid)
@@ -1745,7 +1747,7 @@ def distribution_js_sql(
     keys: Sequence[str] = (),
     share_grid: int = 1000,
 ) -> str:
-    """Twin of :func:`~..operators.dq.distribution_js` — the same
+    """Twin of ``dq.distribution_js`` — the same
     quantization and the SAME 2G-entry literal ln table as a VALUES
     relation; ``js_num`` serializes as VARCHAR."""
     g = int(share_grid)
