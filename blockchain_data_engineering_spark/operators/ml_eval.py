@@ -1602,15 +1602,8 @@ def cohens_kappa(
         keyed,
         [
             (cells, {"__tn": F.col("n"), "__ta": agree.otherwise(0)}),
-            (
-                marg,
-                {
-                    "__trc": (F.col("__r") * F.col("__c")).cast(
-                        "decimal(38,0)"
-                    ),
-                    "__tl": F.lit(1),
-                },
-            ),
+            (marg, {"__trc": (F.col("__r") * F.col("__c")).cast(_DEC),
+                    "__tl": F.lit(1)}),
         ],
         {"__tn": "long", "__ta": "long", "__trc": _DEC, "__tl": 0},
         [("n", "__tn"), ("__agree", "__ta"), ("__pe_sum", "__trc"),

@@ -80,6 +80,11 @@ def _values(tab: list[int]) -> str:
     return ", ".join(f"({i + 1}, {t}::BIGINT)" for i, t in enumerate(tab))
 
 
+def _ln_head(tab: list[int]) -> str:
+    """The ``ln_tab(i, lnv)`` CTE of a literal ln-quanta table."""
+    return f"ln_tab AS (SELECT * FROM (VALUES {_values(tab)}) AS t(i, lnv))"
+
+
 def _per_score(k: _Keys, label_sql: str, score_sql: str, table: str) -> str:
     """The ``per_score`` CTE: the facts collapsed to distinct-score
     grain with positive/negative counts (``_per_score_counts``)."""
@@ -481,7 +486,7 @@ def label_mi_sql(
         k, actual_sql, predicted_sql, count, table, names=("a", "p", "cnt")
     )
     return f"""
-    WITH ln_tab AS (SELECT * FROM (VALUES {_values(tab)}) AS t(i, lnv)),
+    WITH {_ln_head(tab)},
     {cells},
     tot AS (
       SELECT {k.pre}CAST(coalesce(sum(cnt), 0) AS BIGINT) AS nt
@@ -1558,10 +1563,6 @@ def _drift_head(
              CAST(sum(c) OVER ({k.part}) AS BIGINT) AS nc
       FROM cats
     )"""
-
-
-def _ln_head(tab: list[int]) -> str:
-    return f"ln_tab AS (SELECT * FROM (VALUES {_values(tab)}) AS t(i, lnv))"
 
 
 def _drift_agg(k: _Keys, name: str, den: str) -> str:
