@@ -26,6 +26,16 @@ from blockchain_data_engineering_spark.operators.ml_eval import (
     weighted_kappa,
 )
 
+# The confusion-cell tests live in test_agreement.py; importing them
+# here keeps each one collected under this module's name as well.
+from test_agreement import (  # noqa: F401
+    test_agreement_ops_exclude_null_keys,
+    test_eval_cells_store_serving_matches_direct_kappa,
+    test_weighted_kappa_binary_equals_unweighted,
+    test_weighted_kappa_degenerate_and_validation,
+    test_weighted_kappa_known_values,
+)
+
 S = 1000  # default score grid for the log-loss tests
 
 

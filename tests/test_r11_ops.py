@@ -25,6 +25,25 @@ from blockchain_data_engineering_spark.operators.ml_eval import (
     log_loss_multiclass,
 )
 
+# The confusion-cell tests live in test_agreement.py; importing them
+# here keeps each one collected under this module's name as well.
+from test_agreement import (  # noqa: F401
+    test_adjusted_rand_determinism_and_cells,
+    test_adjusted_rand_known_values,
+    test_ari_store_read_equals_direct,
+    test_class_report_excludes_null_keys_and_repartition,
+    test_class_report_known_values,
+    test_class_report_store_read_equals_direct,
+    test_class_report_sums_to_macro_scalars,
+    test_label_mi_determinism_under_repartition,
+    test_label_mi_edges,
+    test_label_mi_known_values,
+    test_label_mi_permutation_and_independence,
+    test_macro_f1_from_cells_excludes_null_keys,
+    test_macro_f1_store_read_equals_direct,
+    test_weighted_kappa_envelope_guard,
+)
+
 S = 1000
 G = 1000
 

@@ -8,6 +8,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+# The confusion-cell tests live in test_agreement.py; importing them
+# here keeps each one collected under this module's name as well.
+from test_agreement import test_confusion_counts_known_values  # noqa: F401
+
 
 def test_auc_exact_known_values_with_ties(spark):
     """Hand-computed Mann-Whitney AUC on a 4-row fixture with a tie

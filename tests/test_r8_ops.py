@@ -16,6 +16,13 @@ from blockchain_data_engineering_spark.operators.ml_eval import (
     ndcg_discounts,
 )
 
+# The confusion-cell tests live in test_agreement.py; importing them
+# here keeps each one collected under this module's name as well.
+from test_agreement import (  # noqa: F401
+    test_macro_f1_known_values,
+    test_macro_f1_perfect_and_keys,
+)
+
 
 def test_average_precision_known_values(spark):
     """sklearn's step-wise AP on labels (+,−,+,+) at scores (4,3,2,1):

@@ -24,6 +24,15 @@ from blockchain_data_engineering_spark.operators.ml_eval import (
     spearman_rho,
 )
 
+# The confusion-cell tests live in test_agreement.py; importing them
+# here keeps each one collected under this module's name as well.
+from test_agreement import (  # noqa: F401
+    test_cohens_kappa_known_values,
+    test_cohens_kappa_label_sets_and_degenerates,
+    test_matthews_corr_degenerate_and_nulls,
+    test_matthews_corr_known_values,
+)
+
 
 def test_ece_known_values(spark):
     """Hand-computed 2-bin ECE at s_max=10: bin1 holds (T,9)(F,8)(T,6)

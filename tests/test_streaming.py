@@ -26,6 +26,10 @@ from blockchain_data_engineering_spark.streaming.pipeline import (
     run_vol_transfers_pipeline,
 )
 
+# The confusion-cell tests live in test_agreement.py; importing them
+# here keeps each one collected under this module's name as well.
+from test_agreement import test_streaming_eval_cells_store_matches_batch  # noqa: F401
+
 
 @pytest.fixture(scope="module")
 def chain():
