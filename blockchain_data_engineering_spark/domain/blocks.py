@@ -14,6 +14,8 @@ or restart always yields the same ids, which is what makes idempotent
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -24,17 +26,29 @@ from blockchain_data_engineering_spark.functions.scalar import (
 )
 
 
-def parse_block_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
+# the raw NDJSON line column of every block source (text files, the
+# socket source, the chain_sync data source)
+VALUE = "value"
+# token quantities are DECIMAL(38,0) (SURVEY H7): mainnet single-token
+# supplies exceed 2^63, so the netflow sums need 128-bit precision
+QUANTITY_TYPE = "decimal(38,0)"
+
+
+def envelope() -> Column:
+    """The parsed ``{"py/state": {...}}`` envelope of a block line:
+    ``from_json(value, BLOCK_SCHEMA)``, NULL for a malformed line. The
+    one block parse every reader builds on."""
+    return F.from_json(F.col(VALUE), BLOCK_SCHEMA)
+
+
+def parse_block_lines(lines: DataFrame) -> DataFrame:
     """NDJSON lines → typed block rows.
 
     Reference: ``from_json(col("value"), schema)`` then unnest
     ``json.`py/state`.*`` (src/etl_vol_transfers/main.py:24-25).
     Works identically on a batch or streaming DataFrame.
     """
-    return (
-        lines.select(F.from_json(F.col(value_col), BLOCK_SCHEMA).alias("json"))
-        .select("json.`py/state`.*")
-    )
+    return lines.select(envelope().alias("json")).select("json.`py/state`.*")
 
 
 def blocks_table(blocks: DataFrame) -> DataFrame:
@@ -119,36 +133,23 @@ def tx_inputs_table(blocks: DataFrame) -> DataFrame:
     )
 
 
-def output_units(outputs: DataFrame, quantity_type: str = "decimal(38,0)") -> DataFrame:
-    """Flatten the value map to (tx_hash, address, unit, quantity).
-
-    unit = policy || asset_name_hex with the ``adalovelace → lovelace``
-    rewrite (src/etl_vol_transfers/main.py:89-90). This is the native
-    A3 kernel: two map explodes + concat + rewrite, all codegen.
-
-    ``quantity_type`` defaults to DECIMAL(38,0) (SURVEY H7) so
-    downstream netflow sums survive single-token supplies past 2^63;
-    pass ``"long"`` only when totals provably fit 64 bits.
-    """
+def value_units(rows: DataFrame, keep: Sequence[str]) -> DataFrame:
+    """Flatten the ``value`` map of ``rows`` to ``(*keep, unit,
+    quantity)``: two map explodes + concat + the ``adalovelace →
+    lovelace`` rewrite (src/etl_vol_transfers/main.py:89-90), all
+    codegen, with quantities cast to :data:`QUANTITY_TYPE`."""
     return (
-        outputs.select(
-            "tx_hash",
-            "output_index",
-            "address",
-            F.explode("value").alias("policy", "assets"),
-        )
+        rows.select(*keep, F.explode("value").alias("policy", "assets"))
+        .select(*keep, "policy", F.explode("assets").alias("name_hex", "quantity"))
         .select(
-            "tx_hash",
-            "output_index",
-            "address",
-            "policy",
-            F.explode("assets").alias("name_hex", "quantity"),
-        )
-        .select(
-            "tx_hash",
-            "output_index",
-            "address",
+            *keep,
             normalize_unit(F.concat(F.col("policy"), F.col("name_hex"))).alias("unit"),
-            F.col("quantity").cast(quantity_type).alias("quantity"),
+            F.col("quantity").cast(QUANTITY_TYPE).alias("quantity"),
         )
     )
+
+
+def output_units(outputs: DataFrame) -> DataFrame:
+    """Flatten the value map to (tx_hash, output_index, address, unit,
+    quantity) — the native A3 kernel."""
+    return value_units(outputs, ["tx_hash", "output_index", "address"])

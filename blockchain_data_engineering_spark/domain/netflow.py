@@ -8,12 +8,11 @@ Reference semantics (replicated exactly):
 - net      = produced − consumed, a side missing from the tx counting 0
 - rows with net == 0 are dropped (e.g. change returning to the sender)
 
-Quantities are integers end-to-end and DECIMAL(38,0) by default
-(SURVEY H7): mainnet single-token supplies can exceed 2^63, so the
-sums here must carry 128-bit precision. ``transacted`` is
-type-preserving — it sums whatever integer type ``quantity`` arrives
-as (``input_units`` / ``output_units`` own the cast, and accept
-``quantity_type="long"`` for corpora that provably fit 64 bits).
+Quantities are integers end-to-end and DECIMAL(38,0) (SURVEY H7):
+mainnet single-token supplies can exceed 2^63, so the sums here must
+carry 128-bit precision. ``transacted`` is type-preserving — it sums
+whatever integer type ``quantity`` arrives as (``input_units`` /
+``output_units`` own the cast, ``domain.blocks.QUANTITY_TYPE``).
 The ``netflow_decimal`` gate query proves the no-overflow path with
 per-group totals past 2^63 against a DuckDB HUGEINT oracle.
 """

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blockchain_data_engineering_spark.domain.blocks import value_units
 
 _REF = ["spent_tx_hash", "spent_output_index"]
 
@@ -75,30 +76,8 @@ def resolve_in_batch(
     return hits, misses
 
 
-def input_units(resolved: DataFrame, quantity_type: str = "decimal(38,0)") -> DataFrame:
+def input_units(resolved: DataFrame) -> DataFrame:
     """Flatten resolved inputs to (tx_hash, address, unit, quantity) —
     the native A2 kernel (reference sum_ip_vals_for_addr,
-    src/etl_vol_transfers/main.py:69-74, which looped in pandas).
-
-    ``quantity_type`` defaults to DECIMAL(38,0) (SURVEY H7): mainnet
-    single-token supplies exceed 2^63, so the netflow sums must carry
-    128-bit precision — pass ``"long"`` only for corpora whose totals
-    provably fit 64 bits (cheaper codegen arithmetic).
-    """
-    from blockchain_data_engineering_spark.functions.scalar import normalize_unit
-
-    return (
-        resolved.select("tx_hash", "address", F.explode("value").alias("policy", "assets"))
-        .select(
-            "tx_hash",
-            "address",
-            "policy",
-            F.explode("assets").alias("name_hex", "quantity"),
-        )
-        .select(
-            "tx_hash",
-            "address",
-            normalize_unit(F.concat(F.col("policy"), F.col("name_hex"))).alias("unit"),
-            F.col("quantity").cast(quantity_type).alias("quantity"),
-        )
-    )
+    src/etl_vol_transfers/main.py:69-74, which looped in pandas)."""
+    return value_units(resolved, ["tx_hash", "address"])

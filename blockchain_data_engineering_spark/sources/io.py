@@ -16,7 +16,11 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from blockchain_data_engineering_spark.domain.schema import BLOCK_SCHEMA
+from blockchain_data_engineering_spark.domain.blocks import (
+    VALUE,
+    envelope,
+    parse_block_lines,
+)
 from blockchain_data_engineering_spark.operators.relational import (
     dedup_keep_last,
 )
@@ -170,11 +174,7 @@ def _newest_per_key(
 def read_ndjson_blocks(spark: SparkSession, path: str) -> DataFrame:
     """Batch twin of streaming.sources.ndjson_file_stream: NDJSON block
     lines → typed block rows."""
-    lines = spark.read.text(path).withColumnRenamed("value", "value")
-    return (
-        lines.select(F.from_json(F.col("value"), BLOCK_SCHEMA).alias("json"))
-        .select("json.`py/state`.*")
-    )
+    return parse_block_lines(spark.read.text(path))
 
 
 def read_ndjson_blocks_with_quarantine(
@@ -193,10 +193,8 @@ def read_ndjson_blocks_with_quarantine(
     plans share the parsed projection so Catalyst reuses the scan when
     both are written in one job (foreachBatch twin-sink pattern,
     streaming/pipeline.py)."""
-    lines = spark.read.text(path)
-    parsed = lines.select(
-        F.col("value").alias("raw"),
-        F.from_json(F.col("value"), BLOCK_SCHEMA).alias("json"),
+    parsed = spark.read.text(path).select(
+        F.col(VALUE).alias("raw"), envelope().alias("json")
     )
     ok = F.col("json").isNotNull() & F.col("json.`py/state`.id").isNotNull()
     good = parsed.where(ok).select("json.`py/state`.*")

@@ -15,12 +15,10 @@ replayable, checkpoint-friendly, and partitioned, unlike the
 reference's raw socket push (which remains available via
 ``sources.socket_stream`` as the dev tap).
 
-Transports: ``transport="ws"`` speaks RFC-6455 websocket framing (one
-JSON-RPC message per text frame — what real Ogmios serves; client
-framing is the dependency-free :mod:`streaming.ws`), and
-``transport="line"`` speaks line-delimited JSON-RPC over bare TCP (the
-dev/test shortcut). :class:`MockChainSyncNode` is the test double for
-the Ogmios node itself and serves both transports, so the producer is
+Transport: RFC-6455 websocket framing, one JSON-RPC message per text
+frame — what real Ogmios serves (client and server framing are the
+dependency-free :mod:`streaming.ws`). :class:`MockChainSyncNode` is the
+test double for the Ogmios node itself, so the producer is
 integration-tested end-to-end over genuine ws frames.
 """
 
@@ -34,7 +32,7 @@ from blockchain_data_engineering_spark.streaming import ws as _ws
 
 
 class MockChainSyncNode:
-    """Ogmios-shaped chain-sync node (``transport="line"`` or ``"ws"``).
+    """Ogmios-shaped chain-sync node speaking websocket JSON-RPC.
 
     Serves ``blocks`` (already-serialized NDJSON block documents) as
     forward rolls after an intersection handshake. One client at a
@@ -46,13 +44,9 @@ class MockChainSyncNode:
         self,
         blocks: list[str],
         host: str = "127.0.0.1",
-        transport: str = "line",
         max_conns: int = 1,
         reorg: dict | None = None,
     ):
-        if transport not in ("line", "ws"):
-            raise ValueError(f"unknown transport {transport!r}")
-        self._blocks = blocks
         # scripted reorg: after serving reorg["after"] forward rolls,
         # emit ONE backward roll to reorg["point"] ({"slot", "id"} —
         # Ogmios v6 RollBackward shape), then serve reorg["blocks"]
@@ -70,7 +64,6 @@ class MockChainSyncNode:
                     for b in reorg["blocks"]
                 ]
             )
-        self.transport = transport
         # sequential client conversations to serve before closing —
         # each restarts at genesis (the data-source readers skip to
         # their offset; a real Ogmios resumes at the intersection point)
@@ -88,7 +81,7 @@ class MockChainSyncNode:
         return self
 
     def _respond(self, req: dict, cursor: int) -> tuple[dict, int]:
-        """The protocol state machine, transport-independent."""
+        """The protocol state machine: one response per request."""
         method = req.get("method")
         if method == "findIntersection":
             points = req.get("params", {}).get("points", [])
@@ -130,25 +123,13 @@ class MockChainSyncNode:
                 return
             cursor = 0
             with conn:
-                if self.transport == "ws":
-                    try:
-                        wsc = _ws.server_handshake(conn)
-                    except ConnectionError:
-                        continue
-                    while True:
-                        msg = wsc.recv_text()
-                        if msg is None:
-                            break
-                        resp, cursor = self._respond(json.loads(msg), cursor)
-                        wsc.send_text(json.dumps(resp))
-                else:
-                    fh = conn.makefile("rb")
-                    while True:
-                        line = fh.readline()
-                        if not line:
-                            break
-                        resp, cursor = self._respond(json.loads(line), cursor)
-                        conn.sendall((json.dumps(resp) + "\n").encode())
+                try:
+                    wsc = _ws.server_handshake(conn)
+                except ConnectionError:
+                    continue
+                while (msg := wsc.recv_text()) is not None:
+                    resp, cursor = self._respond(json.loads(msg), cursor)
+                    wsc.send_text(json.dumps(resp))
         self._sock.close()
 
     def close(self) -> None:
@@ -159,49 +140,22 @@ class MockChainSyncNode:
 
 
 class ChainSyncClient:
-    """One chain-sync conversation: connect (ws or line transport),
-    ``findIntersection`` once, then ``next_block()`` until tip. The
+    """One chain-sync conversation over a websocket: connect,
+    ``findIntersection`` once, then ``next_roll()`` until tip. The
     shared protocol core under :class:`ChainSyncProducer` (NDJSON
     landing) and the registered ``chain_sync`` Spark data source
     (:mod:`streaming.datasource`)."""
 
-    def __init__(
-        self,
-        host: str,
-        port: int,
-        transport: str = "line",
-        start_point: str = "origin",
-    ):
-        if transport not in ("line", "ws"):
-            raise ValueError(f"unknown transport {transport!r}")
+    def __init__(self, host: str, port: int, start_point: str = "origin"):
         self.host, self.port = host, port
-        self.transport = transport
         self.start_point = start_point
         self._id = 0
         self._sock: socket.socket | None = None
-        self._send = None
-        self._recv = None
+        self._wsc: _ws.WebSocketConnection | None = None
 
     def connect(self) -> "ChainSyncClient":
-        sock = socket.create_connection((self.host, self.port))
-        self._sock = sock
-        if self.transport == "ws":
-            wsc = _ws.client_handshake(sock, self.host, self.port)
-            self._send, self._recv = wsc.send_text, wsc.recv_text
-            self._wsc = wsc
-        else:
-            fh_in = sock.makefile("rb")
-            fh_out = sock.makefile("wb")
-
-            def send(s: str) -> None:
-                fh_out.write((s + "\n").encode())
-                fh_out.flush()
-
-            def recv() -> str | None:
-                line = fh_in.readline()
-                return line.decode() if line else None
-
-            self._send, self._recv = send, recv
+        self._sock = socket.create_connection((self.host, self.port))
+        self._wsc = _ws.client_handshake(self._sock, self.host, self.port)
         self._rpc("findIntersection", {"points": [self.start_point]})
         return self
 
@@ -210,8 +164,8 @@ class ChainSyncClient:
         req = {"jsonrpc": "2.0", "method": method, "id": self._id}
         if params:
             req["params"] = params
-        self._send(json.dumps(req))
-        msg = self._recv()
+        self._wsc.send_text(json.dumps(req))
+        msg = self._wsc.recv_text()
         if msg is None:
             raise ConnectionError("chain-sync peer closed mid-conversation")
         return json.loads(msg)
@@ -234,20 +188,20 @@ class ChainSyncClient:
             return "backward", result.get("point")
         return "tip", None
 
-    def next_block(self) -> str | None:
-        """Rollback-blind convenience: the next ``forward`` block
-        document, or ``None`` at tip OR on a backward roll (mirrors the
-        reference streamer, which only handles forward rolls —
-        src/cardano_streamer/main.py:42-47). Reorg-aware consumers use
-        :meth:`next_roll`."""
-        direction, payload = self.next_roll()
-        if direction == "forward":
-            return payload
-        return None
+    def skip(self, n: int) -> None:
+        """Consume up to ``n`` rolls, stopping early at tip: a resumed
+        reader skips what it already consumed, because the mock node
+        (and any replay fixture) restarts each conversation at genesis.
+        Against a live Ogmios node, pass the resume point as
+        ``start_point`` instead and skip nothing."""
+        for _ in range(n):
+            if self.next_roll()[0] == "tip":
+                return
 
     def close(self) -> None:
-        if self.transport == "ws" and getattr(self, "_wsc", None) is not None:
+        if self._wsc is not None:
             self._wsc.close()
+            self._wsc = None
         if self._sock is not None:
             try:
                 self._sock.close()
@@ -262,8 +216,8 @@ class ChainSyncProducer:
 
     ``rotate_every`` blocks per file: the file stream source picks up
     each closed file as (part of) a micro-batch, so rotation size is
-    the live path's batching knob. ``transport="ws"`` matches real
-    Ogmios (main.py:29-32); ``"line"`` is the bare-TCP dev variant.
+    the live path's batching knob. The websocket transport matches
+    real Ogmios (main.py:29-32).
     """
 
     def __init__(
@@ -272,14 +226,10 @@ class ChainSyncProducer:
         port: int,
         out_dir: str,
         rotate_every: int = 10,
-        transport: str = "line",
         emit_rollbacks: bool = False,
     ):
-        if transport not in ("line", "ws"):
-            raise ValueError(f"unknown transport {transport!r}")
         self.host, self.port, self.out_dir = host, port, out_dir
         self.rotate_every = rotate_every
-        self.transport = transport
         # emit_rollbacks=True: on a backward roll, flush pending blocks
         # and land a rollback MARKER line (streaming.rollback format)
         # as its OWN file, then keep syncing the replacement fork. The
@@ -326,7 +276,9 @@ class ChainSyncProducer:
             if f.startswith("part-") and f.endswith(".ndjson")
         ]
         file_idx = (
-            max(int(f[5:10]) for f in existing) + 1 if existing else 0
+            max(int(f[len("part-") : -len(".ndjson")]) for f in existing) + 1
+            if existing
+            else 0
         )
         landed_rolls = 0
         if resume:
@@ -352,16 +304,9 @@ class ChainSyncProducer:
             rollback_marker_line,
         )
 
-        client = ChainSyncClient(
-            self.host, self.port, self.transport, start_point
-        ).connect()
+        client = ChainSyncClient(self.host, self.port, start_point).connect()
         try:
-            skipped = 0
-            while skipped < landed_rolls:
-                direction, _ = client.next_roll()
-                if direction == "tip":
-                    break  # upstream shorter than the landing dir
-                skipped += 1
+            client.skip(landed_rolls)
             while max_blocks is None or n < max_blocks:
                 direction, payload = client.next_roll()
                 if direction == "tip":

@@ -6,11 +6,13 @@ becomes
 
     spark.dataSource.register(ChainSyncDataSource)
     spark.read.format("chain_sync")
-         .option("host", h).option("port", p).option("transport", "ws")
+         .option("host", h).option("port", p)
          .load()                      # batch: sync to tip
     spark.readStream.format("chain_sync")...load()   # micro-batches
 
-Rows are ``(value string, seq long)``: the NDJSON block document plus
+The conversation runs over a websocket, the one transport Ogmios
+serves (``streaming.chain_sync.ChainSyncClient``). Rows are
+``(value string, seq long)``: the NDJSON block document plus
 the cumulative roll index (the stream-offset counter), so every
 downstream parse stage is source-agnostic on ``value``. Backward
 rolls (reorgs) surface as rollback MARKER rows
@@ -32,8 +34,9 @@ file stream (partitioned, checkpointed); this source is the
 zero-landing-zone dev/replay tap. Offsets are cumulative ROLL counts
 (forward blocks + rollback markers, so replay reproduces reorgs
 exactly); ``readBetweenOffsets`` re-syncs a fresh conversation and
-skips to the start offset (the mock node replays from genesis on each conversation;
-a real Ogmios deployment would pass the actual intersection point).
+skips to the start offset (``ChainSyncClient.skip``: the mock node
+replays from genesis on each conversation; a real Ogmios deployment
+would pass the actual intersection point).
 """
 
 from __future__ import annotations
@@ -50,9 +53,8 @@ from pyspark.sql.types import StructType
 
 
 class ChainSyncDataSource(DataSource):
-    """Options: ``host`` (required), ``port`` (required), ``transport``
-    (``line``|``ws``, default ``line``), ``start_point`` (default
-    ``origin``), ``max_blocks`` (batch cap, default unlimited),
+    """Options: ``host`` (required), ``port`` (required),
+    ``start_point`` (default ``origin``), ``max_blocks`` (batch cap, default unlimited),
     ``batch_size`` (stream blocks per micro-batch, default 10 — the
     reference's micro-batch sizing knob)."""
 
@@ -92,23 +94,16 @@ def _next_row(client) -> str | None:
     return None
 
 
-def _connect(opts: dict, skip: int = 0):
+def _connect(opts: dict, skip: int):
+    """A connected client positioned after the first ``skip`` rolls."""
     from blockchain_data_engineering_spark.streaming.chain_sync import (
         ChainSyncClient,
     )
 
     client = ChainSyncClient(
-        opts["host"],
-        int(opts["port"]),
-        opts.get("transport", "line"),
-        opts.get("start_point", "origin"),
+        opts["host"], int(opts["port"]), opts.get("start_point", "origin")
     ).connect()
-    # skip already-consumed rolls: the mock node replays each
-    # conversation from genesis; against real Ogmios, pass the true
-    # point via start_point instead and skip stays 0
-    for _ in range(skip):
-        if _next_row(client) is None:
-            break
+    client.skip(skip)
     return client
 
 
@@ -124,7 +119,7 @@ class ChainSyncBatchReader(DataSourceReader):
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
         cap = int(self._opts.get("max_blocks", 2**62))
-        client = _connect(self._opts)
+        client = _connect(self._opts, 0)
         try:
             n = 0
             while n < cap:

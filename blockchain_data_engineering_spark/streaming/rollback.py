@@ -24,16 +24,21 @@ Mechanics end to end:
    - markers accumulate in a tiny side table ``<path>__rollbacks``
      (keyed idempotent upsert on seq — replay-safe),
    - a block is orphaned by marker m iff ``seq < m.seq AND
-     slot > m.slot`` — applied BOTH as a delete over already-sunk rows
-     and as a pre-upsert filter on the batch's own blocks, so the sink
+     slot > m.slot`` (:func:`orphaned`) — applied BOTH as a delete over
+     already-sunk rows (the landing table and every derived table) and
+     as a pre-upsert filter on the batch's own blocks, so the sink
      converges to the post-reorg chain under ANY delivery order.
+
+3. :func:`canonical_rows` evaluates the same predicate over a whole
+   roll log at once — the batch twin the incremental sink converges to.
 
 Scale shape: markers are reorg events — a handful per day on a real
 chain — so the side table and the driver-side marker list are
-O(markers), never O(batch); the survival filter is one narrow column
-predicate; the only heavy op is the table rewrite inside
-``delete_parquet_where``, paid once per reorg (Delta/Iceberg
-``DELETE WHERE`` is the transactional drop-in at lake scale).
+O(markers), never O(batch); the orphan predicate is one narrow column
+expression of O(log markers) comparisons per row; the only heavy op is
+the table rewrite inside ``delete_parquet_where``, paid once per reorg
+(Delta/Iceberg ``DELETE WHERE`` is the transactional drop-in at lake
+scale).
 """
 
 from __future__ import annotations
@@ -41,19 +46,27 @@ from __future__ import annotations
 import json
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from blockchain_data_engineering_spark.cache import release, round_checkpoint
-from blockchain_data_engineering_spark.domain.schema import BLOCK_SCHEMA
+from blockchain_data_engineering_spark.domain.blocks import VALUE, envelope
 from blockchain_data_engineering_spark.sources.io import (
+    _hadoop_fs,
     delete_parquet_where,
     upsert_parquet,
 )
 
 ROLLBACK_KEY = "py/rollback"
 _MARKER_PREFIX = '{"' + ROLLBACK_KEY + '"'
+# roll sequence and slot: the two stamps every sunk row (landing and
+# derived tables alike) carries for the orphan predicate
 SEQ_COL = "__seq"
+SLOT = "slot"
+# the block fields parse_block_rows keeps
+BLOCK_COLS = ("id", "slot", "height")
+# canonical_rows' roll log: roll sequence, marker flag, rollback point
+LOG_SEQ, LOG_MARKER, LOG_POINT = "seq", "is_marker", "pt"
 
 
 def rollback_marker_line(point: dict | None) -> str:
@@ -68,11 +81,11 @@ def rollback_marker_line(point: dict | None) -> str:
     )
 
 
-def is_rollback_marker(value_col: str = "value") -> Column:
+def is_rollback_marker() -> Column:
     """Predicate: is this landed line a rollback marker? Markers are
     the only lines the producer emits whose JSON object starts with the
     ``py/rollback`` key (block envelopes start with ``py/state``)."""
-    return F.col(value_col).startswith(_MARKER_PREFIX)
+    return F.col(VALUE).startswith(_MARKER_PREFIX)
 
 
 def file_seq() -> Column:
@@ -80,75 +93,101 @@ def file_seq() -> Column:
     ``part-NNNNN`` landing file (``input_file_name`` is stable per
     row). The producer assigns file indexes monotonically and flushes
     a marker as its own file, so comparing seqs reconstructs roll order
-    regardless of how the file source batches the files."""
+    regardless of how the file source batches the files. Only the
+    file's own name counts: a ``part-N`` directory higher up the path
+    is not a roll index."""
     # try_cast, not cast: rows with no landing file (e.g. the
     # chain_sync data source) extract '' — under ANSI mode a plain
     # cast('') throws an opaque CAST_INVALID_INPUT mid-scan; try_cast
     # yields NULL, which rollback_aware_upsert turns into a clear
     # "pass seq_col=..." error instead
     return F.expr(
-        r"try_cast(regexp_extract(input_file_name(), 'part-(\\d+)', 1)"
+        r"try_cast(regexp_extract(input_file_name(), 'part-(\\d+)[^/]*$', 1)"
         " AS LONG)"
     )
 
 
-def parse_block_rows(
-    lines: DataFrame,
-    cols: Sequence[str] = ("id", "slot", "height"),
-    value_col: str = "value",
-) -> DataFrame:
+def parse_block_rows(lines: DataFrame) -> DataFrame:
     """Default parse for :func:`rollback_aware_upsert`: block envelope
-    lines → typed rows, PRESERVING the roll-sequence column (the sink
-    stores it so late-arriving markers can still identify orphans)."""
-    j = lines.select(
-        SEQ_COL, F.from_json(F.col(value_col), BLOCK_SCHEMA).alias("json")
-    )
+    lines → typed ``BLOCK_COLS`` rows, PRESERVING the roll-sequence
+    column (the sink stores it so late-arriving markers can still
+    identify orphans)."""
+    j = lines.select(SEQ_COL, envelope().alias("json"))
     state = j["json"].getField("py/state")
-    return j.select(
-        SEQ_COL, *[state.getField(c).alias(c) for c in cols]
-    )
+    return j.select(SEQ_COL, *[state.getField(c).alias(c) for c in BLOCK_COLS])
 
 
-def _load_markers(spark: SparkSession, store: str) -> list[tuple[int, int]]:
-    """All rollback markers recorded so far. A missing store is the
-    normal first-batches case (no reorg seen yet) and reads as "no
-    markers" — detected via an explicit Hadoop-FS existence probe, NOT
-    a blanket except: a corrupt or permission-broken store must raise
-    loudly, because silently reading it as "no reorgs ever" would skip
-    the undo and retain orphaned rows — the exact failure this module
-    exists to prevent."""
-    from blockchain_data_engineering_spark.sources.io import _hadoop_fs
+def _stores(path: str) -> tuple[str, str]:
+    """The two marker stores of the sink at ``path``: every marker
+    recorded ``(seq, slot)``, and the seqs whose undo has settled."""
+    base = path.rstrip("/")
+    return base + "__rollbacks", base + "__rollbacks_applied"
 
+
+def _read_store(spark: SparkSession, store: str) -> list[Row]:
+    """The rows of a marker store. A missing store is the normal
+    first-batches case (no reorg seen yet) and reads as empty —
+    detected via an explicit Hadoop-FS existence probe, NOT a blanket
+    except: a corrupt or permission-broken store must raise loudly,
+    because silently reading it as "no reorgs ever" would skip the undo
+    and retain orphaned rows — the exact failure this module exists to
+    prevent. The applied store is kept as an exact per-marker seq set,
+    not a high-water seq: mod-time batching can deliver an older-seq
+    marker AFTER a newer one was applied, and a high-water diff would
+    skip it."""
     fs, _, hstore = _hadoop_fs(spark, store)
     if not fs.exists(hstore):
         return []
-    return [
-        (r["seq"], r["slot"])
-        for r in spark.read.parquet(store).collect()
-    ]
+    return spark.read.parquet(store).collect()
 
 
-def _load_applied_seqs(spark: SparkSession, store: str) -> set[int]:
-    """Marker seqs whose orphan deletes (and ``on_rollback``) have
-    FULLY settled. Same missing-is-empty / corrupt-raises contract as
-    :func:`_load_markers`. Kept as an exact per-marker set, not a
-    high-water seq: mod-time batching can deliver an older-seq marker
-    AFTER a newer one was applied, and a high-water diff would skip
-    it."""
-    from blockchain_data_engineering_spark.sources.io import _hadoop_fs
+def orphaned(
+    markers: Sequence[tuple[int, int]], seq: Column, slot: Column
+) -> Column:
+    """The orphan predicate ``∃ m: seq < m.seq AND slot > m.slot`` over
+    the ``(seq, slot)`` markers (sorted by seq) — FALSE when no marker
+    follows the row, NULL for a NULL slot that a marker follows.
 
-    fs, _, hstore = _hadoop_fs(spark, store)
-    if not fs.exists(hstore):
-        return set()
-    return {r["seq"] for r in spark.read.parquet(store).collect()}
+    The cut for a row is the MIN rollback slot among markers after it —
+    a suffix-min STEP FUNCTION of seq, suffix-min'd in Python and
+    embedded as a BALANCED BINARY DECISION TREE of CaseWhens: O(log
+    markers) comparisons per row at depth ~log2(m), which both
+    whole-stage-codegens and keeps the column-conversion recursion
+    shallow. Rejected alternatives, all measured slower or broken: a
+    higher-order filter over a literal array evaluates interpreted
+    (boxes the array per row, 2× wall), a flat m-branch CaseWhen or an
+    OR chain over the markers evaluates O(m) per row, and an m-deep
+    .otherwise() nesting overflows the JVM stack during conversion."""
+    m = len(markers)
+    # sufmin[i] = min slot of markers[i:]
+    sufmin: list[int] = [0] * m
+    for i in range(m - 1, -1, -1):
+        sufmin[i] = (
+            markers[i][1] if i == m - 1 else min(markers[i][1], sufmin[i + 1])
+        )
+
+    # cut(seq) = sufmin[first i with seq < markers[i].seq]; no such
+    # marker → NULL (nothing after this row ever rolls back)
+    def _cut(lo: int, hi: int) -> Column:
+        # answer index is in [lo, hi]; index m means "no marker after"
+        if lo == hi:
+            if lo == m:
+                return F.lit(None).cast("bigint")
+            return F.lit(int(sufmin[lo]))
+        mid = (lo + hi) // 2
+        return F.when(seq < F.lit(int(markers[mid][0])), _cut(lo, mid)).otherwise(
+            _cut(mid + 1, hi)
+        )
+
+    cut = _cut(0, m)
+    return cut.isNotNull() & (slot > cut)
 
 
 def prune_rollback_markers(
     spark: SparkSession, path: str, min_live_seq: int
 ) -> tuple[int, int]:
     """Compact the two marker stores (r6 judge ask: the applied store
-    grew forever, making ``_load_applied_seqs`` an unbounded
-    driver-side collect — the one shape this repo otherwise bans).
+    grew forever, making its read an unbounded driver-side collect — the one shape this repo otherwise bans).
 
     ``min_live_seq`` is the caller's watermark promise: *no row with
     ``seq < min_live_seq`` will ever arrive again* (e.g. the smallest
@@ -170,8 +209,8 @@ def prune_rollback_markers(
        wasteful.
 
     Returns ``(n_store_pruned, n_applied_pruned)``. O(markers) work
-    against two O(markers)-row tables; after a prune,
-    ``_load_applied_seqs`` is O(live markers) again.
+    against two O(markers)-row tables; after a prune, reading the
+    applied store is O(live markers) again.
 
     Plan shape (r7 judge nit): the delete predicates test membership
     against the PENDING set (store − applied), never the applied set —
@@ -183,10 +222,9 @@ def prune_rollback_markers(
     O(1)-ish by protocol; every store row ≤ watermark that is NOT
     pending is, by the two-store invariant, applied and prunable.
     """
-    store = path.rstrip("/") + "__rollbacks"
-    applied_store = path.rstrip("/") + "__rollbacks_applied"
-    applied = _load_applied_seqs(spark, applied_store)
-    stored = {s for s, _ in _load_markers(spark, store)}
+    store, applied_store = _stores(path)
+    applied = {r["seq"] for r in _read_store(spark, applied_store)}
+    stored = {r["seq"] for r in _read_store(spark, store)}
     wm = F.lit(int(min_live_seq))
     n_store = 0
     # pending = stored − applied: small by protocol (see docstring).
@@ -210,38 +248,13 @@ def prune_rollback_markers(
     return n_store, n_applied
 
 
-class DerivedTable:
-    """A table DERIVED from landed blocks that must roll back with
-    them: each of its rows carries the ``(seq, slot)`` of the single
-    block that contributed it, so the same orphan predicate that undoes
-    the landing table undoes the derivation — fingerprint/n-gram
-    indexes, per-block rollup contributions, edge tables.
-
-    Exactness contract: the undo is exact when every derived row has
-    ONE contributing block (the ``(seq, slot)`` it carries). A row
-    merged from several blocks (e.g. a keep-first index entry two
-    blocks both produced) loses the surviving contributor when the
-    stamped one is orphaned — store such state at per-contributor
-    grain, exactly as Delta ``DELETE WHERE`` would require."""
-
-    def __init__(
-        self, path: str, slot_col: str = "slot", seq_col: str = SEQ_COL
-    ):
-        self.path = path
-        self.slot_col = slot_col
-        self.seq_col = seq_col
-
-
 def rollback_aware_upsert(
     batch_lines: DataFrame,
     path: str,
     key_cols: Sequence[str],
     parse_fn: Callable[[DataFrame], DataFrame] = parse_block_rows,
-    slot_col: str = "slot",
-    order_cols: Sequence[Column] | None = None,
-    value_col: str = "value",
     seq_col: str | None = None,
-    derived: Sequence[DerivedTable] = (),
+    derived: Sequence[str] = (),
     sink_fn: Callable[[DataFrame], None] | None = None,
     on_rollback: Callable[[int], None] | None = None,
     prune_below_seq: int | None = None,
@@ -250,12 +263,12 @@ def rollback_aware_upsert(
     """foreachBatch body for a reorg-aware keyed parquet sink: record
     every rollback marker in ``batch_lines`` (idempotent side-table
     upsert), undo orphaned rows already sunk — from the landing table
-    AND every registered ``derived`` table — drop orphaned blocks from
+    AND every ``derived`` table path — drop orphaned blocks from
     this batch, then upsert the survivors parsed by ``parse_fn``.
     Returns rows deleted from the landing table this batch.
 
     ``parse_fn`` maps a ``(value, __seq)`` DataFrame of block lines to
-    typed rows carrying ``slot_col``, ``key_cols``, AND ``__seq`` (the
+    typed rows carrying ``slot``, ``key_cols``, AND ``__seq`` (the
     default :func:`parse_block_rows` does). Replay-idempotent end to
     end: marker upsert, delete predicate, and keyed block upsert all
     converge under re-execution of the same batch — AND under a retry
@@ -277,14 +290,22 @@ def rollback_aware_upsert(
     both crash marker decoding and make the orphan predicate
     three-valued (orphaned blocks silently retained).
 
-    Derived state: ``derived`` tables get the SAME orphan delete the
-    landing table gets whenever a new marker lands; ``sink_fn`` (if
-    given) receives the batch's canonical survivor rows — already
-    marker-filtered, carrying ``__seq`` and ``slot_col``, eagerly
-    materialized — so the consumer updates its derived tables from
-    exactly the rows that landed. Keep derived sinks KEYED (idempotent
-    upserts) so batch replays converge, same contract as the landing
-    table.
+    Derived state: a table DERIVED from landed blocks (fingerprint or
+    n-gram indexes, per-block rollup contributions, edge tables) rolls
+    back with them when each of its rows carries the ``(__seq, slot)``
+    of the single block that contributed it: list its path in
+    ``derived`` and it gets the SAME orphan delete the landing table
+    gets whenever a new marker lands. The undo is exact when every
+    derived row has ONE contributing block; a row merged from several
+    blocks (a keep-first index entry two blocks both produced) loses
+    the surviving contributor when the stamped one is orphaned — store
+    such state at per-contributor grain, exactly as Delta ``DELETE
+    WHERE`` would require. ``sink_fn`` (if given) receives the batch's
+    canonical survivor rows — already marker-filtered, carrying
+    ``__seq`` and ``slot``, eagerly materialized — so the consumer
+    updates its derived tables from exactly the rows that landed. Keep
+    derived sinks KEYED (idempotent upserts) so batch replays converge,
+    same contract as the landing table.
 
     ``on_rollback`` (if given) fires once per batch that lands NEW
     markers, with the minimum rollback slot among them, AFTER the
@@ -322,27 +343,26 @@ def rollback_aware_upsert(
     )
     spark = batch_lines.sparkSession
     seq_expr = F.col(seq_col) if seq_col else file_seq()
-    lines = batch_lines.select(F.col(value_col), seq_expr.alias(SEQ_COL))
+    lines = batch_lines.select(F.col(VALUE), seq_expr.alias(SEQ_COL))
     # ONE driver collect serves both marker decoding and the NULL-seq
     # guard (markers are O(reorgs); NULL seqs are a caller error)
     flagged = lines.where(
-        is_rollback_marker(value_col) | F.col(SEQ_COL).isNull()
+        is_rollback_marker() | F.col(SEQ_COL).isNull()
     ).collect()
     null_seq = [r for r in flagged if r[SEQ_COL] is None]
     if null_seq:
         raise ValueError(
             "rollback_aware_upsert: NULL roll sequence on "
-            f"{len(null_seq)} row(s) (first: {null_seq[0][value_col]!r:.80}). "
+            f"{len(null_seq)} row(s) (first: {null_seq[0][VALUE]!r:.80}). "
             "Rows not landed as part-NNNNN files carry no file-derived "
             "seq — pass seq_col=<explicit roll column> (the chain_sync "
             "data source emits one as 'seq')."
         )
-    marker_rows = flagged
     new_markers = [
-        (int(r[SEQ_COL]), int(json.loads(r[value_col])[ROLLBACK_KEY]["slot"]))
-        for r in marker_rows
+        (int(r[SEQ_COL]), int(json.loads(r[VALUE])[ROLLBACK_KEY]["slot"]))
+        for r in flagged
     ]
-    store = path.rstrip("/") + "__rollbacks"
+    store, applied_store = _stores(path)
     if new_markers:
         upsert_parquet(
             spark.createDataFrame(new_markers, "seq LONG, slot LONG"),
@@ -352,7 +372,7 @@ def rollback_aware_upsert(
     # every batch filters against ALL markers seen so far, not just
     # this batch's — blocks can arrive after the marker that orphans
     # them (mod-time batching), and only the store remembers it
-    markers = sorted(set(_load_markers(spark, store)))
+    markers = sorted({(r["seq"], r["slot"]) for r in _read_store(spark, store)})
     # Crash-window convergence for NON-redelivering callers (r5 judge
     # ask #2): deletes + hook used to run only for THIS batch's marker
     # lines, so a crash after the store write but before the deletes
@@ -363,44 +383,25 @@ def rollback_aware_upsert(
     # checkpoint) still finds it and converges. Every store write is a
     # keyed idempotent upsert, so any crash point inside this function
     # re-runs cleanly.
-    applied_store = path.rstrip("/") + "__rollbacks_applied"
-    applied_seqs = _load_applied_seqs(spark, applied_store)
+    applied_seqs = {r["seq"] for r in _read_store(spark, applied_store)}
     pending = [(s, sl) for s, sl in markers if s not in applied_seqs]
 
-    blocks = lines.where(~is_rollback_marker(value_col))
+    blocks = lines.where(~is_rollback_marker())
+    # orphaned rows go from the sunk tables (delete) AND from this
+    # batch's own blocks (filter), making the sink order-independent: a
+    # marker arriving BEFORE some of its orphans still kills them when
+    # they land. With no markers the predicate folds to FALSE and the
+    # optimizer drops the filter.
+    orphan = orphaned(markers, F.col(SEQ_COL), F.col(SLOT))
     n_deleted = 0
-    if markers:
-        # orphaned by marker m  ⇔  rolled forward before it AND above
-        # its rollback point — the one predicate applied to sunk rows
-        # (delete) and to this batch's own blocks (filter), making the
-        # sink order-independent: a marker arriving BEFORE some of its
-        # orphans still kills them when they land
-        def orphaned(seq: Column, slot: Column) -> Column:
-            cond = F.lit(False)
-            for mseq, mslot in markers:
-                cond = cond | (
-                    (seq < F.lit(mseq)) & (slot > F.lit(mslot))
-                )
-            return cond
-
-        if pending:
-            n_deleted = delete_fn(
-                spark, path, orphaned(F.col(SEQ_COL), F.col(slot_col))
-            )
-            # derived tables roll back with the landing table: the
-            # identical predicate over THEIR (seq, slot) stamps — a
-            # reorg-rare O(table) rewrite each, same trade as above
-            for d in derived:
-                delete_fn(
-                    spark,
-                    d.path,
-                    orphaned(F.col(d.seq_col), F.col(d.slot_col)),
-                )
-        rows = parse_fn(blocks).where(
-            ~orphaned(F.col(SEQ_COL), F.col(slot_col))
-        )
-    else:
-        rows = parse_fn(blocks)
+    if pending:
+        n_deleted = delete_fn(spark, path, orphan)
+        # derived tables roll back with the landing table: the identical
+        # predicate over THEIR (seq, slot) stamps — a reorg-rare O(table)
+        # rewrite each, same trade as above
+        for d in derived:
+            delete_fn(spark, d, orphan)
+    rows = parse_fn(blocks).where(~orphan)
     # the hook fires LAST — after the batch's own survivors are upserted
     # and the derived sinks ran — so a hook-only consumer reading the
     # landing table (refresh_from) sees THIS batch's replacement blocks
@@ -443,80 +444,36 @@ def rollback_aware_upsert(
         # may have moved past (docs/SCALE.md read-then-rewrite rule)
         rows = round_checkpoint(rows)
         try:
-            upsert_parquet(rows, path, key_cols, order_cols)
+            upsert_parquet(rows, path, key_cols)
             sink_fn(rows)
         finally:
             release(rows)
     else:
-        upsert_parquet(rows, path, key_cols, order_cols)
+        upsert_parquet(rows, path, key_cols)
     _settle()
     return n_deleted
 
 
-def canonical_rows(
-    log: DataFrame,
-    seq_col: str = "seq",
-    slot_col: str = "slot",
-    marker_col: str = "is_marker",
-    point_col: str = "pt",
-) -> DataFrame:
+def canonical_rows(log: DataFrame) -> DataFrame:
     """Batch replay of the reorg retraction semantics over a FULL roll
-    log: a block row survives iff no later marker rolls back below it
-    (``NOT EXISTS m: m.seq > row.seq AND row.slot > m.point``) — the
-    same orphan predicate :func:`rollback_aware_upsert` applies
-    incrementally, evaluated over the whole history at once. Returns
-    the canonical (surviving, non-marker) rows.
+    log ``(seq, slot, is_marker, pt, …)``: a block row survives iff no
+    later marker rolls back below it (``NOT EXISTS m: m.seq > row.seq
+    AND row.slot > m.pt``) — the same :func:`orphaned` predicate
+    :func:`rollback_aware_upsert` applies incrementally, evaluated over
+    the whole history at once. Returns the canonical (surviving,
+    non-marker) rows.
 
-    Scale shape: the cut for a row is the MIN rollback point among
-    markers after it — a suffix-min STEP FUNCTION of seq. Markers are
-    reorg events (a handful per day on a real chain), so the marker
-    table is collected driver-side (bounded O(markers), the same
-    budget as the rollback side table), suffix-min'd in Python, and
-    embedded as a chained CASE over the marker boundaries — whole-stage
-    codegen'd branches (a higher-order-function formulation over a
-    literal array was measured 2× slower: HOFs evaluate interpreted,
-    boxing the array per row). NO global-sort window over the log, NO
-    non-equi join — the plan stays embarrassingly parallel, the only
-    shuffle is whatever aggregation the caller adds.
+    Markers are reorg events (a handful per day on a real chain), so
+    the marker table is collected driver-side (bounded O(markers), the
+    same budget as the rollback side table) and embedded in the
+    predicate. NO global-sort window over the log, NO non-equi join —
+    the plan stays embarrassingly parallel, the only shuffle is
+    whatever aggregation the caller adds.
     """
-    marker_pts = sorted(
-        (r[seq_col], r[point_col])
-        for r in log.where(F.col(marker_col))
-        .select(seq_col, point_col)
-        .collect()
+    markers = sorted(
+        (r[LOG_SEQ], r[LOG_POINT])
+        for r in log.where(F.col(LOG_MARKER)).select(LOG_SEQ, LOG_POINT).collect()
     )
-    m = len(marker_pts)
-    # sufmin[i] = min point of markers[i:]
-    sufmin: list[int] = [0] * m
-    for i in range(m - 1, -1, -1):
-        sufmin[i] = (
-            marker_pts[i][1]
-            if i == m - 1
-            else min(marker_pts[i][1], sufmin[i + 1])
-        )
-    # cut(seq) = sufmin[first i with seq < marker_seq[i]]; no such
-    # marker → NULL (nothing after this row ever rolls back).
-    # Embedded as a BALANCED BINARY DECISION TREE of CaseWhens —
-    # O(log markers) comparisons per row at depth ~log2(m), which both
-    # whole-stage-codegens and keeps the column-conversion recursion
-    # shallow. Rejected alternatives, both measured slower/broken: a
-    # higher-order filter over a literal array evaluates interpreted
-    # (boxes the array per row, 2× wall), a flat m-branch CaseWhen
-    # evaluates O(m) per row, and an m-deep .otherwise() nesting
-    # overflows the JVM stack during conversion.
-    def _cut(lo: int, hi: int) -> Column:
-        # answer index (first i with seq < bound[i]) is in [lo, hi];
-        # index m means "no marker after" → NULL
-        if lo == hi:
-            if lo == m:
-                return F.lit(None).cast("bigint")
-            return F.lit(int(sufmin[lo]))
-        mid = (lo + hi) // 2
-        return F.when(
-            F.col(seq_col) < F.lit(int(marker_pts[mid][0])), _cut(lo, mid)
-        ).otherwise(_cut(mid + 1, hi))
-
-    cut = _cut(0, m)
     return log.where(
-        (~F.col(marker_col)) & (cut.isNull() | (F.col(slot_col) <= cut))
+        (~F.col(LOG_MARKER)) & ~orphaned(markers, F.col(LOG_SEQ), F.col(SLOT))
     )

@@ -10,7 +10,7 @@ maintains THREE tables through the reorg:
 
   blocks       — the keyed landing table (rollback_aware_upsert)
   fp_index     — a fingerprint index DERIVED from landed blocks
-                 (DerivedTable: rows stamped with their contributing
+                 (a ``derived`` path: rows stamped with their contributing
                  block's roll seq + slot, undone by the same orphan
                  predicate)
   block_rollup — per-block rollup CONTRIBUTIONS (block grain so the
@@ -52,7 +52,6 @@ from blockchain_data_engineering_spark.streaming.incremental_agg import (
     IncrementalRollup,
 )
 from blockchain_data_engineering_spark.streaming.rollback import (
-    DerivedTable,
     rollback_aware_upsert,
 )
 
@@ -154,7 +153,7 @@ def main(work: str) -> None:
             batch_df,
             blocks_tbl,
             ["id"],
-            derived=[DerivedTable(fp_index), DerivedTable(rollup_tbl)],
+            derived=[fp_index, rollup_tbl],
             sink_fn=derived_sink,
             on_rollback=on_rollback,
         )

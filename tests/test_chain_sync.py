@@ -34,15 +34,14 @@ def chain():
     return generate_chain(n_blocks=24, seed=11)
 
 
-@pytest.mark.parametrize("transport", ["line", "ws"])
-def test_producer_lands_all_blocks(chain, tmp_path, transport):
-    """Both transports end-to-end: bare-TCP line JSON-RPC and genuine
-    RFC-6455 websocket frames (what real Ogmios serves —
-    reference src/cardano_streamer/main.py:29-32)."""
-    node = MockChainSyncNode(chain.lines, transport=transport).start()
+# the id names the transport: genuine RFC-6455 websocket frames, what
+# real Ogmios serves (reference src/cardano_streamer/main.py:29-32)
+@pytest.mark.parametrize("rotate_every", [pytest.param(7, id="ws")])
+def test_producer_lands_all_blocks(chain, tmp_path, rotate_every):
+    node = MockChainSyncNode(chain.lines).start()
     out = str(tmp_path / "landing")
     n = ChainSyncProducer(
-        node.host, node.port, out, rotate_every=7, transport=transport
+        node.host, node.port, out, rotate_every=rotate_every
     ).run()
     node.close()
     assert n == len(chain.lines)
@@ -52,6 +51,30 @@ def test_producer_lands_all_blocks(chain, tmp_path, transport):
     for f in sorted(glob.glob(out + "/part-*.ndjson")):
         lines += [ln for ln in open(f).read().splitlines() if ln]
     assert lines == chain.lines  # order- and content-exact replay
+
+
+def test_producer_numbers_files_past_five_digits(chain, tmp_path):
+    """The next file index follows the largest landed one even past
+    part-99999: reading only five digits would take part-100000 for
+    10000 and overwrite it, and the file source never re-reads a name
+    it has seen, so those blocks would vanish."""
+    out = tmp_path / "landing"
+    out.mkdir()
+    (out / "part-99999.ndjson").write_text(chain.lines[0] + "\n")
+    (out / "part-100000.ndjson").write_text(chain.lines[1] + "\n")
+    node = MockChainSyncNode(chain.lines).start()
+    n = ChainSyncProducer(node.host, node.port, str(out), rotate_every=10).run()
+    node.close()
+    assert n == len(chain.lines)
+    assert (out / "part-99999.ndjson").read_text() == chain.lines[0] + "\n"
+    assert (out / "part-100000.ndjson").read_text() == chain.lines[1] + "\n"
+    new = sorted(
+        (int(p.name[5:-7]), p.read_text().splitlines())
+        for p in out.glob("part-*.ndjson")
+        if p.name not in ("part-99999.ndjson", "part-100000.ndjson")
+    )
+    assert [i for i, _ in new] == [100001, 100002, 100003]
+    assert sum((lines for _, lines in new), []) == chain.lines
 
 
 def test_ws_accept_key_rfc_vector():
@@ -233,12 +256,11 @@ def test_chain_sync_datasource_batch(spark, chain):
     )
 
     spark.dataSource.register(ChainSyncDataSource)
-    node = MockChainSyncNode(chain.lines, transport="ws").start()
+    node = MockChainSyncNode(chain.lines).start()
     df = (
         spark.read.format("chain_sync")
         .option("host", node.host)
         .option("port", node.port)
-        .option("transport", "ws")
         .load()
     )
     vals = [r["value"] for r in df.collect()]
@@ -256,7 +278,7 @@ def test_chain_sync_datasource_stream(spark, chain, tmp_path):
     )
 
     spark.dataSource.register(ChainSyncDataSource)
-    node = MockChainSyncNode(chain.lines, transport="line").start()
+    node = MockChainSyncNode(chain.lines).start()
     df = (
         spark.readStream.format("chain_sync")
         .option("host", node.host)
@@ -297,13 +319,8 @@ def test_chain_sync_datasource_restart_replay(chain):
         ChainSyncSimpleStreamReader,
     )
 
-    node = MockChainSyncNode(chain.lines, transport="ws", max_conns=3).start()
-    opts = {
-        "host": node.host,
-        "port": str(node.port),
-        "transport": "ws",
-        "batch_size": "7",
-    }
+    node = MockChainSyncNode(chain.lines, max_conns=3).start()
+    opts = {"host": node.host, "port": str(node.port), "batch_size": "7"}
     r1 = ChainSyncSimpleStreamReader(opts)
     it, end = r1.read(r1.initialOffset())
     first = [t[0] for t in it]
@@ -329,8 +346,8 @@ def test_chain_sync_replay_gap_raises(chain):
         ChainSyncSimpleStreamReader,
     )
 
-    node = MockChainSyncNode(chain.lines, transport="ws", max_conns=2).start()
-    opts = {"host": node.host, "port": str(node.port), "transport": "ws"}
+    node = MockChainSyncNode(chain.lines, max_conns=2).start()
+    opts = {"host": node.host, "port": str(node.port)}
     r = ChainSyncSimpleStreamReader(opts)
     # in-range replay still works …
     ok = [t[0] for t in r.readBetweenOffsets({"n": 0}, {"n": 5})]

@@ -569,6 +569,99 @@ def test_canonical_rows_matches_python_model(spark):
         assert got == expected, (scenario, sorted(got ^ expected))
 
 
+def test_rollback_sink_and_canonical_rows_agree(spark, tmp_path):
+    """One orphan predicate, both callers: a random roll log, split
+    into random batches, lands through rollback_aware_upsert exactly
+    the blocks canonical_rows keeps and the Python model above expects.
+    Batches take rows from anywhere in the log, so markers arrive
+    before some of their orphans. Blocks with a NULL slot follow the
+    documented NULL rule: canonical_rows drops one iff any marker
+    follows it; the sink drops one iff such a marker was delivered in
+    its batch or an earlier one (delete_parquet_where keeps a
+    NULL-slot row)."""
+    import json
+    import random
+
+    from blockchain_data_engineering_spark.streaming.rollback import (
+        canonical_rows,
+        rollback_aware_upsert,
+        rollback_marker_line,
+    )
+
+    rng = random.Random(29)
+    early_markers = null_slots = 0  # the cases the log must exercise
+    for scenario in range(3):
+        n = rng.randint(12, 30)
+        n_batches = rng.randint(2, 4)
+        rows = []  # (seq, slot, is_marker, pt, batch)
+        for seq in range(n):
+            is_m = rng.random() < 0.2
+            slot = seq * 2 + rng.randint(0, 1)
+            if not is_m and rng.random() < 0.15:
+                slot = None
+            pt = slot - rng.randint(0, 20) if is_m else None
+            rows.append((seq, slot, is_m, pt, rng.randrange(n_batches)))
+        markers = [(seq, pt, b) for seq, _, is_m, pt, b in rows if is_m]
+
+        table = "file://" + str(tmp_path / f"s{scenario}")
+        for b in range(n_batches):
+            lines = [
+                (
+                    rollback_marker_line({"slot": pt})
+                    if is_m
+                    else json.dumps(
+                        {"py/state": {"id": f"b{seq}", "slot": slot, "height": seq}}
+                    ),
+                    seq,
+                )
+                for seq, slot, is_m, pt, batch in rows
+                if batch == b
+            ]
+            if lines:
+                rollback_aware_upsert(
+                    spark.createDataFrame(lines, "value STRING, seq LONG"),
+                    table,
+                    ["id"],
+                    seq_col="seq",
+                )
+        landed = {
+            int(r["id"][1:])
+            for r in spark.read.parquet(table).select("id").collect()
+        }
+        log = spark.createDataFrame(
+            [r[:4] for r in rows],
+            "seq LONG, slot LONG, is_marker BOOLEAN, pt LONG",
+        )
+        kept = {r["seq"] for r in canonical_rows(log).select("seq").collect()}
+
+        def model(seq, slot, batch, delivered):
+            later = [
+                (m_pt, m_b) for m_seq, m_pt, m_b in markers if m_seq > seq
+            ]
+            if slot is None:
+                return not any(delivered(m_b, batch) for _, m_b in later)
+            return not any(slot > m_pt for m_pt, _ in later)
+
+        blocks = [(seq, slot, b) for seq, slot, is_m, _, b in rows if not is_m]
+        want_kept = {
+            s for s, sl, b in blocks if model(s, sl, b, lambda mb, bb: True)
+        }
+        want_landed = {
+            s for s, sl, b in blocks if model(s, sl, b, lambda mb, bb: mb <= bb)
+        }
+        assert kept == want_kept, (scenario, sorted(kept ^ want_kept))
+        assert landed == want_landed, (scenario, sorted(landed ^ want_landed))
+        null_slot = {s for s, sl, _ in blocks if sl is None}
+        assert kept - null_slot == landed - null_slot
+        null_slots += len(null_slot)
+        early_markers += sum(
+            m_seq > s and m_b < b and sl is not None and sl > m_pt
+            for m_seq, m_pt, m_b in markers
+            for s, sl, b in blocks
+        )
+    assert early_markers and null_slots
+
+
 # ------------------------------------------------------- r5 operators ---
 # Python models of the round-5 analytic operators, checked against
 # random inputs driver-side, then one Spark-vs-model test each (the

@@ -947,7 +947,6 @@ def test_reorg_rollback_stream_converges_to_post_reorg_batch(spark, tmp_path):
     )
     node = MockChainSyncNode(
         chain_a.lines,
-        transport="ws",
         reorg={"after": 16, "point": point, "blocks": fork.lines},
     ).start()
     land = str(tmp_path / "landing")
@@ -956,7 +955,6 @@ def test_reorg_rollback_stream_converges_to_post_reorg_batch(spark, tmp_path):
         node.port,
         land,
         rotate_every=3,
-        transport="ws",
         emit_rollbacks=True,
     ).run()
     node.close()
@@ -1059,6 +1057,55 @@ def test_reorg_marker_before_orphans_still_converges(spark, tmp_path):
     assert got == expected
 
 
+def test_reorg_seq_reads_the_file_name_not_a_parent_dir(spark, tmp_path):
+    """The roll sequence comes from the landing file's own
+    ``part-NNNNN`` name: a landing dir under a ``part-3/`` parent must
+    not give every row seq 3, which would orphan nothing."""
+    from blockchain_data_engineering_spark.streaming.chain_sync import (
+        ChainSyncProducer,
+        MockChainSyncNode,
+    )
+    from blockchain_data_engineering_spark.streaming.rollback import (
+        rollback_aware_upsert,
+    )
+
+    chain_a = generate_chain(n_blocks=8, seed=5)
+    anchor = chain_a.blocks[3]["py/state"]
+    fork = generate_chain(
+        n_blocks=2,
+        seed=43,
+        start_height=anchor["height"] + 1,
+        start_slot=anchor["slot"] + 7,
+    )
+    node = MockChainSyncNode(
+        chain_a.lines,
+        reorg={
+            "after": 8,
+            "point": {"slot": anchor["slot"], "id": anchor["id"]},
+            "blocks": fork.lines,
+        },
+    ).start()
+    land = str(tmp_path / "part-3" / "land")
+    ChainSyncProducer(
+        node.host, node.port, land, rotate_every=3, emit_rollbacks=True
+    ).run()
+    node.close()
+
+    table = str(tmp_path / "tbl")
+    n_del = rollback_aware_upsert(spark.read.text(land), table, ["id"])
+    assert n_del == 0  # one batch: the orphans are filtered, not deleted
+    expected = {
+        r["id"]
+        for r in B.parse_block_lines(
+            spark.createDataFrame(
+                [(l,) for l in chain_a.lines[:4] + fork.lines], ["value"]
+            )
+        ).collect()
+    }
+    got = {r["id"] for r in spark.read.parquet(table).collect()}
+    assert got == expected
+
+
 def test_reorg_default_producer_stops_at_rollback(spark, tmp_path):
     """emit_rollbacks=False preserves the reference streamer's
     forward-only behavior: stop at the first backward roll."""
@@ -1113,7 +1160,6 @@ def test_reorg_datasource_emits_marker_rows(spark, tmp_path):
     )
     node = MockChainSyncNode(
         chain_a.lines,
-        transport="ws",
         reorg={
             "after": 6,
             "point": {"slot": anchor["slot"], "id": anchor["id"]},
@@ -1126,7 +1172,6 @@ def test_reorg_datasource_emits_marker_rows(spark, tmp_path):
         for r in spark.read.format("chain_sync")
         .option("host", node.host)
         .option("port", str(node.port))
-        .option("transport", "ws")
         .load()
         .collect()
     ]
@@ -1146,15 +1191,15 @@ def test_corrupt_marker_store_raises_not_silently_empty(spark, tmp_path):
     orphaned rows, the exact failure the module exists to prevent.
     Only a genuinely missing store (no reorg seen yet) reads as []."""
     from blockchain_data_engineering_spark.streaming.rollback import (
-        _load_markers,
+        _read_store,
     )
 
     store = tmp_path / "tbl__rollbacks"
-    assert _load_markers(spark, "file://" + str(store)) == []  # missing: fine
+    assert _read_store(spark, "file://" + str(store)) == []  # missing: fine
     store.mkdir()
     (store / "part-00000.parquet").write_text("this is not parquet")
     with pytest.raises(Exception):
-        _load_markers(spark, "file://" + str(store))
+        _read_store(spark, "file://" + str(store))
 
 
 def test_rollback_upsert_null_seq_is_loud(spark, tmp_path):
@@ -1245,7 +1290,7 @@ def test_reorg_undo_propagates_to_derived_tables(spark, tmp_path):
     """r4 verdict ask #2: after a RollBackward, state DERIVED from
     landed blocks (fingerprint index, per-block rollup contributions)
     must converge too, not just the landing table. Derived tables
-    register via DerivedTable (rows stamped with their contributing
+    register by path in ``derived`` (rows stamped with their contributing
     block's (seq, slot)); the survivors hook maintains them per batch.
     Adversarial delivery (marker BEFORE some orphans) included: the
     whole pipeline — landing + index + rollup — must equal a one-shot
@@ -1258,7 +1303,6 @@ def test_reorg_undo_propagates_to_derived_tables(spark, tmp_path):
         MockChainSyncNode,
     )
     from blockchain_data_engineering_spark.streaming.rollback import (
-        DerivedTable,
         rollback_aware_upsert,
     )
 
@@ -1292,7 +1336,7 @@ def test_reorg_undo_propagates_to_derived_tables(spark, tmp_path):
 
     def derived_sink(rows):
         # fingerprint index: one row per block (single contributor —
-        # the DerivedTable exactness contract), stamped (seq, slot)
+        # the derived-table exactness contract), stamped (seq, slot)
         upsert_parquet(
             rows.select(F.md5("id").alias("fp"), "__seq", "slot"),
             idx,
@@ -1308,7 +1352,7 @@ def test_reorg_undo_propagates_to_derived_tables(spark, tmp_path):
             ["id"],
         )
 
-    derived = [DerivedTable(idx), DerivedTable(roll)]
+    derived = [idx, roll]
     # adversarial delivery: first A file, then MARKER+fork, THEN the
     # remaining A files containing blocks the marker already orphaned
     for batch_files in ([files[0]], files[3:5], files[1:3]):
@@ -1569,7 +1613,7 @@ def test_prune_rollback_markers_compacts_settled_stores(spark, tmp_path):
     # (they only target seq < 2 / < 4); marker 6 stays live
     assert RB.prune_rollback_markers(spark, path, 5) == (2, 2)
     assert seqs(store) == {6} and seqs(applied_store) == {6}
-    assert RB._load_applied_seqs(spark, applied_store) == {6}
+    assert [tuple(r) for r in RB._read_store(spark, applied_store)] == [(6,)]
 
     # idempotent re-prune
     assert RB.prune_rollback_markers(spark, path, 5) == (0, 0)

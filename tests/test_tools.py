@@ -93,3 +93,53 @@ def test_profile_counts_the_jobs_and_stages_of_one_job_group(spark):
         sc.setJobDescription(None)
     spark.range(3).collect()  # outside the group: not counted
     assert jobs_and_stages(sc, group) == (3, 4, 1)
+
+
+def test_profile_masks_the_run_order_fields_of_a_plan():
+    import tempfile
+
+    mask_plan = _load("profile").mask_plan
+    tmp = tempfile.gettempdir()
+
+    def dump(expr, plan_id, codegen, stage, rdd, store, node="HashAggregate"):
+        return f"""== Physical Plan ==
+AdaptiveSparkPlan (8)
++- == Final Plan ==
+   * {node} (6)
+   +- ShuffleQueryStage (5), Statistics(sizeInBytes=72.0 B, rowCount=3)
+      +- Exchange (4)
+         +- Scan ExistingRDD (1)
+
+(1) Scan ExistingRDD
+Output [1]: [src#{expr}L]
+Arguments: [src#{expr}L], MapPartitionsRDD[{rdd}] at localCheckpoint at NativeMethodAccessorImpl.java:0
+
+(4) Exchange
+Input [1]: [src#{expr}L]
+Arguments: hashpartitioning(src#{expr}L, 4), ENSURE_REQUIREMENTS, [plan_id={plan_id}]
+
+(5) ShuffleQueryStage
+Output [1]: [src#{expr}L]
+Arguments: {stage}
+
+(6) {node} [codegen id : {codegen}]
+Input [1]: [src#{expr}L]
+Keys [1]: [src#{expr}L]
+Location: InMemoryFileIndex [file:{tmp}/{store}/landing]
+
+(7) ReusedExchange [Reuses operator id: 4]
+Arguments: 1
+"""
+
+    first = dump(27, 155, 3, 1, 163, "eval_cells_store_q_ab12cd34")
+    second = dump(41, 212, 5, 4, 437, "eval_cells_store_q_zz9x8y7w")
+    assert first != second
+    masked = mask_plan(first)
+    assert masked == mask_plan(second)
+    # plan shape stays: node ids, operator names, the reused operator id
+    # and the Arguments line of a node that is not a query stage
+    for kept in ("(5) ShuffleQueryStage", "[Reuses operator id: 4]", "Arguments: 1\n"):
+        assert kept in masked
+    for gone in ("#27", "plan_id=155", "RDD[163]", "codegen id : 3", "ab12cd34"):
+        assert gone not in masked
+    assert mask_plan(dump(27, 155, 3, 1, 163, "x", node="SortAggregate")) != masked

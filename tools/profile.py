@@ -5,7 +5,9 @@ Usage: python tools/profile.py <query> [<query> ...] [--runs N]
 For each registered query (gate or extra) the tool builds the
 DataFrame and writes it to a noop sink once, saving the formatted
 physical plan of every SQL execution that ran — round checkpoints, the
-settle, the sink — to ``plans/<query>.txt``. It then times ``N`` more
+settle, the sink — to ``plans/<query>.txt``, with the fields that
+follow run order rather than plan shape masked (:func:`mask_plan`), so
+two dumps of one plan ``diff`` clean. It then times ``N`` more
 build+sink runs, each under its own job group, and prints the samples,
 their min, the generated classes each run compiled with the Janino
 time they took (``0/0ms`` once a query's code is in the codegen cache)
@@ -20,7 +22,9 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
+import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -36,6 +40,28 @@ from blockchain_data_engineering_spark.session import (  # noqa: E402
     executed_plans,
     get_spark,
 )
+
+
+# (pattern, replacement) pairs for the plan fields numbered in the
+# order things ran: expression ids, exchange plan ids, RDD ids,
+# whole-stage codegen ids, the ``Arguments:`` id of an AQE query stage
+# block, and the random store directories queries make under the
+# temp dir
+_RUN_ORDER_FIELDS = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
+    (re.compile(r"(\(\d+\) \w+QueryStage\n(?:[^\n]+\n)*?Arguments: )\d+"), r"\1N"),
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\s,\]\)]+"), "$TMPDIR/*"),
+]
+
+
+def mask_plan(plan: str) -> str:
+    """``plan`` with its run-order fields replaced by placeholders."""
+    for pattern, repl in _RUN_ORDER_FIELDS:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def _sink(spark, fn) -> None:
@@ -85,6 +111,7 @@ def main() -> None:
             for i, plan in enumerate(ran, 1):
                 # scan locations name the input dir, not this host's path
                 plan = plan.replace(DEFAULT_SF_DIR.rstrip("/"), "$SPARK_GRAFT_SF_DIR")
+                plan = mask_plan(plan)
                 fh.write(f"== execution {i} of {len(ran)} ==\n{plan}\n")
         samples, compiles, counts, skipped = [], [], [], []
         for r in range(args.runs):
