@@ -54,8 +54,8 @@ from pyspark.sql.types import StructType
 
 class ChainSyncDataSource(DataSource):
     """Options: ``host`` (required), ``port`` (required),
-    ``start_point`` (default ``origin``), ``max_blocks`` (batch cap, default unlimited),
-    ``batch_size`` (stream blocks per micro-batch, default 10 — the
+    ``start_point`` (default ``origin``), ``max_blocks`` (batch cap,
+    default unlimited), ``batch_size`` (stream blocks per micro-batch, default 10 — the
     reference's micro-batch sizing knob)."""
 
     @classmethod
