@@ -150,6 +150,31 @@ def deterministic_id(*cols: Column | str) -> Column:
     return F.sha2(F.concat_ws("\x1f", *parts), 256)
 
 
+def md5_int(s: Column, n_hex: int, start: int = 1) -> Column:
+    """The BIGINT value of ``n_hex`` md5 hex digits of ``s`` read from
+    position ``start`` — the repo's engine-portable hash line (KMV and
+    quantile priorities, MinHash, Bloom and feature-hash indexes).
+    md5 is identical in every engine and fixed-width lowercase hex
+    preserves numeric order, so a SQL twin reproduces the value
+    exactly; ``n_hex ≤ 15`` keeps it inside a signed BIGINT."""
+    return F.conv(F.substring(F.md5(s), start, n_hex), 16, 10).cast("long")
+
+
+_HEX = "0123456789abcdef"
+
+
+def md5_byte(sql_expr: str) -> Column:
+    """Portable 0..255 bucket of the SQL expression ``sql_expr``: its
+    first two md5 hex chars as one byte, spelled with
+    ``instr``/``substr`` only, so engines without a hex-parse builtin
+    (DuckDB) compute the identical bucket (HLL and Count-Min registers,
+    DSIR token buckets)."""
+    return F.expr(
+        f"(instr('{_HEX}', substr(md5({sql_expr}), 1, 1)) - 1) * 16"
+        f" + (instr('{_HEX}', substr(md5({sql_expr}), 2, 1)) - 1)"
+    )
+
+
 def zorder_key(cols: list[Column | str], bits: int = 16) -> Column:
     """Morton / Z-order interleave of the low ``bits`` bits of each
     column: bit i of column j lands at position ``i·len(cols)+j`` of

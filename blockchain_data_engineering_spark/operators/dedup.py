@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from blockchain_data_engineering_spark.functions.scalar import md5_int
 from blockchain_data_engineering_spark.operators.text import (
     DOC_ID,
     TEXT,
@@ -206,15 +207,9 @@ def minhash_signatures(shingles: DataFrame, n_hashes: int = 9) -> DataFrame:
     than the naive explode-by-seed shape).
     """
     aggs = [
-        F.min(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle"))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long")
-        ).alias(f"mh{j}")
+        F.min(md5_int(F.concat(F.lit(f"{j}:"), F.col("shingle")), 15)).alias(
+            f"mh{j}"
+        )
         for j in range(n_hashes)
     ]
     return shingles.groupBy(DOC_ID).agg(*aggs)

@@ -30,7 +30,8 @@ grain) and then applies one offset step — keep the top k counters,
 subtract the (k+1)-th largest count ``d`` — which IS a valid MG
 summary (c = f − d ≤ f, and f − c = d ≤ n/(k+1) because k+1 items each
 have count ≥ d), is independent of row order, and is replayable in any
-engine with a window function. Rank ties break by the md5 of the item
+engine with a window function. The top k+1 is the shared
+``relational.bottom_k`` step. Rank ties break by the md5 of the item
 (then the item itself) — the repo's deterministic-tiebreak idiom
 (quantiles.row_priority) — so the kept set is bit-identical everywhere.
 Items at the rank boundary tied WITH ``d`` get c = 0 and drop, on both
@@ -49,8 +50,11 @@ asserts f ≤ err for every item). For any item x:
 Scale shape: the build is ONE hash aggregate (map-side combinable — the
 shuffle carries |distinct items per partition| partial counts, never
 the facts) + a WindowGroupLimit-bounded top-(k+1) over the AGGREGATED
-grain + a |groups|-row offset broadcast. Merge and estimate are pure
-state-grain ops (|groups|·k rows). Keep ``k+1`` under
+grain + a |groups|-row offset broadcast. Merge is ONE n-way combine
+over stacked states (:func:`heavy_hitters_combine` — per-batch deltas
+read from the ``streaming/sketches.delta_sink`` store, or
+``a.unionByName(b)`` for two, which is :func:`heavy_hitters_merge`);
+merge and estimate are pure state-grain ops (|groups|·k rows). Keep ``k+1`` under
 ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000) or
 raise that conf.
 
@@ -68,6 +72,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from blockchain_data_engineering_spark.functions.scalar import bounded_window_key
+from blockchain_data_engineering_spark.operators.quantiles import row_priority
+from blockchain_data_engineering_spark.operators.relational import bottom_k
+
 _ITEM = "item"
 _C = "c"
 
@@ -78,10 +86,6 @@ def _item_tiebreak() -> Column:
     single non-NULL column is the identity), so the two deterministic
     tiebreak hashes can never drift apart. DuckDB twin:
     ``CAST('0x' || substr(md5(item), 1, 15) AS BIGINT)``."""
-    from blockchain_data_engineering_spark.operators.quantiles import (
-        row_priority,
-    )
-
     return row_priority((_ITEM,))
 
 
@@ -98,29 +102,22 @@ def _offset_and_pack(
     cnt > d as ``c = cnt − d``, and pack per group into
     ``(counters, __d)``. Returns one row per group THAT HAS counts —
     including groups whose counters all cancelled (empty array), so the
-    caller can still carry their err. The rank-(k+1) filter is
-    WindowGroupLimit-bounded: the window runs over the aggregated
-    |distinct items| grain and only k+1 rows per group survive per
-    partition before the exchange."""
+    caller can still carry their err. The top k+1 is the shared
+    ``relational.bottom_k`` step: WindowGroupLimit-bounded when keyed
+    (the window runs over the aggregated |distinct items| grain and
+    only k+1 rows per group survive per partition before the
+    exchange), TakeOrderedAndProject when global."""
     order = [
         F.col("cnt").desc(),
         _item_tiebreak(),
         F.col(_ITEM),
     ]
-    w = Window.partitionBy(*keyed).orderBy(*order)
-    if keyed:
-        ranked = counts.withColumn("__rn", F.row_number().over(w)).where(
-            F.col("__rn") <= k + 1
-        )
-    else:
-        # global: TakeOrderedAndProject (per-partition (k+1)-heaps
-        # merged on the driver — the kmv/quantile global shape), then
-        # a trivial window over the ≤ k+1 survivors for the rank
-        ranked = (
-            counts.orderBy(*order)
-            .limit(k + 1)
-            .withColumn("__rn", F.row_number().over(w))
-        )
+    ranked = bottom_k(counts, keyed, order, k + 1)
+    if not keyed:
+        # the rank of the ≤ k+1 global survivors: a bounded window,
+        # declared as such (functions.scalar.bounded_window_key)
+        w = Window.partitionBy(bounded_window_key(_ITEM)).orderBy(*order)
+        ranked = ranked.withColumn("__rn", F.row_number().over(w))
     d = ranked.where(F.col("__rn") == k + 1).select(
         *keyed, F.col("cnt").alias("__d")
     )

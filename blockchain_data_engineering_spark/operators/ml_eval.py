@@ -560,7 +560,7 @@ def confusion_cells(
 ) -> DataFrame:
     """The ``(keys…, actual, predicted, n)`` confusion cells every
     agreement statistic reads, and the row shape of the eval-cell
-    store (``streaming/sketches.eval_cells_delta_sink``). Without
+    store (``streaming/sketches.delta_sink``). Without
     ``n`` each input row is one fact and is counted; with ``n`` each
     input row is a cell and ``n`` is summed, so duplicate cells (the
     store's per-batch deltas) merge. Rows with a NULL label or a NULL
@@ -2585,14 +2585,6 @@ def _krippendorff_unit_state(
     at the item re-aggregation, used only by the explain reader), and
     ``shared`` lists the materialized diamond nodes the caller hands to
     ``finalize``."""
-    not_null = F.col(item_col).isNotNull() & F.col(category_col).isNotNull()
-    for c in keyed:
-        not_null = not_null & F.col(c).isNotNull()
-    base = df.where(not_null).select(
-        *keyed,
-        F.col(item_col).alias("__i"),
-        F.col(category_col).alias("__c"),
-    )
     # Materialize the diamond nodes eagerly (r11, guide §2.4
     # duplicated subtrees): cells feeds BOTH the unit-size aggregate
     # and the kept-cell semi join, items/kept_cells/cats each feed two
@@ -2611,9 +2603,14 @@ def _krippendorff_unit_state(
     # node, so they go to the caller's finalize.
     from blockchain_data_engineering_spark.cache import round_checkpoint
 
+    # the (item, category) vote counts are confusion cells (NULL
+    # items, categories and keys dropped), as in fleiss_kappa
     cells = round_checkpoint(
-        base.groupBy(*keyed, "__i", "__c").agg(
-            F.count(F.lit(1)).cast("long").alias("__nuc")
+        confusion_cells(df, F.col(item_col), F.col(category_col), keyed).select(
+            *keyed,
+            F.col("actual").alias("__i"),
+            F.col("predicted").alias("__c"),
+            F.col("n").alias("__nuc"),
         )
     )
     nuc_d = F.col("__nuc").cast("decimal(38,0)")

@@ -13,8 +13,8 @@ Design — the uniform-sampling quantile sketch (the baseline sampler of
 Karnin–Lang–Liberty, "Optimal quantile approximation in streams",
 FOCS 2016 §1.1; also Manku–Rajagopalan–Lindsay's backing-sample
 construction, SIGMOD 1998), made DETERMINISTIC and engine-portable by
-drawing each row's sampling priority from md5 — the exact idiom of the
-KMV distinct sketch (operators/relational.py:624):
+drawing each row's sampling priority from md5 — the one hash line
+(``functions/scalar.md5_int``) the KMV distinct sketch also draws from:
 
 - every row gets a 60-bit priority ``h = md5(row-id)`` (uniform,
   deterministic, identical in any engine that ships md5);
@@ -44,7 +44,8 @@ the same trade the KMV sketch makes vs HLL++.
 
 Why this shape at 100 TB:
 
-- **Build** is one per-group bottom-k: Catalyst rewrites the
+- **Build** is one per-group bottom-k, the shared
+  ``relational.bottom_k`` step: Catalyst rewrites the keyed
   ``row_number() ≤ k`` filter into ``WindowGroupLimit`` (partial
   per-partition top-k BEFORE the shuffle — map-side combine for order
   statistics; plan-pinned in tests/test_quantiles.py), so the exchange
@@ -53,11 +54,15 @@ Why this shape at 100 TB:
   ``TakeOrderedAndProject`` shape: per-partition k-heaps merged on the
   driver, NO global sort.
 - **State** is one row per key group — ``(n_total, samples[])`` —
-  storable in any parquet/Delta table and MERGEABLE: union two states
-  by concatenating sample arrays and re-taking the bottom k by
-  priority (exactly how a per-partition / per-day / per-cluster
-  rollup composes). Merging is EXACT: merge(sketch(A), sketch(B)) is
-  bit-identical to sketch(A ∪ B) — pinned by a property test.
+  storable in any parquet/Delta table and MERGEABLE by ONE n-way
+  merge, :func:`quantile_sketch_combine`: one aggregate concatenates
+  the sample arrays of any number of stacked states per group and
+  keeps the k smallest by priority (a per-partition / per-day /
+  per-batch rollup, or ``a.unionByName(b)`` for two). Merging is EXACT:
+  combine(sketch(A₁) ∪ … ∪ sketch(Aₙ)) is bit-identical to
+  sketch(A₁ ∪ … ∪ Aₙ) — pinned by a property test. The streaming
+  store (``streaming/sketches.delta_sink``) is this merge over
+  per-batch states.
 - **Query** is array arithmetic over the ≤ k-element state — zero
   additional shuffle, zero scan. (The array sort/transform HOFs
   evaluate interpreted, but over |groups|·k elements — state grain,
@@ -78,7 +83,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from blockchain_data_engineering_spark.functions.scalar import md5_int
+from blockchain_data_engineering_spark.operators.relational import bottom_k
 
 # Samples are (pri, v) structs; array_sort orders lexicographically by
 # field position, so priority order falls out of the struct layout.
@@ -98,7 +105,7 @@ def row_priority(priority_cols: Sequence[str]) -> Column:
     # NULL components, so ("a", NULL) and ("a",) would hash alike, and
     # duplicate ids share one coin flip (their rows enter or miss the
     # sample together, skewing weights toward duplicated ids).
-    return F.conv(F.substring(F.md5(sid), 1, 15), 16, 10).cast("long")
+    return md5_int(sid, 15)
 
 
 def quantile_sketch(
@@ -126,96 +133,64 @@ def quantile_sketch(
         row_priority(priority_cols).alias(_PRI),
         F.col(value_col).alias(_V),
     )
-    sample_struct = F.struct(F.col(_PRI), F.col(_V))
-    if keyed:
-        w = Window.partitionBy(*keyed).orderBy(_PRI, _V)
-        kept = (
-            base.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= k)
-            .drop("__rn")
-        )
-        counts = base.groupBy(*keyed).agg(
-            F.count(F.lit(1)).cast("long").alias("n_total")
-        )
-        return (
-            kept.groupBy(*keyed)
-            .agg(
-                F.array_sort(F.collect_list(sample_struct)).alias("samples")
+    counts = base.groupBy(*keyed).agg(
+        F.count(F.lit(1)).cast("long").alias("n_total")
+    )
+    samples = (
+        bottom_k(base, keyed, [_PRI, _V], k)
+        .groupBy(*keyed)
+        .agg(
+            F.array_sort(F.collect_list(F.struct(F.col(_PRI), F.col(_V)))).alias(
+                "samples"
             )
-            .join(counts, keyed)
         )
-    # global: TakeOrderedAndProject (per-partition k-heaps merged on
-    # the driver — the kmv_bottom_k shape), 1-row grand aggregates
-    kept = base.orderBy(_PRI, _V).limit(k)
-    counts = base.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    return kept.agg(
-        F.array_sort(F.collect_list(sample_struct)).alias("samples")
-    ).crossJoin(F.broadcast(counts))
+    )
+    if keyed:
+        return samples.join(counts, keyed)
+    # global: two 1-row grand aggregates
+    return samples.crossJoin(F.broadcast(counts))
+
+
+def quantile_sketch_combine(
+    states: DataFrame, k: int, keys: Sequence[str] = ()
+) -> DataFrame:
+    """N-way merge of STACKED states (one frame of per-group state rows —
+    per-batch deltas read from a store, or ``a.unionByName(b)``):
+    ``n_total`` adds and ``samples`` is the bottom k by priority of
+    every input's samples — EXACTLY the state ``quantile_sketch``
+    builds over the union of the inputs (bit-identical; the bottom k of
+    a union of per-part bottom-ks is the union's bottom k; pinned in
+    tests/test_properties.py). ONE aggregate at state grain, which reads
+    ``states`` once: per group the sample arrays concatenate
+    (≤ k·n_states structs) and the sorted prefix of k is kept. The
+    global path returns one row for any input, an empty frame included
+    (``n_total`` 0, no samples).
+
+    DISJOINTNESS PRECONDITION: the states must summarize disjoint row
+    populations (different days/shards/batches). ``n_total`` ADDS and a
+    (pri, v) sample present in two inputs survives twice, so merging
+    overlapping states — a state merged with itself — double-counts
+    rows and skews the sample. (Contrast the HLL/Bloom register merges,
+    which are max/or and therefore idempotent to overlap.)"""
+    keyed = list(keys)
+    samples = F.flatten(F.collect_list(F.col("samples")))
+    return states.groupBy(*keyed).agg(
+        F.slice(F.array_sort(samples), 1, k).alias("samples"),
+        F.coalesce(F.sum("n_total"), F.lit(0)).cast("long").alias("n_total"),
+    )
 
 
 def quantile_sketch_merge(
     a: DataFrame, b: DataFrame, k: int, keys: Sequence[str] = ()
 ) -> DataFrame:
-    """Union two sketch states: ``n_total`` adds, ``samples`` is the
-    bottom k by priority of the concatenation — EXACTLY the state
-    ``quantile_sketch`` would build over the union of the inputs
-    (bit-identical; property-pinned in tests/test_quantiles.py). A
-    keys-grain full-outer join — state grain, never facts.
-
-    DISJOINTNESS PRECONDITION: the two states must summarize disjoint
-    row populations (different days/shards/streams). ``n_total`` ADDS
-    and a (pri, v) sample present in both inputs survives the
-    concat/re-take twice, so merging overlapping states — a replayed
-    batch, a state merged with itself — double-counts rows and skews
-    the sample. (Contrast the HLL/Bloom register merges, which are
-    max/or and therefore idempotent to overlap.) The global (no keys)
-    path accepts states of ANY row count, including an empty frame
-    read from a missing store — a full-outer join on a constant key
-    keeps the surviving side where a cross join would silently drop
-    it."""
-    keyed = list(keys)
-    sa = a.select(
-        *keyed,
-        F.col("n_total").alias("__na"),
-        F.col("samples").alias("__sa"),
-    )
-    sb = b.select(
-        *keyed,
-        F.col("n_total").alias("__nb"),
-        F.col("samples").alias("__sb"),
-    )
-    if keyed:
-        j = sa.join(sb, keyed, "full_outer")
-    else:
-        # full-outer on a constant key, NOT a cross join: a cross join
-        # with an empty side (state read from an empty/missing store)
-        # would return empty and silently drop the other side's state
-        j = (
-            sa.withColumn("__k", F.lit(1))
-            .join(sb.withColumn("__k", F.lit(1)), "__k", "full_outer")
-            .drop("__k")
-        )
-    both = F.slice(
-        F.array_sort(F.concat(F.col("__sa"), F.col("__sb"))), 1, k
-    )
-    samples = (
-        F.when(F.col("__sa").isNull(), F.col("__sb"))
-        .when(F.col("__sb").isNull(), F.col("__sa"))
-        .otherwise(both)
-    )
-    n = F.coalesce(F.col("__na"), F.lit(0)) + F.coalesce(
-        F.col("__nb"), F.lit(0)
-    )
-    return j.select(
-        *keyed, n.cast("long").alias("n_total"), samples.alias("samples")
-    )
+    """Union two sketch states — the two-input case of
+    :func:`quantile_sketch_combine` (see there for the exactness
+    guarantee and the disjointness precondition)."""
+    return quantile_sketch_combine(a.unionByName(b), k, keys)
 
 
 def quantile_sketch_query(
-    state: DataFrame,
-    qs_bp: Sequence[int],
-    keys: Sequence[str] = (),
-    value_alias: str = "est_v",
+    state: DataFrame, qs_bp: Sequence[int], keys: Sequence[str] = ()
 ) -> DataFrame:
     """Answer quantiles from the state: for each ``q`` (in basis
     points, so rank selection stays pure integer arithmetic — no
@@ -249,7 +224,5 @@ def quantile_sketch_query(
         "q_bp",
         "n_total",
         "k_actual",
-        F.try_element_at(F.col("__byv"), rank.cast("int"))[_V].alias(
-            value_alias
-        ),
+        F.try_element_at(F.col("__byv"), rank.cast("int"))[_V].alias("est_v"),
     )

@@ -12,17 +12,36 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from blockchain_data_engineering_spark.functions.scalar import md5_byte, md5_int
+
+
+def bottom_k(
+    df: DataFrame, keys: Sequence[str], order: Sequence[Column | str], k: int
+) -> DataFrame:
+    """The first ``k`` rows by ``order``, per ``keys`` group when given —
+    the one bottom-k step of the top-k operators and the sketch family
+    (KMV, the quantile sample, the Misra–Gries offset). With no keys it
+    is ``orderBy(…).limit(k)``: TakeOrderedAndProject, per-partition
+    k-heaps merged on the driver, no global sort. With keys it is
+    ``row_number() <= k`` per group, which Catalyst plans as a
+    WindowGroupLimit (partial per-partition bottom-k BEFORE the
+    exchange; with AQE skew handling a hot group splits across tasks)
+    and whose rank stays on the rows as ``__rn``; keep ``k`` under
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000)."""
+    if not keys:
+        return df.orderBy(*order).limit(k)
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return df.withColumn("__rn", F.row_number().over(w)).where(
+        F.col("__rn") <= k
+    )
+
 
 def topk(df: DataFrame, order_col: str, k: int, ascending: bool = False) -> DataFrame:
     """Global top-k (W1/O3; reference volume_stack_plot.ipynb cell 0:
-    ``ORDER BY value_adj DESC LIMIT 10``).
-
-    Physical plan: TakeOrderedAndProject — each partition keeps a local
-    k-heap, driver merges k×partitions rows. No full sort, no full
-    shuffle; safe at any scale for small k.
-    """
+    ``ORDER BY value_adj DESC LIMIT 10``): the global :func:`bottom_k`,
+    safe at any scale for small k."""
     c = F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    return df.orderBy(c).limit(k)
+    return bottom_k(df, (), [c], k)
 
 
 def topk_per_group(
@@ -31,17 +50,9 @@ def topk_per_group(
     order_cols: Sequence[Column],
     k: int,
 ) -> DataFrame:
-    """Per-group top-k via ``row_number() <= k`` (W1 per-group variant).
-
-    One shuffle on the partition keys; with AQE skew handling a hot group
-    splits across tasks for the rank computation.
-    """
-    w = Window.partitionBy(*partition_cols).orderBy(*order_cols)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    """Per-group top-k via ``row_number() <= k`` (W1 per-group variant):
+    the keyed :func:`bottom_k` without its rank column."""
+    return bottom_k(df, partition_cols, order_cols, k).drop("__rn")
 
 
 def cumulative_moving_average(
@@ -286,9 +297,7 @@ _HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_BUCKETS)
 _HEX_HI = ("8", "9", "a", "b", "c", "d", "e", "f")
 
 
-def hll_count_distinct(
-    df: DataFrame, col: str, exact: bool = True
-) -> DataFrame:
+def hll_count_distinct(df: DataFrame, col: str) -> DataFrame:
     """HyperLogLog cardinality estimate (Flajolet et al. 2007) built
     from engine-portable primitives (md5/substr/regexp/CASE — no
     binary intrinsics), so the identical sketch computes in any SQL
@@ -304,15 +313,12 @@ def hll_count_distinct(
     Why it matters at 100 TB: the registers form a MERGEABLE sketch —
     a max-aggregate per bucket — so cardinality estimation is one
     map-side-combined groupBy over 256 rows, never a global distinct
-    shuffle. ``exact=True`` adds the exact count_distinct for
-    side-by-side error measurement (drop it in production).
+    shuffle. The exact count_distinct rides along for side-by-side
+    error measurement.
 
-    Returns one row: (hll_estimate [, n_exact, rel_error]).
+    Returns one row: (hll_estimate, n_exact, rel_error).
     """
-    regs = hll_registers(df, col)
-    est = hll_estimate_from_registers(regs)
-    if not exact:
-        return est
+    est = hll_estimate_from_registers(hll_registers(df, col))
     n = df.where(F.col(col).isNotNull()).agg(
         F.count_distinct(F.col(col)).alias("n_exact")
     )
@@ -334,10 +340,7 @@ def hll_registers(df: DataFrame, col: str) -> DataFrame:
     what makes the estimate maintainable incrementally at stream
     scale (streaming.sketches)."""
     h = F.md5(F.col(col).cast("string"))
-    bucket = F.expr(
-        f"(instr('0123456789abcdef', substr(md5(cast({col} as string)), 1, 1)) - 1) * 16"
-        f" + (instr('0123456789abcdef', substr(md5(cast({col} as string)), 2, 1)) - 1)"
-    )
+    bucket = md5_byte(f"cast({col} as string)")
     tail = F.substring(h, 3, 12)  # 48 bits
     rem = F.regexp_replace(tail, "^0*", "")
     z_hex = F.length(tail) - F.length(rem)
@@ -358,6 +361,13 @@ def hll_registers(df: DataFrame, col: str) -> DataFrame:
         .groupBy("b")
         .agg(F.max("rho").alias("m_j"))
     )
+
+
+def hll_merge(registers: DataFrame) -> DataFrame:
+    """Union of stacked (b, m_j) register rows — the max per bucket IS
+    the union's sketch, and idempotent to overlap (a replayed delta
+    changes nothing)."""
+    return registers.groupBy("b").agg(F.max("m_j").alias("m_j"))
 
 
 def hll_estimate_from_registers(regs: DataFrame) -> DataFrame:
@@ -393,63 +403,59 @@ CMS_DEPTH = 4
 CMS_WIDTH = 256  # fixed by the 2-hex-char portable bucket
 
 
-def _cms_bucket(expr: str) -> str:
-    """Portable 0..255 bucket from the first two md5 hex chars of
-    ``expr`` — same instr/substr/md5 recipe as the HLL sketch above, so
-    the identical register matrix computes in any SQL engine."""
-    return (
-        f"(instr('0123456789abcdef', substr(md5({expr}), 1, 1)) - 1) * 16"
-        f" + (instr('0123456789abcdef', substr(md5({expr}), 2, 1)) - 1)"
+def _cms_buckets_for(col: str) -> Column:
+    """One md5 byte bucket per hash row (the HLL bucket recipe, so the
+    identical register matrix computes in any SQL engine): row ``j``
+    salts the key as ``'j:key'`` — independent-enough hash functions
+    from one md5."""
+    return F.array(
+        *[
+            md5_byte(f"concat('{j}:', cast({col} as string))")
+            for j in range(CMS_DEPTH)
+        ]
     )
 
 
-def _cms_buckets_for(col: str, depth: int) -> list:
-    """One bucket expression per hash row: row ``j`` salts the key as
-    ``'j:key'`` — independent-enough hash functions from one md5."""
-    return [
-        F.expr(_cms_bucket(f"concat('{j}:', cast({col} as string))"))
-        for j in range(depth)
-    ]
-
-
-def cms_registers(df: DataFrame, col: str, depth: int = CMS_DEPTH) -> DataFrame:
+def cms_registers(df: DataFrame, col: str) -> DataFrame:
     """Count-Min sketch registers (Cormode & Muthukrishnan 2005) over
-    the value stream in ``df[col]``: a ``depth × 256`` counter matrix
+    the value stream in ``df[col]``: a ``CMS_DEPTH × 256`` counter matrix
     as rows (j, b, c) where ``c`` counts stream items whose row-``j``
     hash lands in bucket ``b``.
 
     Why it matters at 100 TB: like the HLL registers this is a
     MERGEABLE sketch — one map-side-combined groupBy producing at most
-    ``depth·256`` rows regardless of stream size — so approximate
+    ``CMS_DEPTH·256`` rows regardless of stream size — so approximate
     frequencies (top talkers, hot wallets, heavy tokens) never need a
     per-key exact count shuffle. Point estimates then cost one
     broadcast join against the tiny register table.
     """
     return (
         df.where(F.col(col).isNotNull())
-        .select(F.posexplode(F.array(*_cms_buckets_for(col, depth))).alias("j", "b"))
+        .select(F.posexplode(_cms_buckets_for(col)).alias("j", "b"))
         .groupBy("j", "b")
         .agg(F.count(F.lit(1)).alias("c"))
     )
 
 
-def cms_estimate(
-    keys: DataFrame, registers: DataFrame, col: str, depth: int = CMS_DEPTH
-) -> DataFrame:
+def cms_merge(registers: DataFrame) -> DataFrame:
+    """Union of stacked (j, b, c) register rows: counters ADD (CMS is
+    a linear sketch), so the inputs must count disjoint rows."""
+    return registers.groupBy("j", "b").agg(F.sum("c").alias("c"))
+
+
+def cms_estimate(keys: DataFrame, registers: DataFrame, col: str) -> DataFrame:
     """Point-frequency estimates for every row of ``keys[col]`` against
     a :func:`cms_registers` matrix: ``est = min_j c[j][h_j(key)]`` —
     an upper bound on the true count (collisions only inflate), within
     ε·N with probability 1-δ for the textbook (depth, width) bounds.
 
-    Plan shape: the register matrix is ≤ depth·256 rows → broadcast;
-    keys fan out to ``depth`` rows each, then a min-groupBy restores
+    Plan shape: the register matrix is ≤ CMS_DEPTH·256 rows → broadcast;
+    keys fan out to ``CMS_DEPTH`` rows each, then a min-groupBy restores
     one row per key. Registers a key never touched are absent from the
     matrix ⇒ count 0 via the left join (an unseen key estimates 0 only
     if some register row of its is empty — the CMS guarantee).
     """
-    kb = keys.select(
-        F.col(col), F.posexplode(F.array(*_cms_buckets_for(col, depth))).alias("j", "b")
-    )
+    kb = keys.select(F.col(col), F.posexplode(_cms_buckets_for(col)).alias("j", "b"))
     return (
         kb.join(F.broadcast(registers), ["j", "b"], "left")
         .groupBy(col)
@@ -574,22 +580,12 @@ def kmv_bottom_k(
     per-partition/per-batch (cf. streaming/sketches.py registers).
     """
     keyed = list(keys)
-    h = F.conv(
-        F.substring(F.md5(F.col(col).cast("string")), 1, 15), 16, 10
-    ).cast("long")
     base = (
         df.where(F.col(col).isNotNull())
-        .select(*keyed, h.alias("h"))
+        .select(*keyed, md5_int(F.col(col).cast("string"), 15).alias("h"))
         .distinct()
     )
-    if keyed:
-        w = Window.partitionBy(*keyed).orderBy("h")
-        return (
-            base.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= k)
-            .drop("__rn")
-        )
-    return base.orderBy("h").limit(k)
+    return bottom_k(base, keyed, ["h"], k).drop("__rn")
 
 
 def kmv_count_distinct(
@@ -754,12 +750,17 @@ def skew_report(
     )
 
 
-def bloom_bits(
-    keys: DataFrame,
-    key_col: str,
-    m_bits: int = 65536,
-    k_hashes: int = 2,
-) -> DataFrame:
+BLOOM_K = 2  # hash functions per key
+
+
+def _bloom_index(key_col: str, i: int, m_bits: int) -> Column:
+    """Bit index of hash ``i`` of the key: ``md5(i || '|' || key)``'s
+    8-hex-digit prefix mod ``m_bits``."""
+    key = F.concat(F.lit(str(i)), F.lit("|"), F.col(key_col).cast("string"))
+    return md5_int(key, 8) % F.lit(m_bits)
+
+
+def bloom_bits(keys: DataFrame, key_col: str, m_bits: int) -> DataFrame:
     """Build-side of a Bloom-filter semi-join reduction: the key set
     packed into an ``m_bits``-bit filter as ``(word, bits)`` rows —
     32 bits per BIGINT word (shift ≤ 31 keeps the math portable: no
@@ -774,28 +775,10 @@ def bloom_bits(
     m/32-row word table (m=2^16 → 2 KB-grain, broadcast-trivial) to
     prefilter the probe side BEFORE its shuffle is the difference
     between shuffling the whole fact table and shuffling the ~matching
-    slice. Plan: one explode(k) + ONE map-side-combinable bit_or
+    slice. Plan: one explode(BLOOM_K) + ONE map-side-combinable bit_or
     aggregate over the (small) build side.
     """
-    hashes = F.array(
-        *[
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(str(i)), F.lit("|"), F.col(key_col).cast("string")
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % F.lit(m_bits)
-            for i in range(k_hashes)
-        ]
-    )
+    hashes = F.array(*[_bloom_index(key_col, i, m_bits) for i in range(BLOOM_K)])
     idx = F.explode(hashes).alias("__idx")
     return (
         keys.select(idx)
@@ -813,9 +796,7 @@ def bloom_bits(
     )
 
 
-def bloom_m_for(
-    n_keys: int, target_fp: float, k_hashes: int = 2
-) -> int:
+def bloom_m_for(n_keys: int, target_fp: float, k_hashes: int = BLOOM_K) -> int:
     """Filter size (bits) for a target false-positive rate — the
     SCALE.md sizing rule as an API (r6 judge ask: ``bloom_bits`` left
     m entirely to the caller, so an unscaled m=2^16 saturated toward
@@ -827,7 +808,8 @@ def bloom_m_for(
     rounded up to a multiple of 32 (whole BIGINT words). Degrades
     safely: the rate only IMPROVES if n overestimates (feed it a KMV
     estimate or an upper bound). At k=2 and fp=5% this lands near the
-    m ≈ 8n rule of thumb."""
+    m ≈ 8n rule of thumb. Every filter here uses ``BLOOM_K`` hashes;
+    ``k_hashes`` exists for the sizing rule's own k-sweep test."""
     import math
 
     if n_keys <= 0:
@@ -841,10 +823,7 @@ def bloom_m_for(
 
 
 def bloom_bits_sized(
-    keys: DataFrame,
-    key_col: str,
-    target_fp: float = 0.05,
-    k_hashes: int = 2,
+    keys: DataFrame, key_col: str, target_fp: float
 ) -> tuple[DataFrame, int]:
     """:func:`bloom_bits` sized from a cheap build-side DISTINCT-key
     count — one partial-aggregated count-distinct (the build side is
@@ -862,38 +841,22 @@ def bloom_bits_sized(
         .distinct()
         .count()
     )
-    m_bits = bloom_m_for(n, target_fp, k_hashes)
-    return bloom_bits(keys, key_col, m_bits, k_hashes), m_bits
+    m_bits = bloom_m_for(n, target_fp)
+    return bloom_bits(keys, key_col, m_bits), m_bits
 
 
 def bloom_prefilter(
-    probe: DataFrame,
-    key_col: str,
-    bits: DataFrame,
-    m_bits: int = 65536,
-    k_hashes: int = 2,
+    probe: DataFrame, key_col: str, bits: DataFrame, m_bits: int
 ) -> DataFrame:
     """Probe-side test: keep rows whose key MIGHT be in the filter
-    (all ``k_hashes`` bits set — false positives possible at the
+    (all ``BLOOM_K`` bits set — false positives possible at the
     standard (1−e^{−kn/m})^k rate, false negatives impossible, the
-    property the companion test pins). ``k_hashes`` broadcast joins
+    property the companion test pins). ``BLOOM_K`` broadcast joins
     against the word table, no shuffle of the probe side, NULL keys
     dropped (a NULL never equi-joins anyway)."""
     out = probe.where(F.col(key_col).isNotNull())
-    for i in range(k_hashes):
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(str(i)), F.lit("|"), F.col(key_col).cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long") % F.lit(m_bits)
+    for i in range(BLOOM_K):
+        h = _bloom_index(key_col, i, m_bits)
         out = (
             out.withColumn("__w", (h / F.lit(32)).cast("long"))
             .withColumn(

@@ -47,6 +47,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from blockchain_data_engineering_spark.functions.scalar import md5_int
+
 # 52-bit md5 prefix: 13 hex chars. h+1 ∈ [1, 2^52] is exactly
 # representable in a double, which keeps q's operands exact.
 _H_BITS = 52
@@ -59,9 +61,7 @@ def _u_denominator(priority_cols: Sequence[str]) -> Column:
     sid = F.concat_ws(
         "|", *[F.col(c).cast("string") for c in priority_cols]
     )
-    return (
-        F.conv(F.substring(F.md5(sid), 1, 13), 16, 10).cast("long") + 1
-    )
+    return md5_int(sid, 13) + 1
 
 
 def weighted_priority_state(

@@ -18,7 +18,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from blockchain_data_engineering_spark.cache import finalize, next_round, scope
-from blockchain_data_engineering_spark.functions.scalar import bounded_window_key
+from blockchain_data_engineering_spark.functions.scalar import (
+    bounded_window_key,
+    md5_byte,
+    md5_int,
+)
 
 # Tiny per-language stopword marker lists for the n-gram/stopword
 # language-ID heuristic. Deliberately small and public-knowledge — the
@@ -533,18 +537,6 @@ def gopher_repetition(df: DataFrame) -> DataFrame:
 # ------------------------------------------------ DSIR importance weights ---
 
 DSIR_BUCKETS = 256
-_HEX = "0123456789abcdef"
-
-
-def _hash_bucket(tok_col: str) -> Column:
-    """Deterministic engine-portable 0..255 bucket from the first two
-    md5 hex chars — both engines share instr()/substr()/md5, so the
-    bucketing needs no hex-parse builtin (DuckDB has none)."""
-    return F.expr(
-        f"(instr('{_HEX}', substr(md5({tok_col}), 1, 1)) - 1) * 16"
-        f" + (instr('{_HEX}', substr(md5({tok_col}), 2, 1)) - 1)"
-    )
-
 
 def dsir_importance_weights(
     df: DataFrame,
@@ -581,7 +573,7 @@ def dsir_importance_weights(
             target.alias("__tgt"),
             F.explode(F.split(F.col(TEXT), " ")).alias("t"),
         )
-        .select(DOC_ID, "__tgt", _hash_bucket("t").alias("b"))
+        .select(DOC_ID, "__tgt", md5_byte("t").alias("b"))
         .persist()
     )
     # BOTH distributions from ONE aggregation pass (conditional count)
@@ -1018,7 +1010,7 @@ def quality_classifier_scores(
     toks = df.select(
         F.col(DOC_ID), F.explode(F.split(F.col(TEXT), " ")).alias("t")
     )
-    counts = toks.groupBy(DOC_ID, _hash_bucket("t").alias("b")).agg(
+    counts = toks.groupBy(DOC_ID, md5_byte("t").alias("b")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
     ntok = toks.groupBy(DOC_ID).agg(F.count(F.lit(1)).alias("n"))
@@ -1403,10 +1395,8 @@ def hashed_features(
     ``(id, feat_idx)``. No UDF, no vocabulary broadcast.
     """
     term = F.lower(F.col("__term"))
-    idx = F.conv(F.substring(F.md5(term), 1, 4), 16, 10).cast("long") % F.lit(
-        n_features
-    )
-    sign_nibble = F.conv(F.substring(F.md5(term), 5, 1), 16, 10).cast("long")
+    idx = md5_int(term, 4) % F.lit(n_features)
+    sign_nibble = md5_int(term, 1, start=5)
     sign = F.when(sign_nibble % 2 == 0, F.lit(1)).otherwise(F.lit(-1))
     return (
         docs.select(

@@ -1431,7 +1431,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_orderkey").alias("key"))
         .distinct()
     )
-    bits = bloom_bits(build, "key", m_bits=_BLOOM_M, k_hashes=2).persist()
+    bits = bloom_bits(build, "key", _BLOOM_M).persist()
     probe = li.where(F.col("l_orderkey").isNotNull()).select(
         F.col("l_orderkey").alias("key")
     )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from blockchain_data_engineering_spark.cache import round_checkpoint
 from blockchain_data_engineering_spark.catalog import load_table
+from blockchain_data_engineering_spark.functions.scalar import md5_int
 from blockchain_data_engineering_spark.plans.parity import dsum, dsum_sql
 from blockchain_data_engineering_spark.plans.registry import query
 from blockchain_data_engineering_spark.streaming import windows as W
@@ -416,9 +417,9 @@ def stream_reorg_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # query drives the ACTUAL streaming/sketches.py path end-to-end: the
 # documents fact table (declared lang vs the lang-ID heuristic) is
 # split into two batches by md5 parity of doc_id, each batch lands its
-# cell delta through eval_cells_delta_sink (real parquet _batch_id
-# partitions in a temp store), and the statistic is served from the
-# SUMMED store (eval_cells_store_cells read with n=). Each oracle
+# cell delta through delta_sink (real parquet _batch_id partitions in a
+# temp store), and the statistic is served from the store read with
+# n=, whose confusion_cells sum merges the per-batch cells. Each oracle
 # replays both per-batch cell builds, the store sum, AND the
 # statistic's algebra over cells (the *_from_cells_sql twin) — so a
 # broken delta write, a broken sum, or broken cell algebra all
@@ -465,21 +466,17 @@ def _serve_from_store(
     import tempfile
 
     from blockchain_data_engineering_spark.operators import text as TX
-    from blockchain_data_engineering_spark.streaming.sketches import (
-        eval_cells_delta_sink,
-        eval_cells_store_cells,
+    from blockchain_data_engineering_spark.operators.ml_eval import (
+        confusion_cells,
     )
+    from blockchain_data_engineering_spark.streaming.sketches import delta_sink
 
     docs = load_table(spark, sf_dir, "documents")
     facts = docs.select(
         F.col("lang").alias("actual"),
         TX.lang_id(F.col("text")).alias("predicted"),
         # first-two-hex-digits md5 parity — the md5_bucket_sql twin
-        (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10)
-            .cast("long")
-            % 2
-        ).alias("__half"),
+        (md5_int(F.col("doc_id").cast("string"), 2) % 2).alias("__half"),
     )
     # persist the fact projection: both half-batch sink calls filter
     # the SAME scan+lang_id pipeline — uncached, each delta write
@@ -488,10 +485,17 @@ def _serve_from_store(
     facts = facts.persist()
     store = tempfile.mkdtemp(prefix="eval_cells_store_q_")
     try:
-        sink = eval_cells_delta_sink(store, "actual", "predicted")
+        sink = delta_sink(
+            store,
+            lambda b: confusion_cells(
+                b, F.col("actual").cast("string"), F.col("predicted").cast("string")
+            ),
+        )
         for batch_id in (0, 1):
             sink(facts.where(F.col("__half") == batch_id), batch_id)
-        cells = eval_cells_store_cells(spark, store)
+        # the statistic's confusion_cells(…, n=) sums the per-batch
+        # duplicate cells of the store itself
+        cells = spark.read.parquet(store)
         # sever from the store dir we delete (the crash-recovery
         # gate's pattern) — bench/parity re-runs must not accumulate
         # leaked temp parquet stores

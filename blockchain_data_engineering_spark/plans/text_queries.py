@@ -15,6 +15,7 @@ from blockchain_data_engineering_spark.cache import finalize
 from blockchain_data_engineering_spark.catalog import load_table, spread
 from blockchain_data_engineering_spark.functions.scalar import bounded_window_key
 from blockchain_data_engineering_spark.operators import text as TX
+from blockchain_data_engineering_spark.operators.relational import CMS_DEPTH
 from blockchain_data_engineering_spark.plans.parity import (
     HEX_DIGIT_SQL,
     dsum,
@@ -1500,7 +1501,6 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # count shuffle; estimates are min-over-rows upper bounds. The oracle
 # replays the register math (salted md5 buckets) end-to-end.
 # ---------------------------------------------------------------------------
-_CMS_DEPTH = 4
 _CMS_TOPK = 20
 
 
@@ -1520,7 +1520,7 @@ def _cms_bucket_sql(expr: str) -> str:
     hx AS (
       SELECT t, j,
              {_cms_bucket_sql("concat(CAST(j AS VARCHAR), ':', t)")} AS b
-      FROM toks, generate_series(0, {_CMS_DEPTH - 1}) AS d(j)
+      FROM toks, generate_series(0, {CMS_DEPTH - 1}) AS d(j)
     ),
     regs AS (SELECT j, b, count(*) AS c FROM hx GROUP BY 1, 2),
     cand AS (SELECT DISTINCT t, j, b FROM hx),
@@ -1546,9 +1546,9 @@ def text_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # In production candidates come from a cheap screen (e.g. per-
     # partition top lists), not a global distinct.
     toks = docs.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
-    regs = cms_registers(toks, "token", depth=_CMS_DEPTH)
+    regs = cms_registers(toks, "token")
     cand = toks.distinct()
-    est = cms_estimate(cand, regs, "token", depth=_CMS_DEPTH)
+    est = cms_estimate(cand, regs, "token")
     return est.orderBy(F.col("cms_est").desc(), "token").limit(_CMS_TOPK)
 
 

@@ -23,11 +23,12 @@ Mechanics end to end:
    - every sunk row carries its roll sequence (``__seq``),
    - markers accumulate in a tiny side table ``<path>__rollbacks``
      (keyed idempotent upsert on seq — replay-safe),
-   - a block is orphaned by marker m iff ``seq < m.seq AND
-     slot > m.slot`` (:func:`orphaned`) — applied BOTH as a delete over
-     already-sunk rows (the landing table and every derived table) and
-     as a pre-upsert filter on the batch's own blocks, so the sink
-     converges to the post-reorg chain under ANY delivery order.
+   - a block is orphaned by marker m iff ``seq < m.seq AND (slot IS
+     NULL OR slot > m.slot)`` (:func:`orphaned`, two-valued) — applied
+     BOTH as a delete over already-sunk rows (the landing table and
+     every derived table) and as a pre-upsert filter on the batch's
+     own blocks, so the sink converges to the post-reorg chain under
+     ANY delivery order.
 
 3. :func:`canonical_rows` evaluates the same predicate over a whole
    roll log at once — the batch twin the incremental sink converges to.
@@ -144,9 +145,13 @@ def _read_store(spark: SparkSession, store: str) -> list[Row]:
 def orphaned(
     markers: Sequence[tuple[int, int]], seq: Column, slot: Column
 ) -> Column:
-    """The orphan predicate ``∃ m: seq < m.seq AND slot > m.slot`` over
-    the ``(seq, slot)`` markers (sorted by seq) — FALSE when no marker
-    follows the row, NULL for a NULL slot that a marker follows.
+    """The orphan predicate ``∃ m: seq < m.seq AND (slot IS NULL OR
+    slot > m.slot)`` over the ``(seq, slot)`` markers (sorted by seq) —
+    two-valued: FALSE when no marker follows the row, TRUE for a NULL
+    slot that a marker follows (a block with no slot cannot prove it
+    sits below the rollback point). Being two-valued, it drops the same
+    rows as a delete (which keeps rows whose predicate is NULL) and as
+    a filter (which drops them), whatever batch the marker arrives in.
 
     The cut for a row is the MIN rollback slot among markers after it —
     a suffix-min STEP FUNCTION of seq, suffix-min'd in Python and
@@ -180,7 +185,7 @@ def orphaned(
         )
 
     cut = _cut(0, m)
-    return cut.isNotNull() & (slot > cut)
+    return cut.isNotNull() & (slot.isNull() | (slot > cut))
 
 
 def prune_rollback_markers(

@@ -14,71 +14,50 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_watermark(df: DataFrame, ts_col: str, delay: str = "10 minutes") -> DataFrame:
-    return df.withWatermark(ts_col, delay)
+def _window_aggregate(
+    df: DataFrame, win: Column, keys: list[str], aggs: list[Column], prefix: str
+) -> DataFrame:
+    """``aggs`` per (``win``, ``keys``) group, the window struct
+    flattened to ``<prefix>_start``/``<prefix>_end`` columns."""
+    out = df.groupBy(win.alias("win"), *[F.col(k) for k in keys]).agg(*aggs)
+    return out.select(
+        F.col("win.start").alias(f"{prefix}_start"),
+        F.col("win.end").alias(f"{prefix}_end"),
+        *[c for c in out.columns if c != "win"],
+    )
 
 
 def tumbling_counts(
-    df: DataFrame,
-    ts_col: str,
-    width: str = "10 minutes",
-    keys: list[str] | None = None,
-    aggs: list[Column] | None = None,
+    df: DataFrame, ts_col: str, width: str, keys: list[str], aggs: list[Column]
 ) -> DataFrame:
     """Tumbling-window aggregation; emits window start/end columns."""
-    group = [F.window(F.col(ts_col), width).alias("win")] + [
-        F.col(k) for k in (keys or [])
-    ]
-    out = df.groupBy(*group).agg(
-        *(aggs or [F.count(F.lit(1)).alias("n_events")])
-    )
-    return out.select(
-        F.col("win.start").alias("window_start"),
-        F.col("win.end").alias("window_end"),
-        *[c for c in out.columns if c != "win"],
+    return _window_aggregate(
+        df, F.window(F.col(ts_col), width), keys, aggs, "window"
     )
 
 
 def sliding_counts(
     df: DataFrame,
     ts_col: str,
-    width: str = "1 hour",
-    slide: str = "15 minutes",
-    keys: list[str] | None = None,
-    aggs: list[Column] | None = None,
+    width: str,
+    slide: str,
+    keys: list[str],
+    aggs: list[Column],
 ) -> DataFrame:
-    group = [F.window(F.col(ts_col), width, slide).alias("win")] + [
-        F.col(k) for k in (keys or [])
-    ]
-    out = df.groupBy(*group).agg(
-        *(aggs or [F.count(F.lit(1)).alias("n_events")])
-    )
-    return out.select(
-        F.col("win.start").alias("window_start"),
-        F.col("win.end").alias("window_end"),
-        *[c for c in out.columns if c != "win"],
+    """Sliding windows ``width`` wide every ``slide``: each event lands
+    in width/slide windows."""
+    return _window_aggregate(
+        df, F.window(F.col(ts_col), width, slide), keys, aggs, "window"
     )
 
 
 def session_aggregate(
-    df: DataFrame,
-    ts_col: str,
-    gap: str = "30 minutes",
-    keys: list[str] | None = None,
-    aggs: list[Column] | None = None,
+    df: DataFrame, ts_col: str, gap: str, keys: list[str], aggs: list[Column]
 ) -> DataFrame:
     """Session windows: a session extends while events arrive within
     ``gap`` of the previous one."""
-    group = [F.session_window(F.col(ts_col), gap).alias("win")] + [
-        F.col(k) for k in (keys or [])
-    ]
-    out = df.groupBy(*group).agg(
-        *(aggs or [F.count(F.lit(1)).alias("n_events")])
-    )
-    return out.select(
-        F.col("win.start").alias("session_start"),
-        F.col("win.end").alias("session_end"),
-        *[c for c in out.columns if c != "win"],
+    return _window_aggregate(
+        df, F.session_window(F.col(ts_col), gap), keys, aggs, "session"
     )
 
 

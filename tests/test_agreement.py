@@ -752,12 +752,9 @@ def test_streaming_eval_cells_store_matches_batch(spark, tmp_path):
     Replaying a batch leaves the read unchanged."""
     from blockchain_data_engineering_spark.operators.ml_eval import (
         cohens_kappa,
+        confusion_cells,
     )
-    from blockchain_data_engineering_spark.streaming.sketches import (
-        _write_delta,
-        eval_cells_delta_sink,
-        eval_cells_store_cells,
-    )
+    from blockchain_data_engineering_spark.streaming.sketches import delta_sink
 
     src = tmp_path / "cells_stream"
     src.mkdir()
@@ -780,7 +777,10 @@ def test_streaming_eval_cells_store_matches_batch(spark, tmp_path):
     )
     q = (
         split.writeStream.foreachBatch(
-            eval_cells_delta_sink(store, "actual", "predicted")
+            delta_sink(
+                store,
+                lambda b: confusion_cells(b, F.col("actual"), F.col("predicted")),
+            )
         )
         .option("checkpointLocation", str(tmp_path / "cellsckpt"))
         .trigger(availableNow=True)
@@ -788,9 +788,7 @@ def test_streaming_eval_cells_store_matches_batch(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    [got] = _read_cells(
-        cohens_kappa, eval_cells_store_cells(spark, store)
-    ).collect()
+    [got] = _read_cells(cohens_kappa, spark.read.parquet(store)).collect()
     batch = spark.createDataFrame(pairs, "a string, b string")
     [want] = cohens_kappa(batch, F.col("a"), F.col("b")).collect()
     assert got["n"] == want["n"] == 200
@@ -804,9 +802,7 @@ def test_streaming_eval_cells_store_matches_batch(spark, tmp_path):
         multiclass_macro_f1,
     )
 
-    [gm] = _read_cells(
-        multiclass_macro_f1, eval_cells_store_cells(spark, store)
-    ).collect()
+    [gm] = _read_cells(multiclass_macro_f1, spark.read.parquet(store)).collect()
     [wm] = multiclass_macro_f1(batch, F.col("a"), F.col("b")).collect()
     assert gm["n"] == wm["n"] and gm["accuracy"] == wm["accuracy"]
     assert str(gm["macro_f1_num"]) == str(wm["macro_f1_num"])
@@ -814,10 +810,8 @@ def test_streaming_eval_cells_store_matches_batch(spark, tmp_path):
 
     # replay idempotence: batch 0's delta rewritten over itself
     d0 = spark.read.parquet(f"{store}/_batch_id=0")
-    _write_delta(d0, store, 0)
-    [got2] = _read_cells(
-        cohens_kappa, eval_cells_store_cells(spark, store)
-    ).collect()
+    delta_sink(store, lambda b: b)(d0, 0)
+    [got2] = _read_cells(cohens_kappa, spark.read.parquet(store)).collect()
     assert (str(got2["kappa_num"]), str(got2["kappa_den"])) == (
         str(got["kappa_num"]),
         str(got["kappa_den"]),
@@ -826,25 +820,30 @@ def test_streaming_eval_cells_store_matches_batch(spark, tmp_path):
 
 def _split_store(spark, tmp_path):
     """Eight (a, p) facts landed as two eval-cell store deltas over a
-    split. Returns the facts, the summed store cells, and the cells
-    the store saw rebuilt from its deltas (``subtract`` dedups, so the
+    split. Returns the facts, the store's delta rows, and the cells
+    the store saw summed from its deltas (``subtract`` dedups, so the
     store holds a sub-multiset of the facts)."""
-    from blockchain_data_engineering_spark.streaming.sketches import (
-        eval_cells_delta_sink,
-        eval_cells_store_cells,
+    from blockchain_data_engineering_spark.operators.ml_eval import (
+        confusion_cells,
     )
+    from blockchain_data_engineering_spark.streaming.sketches import delta_sink
 
     rows = [("en", "en"), ("en", "de"), ("de", "de"), ("fr", "fr"),
             ("fr", "en"), ("de", "de"), ("en", "en"), ("fr", "fr")]
     df = spark.createDataFrame(rows, "a string, p string")
     store = str(tmp_path / "cells")
-    sink = eval_cells_delta_sink(store, "a", "p")
+    sink = delta_sink(
+        store,
+        lambda b: confusion_cells(
+            b, F.col("a").cast("string"), F.col("p").cast("string")
+        ),
+    )
     sink(df.limit(3), 0)
     sink(df.subtract(df.limit(3)), 1)  # two deltas over a split
     seen = spark.read.parquet(store).groupBy("actual", "predicted").agg(
         F.sum("n").alias("n")
     )
-    return df, eval_cells_store_cells(spark, store), seen
+    return df, spark.read.parquet(store), seen
 
 
 def test_macro_f1_store_read_equals_direct(spark, tmp_path):

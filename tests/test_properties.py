@@ -572,13 +572,11 @@ def test_canonical_rows_matches_python_model(spark):
 def test_rollback_sink_and_canonical_rows_agree(spark, tmp_path):
     """One orphan predicate, both callers: a random roll log, split
     into random batches, lands through rollback_aware_upsert exactly
-    the blocks canonical_rows keeps and the Python model above expects.
+    the blocks canonical_rows keeps and the Python model expects.
     Batches take rows from anywhere in the log, so markers arrive
-    before some of their orphans. Blocks with a NULL slot follow the
-    documented NULL rule: canonical_rows drops one iff any marker
-    follows it; the sink drops one iff such a marker was delivered in
-    its batch or an earlier one (delete_parquet_where keeps a
-    NULL-slot row)."""
+    before some of their orphans. A block with a NULL slot is orphaned
+    by any marker that follows it, on both paths and whichever batch
+    delivers the marker."""
     import json
     import random
 
@@ -589,7 +587,7 @@ def test_rollback_sink_and_canonical_rows_agree(spark, tmp_path):
     )
 
     rng = random.Random(29)
-    early_markers = null_slots = 0  # the cases the log must exercise
+    early_markers = late_null = 0  # the cases the log must exercise
     for scenario in range(3):
         n = rng.randint(12, 30)
         n_batches = rng.randint(2, 4)
@@ -601,6 +599,15 @@ def test_rollback_sink_and_canonical_rows_agree(spark, tmp_path):
                 slot = None
             pt = slot - rng.randint(0, 20) if is_m else None
             rows.append((seq, slot, is_m, pt, rng.randrange(n_batches)))
+        # planted: a NULL-slot block in the first batch, orphaned only
+        # by a marker in the last batch (above every slot, so it
+        # orphans NULL slots alone), then a NULL-slot block no marker
+        # follows
+        rows += [
+            (n, None, False, None, 0),
+            (n + 1, 2 * n + 2, True, 2 * n + 1, n_batches - 1),
+            (n + 2, None, False, None, 0),
+        ]
         markers = [(seq, pt, b) for seq, _, is_m, pt, b in rows if is_m]
 
         table = "file://" + str(tmp_path / f"s{scenario}")
@@ -634,32 +641,30 @@ def test_rollback_sink_and_canonical_rows_agree(spark, tmp_path):
         )
         kept = {r["seq"] for r in canonical_rows(log).select("seq").collect()}
 
-        def model(seq, slot, batch, delivered):
-            later = [
-                (m_pt, m_b) for m_seq, m_pt, m_b in markers if m_seq > seq
-            ]
-            if slot is None:
-                return not any(delivered(m_b, batch) for _, m_b in later)
-            return not any(slot > m_pt for m_pt, _ in later)
-
         blocks = [(seq, slot, b) for seq, slot, is_m, _, b in rows if not is_m]
-        want_kept = {
-            s for s, sl, b in blocks if model(s, sl, b, lambda mb, bb: True)
+        want = {
+            s
+            for s, sl, _ in blocks
+            if not any(
+                m_seq > s and (sl is None or sl > m_pt)
+                for m_seq, m_pt, _ in markers
+            )
         }
-        want_landed = {
-            s for s, sl, b in blocks if model(s, sl, b, lambda mb, bb: mb <= bb)
-        }
-        assert kept == want_kept, (scenario, sorted(kept ^ want_kept))
-        assert landed == want_landed, (scenario, sorted(landed ^ want_landed))
-        null_slot = {s for s, sl, _ in blocks if sl is None}
-        assert kept - null_slot == landed - null_slot
-        null_slots += len(null_slot)
+        assert kept == want, (scenario, sorted(kept ^ want))
+        assert landed == kept, (scenario, sorted(landed ^ kept))
+        # NULL-slot orphans whose every marker comes in a later batch:
+        # the sink must delete them from the landing table
+        late_null += sum(
+            sl is None
+            and min((m_b for m_seq, _, m_b in markers if m_seq > s), default=-1) > b
+            for s, sl, b in blocks
+        )
         early_markers += sum(
             m_seq > s and m_b < b and sl is not None and sl > m_pt
             for m_seq, m_pt, m_b in markers
             for s, sl, b in blocks
         )
-    assert early_markers and null_slots
+    assert early_markers and late_null
 
 
 # ------------------------------------------------------- r5 operators ---
@@ -1100,11 +1105,11 @@ def test_bloom_prefilter_never_drops_a_member(spark, members, probes):
     probe = spark.createDataFrame(
         [(k,) for k in members | probes], "key long"
     )
-    bits = bloom_bits(build, "key", m_bits=1024, k_hashes=2)
+    bits = bloom_bits(build, "key", m_bits=1024)
     passed = {
         r.key
         for r in bloom_prefilter(
-            probe, "key", bits, m_bits=1024, k_hashes=2
+            probe, "key", bits, m_bits=1024
         ).collect()
     }
     assert members <= passed
@@ -1124,7 +1129,9 @@ def test_quantile_sketch_properties(spark, values, k):
 
     1. merge(sketch(A), sketch(B)) ≡ sketch(A ∪ B) bit-identically for
        ANY split (the mergeability contract — sketches compose across
-       partitions/batches without error accumulation);
+       partitions/batches without error accumulation), and the n-way
+       combine of three stacked part states plus an empty one ≡ the
+       one-pass sketch, keyed and global;
     2. when n ≤ k the answer is the EXACT order statistic at rank
        ceil(q·n);
     3. every estimate is an element of the data (the sample never
@@ -1133,12 +1140,13 @@ def test_quantile_sketch_properties(spark, values, k):
 
     from blockchain_data_engineering_spark.operators.quantiles import (
         quantile_sketch,
+        quantile_sketch_combine,
         quantile_sketch_merge,
         quantile_sketch_query,
     )
 
-    rows = [(i, v) for i, v in enumerate(values)]
-    df = spark.createDataFrame(rows, "rid long, v long")
+    rows = [(i, v, v % 3) for i, v in enumerate(values)]
+    df = spark.createDataFrame(rows, "rid long, v long, g long")
     a = df.where(F.col("rid") % 3 == 0)
     b = df.where(F.col("rid") % 3 != 0)
     full = quantile_sketch(df, "v", ["rid"], k)
@@ -1152,6 +1160,21 @@ def test_quantile_sketch_properties(spark, values, k):
         for r in d.collect()
     ]
     assert unpack(merged) == unpack(full)
+
+    parts = [df.where(F.col("rid") % 3 == i) for i in range(3)]
+    parts.insert(1, df.where(F.lit(False)))
+    for keys in ([], ["g"]):
+        states = [quantile_sketch(p, "v", ["rid"], k, keys) for p in parts]
+        stacked = states[0]
+        for st_ in states[1:]:
+            stacked = stacked.unionByName(st_)
+        got_st = quantile_sketch_combine(stacked, k, keys)
+        want_st = quantile_sketch(df, "v", ["rid"], k, keys)
+        unpack_k = lambda d: sorted(  # noqa: E731
+            (*[r[c] for c in keys], r["n_total"], tuple(map(tuple, r["samples"])))
+            for r in d.collect()
+        )
+        assert unpack_k(got_st) == unpack_k(want_st), keys
 
     qs = [1, 2500, 5000, 7500, 10000]
     got = {

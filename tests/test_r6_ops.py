@@ -194,11 +194,11 @@ def test_bloom_prefilter_no_false_negatives_and_fp_bounded(spark):
     )
 
     build = spark.range(0, 500).select((F.col("id") * 3).alias("key"))
-    bits = bloom_bits(build, "key", m_bits=8192, k_hashes=2)
+    bits = bloom_bits(build, "key", m_bits=8192)
     assert bits.count() <= 8192 // 32
     probe = spark.range(0, 3000).select(F.col("id").alias("key"))
     passed = {r.key for r in bloom_prefilter(
-        probe, "key", bits, m_bits=8192, k_hashes=2
+        probe, "key", bits, m_bits=8192
     ).collect()}
     members = {i * 3 for i in range(500)}
     assert members <= passed  # no false negatives
@@ -264,9 +264,7 @@ def test_bloom_sized_fp_under_target(spark, sf):
         F.col("l_orderkey").alias("key")
     )
     n_probe = probe.count()
-    n_pass = bloom_prefilter(
-        probe, "key", bits, m_bits=m_bits, k_hashes=2
-    ).count()
+    n_pass = bloom_prefilter(probe, "key", bits, m_bits=m_bits).count()
     n_match = probe.join(build, "key", "left_semi").count()
     assert n_pass >= n_match  # no false negatives
     n_non_members = n_probe - n_match

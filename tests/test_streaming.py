@@ -257,7 +257,11 @@ def test_streaming_tumbling_window_complete_mode(spark, chain, tmp_path):
         .withColumn("ts", F.to_timestamp("ts"))
     )
     agg = W.tumbling_counts(
-        W.with_watermark(stream, "ts", "1 hour"), "ts", "15 minutes", keys=["k"]
+        stream.withWatermark("ts", "1 hour"),
+        "ts",
+        "15 minutes",
+        keys=["k"],
+        aggs=[F.count(F.lit(1)).alias("n_events")],
     )
     q = (
         agg.writeStream.format("memory")
@@ -276,7 +280,13 @@ def test_streaming_tumbling_window_complete_mode(spark, chain, tmp_path):
     ).withColumn("ts", F.to_timestamp("ts"))
     want = {
         (r.window_start.isoformat(), r.k): r.n_events
-        for r in W.tumbling_counts(batch_df, "ts", "15 minutes", keys=["k"]).collect()
+        for r in W.tumbling_counts(
+            batch_df,
+            "ts",
+            "15 minutes",
+            keys=["k"],
+            aggs=[F.count(F.lit(1)).alias("n_events")],
+        ).collect()
     }
     assert got == want
 
@@ -622,15 +632,20 @@ def test_streaming_sketch_stores_match_batch(spark, tmp_path):
     leave the store unchanged (dynamic partition overwrite = the H4
     idempotence argument)."""
     from blockchain_data_engineering_spark.operators.relational import (
+        cms_merge,
         cms_registers,
         hll_count_distinct,
+        hll_estimate_from_registers,
+        hll_merge,
+        hll_registers,
     )
-    from blockchain_data_engineering_spark.streaming.sketches import (
-        cms_delta_sink,
-        cms_store_registers,
-        hll_delta_sink,
-        hll_store_estimate,
-    )
+    from blockchain_data_engineering_spark.streaming.sketches import delta_sink
+
+    def cms_store_registers(store):
+        return cms_merge(spark.read.parquet(store))
+
+    def hll_store_estimate(store):
+        return hll_estimate_from_registers(hll_merge(spark.read.parquet(store)))
 
     src = tmp_path / "tok_stream"
     src.mkdir()
@@ -648,8 +663,8 @@ def test_streaming_sketch_stores_match_batch(spark, tmp_path):
 
     def both(batch_df, batch_id):
         batch_df = batch_df.persist()
-        cms_delta_sink(cms_store, "value")(batch_df, batch_id)
-        hll_delta_sink(hll_store, "value")(batch_df, batch_id)
+        delta_sink(cms_store, lambda b: cms_registers(b, "value"))(batch_df, batch_id)
+        delta_sink(hll_store, lambda b: hll_registers(b, "value"))(batch_df, batch_id)
         batch_df.unpersist()
 
     q = (
@@ -666,12 +681,12 @@ def test_streaming_sketch_stores_match_batch(spark, tmp_path):
     }
     got_regs = {
         (r["j"], r["b"]): r["c"]
-        for r in cms_store_registers(spark, cms_store).collect()
+        for r in cms_store_registers(cms_store).collect()
     }
     assert got_regs == want_regs
 
-    want_est = hll_count_distinct(whole, "value", exact=True).collect()[0]
-    got_est = hll_store_estimate(spark, hll_store).collect()[0]["hll_estimate"]
+    want_est = hll_count_distinct(whole, "value").collect()[0]
+    got_est = hll_store_estimate(hll_store).collect()[0]["hll_estimate"]
     assert got_est == want_est["hll_estimate"]  # bit-identical merge
     assert abs(got_est - want_est["n_exact"]) / want_est["n_exact"] < 0.1
 
@@ -680,21 +695,16 @@ def test_streaming_sketch_stores_match_batch(spark, tmp_path):
     # register delta is deterministic over those rows, so the replay
     # writes identical rows into partition _batch_id=0 — simulate it
     # with that partition's own delta (robust to file→batch ordering)
-    from blockchain_data_engineering_spark.streaming.sketches import _write_delta
-
     regs0 = spark.read.parquet(f"{cms_store}/_batch_id=0")
-    _write_delta(regs0, cms_store, 0)
+    delta_sink(cms_store, lambda b: b)(regs0, 0)
     hregs0 = spark.read.parquet(f"{hll_store}/_batch_id=0")
-    _write_delta(hregs0, hll_store, 0)
+    delta_sink(hll_store, lambda b: b)(hregs0, 0)
     got2 = {
         (r["j"], r["b"]): r["c"]
-        for r in cms_store_registers(spark, cms_store).collect()
+        for r in cms_store_registers(cms_store).collect()
     }
     assert got2 == want_regs
-    assert (
-        hll_store_estimate(spark, hll_store).collect()[0]["hll_estimate"]
-        == got_est
-    )
+    assert hll_store_estimate(hll_store).collect()[0]["hll_estimate"] == got_est
 
 
 def test_streaming_quantile_store_matches_batch(spark, tmp_path):
@@ -705,14 +715,10 @@ def test_streaming_quantile_store_matches_batch(spark, tmp_path):
     idempotence contract as the CMS/HLL stores)."""
     from blockchain_data_engineering_spark.operators.quantiles import (
         quantile_sketch,
+        quantile_sketch_combine,
         quantile_sketch_query,
     )
-    from blockchain_data_engineering_spark.streaming.sketches import (
-        _write_delta,
-        quantile_delta_sink,
-        quantile_store_query,
-        quantile_store_state,
-    )
+    from blockchain_data_engineering_spark.streaming.sketches import delta_sink
 
     K, QS = 64, [2500, 5000, 9900]
     src = tmp_path / "val_stream"
@@ -726,7 +732,10 @@ def test_streaming_quantile_store_matches_batch(spark, tmp_path):
 
     store = str(tmp_path / "q_store")
     stream = spark.readStream.option("maxFilesPerTrigger", 1).text(str(src))
-    sink = quantile_delta_sink(store, "v", ["v"], K)
+    sink = delta_sink(store, lambda b: quantile_sketch(b, "v", ["v"], K))
+
+    def quantile_store_state():
+        return quantile_sketch_combine(spark.read.parquet(store), K)
 
     def run(batch_df, batch_id):
         sink(batch_df.select(F.col("value").cast("long").alias("v")), batch_id)
@@ -743,7 +752,7 @@ def test_streaming_quantile_store_matches_batch(spark, tmp_path):
         F.col("value").cast("long").alias("v")
     )
     want_state = quantile_sketch(whole, "v", ["v"], K).collect()[0]
-    got_state = quantile_store_state(spark, store, K).collect()[0]
+    got_state = quantile_store_state().collect()[0]
     assert got_state["n_total"] == want_state["n_total"] == 800
     assert [tuple(s) for s in got_state["samples"]] == [
         tuple(s) for s in want_state["samples"]
@@ -751,13 +760,13 @@ def test_streaming_quantile_store_matches_batch(spark, tmp_path):
     want_q = quantile_sketch_query(
         quantile_sketch(whole, "v", ["v"], K), QS
     ).collect()
-    got_q = quantile_store_query(spark, store, K, QS).collect()
+    got_q = quantile_sketch_query(quantile_store_state(), QS).collect()
     assert sorted(map(tuple, got_q)) == sorted(map(tuple, want_q))
 
     # replay idempotence: partition 0's delta rewritten over itself
     d0 = spark.read.parquet(f"{store}/_batch_id=0")
-    _write_delta(d0, store, 0)
-    got2 = quantile_store_state(spark, store, K).collect()[0]
+    delta_sink(store, lambda b: b)(d0, 0)
+    got2 = quantile_store_state().collect()[0]
     assert [tuple(s) for s in got2["samples"]] == [
         tuple(s) for s in want_state["samples"]
     ]
@@ -774,12 +783,12 @@ def test_streaming_heavy_hitters_store_bounds(spark, tmp_path):
     replaying a batch leaves the store read unchanged."""
     from collections import Counter
 
-    from blockchain_data_engineering_spark.streaming.sketches import (
-        _write_delta,
-        heavy_hitters_delta_sink,
-        heavy_hitters_store_state,
-        heavy_hitters_store_topk,
+    from blockchain_data_engineering_spark.operators.heavy_hitters import (
+        heavy_hitters_combine,
+        heavy_hitters_estimate,
+        heavy_hitters_state,
     )
+    from blockchain_data_engineering_spark.streaming.sketches import delta_sink
 
     K = 8
     src = tmp_path / "hh_stream"
@@ -793,7 +802,10 @@ def test_streaming_heavy_hitters_store_bounds(spark, tmp_path):
 
     store = str(tmp_path / "hh_store")
     stream = spark.readStream.option("maxFilesPerTrigger", 1).text(str(src))
-    sink = heavy_hitters_delta_sink(store, "value", K)
+    sink = delta_sink(store, lambda b: heavy_hitters_state(b, "value", K))
+
+    def heavy_hitters_store_state():
+        return heavy_hitters_combine(spark.read.parquet(store), K)
     q = (
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", str(tmp_path / "hhckpt"))
@@ -803,12 +815,12 @@ def test_streaming_heavy_hitters_store_bounds(spark, tmp_path):
     q.awaitTermination(120)
 
     freqs = Counter(items)
-    [state] = heavy_hitters_store_state(spark, store, K).collect()
+    [state] = heavy_hitters_store_state().collect()
     assert state["n_total"] == 600
     assert state["err"] * (K + 1) <= 600
     got = {
         r["item"]: (r["count_lo"], r["count_hi"])
-        for r in heavy_hitters_store_topk(spark, store, K).collect()
+        for r in heavy_hitters_estimate(heavy_hitters_store_state()).collect()
     }
     for it, (lo, hi) in got.items():
         assert lo <= freqs[it] <= hi, (it, lo, hi, freqs[it])
@@ -818,15 +830,15 @@ def test_streaming_heavy_hitters_store_bounds(spark, tmp_path):
 
     # replay idempotence: partition 0's delta rewritten over itself
     d0 = spark.read.parquet(f"{store}/_batch_id=0")
-    _write_delta(d0, store, 0)
-    [state2] = heavy_hitters_store_state(spark, store, K).collect()
+    delta_sink(store, lambda b: b)(d0, 0)
+    [state2] = heavy_hitters_store_state().collect()
     assert (state2["n_total"], state2["err"]) == (
         state["n_total"],
         state["err"],
     )
     got2 = {
         r["item"]: (r["count_lo"], r["count_hi"])
-        for r in heavy_hitters_store_topk(spark, store, K).collect()
+        for r in heavy_hitters_estimate(heavy_hitters_store_state()).collect()
     }
     assert got2 == got
 

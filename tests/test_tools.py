@@ -143,3 +143,66 @@ Arguments: 1
     for gone in ("#27", "plan_id=155", "RDD[163]", "codegen id : 3", "ab12cd34"):
         assert gone not in masked
     assert mask_plan(dump(27, 155, 3, 1, 163, "x", node="SortAggregate")) != masked
+
+
+
+def _spelled_md5_hashes(source: str) -> list[int]:
+    """Lines of ``source`` that spell the md5 hash line out: a ``conv``
+    call over an md5 (hex prefix → integer), or SQL text — a string or
+    f-string that is not a docstring — holding ``md5(`` with
+    ``instr(`` (the portable byte bucket) or ``conv(``."""
+    import ast
+
+    tree = ast.parse(source)
+    docstrings = {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef))
+        and n.body
+        and isinstance(n.body[0], ast.Expr)
+    }
+    found = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            name = getattr(node.func, "attr", None) or getattr(node.func, "id", None)
+            if name == "conv" and "md5" in ast.dump(node):
+                found.add(node.lineno)
+            continue
+        if isinstance(node, ast.JoinedStr):
+            text = "".join(
+                v.value for v in node.values if isinstance(v, ast.Constant)
+            )
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            text = "" if id(node) in docstrings else node.value
+        else:
+            continue
+        if "md5(" in text and ("instr(" in text or "conv(" in text):
+            found.add(node.lineno)
+    return sorted(found)
+
+
+def test_md5_hash_line_is_spelled_only_in_scalar():
+    """``functions/scalar.md5_int`` and ``md5_byte`` are the one md5
+    hash line of the sketch family: no module under ``operators/`` or
+    ``streaming/`` spells a hash of its own, so the KMV, quantile,
+    MinHash, Bloom, HLL, Count-Min, DSIR and feature hashes cannot
+    drift apart (their DuckDB twins in the oracles replay this line)."""
+    from pathlib import Path
+
+    # the inline spellings the check catches, and a docstring it skips
+    spelled = _spelled_md5_hashes
+    assert spelled("h = F.conv(F.substring(F.md5(c), 1, 15), 16, 10)")
+    assert spelled("b = F.expr(\"instr('0123456789abcdef', substr(md5(x), 1, 1))\")")
+    assert spelled("b = f\"(instr('{H}', substr(md5({e}), 1, 1)) - 1)\"")
+    assert spelled("q = 'conv(substr(md5(x), 1, 15), 16, 10)'")
+    assert not spelled('"""conv(substr(md5(x), 1, 15), 16, 10)."""')
+
+    pkg = Path(_TOOLS).parent / "blockchain_data_engineering_spark"
+    assert spelled((pkg / "functions" / "scalar.py").read_text())
+    offenders = {
+        f"{path.parent.name}/{path.name}": lines
+        for sub in ("operators", "streaming")
+        for path in sorted((pkg / sub).glob("*.py"))
+        if (lines := spelled(path.read_text()))
+    }
+    assert not offenders, offenders
